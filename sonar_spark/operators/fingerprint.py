@@ -226,6 +226,13 @@ def simhash_near_duplicates(
     )
 
 
+def _drop_checkpoint(df: DataFrame) -> None:
+    """Release the blocks of a localCheckpoint()ed frame now.  Spark
+    otherwise unpersists them only once the JVM garbage-collects the
+    RDD, so a driver loop would pile up one persisted RDD per round."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame,
     *,
@@ -245,62 +252,82 @@ def connected_components(
     Components in Map-Reduce in Logarithmic Rounds").  Each round
     (a) takes the min label over each node's neighbors and (b)
     jumps labels through their own current label, halving the
-    effective component diameter — O(log d) rounds to converge, each
-    round two hash joins + one aggregation.  Near-dup LSH graphs are
-    dense low-diameter clusters, so 2-3 rounds in practice; the
-    driver-side loop is bounded by the convergence check (the same
-    bounded-iteration shape as the k-means seeding).
+    effective component diameter — O(log d) rounds to converge.
+    Near-dup LSH graphs are dense low-diameter clusters, so 2-3
+    rounds in practice; the driver-side loop is bounded by the
+    convergence check (the same bounded-iteration shape as the
+    k-means seeding).
 
-    Input edges are de-duplicated and symmetrized internally.
-    Output: (node, component); singleton nodes appear with
-    component == node.  Pass ``stats={}`` to receive
+    Plan shape: the de-duplicated, symmetrized edge table is built
+    from one pass over the input (both directions of an edge from
+    one row; a union would evaluate the input plan twice) and
+    materialized ONCE with localCheckpoint, so later stages read it
+    at its AQE-coalesced partition count (a persist()ed plan is not
+    coalesced and would fan every round out to the full shuffle
+    width).  The initial labels (comp = node) derive from it.
+    Then each round is one join (neighbor labels), one aggregation
+    (min label, carrying the node's previous label through as
+    max(__old) over its own row — neighbor rows hold null) and one
+    self-join (pointer jumping), checkpointed at the end.
+
+    Input edges are de-duplicated and symmetrized internally; node
+    values keep their input type.  Output: (node, comp); singleton
+    nodes appear with comp == node.  Pass ``stats={}`` to receive
     {"rounds": r, "changed": [per-round changed-label counts]} —
     the O(log d) evidence hook (tools/bench_cc_stress.py)."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    # localCheckpoint also truncates lineage: the rounds below
+    # reference it (and their own previous output) without the plan
+    # deepening round over round, which would otherwise blow the
+    # analyzer stack and re-plan the whole history at scale
+    a, b = F.col(src), F.col(dst)
+    sym = (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(a.alias("a"), b.alias("b")),
+                    F.struct(b.alias("a"), a.alias("b")),
+                )
+            ).alias("__e")
+        )
+        .select("__e.a", "__e.b")
         .where(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).persist()
+    no_old = F.lit(None).cast(sym.schema["a"].dataType)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .persist()
     )
+    prev = None
     for _ in range(max_iter):
-        # (a) min over own label and neighbors' labels
+        # (a) min over own label and neighbors' labels; the node's
+        # own row carries its previous label for the convergence count
         nbr = sym.join(
-            labels.withColumnRenamed("node", "b").withColumnRenamed(
-                "comp", "__nc"
-            ),
+            labels.select(F.col("node").alias("b"), F.col("comp").alias("__nc")),
             "b",
-        ).select(F.col("a").alias("node"), F.col("__nc").alias("comp"))
+        ).select(
+            F.col("a").alias("node"),
+            F.col("__nc").alias("comp"),
+            no_old.alias("__old"),
+        )
         stepped = (
-            labels.unionByName(nbr)
+            labels.select("node", "comp", F.col("comp").alias("__old"))
+            .unionByName(nbr)
             .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
+            .agg(F.min("comp").alias("comp"), F.max("__old").alias("__old"))
         )
         # (b) pointer jumping: comp <- label(comp)
-        # localCheckpoint truncates the lineage each round — an
-        # iterative self-referencing plan otherwise deepens by two
-        # joins per round and blows the analyzer stack (and would
-        # re-plan the whole history at scale).  The previous label
-        # rides along so the convergence count reads only the
-        # checkpointed data (no extra join/recompute per round).
         jumped = (
-            stepped.alias("l")
-            .join(
+            stepped.join(
                 stepped.select(
                     F.col("node").alias("comp"),
                     F.col("comp").alias("__cc"),
-                ).alias("r"),
+                ),
                 "comp",
                 "left",
             )
-            .join(labels.withColumnRenamed("comp", "__old"), "node")
             .select(
                 "node",
                 F.coalesce("__cc", "comp").alias("comp"),
@@ -309,14 +336,16 @@ def connected_components(
             .localCheckpoint(eager=True)
         )
         changed = jumped.where(F.col("comp") != F.col("__old")).count()
-        labels.unpersist()
+        if prev is not None:
+            _drop_checkpoint(prev)
+        prev = jumped
         labels = jumped.drop("__old")
         if stats is not None:
             stats.setdefault("changed", []).append(int(changed))
             stats["rounds"] = len(stats["changed"])
         if changed == 0:
             break
-    sym.unpersist()
+    _drop_checkpoint(sym)
     return labels.select("node", "comp")
 
 

@@ -11,7 +11,10 @@ policy) into the operational job shape a 100 TB corpus actually runs:
   directory rename (the FeatureStore convention) and every later run
   (and every resume) reuses it.  At scale this is the one
   shuffle-heavy stage: one band-key exchange + candidate-bounded
-  verify joins + O(log d) pointer-jumping rounds.
+  verify joins + connected components over the verified pairs —
+  one checkpointed symmetrized edge table, then O(log d)
+  pointer-jumping rounds of one join, one aggregation and one
+  self-join each.
 
 - **Phase 2 (per-bucket, resumable):** the per-document DECISION
   table (doc_id, lang, quality, n_tokens, component, is_canonical,
@@ -22,6 +25,8 @@ policy) into the operational job shape a 100 TB corpus actually runs:
   phase-1 label table.  Kill/resume semantics are FeaturizeJob's:
   a crash leaves uncommitted files and no marker; re-running
   overwrites pending partitions atomically before markers land.
+  The markers' counts come from one grouped pass over the committed
+  partitions (plans.pipeline.bucket_aggregates), as in phase 3.
 
 - **Phase 3 (per-bucket, resumable):** the training-ready CHUNK
   table — the sliding window/stride chunker over every kept document
@@ -57,7 +62,11 @@ from sonar_spark.operators.fingerprint import (
     lsh_candidate_pairs,
     minhash_fingerprints,
 )
-from sonar_spark.plans.pipeline import BucketResult, bucket_of
+from sonar_spark.plans.pipeline import (
+    BucketResult,
+    bucket_aggregates,
+    bucket_of,
+)
 
 
 def _shingles(words, k: int = 4):
@@ -299,28 +308,26 @@ class CurationJob:
             r["__bucket"]: r["count"]
             for r in d.groupBy("__bucket").count().collect()
         }
+        out_stats = bucket_aggregates(
+            spark,
+            self.decisions_dir,
+            take,
+            F.count("*").alias("rows_out"),
+            F.count(F.when(F.col("keep"), 1)).alias("rows_kept"),
+        )
         wall = time.time() - t0
         for b in take:
-            path = os.path.join(self.decisions_dir, f"__bucket={b}")
-            part = (
-                spark.read.parquet(path)
-                if os.path.isdir(path)
-                else None
-            )
-            rows_out = part.count() if part is not None else 0
-            kept = (
-                part.where(F.col("keep")).count()
-                if part is not None
-                else 0
-            )
+            st = out_stats.get(b)
             res = BucketResult(
                 bucket=b,
                 skipped=False,
                 rows_in=int(rows_in.get(b, 0)),
-                rows_out=int(rows_out),
+                rows_out=int(st["rows_out"]) if st else 0,
                 wall_sec=wall / len(take),
             )
-            self._commit(res, {"rows_kept": int(kept)})
+            self._commit(
+                res, {"rows_kept": int(st["rows_kept"]) if st else 0}
+            )
             results.append(res)
         if fail_after is not None and len(pending) > len(take):
             raise RuntimeError(
@@ -423,18 +430,14 @@ class CurationJob:
             .partitionBy("__bucket")
             .parquet(self.chunks_dir)
         )
-        stats = {
-            r["__bucket"]: r
-            for r in spark.read.parquet(self.chunks_dir)
-            .where(F.col("__bucket").isin([int(b) for b in take]))
-            .groupBy("__bucket")
-            .agg(
-                F.countDistinct("doc_id").alias("n_docs"),
-                F.count("*").alias("n_chunks"),
-                F.sum("chunk_len").alias("tokens_out"),
-            )
-            .collect()
-        }
+        stats = bucket_aggregates(
+            spark,
+            self.chunks_dir,
+            take,
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count("*").alias("n_chunks"),
+            F.sum("chunk_len").alias("tokens_out"),
+        )
         wall = time.time() - t0
         for b in take:
             st = stats.get(b)

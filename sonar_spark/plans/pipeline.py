@@ -48,6 +48,29 @@ class BucketResult:
     wall_sec: float = 0.0
 
 
+def bucket_aggregates(
+    spark: SparkSession, out_dir: str, buckets: list[int], *aggs
+) -> dict:
+    """Per-bucket aggregates of the committed ``__bucket=<b>``
+    partitions of ``buckets`` under ``out_dir`` in ONE grouped pass
+    (not a scan or two per bucket): {bucket: Row}.  Reads only the
+    partition directories that exist — a bucket that produced no rows
+    has none, and a table with no rows at all has no schema to infer —
+    so such a bucket is absent from the result."""
+    paths = [
+        p
+        for p in (os.path.join(out_dir, f"__bucket={b}") for b in buckets)
+        if os.path.isdir(p)
+    ]
+    if not paths:
+        return {}
+    part = spark.read.option("basePath", out_dir).parquet(*paths)
+    return {
+        r["__bucket"]: r
+        for r in part.groupBy("__bucket").agg(*aggs).collect()
+    }
+
+
 class FeaturizeJob:
     """Resumable: featurize(token table) -> per-frame feature parquet,
     one doc-hash bucket at a time with lineage markers."""
@@ -166,25 +189,22 @@ class FeaturizeJob:
                 .parquet(self.out_dir)
             )
             # metrics: rows_in from one pruned count pass (doc_id
-            # column only), rows_out from the committed partitions'
-            # parquet footers
+            # column only), rows_out from one grouped pass over the
+            # committed partitions
             rows_in = {
                 r["__bucket"]: r["count"]
                 for r in sel.groupBy("__bucket").count().collect()
             }
+            out = bucket_aggregates(
+                spark, self.out_dir, take, F.count("*").alias("rows_out")
+            )
             wall = time.time() - t0
             for b in take:
-                path = os.path.join(self.out_dir, f"__bucket={b}")
-                rows_out = (
-                    spark.read.parquet(path).count()
-                    if os.path.isdir(path)
-                    else 0
-                )
                 res = BucketResult(
                     bucket=b,
                     skipped=False,
                     rows_in=int(rows_in.get(b, 0)),
-                    rows_out=rows_out,
+                    rows_out=int(out[b]["rows_out"]) if b in out else 0,
                     wall_sec=wall,  # shared single-job wall time
                 )
                 self._commit(

@@ -64,10 +64,24 @@ def test_curation_job_kill_resume_identity(spark, tmp_path):
     assert os.stat(labels_success).st_mtime_ns == stat_before
     assert _decision_rows(job, spark) == _decision_rows(ref, spark)
 
-    # lineage metrics carry kept counts and cover every bucket
+    # lineage metrics cover every bucket, and their counts are the
+    # decision table's per-bucket counts
     ms = CurationJob(str(tmp_path / "out"), n_buckets=8).metrics()
     assert sorted(m["bucket"] for m in ms) == list(range(8))
-    assert all("rows_kept" in m for m in ms)
+    want = {
+        r["__bucket"]: (r["n"], r["kept"])
+        for r in job.decisions(spark)
+        .groupBy("__bucket")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(F.col("keep").cast("long")).alias("kept"),
+        )
+        .collect()
+    }
+    for m in ms:
+        assert (m["rows_out"], m["rows_kept"]) == want.get(
+            m["bucket"], (0, 0)
+        ), m
     total_in = sum(m["rows_in"] for m in ms)
     assert total_in == docs.count()
 
@@ -146,6 +160,22 @@ def test_chunk_stage_kill_resume_identity(spark, tmp_path):
     ms = CurationJob(str(tmp_path / "out"), n_buckets=8).chunk_metrics()
     assert sorted(m["bucket"] for m in ms) == list(range(8))
     assert all(m["window"] == 32 and m["stride"] == 24 for m in ms)
+    # marker counts are the chunk table's per-bucket counts
+    want = {
+        r["__bucket"]: (r["n_docs"], r["n_chunks"], r["tokens_out"])
+        for r in job.chunks(spark)
+        .groupBy("__bucket")
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count("*").alias("n_chunks"),
+            F.sum("chunk_len").alias("tokens_out"),
+        )
+        .collect()
+    }
+    for m in ms:
+        assert (m["n_docs"], m["n_chunks"], m["tokens_out"]) == want.get(
+            m["bucket"], (0, 0, 0)
+        ), m
 
 
 def test_chunk_stage_matches_direct_chunker(spark, tmp_path):
@@ -183,3 +213,32 @@ def test_chunk_stage_requires_decisions(spark, tmp_path):
     res = job.run_chunks(docs)
     assert all(r.skipped for r in res)
     assert job.completed_chunk_buckets() == []
+
+
+def test_chunk_stage_nothing_kept(spark, tmp_path):
+    """No pending bucket keeps a doc, so the chunk write lands no
+    partition: the stage must still commit every bucket with zero
+    counts (and a resume must find nothing left), not fail to infer a
+    schema from an empty table."""
+    docs = spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps", "s0"),
+            (2, "over the lazy dog today", "s1"),
+        ],
+        "doc_id long, text string, source string",
+    )
+    job = CurationJob(
+        str(tmp_path / "j"),
+        n_buckets=4,
+        policy=CurationPolicy(min_quality=2.0),
+    )
+    job.run(docs)
+    assert job.kept(spark).count() == 0
+    res = job.run_chunks(docs)
+    assert not any(r.skipped for r in res)
+    assert job.completed_chunk_buckets() == list(range(4))
+    assert all(
+        (m["n_docs"], m["n_chunks"], m["tokens_out"]) == (0, 0, 0)
+        for m in job.chunk_metrics()
+    )
+    assert all(r.skipped for r in job.run_chunks(docs))

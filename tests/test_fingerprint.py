@@ -197,15 +197,20 @@ def test_connected_components_chain_and_stars(spark):
 def test_connected_components_random_graphs(spark):
     """Random sparse graphs vs a scalar union-find: component labels
     must equal the min reachable node id everywhere (pointer jumping
-    converges within the iteration cap on every topology)."""
+    converges within the iteration cap on every topology).  The last
+    graph has long ids (dbscan passes its numeric id column): the
+    labels must agree and ``comp`` must keep the input type."""
     import numpy as np
 
     rng = np.random.default_rng(77)
-    for trial in range(4):
+    kinds = [("string", lambda v: f"v{v:03d}")] * 4 + [
+        ("bigint", lambda v: 10**12 + v)
+    ]
+    for trial, (kind, node) in enumerate(kinds):
         n = int(rng.integers(20, 60))
         m = int(rng.integers(10, 80))
         edges = [
-            (f"v{int(a):03d}", f"v{int(b):03d}")
+            (node(int(a)), node(int(b)))
             for a, b in rng.integers(0, n, size=(m, 2))
             if a != b
         ]
@@ -240,13 +245,13 @@ def test_connected_components_random_graphs(spark):
             connected_components,
         )
 
-        df = spark.createDataFrame(
-            edges, "doc_a string, doc_b string"
+        cc = connected_components(
+            spark.createDataFrame(edges, f"doc_a {kind}, doc_b {kind}")
         )
-        got = {
-            r["node"]: r["comp"]
-            for r in connected_components(df).collect()
-        }
+        assert cc.schema.simpleString() == (
+            f"struct<node:{kind},comp:{kind}>"
+        ), trial
+        got = {r["node"]: r["comp"] for r in cc.collect()}
         assert got == want, trial
 
 

@@ -3,6 +3,8 @@ entry vs its oracle_sql() through DuckDB at the given sf dir, compare
 row count, schema width and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Runs on local[$SPARK_GRAFT_CPUS] (8 when unset).
 """
 
 from __future__ import annotations
@@ -66,7 +68,11 @@ def main() -> int:
     import __spark_entry__ as E
     from sonar_spark.session import get_spark
 
-    spark = get_spark("oracle-check", cpus=8, shuffle_partitions=16)
+    spark = get_spark(
+        "oracle-check",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        shuffle_partitions=16,
+    )
 
     t0 = time.time()
     res = E.entry(spark)
