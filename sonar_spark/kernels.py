@@ -772,9 +772,8 @@ def shingle_hashes_flat(
     of docs given concatenated token values (multiset — duplicates
     kept; min/sum sketches are duplicate-insensitive where needed).
 
-    Docs with fewer than k tokens get one shingle padded with -1
-    (matches sonar_spark.kernels.shingle_hashes semantics).
-    Returns (hashes int64, shingles-per-doc int64)."""
+    Docs with fewer than k tokens get one shingle, padded to k tokens
+    with -1.  Returns (hashes int64, shingles-per-doc int64)."""
     t = np.asarray(flat, dtype=np.int64)
     doc_lens = np.asarray(doc_lens, dtype=np.int64)
     short = doc_lens < k
@@ -873,39 +872,6 @@ def _hash_params(num_hashes: int, seed: int):
     a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64)
     b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64)
     return a, b
-
-
-def shingle_hashes(tokens: np.ndarray, k: int) -> np.ndarray:
-    """Distinct polynomial rolling hashes of k-token shingles (int64)."""
-    t = np.asarray(tokens, dtype=np.int64)
-    if len(t) < k:
-        t = np.pad(t, (0, k - len(t)), constant_values=-1)
-    base = np.int64(1_000_003)
-    h = np.zeros(len(t) - k + 1, dtype=np.int64)
-    # vectorized polynomial hash over a sliding window (wrapping int64 ok)
-    with np.errstate(over="ignore"):
-        for j in range(k):
-            h = h * base + t[j : len(t) - k + 1 + j]
-    return np.unique(h)
-
-
-def minhash_signature(
-    tokens: np.ndarray, k: int, num_hashes: int, seed: int
-) -> np.ndarray:
-    """MinHash signature (int64[num_hashes]) over k-shingle set."""
-    sh = shingle_hashes(tokens, k)
-    a, b = _hash_params(num_hashes, seed)
-    # (num_hashes, n_shingles) — careful with memory: chunk shingles
-    pos = (sh % _MERSENNE).astype(np.uint64)
-    sig = np.full(num_hashes, np.iinfo(np.int64).max, dtype=np.int64)
-    step = 8192
-    au = a.astype(np.uint64)
-    bu = b.astype(np.uint64)
-    for i in range(0, len(pos), step):
-        chunk = pos[i : i + step]
-        hv = (au[:, None] * chunk[None, :] + bu[:, None]) % np.uint64(_MERSENNE)
-        sig = np.minimum(sig, hv.min(axis=1).astype(np.int64))
-    return sig
 
 
 # ---------------------------------------------------------------- xcorr

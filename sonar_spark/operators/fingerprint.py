@@ -274,7 +274,7 @@ def connected_components(
     values keep their input type.  Output: (node, comp); singleton
     nodes appear with comp == node.  Pass ``stats={}`` to receive
     {"rounds": r, "changed": [per-round changed-label counts]} —
-    the O(log d) evidence hook (tools/bench_cc_stress.py)."""
+    the O(log d) evidence hook."""
     # localCheckpoint also truncates lineage: the rounds below
     # reference it (and their own previous output) without the plan
     # deepening round over round, which would otherwise blow the

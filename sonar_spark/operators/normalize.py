@@ -136,22 +136,3 @@ def median_filter(
     return df.withColumn(
         out_col or f"{value}_med", F.percentile(F.col(value), 0.5).over(w)
     )
-
-
-def pre_emphasis(
-    df: DataFrame,
-    value: str,
-    alpha: float = 0.97,
-    *,
-    group: str = "doc_id",
-    order: str = "pos",
-    out_col: str | None = None,
-) -> DataFrame:
-    """y[n] = x[n] - alpha * x[n-1] (filters/pre_emphasis.go:135-198);
-    first element passes through unchanged (lag null -> 0)."""
-    w = Window.partitionBy(group).orderBy(F.col(order).asc())
-    x = F.col(value).cast("double")
-    return df.withColumn(
-        out_col or f"{value}_pe",
-        x - alpha * F.coalesce(F.lag(x).over(w), F.lit(0.0)),
-    )

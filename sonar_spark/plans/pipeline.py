@@ -1,20 +1,22 @@
-"""Resumable featurize pipeline with per-partition lineage + metrics
-(north_rule: "resumable from checkpoint with per-partition lineage
-and metrics"; SURVEY §4.4).
+"""The commit protocol every resumable plan uses, and the featurize job.
 
-Unit of resume = a doc-hash bucket: bucket(doc_id) = pmod(xxhash64(
-doc_id), n_buckets). One Spark job per run processes ALL pending
-buckets from a single input scan, writing partitionBy("__bucket")
-under dynamic partition overwrite to <out>/__bucket=<i>/, then lands
-a write-once marker + metrics record per bucket under
-<out>/_lineage/. A re-run skips every bucket whose marker exists —
-killed runs resume where they stopped, and reprocessing a completed
-bucket is a no-op (idempotent: pending partitions are overwritten
-atomically before their markers land).
+Per-bucket phases (``run_buckets``): the unit of resume is a doc-hash
+bucket, bucket(doc_id) = pmod(xxhash64(doc_id), n_buckets).  One run
+writes ALL pending buckets from a single input scan, partitionBy(
+"__bucket") under dynamic partition overwrite to <out>/__bucket=<b>/,
+then lands one write-once JSON marker + metrics record per bucket in
+a ``LineageLog`` (<out>/_lineage/bucket_<b>.json).  A re-run skips
+every bucket whose marker exists, so a killed run resumes where it
+stopped and re-running a completed bucket is a no-op: a crash leaves
+uncommitted files and no marker, and the re-run overwrites the
+pending partitions before their markers land.
 
-On real infra the marker/commit would be an Iceberg snapshot commit
-per partition; the filesystem marker reproduces the semantics in the
-sandbox (write temp + atomic rename).
+Corpus-global tables (``commit_table``): built once to a tmp dir and
+renamed into place; the rename is the commit.
+
+On real infra each marker / rename would be an Iceberg snapshot
+commit; the filesystem reproduces the semantics in the sandbox
+(write temp + atomic rename).
 
 Determinism: bucket membership is a pure function of doc_id, and the
 featurize kernel is deterministic, so output bytes are independent
@@ -25,10 +27,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import threading
 import time
 from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FeatureConfig, FrameConfig
@@ -46,6 +51,74 @@ class BucketResult:
     rows_in: int = 0
     rows_out: int = 0
     wall_sec: float = 0.0
+
+
+def write_json_atomic(path: str, rec: dict) -> None:
+    """Write ``rec`` as JSON to ``path`` via a temp file and an atomic
+    replace: a reader sees the whole record or none."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(rec, f)
+    os.replace(tmp, path)
+
+
+def commit_table(path: str, df: DataFrame) -> bool:
+    """Write-once table commit: land ``df`` as parquet at ``path`` via
+    a tmp dir and an atomic directory rename.  Clears the
+    ``<name>.tmp-*`` dirs of crashed builds first.  The rename fails
+    when a concurrent build committed first; the loser drops its tmp
+    dir.  Returns whether this call committed the table."""
+    base, name = os.path.split(path)
+    os.makedirs(base, exist_ok=True)
+    for d in os.listdir(base):
+        if d.startswith(f"{name}.tmp-"):
+            shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+    # unique per thread too: build_all() races wave members from one
+    # process, and a shared tmp dir would interleave two writers' files
+    tmp = f"{path}.tmp-{os.getpid()}-{threading.get_ident()}"
+    df.write.mode("overwrite").parquet(tmp)
+    try:
+        os.rename(tmp, path)  # fails if a winner exists
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        return False
+    return True
+
+
+class LineageLog:
+    """Per-bucket lineage log: one write-once JSON marker per committed
+    bucket, ``<dir>/bucket_<b as 5 digits>.json``.  A marker lands
+    only after its bucket's partition is committed, so it is what
+    makes the bucket done."""
+
+    def __init__(self, dir: str):
+        self.dir = dir
+
+    def _path(self, bucket: int) -> str:
+        return os.path.join(self.dir, f"bucket_{bucket:05d}.json")
+
+    def is_done(self, bucket: int) -> bool:
+        return os.path.exists(self._path(bucket))
+
+    def completed(self) -> list[int]:
+        if not os.path.isdir(self.dir):
+            return []
+        return sorted(
+            int(f[len("bucket_"):-len(".json")])
+            for f in os.listdir(self.dir)
+            if f.startswith("bucket_") and f.endswith(".json")
+        )
+
+    def records(self) -> list[dict]:
+        out = []
+        for b in self.completed():
+            with open(self._path(b)) as f:
+                out.append(json.load(f))
+        return out
+
+    def commit(self, bucket: int, rec: dict) -> None:
+        os.makedirs(self.dir, exist_ok=True)
+        write_json_atomic(self._path(bucket), {"bucket": bucket, **rec})
 
 
 def bucket_aggregates(
@@ -71,6 +144,101 @@ def bucket_aggregates(
     }
 
 
+def run_buckets(
+    log: LineageLog,
+    out_dir: str,
+    n_buckets: int,
+    eligible: list[int],
+    build: Callable[[Column], tuple[DataFrame, DataFrame | None]],
+    aggs: dict[str, Column],
+    *,
+    fail_after: int | None,
+    extra: dict | None = None,
+    counts: tuple[str, str] = ("rows_in", "rows_out"),
+    what: str = "buckets",
+) -> list[BucketResult]:
+    """Run one resumable per-bucket phase over the ``eligible`` buckets
+    that ``log`` has no marker for, all in ONE job.
+
+    ``build(in_take)`` returns the frame to write (with a ``__bucket``
+    column; ``in_take`` is the predicate selecting the buckets taken)
+    and, or None, the input frame whose per-bucket row count is the
+    marker's ``rows_in``.  Each bucket's marker holds that count, the
+    named ``aggs`` over its committed partition (0 when it has none),
+    ``wall_sec`` (the phase wall over the buckets taken),
+    ``completed_at`` and ``extra``; its BucketResult takes rows_in /
+    rows_out from the two marker fields named in ``counts``.
+
+    fail_after=k limits this run to the first k pending buckets and,
+    when buckets stay pending, raises after their markers land
+    (kill/resume tests).  Returns one result per bucket, in order."""
+    pending = [b for b in eligible if not log.is_done(b)]
+    take = pending if fail_after is None else pending[:fail_after]
+    results = [
+        BucketResult(bucket=b, skipped=True)
+        for b in range(n_buckets)
+        if b not in pending
+    ]
+    if take:
+        t0 = time.time()
+        # Dynamic partition overwrite only replaces partitions that
+        # produce rows this run: a pending bucket whose output is now
+        # empty would leave a stale partition from a prior crashed run
+        # (committed files, no marker) in place, count it, and seal it
+        # with the marker.  Pending partitions are uncommitted by
+        # definition — clear them before the write.
+        for b in take:
+            stale = os.path.join(out_dir, f"__bucket={b}")
+            if os.path.isdir(stale):
+                shutil.rmtree(stale)
+        out, src = build(F.col("__bucket").isin([int(b) for b in take]))
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__bucket")
+            .parquet(out_dir)
+        )
+        rows_in = (
+            {}
+            if src is None
+            else {
+                r["__bucket"]: r["count"]
+                for r in src.groupBy("__bucket").count().collect()
+            }
+        )
+        stats = bucket_aggregates(
+            out.sparkSession,
+            out_dir,
+            take,
+            *(c.alias(k) for k, c in aggs.items()),
+        )
+        wall = (time.time() - t0) / len(take)
+        for b in take:
+            st = stats.get(b)
+            rec = {} if src is None else {"rows_in": int(rows_in.get(b, 0))}
+            rec.update({k: int(st[k]) if st else 0 for k in aggs})
+            results.append(
+                BucketResult(
+                    bucket=b,
+                    skipped=False,
+                    rows_in=rec[counts[0]],
+                    rows_out=rec[counts[1]],
+                    wall_sec=wall,
+                )
+            )
+            rec["wall_sec"] = round(wall, 3)
+            rec["completed_at"] = time.strftime(
+                "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
+            )
+            log.commit(b, {**rec, **(extra or {})})
+    if fail_after is not None and len(pending) > len(take):
+        raise RuntimeError(
+            f"injected failure: fail_after={fail_after} stopped with "
+            f"{len(pending) - len(take)} {what} pending"
+        )
+    return sorted(results, key=lambda r: r.bucket)
+
+
 class FeaturizeJob:
     """Resumable: featurize(token table) -> per-frame feature parquet,
     one doc-hash bucket at a time with lineage markers."""
@@ -86,46 +254,13 @@ class FeaturizeJob:
         self.n_buckets = n_buckets
         self.frame_cfg = frame_cfg
         self.feat_cfg = feat_cfg
-        self.lineage_dir = os.path.join(out_dir, "_lineage")
-
-    # ---------------------------------------------------- lineage I/O
-
-    def _marker(self, bucket: int) -> str:
-        return os.path.join(self.lineage_dir, f"bucket_{bucket:05d}.json")
-
-    def is_done(self, bucket: int) -> bool:
-        return os.path.exists(self._marker(bucket))
+        self.log = LineageLog(os.path.join(out_dir, "_lineage"))
 
     def completed_buckets(self) -> list[int]:
-        if not os.path.isdir(self.lineage_dir):
-            return []
-        out = []
-        for f in os.listdir(self.lineage_dir):
-            if f.startswith("bucket_") and f.endswith(".json"):
-                out.append(int(f[len("bucket_"):-len(".json")]))
-        return sorted(out)
-
-    def _commit(self, res: BucketResult, extra: dict | None = None) -> None:
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        rec = {
-            "bucket": res.bucket,
-            "rows_in": res.rows_in,
-            "rows_out": res.rows_out,
-            "wall_sec": round(res.wall_sec, 3),
-            "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            **(extra or {}),
-        }
-        tmp = self._marker(res.bucket) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, self._marker(res.bucket))  # write-once, atomic
+        return self.log.completed()
 
     def metrics(self) -> list[dict]:
-        return [
-            json.load(open(self._marker(b))) for b in self.completed_buckets()
-        ]
-
-    # ------------------------------------------------------------ run
+        return self.log.records()
 
     def run(
         self,
@@ -133,47 +268,15 @@ class FeaturizeJob:
         *,
         fail_after: int | None = None,
     ) -> list[BucketResult]:
-        """Process every incomplete bucket in ONE job: a single input
-        scan filtered to the pending bucket set, written with
-        partitionBy("__bucket") under dynamic partition overwrite, then
-        one marker per bucket from the committed partitions. (The old
-        per-bucket driver loop re-scanned the full input once per
-        bucket — bucket is a derived column, so nothing pushes down —
-        a 16x read amplification at scale.)
+        """Featurize every incomplete bucket in ONE job (``run_buckets``):
+        a single input scan filtered to the pending bucket set (bucket
+        is a derived column, so nothing pushes down: a scan per bucket
+        would read the input n_buckets times)."""
 
-        fail_after=k limits this run to the first k pending buckets
-        and raises after their markers land (kill/resume tests).
-        Idempotence: a crash mid-write leaves only uncommitted
-        _temporary files and no markers; re-running overwrites the
-        pending partitions atomically before markers land."""
-        results: list[BucketResult] = []
-        pending = [b for b in range(self.n_buckets) if not self.is_done(b)]
-        for b in range(self.n_buckets):
-            if b not in pending:
-                results.append(BucketResult(bucket=b, skipped=True))
-        take = pending if fail_after is None else pending[:fail_after]
-        if take:
-            t0 = time.time()
-            spark = tokens.sparkSession
-            # Dynamic partition overwrite only replaces partitions that
-            # produce rows this run: a pending bucket whose output is
-            # now empty would leave a stale partition from a prior
-            # crashed run (committed files, no marker) in place, count
-            # it into rows_out, and seal it with the marker. Pending
-            # partitions are uncommitted by definition — clear them
-            # before the write.
-            import shutil
-
-            for b in take:
-                stale = os.path.join(self.out_dir, f"__bucket={b}")
-                if os.path.isdir(stale):
-                    shutil.rmtree(stale)
-            with_bucket = tokens.withColumn(
+        def build(in_take):
+            sel = tokens.withColumn(
                 "__bucket", bucket_of(F.col("doc_id"), self.n_buckets)
-            )
-            sel = with_bucket.where(
-                F.col("__bucket").isin([int(b) for b in take])
-            )
+            ).where(in_take)
             feats = frame_features_arrow(
                 sel.drop("__bucket"), self.frame_cfg, self.feat_cfg
             ).withColumn(
@@ -182,45 +285,22 @@ class FeaturizeJob:
                 "__bucket",
                 bucket_of(F.col("doc_id"), self.n_buckets),
             )
-            (
-                feats.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__bucket")
-                .parquet(self.out_dir)
-            )
-            # metrics: rows_in from one pruned count pass (doc_id
-            # column only), rows_out from one grouped pass over the
-            # committed partitions
-            rows_in = {
-                r["__bucket"]: r["count"]
-                for r in sel.groupBy("__bucket").count().collect()
-            }
-            out = bucket_aggregates(
-                spark, self.out_dir, take, F.count("*").alias("rows_out")
-            )
-            wall = time.time() - t0
-            for b in take:
-                res = BucketResult(
-                    bucket=b,
-                    skipped=False,
-                    rows_in=int(rows_in.get(b, 0)),
-                    rows_out=int(out[b]["rows_out"]) if b in out else 0,
-                    wall_sec=wall,  # shared single-job wall time
-                )
-                self._commit(
-                    res,
-                    {
-                        "window": self.frame_cfg.window,
-                        "hop": self.frame_cfg.hop,
-                        "scan": "single-pass",
-                    },
-                )
-                results.append(res)
-        if fail_after is not None and take:
-            raise RuntimeError(
-                f"injected failure after {len(take)} buckets"
-            )
-        return results
+            return feats, sel
+
+        return run_buckets(
+            self.log,
+            self.out_dir,
+            self.n_buckets,
+            list(range(self.n_buckets)),
+            build,
+            {"rows_out": F.count("*")},
+            fail_after=fail_after,
+            extra={
+                "window": self.frame_cfg.window,
+                "hop": self.frame_cfg.hop,
+                "scan": "single-pass",
+            },
+        )
 
     def read_output(self, spark: SparkSession) -> DataFrame:
         return spark.read.option("basePath", self.out_dir).parquet(
@@ -274,10 +354,9 @@ class FeatureStore:
     shared subtree once per consumer; a 20-scan speech_analysis plan
     collapses to reads of 4 tiny tables).
 
-    Write-once semantics per table via atomic directory rename (the
-    FeaturizeJob marker idea at table granularity): ``get(name,
-    builder)`` builds to ``<name>.tmp-<pid>`` and renames into place;
-    a concurrent loser just drops its temp dir.  The store directory
+    Write-once semantics per table via ``commit_table``: ``get(name,
+    builder)`` builds to a tmp dir and renames it into place; a
+    concurrent loser just drops its tmp dir.  The store directory
     is content-keyed by the caller (input path + mtime + config
     version), so a changed corpus or changed builder semantics lands
     in a fresh key rather than serving stale rows.  On real infra
@@ -298,25 +377,6 @@ class FeatureStore:
         returning the DataFrame to land."""
         p = self.path(name)
         if not os.path.isdir(p):
-            import shutil
-
-            # a crashed previous build leaves only its tmp dir (the
-            # rename never ran): clear stale tmps so they cannot
-            # accumulate, then build fresh
-            for stale in (
-                d
-                for d in os.listdir(self.base_dir)
-                if d.startswith(f"{name}.tmp-")
-            ):
-                shutil.rmtree(
-                    os.path.join(self.base_dir, stale), ignore_errors=True
-                )
-            import threading
-
-            # unique per thread too: build_all() races wave members
-            # from one process, and a shared tmp dir would interleave
-            # two writers' part files
-            tmp = f"{p}.tmp-{os.getpid()}-{threading.get_ident()}"
             t0 = time.time()
             # r6 (guide §6 output sizing): builders now run at session
             # parallelism, which would land 32-96 tiny part files per
@@ -325,28 +385,20 @@ class FeatureStore:
             # advisoryPartitionSizeInBytes-sized files (size-adaptive
             # — a big table still writes many files) without reducing
             # the build's own parallelism the way coalesce() would.
-            builder().hint("rebalance").write.mode("overwrite").parquet(
-                tmp
-            )
-            try:
-                os.rename(tmp, p)  # write-once: fails if a winner exists
-                # lineage sidecar (the FeaturizeJob marker idea at
-                # table granularity): who built it, when, how long —
-                # next to the table so consumers/auditors can read it
-                meta = {
-                    "table": name,
-                    "build_wall_sec": round(time.time() - t0, 3),
-                    "built_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                    "pid": os.getpid(),
-                }
-                mtmp = f"{p}.meta.json.tmp-{os.getpid()}"
-                with open(mtmp, "w") as f:
-                    json.dump(meta, f)
-                os.replace(mtmp, f"{p}.meta.json")
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
+            if commit_table(p, builder().hint("rebalance")):
+                # lineage sidecar: who built it, when, how long — next
+                # to the table so consumers/auditors can read it
+                write_json_atomic(
+                    f"{p}.meta.json",
+                    {
+                        "table": name,
+                        "build_wall_sec": round(time.time() - t0, 3),
+                        "built_at": time.strftime(
+                            "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
+                        ),
+                        "pid": os.getpid(),
+                    },
+                )
         return self.spark.read.parquet(p)
 
     def metrics(self) -> list[dict]:

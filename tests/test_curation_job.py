@@ -82,8 +82,38 @@ def test_curation_job_kill_resume_identity(spark, tmp_path):
         assert (m["rows_out"], m["rows_kept"]) == want.get(
             m["bucket"], (0, 0)
         ), m
+    # the on-disk format a resume reads
+    assert sorted(os.listdir(tmp_path / "out" / "_lineage")) == [
+        f"bucket_{b:05d}.json" for b in range(8)
+    ]
+    assert all(
+        set(m) == {"bucket", "rows_in", "rows_out", "rows_kept",
+                   "wall_sec", "completed_at"}
+        for m in ms
+    )
     total_in = sum(m["rows_in"] for m in ms)
     assert total_in == docs.count()
+
+
+def test_ensure_labels_clears_crashed_build_and_loses_race(spark, tmp_path):
+    """A crashed build's tmp dir is cleared before the label build,
+    and a build that loses the commit race drops its own copy instead
+    of raising, leaving the committed labels as they were."""
+    from sonar_spark.plans.pipeline import commit_table
+
+    docs = _docs(spark)
+    job = CurationJob(str(tmp_path / "j"), n_buckets=4)
+    crashed = tmp_path / "j" / "labels.tmp-1"
+    crashed.mkdir(parents=True)
+    (crashed / "part-00000.parquet").write_bytes(b"partial")
+    labels = sorted(job.ensure_labels(docs).collect())
+    assert not crashed.exists()
+    assert len(labels) == docs.count()
+
+    assert not commit_table(job.labels_dir, docs.select("doc_id"))
+    assert [d for d in os.listdir(tmp_path / "j")
+            if d.startswith("labels.tmp-")] == []
+    assert sorted(job.ensure_labels(docs).collect()) == labels
 
 
 def test_curation_job_decision_semantics(spark, tmp_path):
@@ -176,6 +206,15 @@ def test_chunk_stage_kill_resume_identity(spark, tmp_path):
         assert (m["n_docs"], m["n_chunks"], m["tokens_out"]) == want.get(
             m["bucket"], (0, 0, 0)
         ), m
+    # the on-disk format a resume reads
+    assert sorted(os.listdir(tmp_path / "out" / "_lineage_chunks")) == [
+        f"bucket_{b:05d}.json" for b in range(8)
+    ]
+    assert all(
+        set(m) == {"bucket", "n_docs", "n_chunks", "tokens_out",
+                   "wall_sec", "completed_at", "window", "stride"}
+        for m in ms
+    )
 
 
 def test_chunk_stage_matches_direct_chunker(spark, tmp_path):

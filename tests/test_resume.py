@@ -11,6 +11,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import time
 import zipfile
 
 import pytest
@@ -44,8 +45,11 @@ def test_resume_after_injected_failure(spark, tmp_path):
         job.run(toks, fail_after=3)
     assert len(job.completed_buckets()) == 3
 
-    # resume: completed buckets skipped, rest processed
-    results = FeaturizeJob(out_dir, n_buckets=8, frame_cfg=CFG).run(toks)
+    # resume: completed buckets skipped, rest processed; fail_after
+    # that covers every pending bucket lands them all and does not raise
+    results = FeaturizeJob(out_dir, n_buckets=8, frame_cfg=CFG).run(
+        toks, fail_after=5
+    )
     skipped = [r.bucket for r in results if r.skipped]
     assert len(skipped) == 3
     assert len(job.completed_buckets()) == 8
@@ -63,9 +67,22 @@ def test_resume_after_injected_failure(spark, tmp_path):
 def test_lineage_metrics(spark, tmp_path):
     toks = datagen.token_table(spark, n_docs=30)
     job = FeaturizeJob(str(tmp_path / "o"), n_buckets=4, frame_cfg=CFG)
+    t0 = time.time()
     job.run(toks)
+    wall = time.time() - t0
     recs = job.metrics()
     assert len(recs) == 4
+    # the on-disk format a resume reads: one marker per bucket
+    assert sorted(os.listdir(tmp_path / "o" / "_lineage")) == [
+        f"bucket_{b:05d}.json" for b in range(4)
+    ]
+    assert all(
+        set(r) == {"bucket", "rows_in", "rows_out", "wall_sec",
+                   "completed_at", "window", "hop", "scan"}
+        for r in recs
+    )
+    # wall_sec is each bucket's share of the run, not the whole run's
+    assert sum(r["wall_sec"] for r in recs) <= wall
     assert sum(r["rows_in"] for r in recs) == 30
     total_frames = job.read_output(spark).count()
     assert sum(r["rows_out"] for r in recs) == total_frames
