@@ -32,6 +32,7 @@ from sonar_spark.datagen import entity_of  # noqa: E402
 from sonar_spark.functions.text import (  # noqa: E402
     doc_fingerprint,
     n_tokens,
+    ngrams_ws,
     to_token_length_table,
     to_token_table,
 )
@@ -44,8 +45,9 @@ from sonar_spark.operators.features import (  # noqa: E402
     frame_features_arrow,
 )
 from sonar_spark.operators.fingerprint import (  # noqa: E402
-    lsh_candidate_pairs,
     minhash_fingerprints,
+    near_dup_labels,
+    near_dup_pairs,
     shingle_hash_table,
     simhash_near_duplicates,
 )
@@ -338,7 +340,8 @@ def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 8)
     scored = allpairs_cosine(
-        qs, f"{sf_dir}/embeddings.parquet", threshold=-1.0, directed=True
+        qs, f"{sf_dir}/embeddings.parquet", threshold=float("-inf"),
+        directed=True,
     ).select(
         F.col("id_a").alias("query_id"),
         F.col("id_b").alias("neighbor_id"),
@@ -385,17 +388,6 @@ def q_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("mean", 6).alias("mean"),
         F.round("std", 6).alias("std"),
         F.round("p50", 6).alias("p50"),
-    )
-
-
-def _shingles4(toks):
-    """Word-4-gram shingle strings (same construction in the SQL
-    oracle) — the n-gram Jaccard dedup unit (SURVEY §2.7 Jaccard)."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - 3, F.lit(1))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, 4)),
-        )
     )
 
 
@@ -491,31 +483,35 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token table + deterministic near-dup copies of ~10% of docs
-    (tokens minus the last 3) — planted dedup workload. The planting
-    rule (doc_id % 10 == 0, n_tok > 3) is SQL-replicable so DuckDB
-    oracles can reconstruct the corpus.  r6: _par-parallelized at the
-    scan so the tokenization and every kernel downstream (minhash,
-    shingles, frame features) runs at session parallelism instead of
-    on the single-row-group file's 1-task scan."""
-    base = to_token_table(_par(spark, _t(spark, sf_dir, "documents")))
-    # n_tok > 3 guard: F.slice needs a non-negative length
+# the MinHash/LSH setting of every planted-dup near-dup query: r=2
+# rows x 32 bands, LSH recall 1.0 at the 0.8 exact-Jaccard threshold
+# on these corpora (the minhash_dedup certificate)
+_DEDUP_CFG = MinHashConfig(num_hashes=64, bands=32)
+
+
+def _plant_dups(spark: SparkSession, base: DataFrame, arr: str) -> DataFrame:
+    """The planted-dup corpus over ``base`` (doc_id string + the
+    array column ``arr``): every doc, plus a near-dup copy minus the
+    last 3 elements of each doc whose id ends in 0 and that has more
+    than 3 elements (id suffix _dup), plus an exact copy of each doc
+    whose id ends in 5 (id suffix _copy) — the identity-recall
+    workload for the simhash pigeonhole guarantee.  A token table's
+    n_tok shrinks with its array; every other column is copied.  The
+    rule is SQL-replicable, so DuckDB oracles rebuild the corpus."""
+    has_n = "n_tok" in base.columns
+    n = F.col("n_tok") if has_n else F.size(arr)
+    cut = {
+        "doc_id": F.concat(F.col("doc_id"), F.lit("_dup")),
+        # the n > 3 guard keeps F.slice's length non-negative
+        arr: F.slice(F.col(arr), 1, n - 3),
+    }
+    if has_n:
+        cut["n_tok"] = n - 3
     dups = base.where(
-        (F.col("doc_id").cast("long") % 10 == 0) & (F.col("n_tok") > 3)
-    ).select(
-        F.concat(F.col("doc_id"), F.lit("_dup")).alias("doc_id"),
-        F.slice(F.col("tokens"), 1, F.col("n_tok") - 3).alias("tokens"),
-        (F.col("n_tok") - 3).alias("n_tok"),
-        F.col("source"),
-    )
-    # exact copies (doc_id % 10 == 5): identity-recall workload for
-    # the simhash pigeonhole guarantee
-    copies = base.where(F.col("doc_id").cast("long") % 10 == 5).select(
-        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"),
-        "tokens",
-        "n_tok",
-        "source",
+        (F.col("doc_id").cast("long") % 10 == 0) & (n > 3)
+    ).withColumns(cut)
+    copies = base.where(F.col("doc_id").cast("long") % 10 == 5).withColumn(
+        "doc_id", F.concat(F.col("doc_id"), F.lit("_copy"))
     )
     # coalesce (narrow, no shuffle): the 3-branch union of a
     # _par'd scan would otherwise carry 3x parallelism partitions
@@ -527,8 +523,21 @@ def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token table of the planted-dup corpus (_plant_dups) — the
+    MinHash input of every near-dup query.  r6: _par-parallelized at
+    the scan so the tokenization and every kernel downstream
+    (minhash, shingles, frame features) runs at session parallelism
+    instead of on the single-row-group file's 1-task scan."""
+    return _plant_dups(
+        spark,
+        to_token_table(_par(spark, _t(spark, sf_dir, "documents"))),
+        "tokens",
+    )
+
+
 def _dup_corpus_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-array view of _dup_corpus (same planting rule) — the
+    """Word-array view of the planted-dup corpus (_plant_dups) — the
     exact-verification unit reproducible in DuckDB SQL.
     _par-parallelized (r6)."""
     docs = _par(spark, _t(spark, sf_dir, "documents"))
@@ -536,22 +545,17 @@ def _dup_corpus_words(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("string").alias("doc_id"),
         F.split(F.trim(F.col("text")), r"\s+").alias("words"),
     )
-    dups = base.where(
-        (F.col("doc_id").cast("long") % 10 == 0) & (F.size("words") > 3)
-    ).select(
-        F.concat(F.col("doc_id"), F.lit("_dup")).alias("doc_id"),
-        F.slice(F.col("words"), 1, F.size("words") - 3).alias("words"),
-    )
-    copies = base.where(F.col("doc_id").cast("long") % 10 == 5).select(
-        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"), "words"
-    )
-    # coalesce (narrow, no shuffle): the 3-branch union of a
-    # _par'd scan would otherwise carry 3x parallelism partitions
-    # through every downstream stage (96 tiny tasks per stage)
-    return (
-        base.unionByName(dups)
-        .unionByName(copies)
-        .coalesce(spark.sparkContext.defaultParallelism)
+    return _plant_dups(spark, base, "words")
+
+
+def _dup_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh) hashed 4-shingle sets of the planted-dup corpus —
+    the exact-verify side of near_dup_pairs.  r6: 8-byte elements
+    from the Arrow kernel (intersect/union SIZES equal the string
+    form — certified); the repartition doubles as the anti-inlining
+    materialization."""
+    return shingle_hash_table(_dup_corpus_words(spark, sf_dir)).repartition(
+        spark.sparkContext.defaultParallelism
     )
 
 
@@ -563,32 +567,8 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle recomputes the full exact pair set, so a green row
     proves LSH recall 1.0 at the threshold on this corpus (r=2 rows x
     32 bands => miss probability ~1e-14 per 0.8-pair)."""
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
-    # r6: hashed shingle sets from the Arrow kernel (8-byte elements;
-    # intersect/union SIZES equal the string form — certified) —
-    # the repartition doubles as the anti-inlining materialization
-    words = shingle_hash_table(
-        _dup_corpus_words(spark, sf_dir)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    j = (
-        cand.join(
-            words.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            words.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        j.select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-        .where(F.col("jaccard") >= 0.8)
+    return near_dup_pairs(
+        _dup_corpus(spark, sf_dir), _dup_shingles(spark, sf_dir), _DEDUP_CFG, 0.8
     )
 
 
@@ -634,41 +614,8 @@ def _dup_group_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dup_group_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sonar_spark.operators.fingerprint import connected_components
-
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
-    # r6: hashed shingle sets (the minhash_dedup rationale)
-    words = shingle_hash_table(
-        _dup_corpus_words(spark, sf_dir)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    j = cand.join(
-        words.select(
-            F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-        ),
-        "doc_a",
-    ).join(
-        words.select(
-            F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-        ),
-        "doc_b",
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-        "double"
-    ) / F.size(F.array_union("sh_a", "sh_b"))
-    pairs = j.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("__j")
-    ).where(F.col("__j") >= 0.8)
-    cc = connected_components(pairs)
-    return (
-        corpus.select("doc_id")
-        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("comp", F.col("doc_id")).alias("component"),
-        )
+    return near_dup_labels(
+        _dup_corpus(spark, sf_dir), _dup_shingles(spark, sf_dir), _DEDUP_CFG, 0.8
     )
 
 
@@ -681,38 +628,17 @@ def q_curation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> connected components), and the keep/drop verdict
     (keep = canonical AND quality >= 0.5 AND >= 5 tokens — a policy
     example; every term is a column, so policies are plan-time
-    edits).  Text is reconstructed from the word arrays
-    (whitespace-normalized) so base docs and planted copies flow
-    through identical semantics — and so the DuckDB oracle can
-    recompute every stage exactly."""
-    from sonar_spark.functions.text import detect_language, quality_score
+    edits).  Scoring and verdict are CurationPolicy.decide, the one
+    CurationJob lands per bucket.  Text is reconstructed from the
+    word arrays (whitespace-normalized) so base docs and planted
+    copies flow through identical semantics — and so the DuckDB
+    oracle can recompute every stage exactly."""
+    from sonar_spark.plans.curation import CurationPolicy
 
-    words = _dup_corpus_words(spark, sf_dir)
-    text = F.array_join("words", " ")
-    d = words.select(
-        "doc_id",
-        text.alias("text"),
-        F.size("words").cast("long").alias("n_tokens"),
+    docs = _dup_corpus_words(spark, sf_dir).select(
+        "doc_id", F.array_join("words", " ").alias("text")
     )
-    scored = d.select(
-        "doc_id",
-        "n_tokens",
-        detect_language(F.col("text")).alias("lang"),
-        F.round(quality_score(F.col("text")), 6).alias("quality"),
-    )
-    labs = _dup_group_labels(spark, sf_dir)
-    out = scored.join(labs, "doc_id")
-    is_canon = F.col("doc_id") == F.col("component")
-    keep = is_canon & (F.col("quality") >= 0.5) & (F.col("n_tokens") >= 5)
-    return out.select(
-        "doc_id",
-        "lang",
-        "quality",
-        "n_tokens",
-        "component",
-        is_canon.alias("is_canonical"),
-        keep.alias("keep"),
-    )
+    return CurationPolicy().decide(docs, _dup_group_labels(spark, sf_dir))
 
 
 def q_curation_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1086,34 +1012,9 @@ def q_compare_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats columns).  Fully DuckDB-oracle-backed: the oracle
     recomputes the exact pair set, the frame-feature doc stats, and
     the weighted cosine blend."""
-    cfg = MinHashConfig(num_hashes=64, bands=32)
-    corpus = _dup_corpus(spark, sf_dir)
-    sigs = minhash_fingerprints(corpus, cfg)
-    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
-    # r6: hashed shingle sets (the minhash_dedup rationale)
-    words = shingle_hash_table(
-        _dup_corpus_words(spark, sf_dir)
-    ).repartition(spark.sparkContext.defaultParallelism)
-    jp = (
-        cand.join(
-            words.select(
-                F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            words.select(
-                F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-            ),
-            "doc_b",
-        )
+    verified = near_dup_pairs(
+        _dup_corpus(spark, sf_dir), _dup_shingles(spark, sf_dir), _DEDUP_CFG, 0.8
     )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-        "double"
-    ) / F.size(F.array_union("sh_a", "sh_b"))
-    verified = jp.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("__j")
-    ).where(F.col("__j") >= 0.8)
     # both directions in ONE pass over `verified` (a union of two
     # selects would re-evaluate the whole LSH+shingle subtree twice)
     sym = verified.select(
@@ -1137,27 +1038,10 @@ def q_compare_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-Jaccard verification pins down either way
     # r6: _par so the frame kernel below runs at session parallelism
     # (the coalesce after the union caps the 3-branch fan-out)
-    lbase = to_token_length_table(
-        _par(spark, _t(spark, sf_dir, "documents"))
-    )
-    ldups = lbase.where(
-        (F.col("doc_id").cast("long") % 10 == 0) & (F.col("n_tok") > 3)
-    ).select(
-        F.concat(F.col("doc_id"), F.lit("_dup")).alias("doc_id"),
-        F.slice(F.col("tokens"), 1, F.col("n_tok") - 3).alias("tokens"),
-        (F.col("n_tok") - 3).alias("n_tok"),
-        F.col("source"),
-    )
-    lcopies = lbase.where(F.col("doc_id").cast("long") % 10 == 5).select(
-        F.concat(F.col("doc_id"), F.lit("_copy")).alias("doc_id"),
+    lcorpus = _plant_dups(
+        spark,
+        to_token_length_table(_par(spark, _t(spark, sf_dir, "documents"))),
         "tokens",
-        "n_tok",
-        "source",
-    )
-    lcorpus = (
-        lbase.unionByName(ldups)
-        .unionByName(lcopies)
-        .coalesce(spark.sparkContext.defaultParallelism)
     )
     # r6: _explicit_doc_stats consumes only the energy+moments
     # families — prune the kernel to them
@@ -3684,7 +3568,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.array_distinct(
-                _shingles4(F.split(F.trim(F.col("text")), r"\s+"))
+                ngrams_ws(F.split(F.trim(F.col("text")), r"\s+"), 4)
             )
         ).alias("sh"),
     )
@@ -4216,7 +4100,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.array_distinct(
-                _shingles4(F.split(F.trim(F.col("text")), r"\s+"))
+                ngrams_ws(F.split(F.trim(F.col("text")), r"\s+"), 4)
             )
         ).alias("sh"),
     )
@@ -7167,10 +7051,11 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: the exploded band table feeds BOTH join sides (batch and
     # corpus filters of the same subtree) — persist it so the minhash
     # kernel runs once, not twice
-    sigs = minhash_fingerprints(
-        _dup_corpus(spark, sf_dir),
-        MinHashConfig(num_hashes=64, bands=32),
-    ).select("doc_id", F.posexplode("bands").alias("bi", "bh")).persist()
+    sigs = (
+        minhash_fingerprints(_dup_corpus(spark, sf_dir), _DEDUP_CFG)
+        .select("doc_id", F.posexplode("bands").alias("bi", "bh"))
+        .persist()
+    )
     cand = (
         sigs.where(is_batch)
         .select(F.col("doc_id").alias("b_id"), "bi", "bh")

@@ -177,11 +177,3 @@ def emd_1d(p: Column, q: Column) -> Column:
     )
     return asum(F.transform(cdf_diff, F.abs))
 
-
-def jaccard_exact(a: Column, b: Column) -> Column:
-    """|A∩B| / |A∪B| on element sets (distance.go:198-216) — the
-    MinHash estimand, exact form."""
-    u = F.size(F.array_union(a, b))
-    return F.when(
-        u > 0, F.size(F.array_intersect(a, b)).cast("double") / u
-    ).otherwise(F.lit(0.0))

@@ -40,19 +40,13 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pca import _mic_sql, _q9, _q9_sql
+
 LR = 0.5
 GD_STEPS = 30
 LABEL_THRESH = 0.73
 TRAIN_MOD = 3
 N_FEATS = 4  # + bias
-
-
-def _q9(x: float) -> float:
-    return (
-        math.floor(x * 1e9 + 0.5) / 1e9
-        if x >= 0
-        else math.ceil(x * 1e9 - 0.5) / 1e9
-    )
 
 
 def _micro(x: float) -> int:
@@ -178,20 +172,6 @@ def quality_classifier(docs: DataFrame) -> DataFrame:
         F.lit(w[2]).alias("w2"),
         F.lit(w[3]).alias("w3"),
         F.lit(w[4]).alias("w4"),
-    )
-
-
-def _mic_sql(e: str) -> str:
-    return (
-        f"CAST(CASE WHEN ({e}) >= 0 THEN floor(({e}) * 1e9 + 0.5) "
-        f"ELSE ceil(({e}) * 1e9 - 0.5) END AS BIGINT)"
-    )
-
-
-def _q9_sql(e: str) -> str:
-    return (
-        f"CASE WHEN ({e}) >= 0 THEN floor(({e}) * 1e9 + 0.5) / 1e9 "
-        f"ELSE ceil(({e}) * 1e9 - 0.5) / 1e9 END"
     )
 
 

@@ -151,8 +151,10 @@ def to_token_length_table(docs: DataFrame) -> DataFrame:
 def ngrams_ws(words: Column, k: int) -> Column:
     """All k-token shingle strings of a word array, in order,
     duplicates kept (positions 1..max(n-k+1, 1); shorter docs yield
-    one clamped shingle — the _shingles4 convention, without the
-    distinct)."""
+    one clamped shingle) — the one string-shingle rule: CurationJob's
+    verify sets and the decontaminate shingles (with array_distinct)
+    use it, the DuckDB oracles replay it, and
+    fingerprint.shingle_hash_table hashes the same shingles."""
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1))),
         lambda i: F.concat_ws(" ", F.slice(words, i, k)),

@@ -12,8 +12,12 @@ Physical design for 10^12 docs:
   quadratic blow-up stays local; a size cap guards pathological
   buckets (all-identical corpora).
 - verification: signature agreement (mean of equal minhashes) is an
-  unbiased Jaccard estimate; exact verification joins the token
-  arrays back only for surviving pairs (tiny fraction).
+  unbiased Jaccard estimate; exact verification (verify_pairs) joins
+  the shingle sets back only for surviving pairs (tiny fraction).
+  near_dup_pairs (MinHash -> LSH -> verify) and near_dup_labels
+  (+ connected components) are the one near-dup chain every dedup
+  caller runs — the queries, CurationJob's label table and, through
+  verify_pairs, incremental_dedup.
 """
 
 from __future__ import annotations
@@ -349,6 +353,63 @@ def connected_components(
     return labels.select("node", "comp")
 
 
+def verify_pairs(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs — the estimand
+    MinHash approximates (distance.go:198-216).  cand (doc_a, doc_b)
+    joins the (doc_id, sh) shingle-set tables sh_a on doc_a and sh_b
+    on doc_b (a symmetric caller passes one table twice); output
+    (doc_a, doc_b, jaccard = round(|A ∩ B| / |A ∪ B|, 6)) keeping
+    jaccard >= threshold.  The shingle tables are joined back only
+    for surviving candidates, so the set arithmetic is linear in the
+    candidate count."""
+    jac = F.size(F.array_intersect("sh_a", "sh_b")).cast("double") / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return (
+        cand.join(
+            sh_a.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
+            "doc_a",
+        )
+        .join(
+            sh_b.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
+            "doc_b",
+        )
+        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def near_dup_pairs(
+    tokens: DataFrame, shingles: DataFrame, cfg: MinHashConfig, threshold: float
+) -> DataFrame:
+    """The near-dup pair chain: MinHash signatures of the token table
+    -> banded-LSH candidates (one shuffle on the band key) -> exact
+    shingle-Jaccard verification against the (doc_id, sh) table
+    (verify_pairs).  Output (doc_a, doc_b, jaccard), doc_a < doc_b."""
+    sigs = minhash_fingerprints(tokens, cfg)
+    cand = lsh_candidate_pairs(sigs, cfg, with_est=False)
+    return verify_pairs(cand, shingles, shingles, threshold)
+
+
+def near_dup_labels(
+    tokens: DataFrame, shingles: DataFrame, cfg: MinHashConfig, threshold: float
+) -> DataFrame:
+    """Near-dup GROUP labels: connected components over the
+    near_dup_pairs graph, left-joined back onto every doc of the token
+    table.  Output (doc_id, component); component = the smallest doc
+    id of the duplicate cluster, a singleton's own id."""
+    cc = connected_components(near_dup_pairs(tokens, shingles, cfg, threshold))
+    return (
+        tokens.select("doc_id")
+        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
+        .select(
+            "doc_id", F.coalesce("comp", F.col("doc_id")).alias("component")
+        )
+    )
+
+
 def winnow_fingerprints(
     words_df: DataFrame,
     *,
@@ -614,10 +675,11 @@ def shingle_hash_table(
     _equals_string, plus every consumer's DuckDB value oracle, which
     replays the STRING form end-to-end), while the interpreted
     transform+concat_ws build and the string-array intersect/union
-    disappear.  Shingle rule matches _shingles4/sh4: positions
-    1..max(n-k+1, 1), short docs yield one clamped shingle,
-    duplicates dropped.  NOT for consumers whose VALUES depend on the
-    shingle bytes (the Bloom md5 bit table keeps strings)."""
+    disappear.  Shingle rule matches functions.text.ngrams_ws:
+    positions 1..max(n-k+1, 1), short docs yield one clamped
+    shingle, duplicates dropped.  NOT for consumers whose VALUES
+    depend on the shingle bytes (the Bloom md5 bit table keeps
+    strings)."""
     from collections.abc import Iterator
     from hashlib import blake2b
 
@@ -934,7 +996,7 @@ def incremental_dedup(
     pass joins the two sides' distinct-shingle inverted indexes on
     the shingle key — candidates are CROSS-SIDE only (batch x
     corpus, never corpus x corpus: the index side is settled) —
-    then verifies candidates with exact Jaccard.
+    then verifies candidates with exact Jaccard (verify_pairs).
 
     `candidate_pairs` (b_id, c_id) replaces the shingle-index join
     with a caller-supplied candidate set — the banded-MinHash index
@@ -970,28 +1032,23 @@ def incremental_dedup(
     # sizes equal the string form — the shingle_hash_table contract);
     # the exact md5 fingerprint above still hashes the full token
     # stream, so exact-dup detection is untouched
-    bs = shingle_hash_table(
-        batch, id_col="doc_id", words_col="words", out_col="b_sh"
-    ).withColumnRenamed("doc_id", "b_id")
-    cs = shingle_hash_table(
-        corpus, id_col="doc_id", words_col="words", out_col="c_sh"
-    ).withColumnRenamed("doc_id", "c_id")
+    bs = shingle_hash_table(batch)
+    cs = shingle_hash_table(corpus)
     if candidate_pairs is not None:
         cand = candidate_pairs.select("b_id", "c_id").distinct()
     else:
-        binv = bs.select("b_id", F.explode("b_sh").alias("g"))
-        cinv = cs.select("c_id", F.explode("c_sh").alias("g"))
+        binv = bs.select(F.col("doc_id").alias("b_id"), F.explode("sh").alias("g"))
+        cinv = cs.select(F.col("doc_id").alias("c_id"), F.explode("sh").alias("g"))
         cand = binv.join(cinv, "g").select("b_id", "c_id").distinct()
-    jac = F.round(
-        F.size(F.array_intersect("b_sh", "c_sh")).cast("double")
-        / F.size(F.array_union("b_sh", "c_sh")),
-        6,
-    )
-    verified = (
-        cand.join(bs, "b_id")
-        .join(cs, "c_id")
-        .select("b_id", "c_id", jac.alias("j"))
-        .where(F.col("j") >= threshold)
+    verified = verify_pairs(
+        cand.select(F.col("b_id").alias("doc_a"), F.col("c_id").alias("doc_b")),
+        bs,
+        cs,
+        threshold,
+    ).select(
+        F.col("doc_a").alias("b_id"),
+        F.col("doc_b").alias("c_id"),
+        F.col("jaccard").alias("j"),
     )
     wbest = Window.partitionBy("b_id").orderBy(
         F.col("j").desc(), F.col("c_id").asc()

@@ -4,20 +4,25 @@ curation composites (langid / quality / near-dup grouping / keep-drop
 policy) into the operational job shape a 100 TB corpus actually runs:
 
 - **Phase 1 (corpus-global, write-once):** the near-dup LABEL table
-  under <out>/labels (MinHash -> banded LSH -> exact shingle-Jaccard
-  verify -> connected components).  Dedup is inherently corpus-global
-  — a duplicate pair can span any two buckets — so it cannot ride the
-  per-bucket resume loop; it lands once and every later run (and
-  every resume) reuses it.  At scale this is the one shuffle-heavy
-  stage: one band-key exchange + candidate-bounded verify joins +
-  connected components over the verified pairs — one checkpointed
-  symmetrized edge table, then O(log d) pointer-jumping rounds of one
-  join, one aggregation and one self-join each.
+  under <out>/labels, built by the shared near-dup chain
+  operators.fingerprint.near_dup_labels (MinHash -> banded LSH ->
+  exact shingle-Jaccard verify -> connected components — the chain
+  the dedup queries and the feature store's dup_labels run too).
+  Dedup is inherently corpus-global — a duplicate pair can span any
+  two buckets — so it cannot ride the per-bucket resume loop; it
+  lands once and every later run (and every resume) reuses it.  At
+  scale this is the one shuffle-heavy stage: one band-key exchange +
+  candidate-bounded verify joins + connected components over the
+  verified pairs — one checkpointed symmetrized edge table, then
+  O(log d) pointer-jumping rounds of one join, one aggregation and
+  one self-join each.
 
 - **Phase 2 (per-bucket, markers under _lineage):** the per-document
   DECISION table (doc_id, lang, quality, n_tokens, component,
-  is_canonical, keep) — scoring as pure Catalyst expressions riding
-  the corpus scan, plus ONE join of the phase-1 label table.
+  is_canonical, keep) from CurationPolicy.decide (the verdict the
+  curation_filter query computes too) — scoring as pure Catalyst
+  expressions riding the corpus scan, plus ONE join of the phase-1
+  label table.
 
 - **Phase 3 (per-bucket, markers under _lineage_chunks):** the
   training-ready CHUNK table — the sliding window/stride chunker over
@@ -49,12 +54,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sonar_spark.config import MinHashConfig
-from sonar_spark.functions.text import detect_language, quality_score
-from sonar_spark.operators.fingerprint import (
-    connected_components,
-    lsh_candidate_pairs,
-    minhash_fingerprints,
+from sonar_spark.functions.text import (
+    detect_language,
+    n_tokens,
+    ngrams_ws,
+    quality_score,
+    to_token_table,
+    tokenize_ws,
 )
+from sonar_spark.operators.fingerprint import near_dup_labels
 from sonar_spark.plans.pipeline import (
     BucketResult,
     LineageLog,
@@ -64,19 +72,6 @@ from sonar_spark.plans.pipeline import (
 )
 
 
-def _shingles(words, k: int = 4):
-    """k-token shingles as strings (space-joined) — the exact-verify
-    unit (the minhash_dedup convention)."""
-    n = F.size(words)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(words, i, k), " "),
-        ),
-    ).otherwise(F.array(F.array_join(words, " ")))
-
-
 @dataclass
 class CurationPolicy:
     """Plan-time keep/drop policy terms (every term is a column)."""
@@ -84,6 +79,48 @@ class CurationPolicy:
     min_quality: float = 0.5
     min_tokens: int = 5
     jaccard: float = 0.8
+
+    def decide(self, docs: DataFrame, labels: DataFrame) -> DataFrame:
+        """The per-document verdict: (doc_id string, text, *carry)
+        docs + (doc_id, component) near-dup labels -> (doc_id, lang,
+        quality, n_tokens, component, is_canonical, keep, *carry).
+        Scoring is pure Catalyst expressions over the text, plus ONE
+        left join of the labels; an unlabeled doc is its own
+        component.  keep = canonical AND quality >= min_quality AND
+        n_tokens >= min_tokens.  Every docs column other than doc_id
+        and text rides through unchanged."""
+        carry = [c for c in docs.columns if c not in ("doc_id", "text")]
+        scored = docs.select(
+            "doc_id",
+            *carry,
+            detect_language(F.col("text")).alias("lang"),
+            F.round(quality_score(F.col("text")), 6).alias("quality"),
+            n_tokens(F.col("text")).cast("long").alias("n_tokens"),
+        )
+        out = scored.join(labels, "doc_id", "left").select(
+            "doc_id",
+            "lang",
+            "quality",
+            "n_tokens",
+            F.coalesce("component", F.col("doc_id")).alias("component"),
+            *carry,
+        )
+        is_canon = F.col("doc_id") == F.col("component")
+        keep = (
+            is_canon
+            & (F.col("quality") >= self.min_quality)
+            & (F.col("n_tokens") >= self.min_tokens)
+        )
+        return out.select(
+            "doc_id",
+            "lang",
+            "quality",
+            "n_tokens",
+            "component",
+            is_canon.alias("is_canonical"),
+            keep.alias("keep"),
+            *carry,
+        )
 
 
 class CurationJob:
@@ -123,55 +160,15 @@ class CurationJob:
         if os.path.exists(os.path.join(self.labels_dir, "_SUCCESS")):
             return spark.read.parquet(self.labels_dir)
 
-        from sonar_spark.functions.text import to_token_table
-
         words = docs.select(
             F.col("doc_id").cast("string").alias("doc_id"),
-            F.split(F.trim(F.col("text")), r"\s+").alias("words"),
-        )
-        tok = to_token_table(docs)
-        sigs = minhash_fingerprints(tok, self.minhash_cfg)
-        cand = lsh_candidate_pairs(sigs, self.minhash_cfg, with_est=False).select(
-            "doc_a", "doc_b"
+            tokenize_ws(F.col("text")).alias("words"),
         )
         sh = words.select(
-            "doc_id", _shingles(F.col("words")).alias("sh")
-        ).repartition(
-            max(8, docs.sparkSession.sparkContext.defaultParallelism)
-        )
-        j = cand.join(
-            sh.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("sh").alias("sh_a"),
-            ),
-            "doc_a",
-        ).join(
-            sh.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("sh").alias("sh_b"),
-            ),
-            "doc_b",
-        )
-        jac = F.size(F.array_intersect("sh_a", "sh_b")).cast(
-            "double"
-        ) / F.size(F.array_union("sh_a", "sh_b"))
-        pairs = j.select(
-            "doc_a", "doc_b", F.round(jac, 6).alias("__j")
-        ).where(F.col("__j") >= self.policy.jaccard)
-        cc = connected_components(pairs)
-        labels = (
-            words.select("doc_id")
-            .join(
-                cc.withColumnRenamed("node", "doc_id"),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("comp", F.col("doc_id")).alias(
-                    "component"
-                ),
-            )
+            "doc_id", ngrams_ws(F.col("words"), 4).alias("sh")
+        ).repartition(max(8, spark.sparkContext.defaultParallelism))
+        labels = near_dup_labels(
+            to_token_table(docs), sh, self.minhash_cfg, self.policy.jaccard
         )
         commit_table(self.labels_dir, labels)
         return spark.read.parquet(self.labels_dir)
@@ -197,42 +194,7 @@ class CurationJob:
                     F.col("doc_id").cast("string"), self.n_buckets
                 ).alias("__bucket"),
             ).where(in_take)
-            scored = d.select(
-                "doc_id",
-                "__bucket",
-                detect_language(F.col("text")).alias("lang"),
-                F.round(quality_score(F.col("text")), 6).alias("quality"),
-                F.size(F.split(F.trim(F.col("text")), r"\s+"))
-                .cast("long")
-                .alias("n_tokens"),
-            )
-            out = scored.join(labels, "doc_id", "left").select(
-                "doc_id",
-                "lang",
-                "quality",
-                "n_tokens",
-                F.coalesce("component", F.col("doc_id")).alias(
-                    "component"
-                ),
-                "__bucket",
-            )
-            is_canon = F.col("doc_id") == F.col("component")
-            keep = (
-                is_canon
-                & (F.col("quality") >= self.policy.min_quality)
-                & (F.col("n_tokens") >= self.policy.min_tokens)
-            )
-            final = out.select(
-                "doc_id",
-                "lang",
-                "quality",
-                "n_tokens",
-                "component",
-                is_canon.alias("is_canonical"),
-                keep.alias("keep"),
-                "__bucket",
-            )
-            return final, d
+            return self.policy.decide(d, labels), d
 
         return run_buckets(
             self.log,

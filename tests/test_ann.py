@@ -209,3 +209,38 @@ def test_ivfpq_index_and_recall(spark, sf_dir):
         rank_of = {i: r for r, (_, i) in enumerate(d_all)}
         pcts.extend(rank_of[n] / len(d_all) for n in nbrs)
     assert np.mean(pcts) < 0.2, np.mean(pcts)  # measured ~0.08
+
+
+def test_embedding_knn_keeps_antipodal_neighbor(spark, tmp_path):
+    """embedding_knn ranks every other vector: an exact negation
+    (cosine -1, which often computes one ulp below -1.0) must not be
+    dropped by the no-filter threshold."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    v0 = [
+        0.0018383339340982316, -0.4137970831284381, -0.3556849165163359,
+        -0.9752107026689719, 0.4811324870739124, 0.5384835018864853,
+        -0.4997847410170141, -0.23615880423160815,
+    ]
+    rng = np.random.default_rng(5)
+    vecs = [v0, [-x for x in v0]] + rng.standard_normal((4, 8)).tolist()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(6), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float64())),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    rows = [
+        r
+        for r in E.q_embedding_knn(spark, str(tmp_path)).collect()
+        if r["query_id"] == 0
+    ]
+    assert len(rows) == 5
+    assert {r["neighbor_id"] for r in rows} == {1, 2, 3, 4, 5}
+    assert [r["cosine_sim"] for r in rows if r["neighbor_id"] == 1] == [-1.0]

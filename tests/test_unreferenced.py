@@ -1,6 +1,8 @@
 """No unreferenced code: every top-level function and class in
 sonar_spark/ is mentioned by some Python file in the repo outside its
-own definition.  Spark-free."""
+own definition, and no such name is defined in two sonar_spark/
+modules (a same-named twin would hide a dead copy from the mention
+count, and two copies of one helper drift).  Spark-free."""
 
 from __future__ import annotations
 
@@ -25,27 +27,38 @@ def _py_sources() -> dict[str, str]:
     return out
 
 
+def _package_defs(sources: dict[str, str]):
+    """(path, src, node) for every top-level def/class in sonar_spark/
+    (dunders ignored)."""
+    pkg = os.path.join(REPO, "sonar_spark") + os.sep
+    for path, src in sources.items():
+        if not path.startswith(pkg):
+            continue
+        for node in ast.parse(src).body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not node.name.startswith("__"):
+                yield path, src, node
+
+
 def test_no_unreferenced_top_level_names():
     sources = _py_sources()
     mentions = collections.Counter()
     for src in sources.values():
         mentions.update(WORD.findall(src))
-    pkg = os.path.join(REPO, "sonar_spark") + os.sep
     unreferenced = []
-    for path, src in sources.items():
-        if not path.startswith(pkg):
-            continue
-        lines = src.splitlines()
-        for node in ast.parse(src).body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) or node.name.startswith("__"):
-                continue
-            own = WORD.findall(
-                "\n".join(lines[node.lineno - 1 : node.end_lineno])
-            )
-            if mentions[node.name] == own.count(node.name):
-                unreferenced.append(
-                    f"{os.path.relpath(path, REPO)}:{node.name}"
-                )
+    for path, src, node in _package_defs(sources):
+        own = WORD.findall(
+            "\n".join(src.splitlines()[node.lineno - 1 : node.end_lineno])
+        )
+        if mentions[node.name] == own.count(node.name):
+            unreferenced.append(f"{os.path.relpath(path, REPO)}:{node.name}")
     assert unreferenced == [], unreferenced
+
+
+def test_no_top_level_name_defined_in_two_modules():
+    modules = collections.defaultdict(set)
+    for path, _src, node in _package_defs(_py_sources()):
+        modules[node.name].add(os.path.relpath(path, REPO))
+    twice = {n: sorted(ps) for n, ps in modules.items() if len(ps) > 1}
+    assert twice == {}, twice
