@@ -578,12 +578,14 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (LSH candidates -> exact shingle-Jaccard >= 0.8, the proven
     recall-1.0 construction of minhash_dedup), component label = min
     reachable doc id, one canonical doc kept per duplicate cluster.
-    Min-label propagation + pointer jumping (O(log diameter) rounds,
-    two hash joins each — see operators.fingerprint.
-    connected_components).  The DuckDB oracle recomputes the exact
-    pair set and replays the grouping as a recursive transitive
-    closure.  Output: every corpus doc with (component, group_size,
-    is_canonical); singletons are their own component."""
+    Min-label propagation + pointer jumping (see operators.
+    fingerprint.connected_components): on the driver after one
+    bounded collect of a small edge table, else O(log diameter)
+    distributed rounds of two hash joins each.  The DuckDB oracle
+    recomputes the exact pair set and replays the grouping as a
+    recursive transitive closure.  Output: every corpus doc with
+    (component, group_size, is_canonical); singletons are their own
+    component."""
     labs = _dup_group_labels(spark, sf_dir)
     gs = labs.groupBy("component").agg(
         F.count("*").cast("long").alias("group_size")

@@ -874,6 +874,43 @@ def _hash_params(num_hashes: int, seed: int):
     return a, b
 
 
+# ---------------------------------------------------- graph components
+
+
+def min_label_components(
+    a: np.ndarray, b: np.ndarray, n: int, max_iter: int
+) -> tuple[np.ndarray, int]:
+    """Connected-component labels of an n-node graph, given as a
+    SYMMETRIZED edge list of node codes in [0, n): every edge in both
+    directions, no self-loops, every node on some edge — the edge
+    table operators.fingerprint.connected_components builds.  Runs its
+    distributed rounds on the driver: each round (a) takes the min
+    label over a node and its neighbors and (b) jumps every label
+    through its own label; the loop stops after the first round that
+    moves no label, or after max_iter rounds.
+
+    Returns (labels int64[n], changed): labels[i] = the smallest code
+    reachable from i once converged; changed = labels the last round
+    moved (0 = converged)."""
+    comp = np.arange(n, dtype=np.int64)
+    if n == 0:
+        return comp, 0
+    order = np.argsort(a)
+    src = np.asarray(a, dtype=np.int64)[order]
+    nbr = np.asarray(b, dtype=np.int64)[order]
+    # every node owns a run of the sorted sources: run i is node i
+    starts = np.flatnonzero(np.r_[True, src[1:] != src[:-1]])
+    changed = n
+    for _ in range(max_iter):
+        step = np.minimum(comp, np.minimum.reduceat(comp[nbr], starts))
+        jumped = step[step]
+        changed = int(np.count_nonzero(jumped != comp))
+        comp = jumped
+        if not changed:
+            break
+    return comp, changed
+
+
 # ---------------------------------------------------------------- xcorr
 
 

@@ -13,9 +13,10 @@ policy) into the operational job shape a 100 TB corpus actually runs:
   lands once and every later run (and every resume) reuses it.  At
   scale this is the one shuffle-heavy stage: one band-key exchange +
   candidate-bounded verify joins + connected components over the
-  verified pairs — one checkpointed symmetrized edge table, then
-  O(log d) pointer-jumping rounds of one join, one aggregation and
-  one self-join each.
+  verified pairs — one checkpointed symmetrized edge table, labelled
+  on the driver after one bounded collect while it is small, else in
+  O(log d) distributed pointer-jumping rounds of one join, one
+  aggregation and one self-join each.
 
 - **Phase 2 (per-bucket, markers under _lineage):** the per-document
   DECISION table (doc_id, lang, quality, n_tokens, component,

@@ -166,41 +166,86 @@ def test_simhash_pigeonhole_completeness(spark):
     assert got == want and len(want) >= 10
 
 
-def test_connected_components_chain_and_stars(spark):
-    """Pointer-jumping min-label propagation: a 12-node path graph
-    (worst-case diameter), a star, a triangle, and singletons-by-
-    absence all collapse to min-id components in O(log d) rounds."""
+def _union_find_labels(edges):
+    """Scalar union-find reference: {node: the min node of its
+    component} over every endpoint of ``edges``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # canonical: min node id of the component
+    comp_min = {}
+    for x in list(parent):
+        r = find(x)
+        comp_min[r] = min(comp_min.get(r, x), x)
+    return {x: comp_min[find(x)] for x in parent}
+
+
+# connected_components labels small edge tables on the driver and
+# larger ones in distributed rounds; a ceiling of 0 forces the rounds
+_PATHS = ("driver", "rounds")
+
+
+def _force_path(monkeypatch, path):
+    from sonar_spark.operators import fingerprint
+
+    monkeypatch.undo()
+    if path == "rounds":
+        monkeypatch.setattr(fingerprint, "_CEIL", 0)
+
+
+def test_connected_components_chain_and_stars(spark, monkeypatch):
+    """Pointer-jumping min-label propagation, on both paths: a 12-node
+    path graph (worst-case diameter), a star, a triangle, and
+    singletons-by-absence all collapse to min-id components; with
+    max_iter=1 the path graph cannot converge and must raise."""
     from sonar_spark.operators.fingerprint import connected_components
 
+    path = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(11)]
     edges = (
         # path n00-n01-...-n11 (diameter 11)
-        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(11)]
+        path
         # star centered high, min at a leaf
         + [("s9", "s5"), ("s9", "s3"), ("s9", "s7")]
         # triangle with duplicate + reversed edges
         + [("t2", "t1"), ("t1", "t0"), ("t0", "t2"), ("t1", "t2")]
     )
     df = spark.createDataFrame(edges, "doc_a string, doc_b string")
-    got = {
-        r["node"]: r["comp"]
-        for r in connected_components(df).collect()
-    }
-    for i in range(12):
-        assert got[f"n{i:02d}"] == "n00"
-    for s in ("s3", "s5", "s7", "s9"):
-        assert got[s] == "s3"
-    for t in ("t0", "t1", "t2"):
-        assert got[t] == "t0"
-    assert len(got) == 12 + 4 + 3
+    path_df = spark.createDataFrame(path, "doc_a string, doc_b string")
+    for p in _PATHS:
+        _force_path(monkeypatch, p)
+        got = {
+            r["node"]: r["comp"]
+            for r in connected_components(df).collect()
+        }
+        for i in range(12):
+            assert got[f"n{i:02d}"] == "n00", p
+        for s in ("s3", "s5", "s7", "s9"):
+            assert got[s] == "s3", p
+        for t in ("t0", "t1", "t2"):
+            assert got[t] == "t0", p
+        assert len(got) == 12 + 4 + 3, p
+        with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+            connected_components(path_df, max_iter=1)
 
 
-def test_connected_components_random_graphs(spark):
-    """Random sparse graphs vs a scalar union-find: component labels
-    must equal the min reachable node id everywhere (pointer jumping
-    converges within the iteration cap on every topology).  The last
-    graph has long ids (dbscan passes its numeric id column): the
-    labels must agree and ``comp`` must keep the input type."""
-    import numpy as np
+def test_connected_components_random_graphs(spark, monkeypatch):
+    """Random sparse graphs vs a scalar union-find, on both paths:
+    component labels must equal the min reachable node id everywhere
+    (pointer jumping converges within the iteration cap on every
+    topology).  The last graph has long ids (dbscan passes its
+    numeric id column): the labels must agree and ``comp`` must keep
+    the input type."""
+    from sonar_spark.operators.fingerprint import connected_components
 
     rng = np.random.default_rng(77)
     kinds = [("string", lambda v: f"v{v:03d}")] * 4 + [
@@ -216,43 +261,88 @@ def test_connected_components_random_graphs(spark):
         ]
         if not edges:
             continue
-        # union-find reference
-        parent = {}
+        want = _union_find_labels(edges)
+        df = spark.createDataFrame(edges, f"doc_a {kind}, doc_b {kind}")
+        for p in _PATHS:
+            _force_path(monkeypatch, p)
+            cc = connected_components(df)
+            assert cc.schema.simpleString() == (
+                f"struct<node:{kind},comp:{kind}>"
+            ), (trial, p)
+            got = {r["node"]: r["comp"] for r in cc.collect()}
+            assert got == want, (trial, p)
 
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
 
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want = {}
-        for a, b in edges:
-            want[a] = min(want.get(a, a), find(a))
-            want[b] = min(want.get(b, b), find(b))
-        # canonical: min node id of the component
-        comp_min = {}
-        for x in want:
-            r = find(x)
-            comp_min[r] = min(comp_min.get(r, x), x)
-        want = {x: comp_min[find(x)] for x in want}
+def test_connected_components_paths_agree(spark, monkeypatch):
+    """Certificate for the driver path: on every edge case the driver
+    kernel and the distributed rounds return identical rows and
+    schema — the empty table, self-loops only, duplicate and reversed
+    edges, null endpoints, bigint ids, and non-ASCII string ids whose
+    minimum must follow Spark's UTF-8 byte order."""
+    from sonar_spark.operators.fingerprint import connected_components
 
-        from sonar_spark.operators.fingerprint import (
-            connected_components,
+    s, big = "doc_a string, doc_b string", "doc_a bigint, doc_b bigint"
+    cases = {
+        "empty": ([], s),
+        "self_loops": ([("x", "x"), ("y", "y")], s),
+        "dup_reversed": ([("b", "a"), ("a", "b"), ("a", "b"), ("c", "b")], s),
+        "null_endpoint": ([("a", None), (None, "b"), ("c", "d")], s),
+        "bigint": (
+            [(10**12 + 5, 10**12 + 3), (7, 10**12 + 5), (9, 8), (9, 9)],
+            big,
+        ),
+        "non_ascii": (
+            [("é", "z"), ("z", "ab"), ("ß", "ÿ"), ("\uffff", "😀"),
+             ("Ω", "Z")],
+            s,
+        ),
+    }
+    for name, (rows, schema) in cases.items():
+        df = spark.createDataFrame(rows, schema)
+        out = {}
+        for p in _PATHS:
+            _force_path(monkeypatch, p)
+            cc = connected_components(df)
+            out[p] = (cc.schema, sorted(cc.collect()))
+        assert out["driver"] == out["rounds"], name
+    # byte order: "😀" (F0 9F 98 80) sorts above U+FFFF (EF BF BF);
+    # UTF-16 order (a surrogate pair, D83D ...) would invert them
+    assert dict(out["driver"][1])["😀"] == "\uffff"
+
+
+def test_min_label_components_matches_union_find():
+    """Spark-free: the driver kernel labels random symmetrized graphs
+    with the scalar union-find's min-code components, and reports
+    non-convergence (changed > 0) when max_iter runs out."""
+    rng = np.random.default_rng(5)
+    for trial in range(20):
+        n = int(rng.integers(2, 300))
+        raw = rng.integers(0, n, size=(int(rng.integers(1, 400)), 2))
+        pairs = {(int(a), int(b)) for a, b in raw if a != b}
+        sym = sorted(pairs | {(b, a) for a, b in pairs})
+        if not sym:
+            continue
+        # dense codes over the nodes on an edge, in ascending order
+        nodes = sorted({a for a, _ in sym})
+        code = {v: i for i, v in enumerate(nodes)}
+        a = np.array([code[x] for x, _ in sym])
+        b = np.array([code[y] for _, y in sym])
+        labels, changed = kernels.min_label_components(
+            a, b, len(nodes), max_iter=25
         )
-
-        cc = connected_components(
-            spark.createDataFrame(edges, f"doc_a {kind}, doc_b {kind}")
-        )
-        assert cc.schema.simpleString() == (
-            f"struct<node:{kind},comp:{kind}>"
-        ), trial
-        got = {r["node"]: r["comp"] for r in cc.collect()}
-        assert got == want, trial
+        assert changed == 0, trial
+        want = _union_find_labels(sym)
+        assert {nodes[i]: nodes[c] for i, c in enumerate(labels)} == want, trial
+    path = np.arange(11)
+    a = np.r_[path, path + 1]
+    b = np.r_[path + 1, path]
+    labels, changed = kernels.min_label_components(a, b, 12, max_iter=1)
+    assert changed == 11
+    labels, changed = kernels.min_label_components(a, b, 12, max_iter=25)
+    assert changed == 0 and (labels == 0).all()
+    empty = np.empty(0, np.int64)
+    labels, changed = kernels.min_label_components(empty, empty, 0, 25)
+    assert len(labels) == 0 and changed == 0
 
 
 # ------------------------------------------------------- winnowing
