@@ -9,7 +9,7 @@ clock before feature extraction (reference fingerprint/extractors/
 alignment.go:223-297, transforms/resample.go); this operator is the
 (entity, ts)-table generalization.
 
-Physical plan (the asof_join:76 union trick, no join in the hot
+Physical plan (the asof._asof_union union trick, no join in the hot
 path): per-entity grid timestamps come from one tiny min/max
 aggregate exploded through sequence(); grid rows are UNIONed with the
 observations and a single sort-merge shuffle on entity feeds two

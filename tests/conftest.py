@@ -21,3 +21,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return TESTDATA
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """autoBroadcastJoinThreshold = -1 for one test, restored after:
+    forces the as-of union plan (and every other shuffle join)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)

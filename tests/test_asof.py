@@ -1,14 +1,35 @@
 """As-of join property tests: both strategies vs quadratic brute force;
-zero temporal leakage; duplicate-ts tie-break; no-match nulls."""
+zero temporal leakage; duplicate-ts tie-break; no-match nulls.
+
+The union strategy has two plans: with a small reference side (every
+test table here) the broadcast interval join, and with
+autoBroadcastJoinThreshold = -1 the union plan ("union_shuffle",
+through the no_broadcast fixture).  test_asof_paths_agree certifies
+that they return the same rows."""
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from sonar_spark import datagen, oracle
 from sonar_spark.config import AsofConfig
 from sonar_spark.operators.asof import asof_join
+
+
+def _local(spark, rows, schema):
+    """createDataFrame over a local relation, which the optimizer sizes
+    (a DataFrame over a list of rows is an RDD of unknown size, so the
+    union strategy would never take its broadcast plan for it)."""
+    st = spark.createDataFrame([], schema).schema
+    names = [f.name for f in st.fields]
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(st)
+    )
+    return spark.createDataFrame(table, st)
 
 
 def _left_df(spark, n_entities=6, rows_per_entity=40, max_ts=8192, seed=5):
@@ -42,26 +63,39 @@ def _check_vs_bruteforce(left_rows, right_rows, got_rows):
     assert seen == {(r["entity"], r["ts"]) for r in left_rows}
 
 
-@pytest.mark.parametrize("strategy", ["union", "bucketed"])
-def test_asof_matches_bruteforce(spark, strategy):
+PATHS = ["union", "bucketed", "union_shuffle"]
+
+
+def _strategy(request, path):
+    """asof_join's strategy for a test path; "union_shuffle" is the
+    union strategy with broadcasts off (the union plan)."""
+    if path == "union_shuffle":
+        request.getfixturevalue("no_broadcast")
+        return "union"
+    return path
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_asof_matches_bruteforce(spark, request, path):
     left = _left_df(spark)
     right = datagen.catalog_table(spark, n_entities=6, rows_per_entity=12)
     got = asof_join(
         left,
         right,
         cfg=AsofConfig(bucket_width=1024),
-        strategy=strategy,
+        strategy=_strategy(request, path),
     ).collect()
     _check_vs_bruteforce(left.collect(), right.collect(), got)
 
 
-@pytest.mark.parametrize("strategy", ["union", "bucketed"])
-def test_asof_duplicate_ts_takes_max_version(spark, strategy):
+@pytest.mark.parametrize("path", PATHS)
+def test_asof_duplicate_ts_takes_max_version(spark, request, path):
     left = spark.createDataFrame(
         [("e", 10, 1.0), ("e", 99, 2.0), ("e", 100, 3.0), ("e", 101, 4.0)],
         "entity string, ts long, val double",
     )
-    right = spark.createDataFrame(
+    right = _local(
+        spark,
         [
             ("e", 100, 0, [1.0]),
             ("e", 100, 1, [2.0]),  # duplicate ts: version 1 must win
@@ -72,7 +106,10 @@ def test_asof_duplicate_ts_takes_max_version(spark, strategy):
     got = {
         r["ts"]: r
         for r in asof_join(
-            left, right, cfg=AsofConfig(bucket_width=64), strategy=strategy
+            left,
+            right,
+            cfg=AsofConfig(bucket_width=64),
+            strategy=_strategy(request, path),
         ).collect()
     }
     assert got[10]["matched_ref_ts"] is None
@@ -82,21 +119,25 @@ def test_asof_duplicate_ts_takes_max_version(spark, strategy):
     assert got[101]["matched_ref_ts"] == 100 and got[101]["ref_version"] == 1
 
 
-@pytest.mark.parametrize("strategy", ["union", "bucketed"])
-def test_asof_bucket_boundaries(spark, strategy):
+@pytest.mark.parametrize("path", PATHS)
+def test_asof_bucket_boundaries(spark, request, path):
     """Predecessor several buckets back; empty middle buckets."""
     left = spark.createDataFrame(
         [("e", t, 0.0) for t in (0, 63, 64, 5000, 9001)],
         "entity string, ts long, val double",
     )
-    right = spark.createDataFrame(
+    right = _local(
+        spark,
         [("e", 63, 0, [1.0]), ("e", 9000, 0, [2.0])],
         "entity string, ref_ts long, ref_version int, ref_features array<double>",
     )
     got = {
         r["ts"]: r["matched_ref_ts"]
         for r in asof_join(
-            left, right, cfg=AsofConfig(bucket_width=64), strategy=strategy
+            left,
+            right,
+            cfg=AsofConfig(bucket_width=64),
+            strategy=_strategy(request, path),
         ).collect()
     }
     assert got == {0: None, 63: 63, 64: 63, 5000: 63, 9001: 9000}
@@ -195,3 +236,161 @@ def test_asof_adaptive_empty_left(spark):
         cfg=AsofConfig(bucket_width=None),
     )
     assert out.count() == 0
+
+
+@pytest.mark.parametrize("path", ["union", "union_shuffle"])
+def test_asof_bins_exact_above_2_53(spark, request, path):
+    """Timestamps above 2^53: 2^61 - 1 has no double, so a time bin
+    computed by double division would put that row in 2^61's bin, past
+    the interval it belongs to.  Reference ts 0, 2^61 and 3 * 2^60 - 1
+    give the broadcast path bins of width 2^60."""
+    big, top = 1 << 61, 3 * (1 << 60) - 1
+    left = spark.createDataFrame(
+        [("e", t, 0.0) for t in (big - 1, big, big + 1, top - 1, top)],
+        "entity string, ts long, val double",
+    )
+    right = _local(
+        spark,
+        [("e", 0, 0, [0.0]), ("e", big, 1, [1.0]), ("e", top, 2, [2.0])],
+        "entity string, ref_ts long, ref_version int, ref_features array<double>",
+    )
+    got = {
+        r["ts"]: r["matched_ref_ts"]
+        for r in asof_join(
+            left, right, strategy=_strategy(request, path)
+        ).collect()
+    }
+    assert got == {big - 1: 0, big: big, big + 1: big, top - 1: big, top: top}
+
+
+# ------------------------------------------- broadcast path == union plan
+
+_STR_KEYS = ["é", "日本", "a", "ñb"]
+_INT_KEYS = [-(1 << 40), -3, 0, 1 << 50]
+# negative and near-2^62 timestamps: the interval bins are integer math
+_EDGE_TS = [-(1 << 40), -5, (1 << 62) - 3, 1 << 62]
+
+
+def _agree_tables(spark, rng, kt, n_left, n_right):
+    """Seeded left/right tables whose as-of exercises every tie rule:
+    equal left/right ts, duplicate reference ts with distinct versions
+    (at most one null version per (key, ts) — two would tie in the
+    union plan's order), null versions and payloads, left rows before
+    the first and after the last reference row, null left keys and
+    timestamps, and a left key with no reference rows."""
+    keys = _STR_KEYS if kt == "string" else _INT_KEYS
+    pool = [int(t) for t in rng.integers(-40, 40, 10)] + _EDGE_TS
+    rrows, null_version = [], set()
+    for i in range(n_right):
+        k = keys[rng.integers(len(keys))]
+        t = pool[rng.integers(len(pool))]
+        v = i
+        if rng.random() < 0.25 and (k, t) not in null_version:
+            null_version.add((k, t))
+            v = None
+        arr = None if rng.random() < 0.25 else [float(i), float(t % 7)]
+        s = None if rng.random() < 0.25 else f"r{i}ü"
+        rrows.append((k, t, v, arr, s))
+    lkeys = keys + [None, "zz" if kt == "string" else 99]
+    lts = pool + [t + 1 for t in pool] + [t - 1 for t in pool]
+    lts += [-(1 << 41), (1 << 62) + 9, None]
+    lrows = [
+        (lkeys[rng.integers(len(lkeys))], lts[rng.integers(len(lts))], i)
+        for i in range(n_left)
+    ]
+    left = spark.createDataFrame(lrows, f"entity {kt}, ts long, val int")
+    right = _local(
+        spark,
+        rrows,
+        f"entity {kt}, ref_ts long, ref_version int, "
+        "ref_arr array<double>, ref_s string",
+    )
+    return left, right
+
+
+def _result(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    rows = sorted((tuple(r) for r in df.collect()), key=repr)
+    return plan, df.dtypes, rows
+
+
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("kt", ["string", "bigint"])
+def test_asof_paths_agree(spark, request, kt):
+    """The broadcast interval join returns the union plan's rows, column
+    names and types on seeded tables with every tie rule and edge (see
+    _agree_tables), including empty left and empty right sides, and
+    leaves no persisted RDD behind."""
+    rng = np.random.default_rng(17 if kt == "string" else 29)
+    sizes = [(60, 40), (80, 12), (40, 80), (30, 1), (0, 20), (25, 0)]
+    tables = [_agree_tables(spark, rng, kt, nl, nr) for nl, nr in sizes]
+    before = _persisted(spark)
+
+    def run():
+        return [
+            _result(asof_join(left, right, payload=("ref_arr", "ref_s")))
+            for left, right in tables
+        ]
+
+    fast = run()
+    request.getfixturevalue("no_broadcast")
+    slow = run()
+    for (nl, nr), (fplan, ftypes, frows), (splan, stypes, srows) in zip(
+        sizes, fast, slow
+    ):
+        # an empty interval table folds the join away
+        assert "Window" not in fplan, fplan
+        assert nr == 0 or "BroadcastHashJoin" in fplan, fplan
+        assert "BroadcastHashJoin" not in splan, splan
+        assert ftypes == stypes, (nl, nr)
+        assert frows == srows, (nl, nr)
+        assert len(frows) == nl
+    assert _persisted(spark) == before
+
+
+@pytest.mark.parametrize("null_col", ["entity", "ref_ts"])
+def test_asof_null_reference_key_or_ts_takes_union_plan(spark, request, null_col):
+    """A null reference key or ts keeps the union plan (its null-key
+    partition and nulls-first order decide those rows)."""
+    left, right = _agree_tables(
+        spark, np.random.default_rng(3), "string", 40, 20
+    )
+    null = F.lit(None).cast(right.schema[null_col].dataType)
+    right = right.union(right.limit(1).withColumn(null_col, null))
+    plan, types, rows = _result(
+        asof_join(left, right, payload=("ref_arr", "ref_s"))
+    )
+    assert "BroadcastHashJoin" not in plan and "Window" in plan, plan
+    request.getfixturevalue("no_broadcast")
+    _, want_types, want_rows = _result(
+        asof_join(left, right, payload=("ref_arr", "ref_s"))
+    )
+    assert (types, rows) == (want_types, want_rows)
+
+
+def test_asof_bucketed_adaptive_sizing_is_one_job(spark):
+    """Adaptive bucket sizing reads the hottest key's count and the ts
+    range in ONE query.  AQE is off while the join is built, so that
+    query is one Spark job (AQE submits every shuffle stage as a job of
+    its own)."""
+    sc = spark.sparkContext
+    left = _left_df(spark)
+    right = datagen.catalog_table(spark, n_entities=6, rows_per_entity=12)
+    aqe = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    sc.setJobGroup("asof-adaptive-sizing", "asof adaptive sizing")
+    try:
+        asof_join(
+            left, right, cfg=AsofConfig(bucket_width=None), strategy="bucketed"
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set(aqe, old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("asof-adaptive-sizing")
+    assert len(jobs) == 1, jobs

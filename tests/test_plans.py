@@ -28,14 +28,26 @@ def test_featurize_is_narrow(spark):
     assert "Exchange" not in plan, plan
 
 
-def test_asof_union_single_shuffle(spark):
-    """The union as-of strategy costs exactly ONE shuffle (the window
-    sort-merge on the entity key)."""
+def _asof_union_inputs(spark):
     left = datagen.token_table(spark, n_docs=20).select(
         F.col("doc_id").alias("entity"), F.col("n_tok").cast("long").alias("ts")
     )
-    right = datagen.catalog_table(spark, n_entities=4)
-    plan = _plan(asof_join(left, right, strategy="union"))
+    return left, datagen.catalog_table(spark, n_entities=4)
+
+
+def test_asof_union_broadcasts_small_catalog(spark):
+    """With a reference side under autoBroadcastJoinThreshold the union
+    as-of strategy is one broadcast hash join inside the left side's
+    stage: no shuffle of the left rows."""
+    plan = _plan(asof_join(*_asof_union_inputs(spark), strategy="union"))
+    assert "BroadcastHashJoin" in plan, plan
+    assert "Exchange hashpartitioning" not in plan, plan
+
+
+def test_asof_union_single_shuffle(spark, no_broadcast):
+    """Without broadcasts the union as-of strategy costs exactly ONE
+    shuffle (the window sort-merge on the entity key)."""
+    plan = _plan(asof_join(*_asof_union_inputs(spark), strategy="union"))
     shuffles = [
         line for line in plan.splitlines()
         if "Exchange hashpartitioning" in line
