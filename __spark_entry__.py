@@ -3359,59 +3359,28 @@ def q_stream_pitch_track(spark: SparkSession, sf_dir: str) -> DataFrame:
     `pitch_tracked`, but post-processed by the Structured Streaming
     stateful operator (applyInPandasWithState holding pitchHistory +
     previousPitch in per-doc GroupState, streaming/stateful.py) —
-    executed here as a bounded run: detections land as 3 ordered
-    chunk files, a file-source stream with maxFilesPerTrigger=1
-    replays them as micro-batches (state carries ACROSS batches for
-    every doc with frames in several chunks), trigger(availableNow)
-    drains into a memory sink, and the collected table is returned
-    as a batch DataFrame.  Deterministic: file order is the written
-    chunk order, the state machine is sequential per doc.  Oracle:
+    executed here as a bounded run: streaming/replay.py replays 3
+    ordered chunks of detections as one micro-batch each (state
+    carries ACROSS batches for every doc with frames in several
+    chunks) and returns the drained output as a batch DataFrame.
+    Deterministic: batch order is the chunk order, the state machine
+    is sequential per doc.  Oracle:
     identical to pitch_tracked's recursive-CTE replay — the streaming
     and batch operators are equivalence-tested, and the driver now
     value-certifies that equivalence end-to-end (r4 verdict #6)."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.stateful import stream_pitch_track
 
     det6 = _pitch_det6(spark, sf_dir).withColumn(
         "doc_id", F.col("doc_id").cast("string")
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_pitch_{run_id}"
-    src = os.path.join(base, "src")
     # 3 ordered chunks by frame range: every doc's frames arrive in
-    # ascending order across files (the in-order-arrival contract)
-    for ci, (lo, hi) in enumerate(((0, 8), (8, 16), (16, 1 << 30))):
-        (
-            det6.where(
-                (F.col("frame_idx") >= lo) & (F.col("frame_idx") < hi)
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(src, f"c{ci}"))
-        )
-    stream = (
-        spark.readStream.schema(
-            "doc_id string, frame_idx long, pitch double, "
-            "confidence double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"pitch_stream_{run_id}"
-    q = (
-        stream_pitch_track(stream)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    out = spark.table(table)
-    res = out.select(
+    # ascending order across chunks (the in-order-arrival contract)
+    chunks = [
+        det6.where((F.col("frame_idx") >= lo) & (F.col("frame_idx") < hi))
+        for lo, hi in ((0, 8), (8, 16), (16, 1 << 30))
+    ]
+    return replay(chunks, stream_pitch_track, "append").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("frame_idx").cast("long").alias("frame_idx"),
         F.round("pitch_corrected", 6).alias("pitch_corrected"),
@@ -3420,11 +3389,6 @@ def q_stream_pitch_track(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("salience", 6).alias("salience"),
         F.round("stability", 6).alias("stability"),
     )
-    # the memory sink holds the rows; localCheckpoint pins them so the
-    # scratch dir can be removed before the driver collects
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3440,54 +3404,25 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the batch sessionize_by_gap operator's > rule, which is why
     this query carries its own oracle), session_end = last + gap.
     The DuckDB oracle replays that rule with a lag/cumsum window."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.windows import sessionize_stream
 
     ev = _t(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts"
+        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_sess_{run_id}"
-    src = os.path.join(base, "src")
-    for ci in range(3):
-        (
-            ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(src, f"c{ci}"))
-        )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"sess_stream_{run_id}"
-    q = (
-        sessionize_stream(
-            stream, ts="ts", key="user_id", gap="30 minutes",
-            watermark="3650 days",
-        )
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+    chunks = [ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci) for ci in range(3)]
+    return replay(
+        chunks,
+        lambda s: sessionize_stream(
+            s, ts="ts", key="user_id", gap="30 minutes", watermark="3650 days"
+        ),
+        "complete",
+    ).select(
         "user_id",
         F.unix_timestamp("session_start").alias("session_start"),
         F.unix_timestamp("session_end").alias("session_end"),
         F.col("n_events").cast("long").alias("n_events"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_stream_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3498,47 +3433,21 @@ def q_stream_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, complete-mode output after trigger(availableNow).  Oracle:
     the same epoch-floor bucketing in SQL (window_start =
     floor(epoch/3600)*3600)."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.windows import windowed_stats_stream
 
     ev = _t(spark, sf_dir, "events").select(
-        "event_id", "event_type", "ts", "value"
+        "event_id", "event_type", F.col("ts").cast("timestamp").alias("ts"), "value"
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_wstats_{run_id}"
-    src = os.path.join(base, "src")
-    for ci in range(3):
-        (
-            ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(src, f"c{ci}"))
-        )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, event_type string, ts timestamp, "
-            "value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"wstats_stream_{run_id}"
-    q = (
-        windowed_stats_stream(
-            stream, ts="ts", value="value", group="event_type",
+    chunks = [ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci) for ci in range(3)]
+    return replay(
+        chunks,
+        lambda s: windowed_stats_stream(
+            s, ts="ts", value="value", group="event_type",
             window="1 hour", watermark="3650 days",
-        )
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+        ),
+        "complete",
+    ).select(
         F.unix_timestamp("window_start").alias("window_start"),
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),
@@ -3547,9 +3456,6 @@ def q_stream_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("min_value", 6).alias("min_value"),
         F.round("max_value", 6).alias("max_value"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4173,8 +4079,8 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup under the driver harness (SURVEY §2.16;
     operators/fingerprint exact dedup in streaming form): the
-    planted-dup corpus arrives as 3 micro-batches (ordered chunk
-    files, maxFilesPerTrigger=1), dropDuplicatesWithinWatermark keeps
+    planted-dup corpus arrives as 3 micro-batches (ordered chunks,
+    streaming/replay.py), dropDuplicatesWithinWatermark keeps
     the first arrival per content fingerprint with watermark-bounded
     state — the unbounded-ingest shape at scale (state evicts beyond
     the lateness horizon instead of growing forever).  Exact copies
@@ -4185,9 +4091,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SET — is independent of which arrival survives; arrival-order
     tie-breaking is covered by the streaming equivalence pytest.
     Oracle: DISTINCT content rows over the same corpus."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.windows import dedup_stream
 
     words = _dup_corpus_words(spark, sf_dir)
@@ -4196,46 +4100,19 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join("words", " ").alias("text"),
         F.size("words").cast("long").alias("n_tokens"),
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_dedup_{run_id}"
-    src = os.path.join(base, "src")
-    for ci in range(3):
-        (
-            d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == ci)
-            .withColumn(
-                "ts",
-                F.lit(f"2026-01-01 00:0{ci}:00").cast("timestamp"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(src, f"c{ci}"))
+    chunks = [
+        d.where(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == ci).withColumn(
+            "ts", F.lit(f"2026-01-01 00:0{ci}:00").cast("timestamp")
         )
-    stream = (
-        spark.readStream.schema(
-            "doc_id string, text string, n_tokens long, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"dedup_stream_{run_id}"
-    q = (
-        dedup_stream(stream, F.md5("text"), ts="ts")
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+        for ci in range(3)
+    ]
+    return replay(
+        chunks, lambda s: dedup_stream(s, F.md5("text"), ts="ts"), "append"
+    ).select(
         F.md5("text").alias("fp"),
         "n_tokens",
         F.length("text").cast("long").alias("n_chars"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_bytes_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4376,7 +4253,7 @@ def q_stream_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     313-374: consume chunks, hold a carry-over buffer, emit complete
     frames, advance by hop): each doc's token-length series is split
     into 3 ordered chunks (positions 1-16, 17-32, 33..n), replayed as
-    micro-batches (file source, maxFilesPerTrigger=1), and framed
+    micro-batches (streaming/replay.py), and framed
     W=32/H=8 by the stateful streaming featurizer
     (streaming/stateful.py stream_frame_features — per-doc GroupState
     holds the unframed tail + next frame index).  With W=32 > the
@@ -4385,9 +4262,7 @@ def q_stream_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     works across micro-batches.  Oracle: the batch frame_energy SQL
     (same window formula) minus p50 — streaming output must equal
     batch framing of the concatenated series exactly."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.stateful import stream_frame_features
 
     toks = to_token_length_table(
@@ -4397,54 +4272,30 @@ def q_stream_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("tokens", lambda x: x.cast("long")).alias("tokens"),
         "n_tok",
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_stft_{run_id}"
-    src = os.path.join(base, "src")
     n = F.col("n_tok")
-    for ci, (lo, ln) in enumerate(
-        ((1, F.least(n, F.lit(16))),
-         (17, F.greatest(F.least(n - 16, F.lit(16)), F.lit(0))),
-         (33, F.greatest(n - 32, F.lit(0))))
-    ):
-        (
-            toks.select(
-                "doc_id",
-                F.lit(ci).cast("long").alias("chunk_idx"),
-                F.slice("tokens", lo, ln).alias("tokens"),
-            )
-            .where(F.size("tokens") > 0)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(src, f"c{ci}"))
+    chunks = [
+        toks.select(
+            "doc_id",
+            F.lit(ci).cast("long").alias("chunk_idx"),
+            F.slice("tokens", lo, ln).alias("tokens"),
+        ).where(F.size("tokens") > 0)
+        for ci, (lo, ln) in enumerate(
+            ((1, F.least(n, F.lit(16))),
+             (17, F.greatest(F.least(n - 16, F.lit(16)), F.lit(0))),
+             (33, F.greatest(n - 32, F.lit(0))))
         )
-    stream = (
-        spark.readStream.schema(
-            "doc_id string, chunk_idx long, tokens array<long>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"stft_stream_{run_id}"
-    q = (
-        stream_frame_features(stream, FrameConfig(window=32, hop=8))
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+    ]
+    return replay(
+        chunks,
+        lambda s: stream_frame_features(s, FrameConfig(window=32, hop=8)),
+        "append",
+    ).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("frame_idx").cast("long").alias("frame_idx"),
         F.round("rms_energy", 6).alias("rms_energy"),
         F.round("mean", 6).alias("mean"),
         F.round("std", 6).alias("std"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_pitch_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6832,9 +6683,7 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     the trailing grid (production: event-time timeout, same code
     path).  Certified against the batch backfill oracle restricted
     to the causal columns.  See streaming/stateful.stream_backfill."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.stateful import stream_backfill
 
     step = 21600
@@ -6852,46 +6701,20 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0.0).alias("v"),
         F.lit(-1).cast("long").alias("eid"),
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_backfill_{run_id}"
-    src = os.path.join(base, "src")
     chunks = [
         ev.where(F.col("t") < b1),
         ev.where((F.col("t") >= b1) & (F.col("t") < b2)),
         ev.where(F.col("t") >= b2).unionByName(sent),
     ]
-    for ci, ch in enumerate(chunks):
-        ch.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, f"c{ci}")
-        )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, t long, v double, eid long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"backfill_stream_{run_id}"
-    q = (
-        stream_backfill(stream, step=step)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+    return replay(
+        chunks, lambda s: stream_backfill(s, step=step), "append"
+    ).select(
         "user_id",
         "grid_ts",
         F.round("ffill_value", 6).alias("ffill_value"),
         F.col("ffill_age_s").cast("long").alias("ffill_age_s"),
         F.col("n_obs").cast("long").alias("n_obs"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6904,9 +6727,7 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     final on arrival (zero temporal leakage by construction).
     Certified against the SAME DuckDB ASOF JOIN oracle as the batch
     asof_events query.  See streaming/stateful.stream_asof."""
-    import shutil
-    import uuid
-
+    from sonar_spark.streaming.replay import replay
     from sonar_spark.streaming.stateful import stream_asof
 
     ev = _t(spark, sf_dir, "events").select(
@@ -6930,37 +6751,12 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b1 = F.unix_timestamp(F.lit("2024-01-11 00:00:00")).cast("long")
     b2 = F.unix_timestamp(F.lit("2024-01-21 00:00:00")).cast("long")
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_asof_{run_id}"
-    src = os.path.join(base, "src")
     chunks = [
         tagged.where(F.col("t") < b1),
         tagged.where((F.col("t") >= b1) & (F.col("t") < b2)),
         tagged.where(F.col("t") >= b2),
     ]
-    for ci, ch in enumerate(chunks):
-        ch.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(src, f"c{ci}")
-        )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, t long, side int, eid long, v double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    table = f"asof_stream_{run_id}"
-    q = (
-        stream_asof(stream)
-        .writeStream.format("memory")
-        .queryName(table)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+    return replay(chunks, stream_asof, "append").select(
         "event_id",
         "user_id",
         "ts_sec",
@@ -6968,9 +6764,6 @@ def q_stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ref_version",
         F.round("ref_value", 6).alias("ref_value"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7088,58 +6881,26 @@ def q_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely does not matter for a sketch, unlike the time-ordered
     asof/backfill streams); oracle = the batch bucket replay.
     See functions/ddsketch.bucket_idx."""
-    import shutil
-    import uuid
-
     from sonar_spark.functions.ddsketch import bucket_idx
+    from sonar_spark.streaming.replay import replay
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    run_id = uuid.uuid4().hex[:12]
-    base = f"/tmp/sonar_stream_dds_{run_id}"
-    src = os.path.join(base, "src")
-    for ci in range(3):
-        (
-            ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(src, f"c{ci}"))
-        )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, event_type string, cents long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(src, "c*"))
-    )
-    agg = (
-        stream.select(
+    chunks = [ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci) for ci in range(3)]
+    return replay(
+        chunks,
+        lambda s: s.groupBy(
             "event_type", bucket_idx(F.col("cents")).alias("idx")
-        )
-        .groupBy("event_type", "idx")
-        .count()
-    )
-    table = f"dds_stream_{run_id}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    res = spark.table(table).select(
+        ).count(),
+        "complete",
+    ).select(
         "event_type",
         F.col("idx").cast("int").alias("idx"),
         F.col("count").cast("long").alias("cnt"),
     )
-    res = res.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return res
 
 
 def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:

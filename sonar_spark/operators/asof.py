@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import AsofConfig
+from ..session import arrow_frame
 
 
 def asof_join(
@@ -197,21 +198,9 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
     if built is None or sum(a.nbytes for a in built[0].values()) > thr:
         return None
     cols, lo, hi, w = built
-    # one row of arrays, zipped back to rows in the JVM: a local
-    # relation of one row per interval ships to its task as one
-    # Java-serialized object per row (on local[4], a 130k-interval
-    # table broadcast into a 1M-row join took 1.1 s that way, 0.5 s as
-    # one row)
     types = {f.name: f.dataType for f in ref.schema.fields}
     types["__asof_b"] = types["__asof_next"] = T.LongType()
-    offsets = pa.array([0, len(cols["__asof_k"])], pa.int32())
-    packed = spark.createDataFrame(
-        pa.table({c: pa.ListArray.from_arrays(offsets, a) for c, a in cols.items()}),
-        T.StructType([T.StructField(c, T.ArrayType(types[c])) for c in cols]),
-    )
-    intervals = F.broadcast(
-        packed.select(F.inline(F.arrays_zip(*[packed[c] for c in cols])))
-    )
+    intervals = F.broadcast(arrow_frame(spark, cols, types))
     # integer bins on both sides (a double division loses precision
     # above 2^53); below lo nothing can match, at or above hi is the
     # top bin, and the subtraction only runs where it cannot overflow

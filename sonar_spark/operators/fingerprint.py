@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .. import kernels
 from ..config import MinHashConfig
+from ..session import arrow_frame
 
 _SIG_SCHEMA = (
     "doc_id string, source string, n_tok int, minhash array<long>, "
@@ -286,8 +287,8 @@ def connected_components(
     - at most _CEIL rows (every graph the queries, the curation job
       and the store build label): the rounds run on the driver
       (kernels.min_label_components) over node codes in Spark's sort
-      order, and the labels come back as a local DataFrame — no
-      round trip per round;
+      order, and the labels come back as a driver-built DataFrame
+      (session.arrow_frame) — no round trip per round;
     - more: the rounds run distributed, O(log d) of them for a
       component diameter d.  The initial labels (comp = node) derive
       from the checkpointed table, which later stages read at its
@@ -389,7 +390,8 @@ def _driver_components(sym: DataFrame, head, max_iter: int) -> DataFrame:
     ``head`` (pyarrow, columns a, b): code the nodes in ascending order
     — Arrow orders strings by their UTF-8 bytes, as Spark does, so the
     min code is Spark's min node — label the codes with
-    kernels.min_label_components and decode."""
+    kernels.min_label_components and decode.  The labels ship as one
+    row of arrays (session.arrow_frame)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -403,9 +405,10 @@ def _driver_components(sym: DataFrame, head, max_iter: int) -> DataFrame:
     )
     _check_converged(max_iter, changed)
     t = sym.schema["a"].dataType
-    return sym.sparkSession.createDataFrame(
-        pa.table({"node": nodes, "comp": nodes.take(pa.array(comp))}),
-        f"node {t.simpleString()}, comp {t.simpleString()}",
+    return arrow_frame(
+        sym.sparkSession,
+        {"node": nodes, "comp": nodes.take(pa.array(comp))},
+        {"node": t, "comp": t},
     )
 
 

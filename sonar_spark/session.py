@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -46,3 +49,23 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_frame(
+    spark: SparkSession, cols: dict[str, pa.Array], types: dict[str, T.DataType]
+) -> DataFrame:
+    """The driver-side Arrow arrays ``cols`` (name -> array, all one
+    length) as a DataFrame of those columns, in order, column c of
+    Spark type types[c].
+
+    The rows ship as ONE row of list columns, zipped back to rows in
+    the JVM with inline(arrays_zip(...)): a local relation of one row
+    per record ships to its task as one Java-serialized object per row
+    (on local[4], a 130k-row table broadcast into a 1M-row join took
+    1.1 s that way, 0.5 s as one row)."""
+    offsets = pa.array([0, len(next(iter(cols.values())))], pa.int32())
+    packed = spark.createDataFrame(
+        pa.table({c: pa.ListArray.from_arrays(offsets, a) for c, a in cols.items()}),
+        T.StructType([T.StructField(c, T.ArrayType(types[c])) for c in cols]),
+    )
+    return packed.select(F.inline(F.arrays_zip(*[packed[c] for c in cols])))

@@ -11,19 +11,19 @@ from pyspark.sql import functions as F
 from sonar_spark import datagen
 from sonar_spark.config import FrameConfig
 from sonar_spark.operators.features import frame_features_arrow
+from sonar_spark.streaming.replay import replay
 from sonar_spark.streaming.stateful import stream_frame_features
 
 CFG = FrameConfig(window=64, hop=16)
 
 
-def test_stream_equals_batch(spark, tmp_path):
-    # 6 docs split into 3 chunk files -> 3 micro-batches
+def test_stream_equals_batch(spark):
+    # 6 docs split into 3 chunks -> 3 micro-batches
     rng = np.random.default_rng(23)
     docs = {f"d{i}": rng.integers(0, 5000, size=200 + 30 * i).tolist()
             for i in range(6)}
-    src = tmp_path / "chunks"
-    src.mkdir()
     n_chunks = 3
+    chunks = []
     for ci in range(n_chunks):
         rows = []
         for d, toks in docs.items():
@@ -31,28 +31,14 @@ def test_stream_equals_batch(spark, tmp_path):
             lo = ci * per
             hi = (ci + 1) * per if ci < n_chunks - 1 else len(toks)
             rows.append((d, ci, toks[lo:hi]))
-        spark.createDataFrame(
+        chunks.append(spark.createDataFrame(
             rows, "doc_id string, chunk_idx long, tokens array<long>"
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"c{ci}"))
+        ))
 
-    stream = (
-        spark.readStream.schema("doc_id string, chunk_idx long, tokens array<long>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "c*"))
-    )
-    out = stream_frame_features(stream, CFG)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stft_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    out = replay(chunks, lambda s: stream_frame_features(s, CFG), "append")
     got = {
         (r["doc_id"], r["frame_idx"]): (r["rms_energy"], r["mean"], r["std"])
-        for r in spark.table("stft_stream").collect()
+        for r in out.collect()
     }
 
     batch_in = spark.createDataFrame(
@@ -69,7 +55,7 @@ def test_stream_equals_batch(spark, tmp_path):
         np.testing.assert_allclose(got[k], want[k], rtol=1e-12)
 
 
-def test_stream_pitch_track_equals_batch(spark, tmp_path):
+def test_stream_pitch_track_equals_batch(spark):
     """Streaming pitch post-processor across micro-batches ==
     the batch pitch_track operator (ProcessAudioStream's persistent
     detector state reproduced in GroupState)."""
@@ -89,9 +75,8 @@ def test_stream_pitch_track_equals_batch(spark, tmp_path):
             (float(round(32.0 / float(t), 6)), float(c))
             for t, c in zip(taus, confs)
         ]
-    src = tmp_path / "det"
-    src.mkdir()
     n_chunks = 3
+    chunks = []
     for ci in range(n_chunks):
         rows = []
         for d, det in docs.items():
@@ -101,36 +86,18 @@ def test_stream_pitch_track_equals_batch(spark, tmp_path):
             rows += [
                 (d, f, p, c) for f, (p, c) in enumerate(det) if lo <= f < hi
             ]
-        spark.createDataFrame(
+        chunks.append(spark.createDataFrame(
             rows,
             "doc_id string, frame_idx long, pitch double,"
             " confidence double",
-        ).coalesce(1).write.mode("overwrite").parquet(str(src / f"c{ci}"))
+        ))
 
-    stream = (
-        spark.readStream.schema(
-            "doc_id string, frame_idx long, pitch double,"
-            " confidence double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "c*"))
-    )
-    out = stream_pitch_track(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("pitch_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "pckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
     got = {
         (r["doc_id"], r["frame_idx"]): (
             r["pitch_corrected"], r["pitch"], r["f0_multiple"],
             r["salience"], r["stability"],
         )
-        for r in spark.table("pitch_stream").collect()
+        for r in replay(chunks, stream_pitch_track, "append").collect()
     }
 
     batch_in = spark.createDataFrame(
@@ -154,7 +121,7 @@ def test_stream_pitch_track_equals_batch(spark, tmp_path):
         assert got[k] == want[k], k  # bit-identical, same kernel
 
 
-def test_stream_backfill_equals_batch(spark, tmp_path):
+def test_stream_backfill_equals_batch(spark):
     """Streaming causal backfill == the ffill columns of the batch
     operator, under two DIFFERENT time chunkings (2 and 4 ranges),
     including duplicate-second ties and multi-cell gaps."""
@@ -191,10 +158,9 @@ def test_stream_backfill_equals_batch(spark, tmp_path):
     }
 
     for n_chunks in (2, 4):
-        src = tmp_path / f"bf{n_chunks}"
-        src.mkdir()
         bounds = [0, *(2000 * (i + 1) for i in range(n_chunks - 1)), 10**9]
         users = sorted({r[3] for r in rows})
+        chunks = []
         for ci in range(n_chunks):
             chunk = [
                 (u, t, v, i)
@@ -203,29 +169,10 @@ def test_stream_backfill_equals_batch(spark, tmp_path):
             ]
             if ci == n_chunks - 1:
                 chunk += [(u, 10**10, 0.0, -1) for u in users]
-            spark.createDataFrame(
+            chunks.append(spark.createDataFrame(
                 chunk, "user_id long, t long, v double, eid long"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                str(src / f"c{ci}")
-            )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, t long, v double, eid long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "c*"))
-        )
-        name = f"bf_stream_{n_chunks}"
-        q = (
-            stream_backfill(stream, step=step)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ck{n_chunks}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+            ))
+        out = replay(chunks, lambda s: stream_backfill(s, step=step), "append")
         got = {
             (r["user_id"], r["grid_ts"]): (
                 None if r["ffill_value"] is None
@@ -233,12 +180,12 @@ def test_stream_backfill_equals_batch(spark, tmp_path):
                 r["ffill_age_s"],
                 r["n_obs"],
             )
-            for r in spark.table(name).collect()
+            for r in out.collect()
         }
         assert got == want, (n_chunks, len(got), len(want))
 
 
-def test_stream_asof_equals_batch(spark, tmp_path):
+def test_stream_asof_equals_batch(spark):
     """Streaming point-in-time join == the batch union as-of plan,
     at 2 and 4 time chunkings, incl. equal-ts inclusive matches and
     duplicate-ts version ties."""
@@ -287,42 +234,22 @@ def test_stream_asof_equals_batch(spark, tmp_path):
     }
 
     for n_chunks in (2, 4):
-        src = tmp_path / f"as{n_chunks}"
-        src.mkdir()
         bounds = [0, *(1250 * (i + 1) for i in range(n_chunks - 1)), 10**9]
-        for ci in range(n_chunks):
-            chunk = [
-                (u, t, s, e, v)
-                for u, t, s, e, v in rows
-                if bounds[ci] <= t < bounds[ci + 1]
-            ]
+        chunks = [
             spark.createDataFrame(
-                chunk, "user_id long, t long, side int, eid long, v double"
-            ).coalesce(1).write.mode("overwrite").parquet(
-                str(src / f"c{ci}")
+                [
+                    (u, t, s, e, v)
+                    for u, t, s, e, v in rows
+                    if bounds[ci] <= t < bounds[ci + 1]
+                ],
+                "user_id long, t long, side int, eid long, v double",
             )
-        stream = (
-            spark.readStream.schema(
-                "user_id long, t long, side int, eid long, v double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / "c*"))
-        )
-        name = f"asof_stream_{n_chunks}"
-        q = (
-            stream_asof(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / f"ak{n_chunks}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+            for ci in range(n_chunks)
+        ]
         got = {
             r["event_id"]: (
                 r["matched_ref_ts"], r["ref_version"], r["ref_value"]
             )
-            for r in spark.table(name).collect()
+            for r in replay(chunks, stream_asof, "append").collect()
         }
         assert got == want, (n_chunks, len(got), len(want))
