@@ -332,9 +332,10 @@ def q_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the knn_bruteforce BroadcastNestedLoopJoin built the 20k-row
     catalog as the broadcast side and evaluated the interpreted
     cosine fold on the 1-task query side (5.3 s at sf1.0; kernel
-    ~0.6 s).  The kernel's float path is bit-equal to the fold (the
-    r5 embedding_neardup certification); ranking/tie-break/rounding
-    unchanged."""
+    ~0.6 s).  The scores come from kernels.cosine_block, bit-equal to
+    the fold (tests/test_ann.py::
+    test_cosine_block_equals_catalyst_fold); ranking/tie-break/
+    rounding unchanged."""
     from sonar_spark.operators.ann import allpairs_cosine
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -440,8 +441,8 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round 5: block nested-loop kernel (operators/ann.allpairs_cosine)
     replaces the broadcast-join + interpreted zip_with fold — each
     task scores its left block against the executor-side-read full
-    table with ascending-order accumulation (bit-matching the fold)
-    and applies the threshold in-kernel, so only qualifying pairs
+    table with kernels.cosine_block (bit-matching the fold) and
+    applies the threshold in-kernel, so only qualifying pairs
     materialize.  9.2 s -> ~0.3 s warm at sf0.01."""
     from sonar_spark.operators.ann import allpairs_cosine
 
@@ -3790,8 +3791,9 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup semantic dedup (Abbas et al. 2023): constant seeded
     k-means centroids bucket the embeddings (broadcast argmax — no
-    shuffle), then a CLUSTER-KEYED self-join finds tau-similar pairs
-    and drops every member except the lowest-centroid-sim one.
+    shuffle), then a per-cluster block kernel after one shuffle on
+    the cluster key finds tau-similar pairs and drops every member
+    except the lowest-centroid-sim one.
     Planted corpus: every 5th vector re-appears with a deterministic
     1%-sin perturbation (cosine ~0.99995), so the drop set is
     non-trivial by construction.  See operators/semdedup.py."""
@@ -6793,8 +6795,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-duplicates a contrastive loss learns the most from, with
     n_excluded certifying the positive filter fired.  Pair scores
     come from the FUSED block nested-loop kernel (r6): each task
-    scores its block against the full table with the exact
-    allpairs_cosine float path and reduces every similarity row IN
+    scores its block against the full table with
+    kernels.cosine_block and reduces every similarity row IN
     the task to n_excluded + the top-3 below-threshold negatives, so
     only the <= 3 output rows per anchor ever leave the kernel.  The
     r5 plan materialized the O(n^2) pair table through a mirror

@@ -68,26 +68,23 @@ def jl_project(emb: DataFrame, *, id_col: str = "vec_id",
     JL_IN-dimensional (the kernel broadcasts against the full R;
     the expression form would silently project the overlapping k
     range of a shorter vector instead)."""
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from ..kernels import spark_round, spark_round_micro
+    from ..kernels import spark_round, spark_round_micro, vectors_matrix
 
     # jl_matrix emits (k, j, r) in k-major order -> row-major reshape
     R = np.array(
         [r for (_, _, r) in jl_matrix()], dtype=np.float64
     ).reshape(JL_IN, JL_OUT)
 
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            if not len(pdf):
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            ids = pdf[id_col].to_numpy()
+            V = vectors_matrix(batch.column(1))
+            ids = batch.column(0).to_numpy()
             n, d = V.shape
             # (n, d, out) product tensor, micro-quantized per product
             # then summed exactly over k — chunked to bound memory
@@ -103,11 +100,12 @@ def jl_project(emb: DataFrame, *, id_col: str = "vec_id",
                 )
                 mus[lo:hi] = micro.sum(axis=1)
             p = spark_round(mus.ravel() / 1e9 + 1e-12, 6)
-            yield pd.DataFrame(
-                {id_col: out_ids, "j": out_j, "p": p}
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out_ids, pa.int64()), pa.array(out_j), pa.array(p)],
+                names=[id_col, "j", "p"],
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         gen, schema=f"{id_col} long, j int, p double"
     )
 
@@ -242,21 +240,17 @@ def int8_quantize_report(
     of the 64 codes), rmse (6dp).  One scan, zero shuffles (per-row
     kernel).
     """
-    from collections.abc import Iterator
-
     import numpy as np
-    import pandas as pd
 
-    from ..kernels import spark_round, spark_round_micro
+    from ..kernels import spark_round, spark_round_micro, vectors_matrix
 
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            if not len(pdf):
+    def gen(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            V = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            ids = pdf[id_col].to_numpy()
+            V = vectors_matrix(batch.column(1))
             n, d = V.shape
             mn = V.min(axis=1)
             mx = V.max(axis=1)
@@ -273,17 +267,18 @@ def int8_quantize_report(
             t = spark_round_micro((diff * diff).ravel(), 9).reshape(n, d)
             err = t.sum(axis=1)
             rmse = spark_round(np.sqrt(err / 1e9 / d) + 1e-12, 6)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "vmin": spark_round(mn + 1e-12, 6),
-                    "vmax": spark_round(mn + sc * 255.0 + 1e-12, 6),
-                    "code_sum": q.sum(axis=1).astype(np.int64),
-                    "rmse": rmse,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).cast(pa.int64()),
+                    pa.array(spark_round(mn + 1e-12, 6)),
+                    pa.array(spark_round(mn + sc * 255.0 + 1e-12, 6)),
+                    pa.array(q.sum(axis=1).astype(np.int64)),
+                    pa.array(rmse),
+                ],
+                names=[id_col, "vmin", "vmax", "code_sum", "rmse"],
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         gen,
         schema=(
             f"{id_col} long, vmin double, vmax double, "

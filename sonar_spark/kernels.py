@@ -1074,6 +1074,63 @@ def dtw_align(a: np.ndarray, b: np.ndarray, band: int = 50) -> dict[str, float]:
             "path_len": float(steps), "slope": slope}
 
 
+# ------------------------------------------------------ vectors / cosine
+
+def vectors_matrix(vec) -> np.ndarray:
+    """Arrow list-of-float column (Array or ChunkedArray) -> (n, dim)
+    float64 matrix via the contiguous values buffer (list_flatten +
+    reshape, zero-copy for float64) — never to_pylist(), which builds
+    a Python object per element.  An empty column is (0, 0); a null
+    row or rows of unequal length raise ValueError."""
+    import pyarrow.compute as pc
+
+    n = len(vec)
+    if n == 0:
+        return np.empty((0, 0))
+    if vec.null_count:
+        raise ValueError("null vector row")
+    lens = pc.list_value_length(vec).to_numpy()
+    dim = int(lens[0])
+    if not (lens == dim).all():
+        raise ValueError("ragged vector column")
+    flat = pc.list_flatten(vec).to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(n, dim)
+
+
+def cosine_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(n, d) x (m, d) -> (n, m) cosine similarities, bit-equal to the
+    Catalyst fold functions.arrays.cosine_similarity
+    (distance.go:48-70): every dot and squared norm accumulates over
+    d in ascending order, s = dot / (|a| * |b|), and a zero (or NaN)
+    denominator gives 0.0.  BLAS gemm would sum in a batch-size-
+    dependent order, so the block is one outer product per k instead,
+    tiled over the right side so each tile stays cache-resident
+    across the d passes (the per-element order of adds is the same
+    for every tile width)."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    n, d = a.shape
+    m = b.shape[0]
+    if b.shape[1] != d:
+        raise ValueError(f"vector dims differ: {d} vs {b.shape[1]}")
+    na = np.zeros(n)
+    nb = np.zeros(m)
+    for k in range(d):
+        na += a[:, k] * a[:, k]
+        nb += b[:, k] * b[:, k]
+    dots = np.empty((n, m))
+    tj = max(1, (1 << 17) // max(1, n))
+    for j0 in range(0, m, tj):
+        j1 = min(j0 + tj, m)
+        tile = np.zeros((n, j1 - j0))
+        for k in range(d):
+            tile += np.outer(a[:, k], b[j0:j1, k])
+        dots[:, j0:j1] = tile
+    den = np.outer(np.sqrt(na), np.sqrt(nb))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den > 0, dots / den, 0.0)
+
+
 # ------------------------------------------------- exact round emulation
 
 def spark_round(x: np.ndarray, dp: int) -> np.ndarray:

@@ -25,31 +25,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
+from ..kernels import cosine_block, spark_round, vectors_matrix
 from .topk import topk_per_group
 
 
 def _normalize_rows(m: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(m, axis=1, keepdims=True)
     return m / np.where(n > 0, n, 1.0)
-
-
-def _vectors_to_matrix(vec) -> np.ndarray:
-    """Arrow list-of-float column -> (n, dim) float64 matrix via the
-    contiguous values buffer (zero-copy flatten + reshape) — never
-    to_pylist(), which builds a Python object per element."""
-    import pyarrow.compute as pc
-
-    n = len(vec)
-    if n == 0:
-        return np.empty((0, 0))
-    lens = pc.list_value_length(vec).to_numpy()
-    dim = int(lens[0])
-    if not (lens == dim).all():
-        raise ValueError("ragged embedding column")
-    flat = vec.flatten().to_numpy(zero_copy_only=False).astype(
-        np.float64, copy=False
-    )
-    return flat.reshape(n, dim)
 
 
 def train_centroids(
@@ -66,13 +48,8 @@ def train_centroids(
     returns (n_centroids, dim) float64 unit vectors. Lloyd iterations
     with empty-cluster re-seeding; deterministic for a fixed seed
     (clustering.go:117-120 seed-42 precedent)."""
-    pdf = (
-        emb.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample)
-        .toPandas()
-    )
-    X = _normalize_rows(np.array(pdf[vec_col].tolist(), dtype=np.float64))
+    t = emb.select(id_col, vec_col).orderBy(id_col).limit(sample).toArrow()
+    X = _normalize_rows(vectors_matrix(t.column(vec_col)))
     rng = np.random.default_rng(seed)
     k = min(n_centroids, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)]
@@ -113,7 +90,7 @@ def ivf_assign(
             ids = batch.column(batch.schema.get_field_index(id_col))
             if len(vec) == 0:
                 continue
-            X = _vectors_to_matrix(vec)
+            X = vectors_matrix(vec)
             Xn = _normalize_rows(X)
             assign = (Xn @ Cl.T).argmax(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
@@ -162,7 +139,7 @@ def hyperplane_lsh_pairs(
             ids = batch.column(batch.schema.get_field_index(id_col))
             if len(vec) == 0:
                 continue
-            X = _vectors_to_matrix(vec)
+            X = vectors_matrix(vec)
             if planes is None:
                 local_rng = np.random.default_rng(seed)
                 planes = local_rng.standard_normal((X.shape[1], n_bits))
@@ -235,7 +212,7 @@ def ivf_probes(
             ids = batch.column(batch.schema.get_field_index(id_col))
             if len(vec) == 0:
                 continue
-            X = _vectors_to_matrix(vec)
+            X = vectors_matrix(vec)
             sims = _normalize_rows(X) @ Cl.T
             top = np.argsort(-sims, axis=1, kind="stable")[:, :npb].astype(
                 np.int32
@@ -344,6 +321,26 @@ def ivf_search_pruned(
     )
 
 
+def _scored_blocks(batches, emb_path: str, id_col: str, vec_col: str):
+    """The block nested-loop scorer shared by allpairs_cosine and
+    hard_negatives_allpairs: reads the FULL right side executor-side
+    from the parquet file, then yields (left ids, right ids,
+    kernels.cosine_block(left, right)) per non-empty Arrow batch of
+    (id, vector) rows."""
+    import pyarrow.parquet as pq
+
+    right = pq.read_table(emb_path, columns=[id_col, vec_col])
+    rid = right.column(id_col).to_numpy()
+    rb = vectors_matrix(right.column(vec_col))
+    for batch in batches:
+        if batch.num_rows:
+            yield (
+                batch.column(0).to_numpy(),
+                rid,
+                cosine_block(vectors_matrix(batch.column(1)), rb),
+            )
+
+
 def allpairs_cosine(
     emb: DataFrame,
     emb_path: str,
@@ -364,83 +361,42 @@ def allpairs_cosine(
     materialize (the expression-join form materialized all O(n^2)
     pair rows before filtering).
 
-    Float semantics match the Catalyst fold version bit-for-bit:
-    dot and norm accumulate over the dimension axis in ascending
-    order (the r2 BLAS-gemm lesson — np.dot's batch-size-dependent
-    summation would not be reproducible), s = dot / (na * nb) with
-    the zero-denominator -> 0.0 guard of distance.go:48-70.
+    Scores come from kernels.cosine_block, bit-equal to the Catalyst
+    fold version (certified by tests/test_ann.py).
 
     Output: (id_a, id_b, s) with id_a < id_b, s >= threshold, s RAW
     (caller rounds at its quantization boundary).  directed=True
     emits LEFT x ALL instead (id_a from the left side only, every
     id_b != id_a) — the anchors-bounded candidate shape
     hard_negatives consumes when the left side is pre-filtered."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def gen(batches):
+        import pyarrow as pa
 
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        right = pd.read_parquet(emb_path, columns=[id_col, vec_col])
-        rb = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in right[vec_col]]
-        )
-        rid = right[id_col].to_numpy()
-        dim = rb.shape[1]
-        nb = np.zeros(len(rid))
-        for k in range(dim):  # ascending: matches asum(transform) order
-            nb += rb[:, k] * rb[:, k]
-        nb = np.sqrt(nb)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            la = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            lid = pdf[id_col].to_numpy()
-            na = np.zeros(len(lid))
-            for k in range(dim):  # ascending over the dim axis
-                na += la[:, k] * la[:, k]
-            na = np.sqrt(na)
-            # right-side TILED accumulation (r6): per-element
-            # ascending-k summation order unchanged, but each dots
-            # tile stays cache-resident across the dim passes instead
-            # of streaming the full accumulator through memory dim
-            # times (the hard_negatives_allpairs lesson; bit-identical
-            # by construction — one float64 add per (element, k)
-            # either way)
-            dots = np.empty((len(lid), len(rid)))
-            tj = max(1, (1 << 17) // max(1, len(lid)))
-            for j0 in range(0, len(rid), tj):
-                j1 = min(j0 + tj, len(rid))
-                tile = np.zeros((len(lid), j1 - j0))
-                for k in range(dim):  # ascending over the dim axis
-                    tile += np.outer(la[:, k], rb[j0:j1, k])
-                dots[:, j0:j1] = tile
-            denom = np.outer(na, nb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.where(denom > 0, dots / denom, 0.0)
+        for lid, rid, s in _scored_blocks(batches, emb_path, id_col, vec_col):
             if directed:
                 mask = (lid[:, None] != rid[None, :]) & (s >= threshold)
             else:
                 mask = (lid[:, None] < rid[None, :]) & (s >= threshold)
             ii, jj = np.nonzero(mask)
             # chunked yields: one low-threshold block can qualify
-            # millions of pairs, and a single yielded frame becomes a
+            # millions of pairs, and a single yielded batch is a
             # single Arrow batch — capping rows per yield bounds the
             # executor's direct-buffer usage (guide §4.2 batch-size
             # caveat; observed 300 MB allocations at sf1.0 directed)
             step = 1_000_000
             for lo in range(0, len(ii), step):
-                sl = slice(lo, lo + step)
-                yield pd.DataFrame(
-                    {
-                        "id_a": lid[ii[sl]],
-                        "id_b": rid[jj[sl]],
-                        "s": s[ii[sl], jj[sl]],
-                    }
+                i, j = ii[lo : lo + step], jj[lo : lo + step]
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(lid[i], pa.int64()),
+                        pa.array(rid[j], pa.int64()),
+                        pa.array(s[i, j]),
+                    ],
+                    names=["id_a", "id_b", "s"],
                 )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         gen, schema="id_a long, id_b long, s double"
     )
 
@@ -457,12 +413,12 @@ def hard_negatives_allpairs(
     """Hard-negative mining fused INTO the block nested-loop cosine
     kernel (r6, guide §1.2 'fix the distributed algorithm first'):
     each task scores its left block against the full executor-side
-    table exactly like allpairs_cosine (bit-identical ascending-order
-    float path), and — because every left row sees its COMPLETE
-    similarity row — reduces it in place to the hard_negatives
-    output: n_excluded = #(s >= pos_threshold), top-k of the
-    s < pos_threshold candidates by (s desc, neighbor id asc) on RAW
-    doubles, rows only for anchors (n_excluded >= 1).
+    table exactly like allpairs_cosine (kernels.cosine_block), and —
+    because every left row sees its COMPLETE similarity row — reduces
+    it in place to the hard_negatives output: n_excluded =
+    #(s >= pos_threshold), top-k of the s < pos_threshold candidates
+    by (s desc, neighbor id asc) on RAW doubles, rows only for
+    anchors (n_excluded >= 1).
 
     The r5 plan materialized the O(n^2) pair table through a mirror
     union and two windows (179 s at sf1.0, 41% of the whole bench);
@@ -477,51 +433,11 @@ def hard_negatives_allpairs(
     Output: query_id, rank (int), neighbor_id, cosine_sim (6dp via
     kernels.spark_round — the operator's F.round boundary), n_excluded
     (long)."""
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def gen(batches):
+        import pyarrow as pa
 
-    from ..kernels import spark_round
-
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        right = pd.read_parquet(emb_path, columns=[id_col, vec_col])
-        rb = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in right[vec_col]]
-        )
-        rid = right[id_col].to_numpy()
-        dim = rb.shape[1]
-        nb = np.zeros(len(rid))
-        for d in range(dim):  # ascending: matches asum(transform) order
-            nb += rb[:, d] * rb[:, d]
-        nb = np.sqrt(nb)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            la = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            lid = pdf[id_col].to_numpy()
-            na = np.zeros(len(lid))
-            for d in range(dim):  # ascending over the dim axis
-                na += la[:, d] * la[:, d]
-            na = np.sqrt(na)
-            # right-side TILED accumulation: per-element summation
-            # order over d is unchanged (still ascending), but each
-            # dots tile stays cache-resident across the 64 passes —
-            # the untiled form streamed a 100 MB accumulator through
-            # memory 64 times per task (measured 17 s at sf1.0;
-            # tiled ~2 s)
-            dots = np.empty((len(lid), len(rid)))
-            tj = max(1, (1 << 17) // max(1, len(lid)))  # ~1 MB tiles
-            for j0 in range(0, len(rid), tj):
-                j1 = min(j0 + tj, len(rid))
-                tile = np.zeros((len(lid), j1 - j0))
-                for d in range(dim):  # ascending over the dim axis
-                    tile += np.outer(la[:, d], rb[j0:j1, d])
-                dots[:, j0:j1] = tile
-            denom = np.outer(na, nb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.where(denom > 0, dots / denom, 0.0)
+        for lid, rid, s in _scored_blocks(batches, emb_path, id_col, vec_col):
             q_ids, ranks, n_ids, sims, n_excs = [], [], [], [], []
             for i in range(len(lid)):
                 row = s[i]
@@ -553,19 +469,23 @@ def hard_negatives_allpairs(
                 n_ids.extend(cand_id[order])
                 sims.extend(cand_s[order])
                 n_excs.extend([n_exc] * m)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.asarray(q_ids, dtype=np.int64),
-                    "rank": np.asarray(ranks, dtype=np.int32),
-                    "neighbor_id": np.asarray(n_ids, dtype=np.int64),
-                    "cosine_sim": spark_round(
-                        np.asarray(sims, dtype=np.float64), 6
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.asarray(q_ids, dtype=np.int64)),
+                    pa.array(np.asarray(ranks, dtype=np.int32)),
+                    pa.array(np.asarray(n_ids, dtype=np.int64)),
+                    pa.array(
+                        spark_round(np.asarray(sims, dtype=np.float64), 6)
                     ),
-                    "n_excluded": np.asarray(n_excs, dtype=np.int64),
-                }
+                    pa.array(np.asarray(n_excs, dtype=np.int64)),
+                ],
+                names=[
+                    "query_id", "rank", "neighbor_id", "cosine_sim",
+                    "n_excluded",
+                ],
             )
 
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         gen,
         schema=(
             "query_id long, rank int, neighbor_id long, "
@@ -659,18 +579,16 @@ def pq_index(
     spark = emb.sparkSession
     bc = spark.sparkContext.broadcast((C, B))
 
-    def gen(pdfs):
-        import pandas as pd
+    def gen(batches):
+        import pyarrow as pa
 
         Cl, Bl = bc.value
         n_sub = Bl.shape[0]
         sub = Cl.shape[1] // n_sub
-        for pdf in pdfs:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            X = vectors_matrix(batch.column(1))
             cd = np.stack(
                 [_r6pos(_d2_asc(X, Cl[j])) for j in range(len(Cl))], axis=1
             )
@@ -684,16 +602,20 @@ def pq_index(
                     axis=1,
                 )
                 codes[:, s] = dd.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "cell": cell.astype("int32"),
-                    "codes": list(codes),
-                }
+            offsets = np.arange(len(X) + 1, dtype=np.int32) * n_sub
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0),
+                    pa.array(cell.astype(np.int32)),
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets), pa.array(codes.ravel())
+                    ),
+                ],
+                names=[id_col, "cell", "codes"],
             )
 
     id_type = dict(emb.dtypes)[id_col]
-    return emb.select(id_col, vec_col).mapInPandas(
+    return emb.select(id_col, vec_col).mapInArrow(
         gen, schema=f"{id_col} {id_type}, cell int, codes array<int>"
     )
 
@@ -718,9 +640,9 @@ def pq_search(
     ranking (rank ties -> smaller neighbor id).  The exact vectors
     are never touched after indexing."""
     spark = index.sparkSession
-    qpdf = queries.select(id_col, vec_col).toPandas()  # bounded query set
-    Q = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    qids = qpdf[id_col].to_numpy()
+    qt = queries.select(id_col, vec_col).toArrow()  # bounded query set
+    Q = vectors_matrix(qt.column(vec_col))
+    qids = qt.column(id_col).to_numpy()
     n_sub = B.shape[0]
     sub = C.shape[1] // n_sub
     # probe set per query (driver-side planning over tiny matrices)

@@ -359,53 +359,27 @@ def chroma_cross_similarity(
     )
 
 
-def _pair_cost_matrices(qs, rs):
-    """All-pairs cosine ingredients for one (Q, R) pair, vectorized
-    with FIXED-ORDER accumulation over the 12 pitch classes
-    (ascending k) — per-pair deterministic regardless of batch
-    composition, avoiding the batch-order-sensitive BLAS gemm path
-    (round-2 bit-identity finding).  Returns (dots Q x R, sq-norms
-    Q, sq-norms R)."""
-    import numpy as np
-
-    qm = np.asarray(qs, dtype=np.float64)
-    rm = np.asarray(rs, dtype=np.float64)
-    dots = np.zeros((qm.shape[0], rm.shape[0]))
-    nq = np.zeros(qm.shape[0])
-    nr = np.zeros(rm.shape[0])
-    for k in range(qm.shape[1]):
-        qk, rk = qm[:, k], rm[:, k]
-        dots += np.multiply.outer(qk, rk)
-        nq += qk * qk
-        nr += rk * rk
-    return dots, nq, nr
-
-
 def _dp_kernel(method: str):
     """Per-pair DP ports of chroma_similarity.go — Smith-Waterman
     local alignment (:198-267 + traceback :472-497) and DTW
     (:270-353 + traceback :500-527).  Each pair's matrix is tiny
     (frames x frames); pairs are the parallel unit.
 
-    The cosine cost matrix is one vectorized pass (closes the
-    round-3 perf-weak: per-cell Python cosine calls cost ~100x the
-    needed CPU); only the inherently sequential DP recurrence stays
-    a loop, over plain Python floats."""
+    The cosine cost matrix is one kernels.cosine_block pass over the
+    12 pitch classes (closes the round-3 perf-weak: per-cell Python
+    cosine calls cost ~100x the needed CPU); only the inherently
+    sequential DP recurrence stays a loop, over plain Python floats.
+    A zero-norm frame has cosine 0, so its SW similarity is 0.5 and
+    its DTW cost 1.0."""
     import math
 
-    import numpy as np
+    from ..kernels import cosine_block
 
     def sw(qs, rs):
         Q, R = len(qs), len(rs)
-        dots, nq, nr = _pair_cost_matrices(qs, rs)
         # elementwise identical to the scalar form
-        # 1 - (1 - dot/(sqrt(na)*sqrt(nb)))/2 ; zero-norm cell -> 0.5
-        denom = np.multiply.outer(np.sqrt(nq), np.sqrt(nr))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sim_m = 1.0 - (1.0 - dots / denom) / 2.0
-        sim_m[nq == 0, :] = 1.0 - 1.0 / 2.0
-        sim_m[:, nr == 0] = 1.0 - 1.0 / 2.0
-        siml = sim_m.tolist()
+        # 1 - (1 - dot/(sqrt(na)*sqrt(nb)))/2
+        siml = (1.0 - (1.0 - cosine_block(qs, rs)) / 2.0).tolist()
         scores = [[0.0] * (R + 1) for _ in range(Q + 1)]
         tb = [[0] * (R + 1) for _ in range(Q + 1)]
         max_score, mi, mj = 0.0, 0, 0
@@ -447,14 +421,7 @@ def _dp_kernel(method: str):
 
     def dtw(qs, rs):
         Q, R = len(qs), len(rs)
-        dots, nq, nr = _pair_cost_matrices(qs, rs)
-        # 1 - dot/(sqrt(na)*sqrt(nb)) ; zero-norm cell -> 1.0
-        denom = np.multiply.outer(np.sqrt(nq), np.sqrt(nr))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cost_m = 1.0 - dots / denom
-        cost_m[nq == 0, :] = 1.0
-        cost_m[:, nr == 0] = 1.0
-        cost = cost_m.tolist()
+        cost = (1.0 - cosine_block(qs, rs)).tolist()
         acc = [[0.0] * R for _ in range(Q)]
         acc[0][0] = cost[0][0]
         for i in range(1, Q):

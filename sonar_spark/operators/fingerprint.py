@@ -281,24 +281,25 @@ def connected_components(
 
     Plan shape: the de-duplicated, symmetrized edge table is built
     from one pass over the input (both directions of an edge from
-    one row; a union would evaluate the input plan twice) and
-    materialized ONCE with localCheckpoint.  One bounded Arrow
-    collect then reads at most _CEIL + 1 of its rows back:
+    one row; a union would evaluate the input plan twice).  One
+    bounded Arrow collect reads at most _CEIL + 1 of its rows:
     - at most _CEIL rows (every graph the queries, the curation job
       and the store build label): the rounds run on the driver
       (kernels.min_label_components) over node codes in Spark's sort
       order, and the labels come back as a driver-built DataFrame
-      (session.arrow_frame) — no round trip per round;
-    - more: the rounds run distributed, O(log d) of them for a
-      component diameter d.  The initial labels (comp = node) derive
-      from the checkpointed table, which later stages read at its
-      AQE-coalesced partition count (a persist()ed plan is not
-      coalesced and would fan every round out to the full shuffle
-      width).  Each round is one join (neighbor labels), one
-      aggregation (min label, carrying the node's previous label
-      through as max(__old) over its own row — neighbor rows hold
-      null) and one self-join (pointer jumping), checkpointed at the
-      end.
+      (session.arrow_frame) — no round trip per round, and no
+      checkpoint;
+    - more: the edge table is evaluated a second time and
+      materialized with localCheckpoint, and the rounds run
+      distributed, O(log d) of them for a component diameter d.  The
+      initial labels (comp = node) derive from the checkpointed
+      table, which later stages read at its AQE-coalesced partition
+      count (a persist()ed plan is not coalesced and would fan every
+      round out to the full shuffle width).  Each round is one join
+      (neighbor labels), one aggregation (min label, carrying the
+      node's previous label through as max(__old) over its own row —
+      neighbor rows hold null) and one self-join (pointer jumping),
+      checkpointed at the end.
     Both paths run the same rounds, so they return the same labels.
 
     Input edges are de-duplicated and symmetrized internally;
@@ -307,10 +308,6 @@ def connected_components(
     nodes appear with comp == node."""
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    # localCheckpoint also truncates lineage: the rounds below
-    # reference it (and their own previous output) without the plan
-    # deepening round over round, which would otherwise blow the
-    # analyzer stack and re-plan the whole history at scale
     a, b = F.col(src), F.col(dst)
     sym = (
         edges.select(
@@ -324,12 +321,15 @@ def connected_components(
         .select("__e.a", "__e.b")
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     head = sym.limit(_CEIL + 1).toArrow()
     if head.num_rows <= _CEIL:
-        _drop_checkpoint(sym)
         return _driver_components(sym, head, max_iter)
+    # localCheckpoint also truncates lineage: the rounds below
+    # reference it (and their own previous output) without the plan
+    # deepening round over round, which would otherwise blow the
+    # analyzer stack and re-plan the whole history at scale
+    sym = sym.localCheckpoint(eager=True)
     no_old = F.lit(None).cast(sym.schema["a"].dataType)
     labels = (
         sym.select(F.col("a").alias("node"))

@@ -16,10 +16,10 @@ Relational shape (the whole point of SemDeDup at 100 TB):
 
 - cluster assignment is a broadcast of K constant centroids onto one
   corpus scan (argmax of K cosine columns — no shuffle);
-- the pair search is a self-join ON THE CLUSTER KEY — one shuffle,
-  quadratic only within a cluster, never across the corpus.  At web
-  scale K grows to ~10^5 (the paper uses 50k on LAION) so cluster
-  populations stay bounded; here K=8 over the test corpus.
+- the pair search runs per cluster after ONE shuffle on the cluster
+  key — quadratic only within a cluster, never across the corpus.
+  At web scale K grows to ~10^5 (the paper uses 50k on LAION) so
+  cluster populations stay bounded; here K=8 over the test corpus.
 
 Cross-engine determinism: the centroids are PLAN-TIME CONSTANTS —
 a seeded unit-sphere draw shared between the Spark lit() arrays and
@@ -34,7 +34,6 @@ comparison, with (value, id) lexicographic tie-breaks.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 SEMDEDUP_K = 8
@@ -83,20 +82,15 @@ def semdedup(
     # Centroid assignment as an Arrow-batched kernel (the interpreted
     # Catalyst cosine fold over K x dim per row was the slow path —
     # same lesson as the pair stage below).  Bit-parity with the fold
-    # version: ascending-dim accumulation for every sum, cos =
-    # dot / (sqrt(sa) * sqrt(sc)) with the d > 0 -> else 0.0 guard of
-    # distance.go:48-70, half-up (away-from-zero) 6dp round, -0.0
-    # normalized; argmax iterates k ascending with strict > (the
-    # array_max lexicographic (s, -k) tie rule).
+    # version: kernels.cosine_block, then the half-up (away-from-zero)
+    # 6dp round with -0.0 normalized; argmax iterates k ascending with
+    # strict > (the array_max lexicographic (s, -k) tie rule).
     import numpy as np
-    import pandas as pd
+
+    from ..kernels import cosine_block, vectors_matrix
 
     cmat = np.asarray(cents, dtype=np.float64)
-    n_k, dim = cmat.shape
-    cn = np.zeros(n_k)
-    for i in range(dim):  # ascending: matches asum(transform) order
-        cn += cmat[:, i] * cmat[:, i]
-    cn = np.sqrt(cn)
+    n_k = len(cmat)
 
     def _round6(x: np.ndarray) -> np.ndarray:
         return (
@@ -109,189 +103,108 @@ def semdedup(
             + 0.0
         )
 
-    def _assign_kernel(pdfs):
-        for pdf in pdfs:
-            if len(pdf) == 0:
+    def _assign_kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            vb = np.stack(
-                [
-                    np.asarray(v, dtype=np.float64)
-                    for v in pdf[vec_col]
-                ]
-            )
-            n = vb.shape[0]
-            na = np.zeros(n)
-            dots = np.zeros((n, n_k))
-            for i in range(dim):  # ascending fold order
-                c = vb[:, i]
-                na += c * c
-                dots += np.outer(c, cmat[:, i])
-            na = np.sqrt(na)
-            den = na[:, None] * cn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.where(den > 0.0, dots / den, 0.0)
-            s6 = _round6(s)
+            s6 = _round6(cosine_block(vectors_matrix(batch.column(1)), cmat))
             best_s = s6[:, 0].copy()
-            best_k = np.zeros(n, dtype=np.int64)
+            best_k = np.zeros(len(s6), dtype=np.int64)
             for k in range(1, n_k):  # ascending, strict >: ties keep
                 upd = s6[:, k] > best_s  # the smaller k
                 best_s[upd] = s6[upd, k]
                 best_k[upd] = k
-            yield pd.DataFrame(
-                {
-                    "__id": pdf[id_col].to_numpy(),
-                    "__v": pdf[vec_col],
-                    "cluster": best_k,
-                    "centroid_sim": best_s,
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0).cast(pa.int64()),
+                    batch.column(1),
+                    pa.array(best_k),
+                    pa.array(best_s),
+                ],
+                names=["__id", "__v", "cluster", "centroid_sim"],
             )
 
-    # the assigned table feeds three consumers (both join sides + the
-    # final output) — persist the small annotated table (winnow-
-    # matches precedent)
-    asg = corpus.mapInPandas(
+    asg = corpus.select(id_col, vec_col).mapInArrow(
         _assign_kernel,
         schema=(
             "__id long, __v array<double>, cluster long,"
             " centroid_sim double"
         ),
-    ).persist()
+    )
 
     # Within-cluster pair search as a per-cluster block kernel.  The
     # expression-join draft computed the interpreted Catalyst cosine
     # fold over every within-cluster pair row (~2.2M pairs x 64 dims
-    # at sf0.1 = 9.5 s); the kernel scores each cluster's n x d block
-    # with ascending-k accumulation (dots += outer(col_k, col_k), the
-    # allpairs_cosine / chroma-DP fixed-order convention, bit-equal to
-    # the fold) and applies the half-up 6dp round + tau threshold
-    # in-kernel, so only qualifying pairs materialize.  ONE exchange
-    # on the cluster key; per-cluster state carries across Arrow
-    # batches (clusters can exceed a 10k-row batch — the as-of
-    # mapInPandas lesson).
+    # at sf0.1 = 9.5 s); the kernel scores each cluster's n x n block
+    # with kernels.cosine_block (bit-equal to the fold), applies the
+    # half-up 6dp round + tau threshold and the keep rule in-kernel,
+    # and emits every member's final row — a member's neighbours all
+    # sit in its own cluster, so no pair row ever leaves the task and
+    # the assigned table has this one consumer (nothing to persist).
+    # ONE exchange on the cluster key; per-cluster state (Arrow
+    # slices) carries across Arrow batches (clusters can exceed a
+    # 10k-row batch — the as-of mapInPandas lesson).
     tau_f = float(tau)
 
-    def _pairs_kernel(pdfs):
+    def _cluster_kernel(batches):
+        import pyarrow as pa
+
         cur_key = None
-        ids: list = []
-        css: list = []
-        vecs: list = []
+        parts: list = []
 
         def flush():
-            n = sum(len(a) for a in ids)
-            if n < 2:
-                return None
-            idv = np.concatenate(ids)
-            csv = np.concatenate(css)
-            vb = np.stack([v for chunk in vecs for v in chunk])
-            d = vb.shape[1]
-            nrm = np.zeros(n)
-            for k in range(d):  # ascending: matches the fold order
-                c = vb[:, k]
-                nrm += c * c
-            # right-side tiled accumulation (r6): per-element
-            # ascending-k order unchanged, but each dots tile stays
-            # cache-resident instead of streaming the full n x n
-            # accumulator through memory d times (the
-            # hard_negatives_allpairs lesson)
-            dots = np.empty((n, n))
-            tj = max(1, (1 << 17) // n)
-            for j0 in range(0, n, tj):
-                j1 = min(j0 + tj, n)
-                tile = np.zeros((n, j1 - j0))
-                for k in range(d):  # ascending fold order
-                    tile += np.outer(vb[:, k], vb[j0:j1, k])
-                dots[:, j0:j1] = tile
-            na = np.sqrt(nrm)
-            den = np.outer(na, na)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                s = np.where(den == 0.0, 0.0, dots / den)
+            if not parts:
+                return
+            t = pa.Table.from_batches(parts)
+            idv = t.column("__id").to_numpy()
+            csv = t.column("centroid_sim").to_numpy()
+            vb = vectors_matrix(t.column("__v"))
             # half-up 6dp (np.round is half-even — never use it here)
-            s6 = _round6(s)
-            ia, ib = np.triu_indices(n, k=1)
-            keep = s6[ia, ib] >= tau_f
-            ia, ib = ia[keep], ib[keep]
-            if len(ia) == 0:
-                return None
-            return pd.DataFrame(
-                {
-                    "__ida": idv[ia],
-                    "__idb": idv[ib],
-                    "__csa": csv[ia],
-                    "__csb": csv[ib],
-                }
+            near = _round6(cosine_block(vb, vb)) >= tau_f
+            np.fill_diagonal(near, False)
+            # j beats i when (centroid_sim, id) of j is lexicographically
+            # smaller: the keep rule retains the lowest-centroid-sim
+            # member of every similar group
+            beats = (csv[None, :] < csv[:, None]) | (
+                (csv[None, :] == csv[:, None]) & (idv[None, :] < idv[:, None])
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(idv),
+                    pa.array(np.full(len(idv), cur_key, dtype=np.int64)),
+                    pa.array(csv),
+                    pa.array(near.sum(axis=1, dtype=np.int64)),
+                    pa.array((near & beats).any(axis=1).astype(np.int64)),
+                ],
+                names=[id_col, "cluster", "centroid_sim", "n_near", "dropped"],
             )
 
-        for pdf in pdfs:
-            if len(pdf) == 0:
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            cl = pdf["cluster"].to_numpy()
-            idv = pdf["__id"].to_numpy()
-            csv = pdf["centroid_sim"].to_numpy()
-            vv = pdf["__v"]
+            cl = batch.column(0).to_numpy()
             cut = np.flatnonzero(cl[1:] != cl[:-1]) + 1
             starts = np.concatenate(([0], cut))
             ends = np.concatenate((cut, [len(cl)]))
             for s, e in zip(starts, ends):
                 if cl[s] != cur_key:
-                    out = flush()
-                    if out is not None:
-                        yield out
+                    yield from flush()
                     cur_key = cl[s]
-                    ids, css, vecs = [], [], []
-                ids.append(idv[s:e])
-                css.append(csv[s:e])
-                vecs.append(
-                    [
-                        np.asarray(v, dtype=np.float64)
-                        for v in vv.iloc[s:e]
-                    ]
-                )
-        out = flush()
-        if out is not None:
-            yield out
+                    parts = []
+                parts.append(batch.slice(s, e - s))
+        yield from flush()
 
-    blocks = (
+    return (
         asg.repartition("cluster")
         .sortWithinPartitions("cluster", "__id")
         .select("cluster", "__id", "__v", "centroid_sim")
-    )
-    pairs = blocks.mapInPandas(
-        _pairs_kernel,
-        schema=(
-            "__ida long, __idb long, __csa double, __csb double"
-        ),
-    )
-    # per-pair loser = the lexicographically GREATER (centroid_sim,
-    # id) — the keep rule retains the lowest-centroid-sim member
-    a_loses = (F.col("__csa") > F.col("__csb")) | (
-        (F.col("__csa") == F.col("__csb"))
-        & (F.col("__ida") > F.col("__idb"))
-    )
-    sides = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("__ida").alias("__id"),
-                    a_loses.cast("long").alias("__lost"),
-                ),
-                F.struct(
-                    F.col("__idb").alias("__id"),
-                    (~a_loses).cast("long").alias("__lost"),
-                ),
-            )
-        ).alias("__e")
-    ).select(F.col("__e.__id").alias("__id"), F.col("__e.__lost"))
-    near = sides.groupBy("__id").agg(
-        F.count("*").cast("long").alias("n_near"),
-        F.max("__lost").cast("long").alias("dropped"),
-    )
-    return (
-        asg.join(near, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            "cluster",
-            "centroid_sim",
-            F.coalesce("n_near", F.lit(0)).cast("long").alias("n_near"),
-            F.coalesce("dropped", F.lit(0)).cast("long").alias("dropped"),
+        .mapInArrow(
+            _cluster_kernel,
+            schema=(
+                f"{id_col} long, cluster long, centroid_sim double,"
+                " n_near long, dropped long"
+            ),
         )
     )

@@ -244,3 +244,82 @@ def test_embedding_knn_keeps_antipodal_neighbor(spark, tmp_path):
     assert len(rows) == 5
     assert {r["neighbor_id"] for r in rows} == {1, 2, 3, 4, 5}
     assert [r["cosine_sim"] for r in rows if r["neighbor_id"] == 1] == [-1.0]
+
+
+@pytest.mark.parametrize(
+    "elem, d", [("float", 12), ("double", 12), ("float", 64), ("double", 64)]
+)
+def test_cosine_block_equals_catalyst_fold(spark, elem, d):
+    """Certificate for kernels.cosine_block against the Catalyst fold
+    functions.arrays.cosine_similarity on a cross join of two vector
+    tables: bit-equal (float64 view, signbit-strict) on every pair,
+    zero vectors on both sides and negative components included, for
+    array<float> and array<double> at the chroma (12) and embedding
+    (64) widths.  The right side is wider than one tile, so the
+    tiled accumulation runs at least two tiles."""
+    import pyarrow as pa
+
+    from sonar_spark.functions.arrays import cosine_similarity
+    from sonar_spark.kernels import cosine_block, vectors_matrix
+
+    n, m = 40, 3300
+    assert m > (1 << 17) // n  # >= 2 right-side tiles
+    rng = np.random.default_rng(d)
+    vtype = pa.list_(pa.float32() if elem == "float" else pa.float64())
+
+    def table(rows, zero):
+        v = rng.standard_normal((rows, d))
+        v[zero] = 0.0
+        return pa.table(
+            {
+                "id": pa.array(range(rows), pa.int64()),
+                "v": pa.array(list(v), vtype),
+            }
+        )
+
+    lt, rt = table(n, 3), table(m, 17)
+    left, right = spark.createDataFrame(lt), spark.createDataFrame(rt)
+    assert dict(left.dtypes)["v"] == f"array<{elem}>"
+    got = (
+        left.select(F.col("id").alias("i"), F.col("v").alias("a"))
+        .crossJoin(right.select(F.col("id").alias("j"), F.col("v").alias("b")))
+        .select("i", "j", cosine_similarity(F.col("a"), F.col("b")).alias("s"))
+        .toArrow()
+    )
+    fold = np.empty((n, m))
+    fold[got.column("i").to_numpy(), got.column("j").to_numpy()] = (
+        got.column("s").to_numpy()
+    )
+    s = cosine_block(
+        vectors_matrix(lt.column("v")), vectors_matrix(rt.column("v"))
+    )
+    assert got.num_rows == n * m
+    assert (s[3] == 0.0).all() and (s[:, 17] == 0.0).all()
+    assert (s < 0).any()
+    np.testing.assert_array_equal(s.view(np.int64), fold.view(np.int64))
+
+
+def test_vectors_matrix_and_cosine_block_reject_bad_input():
+    """Spark-free: vectors_matrix reads a sliced or chunked column
+    through its values buffer, returns (0, 0) for an empty column and
+    raises ValueError on a ragged column or a null row; cosine_block
+    raises ValueError when the two sides' dims differ."""
+    import pyarrow as pa
+
+    from sonar_spark.kernels import cosine_block, vectors_matrix
+
+    rows = [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
+    arr = pa.array(rows, pa.list_(pa.float32()))
+    np.testing.assert_array_equal(vectors_matrix(arr.slice(1)), rows[1:])
+    np.testing.assert_array_equal(
+        vectors_matrix(pa.chunked_array([arr.slice(0, 1), arr.slice(2)])),
+        [rows[0], rows[2]],
+    )
+    assert vectors_matrix(arr).dtype == np.float64
+    assert vectors_matrix(pa.array([], pa.list_(pa.float64()))).shape == (0, 0)
+    with pytest.raises(ValueError, match="ragged"):
+        vectors_matrix(pa.array([[1.0, 2.0], [1.0]]))
+    with pytest.raises(ValueError, match="null"):
+        vectors_matrix(pa.array([[1.0, 2.0], None]))
+    with pytest.raises(ValueError, match="dims differ"):
+        cosine_block(np.ones((2, 4)), np.ones((3, 3)))

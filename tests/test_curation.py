@@ -634,7 +634,8 @@ def test_temperature_mix_matches_python_oracle(spark):
 
 def test_semdedup_pairs_survive_arrow_batch_splits(spark):
     """The per-cluster pair kernel must carry group state across
-    Arrow batch boundaries (clusters larger than a batch)."""
+    Arrow batch boundaries (clusters larger than a batch), and the
+    operator leaves no persisted RDD behind."""
     import numpy as np
 
     from sonar_spark.operators.semdedup import semdedup
@@ -649,9 +650,11 @@ def test_semdedup_pairs_survive_arrow_batch_splits(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     want = sorted(
         tuple(r) for r in semdedup(df, tau=0.95).collect()
     )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     try:

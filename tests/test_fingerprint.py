@@ -310,6 +310,33 @@ def test_connected_components_paths_agree(spark, monkeypatch):
     assert dict(out["driver"][1])["😀"] == "\uffff"
 
 
+def test_connected_components_driver_path_writes_no_checkpoint(
+    spark, monkeypatch
+):
+    """Below the ceiling the edge table is collected from its plan:
+    no localCheckpoint is written (dropping one made Spark log a
+    lineage-truncation WARN on every call) and no persisted RDD is
+    left behind."""
+    from sonar_spark.operators.fingerprint import connected_components
+
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "doc_a string, doc_b string"
+    )
+    calls = []
+    real = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        calls.append((args, kwargs))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    got = dict(connected_components(df).collect())
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    assert calls == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_min_label_components_matches_union_find():
     """Spark-free: the driver kernel labels random symmetrized graphs
     with the scalar union-find's min-code components, and reports
