@@ -14,6 +14,9 @@ value-hash is robust to last-ulp engine differences.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
 import sys
 from collections.abc import Callable
@@ -75,10 +78,19 @@ def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-# Bump whenever a store-backed front-end builder changes VALUES — a
-# stale key would otherwise serve the old rows (the store dir is keyed
-# by input path + mtime + this tag, see plans/pipeline.py store_key).
-_STORE_VERSION = "r5a"
+@functools.cache
+def _source_digest(root: str = os.path.dirname(os.path.abspath(__file__))) -> str:
+    """Digest of the engine source under ``root``: the text of every
+    sonar_spark/**/*.py and of __spark_entry__.py, in sorted path order.
+    It keys the feature store (with the input path and mtimes, see
+    plans/pipeline.py store_key), so changed table code never serves
+    the rows the old code wrote."""
+    h = hashlib.sha256()
+    paths = glob.glob(os.path.join(root, "sonar_spark", "**", "*.py"), recursive=True)
+    for p in sorted([*paths, os.path.join(root, "__spark_entry__.py")]):
+        with open(p, "rb") as f:
+            h.update(os.path.relpath(p, root).encode() + b"\0" + f.read() + b"\0")
+    return h.hexdigest()[:16]
 
 
 def _store(spark: SparkSession, sf_dir: str):
@@ -97,7 +109,7 @@ def _store(spark: SparkSession, sf_dir: str):
 
     base = os.path.join(
         os.environ.get("SONAR_FEATURE_STORE_DIR", "/tmp/sonar_feature_store"),
-        store_key(sf_dir, _STORE_VERSION),
+        store_key(sf_dir, _source_digest()),
     )
     return FeatureStore(spark, base)
 

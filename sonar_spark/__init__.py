@@ -5,7 +5,7 @@ Public API (DataFrame -> DataFrame transforms, SURVEY §7.0):
 - operators.features.frame_features_arrow / frame_features_builtin
 - operators.asof.asof_join
 - operators.sessionize.sessionize_by_gap / detect_silence / detect_onsets
-- operators.fingerprint.minhash_fingerprints / lsh_candidates
+- operators.fingerprint.minhash_fingerprints / lsh_candidate_pairs
 - operators.compare.compare_topk
 - operators.align.align_pairs
 """

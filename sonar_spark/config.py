@@ -61,19 +61,18 @@ class FeatureConfig:
 
 @dataclass(frozen=True)
 class AsofConfig:
-    """As-of (point-in-time backward) join parameters.
+    """Parameters of the bucketed as-of strategy (the union strategy
+    reads none).
 
     bucket_width=None (adaptive) sizes buckets from the data so the
-    expected rows per (entity, bucket) shard ~ target_rows_per_bucket:
-    cogroup-applyInPandas costs milliseconds PER GROUP regardless of
-    size, so buckets must be as wide as possible while still splitting
-    oversized single-entity timelines across tasks."""
+    hottest entity's rows per (entity, bucket) shard ~
+    target_rows_per_bucket: buckets exist only to split oversized
+    single-entity timelines across tasks, so they are as wide as
+    that allows."""
 
-    direction: str = "backward"  # latest right row with ref_ts <= ts
     bucket_width: int | None = 1 << 14  # range-bucket width in ts ticks
     target_rows_per_bucket: int = 65536  # adaptive sizing target
     salt: int = 1  # left-side salt factor for hot entities (right replicated)
-    allow_exact_match: bool = True
 
 
 @dataclass(frozen=True)

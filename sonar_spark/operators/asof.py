@@ -17,12 +17,13 @@ Spark has no native merge_asof. Two physical strategies:
    include exact matches; at duplicate right timestamps the highest
    version wins (it sorts last and overwrites the running last()).
    A small right side (under spark.sql.autoBroadcastJoinThreshold, at
-   most _CEIL rows) skips that shuffle: its rows are collected once,
-   the same window runs on the driver as a table of validity
-   intervals [ts, next ts) bucketed by time range, and each left row
-   finds its interval in one broadcast hash join on (entity, time
-   bin) inside the left side's own stage — no exchange and no sort of
-   the left rows.  Same rows, names and types either way
+   most _CEIL (key, ts) intervals) leaves the left rows where they
+   are: one window over the right side alone, with the same order and
+   tie rules, turns its rows into validity intervals [ts, next ts)
+   bucketed by time range, and each left row finds its interval in
+   one broadcast hash join on (entity, time bin) inside the left
+   side's own stage — no exchange and no sort of the left rows.
+   Same rows, names and types either way
    (tests/test_asof.py::test_asof_paths_agree).
 
 2. strategy="bucketed": the SURVEY §4 design for extreme per-entity
@@ -46,15 +47,11 @@ quadratic brute-force oracle (sonar_spark.oracle.asof_brute_force).
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import AsofConfig
-from ..session import arrow_frame
 
 
 def asof_join(
@@ -86,35 +83,40 @@ def asof_join(
     raise ValueError(f"unknown asof strategy {strategy!r}")
 
 
-def _asof_union(left, right, key, left_ts, right_ts, version, payload):
-    out = _asof_broadcast(left, right, key, left_ts, right_ts, version, payload)
-    if out is not None:
-        return out
+def _tagged_union(left, right, key, left_ts, right_ts, carry):
+    """left and right as one frame for the union windows: every left
+    column, __ts (the row's timestamp as long), __is_left (1 on left
+    rows, 0 on right rows), __rts (the right timestamp, null on left
+    rows) and the carry columns, each side null-padded with the
+    other's columns."""
     lcols = left.columns
     ltypes = dict(left.dtypes)
-    carry = list(payload) + ([version] if version else [])
     rtypes = dict(right.select(*carry).dtypes)
-
     r = right.select(
         F.col(key),
         F.col(right_ts).cast("long").alias("__ts"),
         F.lit(0).alias("__is_left"),
-        F.col(right_ts).cast("long").alias("matched_ref_ts"),
+        F.col(right_ts).cast("long").alias("__rts"),
         *[F.col(c) for c in carry],
-        *[
-            F.lit(None).cast(ltypes[c]).alias(c)
-            for c in lcols
-            if c != key
-        ],
+        *[F.lit(None).cast(ltypes[c]).alias(c) for c in lcols if c != key],
     )
     ldf = left.select(
         *lcols,
         F.col(left_ts).cast("long").alias("__ts"),
         F.lit(1).alias("__is_left"),
-        F.lit(None).cast("long").alias("matched_ref_ts"),
+        F.lit(None).cast("long").alias("__rts"),
         *[F.lit(None).cast(rtypes[c]).alias(c) for c in carry],
     )
-    u = ldf.unionByName(r.select(*ldf.columns))
+    return ldf.unionByName(r.select(*ldf.columns))
+
+
+def _asof_union(left, right, key, left_ts, right_ts, version, payload):
+    out = _asof_broadcast(left, right, key, left_ts, right_ts, version, payload)
+    if out is not None:
+        return out
+    lcols = left.columns
+    carry = list(payload) + ([version] if version else [])
+    u = _tagged_union(left, right, key, left_ts, right_ts, carry)
     # order: ts asc; at equal ts right (0) before left (1) => inclusive
     # backward match; among right rows at equal ts, higher version last
     # => running last() keeps it.
@@ -129,23 +131,24 @@ def _asof_union(left, right, key, left_ts, right_ts, version, payload):
     filled = u.select(
         *lcols,
         "__is_left",
-        *[
-            F.last(c, ignorenulls=True).over(w).alias(c)
-            for c in ["matched_ref_ts", *carry]
-        ],
+        F.last("__rts", ignorenulls=True).over(w).alias("matched_ref_ts"),
+        *[F.last(c, ignorenulls=True).over(w).alias(c) for c in carry],
     )
     return filled.where(F.col("__is_left") == 1).drop("__is_left")
 
 
-# Largest reference table (rows) that _asof_union answers with the
-# driver-built interval table; above it the union plan runs.  Measured
-# on local[4] against a 1M-row left side (1,024 bigint keys, a double
-# payload; each figure the median of 3 warm runs, a range over 2-3
-# repeats): at 2^15 rows the broadcast path took 0.63-0.72 s and the
-# union plan 0.99-1.04 s; at 2^16 they overlapped (0.72-0.82 s vs
-# 0.67-1.02 s); at 2^17 the union plan won (0.76-1.16 s vs 0.82-1.26
-# s), and at 2^20 by 1.9 s vs 5.1 s.  The driver peaked at 167 MB RSS
-# at 2^15.
+# Most (key, ts) intervals that _asof_union answers with the broadcast
+# interval join; above it the union plan runs.  Measured on local[4]
+# against a 2^20-row left side (1,024 bigint keys, 8 parquet row
+# groups, a double payload) as construction + execution, medians of 5
+# warm runs per repeat, broadcast vs union plan: 2^15 reference rows
+# 0.32 + 0.59 s vs 0.13 + 1.02 s (repeat: 0.74 + 1.04 vs 0.38 + 1.52);
+# 2^16 0.39 + 0.80 vs 0.18 + 1.07, 0.56 + 0.96 vs 0.18 + 1.21 and
+# 0.50 + 0.89 vs 0.25 + 1.18 (level: slower in one repeat of three);
+# 2^17 0.46 + 1.01 vs 0.13 + 1.06 and 0.65 + 1.29 vs 0.26 + 1.29;
+# 2^18 0.50 + 1.55 vs 0.13 + 1.15.  More cores spread the union plan's
+# shuffle wider; the crossover on more than 4 cores (say 32) is not
+# measured.
 _CEIL = 1 << 15
 
 
@@ -153,19 +156,34 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
     """_asof_union's plan for a small reference side, or None when the
     union plan must run.
 
-    The reference rows come back to the driver in one bounded Arrow
-    collect and become a validity-interval table (_interval_table); each
+    The reference side alone becomes a table of validity intervals: one
+    window per key in the union plan's order (ts, version nulls first)
+    fills every carry column with its running last non-null value
+    (the union plan's last(c, ignorenulls=True)) and gives each row
+    the key's next timestamp (lead); the last row of each (key, ts)
+    group is that timestamp's reference row, valid on [ts, next ts),
+    the key's last one open-ended (__asof_next null).  Each interval is
+    exploded to the bins of one global width w over [lo, hi] that it
+    covers (bin (ts - lo) div w, everything at or above hi in the top
+    bin); a key's intervals tile [first ts, hi], so w = span * keys /
+    intervals keeps the table at most three rows per interval.  Each
     left row then finds its interval in one broadcast hash join on
-    (key, time bin) inside the left side's own stage — no exchange and
-    no sort of the left rows.  The ceiling is Spark's
-    autoBroadcastJoinThreshold (-1 forces the union plan): the
-    optimizer's size estimate of the reference projection, checked
-    before the collect, and the built table's Arrow size, after it.
-    Also kept on the union plan: streaming sides, keys that are not
-    string or integral (or differ in type between the sides, which the
-    union would widen), fractional versions (NaN ordering), more
-    than _CEIL reference rows, and null reference keys or timestamps
-    (the union plan's null-key partition and nulls-first order)."""
+    (key, time bin) inside the left side's own stage: no exchange and
+    no sort of the left rows.  Catalyst prunes the carry columns the
+    query does not read, down to the reference scan.
+
+    The reference side runs as one partition: it is at most the
+    broadcast threshold and goes to one place for the broadcast anyway,
+    so one task counts and windows it with no exchange.  One eager
+    one-row aggregate over its distinct (key, ts) pairs gives lo, hi,
+    the key and interval counts, and whether a key or ts is null.  The
+    union plan is kept when Spark's autoBroadcastJoinThreshold is -1 or
+    below the optimizer's size estimate of the reference projection,
+    for streaming sides, keys that are not string or integral (or
+    differ in type between the sides, which the union would widen),
+    more than _CEIL intervals, a timestamp span beyond a signed 64-bit
+    integer, and null reference keys or timestamps (the union plan's
+    null-key partition and nulls-first order decide those rows)."""
     spark = right.sparkSession
     thr = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     kt = right.schema[key].dataType
@@ -175,7 +193,6 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
         or right.isStreaming
         or not (isinstance(kt, T.IntegralType) or kt == T.StringType())
         or left.schema[key].dataType != kt
-        or (version and isinstance(right.schema[version].dataType, T.FractionalType))
     ):
         return None
     carry = list(payload) + ([version] if version else [])
@@ -187,20 +204,53 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
     est = ref._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if int(str(est)) > thr:
         return None
-    head = ref.limit(_CEIL + 1).toArrow()
-    if (
-        head.num_rows > _CEIL
-        or head.column("__asof_k").null_count
-        or head.column("__asof_ts").null_count
-    ):
+    ref = ref.coalesce(1)
+    k, ts = F.col("__asof_k"), F.col("__asof_ts")
+    s = (
+        ref.select(k, ts)
+        .distinct()
+        .selectExpr(
+            "min(__asof_ts) AS lo",
+            "max(__asof_ts) AS hi",
+            "count(DISTINCT __asof_k) AS keys",
+            "count(*) AS n",
+            "count_if(__asof_k IS NULL OR __asof_ts IS NULL) AS nulls",
+        )
+        .collect()[0]
+    )
+    if s["nulls"] or s["n"] > _CEIL:
         return None
-    built = _interval_table(head, carry, version)
-    if built is None or sum(a.nbytes for a in built[0].values()) > thr:
+    lo, hi = s["lo"] or 0, s["hi"] or 0
+    if hi - lo >= (1 << 63) - 1:
         return None
-    cols, lo, hi, w = built
-    types = {f.name: f.dataType for f in ref.schema.fields}
-    types["__asof_b"] = types["__asof_next"] = T.LongType()
-    intervals = F.broadcast(arrow_frame(spark, cols, types))
+    w = max(1, (hi - lo + 1) * s["keys"] // max(s["n"], 1))
+    top = F.lit((hi - lo) // w).cast("long")
+
+    def div(a, b):
+        return F.call_function("div", a, F.lit(b))
+
+    order = [ts.asc()] + ([F.col(version).asc_nulls_first()] if version else [])
+    wk = Window.partitionBy(k).orderBy(*order)
+    run = wk.rowsBetween(Window.unboundedPreceding, 0)
+    nxt = F.col("__asof_next")
+    intervals = (
+        ref.select(
+            k,
+            ts,
+            F.lead(ts).over(wk).alias("__asof_next"),
+            *[F.last(c, ignorenulls=True).over(run).alias(c) for c in carry],
+        )
+        .where(~nxt.eqNullSafe(ts))
+        .select(
+            "*",
+            F.explode(
+                F.sequence(
+                    div(ts - lo, w),
+                    F.coalesce(div(nxt - 1 - lo, w), top),
+                )
+            ).alias("__asof_b"),
+        )
+    )
     # integer bins on both sides (a double division loses precision
     # above 2^53); below lo nothing can match, at or above hi is the
     # top bin, and the subtraction only runs where it cannot overflow
@@ -208,84 +258,19 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
     lb = left.select(
         *left.columns,
         F.when(t < lo, -1)
-        .when(t >= hi, (hi - lo) // w)
-        .otherwise(F.call_function("div", t - F.lit(lo), F.lit(w)))
+        .when(t >= hi, top)
+        .otherwise(div(t - F.lit(lo), w))
         .alias("__asof_lb"),
     )
-    nxt = F.col("__asof_next")
     cond = (
-        (F.col(key) == F.col("__asof_k"))
+        (F.col(key) == k)
         & (F.col("__asof_lb") == F.col("__asof_b"))
-        & (t >= F.col("__asof_ts"))
+        & (t >= ts)
         & (nxt.isNull() | (t < nxt))
     )
-    return lb.join(intervals, cond, "left").select(
-        *left.columns, F.col("__asof_ts").alias("matched_ref_ts"), *carry
+    return lb.join(F.broadcast(intervals), cond, "left").select(
+        *left.columns, ts.alias("matched_ref_ts"), *carry
     )
-
-
-def _interval_table(head, carry, version):
-    """The validity intervals of the collected reference rows ``head``
-    (pyarrow: __asof_k, __asof_ts, carry columns; no null key or ts)
-    for _asof_broadcast, as (columns, lo, hi, w) — columns maps each
-    output column to one Arrow array — or None when the timestamp span
-    does not fit a signed 64-bit integer.
-
-    Rows sort by (key, ts, version nulls first) — the union plan's
-    window order.  Every carry column becomes its running last non-null
-    value within the key (the union plan's last(c, ignorenulls=True)),
-    and the last row of each (key, ts) group is that timestamp's
-    reference row, valid on [ts, next ts of the key) — the key's last
-    one is open-ended (__asof_next null).  Intervals are exploded to
-    the bins of one global width w over [lo, hi] that they cover
-    (column __asof_b); bin (ts - lo) div w, with everything at or above
-    hi in the top bin.  A key's intervals tile [first ts, hi], so w =
-    span * keys / intervals keeps the exploded table at most three rows
-    per interval."""
-    order = [("__asof_k", "ascending"), ("__asof_ts", "ascending")]
-    if version:
-        order.append((version, "ascending"))
-    head = head.take(pc.sort_indices(head, sort_keys=order, null_placement="at_start"))
-    n = head.num_rows
-    k = head.column("__asof_k")
-    ts = head.column("__asof_ts").to_numpy()
-    idx = np.arange(n)
-    new_key = np.ones(n, bool)
-    new_key[1:] = pc.not_equal(k[1:], k[:-1]).to_numpy()
-    kid = np.cumsum(new_key) - 1
-    key_start = np.maximum.accumulate(np.where(new_key, idx, 0))
-    filled = {}
-    for c in carry:
-        col = head.column(c)
-        last = np.maximum.accumulate(np.where(pc.is_valid(col).to_numpy(), idx, -1))
-        filled[c] = col.take(pa.array(last, mask=last < key_start))
-    end = np.ones(n, bool)
-    end[:-1] = new_key[1:] | (ts[1:] != ts[:-1])
-    kept = np.flatnonzero(end)
-    has_next = np.zeros(len(kept), bool)
-    has_next[:-1] = kid[kept[1:]] == kid[kept[:-1]]
-    nxt = np.zeros(len(kept), np.int64)
-    nxt[:-1] = ts[kept[1:]]
-    lo, hi = (int(ts.min()), int(ts.max())) if n else (0, 0)
-    if hi - lo >= (1 << 63) - 1:
-        return None
-    w = max(1, (hi - lo + 1) * (int(kid[-1]) + 1) // len(kept)) if n else 1
-    start = ts[kept]
-    b0 = (start - lo) // w
-    b1 = np.where(has_next, (nxt - 1 - lo) // w, (hi - lo) // w)
-    counts = b1 - b0 + 1
-    rows = np.repeat(kept, counts)
-    first = np.repeat(np.cumsum(counts) - counts, counts)
-    columns = {
-        "__asof_k": k.take(rows).combine_chunks(),
-        "__asof_b": pa.array(np.repeat(b0, counts) + (np.arange(len(rows)) - first)),
-        "__asof_ts": pa.array(ts[rows]),
-        "__asof_next": pa.array(
-            np.repeat(nxt, counts), mask=~np.repeat(has_next, counts)
-        ),
-        **{c: filled[c].take(rows).combine_chunks() for c in carry},
-    }
-    return columns, lo, hi, w
 
 
 def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
@@ -575,33 +560,11 @@ def asof_join_nearest_fused(
     pytest-certified against the composed implementation.
     """
     lcols = left.columns
-    ltypes = dict(left.dtypes)
     carry = list(payload) + ([version] if version else [])
-    rtypes = dict(right.select(*carry).dtypes)
+    u = _tagged_union(left, right, key, left_ts, right_ts, carry)
 
-    r = right.select(
-        F.col(key),
-        F.col(right_ts).cast("long").alias("__ts"),
-        F.lit(0).alias("__side"),
-        F.col(right_ts).cast("long").alias("__rts"),
-        *[F.col(c) for c in carry],
-        *[
-            F.lit(None).cast(ltypes[c]).alias(c)
-            for c in lcols
-            if c != key
-        ],
-    )
-    ldf = left.select(
-        *lcols,
-        F.col(left_ts).cast("long").alias("__ts"),
-        F.lit(1).alias("__side"),
-        F.lit(None).cast("long").alias("__rts"),
-        *[F.lit(None).cast(rtypes[c]).alias(c) for c in carry],
-    )
-    u = ldf.unionByName(r.select(*ldf.columns))
-
-    ob = [F.col("__ts").asc(), F.col("__side").asc()]
-    of = [F.col("__ts").desc(), F.col("__side").asc()]
+    ob = [F.col("__ts").asc(), F.col("__is_left").asc()]
+    of = [F.col("__ts").desc(), F.col("__is_left").asc()]
     if version:
         ob.append(F.col(version).asc_nulls_first())
         of.append(F.col(version).asc_nulls_first())
@@ -618,7 +581,7 @@ def asof_join_nearest_fused(
     fwd_ren = {c: f"{c}_fwd" for c in payload}
     filled = u.select(
         *lcols,
-        "__side",
+        "__is_left",
         "__ts",
         F.last("__rts", ignorenulls=True).over(wb).alias("matched_ref_ts"),
         *[
@@ -631,7 +594,7 @@ def asof_join_nearest_fused(
             for c in payload
         ],
     )
-    j = filled.where(F.col("__side") == 1)
+    j = filled.where(F.col("__is_left") == 1)
     bgap = F.col("__ts") - F.col("matched_ref_ts")
     fgap = F.col("matched_fwd_ts") - F.col("__ts")
     take_b = F.col("matched_ref_ts").isNotNull() & (

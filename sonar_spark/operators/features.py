@@ -3,7 +3,7 @@ statistics of the north rule.
 
 Two equivalent implementations, cross-checked in tests:
 
-- frame_features_arrow: mapInPandas over the *token table* directly —
+- frame_features_arrow: mapInArrow over the *token table* directly —
   one Arrow batch in, vectorized numpy (stride-tricks) per doc, frame
   rows out. Zero shuffle, never materializes window arrays. This is
   the 10^12-scale path.

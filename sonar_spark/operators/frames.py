@@ -10,7 +10,7 @@ parquet scan's partitioning carries through):
    transform): materializes the window arrays. Good when downstream
    wants the raw windows (e.g. token-equality checks, MinHash on
    windows).
-2. frame_features_arrow (in features.py) — mapInPandas straight from
+2. frame_features_arrow (in features.py) — mapInArrow straight from
    (doc_id, tokens) to per-frame feature rows without ever
    materializing window arrays — the 10^12-sequence path (SURVEY §7.4
    hard part 3).

@@ -413,8 +413,8 @@ class FeatureStore:
 
 def store_key(sf_dir: str, version: str) -> str:
     """Content key for a FeatureStore over a testdata dir: input path
-    + documents/events parquet mtimes + the builder-semantics version
-    tag (bumped whenever a front-end builder changes values)."""
+    + documents/events parquet mtimes + ``version``, the digest of the
+    engine source that builds the tables (__spark_entry__._source_digest)."""
     import hashlib
 
     parts = [os.path.realpath(sf_dir), version]

@@ -32,3 +32,34 @@ def no_broadcast(spark):
     spark.conf.set(key, "-1")
     yield
     spark.conf.set(key, old)
+
+
+@pytest.fixture(scope="session")
+def probe_side():
+    """df -> the physical node names on the streamed (probe) side of the
+    first BroadcastHashJoin in df's plan, or None when it has none: the
+    path the left rows take to an as-of broadcast join."""
+
+    def children(n):
+        cs = n.children()
+        return [cs.apply(i) for i in range(cs.size())]
+
+    def find(n):
+        if n.nodeName() == "AdaptiveSparkPlan":
+            return find(n.executedPlan())
+        if n.nodeName() == "BroadcastHashJoin":
+            return n
+        for c in children(n):
+            hit = find(c)
+            if hit is not None:
+                return hit
+        return None
+
+    def names(n):
+        return [n.nodeName(), *(m for c in children(n) for m in names(c))]
+
+    def run(df):
+        bhj = find(df._jdf.queryExecution().executedPlan())
+        return None if bhj is None else names(bhj.streamedPlan())
+
+    return run

@@ -9,15 +9,24 @@ that they return the same rows."""
 
 from __future__ import annotations
 
+import os
+
+import duckdb
 import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+import __spark_entry__ as E
 from sonar_spark import datagen, oracle
 from sonar_spark.config import AsofConfig
 from sonar_spark.operators.asof import asof_join
+from tools.check_oracle import TABLES, normalize, strict_equal
+
+ASOF_QUERIES = [
+    k for k in E.queries() if k.startswith("asof_") or k == "backfill_grid"
+]
 
 
 def _local(spark, rows, schema):
@@ -271,23 +280,29 @@ _INT_KEYS = [-(1 << 40), -3, 0, 1 << 50]
 _EDGE_TS = [-(1 << 40), -5, (1 << 62) - 3, 1 << 62]
 
 
-def _agree_tables(spark, rng, kt, n_left, n_right):
+def _agree_tables(spark, rng, kt, n_left, n_right, vt="int"):
     """Seeded left/right tables whose as-of exercises every tie rule:
     equal left/right ts, duplicate reference ts with distinct versions
     (at most one null version per (key, ts) — two would tie in the
     union plan's order), null versions and payloads, left rows before
     the first and after the last reference row, null left keys and
-    timestamps, and a left key with no reference rows."""
+    timestamps, and a left key with no reference rows.  With vt
+    "double" the versions are doubles and some are NaN (at most one
+    per (key, ts) too), which Spark sorts above every number."""
     keys = _STR_KEYS if kt == "string" else _INT_KEYS
     pool = [int(t) for t in rng.integers(-40, 40, 10)] + _EDGE_TS
-    rrows, null_version = [], set()
+    rrows, null_version, nan_version = [], set(), set()
     for i in range(n_right):
         k = keys[rng.integers(len(keys))]
         t = pool[rng.integers(len(pool))]
-        v = i
-        if rng.random() < 0.25 and (k, t) not in null_version:
+        v = i if vt == "int" else float(i)
+        u = rng.random()
+        if u < 0.25 and (k, t) not in null_version:
             null_version.add((k, t))
             v = None
+        elif vt == "double" and u < 0.5 and (k, t) not in nan_version:
+            nan_version.add((k, t))
+            v = float("nan")
         arr = None if rng.random() < 0.25 else [float(i), float(t % 7)]
         s = None if rng.random() < 0.25 else f"r{i}ü"
         rrows.append((k, t, v, arr, s))
@@ -302,7 +317,7 @@ def _agree_tables(spark, rng, kt, n_left, n_right):
     right = _local(
         spark,
         rrows,
-        f"entity {kt}, ref_ts long, ref_version int, "
+        f"entity {kt}, ref_ts long, ref_version {vt}, "
         "ref_arr array<double>, ref_s string",
     )
     return left, right
@@ -319,36 +334,58 @@ def _persisted(spark):
 
 
 @pytest.mark.parametrize("kt", ["string", "bigint"])
-def test_asof_paths_agree(spark, request, kt):
+def test_asof_paths_agree(spark, request, probe_side, kt):
     """The broadcast interval join returns the union plan's rows, column
     names and types on seeded tables with every tie rule and edge (see
-    _agree_tables), including empty left and empty right sides, and
-    leaves no persisted RDD behind."""
+    _agree_tables), with int and with NaN-bearing double versions,
+    including empty left and empty right sides, and leaves no persisted
+    RDD behind.  Rows compare by repr, which is NaN-safe.  The left rows
+    reach the broadcast join with no exchange and no sort."""
     rng = np.random.default_rng(17 if kt == "string" else 29)
     sizes = [(60, 40), (80, 12), (40, 80), (30, 1), (0, 20), (25, 0)]
-    tables = [_agree_tables(spark, rng, kt, nl, nr) for nl, nr in sizes]
+    cases = [(vt, nl, nr) for vt in ("int", "double") for nl, nr in sizes]
+    tables = [_agree_tables(spark, rng, kt, nl, nr, vt) for vt, nl, nr in cases]
     before = _persisted(spark)
 
     def run():
-        return [
-            _result(asof_join(left, right, payload=("ref_arr", "ref_s")))
-            for left, right in tables
-        ]
+        out = []
+        for left, right in tables:
+            j = asof_join(left, right, payload=("ref_arr", "ref_s"))
+            out.append((probe_side(j), *_result(j)))
+        return out
 
     fast = run()
     request.getfixturevalue("no_broadcast")
     slow = run()
-    for (nl, nr), (fplan, ftypes, frows), (splan, stypes, srows) in zip(
-        sizes, fast, slow
+    for case, (probe, _, ftypes, frows), (_, splan, stypes, srows) in zip(
+        cases, fast, slow
     ):
         # an empty interval table folds the join away
-        assert "Window" not in fplan, fplan
-        assert nr == 0 or "BroadcastHashJoin" in fplan, fplan
+        assert case[2] == 0 or probe is not None, case
+        sorted_left = [n for n in probe or () if n.startswith("Exchange") or n == "Sort"]
+        assert sorted_left == [], (case, probe)
         assert "BroadcastHashJoin" not in splan, splan
-        assert ftypes == stypes, (nl, nr)
-        assert frows == srows, (nl, nr)
-        assert len(frows) == nl
+        assert ftypes == stypes, case
+        assert list(map(repr, frows)) == list(map(repr, srows)), case
+        assert len(frows) == case[1]
     assert _persisted(spark) == before
+
+
+def test_asof_broadcast_prunes_unread_payload(spark, probe_side, tmp_path):
+    """A broadcast as-of whose query reads no payload scans the reference
+    side without the payload column and zips no arrays: the interval
+    table is a Catalyst plan, so column pruning reaches the scan."""
+    path = str(tmp_path / "catalog")
+    datagen.catalog_table(spark, n_entities=6, rows_per_entity=12).write.parquet(path)
+    q = asof_join(_left_df(spark), spark.read.parquet(path)).select(
+        "entity", "ts", "matched_ref_ts"
+    )
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert probe_side(q) is not None, plan
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    assert scans and not any("ref_features" in line for line in scans), plan
+    assert "inline(arrays_zip" not in plan, plan
+    assert q.count() == _left_df(spark).count()
 
 
 @pytest.mark.parametrize("null_col", ["entity", "ref_ts"])
@@ -394,3 +431,19 @@ def test_asof_bucketed_adaptive_sizing_is_one_job(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup("asof-adaptive-sizing")
     assert len(jobs) == 1, jobs
+
+
+@pytest.mark.parametrize("name", ASOF_QUERIES)
+def test_asof_query_matches_oracle(spark, sf_dir, name):
+    """Every as-of query of queries() (and backfill_grid, which shares the
+    union window) equals its DuckDB oracle at the test scale."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    a = normalize(E.queries()[name](spark, sf_dir).toPandas())
+    b = normalize(con.execute(E.oracle_sql()[name]).df())
+    assert list(a.columns) == list(b.columns)
+    assert len(a) == len(b)
+    assert strict_equal(a, b)[0], name

@@ -6,6 +6,8 @@ regressions correctness tests can't see."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,13 +37,15 @@ def _asof_union_inputs(spark):
     return left, datagen.catalog_table(spark, n_entities=4)
 
 
-def test_asof_union_broadcasts_small_catalog(spark):
+def test_asof_union_broadcasts_small_catalog(spark, probe_side):
     """With a reference side under autoBroadcastJoinThreshold the union
     as-of strategy is one broadcast hash join inside the left side's
-    stage: no shuffle of the left rows."""
-    plan = _plan(asof_join(*_asof_union_inputs(spark), strategy="union"))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
+    stage: the left rows reach it with no exchange and no sort (only
+    the reference rows are shuffled, by the interval window)."""
+    j = asof_join(*_asof_union_inputs(spark), strategy="union")
+    probe = probe_side(j)
+    assert probe is not None, _plan(j)
+    assert not any(n.startswith("Exchange") or n == "Sort" for n in probe), _plan(j)
 
 
 def test_asof_union_single_shuffle(spark, no_broadcast):
@@ -188,6 +192,30 @@ def test_feature_store_write_once_and_values(spark, tmp_path):
     k1 = store_key(str(tmp_path), "v1")
     assert k1 == store_key(str(tmp_path), "v1")
     assert k1 != store_key(str(tmp_path), "v2")
+
+
+def test_store_key_follows_the_source(tmp_path):
+    """The feature store's version is a digest of the engine source: the
+    same for two copies of one tree, new after a one-byte change to
+    plans/feature_tables.py."""
+    import shutil
+
+    import __spark_entry__ as E
+
+    repo = os.path.dirname(os.path.abspath(E.__file__))
+    trees = [tmp_path / name for name in ("a", "b", "c")]
+    for t in trees:
+        shutil.copytree(
+            os.path.join(repo, "sonar_spark"),
+            t / "sonar_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        shutil.copy(os.path.join(repo, "__spark_entry__.py"), t)
+    tables = trees[2] / "sonar_spark" / "plans" / "feature_tables.py"
+    tables.write_bytes(tables.read_bytes() + b" ")
+    a, b, c = (E._source_digest(str(t)) for t in trees)
+    assert a == b
+    assert a != c
 
 
 def test_feature_store_job_build_all_and_resume(spark, tmp_path, sf_dir):
