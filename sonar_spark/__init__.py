@@ -2,7 +2,7 @@
 fingerprint feature-engineering engine (see SURVEY.md / README.md).
 
 Public API (DataFrame -> DataFrame transforms, SURVEY §7.0):
-- operators.features.frame_features_arrow / frame_features_builtin
+- operators.features.frame_features_arrow
 - operators.asof.asof_join
 - operators.sessionize.sessionize_by_gap / detect_silence / detect_onsets
 - operators.fingerprint.minhash_fingerprints / lsh_candidate_pairs

@@ -23,8 +23,6 @@ class FrameConfig:
 
     window: int = 64
     hop: int = 16
-    # synthetic tokens-per-tick clock: frame_ts = frame_idx * hop (long ticks)
-    min_tokens: int = 1
     # per-window weighting (Window.Apply, windowing.go:167-186):
     # coefficient type applied to every frame before statistics
     window_type: str = "rectangular"
@@ -66,12 +64,11 @@ class AsofConfig:
 
     bucket_width=None (adaptive) sizes buckets from the data so the
     hottest entity's rows per (entity, bucket) shard ~
-    target_rows_per_bucket: buckets exist only to split oversized
-    single-entity timelines across tasks, so they are as wide as
-    that allows."""
+    asof._TARGET_ROWS_PER_BUCKET: buckets exist only to split
+    oversized single-entity timelines across tasks, so they are as
+    wide as that allows."""
 
     bucket_width: int | None = 1 << 14  # range-bucket width in ts ticks
-    target_rows_per_bucket: int = 65536  # adaptive sizing target
     salt: int = 1  # left-side salt factor for hot entities (right replicated)
 
 

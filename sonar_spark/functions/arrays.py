@@ -38,20 +38,6 @@ def euclidean(a: Column, b: Column) -> Column:
     )
 
 
-def pearson_correlation(a: Column, b: Column) -> Column:
-    """Pearson r over two equal-length arrays (distance.go:110-145);
-    0 when either side has zero variance."""
-    n = F.size(a).cast("double")
-    da = F.transform(a, lambda x: x.cast("double") - asum(a) / n)
-    db = F.transform(b, lambda x: x.cast("double") - asum(b) / n)
-    num = asum(F.zip_with(da, db, lambda x, y: x * y))
-    ssa = asum(F.transform(da, lambda x: x * x))
-    ssb = asum(F.transform(db, lambda x: x * x))
-    return F.when(
-        (ssa == 0) | (ssb == 0), F.lit(0.0)
-    ).otherwise(num / F.sqrt(ssa * ssb))
-
-
 def pearson_distance(a: Column, b: Column) -> Column:
     """1 - |r| (distance.go:73-108; note the reference takes the
     ABSOLUTE correlation); 1.0 on zero variance."""
@@ -176,4 +162,3 @@ def emd_1d(p: Column, q: Column) -> Column:
         lambda i: asum(F.slice(p, 1, i)) - asum(F.slice(q, 1, i)),
     )
     return asum(F.transform(cdf_diff, F.abs))
-

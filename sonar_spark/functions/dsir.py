@@ -130,61 +130,6 @@ def _gram_bucket_counts(
     )
 
 
-def _gram_stream_expr(
-    docs: DataFrame,
-    *,
-    id_col: str,
-    target_col: str,
-    words_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    """The original exploded expression gram stream (one row per
-    unigram/bigram instance, md5-bucketed) — retained as the
-    in-engine oracle for the kernel swap
-    (tests/test_dsir_kernel.py)."""
-    words = F.col(words_col)
-    z = docs.select(
-        id_col,
-        target_col,
-        words.alias("__wa"),
-        F.concat(
-            F.array(F.lit(None).cast("string")),
-            F.slice(words, 1, F.size(words) - 1),
-        ).alias("__pa"),
-    ).select(
-        id_col,
-        target_col,
-        F.explode(F.arrays_zip("__wa", "__pa")).alias("__z"),
-    )
-    return (
-        z.select(
-            id_col,
-            target_col,
-            F.col("__z.__wa").alias("__w"),
-            F.col("__z.__pa").alias("__prev"),
-        )
-        .select(
-            id_col,
-            target_col,
-            F.explode(
-                F.array(
-                    F.col("__w"),
-                    F.when(
-                        F.col("__prev").isNotNull(),
-                        F.concat(F.col("__prev"), F.lit(" "), F.col("__w")),
-                    ),
-                )
-            ).alias("__g"),
-        )
-        .where(F.col("__g").isNotNull())
-        .select(
-            id_col,
-            target_col,
-            _md5_bucket(F.col("__g"), n_buckets).alias("__b"),
-        )
-    )
-
-
 def dsir_scores(
     docs: DataFrame,
     *,

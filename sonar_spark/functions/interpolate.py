@@ -196,44 +196,3 @@ def downsample_signal(data: Column, factor: int) -> Column:
             F.sequence(F.lit(0), nl - 1), lambda i: _at(d, i * factor)
         )
     )
-
-
-def bilinear_interpolate(
-    data: Column, x: Column, y: Column
-) -> Column:
-    """2-D bilinear interpolation over an array<array<double>> grid
-    (interpolation.go:291-340): coordinates clamped to the grid,
-    truncating integer corners, the exact r1/r2 lerp composition.
-    data[y][x] row-major as the Go indexes it."""
-    d = F.transform(
-        data, lambda row: F.transform(row, lambda v: v.cast("double"))
-    )
-    rows = F.size(d)
-    cols = F.size(F.element_at(d, 1))
-    xc = F.least(
-        F.greatest(x.cast("double"), F.lit(0.0)),
-        (cols - 1).cast("double"),
-    )
-    yc = F.least(
-        F.greatest(y.cast("double"), F.lit(0.0)),
-        (rows - 1).cast("double"),
-    )
-    x1 = F.floor(xc)
-    y1 = F.floor(yc)
-    x2 = F.least(x1 + 1, (cols - 1).cast("bigint"))
-    y2 = F.least(y1 + 1, (rows - 1).cast("bigint"))
-    fx = xc - x1
-    fy = yc - y1
-
-    def at(r, c):
-        return F.element_at(
-            F.element_at(d, (r + 1).cast("int")), (c + 1).cast("int")
-        )
-
-    q11, q12 = at(y1, x1), at(y2, x1)
-    q21, q22 = at(y1, x2), at(y2, x2)
-    r1 = q11 + fx * (q21 - q11)
-    r2 = q12 + fx * (q22 - q12)
-    return F.when(
-        (rows == 0) | (cols == 0), F.lit(0.0)
-    ).otherwise(r1 + fy * (r2 - r1))

@@ -257,54 +257,6 @@ def repetition_profile(
     )
 
 
-def repetition_profile_expr(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-    top_word_max: float = 0.2,
-    dup_3gram_max: float = 0.3,
-) -> DataFrame:
-    """The original Catalyst expression form of repetition_profile —
-    retained as the in-engine oracle the kernel is certified
-    bit-equal against (tests/test_text_kernels.py)."""
-    words = F.col(words_col)
-
-    def dup_frac(k: int) -> Column:
-        g = ngrams_ws(words, k)
-        return F.round(
-            1.0 - F.size(F.array_distinct(g)) / F.size(g), 6
-        )
-
-    base = docs.select(
-        id_col,
-        F.size(words).cast("long").alias("n_tokens"),
-        dup_frac(3).alias("dup_3gram_frac"),
-        dup_frac(5).alias("dup_5gram_frac"),
-        words.alias("__w"),
-    )
-    top = (
-        base.select(id_col, F.explode("__w").alias("__t"))
-        .groupBy(id_col, "__t")
-        .agg(F.count("*").alias("__c"))
-        .groupBy(id_col)
-        .agg(F.max("__c").alias("__top"))
-    )
-    out = base.drop("__w").join(top, id_col)
-    twf = F.round(F.col("__top") / F.col("n_tokens"), 6)
-    return out.select(
-        id_col,
-        "n_tokens",
-        twf.alias("top_word_frac"),
-        "dup_3gram_frac",
-        "dup_5gram_frac",
-        (
-            (twf > top_word_max)
-            | (F.col("dup_3gram_frac") > dup_3gram_max)
-        ).alias("flagged"),
-    )
-
-
 # --- PII detection / redaction -------------------------------------
 
 PII_EMAIL = r"[A-Za-z0-9._]+@[A-Za-z0-9.]+"

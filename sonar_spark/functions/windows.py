@@ -1,10 +1,9 @@
-"""Window coefficient functions, properties, and normalization —
-reproducing the reference's WindowGenerator exactly
-(fingerprint/analyzers/windowing.go:205-437): Hann, Hamming,
-Blackman, Blackman-Harris, Kaiser (+ series Bessel I0), Tukey,
-Rectangular, Bartlett, Welch; energy / power gain / noise gain /
-ENBW / scallop loss properties (:395-425) and unity-power-gain
-normalization (:427-437).
+"""Window coefficient functions — reproducing the reference's
+WindowGenerator exactly (fingerprint/analyzers/windowing.go:205-372):
+Hann, Hamming, Blackman, Blackman-Harris, Kaiser (+ series Bessel
+I0), Tukey, Rectangular, Bartlett, Welch.  The property bundle
+(energy / power gain / noise gain / ENBW / scallop loss, :395-425) is
+computed in Catalyst by q_window_props.
 
 Two implementations:
 - numpy (window_coefficients) — feeds the Arrow kernel's per-window
@@ -95,35 +94,6 @@ def window_coefficients(
         a = (n - (size - 1) / 2.0) / ((size - 1) / 2.0)
         return 1.0 - a * a
     raise ValueError(f"unsupported window type: {wtype}")
-
-
-def window_properties(coeffs: np.ndarray) -> dict[str, float]:
-    """Energy, power/noise gain, ENBW, scallop loss, coherent flag
-    (windowing.go:395-425)."""
-    c = np.asarray(coeffs, dtype=np.float64)
-    N = float(len(c))
-    energy = float((c * c).sum())
-    coherent_sum = float(c.sum())
-    power_gain = energy / N
-    noise_gain = coherent_sum / N
-    enbw = N * energy / (coherent_sum * coherent_sum)
-    scallop = -20.0 * np.log10(abs(noise_gain))
-    return {
-        "energy": energy,
-        "power_gain": power_gain,
-        "noise_gain": noise_gain,
-        "enbw": enbw,
-        "scallop_loss": float(scallop),
-        "coherent": noise_gain > 0.5,
-    }
-
-
-def normalize_unity_power(coeffs: np.ndarray) -> np.ndarray:
-    """Scale for unity power gain (windowing.go:427-437)."""
-    props = window_properties(coeffs)
-    return np.asarray(coeffs, dtype=np.float64) * (
-        1.0 / np.sqrt(props["power_gain"])
-    )
 
 
 # ------------------------------------------------------- Catalyst exprs

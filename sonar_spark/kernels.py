@@ -1,8 +1,9 @@
 """Vectorized numpy kernels shared by the pandas/Arrow UDF operators.
 
 These are the hot-path implementations (stride-tricks, batched FFT).
-The independent, obviously-correct loop implementations used as golden
-oracles live in sonar_spark.oracle — deliberately a separate code path.
+The independent, obviously-correct loop implementations the tests
+compare them against live in tests/golden.py — deliberately a
+separate code path.
 
 Formula provenance (reference, cited file:line):
 - frame count (n - W) // H + 1 .... fingerprint/analyzers/spectral.go:409
@@ -26,14 +27,6 @@ import numpy as np
 
 def n_frames(n: int, window: int, hop: int) -> int:
     return (n - window) // hop + 1 if n >= window else 0
-
-
-def frame_view(x: np.ndarray, window: int, hop: int) -> np.ndarray:
-    """(num_frames, window) strided view — no copy."""
-    nf = n_frames(len(x), window, hop)
-    if nf <= 0:
-        return np.empty((0, window), dtype=x.dtype)
-    return np.lib.stride_tricks.sliding_window_view(x, window)[::hop][:nf]
 
 
 _SPECTRAL_KEYS = (
@@ -417,48 +410,6 @@ def frame_features_flat(
         fstarts = np.concatenate(([0], np.cumsum(nz)[:-1]))
         out["flux"][fstarts] = 0.0
     return out, doc_nf
-
-
-def frame_features_batch(
-    tokens_list,
-    window: int,
-    hop: int,
-    entropy_bins: int = 16,
-) -> tuple[dict[str, np.ndarray], np.ndarray]:
-    """All per-frame features for MANY docs in one vectorized pass.
-
-    Stacks every doc's frames into a single (total_frames, window)
-    matrix and computes each feature with one numpy op over the whole
-    Arrow batch — per-doc Python overhead amortizes away (the 10^12
-    scale discipline: one kernel invocation per Arrow batch).
-
-    Returns (features dict of 1-D arrays over all frames in doc
-    order, n_frames-per-doc int array). Flux is computed against the
-    previous frame WITHIN each doc (0 at every doc's first frame).
-
-    Thin wrapper over frame_features_flat (concatenates the token
-    arrays once); prefer the flat form when the caller already holds
-    contiguous values + offsets (Arrow ListArray).
-    """
-    doc_lens = np.array([len(t) for t in tokens_list], dtype=np.int64)
-    if len(tokens_list):
-        flat = np.concatenate(
-            [np.asarray(t, dtype=np.float64) for t in tokens_list]
-        )
-    else:
-        flat = np.empty(0)
-    return frame_features_flat(flat, doc_lens, window, hop, entropy_bins)
-
-
-def frame_features(
-    tokens: np.ndarray,
-    window: int,
-    hop: int,
-    entropy_bins: int = 16,
-) -> dict[str, np.ndarray]:
-    """Single-doc convenience wrapper over frame_features_batch."""
-    feats, _ = frame_features_batch([tokens], window, hop, entropy_bins)
-    return feats
 
 
 def percentile_r6(x: np.ndarray, p: float) -> float:

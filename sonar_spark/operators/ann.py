@@ -242,23 +242,20 @@ def ivf_search(
     vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 4,
-    probe_df: DataFrame | None = None,
 ) -> DataFrame:
     """Probe the n_probe nearest centroids per query, brute-force
     within probed buckets, top-k by cosine. With n_probe ==
     n_centroids this is exhaustive and must equal knn_bruteforce.
 
     Output: query_id, rank, neighbor_id, cosine_sim."""
-    if probe_df is None:
-        probe_df = ivf_probes(
-            queries, centroids, id_col=id_col, vec_col=vec_col,
-            n_probe=n_probe,
-        )
+    probes = ivf_probes(
+        queries, centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
+    )
     qv = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
     cand = (
-        probe_df.join(
+        probes.join(
             index.select(
                 "centroid_id",
                 F.col(id_col).alias("neighbor_id"),
@@ -278,46 +275,6 @@ def ivf_search(
         "query_id",
         [F.col("cosine_sim").desc(), F.col("neighbor_id").asc()],
         k,
-    )
-
-
-def ivf_write(index: DataFrame, path: str) -> None:
-    """Persist the IVF index bucketed by centroid: one parquet
-    partition directory per centroid_id, so a probing search scans
-    only the probed buckets (partition pruning)."""
-    index.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-
-
-def ivf_search_pruned(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    centroids: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_probe: int = 4,
-) -> DataFrame:
-    """IVF search against the ON-DISK index with partition pruning:
-    the union of probed centroid ids becomes an isin() partition
-    filter, so only those bucket directories are scanned (the 10^12
-    design: a query batch touching p of c buckets reads p/c of the
-    index). The tiny driver-side collect of probed ids is adaptive
-    planning, same as the as-of bucket sizing."""
-    probe_df = ivf_probes(
-        queries, centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
-    )
-    probed = sorted(
-        r["centroid_id"]
-        for r in probe_df.select("centroid_id").distinct().collect()
-    )
-    index = spark.read.parquet(index_path).where(
-        F.col("centroid_id").isin([int(c) for c in probed])
-    )
-    return ivf_search(
-        index, queries, centroids, id_col=id_col, vec_col=vec_col, k=k,
-        n_probe=n_probe, probe_df=probe_df,
     )
 
 

@@ -29,7 +29,7 @@ Spark has no native merge_asof. Two physical strategies:
 2. strategy="bucketed": the SURVEY §4 design for extreme per-entity
    skew (one entity's timeline too big for one task): range-bucket
    both sides on floor(ts / bucket_width) (adaptive width sizes the
-   hottest entity's timeline to ~target_rows_per_bucket per shard),
+   hottest entity's timeline to ~_TARGET_ROWS_PER_BUCKET per shard),
    make each right (entity, bucket)'s latest row visible to every
    later left bucket (boundary-spill carried via a bucket-granularity
    running window), optionally salt-split still-hot shards (left rows
@@ -42,7 +42,7 @@ Spark has no native merge_asof. Two physical strategies:
 
 Both return all left columns plus matched_ref_ts (null = no match)
 and the matched right payload columns. Property-tested against the
-quadratic brute-force oracle (sonar_spark.oracle.asof_brute_force).
+quadratic brute-force golden (tests/golden.py asof_brute_force).
 """
 
 from __future__ import annotations
@@ -273,6 +273,11 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
     )
 
 
+# adaptive bucketing (bucket_width=None): rows of the hottest entity
+# per (entity, bucket) shard
+_TARGET_ROWS_PER_BUCKET = 65536
+
+
 def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
     if cfg.bucket_width is None:
         # adaptive: widest buckets that keep the BIGGEST single-entity
@@ -291,7 +296,7 @@ def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
             span = 1
         else:
             span = max(int(stats["hi"] - stats["lo"]) + 1, 1)
-        n_buckets = max(1, int(hot // cfg.target_rows_per_bucket) + 1)
+        n_buckets = max(1, int(hot // _TARGET_ROWS_PER_BUCKET) + 1)
         bucket_w = max(1, span // n_buckets + 1)
     else:
         bucket_w = int(cfg.bucket_width)
@@ -437,107 +442,6 @@ def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
     )
 
 
-def asof_join_directional(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str = "entity",
-    left_ts: str = "ts",
-    right_ts: str = "ref_ts",
-    version: str | None = "ref_version",
-    payload: tuple[str, ...] = ("ref_features",),
-    direction: str = "backward",
-) -> DataFrame:
-    """As-of join with a direction: "backward" (latest right at or
-    before, the default asof_join), or "forward" (earliest right at
-    or after — the label-window / next-touchpoint lookup).
-
-    Forward is the backward join on NEGATED timestamps — one sign
-    flip reuses the whole tested union strategy (same plans, same
-    inclusive-at-equal-ts and highest-version-wins tie rules) — so
-    the forward output column is matched_fwd_ts.
-    """
-    if direction == "backward":
-        return _asof_union(left, right, key, left_ts, right_ts, version, payload)
-    if direction != "forward":
-        raise ValueError(f"unknown direction {direction!r}")
-    nl = left.withColumn("__nts", -F.col(left_ts).cast("long"))
-    nr = right.withColumn("__nts_r", -F.col(right_ts).cast("long")).drop(
-        right_ts
-    )
-    res = _asof_union(
-        nl, nr, key, "__nts", "__nts_r", version, payload
-    )
-    return res.select(
-        *[c for c in left.columns],
-        (-F.col("matched_ref_ts")).cast("long").alias("matched_fwd_ts"),
-        *payload,
-        *([version] if version else []),
-    )
-
-
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str = "entity",
-    left_ts: str = "ts",
-    right_ts: str = "ref_ts",
-    left_id: str = "event_id",
-    version: str | None = "ref_version",
-    payload: tuple[str, ...] = ("ref_features",),
-) -> DataFrame:
-    """Nearest-as-of: both directional passes joined back on the
-    unique left id, then a per-row pick by absolute gap; ties
-    (equal gap both sides) resolve BACKWARD — the zero-temporal-
-    leakage-preferring rule, documented rather than inherited.
-
-    Output: all left columns, both matched timestamps and payloads,
-    plus matched_near_ts / near_src ('b'/'f', null when no match on
-    either side) / near_gap_s and the picked payload columns
-    (<payload>_near).
-    """
-    b = asof_join_directional(
-        left, right, key=key, left_ts=left_ts, right_ts=right_ts,
-        version=version, payload=payload, direction="backward",
-    )
-    fwd_ren = {c: f"{c}_fwd" for c in payload}
-    f = asof_join_directional(
-        left, right, key=key, left_ts=left_ts, right_ts=right_ts,
-        version=version, payload=payload, direction="forward",
-    ).select(
-        left_id,
-        "matched_fwd_ts",
-        *[F.col(c).alias(fwd_ren[c]) for c in payload],
-    )
-    j = b.join(f, left_id)
-    bgap = F.col(left_ts).cast("long") - F.col("matched_ref_ts")
-    fgap = F.col("matched_fwd_ts") - F.col(left_ts).cast("long")
-    take_b = F.col("matched_ref_ts").isNotNull() & (
-        F.col("matched_fwd_ts").isNull() | (bgap <= fgap)
-    )
-    take_f = F.col("matched_fwd_ts").isNotNull() & ~take_b
-    return j.select(
-        *left.columns,
-        "matched_ref_ts",
-        *payload,
-        "matched_fwd_ts",
-        *[fwd_ren[c] for c in payload],
-        F.when(take_b, F.col("matched_ref_ts"))
-        .when(take_f, F.col("matched_fwd_ts"))
-        .cast("long")
-        .alias("matched_near_ts"),
-        F.when(take_b, F.lit("b")).when(take_f, F.lit("f")).alias("near_src"),
-        F.when(take_b, bgap).when(take_f, fgap).cast("long").alias("near_gap_s"),
-        *[
-            F.when(take_b, F.col(c)).when(take_f, F.col(fwd_ren[c])).alias(
-                f"{c}_near"
-            )
-            for c in payload
-        ],
-    )
-
-
 def asof_join_nearest_fused(
     left: DataFrame,
     right: DataFrame,
@@ -548,16 +452,24 @@ def asof_join_nearest_fused(
     version: str | None = "ref_version",
     payload: tuple[str, ...] = ("ref_features",),
 ) -> DataFrame:
-    """asof_join_nearest in ONE union pass — the plan you'd want:
-    both directions come from two window specs over the SAME
-    (key)-partitioned exchange (ascending (ts, side, version) for
-    the backward running-last, descending-ts for the forward one —
-    the backfill_grid two-pass trick), so the whole nearest join is
-    2 scans + 1 data exchange instead of the composed version's 4
-    scans + 2 passes + an id re-join.  Tie rules identical to
-    asof_join_nearest (equal-ts inclusive both sides, highest
-    version wins, nearest ties -> backward); the equivalence is
-    pytest-certified against the composed implementation.
+    """Nearest-as-of in ONE union pass: each left row gets both its
+    backward match (latest right at or before) and its forward match
+    (earliest right at or after), then the nearer of the two by
+    absolute gap; ties (equal gap both sides) resolve BACKWARD — the
+    zero-temporal-leakage-preferring rule.  Both directions come from
+    two window specs over the SAME (key)-partitioned exchange
+    (ascending (ts, side, version) for the backward running-last,
+    descending-ts for the forward one — the backfill_grid two-pass
+    trick), so the whole join is 2 scans + 1 data exchange.
+    Equal-ts matches count on both sides and the highest version
+    wins; tests/test_backfill_sampling.py certifies the output equal
+    to a composed reference (two directional union joins re-joined
+    on the left id).
+
+    Output: all left columns, matched_ref_ts + payload (backward),
+    matched_fwd_ts + <payload>_fwd (forward), matched_near_ts,
+    near_src ('b'/'f', null when neither side matches), near_gap_s
+    and <payload>_near.
     """
     lcols = left.columns
     carry = list(payload) + ([version] if version else [])

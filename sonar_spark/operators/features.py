@@ -1,32 +1,24 @@
 """Per-frame windowed feature extraction — the backfilled per-window
 statistics of the north rule.
 
-Two equivalent implementations, cross-checked in tests:
-
-- frame_features_arrow: mapInArrow over the *token table* directly —
-  one Arrow batch in, vectorized numpy (stride-tricks) per doc, frame
-  rows out. Zero shuffle, never materializes window arrays. This is
-  the 10^12-scale path.
-- frame_features_builtin: pure Catalyst expressions (higher-order
-  array functions + one window function for flux) over expand_frames
-  output. Whole-stage-codegen friendly; slower per value but useful as
-  an independent in-Spark implementation and for ad-hoc SQL.
+frame_features_arrow is the one implementation: mapInArrow over the
+*token table* directly — one Arrow batch in, vectorized numpy
+(stride-tricks) per doc, frame rows out. Zero shuffle, never
+materializes window arrays. This is the 10^12-scale path.
+tests/test_features.py checks it against the loop golden
+(tests/golden.py) and against a Catalyst-expression twin kept there.
 
 Feature formulas cited in sonar_spark.kernels docstring.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import FeatureConfig, FrameConfig
 from .. import kernels
-from .frames import expand_frames
 
 SPECTRAL_COLS = [
     "centroid", "rolloff", "bandwidth", "flatness", "flatness_db",
@@ -150,116 +142,6 @@ def frame_features_arrow(
         .mapInArrow(gen, schema=_arrow_schema(cols))
         .select(*out_cols)
     )
-
-
-def _pct_expr(sorted_col, window: int, p: float):
-    """R-7 linear-interp percentile of a sorted fixed-length array as a
-    pure expression (window length is a plan-time constant)."""
-    h = (window - 1) * p
-    k = int(np.floor(h))
-    frac = h - k
-    lo = F.element_at(sorted_col, k + 1).cast("double")
-    if frac == 0.0:
-        return lo
-    hi = F.element_at(sorted_col, k + 2).cast("double")
-    return lo + F.lit(frac) * (hi - lo)
-
-
-def frame_features_builtin(
-    df: DataFrame,
-    frame_cfg: FrameConfig = FrameConfig(),
-    feat_cfg: FeatureConfig = FeatureConfig(),
-) -> DataFrame:
-    """Catalyst-expression implementation over expand_frames output.
-
-    Computes rms/mean/var/std/skew/kurt/min/max/crest/zcr/p25/p50/p75
-    with higher-order functions (JVM-side) and flux with one lag()
-    window function (the only shuffle)."""
-    W = frame_cfg.window
-    frames = expand_frames(df, frame_cfg)
-    dbl = F.transform(F.col("window"), lambda x: x.cast("double"))
-    frames = frames.withColumn("w", dbl)
-
-    def asum(col):
-        return F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x)
-
-    frames = frames.withColumn("mean", asum(F.col("w")) / W)
-    c = F.transform(F.col("w"), lambda x: x - F.col("mean"))
-    frames = frames.withColumn("cen", c)
-    m2 = asum(F.transform(F.col("cen"), lambda x: x * x)) / W
-    m3 = asum(F.transform(F.col("cen"), lambda x: x * x * x)) / W
-    m4 = asum(F.transform(F.col("cen"), lambda x: x * x * x * x)) / W
-    frames = (
-        frames.withColumn("var", m2)
-        .withColumn("std", F.sqrt(F.col("var")))
-        .withColumn(
-            "skew",
-            F.when(F.col("var") > 0, m3 / F.pow(F.col("var"), 1.5)).otherwise(0.0),
-        )
-        .withColumn(
-            "kurt",
-            F.when(F.col("var") > 0, m4 / F.pow(F.col("var"), 2.0) - 3.0).otherwise(
-                0.0
-            ),
-        )
-        .withColumn(
-            "rms_energy",
-            F.sqrt(asum(F.transform(F.col("w"), lambda x: x * x)) / W),
-        )
-        .withColumn("min", F.array_min("w"))
-        .withColumn("max", F.array_max("w"))
-        .withColumn(
-            "crest",
-            F.when(
-                F.col("rms_energy") > 0,
-                F.array_max(F.transform(F.col("w"), F.abs)) / F.col("rms_energy"),
-            ).otherwise(0.0),
-        )
-    )
-    # ZCR: sign changes of centered values (oracle semantics:
-    # (a>0)!=(b>0) or (a<0)!=(b<0))
-    sgn_a = F.slice(F.col("cen"), 1, W - 1)
-    sgn_b = F.slice(F.col("cen"), 2, W - 1)
-    changes = F.zip_with(
-        sgn_a,
-        sgn_b,
-        lambda a, b: (
-            ((a > 0) != (b > 0)) | ((a < 0) != (b < 0))
-        ).cast("double"),
-    )
-    frames = frames.withColumn("zcr", asum(changes) / (W - 1))
-    srt = F.array_sort("w")
-    frames = (
-        frames.withColumn("p25", _pct_expr(srt, W, 0.25))
-        .withColumn("p50", _pct_expr(srt, W, 0.50))
-        .withColumn("p75", _pct_expr(srt, W, 0.75))
-    )
-    # flux vs previous frame window (one shuffle: partitionBy doc_id)
-    win = Window.partitionBy("doc_id").orderBy("frame_idx")
-    prev = F.lag("w").over(win)
-    flux = F.when(prev.isNull(), F.lit(0.0)).otherwise(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col("w"), prev, lambda a, b: F.pow(F.greatest(a - b, F.lit(0.0)), 2)
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    )
-    frames = frames.withColumn("flux", flux)
-    # the builtin cross-check covers the time-domain family; the
-    # histogram-spectrum features live in the Arrow kernel (their
-    # independent implementations are oracle.spectral_golden and the
-    # frame_spectral DuckDB oracle)
-    keep = ["doc_id", "source", "n_tok", "frame_idx", "frame_ts"] + [
-        col for col in FEATURE_COLS
-        if col != "entropy"
-        and col not in SPECTRAL_COLS
-        and col not in MFCC_COLS
-    ]
-    return frames.select(*keep)
 
 
 def chroma_doc_stats(

@@ -179,20 +179,6 @@ def lsh_candidate_pairs(
     )
 
 
-def near_duplicates(
-    tokens_df: DataFrame,
-    cfg: MinHashConfig = MinHashConfig(),
-    threshold: float = 0.7,
-) -> DataFrame:
-    """End-to-end MinHash near-dup pass: signatures -> LSH candidates
-    -> threshold on estimated Jaccard. Output (doc_a, doc_b,
-    est_jaccard)."""
-    sigs = minhash_fingerprints(tokens_df, cfg)
-    return lsh_candidate_pairs(sigs, cfg).where(
-        F.col("est_jaccard") >= threshold
-    )
-
-
 def simhash_near_duplicates(
     sig_df: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
@@ -860,74 +846,6 @@ def substring_spans(
     )
 
 
-def substring_spans_expr(
-    docs: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
-    """The original string-keyed Catalyst form of substring_spans —
-    retained as the in-engine oracle for the gram-hash kernel swap
-    (tests/test_fingerprint_gram_kernels.py)."""
-    words = F.col(words_col)
-    base = docs.select(
-        id_col, F.size(words).cast("long").alias("n_tokens"), words.alias("__ws")
-    )
-    grams = base.where(F.col("n_tokens") >= k).select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), (F.col("n_tokens") - (k - 1)).cast("int")),
-                lambda i: F.struct(
-                    i.alias("pos"), F.concat_ws(" ", F.slice("__ws", i, k)).alias("s")
-                ),
-            )
-        ).alias("g"),
-    ).select(id_col, F.col("g.pos").alias("pos"), F.col("g.s").alias("s"))
-    dup = grams.groupBy("s").agg(F.count("*").alias("__tot")).where(
-        F.col("__tot") >= 2
-    )
-    hits = grams.join(dup.select("s"), "s")
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
-    flagged = hits.select(
-        id_col,
-        "pos",
-        F.when(
-            F.lag("pos").over(w_doc).isNull()
-            | (F.col("pos") > F.lag("pos").over(w_doc) + k),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("__new"),
-    )
-    spans = flagged.select(
-        id_col,
-        "pos",
-        F.sum("__new").over(w_doc).alias("__span"),
-    ).groupBy(id_col, "__span").agg(
-        (F.max("pos") + (k - 1) - F.min("pos") + 1).cast("long").alias("__len")
-    )
-    per_doc = spans.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("n_dup_spans"),
-        F.sum("__len").cast("long").alias("dup_tokens"),
-        F.max("__len").cast("long").alias("longest_dup_span"),
-    )
-    out = base.drop("__ws").join(per_doc, id_col, "left")
-    return out.select(
-        id_col,
-        "n_tokens",
-        F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
-        F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
-        F.coalesce("longest_dup_span", F.lit(0)).cast("long").alias(
-            "longest_dup_span"
-        ),
-        F.round(
-            F.coalesce("dup_tokens", F.lit(0)) / F.col("n_tokens"), 6
-        ).alias("dup_token_frac"),
-    )
-
-
 def ngram_novelty(
     docs: DataFrame,
     *,
@@ -974,52 +892,6 @@ def ngram_novelty(
         )
     )
     out = base.join(per_doc, id_col, "left")
-    return out.select(
-        id_col,
-        "n_tokens",
-        F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
-        F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),
-        F.coalesce(
-            F.round(F.col("n_novel") / F.col("n_grams"), 6), F.lit(1.0)
-        ).alias("novelty_frac"),
-    )
-
-
-def ngram_novelty_expr(
-    docs: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
-    """The original string-keyed Catalyst form of ngram_novelty —
-    retained as the in-engine oracle for the gram-hash kernel swap
-    (tests/test_fingerprint_gram_kernels.py)."""
-    words = F.col(words_col)
-    base = docs.select(
-        id_col, F.size(words).cast("long").alias("n_tokens"), words.alias("__ws")
-    )
-    grams = base.where(F.col("n_tokens") >= k).select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), (F.col("n_tokens") - (k - 1)).cast("int")),
-                lambda i: F.concat_ws(" ", F.slice("__ws", i, k)),
-            )
-        ).alias("s"),
-    )
-    first = grams.groupBy("s").agg(F.min(id_col).alias("__first"))
-    per_doc = (
-        grams.join(first, "s")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").cast("long").alias("n_grams"),
-            F.sum(
-                (F.col("__first") == F.col(id_col)).cast("long")
-            ).cast("long").alias("n_novel"),
-        )
-    )
-    out = base.drop("__ws").join(per_doc, id_col, "left")
     return out.select(
         id_col,
         "n_tokens",

@@ -8,8 +8,7 @@ parquet scan's partitioning carries through):
 
 1. expand_frames — pure built-in expressions (sequence + slice inside
    transform): materializes the window arrays. Good when downstream
-   wants the raw windows (e.g. token-equality checks, MinHash on
-   windows).
+   wants the raw windows (e.g. MinHash on windows).
 2. frame_features_arrow (in features.py) — mapInArrow straight from
    (doc_id, tokens) to per-frame feature rows without ever
    materializing window arrays — the 10^12-sequence path (SURVEY §7.4
@@ -59,13 +58,3 @@ def expand_frames(df: DataFrame, cfg: FrameConfig = FrameConfig()) -> DataFrame:
         )
         .select("doc_id", "source", "n_tok", "f.frame_idx", "f.frame_ts", "f.window")
     )
-
-
-def token_equality_check(df_in: DataFrame, df_out: DataFrame) -> int:
-    """Per-row invariant vs the source (input_hint): output tokens ==
-    input tokens, byte-for-byte. Returns number of violating rows
-    (0 = pass). Anti-join keeps it distributed."""
-    bad = df_in.select("doc_id", "tokens").join(
-        df_out.select("doc_id", "tokens"), ["doc_id", "tokens"], "left_anti"
-    )
-    return bad.count()

@@ -11,9 +11,8 @@ environment — it is STUBBED two ways (explicitly marked):
   a production image (PIL / libsndfile / ffmpeg, the reference's
   transcode/decoder.go:146-174 role) would provide.
 
-Decoded audio streams feed the SAME frame/hop feature kernel as
-token sequences (kernels.frame_features_flat) — one engine, two
-modalities.
+Decoded audio streams are framed by the SAME frame/hop arithmetic as
+token sequences (kernels.n_frames) — one engine, two modalities.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import kernels
 from ..config import FrameConfig
@@ -143,53 +141,3 @@ def media_features(
     return media.select(
         "media_id", "kind", "sha256", "payload"
     ).mapInPandas(gen, schema=out_schema)
-
-
-def audio_frame_features(
-    media: DataFrame,
-    *,
-    decode: str = "fake",
-    frame_cfg: FrameConfig = FrameConfig(window=256, hop=64),
-) -> DataFrame:
-    """Audio rows -> per-frame windowed features through the SAME flat
-    kernel as token sequences (decoded samples are the token stream).
-    Output: media_id, frame_idx, rms_energy, mean, std."""
-    W, H = frame_cfg.window, frame_cfg.hop
-    schema = (
-        "media_id string, frame_idx long, rms_energy double, mean double, "
-        "std double"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["kind"] == "audio"]
-            if pdf.empty:
-                continue
-            decoded = [
-                _decode_bytes(bytes(p), "audio", decode) for p in pdf["payload"]
-            ]
-            lens = np.array([len(d) for d in decoded], dtype=np.int64)
-            flat = (
-                np.concatenate(decoded).astype(np.float64)
-                if decoded
-                else np.empty(0)
-            )
-            feats, doc_nf = kernels.frame_features_flat(flat, lens, W, H)
-            total = int(doc_nf.sum())
-            if total == 0:
-                continue
-            starts = np.concatenate(([0], np.cumsum(doc_nf)[:-1]))
-            fidx = np.arange(total, dtype=np.int64) - np.repeat(starts, doc_nf)
-            yield pd.DataFrame(
-                {
-                    "media_id": np.repeat(pdf["media_id"].to_numpy(), doc_nf),
-                    "frame_idx": fidx,
-                    "rms_energy": feats["rms_energy"],
-                    "mean": feats["mean"],
-                    "std": feats["std"],
-                }
-            )
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        gen, schema=schema
-    )

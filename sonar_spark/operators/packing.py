@@ -106,69 +106,6 @@ def pack_sequences(
     )
 
 
-def pack_sequences_expr(
-    docs: DataFrame,
-    *,
-    capacity: int = 256,
-    id_col: str = "doc_id",
-    len_col: str = "n_tok",
-    shard_col: str = "source",
-) -> DataFrame:
-    """The original Catalyst aggregate() fold form — retained as the
-    in-engine oracle for the kernel swap (tests/test_curation.py)."""
-    cap = F.lit(int(capacity))
-    per_shard = docs.groupBy(shard_col).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col(id_col).alias("i"), F.col(len_col).alias("n")))
-        ).alias("__ds")
-    )
-    # fold state: (bin, fill, acc); placement rule — open a new window
-    # iff the current one is non-empty and cannot fit the doc.
-    init = F.struct(
-        F.lit(0).alias("bin"),
-        F.lit(0).alias("fill"),
-        F.array().cast(
-            "array<struct<i:bigint,bin:int,off:int,trunc:boolean>>"
-        ).alias("acc"),
-    )
-
-    def place(st, d):
-        need_new = (st["fill"] > 0) & (st["fill"] + d["n"] > cap)
-        new_bin = st["bin"] + need_new.cast("int")
-        off = F.when(need_new, F.lit(0)).otherwise(st["fill"])
-        trunc = d["n"] > cap
-        fill = F.when(trunc, cap).otherwise(off + d["n"])
-        return F.struct(
-            new_bin.alias("bin"),
-            fill.alias("fill"),
-            F.concat(
-                st["acc"],
-                F.array(
-                    F.struct(
-                        d["i"].cast("bigint").alias("i"),
-                        new_bin.alias("bin"),
-                        off.cast("int").alias("off"),
-                        trunc.alias("trunc"),
-                    )
-                ),
-            ).alias("acc"),
-        )
-
-    packed = per_shard.select(
-        shard_col,
-        F.aggregate(F.col("__ds"), init, place)["acc"].alias("__acc"),
-    )
-    return packed.select(
-        shard_col, F.explode("__acc").alias("p")
-    ).select(
-        F.col("p.i").alias(id_col),
-        F.col(shard_col),
-        F.col("p.bin").cast("long").alias("window_id"),
-        F.col("p.off").cast("long").alias("window_off"),
-        F.col("p.trunc").alias("truncated"),
-    )
-
-
 def chunk_documents(
     docs: DataFrame,
     *,

@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sonar_spark import kernels, oracle
+import golden
+from sonar_spark import kernels
 from sonar_spark.config import AlignmentConfig
 from sonar_spark.operators.align import align_pairs, build_doc_series
 
@@ -17,7 +18,7 @@ def test_xcorr_matches_naive_oracle():
     a = rng.standard_normal(120)
     b = np.concatenate([rng.standard_normal(10), a])[:120]
     lags_k, corr_k = kernels.xcorr_normalized(a, b, 30, fft_threshold=10**9)
-    lags_o, corr_o = oracle.xcorr_naive(a, b, 30)
+    lags_o, corr_o = golden.xcorr_naive(a, b, 30)
     np.testing.assert_array_equal(lags_k, lags_o)
     np.testing.assert_allclose(corr_k, corr_o, rtol=1e-9, atol=1e-12)
 
@@ -50,7 +51,7 @@ def test_dtw_matches_naive():
     a = rng.standard_normal(40)
     b = rng.standard_normal(55)
     got = kernels.dtw_align(a, b, band=100)  # band >= |q-r|+1 => unbanded
-    want, path = oracle.dtw_naive(a, b)
+    want, path = golden.dtw_naive(a, b)
     assert np.isclose(got["dist"], want, rtol=1e-9)
     assert got["path_len"] == len(path)
     disp = [j - i for i, j in path]

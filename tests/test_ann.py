@@ -89,67 +89,6 @@ def test_hyperplane_lsh_recall(spark):
     assert len(cand) < 500, len(cand)
 
 
-def test_ivf_disk_index_partition_pruning(spark, tmp_path):
-    """On-disk IVF index: search reads ONLY the probed centroid
-    partitions (partition pruning), results equal the in-memory
-    search."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from sonar_spark.operators.ann import (
-        ivf_assign,
-        ivf_search,
-        ivf_search_pruned,
-        ivf_write,
-        train_centroids,
-    )
-
-    rng = np.random.default_rng(83)
-    rows = [(i, rng.standard_normal(16).tolist()) for i in range(300)]
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    C = train_centroids(emb, n_centroids=8, sample=300)
-    index = ivf_assign(emb, C)
-    path = str(tmp_path / "ivf")
-    ivf_write(index, path)
-
-    queries = emb.where(F.col("vec_id") < 4)
-    got = ivf_search_pruned(spark, path, queries, C, k=5, n_probe=2)
-    want = ivf_search(index, queries, C, k=5, n_probe=2)
-    norm = lambda df: sorted(  # noqa: E731
-        (r["query_id"], r["rank"], r["neighbor_id"],
-         round(r["cosine_sim"], 9))
-        for r in df.collect()
-    )
-    assert norm(got) == norm(want)
-
-    # pruning evidence: the probed-filter scan reads fewer partition
-    # directories than the full index
-    from sonar_spark.operators.ann import ivf_probes
-
-    probed = {
-        r["centroid_id"]
-        for r in ivf_probes(queries, C, n_probe=2)
-        .select("centroid_id").distinct().collect()
-    }
-    assert 0 < len(probed) < 8
-    pruned = spark.read.parquet(path).where(
-        F.col("centroid_id").isin([int(c) for c in probed])
-    )
-    # files ACTUALLY read under the partition filter (input_file_name
-    # is resolved at execution, after pruning)
-    pruned_files = {
-        r[0]
-        for r in pruned.select(F.input_file_name()).distinct().collect()
-    }
-    all_files = set(spark.read.parquet(path).inputFiles())
-    assert 0 < len(pruned_files) < len(all_files)
-    for f in pruned_files:
-        assert any(f"centroid_id={c}/" in f for c in probed), f
-    # and the plan carries the partition filter
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid_id" in plan
-
-
 def test_ivfpq_index_and_recall(spark, sf_dir):
     """IVF-PQ: codes are partitioning-invariant (content-keyed
     quantization), the index compresses 64 doubles to 1+8 small

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 import __spark_entry__ as E
-from sonar_spark import datagen, oracle
+import golden
+from sonar_spark import datagen
 from sonar_spark.config import AsofConfig
 from sonar_spark.operators.asof import asof_join
 from tools.check_oracle import TABLES, normalize, strict_equal
@@ -51,7 +52,7 @@ def _left_df(spark, n_entities=6, rows_per_entity=40, max_ts=8192, seed=5):
 
 
 def _check_vs_bruteforce(left_rows, right_rows, got_rows):
-    want = oracle.asof_brute_force(
+    want = golden.asof_brute_force(
         [(r["entity"], r["ts"]) for r in left_rows],
         [(r["entity"], r["ref_ts"], r["ref_version"]) for r in right_rows],
     )
@@ -167,7 +168,7 @@ def test_asof_bucketed_skew_spread(spark):
     got = asof_join(
         left, right, cfg=AsofConfig(bucket_width=4096), strategy="bucketed"
     ).collect()
-    want = oracle.asof_brute_force(
+    want = golden.asof_brute_force(
         [(e, t) for e, t, _ in rows], [(e, t, v) for e, t, v, _ in rrows]
     )
     assert len(got) == len(rows)

@@ -8,6 +8,7 @@ import hashlib
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sonar_spark.functions.ddsketch import (
@@ -16,11 +17,109 @@ from sonar_spark.functions.ddsketch import (
     ddsketch_quantiles,
 )
 from sonar_spark.functions.sampling import weighted_sample
-from sonar_spark.operators.asof import (
-    asof_join_directional,
-    asof_join_nearest,
-)
+from sonar_spark.operators.asof import _asof_union
 from sonar_spark.operators.backfill import backfill_grid
+
+
+def asof_join_directional(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    key: str = "entity",
+    left_ts: str = "ts",
+    right_ts: str = "ref_ts",
+    version: str | None = "ref_version",
+    payload: tuple[str, ...] = ("ref_features",),
+    direction: str = "backward",
+) -> DataFrame:
+    """As-of join with a direction: "backward" (latest right at or
+    before, the default asof_join), or "forward" (earliest right at
+    or after — the label-window / next-touchpoint lookup).
+
+    Forward is the backward join on NEGATED timestamps — one sign
+    flip reuses the whole tested union strategy (same plans, same
+    inclusive-at-equal-ts and highest-version-wins tie rules) — so
+    the forward output column is matched_fwd_ts.
+    """
+    if direction == "backward":
+        return _asof_union(left, right, key, left_ts, right_ts, version, payload)
+    if direction != "forward":
+        raise ValueError(f"unknown direction {direction!r}")
+    nl = left.withColumn("__nts", -F.col(left_ts).cast("long"))
+    nr = right.withColumn("__nts_r", -F.col(right_ts).cast("long")).drop(
+        right_ts
+    )
+    res = _asof_union(
+        nl, nr, key, "__nts", "__nts_r", version, payload
+    )
+    return res.select(
+        *[c for c in left.columns],
+        (-F.col("matched_ref_ts")).cast("long").alias("matched_fwd_ts"),
+        *payload,
+        *([version] if version else []),
+    )
+
+
+def asof_join_nearest(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    key: str = "entity",
+    left_ts: str = "ts",
+    right_ts: str = "ref_ts",
+    left_id: str = "event_id",
+    version: str | None = "ref_version",
+    payload: tuple[str, ...] = ("ref_features",),
+) -> DataFrame:
+    """Nearest-as-of: both directional passes joined back on the
+    unique left id, then a per-row pick by absolute gap; ties
+    (equal gap both sides) resolve BACKWARD — the zero-temporal-
+    leakage-preferring rule, documented rather than inherited.
+
+    Output: all left columns, both matched timestamps and payloads,
+    plus matched_near_ts / near_src ('b'/'f', null when no match on
+    either side) / near_gap_s and the picked payload columns
+    (<payload>_near).
+    """
+    b = asof_join_directional(
+        left, right, key=key, left_ts=left_ts, right_ts=right_ts,
+        version=version, payload=payload, direction="backward",
+    )
+    fwd_ren = {c: f"{c}_fwd" for c in payload}
+    f = asof_join_directional(
+        left, right, key=key, left_ts=left_ts, right_ts=right_ts,
+        version=version, payload=payload, direction="forward",
+    ).select(
+        left_id,
+        "matched_fwd_ts",
+        *[F.col(c).alias(fwd_ren[c]) for c in payload],
+    )
+    j = b.join(f, left_id)
+    bgap = F.col(left_ts).cast("long") - F.col("matched_ref_ts")
+    fgap = F.col("matched_fwd_ts") - F.col(left_ts).cast("long")
+    take_b = F.col("matched_ref_ts").isNotNull() & (
+        F.col("matched_fwd_ts").isNull() | (bgap <= fgap)
+    )
+    take_f = F.col("matched_fwd_ts").isNotNull() & ~take_b
+    return j.select(
+        *left.columns,
+        "matched_ref_ts",
+        *payload,
+        "matched_fwd_ts",
+        *[fwd_ren[c] for c in payload],
+        F.when(take_b, F.col("matched_ref_ts"))
+        .when(take_f, F.col("matched_fwd_ts"))
+        .cast("long")
+        .alias("matched_near_ts"),
+        F.when(take_b, F.lit("b")).when(take_f, F.lit("f")).alias("near_src"),
+        F.when(take_b, bgap).when(take_f, fgap).cast("long").alias("near_gap_s"),
+        *[
+            F.when(take_b, F.col(c)).when(take_f, F.col(fwd_ren[c])).alias(
+                f"{c}_near"
+            )
+            for c in payload
+        ],
+    )
 
 
 # ---------------------------------------------------------------- backfill

@@ -11,12 +11,76 @@ import random
 import re
 from collections import Counter
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sonar_spark.functions.lm import ngram_lm_scores
 from sonar_spark.functions.text import PII_EMAIL, PII_IPV4, PII_PHONE, pii_scrub
 from sonar_spark.operators.fingerprint import substring_spans
 from sonar_spark.operators.packing import pack_sequences
+
+
+def pack_sequences_expr(
+    docs: DataFrame,
+    *,
+    capacity: int = 256,
+    id_col: str = "doc_id",
+    len_col: str = "n_tok",
+    shard_col: str = "source",
+) -> DataFrame:
+    """The Catalyst aggregate() fold form of pack_sequences — the
+    reference the applyInPandas packer is certified against."""
+    cap = F.lit(int(capacity))
+    per_shard = docs.groupBy(shard_col).agg(
+        F.sort_array(
+            F.collect_list(F.struct(F.col(id_col).alias("i"), F.col(len_col).alias("n")))
+        ).alias("__ds")
+    )
+    # fold state: (bin, fill, acc); placement rule — open a new window
+    # iff the current one is non-empty and cannot fit the doc.
+    init = F.struct(
+        F.lit(0).alias("bin"),
+        F.lit(0).alias("fill"),
+        F.array().cast(
+            "array<struct<i:bigint,bin:int,off:int,trunc:boolean>>"
+        ).alias("acc"),
+    )
+
+    def place(st, d):
+        need_new = (st["fill"] > 0) & (st["fill"] + d["n"] > cap)
+        new_bin = st["bin"] + need_new.cast("int")
+        off = F.when(need_new, F.lit(0)).otherwise(st["fill"])
+        trunc = d["n"] > cap
+        fill = F.when(trunc, cap).otherwise(off + d["n"])
+        return F.struct(
+            new_bin.alias("bin"),
+            fill.alias("fill"),
+            F.concat(
+                st["acc"],
+                F.array(
+                    F.struct(
+                        d["i"].cast("bigint").alias("i"),
+                        new_bin.alias("bin"),
+                        off.cast("int").alias("off"),
+                        trunc.alias("trunc"),
+                    )
+                ),
+            ).alias("acc"),
+        )
+
+    packed = per_shard.select(
+        shard_col,
+        F.aggregate(F.col("__ds"), init, place)["acc"].alias("__acc"),
+    )
+    return packed.select(
+        shard_col, F.explode("__acc").alias("p")
+    ).select(
+        F.col("p.i").alias(id_col),
+        F.col(shard_col),
+        F.col("p.bin").cast("long").alias("window_id"),
+        F.col("p.off").cast("long").alias("window_off"),
+        F.col("p.trunc").alias("truncated"),
+    )
 
 VOCAB = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
 
@@ -808,13 +872,6 @@ def test_pack_sequences_kernel_equals_fold(spark, sf_dir):
     """The r6 applyInPandas packer must reproduce the retained
     Catalyst fold form row-for-row on the real corpus (capacity 96:
     the truncation branch is live)."""
-    from pyspark.sql import functions as F
-
-    from sonar_spark.operators.packing import (
-        pack_sequences,
-        pack_sequences_expr,
-    )
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id",
         "source",

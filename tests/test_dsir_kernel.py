@@ -6,7 +6,10 @@ expression stream's counts."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sonar_spark.functions.dsir import _gram_bucket_counts, _md5_bucket
 
 
 def _docs(spark, sf_dir):
@@ -19,12 +22,61 @@ def _docs(spark, sf_dir):
     )
 
 
-def test_gram_bucket_counts_equal_expression_stream(spark, sf_dir):
-    from sonar_spark.functions.dsir import (
-        _gram_bucket_counts,
-        _gram_stream_expr,
+def _gram_stream_expr(
+    docs: DataFrame,
+    *,
+    id_col: str,
+    target_col: str,
+    words_col: str,
+    n_buckets: int,
+) -> DataFrame:
+    """The exploded expression gram stream (one row per
+    unigram/bigram instance, md5-bucketed) — the reference the Arrow
+    gram-bucket kernel is certified against."""
+    words = F.col(words_col)
+    z = docs.select(
+        id_col,
+        target_col,
+        words.alias("__wa"),
+        F.concat(
+            F.array(F.lit(None).cast("string")),
+            F.slice(words, 1, F.size(words) - 1),
+        ).alias("__pa"),
+    ).select(
+        id_col,
+        target_col,
+        F.explode(F.arrays_zip("__wa", "__pa")).alias("__z"),
+    )
+    return (
+        z.select(
+            id_col,
+            target_col,
+            F.col("__z.__wa").alias("__w"),
+            F.col("__z.__pa").alias("__prev"),
+        )
+        .select(
+            id_col,
+            target_col,
+            F.explode(
+                F.array(
+                    F.col("__w"),
+                    F.when(
+                        F.col("__prev").isNotNull(),
+                        F.concat(F.col("__prev"), F.lit(" "), F.col("__w")),
+                    ),
+                )
+            ).alias("__g"),
+        )
+        .where(F.col("__g").isNotNull())
+        .select(
+            id_col,
+            target_col,
+            _md5_bucket(F.col("__g"), n_buckets).alias("__b"),
+        )
     )
 
+
+def test_gram_bucket_counts_equal_expression_stream(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     kw = dict(
         id_col="doc_id", target_col="is_target", words_col="words",

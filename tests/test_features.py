@@ -5,26 +5,148 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
-from sonar_spark import datagen, kernels, oracle
+import golden
+from sonar_spark import datagen, kernels
 from sonar_spark.config import FeatureConfig, FrameConfig
 from sonar_spark.operators.features import (
     FEATURE_COLS,
+    MFCC_COLS,
+    SPECTRAL_COLS,
     doc_stats,
     frame_features_arrow,
-    frame_features_builtin,
 )
+from sonar_spark.operators.frames import expand_frames
 
 CFG = FrameConfig(window=64, hop=16)
 RTOL, ATOL = 1e-9, 1e-12
+
+
+def _kernel_features(tokens, window, hop, entropy_bins=16):
+    """Every per-frame feature of one doc through the flat kernel."""
+    flat = np.asarray(tokens, dtype=np.float64)
+    feats, _ = kernels.frame_features_flat(
+        flat, np.array([len(flat)]), window, hop, entropy_bins
+    )
+    return feats
+
+
+def _pct_expr(sorted_col, window: int, p: float):
+    """R-7 linear-interp percentile of a sorted fixed-length array as a
+    pure expression (window length is a plan-time constant)."""
+    h = (window - 1) * p
+    k = int(np.floor(h))
+    frac = h - k
+    lo = F.element_at(sorted_col, k + 1).cast("double")
+    if frac == 0.0:
+        return lo
+    hi = F.element_at(sorted_col, k + 2).cast("double")
+    return lo + F.lit(frac) * (hi - lo)
+
+
+def frame_features_builtin(
+    df: DataFrame, frame_cfg: FrameConfig = FrameConfig()
+) -> DataFrame:
+    """Catalyst-expression implementation over expand_frames output.
+
+    Computes rms/mean/var/std/skew/kurt/min/max/crest/zcr/p25/p50/p75
+    with higher-order functions (JVM-side) and flux with one lag()
+    window function (the only shuffle)."""
+    W = frame_cfg.window
+    frames = expand_frames(df, frame_cfg)
+    dbl = F.transform(F.col("window"), lambda x: x.cast("double"))
+    frames = frames.withColumn("w", dbl)
+
+    def asum(col):
+        return F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x)
+
+    frames = frames.withColumn("mean", asum(F.col("w")) / W)
+    c = F.transform(F.col("w"), lambda x: x - F.col("mean"))
+    frames = frames.withColumn("cen", c)
+    m2 = asum(F.transform(F.col("cen"), lambda x: x * x)) / W
+    m3 = asum(F.transform(F.col("cen"), lambda x: x * x * x)) / W
+    m4 = asum(F.transform(F.col("cen"), lambda x: x * x * x * x)) / W
+    frames = (
+        frames.withColumn("var", m2)
+        .withColumn("std", F.sqrt(F.col("var")))
+        .withColumn(
+            "skew",
+            F.when(F.col("var") > 0, m3 / F.pow(F.col("var"), 1.5)).otherwise(0.0),
+        )
+        .withColumn(
+            "kurt",
+            F.when(F.col("var") > 0, m4 / F.pow(F.col("var"), 2.0) - 3.0).otherwise(
+                0.0
+            ),
+        )
+        .withColumn(
+            "rms_energy",
+            F.sqrt(asum(F.transform(F.col("w"), lambda x: x * x)) / W),
+        )
+        .withColumn("min", F.array_min("w"))
+        .withColumn("max", F.array_max("w"))
+        .withColumn(
+            "crest",
+            F.when(
+                F.col("rms_energy") > 0,
+                F.array_max(F.transform(F.col("w"), F.abs)) / F.col("rms_energy"),
+            ).otherwise(0.0),
+        )
+    )
+    # ZCR: sign changes of centered values (oracle semantics:
+    # (a>0)!=(b>0) or (a<0)!=(b<0))
+    sgn_a = F.slice(F.col("cen"), 1, W - 1)
+    sgn_b = F.slice(F.col("cen"), 2, W - 1)
+    changes = F.zip_with(
+        sgn_a,
+        sgn_b,
+        lambda a, b: (
+            ((a > 0) != (b > 0)) | ((a < 0) != (b < 0))
+        ).cast("double"),
+    )
+    frames = frames.withColumn("zcr", asum(changes) / (W - 1))
+    srt = F.array_sort("w")
+    frames = (
+        frames.withColumn("p25", _pct_expr(srt, W, 0.25))
+        .withColumn("p50", _pct_expr(srt, W, 0.50))
+        .withColumn("p75", _pct_expr(srt, W, 0.75))
+    )
+    # flux vs previous frame window (one shuffle: partitionBy doc_id)
+    win = Window.partitionBy("doc_id").orderBy("frame_idx")
+    prev = F.lag("w").over(win)
+    flux = F.when(prev.isNull(), F.lit(0.0)).otherwise(
+        F.sqrt(
+            F.aggregate(
+                F.zip_with(
+                    F.col("w"), prev, lambda a, b: F.pow(F.greatest(a - b, F.lit(0.0)), 2)
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+        )
+    )
+    frames = frames.withColumn("flux", flux)
+    # the builtin cross-check covers the time-domain family; the
+    # histogram-spectrum features live in the Arrow kernel (their
+    # independent implementations are golden.spectral_golden and the
+    # frame_spectral DuckDB oracle)
+    keep = ["doc_id", "source", "n_tok", "frame_idx", "frame_ts"] + [
+        col for col in FEATURE_COLS
+        if col != "entropy"
+        and col not in SPECTRAL_COLS
+        and col not in MFCC_COLS
+    ]
+    return frames.select(*keep)
 
 
 def test_kernel_matches_golden_loop():
     rng = np.random.default_rng(7)
     for n in (64, 79, 80, 200, 1000):
         toks = rng.integers(0, 50257, size=n).astype(np.int64)
-        got = kernels.frame_features(toks, CFG.window, CFG.hop, 16)
-        want = oracle.frame_features_golden(toks, CFG.window, CFG.hop, 16)
+        got = _kernel_features(toks, CFG.window, CFG.hop)
+        want = golden.frame_features_golden(toks, CFG.window, CFG.hop, 16)
         assert len(got["mean"]) == len(want)
         for i, row in enumerate(want):
             for k, v in row.items():
@@ -44,7 +166,7 @@ def test_arrow_features_match_golden(spark):
         by_doc.setdefault(r["doc_id"], []).append(r)
     n_checked = 0
     for doc_id, toks in src.items():
-        want = oracle.frame_features_golden(toks, CFG.window, CFG.hop, 16)
+        want = golden.frame_features_golden(toks, CFG.window, CFG.hop, 16)
         have = sorted(by_doc.get(doc_id, []), key=lambda r: r["frame_idx"])
         assert len(have) == len(want)
         for h, w in zip(have, want):
@@ -60,8 +182,6 @@ def test_builtin_features_match_arrow(spark):
     """Two independent in-Spark implementations agree (entropy is
     arrow-only by design)."""
     df = datagen.token_table(spark, n_docs=8)
-    from sonar_spark.operators.features import MFCC_COLS, SPECTRAL_COLS
-
     cols = ["doc_id", "frame_idx"] + [
         c for c in FEATURE_COLS
         if c != "entropy" and c not in SPECTRAL_COLS and c not in MFCC_COLS
@@ -135,8 +255,8 @@ def test_spectral_kernel_matches_golden_loop():
         toks = rng.integers(0, 40, size=n).astype(np.int64)
         if trial % 4 == 0:
             toks[:] = 9  # constant doc: everything lands in bin 0
-        got = kernels.frame_features(toks, CFG.window, CFG.hop, 16)
-        want = oracle.frame_features_golden(toks, CFG.window, CFG.hop, 16)
+        got = _kernel_features(toks, CFG.window, CFG.hop)
+        want = golden.frame_features_golden(toks, CFG.window, CFG.hop, 16)
         for i, row in enumerate(want):
             for k in kernels._SPECTRAL_KEYS:
                 assert np.isclose(got[k][i], row[k], rtol=1e-10, atol=1e-12), (
@@ -148,7 +268,7 @@ def test_spectral_pruning_skips_histogram():
     """Disabling the spectral + entropy groups must not compute them
     (config-driven pruning, fingerprint/config/config.go:22-27)."""
     toks = np.arange(100, dtype=np.int64)
-    feats, _ = kernels.frame_features_batch([toks], CFG.window, CFG.hop)
+    feats = _kernel_features(toks, CFG.window, CFG.hop)
     keys_only, _ = kernels.frame_features_flat(
         toks.astype(np.float64), np.array([100]), CFG.window, CFG.hop,
         keys=("rms_energy", "mean"),
@@ -166,8 +286,8 @@ def test_mfcc_kernel_matches_golden_loop():
         toks = rng.integers(0, 40, size=n).astype(np.int64)
         if trial % 5 == 0:
             toks[:] = 3  # constant doc: single-bin spectrum
-        got = kernels.frame_features(toks, CFG.window, CFG.hop, 16)
-        want = oracle.frame_features_golden(toks, CFG.window, CFG.hop, 16)
+        got = _kernel_features(toks, CFG.window, CFG.hop)
+        want = golden.frame_features_golden(toks, CFG.window, CFG.hop, 16)
         for i, row in enumerate(want):
             for k in kernels._MFCC_KEYS:
                 assert np.isclose(got[k][i], row[k], rtol=1e-9, atol=1e-12), (
@@ -209,9 +329,9 @@ def test_bark_bands_match_loop():
         toks.astype(np.float64), np.array([200]), 64, 16,
         keys=tuple(kernels._BARK_KEYS),
     )
-    gold_rows = oracle.frame_features_golden(toks, 64, 16)
+    gold_rows = golden.frame_features_golden(toks, 64, 16)
     for i, row in enumerate(gold_rows):
-        hist = oracle._histogram(
+        hist = golden._histogram(
             [float(t) for t in toks[i * 16 : i * 16 + 64]], 16
         )
         power = [c * c for c in hist]

@@ -7,12 +7,13 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sonar_spark import kernels, oracle
+import golden
+from sonar_spark import kernels
 from sonar_spark.config import MinHashConfig
+from sonar_spark.functions.text import ngrams_ws
 from sonar_spark.operators.fingerprint import (
-    lsh_candidate_pairs,
     minhash_fingerprints,
-    near_duplicates,
+    near_dup_pairs,
     simhash_near_duplicates,
 )
 
@@ -48,7 +49,7 @@ def test_minhash_estimates_jaccard():
         est = (sig[0] == sig[1]).mean()
         sh_a, _ = kernels.shingle_hashes_flat(base, np.array([len(base)]), 4)
         sh_b, _ = kernels.shingle_hashes_flat(other, np.array([len(other)]), 4)
-        exact = oracle.jaccard_exact(sh_a.tolist(), sh_b.tolist())
+        exact = golden.jaccard_exact(sh_a.tolist(), sh_b.tolist())
         # 256 hashes: std err = sqrt(j(1-j)/256) <= 0.032; 4 sigma
         assert abs(est - exact) < 0.13, (mut_rate, est, exact)
 
@@ -95,8 +96,13 @@ def _planted_docs(spark, n=40):
 
 
 def test_lsh_recovers_planted_neardups(spark):
+    """The curation chain (near_dup_pairs: MinHash -> banded LSH ->
+    exact Jaccard over a 4-gram shingle table) finds every planted
+    pair and nothing else."""
     df = _planted_docs(spark)
-    pairs = near_duplicates(df, CFG, threshold=0.5).collect()
+    words = F.transform("tokens", lambda t: t.cast("string"))
+    sh = df.select("doc_id", ngrams_ws(words, 4).alias("sh"))
+    pairs = near_dup_pairs(df, sh, CFG, threshold=0.5).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in pairs}
     want = {(f"d{i:04d}", f"d{1000+i:04d}") for i in range(5)}
     assert want <= got, got

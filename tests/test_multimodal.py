@@ -1,18 +1,12 @@
 """Multimodal plumbing: schema/batch shape, checksum gate, stub decode
-determinism, real-decode NotImplementedError, shared frame kernel."""
+determinism, real-decode NotImplementedError."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from sonar_spark.config import FrameConfig
-from sonar_spark.operators.multimodal import (
-    audio_frame_features,
-    media_features,
-    synth_media_table,
-)
+from sonar_spark.operators.multimodal import media_features, synth_media_table
 
 
 def test_media_features_end_to_end(spark):
@@ -46,31 +40,6 @@ def test_real_decode_raises(spark):
     media = synth_media_table(spark, 2)
     with pytest.raises(Exception, match="NotImplementedError|real image decode"):
         media_features(media, decode="real").collect()
-
-
-def test_audio_frames_match_token_kernel(spark):
-    """Decoded audio goes through the same kernel as token sequences:
-    spot-check one media row against a direct kernel call."""
-    from sonar_spark import kernels
-
-    media = synth_media_table(spark, 4)
-    cfg = FrameConfig(window=256, hop=64)
-    frames = audio_frame_features(media, frame_cfg=cfg).collect()
-    by_media = {}
-    for r in frames:
-        by_media.setdefault(r["media_id"], []).append(r)
-    assert set(by_media) == {"m000001", "m000003"}
-    from sonar_spark.operators.multimodal import media_payload
-
-    x = media_payload(1).astype(np.int64)  # m000001
-    feats, nf = kernels.frame_features_flat(
-        x.astype(np.float64), np.array([len(x)]), 256, 64
-    )
-    have = sorted(by_media["m000001"], key=lambda r: r["frame_idx"])
-    assert len(have) == int(nf.sum())
-    for i, r in enumerate(have):
-        assert np.isclose(r["rms_energy"], feats["rms_energy"][i], rtol=1e-12)
-        assert np.isclose(r["mean"], feats["mean"][i], rtol=1e-12)
 
 
 def test_determinism(spark):

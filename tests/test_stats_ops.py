@@ -136,13 +136,7 @@ def test_entropy_variants_matches_loop(spark):
 
 
 def test_pearson_distance_and_matrix(spark):
-    from pyspark.sql import functions as F
-
-    from sonar_spark.functions.arrays import (
-        euclidean,
-        pearson_correlation,
-        pearson_distance,
-    )
+    from sonar_spark.functions.arrays import euclidean, pearson_distance
     from sonar_spark.operators.distance import distance_matrix
 
     rng = np.random.default_rng(29)
@@ -169,22 +163,6 @@ def test_pearson_distance_and_matrix(spark):
         for j in range(8):
             assert got[(i, j)]["pd"] == got[(j, i)]["pd"]
             assert got[(i, j)]["euc"] == got[(j, i)]["euc"]
-    # numpy cross-check of r itself
-    pair = df.where(F.col("vec_id") < 2).agg(
-        F.collect_list("emb").alias("vs")
-    ).collect()[0]["vs"]
-    want_r = float(np.corrcoef(np.array(vecs[0]), np.array(vecs[1]))[0, 1])
-    got_r = (
-        spark.range(1)
-        .select(
-            pearson_correlation(
-                F.lit(vecs[0]).cast("array<double>"),
-                F.lit(vecs[1]).cast("array<double>"),
-            ).alias("r")
-        )
-        .collect()[0]["r"]
-    )
-    assert np.isclose(got_r, want_r, rtol=1e-9)
 
 
 def test_spectral_peaks_operator(spark):
@@ -394,36 +372,3 @@ def test_interpolation_family_matches_go(spark):
         round(x, 12) for x in up
     ]
     assert out["dn"] == [d[i * 2] for i in range(len(d) // 2)]
-
-
-def test_bilinear_interpolate_matches_go(spark):
-    """2-D bilinear vs the Go loops: interior, edges, clamping."""
-    from pyspark.sql import functions as F
-
-    from sonar_spark.functions.interpolate import bilinear_interpolate
-
-    grid = [[1.0, 2.0, 3.0], [4.0, 5.0, 6.0], [7.0, 8.0, 9.0]]
-
-    def go(data, x, y):
-        rows, cols = len(data), len(data[0])
-        x = min(max(x, 0.0), cols - 1.0)
-        y = min(max(y, 0.0), rows - 1.0)
-        x1, y1 = int(x), int(y)
-        x2, y2 = min(x1 + 1, cols - 1), min(y1 + 1, rows - 1)
-        fx, fy = x - x1, y - y1
-        r1 = data[y1][x1] + fx * (data[y1][x2] - data[y1][x1])
-        r2 = data[y2][x1] + fx * (data[y2][x2] - data[y2][x1])
-        return r1 + fy * (r2 - r1)
-
-    pts = [(0.5, 0.5), (1.25, 0.75), (2.0, 2.0), (-1.0, 5.0),
-           (0.0, 0.0), (1.999, 1.001)]
-    df = spark.createDataFrame([(grid,)], "g array<array<double>>")
-    sel = [
-        bilinear_interpolate(F.col("g"), F.lit(x), F.lit(y)).alias(
-            f"p{i}"
-        )
-        for i, (x, y) in enumerate(pts)
-    ]
-    row = df.select(*sel).collect()[0]
-    for i, (x, y) in enumerate(pts):
-        assert abs(row[f"p{i}"] - go(grid, x, y)) < 1e-12, (x, y)

@@ -1,5 +1,5 @@
-"""Window coefficient functions, properties, normalization, and the
-Window.Apply weighting slot (windowing.go:205-437)."""
+"""Window coefficient functions, the Catalyst window-property bundle
+and the Window.Apply weighting slot (windowing.go:167-425)."""
 
 from __future__ import annotations
 
@@ -12,9 +12,7 @@ from sonar_spark import kernels
 from sonar_spark.functions.windows import (
     WINDOW_TYPES,
     bessel_i0,
-    normalize_unity_power,
     window_coefficients,
-    window_properties,
 )
 
 
@@ -46,8 +44,20 @@ def test_kaiser_symmetry_and_peak():
     assert c[0] == c[32] == pytest.approx(1.0 / bessel_i0(8.0))
 
 
-def test_properties_rectangular():
-    p = window_properties(window_coefficients("rectangular", 32))
+def _window_props(spark, sf_dir):
+    """window_type -> the Catalyst property bundle at size 32
+    (q_window_props: energy, power/noise gain, ENBW, scallop loss,
+    coherent flag, 6 dp)."""
+    import __spark_entry__ as E
+
+    return {
+        r["window_type"]: r
+        for r in E.q_window_props(spark, sf_dir).collect()
+    }
+
+
+def test_properties_rectangular(spark, sf_dir):
+    p = _window_props(spark, sf_dir)["rectangular"]
     assert p["energy"] == 32.0
     assert p["power_gain"] == 1.0
     assert p["noise_gain"] == 1.0
@@ -56,19 +66,15 @@ def test_properties_rectangular():
     assert p["coherent"] is True
 
 
-def test_properties_hann():
-    # symmetric Hann: ENBW ~1.5, noise gain ~0.5 (slightly under at
-    # finite N with the N-1 denominator)
-    p = window_properties(window_coefficients("hann", 1024))
-    assert abs(p["enbw"] - 1.5) < 0.01
-    assert abs(p["noise_gain"] - 0.5) < 0.01
-
-
-def test_normalize_unity_power():
-    for t in WINDOW_TYPES:
-        c = normalize_unity_power(window_coefficients(t, 64))
-        p = window_properties(c)
-        assert np.isclose(p["power_gain"], 1.0, rtol=1e-12), t
+def test_properties_hann(spark, sf_dir):
+    # symmetric Hann (N-1 denominator): sum w = (N-1)/2 and
+    # sum w^2 = 3(N-1)/8, so ENBW = 3N / (2(N-1)) and noise gain
+    # = (N-1) / (2N) — 1.5 and 0.5 in the large-N limit
+    p = _window_props(spark, sf_dir)["hann"]
+    n = 32
+    assert abs(p["enbw"] - 3 * n / (2 * (n - 1))) < 1e-6
+    assert abs(p["noise_gain"] - (n - 1) / (2 * n)) < 1e-6
+    assert p["coherent"] is False
 
 
 def test_expr_matches_numpy(spark):

@@ -78,7 +78,7 @@ def main() -> int:
     res = E.entry(spark)
     n = res.count()
     print(f"entry(): {n} rows, schema={[f.name for f in res.schema]}, "
-          f"{time.time()-t0:.1f}s")
+          f"{time.time()-t0:.1f}s", flush=True)
     assert n >= 0
 
     con = duckdb.connect()
@@ -96,7 +96,8 @@ def main() -> int:
         sdf = fn(spark, sf_dir).toPandas()
         t_spark = time.time() - t0
         if name not in oracles:
-            print(f"{name:24s} rows-only: {len(sdf)} rows  ({t_spark:.1f}s)")
+            print(f"{name:24s} rows-only: {len(sdf)} rows  ({t_spark:.1f}s)",
+                  flush=True)
             continue
         odf = con.execute(oracles[name]).df()
         a, b = normalize(sdf), normalize(odf)
@@ -109,7 +110,7 @@ def main() -> int:
         note = " [close-but-not-exact: rounding-boundary flake]" if (
             not ok_vals and close and ok_rows and ok_cols) else ""
         print(f"{name:24s} {status} rows={len(a)}/{len(b)} cols_match={ok_cols} "
-              f"vals={ok_vals}  ({t_spark:.1f}s){note}")
+              f"vals={ok_vals}  ({t_spark:.1f}s){note}", flush=True)
         if status == "FAIL":
             failed.append(name)
             if not ok_cols:
