@@ -24,7 +24,7 @@ the +1e-12 structural-tie nudge both engines apply).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

@@ -45,7 +45,7 @@ from __future__ import annotations
 import math
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 PCA_DIM = 64

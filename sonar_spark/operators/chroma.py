@@ -485,7 +485,6 @@ def chroma_dp_similarity(
 
     def run(batches):
         import numpy as np
-        import pandas as pd
 
         for pdf in batches:
             if not len(pdf):

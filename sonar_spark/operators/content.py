@@ -30,7 +30,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 FEATURES_SCHEMA = (
     "doc_id long, zcr double, cen double, ev double, sil double, "

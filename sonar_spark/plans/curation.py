@@ -187,7 +187,7 @@ class CurationJob:
         there)."""
         labels = self.ensure_labels(docs)
 
-        def build(in_take):
+        def build(in_take, observe_input):
             d = docs.select(
                 F.col("doc_id").cast("string").alias("doc_id"),
                 F.col("text"),
@@ -195,7 +195,7 @@ class CurationJob:
                     F.col("doc_id").cast("string"), self.n_buckets
                 ).alias("__bucket"),
             ).where(in_take)
-            return self.policy.decide(d, labels), d
+            return self.policy.decide(observe_input(d), labels)
 
         return run_buckets(
             self.log,
@@ -203,10 +203,7 @@ class CurationJob:
             self.n_buckets,
             list(range(self.n_buckets)),
             build,
-            {
-                "rows_out": F.count("*"),
-                "rows_kept": F.count(F.when(F.col("keep"), 1)),
-            },
+            {"rows_out": "1", "rows_kept": "if(keep, 1, 0)"},
             fail_after=fail_after,
         )
 
@@ -245,7 +242,7 @@ class CurationJob:
 
         spark = docs.sparkSession
 
-        def build(in_take):
+        def build(in_take, observe_input):
             kept_ids = self.decisions(spark).where(
                 F.col("keep") & in_take
             ).select("doc_id", "__bucket")
@@ -260,7 +257,7 @@ class CurationJob:
             ).withColumn(
                 "__bucket", bucket_of(F.col("doc_id"), self.n_buckets)
             )
-            return ch, None
+            return ch
 
         return run_buckets(
             self.chunk_log,
@@ -268,10 +265,12 @@ class CurationJob:
             self.n_buckets,
             [b for b in range(self.n_buckets) if self.log.is_done(b)],
             build,
+            # chunk_documents numbers each doc's chunks from 0: chunk-0
+            # rows count the docs (DISTINCT cannot be observed)
             {
-                "n_docs": F.countDistinct("doc_id"),
-                "n_chunks": F.count("*"),
-                "tokens_out": F.sum("chunk_len"),
+                "n_docs": "if(chunk_id = 0, 1, 0)",
+                "n_chunks": "1",
+                "tokens_out": "chunk_len",
             },
             fail_after=fail_after,
             extra={"window": window, "stride": stride},

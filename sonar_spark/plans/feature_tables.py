@@ -310,7 +310,7 @@ def build_all(
     extra_roots: tuple = (),
 ) -> dict[str, int]:
     """Materialize the named feature tables (default: all) into the
-    store; returns {table: row_count} from the landed parquet.
+    store; returns {table: row_count} as recorded at each commit.
 
     Builds run CONCURRENTLY, scheduled by the DEPS dag: no
     individual builder keeps 32 cores busy end-to-end (single-file
@@ -337,7 +337,6 @@ def build_all(
     unknown = [t for t in want if t not in BUILDERS]
     if unknown:
         raise KeyError(f"unknown feature tables: {unknown}")
-    dfs: dict[str, DataFrame] = {}
     futs: dict[str, object] = {}
 
     def _run(name: str):
@@ -347,7 +346,7 @@ def build_all(
         for d in DEPS[name]:
             if d in futs:
                 futs[d].result()
-        dfs[name] = BUILDERS[name](spark, sf_dir, store)
+        BUILDERS[name](spark, sf_dir, store)
 
     # one worker per task: a dependent blocks its thread while its
     # deps run, so the pool must be able to hold every task at once
@@ -362,4 +361,4 @@ def build_all(
             futs[name] = pool.submit(_run, name)
         for f in [*extra_futs, *futs.values()]:
             f.result()  # propagate the first builder exception
-    return {name: dfs[name].count() for name in want}
+    return {name: store.rows(name) for name in want}

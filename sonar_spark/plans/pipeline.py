@@ -5,7 +5,9 @@ bucket, bucket(doc_id) = pmod(xxhash64(doc_id), n_buckets).  One run
 writes ALL pending buckets from a single input scan, partitionBy(
 "__bucket") under dynamic partition overwrite to <out>/__bucket=<b>/,
 then lands one write-once JSON marker + metrics record per bucket in
-a ``LineageLog`` (<out>/_lineage/bucket_<b>.json).  A re-run skips
+a ``LineageLog`` (<out>/_lineage/bucket_<b>.json), its metrics
+observed on the rows this run wrote, during the write (no job of
+their own, like an Iceberg snapshot's added-records).  A re-run skips
 every bucket whose marker exists, so a killed run resumes where it
 stopped and re-running a completed bucket is a no-op: a crash leaves
 uncommitted files and no marker, and the re-run overwrites the
@@ -33,11 +35,13 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import FeatureConfig, FrameConfig
 from ..operators.features import frame_features_arrow
+
+_OBSERVE_TIMEOUT_S = 60.0  # observed_metrics' wait for the listener
 
 
 def bucket_of(doc_id_col, n_buckets: int):
@@ -60,6 +64,22 @@ def write_json_atomic(path: str, rec: dict) -> None:
     with open(tmp, "w") as f:
         json.dump(rec, f)
     os.replace(tmp, path)
+
+
+def observed_metrics(obs: Observation) -> dict:
+    """The metrics ``obs`` collected during the action that ran its
+    frame.  Spark's asynchronous query listener delivers them; this
+    waits at most ``_OBSERVE_TIMEOUT_S`` (``Observation.get`` waits
+    forever).  When the optimizer pruned the observed node (its
+    input was provably empty) Spark delivers an empty row, which
+    ``Observation.get`` cannot convert: that returns {}."""
+    jo = obs._jo  # the JVM Observation, set by DataFrame.observe
+    deadline = time.monotonic() + _OBSERVE_TIMEOUT_S
+    while not jo.future().isCompleted():
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"observation {jo.name()} never arrived")
+        time.sleep(0.005)
+    return obs.get if jo.getRow().length() else {}
 
 
 def commit_table(path: str, df: DataFrame) -> bool:
@@ -121,36 +141,13 @@ class LineageLog:
         write_json_atomic(self._path(bucket), {"bucket": bucket, **rec})
 
 
-def bucket_aggregates(
-    spark: SparkSession, out_dir: str, buckets: list[int], *aggs
-) -> dict:
-    """Per-bucket aggregates of the committed ``__bucket=<b>``
-    partitions of ``buckets`` under ``out_dir`` in ONE grouped pass
-    (not a scan or two per bucket): {bucket: Row}.  Reads only the
-    partition directories that exist — a bucket that produced no rows
-    has none, and a table with no rows at all has no schema to infer —
-    so such a bucket is absent from the result."""
-    paths = [
-        p
-        for p in (os.path.join(out_dir, f"__bucket={b}") for b in buckets)
-        if os.path.isdir(p)
-    ]
-    if not paths:
-        return {}
-    part = spark.read.option("basePath", out_dir).parquet(*paths)
-    return {
-        r["__bucket"]: r
-        for r in part.groupBy("__bucket").agg(*aggs).collect()
-    }
-
-
 def run_buckets(
     log: LineageLog,
     out_dir: str,
     n_buckets: int,
     eligible: list[int],
-    build: Callable[[Column], tuple[DataFrame, DataFrame | None]],
-    aggs: dict[str, Column],
+    build: Callable[[Column, Callable[[DataFrame], DataFrame]], DataFrame],
+    aggs: dict[str, str],
     *,
     fail_after: int | None,
     extra: dict | None = None,
@@ -160,11 +157,13 @@ def run_buckets(
     """Run one resumable per-bucket phase over the ``eligible`` buckets
     that ``log`` has no marker for, all in ONE job.
 
-    ``build(in_take)`` returns the frame to write (with a ``__bucket``
-    column; ``in_take`` is the predicate selecting the buckets taken)
-    and, or None, the input frame whose per-bucket row count is the
-    marker's ``rows_in``.  Each bucket's marker holds that count, the
-    named ``aggs`` over its committed partition (0 when it has none),
+    ``build(in_take, observe_input)`` returns the frame to write (with
+    a ``__bucket`` column; ``in_take`` is the predicate selecting the
+    buckets taken); passing its input frame through ``observe_input``
+    makes that frame's per-bucket row count the marker's ``rows_in``.
+    ``aggs`` maps a marker field to a SQL term, summed per bucket (0
+    when it has no rows).  Both are observed on the rows this run
+    wrote, during the write.  Each bucket's marker holds them,
     ``wall_sec`` (the phase wall over the buckets taken),
     ``completed_at`` and ``extra``; its BucketResult takes rows_in /
     rows_out from the two marker fields named in ``counts``.
@@ -191,42 +190,43 @@ def run_buckets(
             stale = os.path.join(out_dir, f"__bucket={b}")
             if os.path.isdir(stale):
                 shutil.rmtree(stale)
-        out, src = build(F.col("__bucket").isin([int(b) for b in take]))
+        observed: list[tuple[Observation, list[str]]] = []
+
+        def observe(df: DataFrame, terms: dict[str, str]) -> DataFrame:
+            # one SQL expression per field, a slot per bucket taken (a
+            # Column tree per bucket costs a Py4J call per node)
+            o = Observation()
+            observed.append((o, list(terms)))
+            sums = {
+                k: ", ".join(f"sum(if(__bucket = {b}, {t}, 0))" for b in take)
+                for k, t in terms.items()
+            }
+            return df.observe(
+                o, *(F.expr(f"array({v}) AS {k}") for k, v in sums.items())
+            )
+
+        out = build(
+            F.col("__bucket").isin([int(b) for b in take]),
+            lambda src: observe(src, {"rows_in": "1"}),
+        )
         (
-            out.write.mode("overwrite")
+            observe(out, aggs)
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__bucket")
             .parquet(out_dir)
         )
-        rows_in = (
-            {}
-            if src is None
-            else {
-                r["__bucket"]: r["count"]
-                for r in src.groupBy("__bucket").count().collect()
-            }
-        )
-        stats = bucket_aggregates(
-            out.sparkSession,
-            out_dir,
-            take,
-            *(c.alias(k) for k, c in aggs.items()),
-        )
+        stats = {}
+        for o, fields in observed:
+            got = observed_metrics(o)  # sums are null over no rows
+            stats.update({k: got.get(k) or [None] * len(take) for k in fields})
         wall = (time.time() - t0) / len(take)
-        for b in take:
-            st = stats.get(b)
-            rec = {} if src is None else {"rows_in": int(rows_in.get(b, 0))}
-            rec.update({k: int(st[k]) if st else 0 for k in aggs})
-            results.append(
-                BucketResult(
-                    bucket=b,
-                    skipped=False,
-                    rows_in=rec[counts[0]],
-                    rows_out=rec[counts[1]],
-                    wall_sec=wall,
-                )
-            )
-            rec["wall_sec"] = round(wall, 3)
+        for i, b in enumerate(take):
+            rec = {k: int(v[i] or 0) for k, v in stats.items()}
+            rows_in, rows_out = (rec[c] for c in counts)
+            results.append(BucketResult(b, False, rows_in, rows_out, wall))
+            # truncated: rounded-up shares could sum past the wall
+            rec["wall_sec"] = int(wall * 1000) / 1000
             rec["completed_at"] = time.strftime(
                 "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
             )
@@ -273,11 +273,13 @@ class FeaturizeJob:
         is a derived column, so nothing pushes down: a scan per bucket
         would read the input n_buckets times)."""
 
-        def build(in_take):
-            sel = tokens.withColumn(
-                "__bucket", bucket_of(F.col("doc_id"), self.n_buckets)
-            ).where(in_take)
-            feats = frame_features_arrow(
+        def build(in_take, observe_input):
+            sel = observe_input(
+                tokens.withColumn(
+                    "__bucket", bucket_of(F.col("doc_id"), self.n_buckets)
+                ).where(in_take)
+            )
+            return frame_features_arrow(
                 sel.drop("__bucket"), self.frame_cfg, self.feat_cfg
             ).withColumn(
                 # bucket is a pure function of doc_id: re-derive after
@@ -285,7 +287,6 @@ class FeaturizeJob:
                 "__bucket",
                 bucket_of(F.col("doc_id"), self.n_buckets),
             )
-            return feats, sel
 
         return run_buckets(
             self.log,
@@ -293,7 +294,7 @@ class FeaturizeJob:
             self.n_buckets,
             list(range(self.n_buckets)),
             build,
-            {"rows_out": F.count("*")},
+            {"rows_out": "1"},
             fail_after=fail_after,
             extra={
                 "window": self.frame_cfg.window,
@@ -326,8 +327,6 @@ def music_fingerprints(
     (comparison.go:673-688 zero-norm guard)."""
     if not feat_cfg.enable_chroma:
         return stats
-    from pyspark.sql import functions as F
-
     from ..operators.features import chroma_doc_stats
 
     joined = stats.join(chroma_doc_stats(hpcp), "doc_id", "left")
@@ -343,25 +342,18 @@ def music_fingerprints(
 # ------------------------------------------------------------------ store
 
 class FeatureStore:
-    """Materialized feature-table layer — the at-scale architecture the
-    composite queries assume (SURVEY §4.4; r4 verdict "Missing #2"):
-    shared front ends (frame features, LPC, formant peaks, HPCP,
-    voice-quality doc stats) are computed ONCE, landed as parquet
-    tables, and every downstream consumer reads the materialized copy
-    with normal predicate pushdown / column pruning — instead of each
-    composite re-deriving the same subtree from the raw corpus (the
-    multi-consumer re-evaluation plan smell: Catalyst re-evaluates a
-    shared subtree once per consumer; a 20-scan speech_analysis plan
-    collapses to reads of 4 tiny tables).
+    """Materialized feature-table layer (SURVEY §4.4): shared front
+    ends (frame features, LPC, formant peaks, HPCP, voice-quality doc
+    stats) are computed ONCE and landed as parquet tables, and every
+    consumer reads the materialized copy with pushdown and pruning
+    instead of re-deriving the same subtree from the raw corpus (a
+    20-scan speech_analysis plan collapses to reads of 4 tiny tables).
 
-    Write-once semantics per table via ``commit_table``: ``get(name,
-    builder)`` builds to a tmp dir and renames it into place; a
-    concurrent loser just drops its tmp dir.  The store directory
-    is content-keyed by the caller (input path + mtime + config
-    version), so a changed corpus or changed builder semantics lands
-    in a fresh key rather than serving stale rows.  On real infra
-    each table is an Iceberg table and write-once is a snapshot
-    commit."""
+    Write-once per table via ``commit_table``; a concurrent loser
+    drops its tmp dir.  The store directory is content-keyed by the
+    caller (``store_key``), so a changed corpus or engine lands in a
+    fresh key.  On real infra each table is an Iceberg table and
+    write-once is a snapshot commit."""
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
@@ -378,20 +370,20 @@ class FeatureStore:
         p = self.path(name)
         if not os.path.isdir(p):
             t0 = time.time()
-            # r6 (guide §6 output sizing): builders now run at session
-            # parallelism, which would land 32-96 tiny part files per
-            # table and tax every consumer scan with per-file task
-            # overhead; the AQE REBALANCE hint coalesces the write to
-            # advisoryPartitionSizeInBytes-sized files (size-adaptive
-            # — a big table still writes many files) without reducing
-            # the build's own parallelism the way coalesce() would.
-            if commit_table(p, builder().hint("rebalance")):
-                # lineage sidecar: who built it, when, how long — next
-                # to the table so consumers/auditors can read it
+            # builders run at session parallelism; the AQE REBALANCE
+            # hint coalesces the write to advisory-size files instead
+            # of tens of tiny ones, without cutting the build's own
+            # parallelism the way coalesce() would
+            obs = Observation()
+            df = builder().observe(obs, F.count("*").alias("rows"))
+            if commit_table(p, df.hint("rebalance")):
+                # lineage sidecar next to the table: who built it,
+                # when, how long, and the rows its write observed
                 write_json_atomic(
                     f"{p}.meta.json",
                     {
                         "table": name,
+                        "rows": observed_metrics(obs).get("rows", 0),
                         "build_wall_sec": round(time.time() - t0, 3),
                         "built_at": time.strftime(
                             "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
@@ -400,6 +392,15 @@ class FeatureStore:
                     },
                 )
         return self.spark.read.parquet(p)
+
+    def rows(self, name: str) -> int:
+        """Row count of table ``name`` as its sidecar recorded it, or
+        counted when a concurrent build has yet to land the sidecar."""
+        try:
+            with open(f"{self.path(name)}.meta.json") as f:
+                return json.load(f)["rows"]
+        except FileNotFoundError:
+            return self.spark.read.parquet(self.path(name)).count()
 
     def metrics(self) -> list[dict]:
         """Lineage sidecars of every materialized table."""

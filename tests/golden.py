@@ -96,6 +96,25 @@ def _histogram(vals, bins):
     return counts
 
 
+def _contrast_band_edges(B, n_bands=4):
+    """spectral_contrast.go:140-188 initializeBands on the token
+    axis: bin k has frequency k, so the nyquist is B - 1 and the
+    200 Hz floor is bin 1.  The n_bands + 1 edges are log-spaced from
+    the floor to the nyquist, so edge i is the bin of frequency
+    nyquist^(i / n_bands), truncated, clamped to B - 1, and moved to
+    one past its predecessor when not above it.  The truncation is
+    done in integers: the largest k with k^n_bands <= nyquist^i."""
+    nyquist = B - 1
+    edges = []
+    for i in range(n_bands + 1):
+        k = 0
+        while (k + 1) ** n_bands <= nyquist**i:
+            k += 1
+        edge = min(k, B - 1)
+        edges.append(edge if not edges or edge > edges[-1] else edges[-1] + 1)
+    return edges
+
+
 def spectral_golden(counts):
     """Loop implementations of the spectral-analog per-frame family
     over histogram counts, formulas from the reference:
@@ -140,9 +159,7 @@ def spectral_golden(counts):
     else:
         slope = 0.0
 
-    from sonar_spark.kernels import contrast_band_edges
-
-    edges = contrast_band_edges(B)
+    edges = _contrast_band_edges(B)
     cons = []
     for bi in range(len(edges) - 1):
         band = sorted(power[edges[bi]: edges[bi + 1]])

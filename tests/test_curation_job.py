@@ -281,3 +281,54 @@ def test_chunk_stage_nothing_kept(spark, tmp_path):
         for m in job.chunk_metrics()
     )
     assert all(r.skipped for r in job.run_chunks(docs))
+
+
+def test_decisions_bucket_without_input_rows(spark, tmp_path):
+    """A pending bucket with no input rows commits zero counts, also
+    when no bucket the run takes has a row: Spark prunes the observed
+    node of a provably empty local input and delivers an empty metrics
+    row, which must read as zeros, not block or fail."""
+    from sonar_spark.plans.pipeline import bucket_of
+
+    ids = spark.range(1, 40).select(
+        "id", bucket_of(F.col("id").cast("string"), 4).alias("b")
+    )
+    doc = ids.where("b = 3").first()["id"]
+    docs = spark.createDataFrame(
+        [(doc, "the quick brown fox jumps over the lazy dog", "s0")],
+        "doc_id long, text string, source string",
+    )
+    job = CurationJob(str(tmp_path / "j"), n_buckets=4)
+    with pytest.raises(RuntimeError, match="buckets pending"):
+        job.run(docs, fail_after=1)
+    res = job.run(docs)
+    assert [r.bucket for r in res if r.skipped] == [0]
+    ms = {m["bucket"]: m for m in job.metrics()}
+    assert sorted(ms) == [0, 1, 2, 3]
+    for b, m in ms.items():
+        n = int(b == 3)
+        assert (m["rows_in"], m["rows_out"], m["rows_kept"]) == (n, n, n), m
+
+
+def test_bucket_phases_submit_no_job_after_the_write(spark, tmp_path):
+    """The marker counts are observed during each phase's write, so
+    neither phase runs a job of its own to count rows: run and
+    run_chunks each submit at most 3 Spark jobs (a recount after the
+    write made them 8 and 7)."""
+    sc = spark.sparkContext
+    docs = _docs(spark)
+    job = CurationJob(str(tmp_path / "j"), n_buckets=8)
+    job.ensure_labels(docs)
+
+    def n_jobs(group, phase):
+        sc.setJobGroup(group, group)
+        try:
+            phase(docs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert n_jobs(f"run-{tmp_path.name}", job.run) <= 3
+    assert n_jobs(f"chunks-{tmp_path.name}", job.run_chunks) <= 3

@@ -239,6 +239,42 @@ def test_feature_store_job_build_all_and_resume(spark, tmp_path, sf_dir):
         assert os.path.getmtime(store.path(t)) == mt[t]
 
 
+def test_feature_store_records_the_committed_row_count(spark, tmp_path, sf_dir):
+    """Each table's sidecar holds the row count observed during its
+    write, and it is the count of the committed parquet."""
+    from sonar_spark.plans.feature_tables import build_all
+    from sonar_spark.plans.pipeline import FeatureStore
+
+    store = FeatureStore(spark, str(tmp_path / "store"))
+    counts = build_all(spark, sf_dir, store, ["lpc4", "formants", "hist_grid"])
+    recorded = {m["table"]: m["rows"] for m in store.metrics()}
+    assert set(recorded) >= set(counts)
+    for t, n in recorded.items():
+        assert n == spark.read.parquet(store.path(t)).count(), t
+    assert counts == {t: recorded[t] for t in counts}
+
+
+def test_observed_metrics_of_pruned_and_unrun_frames(spark, monkeypatch):
+    """observed_metrics returns what the action observed, {} when the
+    optimizer pruned the observed node (Spark then delivers an empty
+    row), and raises instead of waiting on a frame no action ran."""
+    from pyspark.sql import Observation
+
+    from sonar_spark.plans import pipeline
+
+    o = Observation()
+    spark.range(5).observe(o, F.count("*").alias("n")).collect()
+    assert pipeline.observed_metrics(o) == {"n": 5}
+    o = Observation()
+    spark.range(5).observe(o, F.count("*").alias("n")).where("false").collect()
+    assert pipeline.observed_metrics(o) == {}
+    o = Observation()
+    spark.range(5).observe(o, F.count("*").alias("n"))
+    monkeypatch.setattr(pipeline, "_OBSERVE_TIMEOUT_S", 0.2)
+    with pytest.raises(TimeoutError):
+        pipeline.observed_metrics(o)
+
+
 def test_backfill_and_grid_features_share_one_entity_exchange(spark):
     """backfill_grid costs exactly 2 shuffles (tiny grid aggregate +
     the entity window); grid_features must add ZERO more — its lag

@@ -5,7 +5,8 @@ sonar_spark/ modules (a same-named twin would hide a dead copy from
 the mention count, and two copies of one helper drift).  Mentions in
 tests/ do not count: code only tests reach is either a reference
 implementation, which belongs in tests/, or a capability with no
-caller.  Spark-free."""
+caller.  And every name a sonar_spark/ module or __spark_entry__.py
+imports is loaded somewhere in that module.  Spark-free."""
 
 from __future__ import annotations
 
@@ -67,3 +68,26 @@ def test_no_top_level_name_defined_in_two_modules():
         modules[node.name].add(os.path.relpath(path, REPO))
     twice = {n: sorted(ps) for n, ps in modules.items() if len(ps) > 1}
     assert twice == {}, twice
+
+
+def test_no_unused_imports():
+    unused = []
+    for path, src in _py_sources().items():
+        rel = os.path.relpath(path, REPO)
+        if not rel.startswith("sonar_spark" + os.sep) and rel != "__spark_entry__.py":
+            continue
+        tree = ast.parse(src)
+        loaded = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    name = (a.asname or a.name).split(".")[0]
+                    if name not in loaded:
+                        unused.append(f"{rel}:{node.lineno}:{name}")
+    assert unused == [], unused
