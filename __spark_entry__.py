@@ -2767,12 +2767,6 @@ def _voice_quality_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return voice_quality_table(spark, sf_dir, _store(spark, sf_dir))
 
 
-def _onsets_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sonar_spark.plans.feature_tables import onsets_rms
-
-    return onsets_rms(spark, sf_dir, _store(spark, sf_dir))
-
-
 def q_content_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full acoustic content detector
     (fingerprint/content_detector.go DetectFromAudio :72-121 +

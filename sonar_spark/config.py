@@ -1,16 +1,20 @@
-"""Frozen config dataclasses mirroring the reference's config surface.
+"""Frozen config dataclasses: the settings callers vary.
 
 Defaults follow the reference where a token-domain analog exists:
 window 2048 / hop 512 (reference fingerprint/fingerprint.go:72-73) is
-scaled to W=64 / H=16 for token sequences (same 4:1 overlap ratio);
-alignment defaults follow fingerprint/config/config.go:103-117
-(maxLag 30s, Sakoe-Chiba band 50, confidence threshold 0.6); the
-hybrid DTW-fallback trigger 0.7 follows algorithms/stats/alignment.go:316.
+scaled to W=64 / H=16 for token sequences (same 4:1 overlap ratio).
+Settings with one value in use are constants next to the code that
+reads them (the xcorr FFT switch, DTW band and confidence weights in
+kernels.py, the hybrid DTW-fallback trigger in operators/align.py, the
+MinHash shingle size and seed in operators/fingerprint.py, the match
+thresholds in operators/compare.py, the Kaiser beta / Tukey alpha in
+functions/windows.py).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 
 @dataclass(frozen=True)
@@ -26,8 +30,6 @@ class FrameConfig:
     # per-window weighting (Window.Apply, windowing.go:167-186):
     # coefficient type applied to every frame before statistics
     window_type: str = "rectangular"
-    kaiser_beta: float = 8.0
-    tukey_alpha: float = 0.5
 
 
 @dataclass(frozen=True)
@@ -54,7 +56,8 @@ class FeatureConfig:
     # (calculateMeanChromaVector, comparison.go:691-712) next to the
     # speech stats so compare_topk scores the chroma group
     enable_chroma: bool = False
-    entropy_bins: int = 16  # fixed-width histogram bins (Scott-rule analog)
+    # fixed-width histogram bins (Scott-rule analog); not a field
+    entropy_bins: ClassVar[int] = 16
 
 
 @dataclass(frozen=True)
@@ -77,10 +80,8 @@ class MinHashConfig:
     """MinHash over k-token shingles (compact-hash role sketched at
     reference fingerprint/comparison.go:74,91-106)."""
 
-    k_shingle: int = 4
     num_hashes: int = 64
     bands: int = 16  # LSH bands; rows per band = num_hashes // bands
-    seed: int = 42
 
 
 @dataclass(frozen=True)
@@ -89,24 +90,12 @@ class AlignmentConfig:
     algorithms/stats/alignment.go, config/config.go:103-117)."""
 
     max_lag: int = 128  # frames; clamped to min(len)-1 in-kernel
-    fft_threshold: int = 1000  # xcorr method switch (stats/correlation.go:140-142)
-    dtw_band: int = 50  # Sakoe-Chiba band (stats/dtw.go:115-119)
-    hybrid_conf_threshold: float = 0.7  # DTW fallback trigger (alignment.go:316)
-    # corr-confidence weights (stats/alignment.go:234-240)
-    w_peak: float = 0.55
-    w_sharpness: float = 0.22
-    w_sidelobe: float = 0.12
-    w_snr: float = 0.06
 
 
 @dataclass(frozen=True)
 class ComparisonConfig:
     """Weighted similarity + top-k (reference fingerprint/comparison.go)."""
 
-    similarity_threshold: float = 0.6
-    max_candidates: int = 50
-    # match-class thresholds (comparison.go:1040-1052)
-    thresholds: tuple[float, ...] = (0.95, 0.85, 0.75, 0.6)
     # per-content weight tables (comparison.go:1055-1104), token-domain
     # groups; "mfcc" participates when fingerprints carry the MFCC
     # stats (the reference's speech path weights MFCC highest)

@@ -105,15 +105,9 @@ def catalog_table(
 
 def entity_of(doc_id_col, n_entities: int = 16):
     """Map doc_id -> entity (many-to-one), deterministic; usable from
-    Spark SQL via expressions. Matches numpy side entity_of_py."""
+    Spark SQL via expressions."""
     from pyspark.sql import functions as F
 
     return F.format_string(
         "ent%04d", F.pmod(F.xxhash64(doc_id_col), F.lit(n_entities))
     )
-
-
-def entity_of_py(doc_id: str, n_entities: int = 16, spark=None) -> str:
-    """Driver/test-side equivalent of entity_of (uses Spark to evaluate
-    xxhash64 so the mapping is identical)."""
-    raise NotImplementedError("use entity_of on a DataFrame column")

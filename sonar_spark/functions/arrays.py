@@ -64,11 +64,6 @@ def chebyshev(a: Column, b: Column) -> Column:
     )
 
 
-def hamming(a: Column, b: Column) -> Column:
-    """Count of unequal positions (distance.go:187-195)."""
-    return asum(F.zip_with(a, b, lambda x, y: (x != y).cast("double")))
-
-
 def minkowski(a: Column, b: Column, p: float) -> Column:
     """Lp norm distance (distance.go:39-45)."""
     return F.pow(

@@ -24,6 +24,10 @@ WINDOW_TYPES = (
     "hann", "hamming", "blackman", "blackman_harris", "kaiser",
     "tukey", "rectangular", "bartlett", "welch",
 )
+# the reference's window parameters (windowing.go:205-372); every
+# window is symmetric (cosine denominators N-1)
+KAISER_BETA = 8.0
+TUKEY_ALPHA = 0.5
 
 
 def bessel_i0(x: float) -> float:
@@ -39,20 +43,11 @@ def bessel_i0(x: float) -> float:
     return total
 
 
-def window_coefficients(
-    wtype: str,
-    size: int,
-    *,
-    symmetric: bool = True,
-    beta: float = 8.0,
-    alpha: float = 0.5,
-) -> np.ndarray:
-    """Window coefficients (windowing.go:205-372). `symmetric`
-    switches the cosine denominators between N-1 and N (periodic);
-    Tukey/Bartlett/Welch/Rectangular ignore it, as upstream."""
+def window_coefficients(wtype: str, size: int) -> np.ndarray:
+    """Symmetric window coefficients (windowing.go:205-372)."""
     n = np.arange(size, dtype=np.float64)
     N = float(size)
-    den = float(size - 1) if symmetric else N
+    den = float(size - 1)
     if wtype == "hann":
         return 0.5 * (1.0 - np.cos(2 * np.pi * n / den))
     if wtype == "hamming":
@@ -69,13 +64,16 @@ def window_coefficients(
             - 0.01168 * np.cos(3 * arg)
         )
     if wtype == "kaiser":
-        i0b = bessel_i0(beta)
+        i0b = bessel_i0(KAISER_BETA)
         arg = 2.0 * n / den - 1.0
         return np.array(
-            [bessel_i0(beta * np.sqrt(max(1 - a * a, 0.0))) / i0b for a in arg]
+            [
+                bessel_i0(KAISER_BETA * np.sqrt(max(1 - a * a, 0.0))) / i0b
+                for a in arg
+            ]
         )
     if wtype == "tukey":
-        taper = int(alpha * N / 2.0)
+        taper = int(TUKEY_ALPHA * N / 2.0)
         c = np.ones(size)
         for i in range(size):
             if i < taper:
@@ -120,18 +118,11 @@ def bessel_i0_expr(x: Column) -> Column:
     return acc["s"]
 
 
-def window_coefficients_expr(
-    wtype: str,
-    size: int,
-    *,
-    symmetric: bool = True,
-    beta: float = 8.0,
-    alpha: float = 0.5,
-) -> Column:
+def window_coefficients_expr(wtype: str, size: int) -> Column:
     """array<double> of window coefficients as JVM expressions over
     F.sequence(0, size-1) — same formulas as window_coefficients."""
     N = float(size)
-    den = F.lit(float(size - 1) if symmetric else N)
+    den = F.lit(float(size - 1))
     idx = F.sequence(F.lit(0), F.lit(size - 1))
     pi = float(np.pi)
 
@@ -156,10 +147,10 @@ def window_coefficients_expr(
             - 0.01168 * F.cos(3 * (2 * pi * i / den))
         )
     if wtype == "kaiser":
-        i0b = bessel_i0_expr(F.lit(beta))
+        i0b = bessel_i0_expr(F.lit(KAISER_BETA))
         return tf(
             lambda i: bessel_i0_expr(
-                F.lit(beta)
+                F.lit(KAISER_BETA)
                 * F.sqrt(
                     F.greatest(
                         F.lit(1.0) - F.pow(2.0 * i / den - 1.0, F.lit(2.0)),
@@ -170,7 +161,7 @@ def window_coefficients_expr(
             / i0b
         )
     if wtype == "tukey":
-        taper = int(alpha * N / 2.0)
+        taper = int(TUKEY_ALPHA * N / 2.0)
         return tf(
             lambda i: F.when(
                 i < float(taper), 0.5 * (1.0 + F.cos(pi * i / taper - pi))

@@ -49,23 +49,31 @@ ROLLOFF_THRESHOLD = 0.85  # spectral_rolloff.go default
 CONTRAST_BANDS = 4  # scaled from the reference numBands for 16 bins
 
 
-def contrast_band_edges(num_bins: int, num_bands: int = CONTRAST_BANDS):
+def contrast_band_edges(num_bins: int):
     """Log-spaced contrast band edges, reproducing
     spectral_contrast.go:140-188 initializeBands on the token-analog
     frequency axis f_k = k (bin index), nyquist = num_bins - 1,
     min "frequency" = 1 (the 200 Hz floor maps to the first nonzero
-    bin). Returns (num_bands+1,) int edges; band b covers bins
-    [edges[b], edges[b+1]) — Go half-open slice semantics, so bin 0
-    and the top bin fall outside every band exactly as upstream."""
-    nyq = float(num_bins - 1)
-    lo, hi = np.log10(1.0), np.log10(nyq)
-    step = (hi - lo) / num_bands
+    bin). Edge i is the bin of frequency nyquist^(i / CONTRAST_BANDS),
+    truncated: the integer root floor((nyquist^i)^(1/CONTRAST_BANDS)),
+    found from a float estimate and corrected in integers, because the
+    float power truncates exact integer frequencies one bin low
+    (16^(3/4) gives 7.999...).  Edges are clamped to the top bin, then
+    forced monotonic (:179-184). Returns (CONTRAST_BANDS+1,) int
+    edges; band b covers bins [edges[b], edges[b+1]) — Go half-open
+    slice semantics, so bin 0 and the top bin fall outside every band
+    exactly as upstream."""
+    nyq = num_bins - 1
     edges = []
-    for i in range(num_bands + 1):
-        freq = 10.0 ** (lo + i * step)
-        b = int(freq * (num_bins - 1) / nyq)
-        edges.append(min(max(b, 0), num_bins - 1))
-    for i in range(1, num_bands + 1):  # force monotonic (:179-184)
+    for i in range(CONTRAST_BANDS + 1):
+        power = nyq**i
+        b = int(round(power ** (1.0 / CONTRAST_BANDS)))
+        while b**CONTRAST_BANDS > power:
+            b -= 1
+        while (b + 1) ** CONTRAST_BANDS <= power:
+            b += 1
+        edges.append(min(b, num_bins - 1))
+    for i in range(1, CONTRAST_BANDS + 1):
         if edges[i] <= edges[i - 1]:
             edges[i] = edges[i - 1] + 1
     return edges
@@ -412,25 +420,6 @@ def frame_features_flat(
     return out, doc_nf
 
 
-def percentile_r6(x: np.ndarray, p: float) -> float:
-    """Textbook Hyndman-Fan R-6 percentile: h = (n+1)p, linear interp,
-    clamped. NOTE: this is the method the reference's comment CLAIMS
-    to implement (percentiles.go:233 says "R-6, Excel default") but its
-    code actually computes h=(n-1)q+1, i.e. R-7 — see
-    kernels.percentile_method("linear") for the faithful reproduction
-    of the reference arithmetic. Kept as the textbook form the name
-    promises."""
-    s = np.sort(np.asarray(x, dtype=np.float64))
-    n = len(s)
-    h = (n + 1) * p
-    if h <= 1:
-        return float(s[0])
-    if h >= n:
-        return float(s[-1])
-    k = int(np.floor(h))
-    return float(s[k - 1] + (h - k) * (s[k] - s[k - 1]))
-
-
 def hz_to_mel(hz):
     """2595 log10(1 + hz/700) (mel_scale.go:18-21)."""
     return 2595.0 * np.log10(1.0 + np.asarray(hz, dtype=np.float64) / 700.0)
@@ -557,70 +546,6 @@ def _mfcc_mats(num_bins: int):
     if num_bins not in _MFCC_CACHE:
         _MFCC_CACHE[num_bins] = mfcc_matrices(num_bins)
     return _MFCC_CACHE[num_bins]
-
-
-# Reference percentile-method family (stats/percentiles.go:198-404).
-# Each entry maps (n, q) -> h, the 1-based fractional order statistic;
-# the value is then data[floor(h)-1] + frac * (data[ceil(h)-1] - ...).
-# NOTE the reference's own labels vs textbook Hyndman-Fan numbers:
-# "linear" (its default, percentiles.go:233-256) computes h=(n-1)q+1
-# which is textbook R-7 despite the comment claiming R-6; "weighted"
-# (:313-338) is h=nq (R-4-like); "median_unbiased" (:360-380) is
-# h=(n+1)/3 + (n-1)q/3 (NOT textbook R-8); "normal_unbiased"
-# (:383-404) is h=n/4 + 0.25 + q(n+0.5) (NOT textbook R-9). We
-# reproduce the reference arithmetic exactly, deviations included.
-_PCT_H = {
-    "linear": lambda n, q: (n - 1) * q + 1.0,
-    "weighted": lambda n, q: n * q,
-    "r_default": lambda n, q: (n - 1) * q + 1.0,
-    "median_unbiased": lambda n, q: (n + 1) / 3.0 + (n - 1) / 3.0 * q,
-    "normal_unbiased": lambda n, q: n / 4.0 + 0.25 + q * (n + 0.5),
-}
-
-PERCENTILE_METHODS = (
-    "linear", "lower", "higher", "midpoint", "weighted", "r_default",
-    "median_unbiased", "normal_unbiased",
-)
-
-
-def percentile_method(x: np.ndarray, q: float, method: str = "linear") -> float:
-    """The reference's 8 percentile methods (percentiles.go:198-404),
-    arithmetic reproduced exactly (see _PCT_H note on label vs
-    textbook-R-number mismatches). q in [0,1]; data sorted here."""
-    s = np.sort(np.asarray(x, dtype=np.float64))
-    n = len(s)
-    if n == 0:
-        raise ValueError("empty data")
-    if n == 1:
-        return float(s[0])
-    if method == "lower":  # percentiles.go:258-273 (R-1-like)
-        h = n * q
-        if h <= 1.0:
-            return float(s[0])
-        return float(s[min(int(np.ceil(h)) - 1, n - 1)])
-    if method == "higher":  # percentiles.go:275-290 (R-3-like)
-        h = n * q
-        if h < 1.0:
-            return float(s[0])
-        return float(s[min(int(np.floor(h)), n - 1)])
-    if method == "midpoint":  # percentiles.go:292-311 (R-2-like)
-        h = n * q
-        if h <= 1.0:
-            return float(s[0])
-        if h >= n:
-            return float(s[-1])
-        lo, hi = int(np.floor(h)) - 1, int(np.ceil(h)) - 1
-        return float(s[lo] if lo == hi else (s[lo] + s[hi]) / 2.0)
-    h = _PCT_H[method](n, q)
-    if h <= 1.0:
-        return float(s[0])
-    if h >= n:
-        return float(s[-1])
-    lo, hi = int(np.floor(h)) - 1, int(np.ceil(h)) - 1
-    if lo == hi:
-        return float(s[lo])
-    frac = h - np.floor(h)
-    return float(s[lo] + frac * (s[hi] - s[lo]))
 
 
 # ------------------------------------------------------------- IIR filters

@@ -39,6 +39,10 @@ _ALIGN_COLS = ["pair_id", "lag", "peak", "sharpness", "sidelobe", "snr",
                "second_peak", "confidence", "method", "dtw_dist",
                "dtw_offset", "offset", "time_stretch"]
 
+# phase-1 confidence at or below which a pair is re-scored with DTW
+# (the hybrid fallback trigger, alignment.go:316)
+_HYBRID_CONF_THRESHOLD = 0.7
+
 
 def build_doc_series(
     feats: DataFrame,
@@ -69,10 +73,10 @@ def align_pairs(
 ) -> DataFrame:
     """Align every (series_a, series_b) pair.
 
-    Phase 1: normalized xcorr (FFT above cfg.fft_threshold), peak lag
+    Phase 1: normalized xcorr (FFT above 1000 samples), peak lag
     + quality metrics + weighted confidence (0.55/0.22/0.12/0.06,
     alignment.go:234-240). Phase 2: rows with confidence <=
-    cfg.hybrid_conf_threshold re-scored with Sakoe-Chiba DTW
+    0.7 re-scored with Sakoe-Chiba DTW (band 50)
     (symmetric2); blended confidence 0.6*corr + 0.4*dtw and offset
     from the DTW path mean displacement (alignment.go:308-337,
     530-541). Output one row per pair."""
@@ -83,13 +87,9 @@ def align_pairs(
             for pid, sa, sb in zip(pdf[pair_id], pdf[a], pdf[b]):
                 sa = np.asarray(sa, dtype=np.float64)
                 sb = np.asarray(sb, dtype=np.float64)
-                lags, corr = kernels.xcorr_normalized(
-                    sa, sb, cfg.max_lag, cfg.fft_threshold
-                )
+                lags, corr = kernels.xcorr_normalized(sa, sb, cfg.max_lag)
                 m = kernels.xcorr_peak_metrics(lags, corr)
-                conf = kernels.xcorr_confidence(
-                    m, (cfg.w_peak, cfg.w_sharpness, cfg.w_sidelobe, cfg.w_snr)
-                )
+                conf = kernels.xcorr_confidence(m)
                 # time-stretch estimate: length ratio only in the
                 # xcorr phase (extractors/alignment.go:448-476)
                 ratio = len(sb) / len(sa) if len(sa) else 1.0
@@ -110,7 +110,7 @@ def align_pairs(
             ):
                 sa = np.asarray(sa, dtype=np.float64)
                 sb = np.asarray(sb, dtype=np.float64)
-                d = kernels.dtw_align(sa, sb, cfg.dtw_band)
+                d = kernels.dtw_align(sa, sb)
                 conf = 0.6 * p1conf + 0.4 * d["confidence"]
                 off = 0.6 * lag + 0.4 * d["offset"]
                 ratio = len(sb) / len(sa) if len(sa) else 1.0
@@ -129,14 +129,14 @@ def align_pairs(
         F.col(b).alias("series_b"),
     )
     p1 = inp.mapInPandas(phase1, schema=_ALIGN_SCHEMA)
-    return _hybrid_phase2(inp, p1, phase2, cfg)
+    return _hybrid_phase2(inp, p1, phase2)
 
 
-def _hybrid_phase2(inp, p1, phase2, cfg):
+def _hybrid_phase2(inp, p1, phase2):
     # selective recompute: join the low-confidence subset back to its
     # input series, run DTW, union with the confident subset
-    low = p1.where(F.col("confidence") <= cfg.hybrid_conf_threshold)
-    high = p1.where(F.col("confidence") > cfg.hybrid_conf_threshold)
+    low = p1.where(F.col("confidence") <= _HYBRID_CONF_THRESHOLD)
+    high = p1.where(F.col("confidence") > _HYBRID_CONF_THRESHOLD)
     low_inp = low.join(inp, "pair_id")
     p2 = low_inp.mapInPandas(phase2, schema=_ALIGN_SCHEMA)
     return high.unionByName(p2)
@@ -144,7 +144,6 @@ def _hybrid_phase2(inp, p1, phase2, cfg):
 
 def align_pairs_dtw(
     pairs: DataFrame,
-    cfg: AlignmentConfig = AlignmentConfig(),
     *,
     pair_id: str = "pair_id",
     a: str = "series_a",
@@ -168,7 +167,7 @@ def align_pairs_dtw(
             ):
                 sa = np.asarray(sa, dtype=np.float64)
                 sb = np.asarray(sb, dtype=np.float64)
-                d = kernels.dtw_align(sa, sb, cfg.dtw_band)
+                d = kernels.dtw_align(sa, sb)
                 eff = (
                     min(max(len(sa), len(sb)) / d["path_len"], 1.0)
                     if d["path_len"]
@@ -274,7 +273,7 @@ def multi_feature_align(
                 ),
             )
         else:
-            r = align_pairs_dtw(sub, cfg).select(
+            r = align_pairs_dtw(sub).select(
                 "pair_id", "offset", "confidence", "similarity", "quality"
             )
         per_feature.append(r.withColumn("feature_type", F.lit(ftype)))

@@ -324,8 +324,8 @@ def allpairs_cosine(
     Output: (id_a, id_b, s) with id_a < id_b, s >= threshold, s RAW
     (caller rounds at its quantization boundary).  directed=True
     emits LEFT x ALL instead (id_a from the left side only, every
-    id_b != id_a) — the anchors-bounded candidate shape
-    hard_negatives consumes when the left side is pre-filtered."""
+    id_b != id_a) — the anchors-bounded candidate shape of
+    hard-negative mining when the left side is pre-filtered."""
 
     def gen(batches):
         import pyarrow as pa
@@ -372,7 +372,7 @@ def hard_negatives_allpairs(
     each task scores its left block against the full executor-side
     table exactly like allpairs_cosine (kernels.cosine_block), and —
     because every left row sees its COMPLETE similarity row — reduces
-    it in place to the hard_negatives output: n_excluded =
+    it in place to the hard-negative rows: n_excluded =
     #(s >= pos_threshold), top-k of the s < pos_threshold candidates
     by (s desc, neighbor id asc) on RAW doubles, rows only for
     anchors (n_excluded >= 1).
@@ -383,8 +383,9 @@ def hard_negatives_allpairs(
     shape) degenerates on this corpus because ~100% of vectors have a
     positive at 0.4.  Fusing the rank reduction into the kernel emits
     exactly the <= k output rows per anchor — no pair row ever leaves
-    the task.  Equivalence to hard_negatives(allpairs_cosine(
-    threshold=-1)) is certified by tests/test_negatives.py::
+    the task.  Equivalence to the windowed reference over
+    allpairs_cosine(threshold=-1) (tests/test_negatives.py
+    hard_negatives) is certified by tests/test_negatives.py::
     test_hard_negatives_kernel_equals_windowed.
 
     Output: query_id, rank (int), neighbor_id, cosine_sim (6dp via

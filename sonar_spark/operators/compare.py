@@ -12,8 +12,8 @@ Semantics reproduced:
   join predicate so Catalyst pushes it into the join;
 - match classification thresholds {.95,.85,.75,.6}
   (comparison.go:1040-1052);
-- FindBestMatches: threshold filter + per-query rank, top
-  max_candidates (comparison.go:197-263).
+- FindBestMatches: similarity threshold 0.6 + per-query rank, top
+  50 candidates (comparison.go:197-263).
 
 Physical: catalog side broadcast when small (local: always); the only
 shuffle is the per-query top-k window.
@@ -41,15 +41,20 @@ MFCC_STATS = [f"mfcc{i}_{s}" for i in range(6) for s in ("mean", "std")]
 # (comparison.go:673-688: cosine of the mean chroma vectors); used
 # when present in the input
 CHROMA_STATS = [f"chroma{i}" for i in range(12)]
+# FindBestMatches defaults (comparison.go:197-263) and the match-class
+# thresholds (comparison.go:1040-1052)
+_SIMILARITY_THRESHOLD = 0.6
+_MAX_CANDIDATES = 50
+_MATCH_THRESHOLDS = (0.95, 0.85, 0.75, 0.6)
 
 
 def _stats_vec(prefix: str, cols: list[str]) -> Column:
     return F.array(*[F.col(f"{prefix}{c}").cast("double") for c in cols])
 
 
-def match_class(sim: Column, cfg: ComparisonConfig) -> Column:
+def match_class(sim: Column) -> Column:
     """Reference match-class thresholds (comparison.go:1040-1052)."""
-    t = cfg.thresholds
+    t = _MATCH_THRESHOLDS
     return (
         F.when(sim >= t[0], "excellent")
         .when(sim >= t[1], "good")
@@ -84,7 +89,7 @@ def compare_topk(
 
     Output: query_id, match_id, rank, similarity, match_class,
     sim_energy, sim_moments[, sim_minhash][, sim_mfcc]."""
-    k = k or cfg.max_candidates
+    k = k or _MAX_CANDIDATES
     # MFCC / minhash groups participate when the fingerprints carry
     # them (availability semantics of comparison.go:168-196: only
     # present feature groups are scored)
@@ -224,7 +229,7 @@ def compare_topk(
         availability.alias("feature_coverage"),
         temporal_alignment.alias("temporal_alignment"),
         confidence.alias("confidence"),
-    ).where(F.col("similarity") >= cfg.similarity_threshold)
+    ).where(F.col("similarity") >= _SIMILARITY_THRESHOLD)
     ranked = topk_per_group(
         scored,
         "query_id",
@@ -232,7 +237,7 @@ def compare_topk(
         k,
     )
     return ranked.withColumn(
-        "match_class", match_class(F.col("similarity"), cfg)
+        "match_class", match_class(F.col("similarity"))
     )
 
 

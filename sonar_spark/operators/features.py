@@ -88,10 +88,7 @@ def frame_features_arrow(
     if frame_cfg.window_type != "rectangular":
         from ..functions.windows import window_coefficients
 
-        wcoef = window_coefficients(
-            frame_cfg.window_type, W,
-            beta=frame_cfg.kaiser_beta, alpha=frame_cfg.tukey_alpha,
-        )
+        wcoef = window_coefficients(frame_cfg.window_type, W)
     else:
         wcoef = None
 

@@ -34,6 +34,10 @@ _SIG_SCHEMA = (
     "doc_id string, source string, n_tok int, minhash array<long>, "
     "simhash long, bands array<long>"
 )
+# token-shingle size of the MinHash / SimHash signatures and the seed
+# of the MinHash permutations
+_SHINGLE_K = 4
+_MINHASH_SEED = 42
 
 
 def exact_dedup(
@@ -63,7 +67,7 @@ def minhash_fingerprints(
 ) -> DataFrame:
     """Token table -> (doc_id, source, n_tok, minhash[num_hashes],
     simhash, bands[bands]) — one narrow Arrow pass."""
-    k, nh, nb, seed = cfg.k_shingle, cfg.num_hashes, cfg.bands, cfg.seed
+    nh, nb = cfg.num_hashes, cfg.bands
     if nh % nb != 0:
         raise ValueError("num_hashes must be divisible by bands")
 
@@ -75,8 +79,10 @@ def minhash_fingerprints(
             tok = batch.column(batch.schema.get_field_index("tokens"))
             lens = pc.list_value_length(tok).to_numpy().astype(np.int64)
             vals = tok.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            sig = kernels.minhash_batch(vals, lens, k, nh, seed)
-            sim = kernels.simhash_batch(vals, lens, k)
+            sig = kernels.minhash_batch(
+                vals, lens, _SHINGLE_K, nh, _MINHASH_SEED
+            )
+            sim = kernels.simhash_batch(vals, lens, _SHINGLE_K)
             bh = kernels.band_hashes(sig, nb)
             n = len(lens)
             sig_arr = pa.ListArray.from_arrays(

@@ -17,83 +17,18 @@ are impossible by construction.
 
 The dense index is the scale-sensitive part: row_number() over a
 global ORDER BY is a single-partition window (fine in an oracle,
-wrong on 100 TB).  global_dense_index computes the same numbers with
-bounded parallelism loss: deterministic range buckets from a tiny
-min/max aggregate -> per-bucket counts (a bucket-bounded agg) ->
-cumulative offsets over the BUCKET table (a window over <= B rows)
--> broadcast offset join + within-bucket row_number (windows
-partitioned by bucket, fully parallel).  This is the classic
-zipWithIndex two-pass, expressed relationally.
+wrong on 100 TB).  global_dense_index computes the same numbers as
+an exclusive prefix count with sharding.global_cumsum, the
+relational zipWithIndex two-pass.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sketch import md5_60
-
-
-def range_buckets(
-    df: DataFrame, col: str, buckets: int = 32
-) -> DataFrame:
-    """Add __b = deterministic, order-respecting bucket id (monotone
-    in `col`) from one tiny min/max aggregate — the first pass of
-    the relational zipWithIndex machinery, shared by
-    global_dense_index and sharding.global_cumsum.
-
-    NUMERIC-ONLY CONTRACT (ADVICE r5): the bucket formula does
-    arithmetic on `col`, so `col` must be a numeric (or date/
-    timestamp-as-number) column; a string column would yield null
-    buckets (rows silently dropped by the downstream inner join) or
-    a numeric-bucket/lexicographic-window hybrid order.  Asserted
-    here rather than documented-only."""
-    import pyspark.sql.types as T
-
-    dt = df.schema[col].dataType
-    if not isinstance(
-        dt, (T.NumericType, T.DateType, T.TimestampType)
-    ):
-        raise TypeError(
-            f"range_buckets requires a numeric column; {col} is "
-            f"{dt.simpleString()}"
-        )
-    mm = df.groupBy().agg(
-        F.min(col).alias("__lo"), F.max(col).alias("__hi")
-    )
-    return df.crossJoin(F.broadcast(mm)).withColumn(
-        "__b",
-        F.when(
-            F.col("__hi") > F.col("__lo"),
-            F.floor(
-                (F.col(col) - F.col("__lo")).cast("double")
-                * buckets
-                / (F.col("__hi") - F.col("__lo") + 1)
-            ).cast("int"),
-        ).otherwise(F.lit(0)),
-    ).drop("__lo", "__hi")
-
-
-def bucket_offsets(per_bucket: DataFrame, val: str) -> DataFrame:
-    """(__b, __off = sum of `val` over all LOWER buckets) via a
-    triangle self-join over the <= `buckets`-row table (no
-    WindowExec: a global-ordered window would plan single-partition,
-    and Catalyst folds any constant partition key away) — quadratic
-    only in the BUCKET count."""
-    return (
-        per_bucket.alias("a")
-        .join(
-            per_bucket.select(
-                F.col("__b").alias("__b2"), F.col(val).alias("__v2")
-            ),
-            F.col("__b2") < F.col("__b"),
-            "left",
-        )
-        .groupBy("__b")
-        .agg(
-            F.coalesce(F.sum("__v2"), F.lit(0)).cast("long").alias("__off")
-        )
-    )
+from .sharding import global_cumsum
 
 
 def global_dense_index(
@@ -101,18 +36,18 @@ def global_dense_index(
 ) -> DataFrame:
     """Add gidx = 0-based dense rank of `col` over the whole table
     (== row_number() OVER (ORDER BY col) - 1), without a global
-    single-partition sort.  `col` values must be unique."""
-    b = range_buckets(df, col, buckets)
-    counts = b.groupBy("__b").agg(F.count("*").alias("__c"))
-    offsets = bucket_offsets(counts, "__c")
-    win = Window.partitionBy("__b").orderBy(col)
+    single-partition sort: the rank is the exclusive prefix count,
+    i.e. sharding.global_cumsum over a constant-1 column.  `col`
+    values must be unique."""
     return (
-        b.join(F.broadcast(offsets), "__b")
-        .withColumn(
-            "gidx",
-            (F.row_number().over(win) - 1 + F.col("__off")).cast("long"),
+        global_cumsum(
+            df.withColumn("__one", F.lit(1)),
+            col=col,
+            val="__one",
+            buckets=buckets,
         )
-        .drop("__b", "__off")
+        .withColumnRenamed("cum_before", "gidx")
+        .drop("__one")
     )
 
 
@@ -179,70 +114,4 @@ def negative_pairs(
     )
     return probes.join(neg, "neg_gidx").select(
         id_col, "j", "neg_gidx", "neg_doc_id"
-    )
-
-
-def hard_negatives(
-    pairs: DataFrame,
-    *,
-    k: int = 3,
-    pos_threshold: float = 0.4,
-    directed: bool = False,
-) -> DataFrame:
-    """Hard-negative mining for contrastive training: for every
-    anchor that has at least one POSITIVE (cosine >= pos_threshold —
-    the embedding near-dup rule), rank all other vectors by cosine
-    and keep the top-k BELOW the positive threshold — the closest
-    vectors that are not (near-)duplicates, i.e. the negatives a
-    contrastive loss learns the most from (in-batch-uniform's
-    targeted complement; see negative_pairs for the uniform draw).
-
-    `pairs` is the scored pair table from the allpairs_cosine
-    kernel (LSH/IVF candidates at corpus scale): undirected
-    (id_a < id_b) by default, or directed=True for the
-    anchors-bounded LEFT x ALL shape (id_a = anchor) — then no
-    mirror union is needed and the plan is candidate-linear in the
-    anchor set.
-
-    Output per anchor: rank (1..k by sim desc, neighbor id
-    tie-break), neighbor_id, cosine_sim, and n_excluded — how many
-    candidates the positive filter removed (certifies the exclusion
-    branch fired).  One mirror-union + two windows over the
-    anchors-bounded candidate set.
-    """
-    sym = pairs.select(
-        F.col("id_a").alias("query_id"),
-        F.col("id_b").alias("neighbor_id"),
-        "s",
-    )
-    if not directed:
-        sym = sym.unionByName(
-            pairs.select(
-                F.col("id_b").alias("query_id"),
-                F.col("id_a").alias("neighbor_id"),
-                "s",
-            )
-        )
-    anchors = (
-        sym.where(F.col("s") >= pos_threshold)
-        .select("query_id")
-        .distinct()
-    )
-    cand = sym.join(anchors, "query_id")
-    wq = Window.partitionBy("query_id")
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("s").desc(), F.col("neighbor_id").asc()
-    )
-    n_exc = F.sum(
-        (F.col("s") >= pos_threshold).cast("long")
-    ).over(wq)
-    ranked = cand.withColumn("n_excluded", n_exc).where(
-        F.col("s") < pos_threshold
-    ).withColumn("rank", F.row_number().over(wr))
-    return ranked.where(F.col("rank") <= k).select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        "neighbor_id",
-        F.round("s", 6).alias("cosine_sim"),
-        F.col("n_excluded").cast("long").alias("n_excluded"),
     )

@@ -5,7 +5,7 @@ aggregation; the fractional rank h is computed from the group size
 and the needed order statistics are picked with max(when(rn == k)).
 
 The reference's own labels deviate from the textbook Hyndman-Fan
-numbers — see kernels._PCT_H; the arithmetic here matches the Go
+numbers — see tests/golden._PCT_H; the arithmetic here matches the Go
 code exactly, including its "linear" (claimed R-6, actually R-7
 h=(n-1)q+1), "median_unbiased" h=(n+1)/3+(n-1)q/3 and
 "normal_unbiased" h=n/4+0.25+q(n+0.5) forms.
@@ -16,7 +16,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..kernels import PERCENTILE_METHODS
+PERCENTILE_METHODS = (
+    "linear", "lower", "higher", "midpoint", "weighted", "r_default",
+    "median_unbiased", "normal_unbiased",
+)
 
 __all__ = [
     "PERCENTILE_METHODS",
@@ -167,7 +170,7 @@ def percentile_methods(
     exactly the histogram row with cum-c < k <= cum, so
     max(when(rn == k)) == max(when(cum-c < k AND k <= cum)) — the
     quantile_histogram correspondence; all h/interpolation
-    arithmetic is unchanged.  Certified against the numpy sort kernel
+    arithmetic is unchanged.  Certified against the numpy sort golden
     (tests/test_stats_ops.py::test_percentile_methods_spark_matches_
     kernel) including the heavy-ties case where the range lookup
     differs structurally from rn ==."""

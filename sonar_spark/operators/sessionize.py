@@ -149,21 +149,6 @@ def detect_voice_activity(
     return segs.where(F.col("is_active") == 1).drop("is_active")
 
 
-def silence_ratio(
-    features: DataFrame,
-    *,
-    key: str = "doc_id",
-    energy: str = "rms_energy",
-    threshold: Column | float = 0.0,
-) -> DataFrame:
-    """Fraction of silent frames per key (ComputeSilenceRatio,
-    silence_detection.go:171-193)."""
-    thr = threshold if isinstance(threshold, Column) else F.lit(float(threshold))
-    return features.groupBy(key).agg(
-        F.avg((F.col(energy) < thr).cast("double")).alias("silence_ratio")
-    )
-
-
 def combine_onsets(
     onsets_a: DataFrame,
     onsets_b: DataFrame,

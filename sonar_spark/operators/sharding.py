@@ -10,8 +10,9 @@ of the target (greedy boundary), reproducible across runs/engines.
 The scale-sensitive piece is the GLOBAL prefix sum: sum() OVER
 (ORDER BY doc_id) is a single-partition window on 100 TB.
 global_cumsum computes the same numbers with the relational
-zipWithIndex two-pass (operators/negatives.global_dense_index):
-deterministic range buckets -> per-bucket sums (tiny agg) ->
+zipWithIndex two-pass (operators/negatives.global_dense_index is the
+same plan over a constant-1 column): deterministic range buckets
+from a tiny min/max aggregate -> per-bucket sums (tiny agg) ->
 cumulative offsets over the <= B-row bucket table -> broadcast join
 + within-bucket running sum (windows partitioned by bucket, fully
 parallel).
@@ -22,7 +23,66 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .negatives import bucket_offsets, range_buckets
+
+def range_buckets(
+    df: DataFrame, col: str, buckets: int = 32
+) -> DataFrame:
+    """Add __b = deterministic, order-respecting bucket id (monotone
+    in `col`) from one tiny min/max aggregate — the first pass of
+    global_cumsum.
+
+    NUMERIC-ONLY CONTRACT (ADVICE r5): the bucket formula does
+    arithmetic on `col`, so `col` must be a numeric (or date/
+    timestamp-as-number) column; a string column would yield null
+    buckets (rows silently dropped by the downstream inner join) or
+    a numeric-bucket/lexicographic-window hybrid order.  Asserted
+    here rather than documented-only."""
+    import pyspark.sql.types as T
+
+    dt = df.schema[col].dataType
+    if not isinstance(
+        dt, (T.NumericType, T.DateType, T.TimestampType)
+    ):
+        raise TypeError(
+            f"range_buckets requires a numeric column; {col} is "
+            f"{dt.simpleString()}"
+        )
+    mm = df.groupBy().agg(
+        F.min(col).alias("__lo"), F.max(col).alias("__hi")
+    )
+    return df.crossJoin(F.broadcast(mm)).withColumn(
+        "__b",
+        F.when(
+            F.col("__hi") > F.col("__lo"),
+            F.floor(
+                (F.col(col) - F.col("__lo")).cast("double")
+                * buckets
+                / (F.col("__hi") - F.col("__lo") + 1)
+            ).cast("int"),
+        ).otherwise(F.lit(0)),
+    ).drop("__lo", "__hi")
+
+
+def bucket_offsets(per_bucket: DataFrame, val: str) -> DataFrame:
+    """(__b, __off = sum of `val` over all LOWER buckets) via a
+    triangle self-join over the <= `buckets`-row table (no
+    WindowExec: a global-ordered window would plan single-partition,
+    and Catalyst folds any constant partition key away) — quadratic
+    only in the BUCKET count."""
+    return (
+        per_bucket.alias("a")
+        .join(
+            per_bucket.select(
+                F.col("__b").alias("__b2"), F.col(val).alias("__v2")
+            ),
+            F.col("__b2") < F.col("__b"),
+            "left",
+        )
+        .groupBy("__b")
+        .agg(
+            F.coalesce(F.sum("__v2"), F.lit(0)).cast("long").alias("__off")
+        )
+    )
 
 
 def global_cumsum(

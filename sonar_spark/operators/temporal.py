@@ -1,20 +1,19 @@
 """Temporal long-tail operators (SURVEY §2.9): tempo estimation via
 inter-onset-interval histogram (reference
 algorithms/temporal/tempo_estimation.go:22-232), attack/decay times
-around detected peaks (temporal/attack_decay.go:21-189), and the
-smoothed envelope (temporal/envelope.go:18-136).
+around detected peaks (temporal/attack_decay.go:21-189), the
+Hilbert-approximation envelope (temporal/envelope.go:76-103), and
+fundamental-frequency / pitch detection and tracking.
 
-All window functions + groupBy — no Python.
+Window functions + groupBy, except the per-frame pitch detector and
+tracker, which run numpy / a per-stream state machine in
+mapInArrow / mapInPandas.
 """
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .normalize import moving_average
 
 
 def tempo_estimate(
@@ -110,22 +109,6 @@ def attack_decay(
         F.col("__peak_v").alias("peak_value"),
         attack.alias("attack_frames"),
         decay.alias("decay_frames"),
-    )
-
-
-def envelope(
-    features: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    signal: str = "rms_energy",
-    smooth_k: int = 2,
-) -> DataFrame:
-    """Smoothed per-frame envelope (envelope.go:18-136: framewise rms
-    + moving-average smoothing)."""
-    return moving_average(
-        features, signal, k=smooth_k, group=key, order=order,
-        out_col="envelope",
     )
 
 
@@ -457,20 +440,25 @@ def envelope_hilbert(
     return df.withColumn(out_col, F.sqrt(v * v + imag * imag))
 
 
+# NSDF pitch detection on the token-length series: the reference's
+# defaults (pitch_detection.go) on the token analog — sample-rate
+# analog 32, pitch band 1-16, autocorrelation peak threshold 0.3, the
+# MinConfidence gate 0.5, and the salience boost / keep bands (its
+# 200-800 / 100-1000 Hz bands scaled by sr_analog/8000).
+_SAMPLE_RATE = 32.0
+_MIN_FREQ, _MAX_FREQ = 1.0, 16.0
+_AUTOCORR_THRESHOLD = 0.3
+_MIN_CONFIDENCE = 0.5
+_BOOST_BAND = (0.8, 3.2)
+_KEEP_BAND = (0.4, 4.0)
+
+
 def pitch_nsdf(
     vals: DataFrame,
     *,
-    key="doc_id",
+    key: str = "doc_id",
     pos: str = "pos",
     val: str = "v",
-    sample_rate: float = 32.0,
-    min_freq: float = 1.0,
-    max_freq: float = 16.0,
-    autocorr_threshold: float = 0.3,
-    min_confidence: float = 0.5,
-    boost_band: tuple = (0.8, 3.2),
-    keep_band: tuple = (0.4, 4.0),
-    gate: bool = True,
 ) -> DataFrame:
     """NSDF (McLeod-style) pitch detection
     (tonal/pitch_detection.go:485-553 + postProcessResult :767-875):
@@ -484,9 +472,7 @@ def pitch_nsdf(
     - clarity = (best - second)/best (best alone -> its confidence);
       strength = (periodicity + voicing)/2 (both equal confidence,
       as written); salience = confidence boosted 1.2x inside the
-      perceptual band / cut 0.8x outside the keep band, capped at 1
-      (the reference's 200-800 / 100-1000 Hz bands scaled by
-      sr_analog/8000);
+      perceptual band / cut 0.8x outside the keep band, capped at 1;
     - the octave-correction history is empty on a single-series call
       (applyOctaveCorrection returns unchanged, :793-800);
     - the MinConfidence = 0.5 gate zeroes pitch + confidence AFTER
@@ -494,46 +480,30 @@ def pitch_nsdf(
 
     All sums are exact integer arithmetic on the token-length
     series, so both engines agree on every comparison without
-    rounding.  Output: key..., pitch, confidence, clarity, strength,
-    salience.
-
-    ``key`` may be a single column name or a list (e.g.
-    ``["doc_id", "frame_idx"]`` for per-frame stream detection
-    feeding :func:`pitch_track`); ``gate=False`` skips the
-    MinConfidence zeroing so the stream post-processor can apply the
-    reference's octave-correction-before-gate order (DetectPitch
-    :267 runs postProcessResult with history before the gate)."""
-    keys = [key] if isinstance(key, str) else list(key)
+    rounding.  Output: key, pitch, confidence, clarity, strength,
+    salience."""
     d = vals.select(
-        *keys, F.col(pos).alias("__p"), F.col(val).cast("double").alias("__v")
+        key, F.col(pos).alias("__p"), F.col(val).cast("double").alias("__v")
     )
-    half = d.groupBy(*keys).agg(
+    half = d.groupBy(key).agg(
         F.floor(F.count("*") / 2).cast("int").alias("__hn")
     )
-    a = d.join(F.broadcast(half), keys).where(F.col("__p") < F.col("__hn"))
+    a = d.join(F.broadcast(half), key).where(F.col("__p") < F.col("__hn"))
     taus = half.withColumn(
         "tau", F.explode(F.sequence(F.lit(0), F.col("__hn") - 1))
-    ).select(
-        *[F.col(k).alias(f"__kt{i}") for i, k in enumerate(keys)], "tau"
-    )
-    cond_t = reduce(
-        lambda x, y: x & y,
-        [F.col(f"__kt{i}") == F.col(k) for i, k in enumerate(keys)],
-    )
-    at = a.join(taus, cond_t).drop(
-        *[f"__kt{i}" for i in range(len(keys))]
-    )
+    ).select(F.col(key).alias("__kt"), "tau")
+    at = a.join(taus, F.col("__kt") == F.col(key)).drop("__kt")
     b = d.select(
-        *[F.col(k).alias(f"__kb{i}") for i, k in enumerate(keys)],
+        F.col(key).alias("__kb"),
         F.col("__p").alias("__pb"),
         F.col("__v").alias("__vb"),
     )
-    cond_b = reduce(
-        lambda x, y: x & y,
-        [F.col(f"__kb{i}") == F.col(k) for i, k in enumerate(keys)],
+    j = at.join(
+        b,
+        (F.col("__kb") == F.col(key))
+        & (F.col("__pb") == F.col("__p") + F.col("tau")),
     )
-    j = at.join(b, cond_b & (F.col("__pb") == F.col("__p") + F.col("tau")))
-    s = j.groupBy(*keys, "tau").agg(
+    s = j.groupBy(key, "tau").agg(
         F.sum(F.col("__v") * F.col("__vb")).alias("__acf"),
         F.sum(F.col("__v") * F.col("__v")).alias("__m1"),
         F.sum(F.col("__vb") * F.col("__vb")).alias("__m2"),
@@ -542,35 +512,35 @@ def pitch_nsdf(
         F.col("__m1") + F.col("__m2") > 0,
         2.0 * F.col("__acf") / (F.col("__m1") + F.col("__m2")),
     ).otherwise(F.lit(0.0))
-    w = Window.partitionBy(*keys).orderBy("tau")
-    x = s.select(*keys, "tau", nsdf.alias("__nd")).select(
-        *keys,
+    w = Window.partitionBy(key).orderBy("tau")
+    x = s.select(key, "tau", nsdf.alias("__nd")).select(
+        key,
         "tau",
         "__nd",
         F.lag("__nd").over(w).alias("__pv"),
         F.lead("__nd").over(w).alias("__nx"),
     )
-    freq = F.lit(sample_rate) / F.col("tau").cast("double")
+    freq = F.lit(_SAMPLE_RATE) / F.col("tau").cast("double")
     cand = x.where(
         (F.col("tau") >= 1)
         & (F.col("__nd") > F.col("__pv"))
         & (F.col("__nd") > F.col("__nx"))
-        & (F.col("__nd") > autocorr_threshold)
-        & (freq >= min_freq)
-        & (freq <= max_freq)
-    ).select(*keys, "tau", F.col("__nd").alias("__conf"), freq.alias("__f"))
+        & (F.col("__nd") > _AUTOCORR_THRESHOLD)
+        & (freq >= _MIN_FREQ)
+        & (freq <= _MAX_FREQ)
+    ).select(key, "tau", F.col("__nd").alias("__conf"), freq.alias("__f"))
     rn = F.row_number().over(
-        Window.partitionBy(*keys).orderBy(
+        Window.partitionBy(key).orderBy(
             F.col("__conf").desc(), F.col("tau").asc()
         )
     )
     top2 = cand.withColumn("__rn", rn).where(F.col("__rn") <= 2)
-    agg = top2.groupBy(*keys).agg(
+    agg = top2.groupBy(key).agg(
         F.max(F.when(F.col("__rn") == 1, F.col("__f"))).alias("__pitch"),
         F.max(F.when(F.col("__rn") == 1, F.col("__conf"))).alias("__c1"),
         F.max(F.when(F.col("__rn") == 2, F.col("__conf"))).alias("__c2"),
     )
-    base = d.select(*keys).distinct().join(agg, keys, "left")
+    base = d.select(key).distinct().join(agg, key, "left")
     conf = F.coalesce(F.col("__c1"), F.lit(0.0))
     pitch = F.coalesce(F.col("__pitch"), F.lit(0.0))
     clarity = F.when(
@@ -582,16 +552,16 @@ def pitch_nsdf(
     strength = (conf + conf) / 2.0
     sal0 = conf
     sal1 = F.when(
-        (pitch >= boost_band[0]) & (pitch <= boost_band[1]),
+        (pitch >= _BOOST_BAND[0]) & (pitch <= _BOOST_BAND[1]),
         sal0 * 1.2,
     ).otherwise(sal0)
     sal2 = F.when(
-        (pitch < keep_band[0]) | (pitch > keep_band[1]), sal1 * 0.8
+        (pitch < _KEEP_BAND[0]) | (pitch > _KEEP_BAND[1]), sal1 * 0.8
     ).otherwise(sal1)
     salience = F.least(sal2, F.lit(1.0))
-    gated = (conf < min_confidence) if gate else F.lit(False)
+    gated = conf < _MIN_CONFIDENCE
     return base.select(
-        *keys,
+        key,
         F.when(gated, F.lit(0.0)).otherwise(pitch).alias("pitch"),
         F.when(gated, F.lit(0.0)).otherwise(conf).alias("confidence"),
         clarity.alias("clarity"),
@@ -708,6 +678,10 @@ def voice_quality_full(
 
 
 OCTAVE_RATIOS = (0.5, 2.0, 1.0 / 3.0, 3.0)
+# the stream post-processor's median smoothing window and history cap
+# (pitch_detection.go:881-921)
+_MEDIAN_FILTER = 3
+_MAX_HISTORY = 20
 
 
 def _median_positive(values: list[float]) -> float:
@@ -723,19 +697,12 @@ def _median_positive(values: list[float]) -> float:
     return filt[n // 2]
 
 
-def track_pitch_sequence(
-    frames: list[tuple[float, float]],
-    *,
-    min_confidence: float = 0.5,
-    median_filter: int = 3,
-    max_history: int = 20,
-    boost_band: tuple = (0.8, 3.2),
-    keep_band: tuple = (0.4, 4.0),
-):
+class PitchTracker:
     """Scalar port of the reference's per-stream pitch
     post-processing state (ProcessAudioStream
-    pitch_detection.go:1016-1029 driving DetectPitch :225-279):
-    per frame, in order —
+    pitch_detection.go:1016-1029 driving DetectPitch :225-279): the
+    pitchHistory + previousPitch of one stream.  ``step`` processes
+    one frame, in order —
 
     - octave correction (:793-827): with >= 3 of the last 5 history
       pitches, the FIRST ratio in {0.5, 2, 1/3, 3} whose expected
@@ -754,41 +721,12 @@ def track_pitch_sequence(
       history pitches (sample stddev, n-1), 0 below 3 history / 2
       valid entries.
 
-    Input: [(pitch, confidence)] in frame order (6-dp pre-rounded —
-    the quantized interface the DuckDB recursive-CTE oracle
-    replays).  Yields per frame:
-    (pitch_corrected, pitch_smoothed, f0_multiple, salience,
-    stability)."""
-    tr = PitchTracker(
-        min_confidence=min_confidence,
-        median_filter=median_filter,
-        max_history=max_history,
-        boost_band=boost_band,
-        keep_band=keep_band,
-    )
-    return [tr.step(p, c) for p, c in frames]
-
-
-class PitchTracker:
-    """The per-stream state (pitchHistory + previousPitch) behind
-    :func:`track_pitch_sequence`; ``step`` processes one frame and
-    returns (pitch_corrected, pitch_smoothed, f0_multiple, salience,
+    Input per frame: (pitch, confidence), 6-dp pre-rounded — the
+    quantized interface the DuckDB recursive-CTE oracle replays.
+    Returns (pitch_corrected, pitch_smoothed, f0_multiple, salience,
     stability).  ``reset`` starts a new stream."""
 
-    def __init__(
-        self,
-        *,
-        min_confidence: float = 0.5,
-        median_filter: int = 3,
-        max_history: int = 20,
-        boost_band: tuple = (0.8, 3.2),
-        keep_band: tuple = (0.4, 4.0),
-    ):
-        self.min_confidence = min_confidence
-        self.median_filter = median_filter
-        self.max_history = max_history
-        self.boost_band = boost_band
-        self.keep_band = keep_band
+    def __init__(self):
         self.reset()
 
     def reset(self) -> None:
@@ -812,27 +750,23 @@ class PitchTracker:
                             p, f0m = e, r
                         break
         sal = c
-        if self.boost_band[0] <= p <= self.boost_band[1]:
+        if _BOOST_BAND[0] <= p <= _BOOST_BAND[1]:
             sal *= 1.2
-        if p < self.keep_band[0] or p > self.keep_band[1]:
+        if p < _KEEP_BAND[0] or p > _KEEP_BAND[1]:
             sal *= 0.8
         sal = min(sal, 1.0)
-        if c < self.min_confidence:
+        if c < _MIN_CONFIDENCE:
             p, c = 0.0, 0.0
         hist.append(p)
-        if len(hist) > self.max_history:
-            del hist[: len(hist) - self.max_history]
+        if len(hist) > _MAX_HISTORY:
+            del hist[: len(hist) - _MAX_HISTORY]
         sm = p
         if len(hist) > 1:
-            # Go gates on len(getRecentPitches(MedianFilter)) >= 3, i.e.
-            # min(median_filter, len(hist)) >= 3: with median_filter 1-2
-            # the window never reaches 3 entries and the reference falls
-            # through to exponential smoothing (pitch_detection.go:905-921).
-            if (
-                self.median_filter > 0
-                and min(self.median_filter, len(hist)) >= 3
-            ):
-                sm = _median_positive(hist[-self.median_filter:])
+            # Go gates on len(getRecentPitches(MedianFilter)) >= 3: a
+            # shorter history falls through to exponential smoothing
+            # (pitch_detection.go:905-921).
+            if len(hist) >= _MEDIAN_FILTER:
+                sm = _median_positive(hist[-_MEDIAN_FILTER:])
             else:
                 sm = 0.3 * p + 0.7 * self.prev_smoothed
         st = 0.0
@@ -856,14 +790,9 @@ def pitch_track(
     order: str = "frame_idx",
     pitch_col: str = "pitch",
     conf_col: str = "confidence",
-    min_confidence: float = 0.5,
-    median_filter: int = 3,
-    max_history: int = 20,
-    boost_band: tuple = (0.8, 3.2),
-    keep_band: tuple = (0.4, 4.0),
 ) -> DataFrame:
     """Pitch temporal post-processing over per-frame raw detections
-    (see :func:`track_pitch_sequence`).
+    (see :class:`PitchTracker`).
 
     Shape: ONE shuffle (repartition on the key) + sortWithinPartitions
     + mapInPandas streaming a per-key state machine over the sorted
@@ -890,19 +819,12 @@ def pitch_track(
         " pitch double, f0_multiple double, salience double,"
         " stability double"
     )
-    kw = dict(
-        min_confidence=min_confidence,
-        median_filter=median_filter,
-        max_history=max_history,
-        boost_band=boost_band,
-        keep_band=keep_band,
-    )
 
     def gen(batches):
         import pandas as pd
 
         cur = None  # current key
-        tr = PitchTracker(**kw)
+        tr = PitchTracker()
         cols = [
             key, order, "pitch_corrected", "pitch",
             "f0_multiple", "salience", "stability",
@@ -924,109 +846,11 @@ def pitch_track(
     return inp.mapInPandas(gen, schema=out_schema)
 
 
-def pitch_nsdf_frames(
-    frames: DataFrame,
-    *,
-    key_cols: tuple = ("doc_id", "frame_idx"),
-    window_col: str = "window",
-    window: int = 32,
-    sample_rate: float = 32.0,
-    min_freq: float = 1.0,
-    max_freq: float = 16.0,
-    autocorr_threshold: float = 0.3,
-) -> DataFrame:
-    """Per-frame NSDF raw detection (pitch_detection.go:485-550) over
-    fixed-width frame arrays — the vectorized mapInArrow form of
-    :func:`pitch_nsdf` for frame streams.
-
-    The generic operator shapes NSDF as a positional self-join
-    (series x taus x lagged values): correct for variable-length
-    series, but W/2 x W/2 joined rows PER FRAME through a shuffle.
-    With W a plan-time constant the whole frame batch becomes one
-    (N, W) matrix and the tau loop W/2 vectorized row reductions —
-    narrow (no shuffle, no join), ~100x less per-frame overhead than
-    either the join form or per-element Catalyst array folds (whose
-    lambda evaluation is interpreted, ~3.5 s for 33k frames at
-    sf0.1 vs ~0.1 s here).  All sums are exact integer arithmetic on
-    token lengths, so the nsdf values are bit-identical to the join
-    form regardless of summation order.
-
-    Best candidate per frame = strict interior local maximum above
-    the threshold inside the frequency band, highest nsdf first and
-    smallest lag on ties (argmax returns the first maximum).
-    Output: key cols + pitch + confidence (ungated; the stream
-    post-processor applies the MinConfidence gate after octave
-    correction)."""
-    import numpy as np
-
-    half = window // 2
-    band = np.zeros(half, dtype=bool)
-    for i in range(1, half - 1):  # interior peaks only
-        band[i] = min_freq <= sample_rate / i <= max_freq
-
-    key_fields = frames.select(*key_cols).schema.fields
-    out_schema = (
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in key_fields
-        )
-        + ", pitch double, confidence double"
-    )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            wcol = batch.column(
-                batch.schema.get_field_index(window_col)
-            )
-            wm = (
-                wcol.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(n, window)
-            )
-            head = wm[:, :half]
-            m1 = (head * head).sum(axis=1)
-            nd = np.zeros((n, half))
-            for tau in range(half):
-                seg = wm[:, tau : tau + half]
-                acf = (head * seg).sum(axis=1)
-                den = m1 + (seg * seg).sum(axis=1)
-                np.divide(
-                    2.0 * acf, den, out=nd[:, tau], where=den > 0
-                )
-            valid = np.zeros((n, half), dtype=bool)
-            for i in range(1, half - 1):
-                if not band[i]:
-                    continue
-                valid[:, i] = (
-                    (nd[:, i] > nd[:, i - 1])
-                    & (nd[:, i] > nd[:, i + 1])
-                    & (nd[:, i] > autocorr_threshold)
-                )
-            score = np.where(valid, nd, -np.inf)
-            best = score.argmax(axis=1)  # first max -> smallest lag
-            has = score[np.arange(n), best] > -np.inf
-            pitch = np.where(
-                has, sample_rate / np.maximum(best, 1), 0.0
-            )
-            conf = np.where(has, nd[np.arange(n), best], 0.0)
-            arrays = [
-                batch.column(batch.schema.get_field_index(f.name))
-                for f in key_fields
-            ]
-            arrays += [pa.array(pitch), pa.array(conf)]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in key_fields]
-                + ["pitch", "confidence"]
-            )
-
-    return frames.select(*key_cols, window_col).mapInArrow(
-        gen, schema=out_schema
-    )
+# frame shape of the per-frame detector (W=32 hop=4 over the token
+# series) and the frames per numpy chunk, which bounds each worker's
+# working set to O(chunk x window)
+_WINDOW, _HOP = 32, 4
+_CHUNK = 8192
 
 
 def pitch_nsdf_tokens(
@@ -1034,37 +858,39 @@ def pitch_nsdf_tokens(
     *,
     id_col: str = "doc_id",
     tokens_col: str = "tokens",
-    window: int = 32,
-    hop: int = 4,
-    sample_rate: float = 32.0,
-    min_freq: float = 1.0,
-    max_freq: float = 16.0,
-    autocorr_threshold: float = 0.3,
-    chunk: int = 8192,
 ) -> DataFrame:
-    """Per-frame NSDF raw detection straight off the TOKEN table —
-    the flat-kernel form of :func:`pitch_nsdf_frames` (the
-    frame_features_flat discipline): frames are gathered from each
-    batch's concatenated token stream through
-    ``kernels.flat_frame_starts`` in fixed-size chunks, so the
-    overlapping-window data amplification (8x at W=32 hop=4) never
-    materializes as Arrow arrays and the working set stays
-    O(chunk x window) per worker.  ~2x the end-to-end detector
-    throughput of the expand_frames-fed variant at 12M frames.
+    """Per-frame NSDF raw detection (pitch_detection.go:485-550)
+    straight off the TOKEN table — the vectorized form of
+    :func:`pitch_nsdf` for frame streams (the frame_features_flat
+    discipline).
 
-    The per-chunk arithmetic is the SAME numpy reductions as
-    pitch_nsdf_frames, so pitch/confidence values are bit-identical
-    (exact integer sums).  Output: id_col, frame_idx, pitch,
-    confidence (ungated)."""
+    The generic operator shapes NSDF as a positional self-join
+    (series x taus x lagged values): correct for variable-length
+    series, but W/2 x W/2 joined rows PER FRAME through a shuffle.
+    With W a plan-time constant a frame chunk becomes one (N, W)
+    matrix and the tau loop W/2 vectorized row reductions — narrow,
+    no shuffle, no join.  Frames are gathered from each batch's
+    concatenated token stream through ``kernels.flat_frame_starts`` in
+    fixed-size chunks, so the overlapping-window data amplification
+    (8x at W=32 hop=4) never materializes as Arrow arrays.  All sums
+    are exact integer arithmetic on token lengths, so the nsdf values
+    are bit-identical to the join form regardless of summation order.
+
+    Best candidate per frame = strict interior local maximum above
+    the threshold inside the frequency band, highest nsdf first and
+    smallest lag on ties (argmax returns the first maximum).  Output:
+    id_col, frame_idx, pitch, confidence (ungated; the stream
+    post-processor applies the MinConfidence gate after octave
+    correction)."""
     import numpy as np
 
     from .. import kernels
 
-    half = window // 2
+    half = _WINDOW // 2
     band = [
         i
         for i in range(1, half - 1)
-        if min_freq <= sample_rate / i <= max_freq
+        if _MIN_FREQ <= _SAMPLE_RATE / i <= _MAX_FREQ
     ]
     out_schema = (
         f"{id_col} long, frame_idx long, pitch double,"
@@ -1075,7 +901,7 @@ def pitch_nsdf_tokens(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        idxW = np.arange(window)
+        idxW = np.arange(_WINDOW)
         for batch in batches:
             ids = batch.column(batch.schema.get_field_index(id_col))
             tok = batch.column(
@@ -1090,7 +916,7 @@ def pitch_nsdf_tokens(
                 .astype(np.float64)
             )
             starts, doc_nf = kernels.flat_frame_starts(
-                lens, window, hop
+                lens, _WINDOW, _HOP
             )
             total = int(doc_nf.sum())
             if total == 0:
@@ -1104,8 +930,8 @@ def pitch_nsdf_tokens(
             )
             pitch = np.empty(total)
             conf = np.empty(total)
-            for a in range(0, total, chunk):
-                b = min(a + chunk, total)
+            for a in range(0, total, _CHUNK):
+                b = min(a + _CHUNK, total)
                 fr = flat[starts[a:b, None] + idxW]
                 head = fr[:, :half]
                 m1 = (head * head).sum(axis=1)
@@ -1124,13 +950,13 @@ def pitch_nsdf_tokens(
                     valid[:, i] = (
                         (nd[:, i] > nd[:, i - 1])
                         & (nd[:, i] > nd[:, i + 1])
-                        & (nd[:, i] > autocorr_threshold)
+                        & (nd[:, i] > _AUTOCORR_THRESHOLD)
                     )
                 score = np.where(valid, nd, -np.inf)
                 best = score.argmax(axis=1)
                 has = score[np.arange(b - a), best] > -np.inf
                 pitch[a:b] = np.where(
-                    has, sample_rate / np.maximum(best, 1), 0.0
+                    has, _SAMPLE_RATE / np.maximum(best, 1), 0.0
                 )
                 conf[a:b] = np.where(
                     has, nd[np.arange(b - a), best], 0.0

@@ -343,3 +343,62 @@ def dtw_naive(a, b):
             _, i, j = cand[best]
     path.reverse()
     return D[q][r] / len(path), path
+
+
+# Reference percentile-method family (stats/percentiles.go:198-404).
+# Each entry maps (n, q) -> h, the 1-based fractional order statistic;
+# the value is then data[floor(h)-1] + frac * (data[ceil(h)-1] - ...).
+# NOTE the reference's own labels vs textbook Hyndman-Fan numbers:
+# "linear" (its default, percentiles.go:233-256) computes h=(n-1)q+1
+# which is textbook R-7 despite the comment claiming R-6; "weighted"
+# (:313-338) is h=nq (R-4-like); "median_unbiased" (:360-380) is
+# h=(n+1)/3 + (n-1)q/3 (NOT textbook R-8); "normal_unbiased"
+# (:383-404) is h=n/4 + 0.25 + q(n+0.5) (NOT textbook R-9). We
+# reproduce the reference arithmetic exactly, deviations included.
+_PCT_H = {
+    "linear": lambda n, q: (n - 1) * q + 1.0,
+    "weighted": lambda n, q: n * q,
+    "r_default": lambda n, q: (n - 1) * q + 1.0,
+    "median_unbiased": lambda n, q: (n + 1) / 3.0 + (n - 1) / 3.0 * q,
+    "normal_unbiased": lambda n, q: n / 4.0 + 0.25 + q * (n + 0.5),
+}
+
+
+def percentile_method(x: np.ndarray, q: float, method: str = "linear") -> float:
+    """The reference's 8 percentile methods (percentiles.go:198-404),
+    arithmetic reproduced exactly (see _PCT_H note on label vs
+    textbook-R-number mismatches). q in [0,1]; data sorted here."""
+    s = np.sort(np.asarray(x, dtype=np.float64))
+    n = len(s)
+    if n == 0:
+        raise ValueError("empty data")
+    if n == 1:
+        return float(s[0])
+    if method == "lower":  # percentiles.go:258-273 (R-1-like)
+        h = n * q
+        if h <= 1.0:
+            return float(s[0])
+        return float(s[min(int(np.ceil(h)) - 1, n - 1)])
+    if method == "higher":  # percentiles.go:275-290 (R-3-like)
+        h = n * q
+        if h < 1.0:
+            return float(s[0])
+        return float(s[min(int(np.floor(h)), n - 1)])
+    if method == "midpoint":  # percentiles.go:292-311 (R-2-like)
+        h = n * q
+        if h <= 1.0:
+            return float(s[0])
+        if h >= n:
+            return float(s[-1])
+        lo, hi = int(np.floor(h)) - 1, int(np.ceil(h)) - 1
+        return float(s[lo] if lo == hi else (s[lo] + s[hi]) / 2.0)
+    h = _PCT_H[method](n, q)
+    if h <= 1.0:
+        return float(s[0])
+    if h >= n:
+        return float(s[-1])
+    lo, hi = int(np.floor(h)) - 1, int(np.ceil(h)) - 1
+    if lo == hi:
+        return float(s[lo])
+    frac = h - np.floor(h)
+    return float(s[lo] + frac * (s[hi] - s[lo]))

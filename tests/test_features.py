@@ -264,6 +264,17 @@ def test_spectral_kernel_matches_golden_loop():
                 )
 
 
+def test_contrast_band_edges_match_golden():
+    """The kernel's band edges (integer root from a float estimate)
+    equal the golden's (integer search) for every bin count, including
+    the ones whose edges are exact integer frequencies (B = 17:
+    16^(3/4) = 8)."""
+    for B in range(2, 5000):
+        assert kernels.contrast_band_edges(B) == golden._contrast_band_edges(B), B
+    assert kernels.contrast_band_edges(16) == [1, 2, 3, 7, 15]
+    assert kernels.contrast_band_edges(17) == [1, 2, 4, 8, 16]
+
+
 def test_spectral_pruning_skips_histogram():
     """Disabling the spectral + entropy groups must not compute them
     (config-driven pruning, fingerprint/config/config.go:22-27)."""

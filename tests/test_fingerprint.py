@@ -17,7 +17,7 @@ from sonar_spark.operators.fingerprint import (
     simhash_near_duplicates,
 )
 
-CFG = MinHashConfig(k_shingle=4, num_hashes=128, bands=32, seed=42)
+CFG = MinHashConfig(num_hashes=128, bands=32)
 
 
 def _shingle_set(tokens, k=4):

@@ -1,18 +1,87 @@
 """global_dense_index == row_number under any partitioning; the
 negative-pairs skip-self bijection is self-free, exact-k, and
-exactly uniform over the other docs in expectation."""
+exactly uniform over the other docs in expectation; the fused
+hard-negative kernel (ann.hard_negatives_allpairs) equals the
+windowed reference `hard_negatives` below."""
 
 from __future__ import annotations
 
 import hashlib
 
 import numpy as np
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sonar_spark.operators.negatives import (
     global_dense_index,
     negative_pairs,
 )
+
+
+def hard_negatives(
+    pairs: DataFrame,
+    *,
+    k: int = 3,
+    pos_threshold: float = 0.4,
+    directed: bool = False,
+) -> DataFrame:
+    """Hard-negative mining for contrastive training: for every
+    anchor that has at least one POSITIVE (cosine >= pos_threshold —
+    the embedding near-dup rule), rank all other vectors by cosine
+    and keep the top-k BELOW the positive threshold — the closest
+    vectors that are not (near-)duplicates, i.e. the negatives a
+    contrastive loss learns the most from (in-batch-uniform's
+    targeted complement; see negative_pairs for the uniform draw).
+
+    `pairs` is the scored pair table from the allpairs_cosine
+    kernel (LSH/IVF candidates at corpus scale): undirected
+    (id_a < id_b) by default, or directed=True for the
+    anchors-bounded LEFT x ALL shape (id_a = anchor) — then no
+    mirror union is needed and the plan is candidate-linear in the
+    anchor set.
+
+    Output per anchor: rank (1..k by sim desc, neighbor id
+    tie-break), neighbor_id, cosine_sim, and n_excluded — how many
+    candidates the positive filter removed (certifies the exclusion
+    branch fired).  One mirror-union + two windows over the
+    anchors-bounded candidate set.
+    """
+    sym = pairs.select(
+        F.col("id_a").alias("query_id"),
+        F.col("id_b").alias("neighbor_id"),
+        "s",
+    )
+    if not directed:
+        sym = sym.unionByName(
+            pairs.select(
+                F.col("id_b").alias("query_id"),
+                F.col("id_a").alias("neighbor_id"),
+                "s",
+            )
+        )
+    anchors = (
+        sym.where(F.col("s") >= pos_threshold)
+        .select("query_id")
+        .distinct()
+    )
+    cand = sym.join(anchors, "query_id")
+    wq = Window.partitionBy("query_id")
+    wr = Window.partitionBy("query_id").orderBy(
+        F.col("s").desc(), F.col("neighbor_id").asc()
+    )
+    n_exc = F.sum(
+        (F.col("s") >= pos_threshold).cast("long")
+    ).over(wq)
+    ranked = cand.withColumn("n_excluded", n_exc).where(
+        F.col("s") < pos_threshold
+    ).withColumn("rank", F.row_number().over(wr))
+    return ranked.where(F.col("rank") <= k).select(
+        "query_id",
+        F.col("rank").cast("int").alias("rank"),
+        "neighbor_id",
+        F.round("s", 6).alias("cosine_sim"),
+        F.col("n_excluded").cast("long").alias("n_excluded"),
+    )
 
 
 def test_dense_index_equals_row_number(spark):
@@ -128,8 +197,6 @@ def test_global_cumsum_and_shard_balance(spark):
 
 
 def test_hard_negatives_vs_bruteforce(spark):
-    from sonar_spark.operators.negatives import hard_negatives
-
     # pair table with planted positives (s >= 0.4) for anchors 0,1,2
     rng = np.random.default_rng(17)
     n = 12
@@ -174,7 +241,6 @@ def test_hard_negatives_directed_equals_undirected(spark, sf_dir):
     positives from phase 1, then LEFT x ALL over anchors) must give
     the same result as the single-pass undirected plan."""
     from sonar_spark.operators.ann import allpairs_cosine
-    from sonar_spark.operators.negatives import hard_negatives
 
     path = f"{sf_dir}/embeddings.parquet"
     emb = spark.read.parquet(path)
@@ -213,7 +279,6 @@ def test_hard_negatives_kernel_equals_windowed(spark, sf_dir):
         allpairs_cosine,
         hard_negatives_allpairs,
     )
-    from sonar_spark.operators.negatives import hard_negatives
 
     path = f"{sf_dir}/embeddings.parquet"
     emb = spark.read.parquet(path)

@@ -1,5 +1,6 @@
 """Percentile-method family and entropy-variants operators vs
-independent implementations (numpy kernel / pure-python loops)."""
+independent implementations (the numpy sort golden / pure-python
+loops)."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import math
 
 import numpy as np
 
-from sonar_spark import kernels
+import golden
 from sonar_spark.operators.entropy import BIN_RULES, entropy_variants
 from sonar_spark.operators.percentiles import (
     PERCENTILE_METHODS,
@@ -21,7 +22,7 @@ def test_percentile_kernel_reference_arithmetic():
     rng = np.random.default_rng(3)
     x = rng.standard_normal(101)
     for q in (0.0, 0.1, 0.5, 0.9, 1.0):
-        got = kernels.percentile_method(x, q, "linear")
+        got = golden.percentile_method(x, q, "linear")
         want = float(np.percentile(x, q * 100, method="linear"))
         assert np.isclose(got, want, rtol=1e-12), (q, got, want)
     # reference quirk reproduced: median_unbiased h=(n+1)/3+(n-1)q/3
@@ -29,19 +30,19 @@ def test_percentile_kernel_reference_arithmetic():
     # extremes at q=0/1 — only the other six do
     for m in PERCENTILE_METHODS:
         if m not in ("median_unbiased", "normal_unbiased"):
-            assert kernels.percentile_method(x, 0.0, m) == x.min(), m
-            assert kernels.percentile_method(x, 1.0, m) == x.max(), m
-        assert kernels.percentile_method(np.array([7.0]), 0.4, m) == 7.0
+            assert golden.percentile_method(x, 0.0, m) == x.min(), m
+            assert golden.percentile_method(x, 1.0, m) == x.max(), m
+        assert golden.percentile_method(np.array([7.0]), 0.4, m) == 7.0
     n = len(x)
     s = np.sort(x)
     h = (n + 1) / 3.0  # median_unbiased at q=0
-    assert kernels.percentile_method(x, 0.0, "median_unbiased") == s[
+    assert golden.percentile_method(x, 0.0, "median_unbiased") == s[
         int(np.floor(h)) - 1
     ] + (h - np.floor(h)) * (s[int(np.ceil(h)) - 1] - s[int(np.floor(h)) - 1])
 
 
 def test_percentile_methods_spark_matches_kernel(spark):
-    """Catalyst order-statistic implementation == numpy sort kernel
+    """Catalyst order-statistic implementation == numpy sort golden
     for every method x q on random groups."""
     rng = np.random.default_rng(11)
     rows = []
@@ -58,7 +59,7 @@ def test_percentile_methods_spark_matches_kernel(spark):
     df = spark.createDataFrame(rows, "g string, v double")
     out = percentile_methods(df, "v", "g", qs=(0.25, 0.5, 0.9))
     for r in out.collect():
-        want = kernels.percentile_method(data[r["g"]], r["q"], r["method"])
+        want = golden.percentile_method(data[r["g"]], r["q"], r["method"])
         assert np.isclose(r["value"], want, rtol=1e-12), (
             r["g"], r["method"], r["q"], r["value"], want,
         )

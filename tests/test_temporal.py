@@ -1,11 +1,25 @@
-"""Tempo/attack-decay/envelope operators."""
+"""Tempo/attack-decay/envelope/pitch-tracking operators."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from sonar_spark.operators.temporal import attack_decay, envelope, tempo_estimate
+from sonar_spark.operators.temporal import (
+    PitchTracker,
+    _median_positive,
+    attack_decay,
+    pitch_track,
+    tempo_estimate,
+)
+
+
+def track_pitch_sequence(frames):
+    """One stream through a fresh PitchTracker: [(pitch, confidence)]
+    in frame order -> per frame (pitch_corrected, pitch_smoothed,
+    f0_multiple, salience, stability)."""
+    tr = PitchTracker()
+    return [tr.step(p, c) for p, c in frames]
 
 
 def test_tempo_dominant_ioi(spark):
@@ -58,21 +72,8 @@ def test_attack_decay_no_crossing_is_null(spark):
     assert r["attack_frames"] is None and r["decay_frames"] is None
 
 
-def test_envelope_smooths(spark):
-    feats = spark.createDataFrame(
-        [("d", i, float(i % 2)) for i in range(10)],
-        "doc_id string, frame_idx long, rms_energy double",
-    )
-    env = envelope(feats, smooth_k=2).collect()
-    mid = [r["envelope"] for r in env if 2 <= r["frame_idx"] <= 7]
-    assert all(0.3 < v < 0.7 for v in mid)
-
-
 def test_vad_and_silence_ratio(spark):
-    from sonar_spark.operators.sessionize import (
-        detect_voice_activity,
-        silence_ratio,
-    )
+    from sonar_spark.operators.sessionize import detect_voice_activity
 
     vals = [0.1, 0.1, 0.9, 0.9, 0.9, 0.1, 0.9, 0.9, 0.9, 0.9]
     feats = spark.createDataFrame(
@@ -84,8 +85,6 @@ def test_vad_and_silence_ratio(spark):
     ).collect()
     got = {(r["seg_start"], r["seg_end"], r["run_len"]) for r in segs}
     assert got == {(2, 4, 3), (6, 9, 4)}
-    sr = silence_ratio(feats, threshold=0.5).collect()[0]
-    assert abs(sr["silence_ratio"] - 0.3) < 1e-12
 
 
 def test_time_stretch_estimate(spark):
@@ -141,11 +140,6 @@ def test_track_pitch_sequence_reference_semantics():
     3-median / exponential smoothing, CV stability, and the 20-deep
     history cap (not reachable on the <= 18-frame parquet docs)."""
     import math
-
-    from sonar_spark.operators.temporal import (
-        _median_positive,
-        track_pitch_sequence,
-    )
 
     # median: zeros dropped, even count averages the middle two
     assert _median_positive([0.0, 4.0, 2.0]) == 3.0
@@ -212,13 +206,6 @@ def test_pitch_track_state_survives_arrow_batch_splits(spark):
     doc whose frames straddle a batch boundary must keep its history
     (the r1 as-of bug class).  Force 16-row batches over 3 docs x
     40 frames and compare against the scalar kernel."""
-    from pyspark.sql import functions as F
-
-    from sonar_spark.operators.temporal import (
-        pitch_track,
-        track_pitch_sequence,
-    )
-
     import numpy as np
 
     rng = np.random.default_rng(3)
@@ -266,21 +253,14 @@ def test_pitch_track_state_survives_arrow_batch_splits(spark):
 
 
 def test_pitch_track_short_median_filter_falls_back_to_exponential():
-    """median_filter=1 or 2: the Go's getRecentPitches(MedianFilter)
-    window never reaches 3 entries, so applyTemporalSmoothing falls
-    through to exponential smoothing (pitch_detection.go:905-921) —
-    a median of 1-2 entries must NOT be taken (round-4 advice)."""
-    from sonar_spark.operators.temporal import track_pitch_sequence
-
+    """A history shorter than the 3-frame median window: the Go's
+    getRecentPitches(MedianFilter) holds fewer than 3 entries, so
+    applyTemporalSmoothing falls through to exponential smoothing
+    (pitch_detection.go:905-921) — a median of 1-2 entries must NOT
+    be taken (round-4 advice)."""
     seq = [(8.0, 0.9), (6.0, 0.9), (4.0, 0.9), (2.0, 0.9)]
-    for mf in (1, 2):
-        out = track_pitch_sequence(seq, median_filter=mf)
-        # frame-by-frame exponential recurrence: sm = .3 p + .7 prev_sm
-        prev = 8.0  # frame 0 is unsmoothed
-        for i in range(1, len(seq)):
-            want = 0.3 * seq[i][0] + 0.7 * prev
-            assert abs(out[i][1] - want) < 1e-12, (mf, i)
-            prev = want
-    # median_filter=3 still takes the median once history >= 3
-    out = track_pitch_sequence(seq, median_filter=3)
+    out = track_pitch_sequence(seq)
+    # history of 2: exponential, sm = .3 p + .7 prev_sm
+    assert out[1][1] == 0.3 * 6.0 + 0.7 * 8.0
+    # the median is taken once history >= 3
     assert out[3][1] == 4.0  # median of last 3 gated pitches [6,4,2]

@@ -38,7 +38,7 @@ def test_bessel_i0_series():
 
 
 def test_kaiser_symmetry_and_peak():
-    c = window_coefficients("kaiser", 33, beta=8.0)
+    c = window_coefficients("kaiser", 33)
     assert np.allclose(c, c[::-1], atol=1e-12)  # symmetric
     assert np.isclose(c[16], 1.0)  # midpoint: I0(beta)/I0(beta)
     assert c[0] == c[32] == pytest.approx(1.0 / bessel_i0(8.0))
