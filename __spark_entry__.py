@@ -78,18 +78,22 @@ def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
+# the engine source tree _source_digest reads
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+
+
 @functools.cache
-def _source_digest(root: str = os.path.dirname(os.path.abspath(__file__))) -> str:
-    """Digest of the engine source under ``root``: the text of every
+def _source_digest() -> str:
+    """Digest of the engine source under ``_ROOT``: the text of every
     sonar_spark/**/*.py and of __spark_entry__.py, in sorted path order.
     It keys the feature store (with the input path and mtimes, see
     plans/pipeline.py store_key), so changed table code never serves
     the rows the old code wrote."""
     h = hashlib.sha256()
-    paths = glob.glob(os.path.join(root, "sonar_spark", "**", "*.py"), recursive=True)
-    for p in sorted([*paths, os.path.join(root, "__spark_entry__.py")]):
+    paths = glob.glob(os.path.join(_ROOT, "sonar_spark", "**", "*.py"), recursive=True)
+    for p in sorted([*paths, os.path.join(_ROOT, "__spark_entry__.py")]):
         with open(p, "rb") as f:
-            h.update(os.path.relpath(p, root).encode() + b"\0" + f.read() + b"\0")
+            h.update(os.path.relpath(p, _ROOT).encode() + b"\0" + f.read() + b"\0")
     return h.hexdigest()[:16]
 
 
@@ -191,10 +195,13 @@ def q_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each purchase event matched to the user's latest
-    login at-or-before it (backward, inclusive; ties on ts broken by
-    max event_id) — the point-in-time join core (SURVEY §2.6)."""
+def _purchase_click_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The as-of queries' two sides over the events table: purchases
+    (event_id, user_id, ts_sec) on the left; clicks grouped by
+    (user_id, ref_ts) on the right, the highest event_id of each
+    second as ref_version and its value (6 dp) as ref_value."""
     ev = _t(spark, sf_dir, "events").withColumn(
         "ts_sec", F.unix_timestamp(F.col("ts"))
     )
@@ -209,6 +216,14 @@ def q_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max_by("value", "event_id"), 6).alias("ref_value"),
         )
     )
+    return left, right
+
+
+def q_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each purchase event matched to the user's latest
+    login at-or-before it (backward, inclusive; ties on ts broken by
+    max event_id) — the point-in-time join core (SURVEY §2.6)."""
+    left, right = _purchase_click_sides(spark, sf_dir)
     return asof_join(
         left,
         right,
@@ -227,20 +242,7 @@ def q_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same as q_asof_events but through the range-bucketed cogroup
     merge_asof physical strategy (skew path) — must agree with the
     union strategy AND the SQL oracle."""
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "ts_sec", F.unix_timestamp(F.col("ts"))
-    )
-    left = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_sec"
-    )
-    right = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", F.col("ts_sec").alias("ref_ts"))
-        .agg(
-            F.max("event_id").alias("ref_version"),
-            F.round(F.max_by("value", "event_id"), 6).alias("ref_value"),
-        )
-    )
+    left, right = _purchase_click_sides(spark, sf_dir)
     return asof_join(
         left,
         right,
@@ -741,6 +743,33 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("doc_a", "doc_b")
 
 
+def _chirp_pairs(series: DataFrame) -> DataFrame:
+    """Planted-lag pairs (pair_id, series_a, series_b) from per-doc
+    series (doc_id, series): series_a is the chirp-marked series and
+    series_b the same with its first 3 frames dropped, so the expected
+    lag is -3.  Deterministic aperiodic chirp marker: word-length rms
+    series can be near-periodic (3 docs at sf0.01 peak at a harmonic
+    lag), so sin(0.37 i^2) is added BEFORE slicing — b stays an exact
+    sub-series of a, and the chirp makes the autocorrelation
+    single-peaked."""
+    marked = series.withColumn(
+        "series",
+        F.zip_with(
+            "series",
+            F.sequence(F.lit(0), F.size("series") - 1),
+            lambda v, i: v
+            + 3.0 * F.sin(F.lit(0.37) * i.cast("double") * i.cast("double")),
+        ),
+    )
+    # >= 24 frames: short series can hand the abs-argmax peak picker a
+    # chance anti-correlation above the znorm-degraded true peak
+    return marked.where(F.size("series") >= 24).select(
+        F.col("doc_id").alias("pair_id"),
+        F.col("series").alias("series_a"),
+        F.slice(F.col("series"), 4, F.size("series") - 3).alias("series_b"),
+    )
+
+
 def q_align_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted-lag alignment: each doc's rms series vs itself with the
     first 3 frames dropped (series_b advanced by 3 => expected lag -3
@@ -758,27 +787,7 @@ def q_align_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             enable_spectral=False, enable_mfcc=False,
         ),
     )
-    series = build_doc_series(feats, "rms_energy")
-    # deterministic aperiodic chirp marker: word-length rms series can
-    # be near-periodic (3 docs at sf0.01 peak at a harmonic lag), so
-    # add sin(0.37 i^2) BEFORE slicing — b stays an exact sub-series
-    # of a, and the chirp makes the autocorrelation single-peaked
-    marked = series.withColumn(
-        "series",
-        F.zip_with(
-            "series",
-            F.sequence(F.lit(0), F.size("series") - 1),
-            lambda v, i: v
-            + 3.0 * F.sin(F.lit(0.37) * i.cast("double") * i.cast("double")),
-        ),
-    )
-    # >= 24 frames: short series can hand the abs-argmax peak picker a
-    # chance anti-correlation above the znorm-degraded true peak
-    pairs = marked.where(F.size("series") >= 24).select(
-        F.col("doc_id").alias("pair_id"),
-        F.col("series").alias("series_a"),
-        F.slice(F.col("series"), 4, F.size("series") - 3).alias("series_b"),
-    )
+    pairs = _chirp_pairs(build_doc_series(feats, "rms_energy"))
     out = align_pairs(pairs, AlignmentConfig(max_lag=8))
     return out.select("pair_id", "lag")
 
@@ -1173,12 +1182,12 @@ def q_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_frame_rms(spark: SparkSession, sf_dir: str, W: int = 16, H: int = 4):
+def _doc_frame_rms(spark: SparkSession, sf_dir: str):
     """Per-frame (rms, flux) — store-backed via
     plans/feature_tables.frame_rms (10 consumer queries)."""
     from sonar_spark.plans.feature_tables import frame_rms
 
-    return frame_rms(spark, sf_dir, _store(spark, sf_dir), W, H)
+    return frame_rms(spark, sf_dir, _store(spark, sf_dir))
 
 
 def q_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1295,24 +1304,7 @@ def q_consistency_trials(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = frame_features_arrow(
         to_token_length_table(docs), FrameConfig(window=8, hop=2)
     )
-    series = build_doc_series(feats, "rms_energy")
-    marked = series.withColumn(
-        "series",
-        F.zip_with(
-            "series",
-            F.sequence(F.lit(0), F.size("series") - 1),
-            lambda v, i: v
-            + 3.0
-            * F.sin(F.lit(0.37) * i.cast("double") * i.cast("double")),
-        ),
-    )
-    pairs = marked.where(F.size("series") >= 24).select(
-        F.col("doc_id").alias("pair_id"),
-        F.col("series").alias("series_a"),
-        F.slice(F.col("series"), 4, F.size("series") - 3).alias(
-            "series_b"
-        ),
-    )
+    pairs = _chirp_pairs(build_doc_series(feats, "rms_energy"))
     out = consistency_trials(pairs, AlignmentConfig(max_lag=8))
     return out.select(
         "pair_id",
@@ -2642,15 +2634,12 @@ def q_voice_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hist_grid(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
+def _hist_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-spectrum grid — plans/feature_tables.hist_grid
-    (store-backed full corpus; ``docs`` = pre-filtered bounded
-    sources, derived inline)."""
+    (store-backed full corpus)."""
     from sonar_spark.plans.feature_tables import hist_grid
 
-    return hist_grid(spark, sf_dir, _store(spark, sf_dir), docs)
+    return hist_grid(spark, sf_dir, _store(spark, sf_dir))
 
 
 def q_hpcp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6546,20 +6535,7 @@ def q_asof_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
         asof_join_nearest_fused as asof_join_nearest,
     )
 
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "ts_sec", F.unix_timestamp(F.col("ts"))
-    )
-    left = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_sec"
-    )
-    right = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", F.col("ts_sec").alias("ref_ts"))
-        .agg(
-            F.max("event_id").alias("ref_version"),
-            F.round(F.max_by("value", "event_id"), 6).alias("ref_value"),
-        )
-    )
+    left, right = _purchase_click_sides(spark, sf_dir)
     return asof_join_nearest(
         left,
         right,
@@ -6922,20 +6898,7 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     See operators/asof.asof_join_tolerance."""
     from sonar_spark.operators.asof import asof_join_tolerance
 
-    ev = _t(spark, sf_dir, "events").withColumn(
-        "ts_sec", F.unix_timestamp(F.col("ts"))
-    )
-    left = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts_sec"
-    )
-    right = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", F.col("ts_sec").alias("ref_ts"))
-        .agg(
-            F.max("event_id").alias("ref_version"),
-            F.round(F.max_by("value", "event_id"), 6).alias("ref_value"),
-        )
-    )
+    left, right = _purchase_click_sides(spark, sf_dir)
     out = asof_join_tolerance(
         left,
         right,

@@ -3,12 +3,10 @@
 Defaults follow the reference where a token-domain analog exists:
 window 2048 / hop 512 (reference fingerprint/fingerprint.go:72-73) is
 scaled to W=64 / H=16 for token sequences (same 4:1 overlap ratio).
-Settings with one value in use are constants next to the code that
-reads them (the xcorr FFT switch, DTW band and confidence weights in
-kernels.py, the hybrid DTW-fallback trigger in operators/align.py, the
-MinHash shingle size and seed in operators/fingerprint.py, the match
-thresholds in operators/compare.py, the Kaiser beta / Tukey alpha in
-functions/windows.py).
+Only settings some caller outside tests/ varies are fields here; a
+setting with one value in use is a constant (or a literal) next to the
+code that reads it.  tests/test_unreferenced.py enforces this for the
+fields here and for every defaulted function parameter.
 """
 
 from __future__ import annotations

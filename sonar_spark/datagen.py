@@ -29,7 +29,7 @@ CATALOG_SCHEMA = (
 )
 
 
-def _doc_row(i: int, min_tok: int, max_tok: int, skew_doc: int | None):
+def _doc_row(i: int):
     rng = np.random.default_rng(42 + i)
     # log-normal-ish length, clipped; plus forced edge docs (FIXTURES.md #1)
     if i == 0:
@@ -38,10 +38,8 @@ def _doc_row(i: int, min_tok: int, max_tok: int, skew_doc: int | None):
         n = 64  # == W
     elif i == 2:
         n = 64 + 16 - 1  # == W + H - 1 (frame-count boundary)
-    elif skew_doc is not None and i == skew_doc:
-        n = max_tok  # heavy-hitter doc for skew tests
     else:
-        n = int(np.clip(np.exp(rng.normal(5.5, 0.8)), min_tok, max_tok))
+        n = int(np.clip(np.exp(rng.normal(5.5, 0.8)), 32, 8192))
     toks = rng.integers(0, VOCAB, size=n, dtype=np.int32)
     return (f"doc{i:08d}", toks, np.int32(n), SOURCES[i % 4])
 
@@ -49,16 +47,13 @@ def _doc_row(i: int, min_tok: int, max_tok: int, skew_doc: int | None):
 def token_table(
     spark: SparkSession,
     n_docs: int = 100,
-    min_tok: int = 32,
-    max_tok: int = 8192,
-    skew_doc: int | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
     """Distributed deterministic token table of input_hint shape."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = [_doc_row(int(i), min_tok, max_tok, skew_doc) for i in pdf["id"]]
+            rows = [_doc_row(int(i)) for i in pdf["id"]]
             yield pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source"])
 
     base = spark.range(n_docs)
@@ -71,8 +66,6 @@ def catalog_table(
     spark: SparkSession,
     n_entities: int = 16,
     rows_per_entity: int = 32,
-    feat_dim: int = 13,
-    max_ts: int = 8192,
 ) -> DataFrame:
     """Reference catalog (as-of right side). Irregular seeded timestamps
     including duplicate ts per entity (tie-break test) and a leading gap
@@ -84,7 +77,7 @@ def catalog_table(
             for e in pdf["id"]:
                 e = int(e)
                 rng = np.random.default_rng(1042 + e)
-                ts = np.sort(rng.integers(64, max_ts, size=rows_per_entity))
+                ts = np.sort(rng.integers(64, 8192, size=rows_per_entity))
                 if rows_per_entity >= 2:
                     ts[1] = ts[0]  # deliberate duplicate timestamp
                 for v, t in enumerate(ts):
@@ -93,7 +86,7 @@ def catalog_table(
                             f"ent{e:04d}",
                             int(t),
                             v,
-                            rng.standard_normal(feat_dim).round(6).tolist(),
+                            rng.standard_normal(13).round(6).tolist(),
                         )
                     )
             yield pd.DataFrame(

@@ -121,9 +121,10 @@ def kl_divergence(p: Column, q: Column, eps: float = 1e-10) -> Column:
     )
 
 
-def js_divergence(p: Column, q: Column, eps: float = 1e-10) -> Column:
+def js_divergence(p: Column, q: Column) -> Column:
     """Jensen-Shannon divergence (distance.go:266-283):
     0.5 KL(p||m) + 0.5 KL(q||m), m = (p+q)/2."""
+    eps = 1e-10
     m = F.zip_with(p, q, lambda x, y: (x + y) / 2.0)
     return 0.5 * kl_divergence(p, m, eps) + 0.5 * kl_divergence(q, m, eps)
 
@@ -139,9 +140,10 @@ def hellinger(p: Column, q: Column) -> Column:
     )
 
 
-def bhattacharyya(p: Column, q: Column, eps: float = 1e-10) -> Column:
+def bhattacharyya(p: Column, q: Column) -> Column:
     """Bhattacharyya distance (distance.go:300-311):
     -ln(sum sqrt(p*q))."""
+    eps = 1e-10
     return -F.log(
         asum(F.zip_with(p, q, lambda x, y: F.sqrt(x * y))) + F.lit(eps)
     )

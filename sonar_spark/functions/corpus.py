@@ -35,7 +35,6 @@ def pmi_collocations(
     *,
     min_count: int = 5,
     top_n: int = 50,
-    words_col: str = "words",
 ) -> DataFrame:
     """Top-n adjacent-bigram collocations by pointwise mutual
     information.
@@ -52,7 +51,7 @@ def pmi_collocations(
     the unigram table twice.  min_count keeps the rare-pair noise
     floor out, as in Church & Hanks.
     """
-    words = F.col(words_col)
+    words = F.col("words")
     grams = docs.select(
         F.explode(
             F.zip_with(
@@ -111,13 +110,7 @@ def pmi_collocations(
     ).where(F.col("rank") <= top_n)
 
 
-def vocab_stats(
-    docs: DataFrame,
-    *,
-    group_col: str = "source",
-    words_col: str = "words",
-    zipf_top: int = 1000,
-) -> DataFrame:
+def vocab_stats(docs: DataFrame) -> DataFrame:
     """Per-group vocabulary statistics + Zipf rank-frequency fit.
 
     Returns one row per group: tokens_total, vocab_size, hapax_count
@@ -136,16 +129,17 @@ def vocab_stats(
     one exchange on the group for the rank window -> one final
     per-group aggregate carrying every statistic.
     """
+    zipf_top = 1000
     counts = (
-        docs.select(group_col, F.explode(words_col).alias("t"))
-        .groupBy(group_col, "t")
+        docs.select("source", F.explode("words").alias("t"))
+        .groupBy("source", "t")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    w = Window.partitionBy(group_col).orderBy(
+    w = Window.partitionBy("source").orderBy(
         F.col("c").desc(), F.col("t")
     )
     ranked = counts.select(
-        group_col,
+        "source",
         "c",
         F.row_number().over(w).cast("long").alias("r"),
     )
@@ -156,7 +150,7 @@ def vocab_stats(
     y = F.when(
         in_fit, F.round(F.round(F.log("c"), 6) * 1e6, 0).cast("long")
     )
-    agg = ranked.groupBy(group_col).agg(
+    agg = ranked.groupBy("source").agg(
         F.sum("c").cast("long").alias("tokens_total"),
         F.count("*").cast("long").alias("vocab_size"),
         F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
@@ -171,7 +165,7 @@ def vocab_stats(
     num = F.col("__n") * F.col("__sxy") - F.col("__sx") * F.col("__sy")
     den = F.col("__n") * F.col("__sxx") - F.col("__sx") * F.col("__sx")
     return agg.select(
-        group_col,
+        "source",
         "tokens_total",
         "vocab_size",
         "hapax_count",
@@ -189,8 +183,6 @@ def vocab_stats(
 def temperature_mix(
     docs: DataFrame,
     *,
-    group_col: str = "source",
-    words_col: str = "words",
     temperature: float = 0.3,
     budget: int = 1_000_000,
 ) -> DataFrame:
@@ -215,8 +207,8 @@ def temperature_mix(
     arithmetic over ~|groups| rows.
     """
     per = (
-        docs.select(group_col, F.size(words_col).alias("__n"))
-        .groupBy(group_col)
+        docs.select("source", F.size("words").alias("__n"))
+        .groupBy("source")
         .agg(F.sum("__n").cast("long").alias("tokens"))
         .persist()
     )
@@ -237,7 +229,7 @@ def temperature_mix(
         .alias("__m")
     )
     weighted = per.crossJoin(F.broadcast(tot)).select(
-        group_col,
+        "source",
         "tokens",
         F.round(share, 6).alias("share"),
         micro,
@@ -247,7 +239,7 @@ def temperature_mix(
         (F.lit(int(budget)) * F.col("__m")) % F.col("__sm")
     )
     return weighted.crossJoin(F.broadcast(sm)).select(
-        group_col,
+        "source",
         "tokens",
         "share",
         F.round(F.col("__m") / F.col("__sm"), 6).alias("weight"),
@@ -259,12 +251,7 @@ def temperature_mix(
     )
 
 
-def source_divergence(
-    docs: DataFrame,
-    *,
-    group_col: str = "source",
-    words_col: str = "words",
-) -> DataFrame:
+def source_divergence(docs: DataFrame) -> DataFrame:
     """Pairwise Jensen-Shannon divergence (bits) between per-group
     unigram distributions — the corpus drift / domain-shift monitor a
     mixing pipeline watches (and the distance mix_weights-style
@@ -288,29 +275,29 @@ def source_divergence(
     """
     ln2 = float(_LN2)
     counts = (
-        docs.select(group_col, F.explode(words_col).alias("t"))
-        .groupBy(group_col, "t")
+        docs.select("source", F.explode("words").alias("t"))
+        .groupBy("source", "t")
         .agg(F.count("*").cast("long").alias("c"))
         .persist()
     )
-    totals = counts.groupBy(group_col).agg(
+    totals = counts.groupBy("source").agg(
         F.sum("c").cast("long").alias("tt")
     )
     a = counts.select(
-        F.col(group_col).alias("src_a"),
+        F.col("source").alias("src_a"),
         "t",
         F.col("c").alias("ca"),
     )
     b = counts.select(
-        F.col(group_col).alias("src_b"),
+        F.col("source").alias("src_b"),
         "t",
         F.col("c").alias("cb"),
     )
     ta = totals.select(
-        F.col(group_col).alias("src_a"), F.col("tt").alias("tta")
+        F.col("source").alias("src_a"), F.col("tt").alias("tta")
     )
     tb = totals.select(
-        F.col(group_col).alias("src_b"), F.col("tt").alias("ttb")
+        F.col("source").alias("src_b"), F.col("tt").alias("ttb")
     )
     p = F.col("ca") / F.col("tta")
     q = F.col("cb") / F.col("ttb")
@@ -349,10 +336,10 @@ def source_divergence(
     # a pair with NO common terms never survives the inner join, but
     # it is the maximal-drift signal (JS = 1 bit) a monitor must not
     # drop — complete the pair frame from the (tiny) group list
-    srcs = totals.select(group_col)
+    srcs = totals.select("source")
     allp = (
-        srcs.select(F.col(group_col).alias("src_a"))
-        .crossJoin(srcs.select(F.col(group_col).alias("src_b")))
+        srcs.select(F.col("source").alias("src_a"))
+        .crossJoin(srcs.select(F.col("source").alias("src_b")))
         .where(F.col("src_a") < F.col("src_b"))
     )
     return allp.join(scored, ["src_a", "src_b"], "left").select(

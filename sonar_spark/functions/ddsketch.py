@@ -104,8 +104,6 @@ def ddsketch_quantiles(
     *,
     group_col: str = "event_type",
     value_col: str = "v",
-    id_col: str = "event_id",
-    qs: tuple[float, ...] = QS,
 ) -> DataFrame:
     """Per-group DDSketch quantile report, certified against the
     exact order statistic and the shard-merge law in one result.
@@ -121,7 +119,7 @@ def ddsketch_quantiles(
     base = events.select(
         F.col(group_col).alias("grp"),
         F.col(value_col).alias("v"),
-        (F.col(id_col) % 8).alias("shard"),
+        (F.col("event_id") % 8).alias("shard"),
     )
 
     # direct sketch + shard-merged sketch; the comparison is the law
@@ -152,7 +150,7 @@ def ddsketch_quantiles(
     qdf = n_tot.select(
         "grp",
         "n",
-        F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q"),
+        F.explode(F.array(*[F.lit(float(q)) for q in QS])).alias("q"),
     ).select(
         "grp", "n", "q", F.greatest(F.lit(1), F.ceil(F.col("q") * F.col("n"))).cast("long").alias("r")
     )
@@ -169,11 +167,11 @@ def ddsketch_quantiles(
     est = F.when(F.col("idx") < 0, F.lit(0.0)).otherwise((lo + up) / 2.0)
 
     # exact order statistic at the same rank, for the certificate
-    wv = Window.partitionBy("grp").orderBy("v", id_col)
+    wv = Window.partitionBy("grp").orderBy("v", "event_id")
     ranked = events.select(
         F.col(group_col).alias("grp"),
         F.col(value_col).alias("v"),
-        id_col,
+        "event_id",
     ).select("grp", "v", F.row_number().over(wv).cast("long").alias("rn"))
     exact = (
         hit.select("grp", "q", "r")

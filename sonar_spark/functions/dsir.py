@@ -130,20 +130,15 @@ def _gram_bucket_counts(
     )
 
 
-def dsir_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-    target_col: str = "is_target",
-    n_buckets: int = 1024,
-    k_smooth: float = 0.5,
-    n_select: int = 100,
-) -> DataFrame:
+# documents dsir_scores selects (by Gumbel-top-k rank)
+_N_SELECT = 100
+
+
+def dsir_scores(docs: DataFrame) -> DataFrame:
     """Score and Gumbel-top-k-select documents DSIR-style.
 
-    ``docs`` must carry ``id_col`` (string), ``words_col``
-    (array<string>, the whitespace tokens) and ``target_col``
+    ``docs`` must carry ``doc_id`` (string), ``words``
+    (array<string>, the whitespace tokens) and ``is_target``
     (boolean — True rows are the target-domain sample the target
     model is fit on; the raw model is fit on the complement).
 
@@ -151,8 +146,10 @@ def dsir_scores(
     dsir_bits (the importance log-weight in bits, 6dp), gumbel_key
     (log-weight in nats + hash-Gumbel noise, 6dp — the resampling
     sort key), sel_rank (1 = first selected), selected
-    (rank <= n_select).
+    (rank <= _N_SELECT).
     """
+    n_buckets = 1024
+    k_smooth = 0.5
     # r6: the gram stream is pre-reduced to per-doc BUCKET COUNTS by
     # one Arrow kernel pass (_gram_bucket_counts) — the expression
     # form exploded every unigram+bigram instance twice (once for
@@ -164,13 +161,13 @@ def dsir_scores(
     # bucket table.  Certified equal to the expression stream by
     # tests/test_dsir_kernel.py.
     gd = _gram_bucket_counts(
-        docs, id_col=id_col, target_col=target_col,
-        words_col=words_col, n_buckets=n_buckets,
+        docs, id_col="doc_id", target_col="is_target",
+        words_col="words", n_buckets=n_buckets,
     ).persist()
 
     # hashed bag-of-words models: ONE bucket-bounded count table
     # (<= n_buckets rows after the map-side-combined groupBy).
-    tgt = F.col(target_col)
+    tgt = F.col("is_target")
     model = gd.groupBy("__b").agg(
         F.sum(F.when(tgt, F.col("__c")).otherwise(0)).cast("long").alias(
             "__ct"
@@ -204,7 +201,7 @@ def dsir_scores(
     # loses nothing
     per_doc = (
         gd.join(F.broadcast(lam), "__b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("__c").cast("long").alias("n_grams"),
             F.sum(F.col("__c") * F.col("__lam")).alias("__ms"),
@@ -214,7 +211,7 @@ def dsir_scores(
     # Gumbel-top-k resampling with content-keyed noise (sample_mix
     # determinism convention): u in (0,1) from the md5 integer of
     # the doc id, g = -ln(-ln(u)), key = ln-importance + g
-    h = _md5_bucket(F.col(id_col).cast("string"), 4294967296)
+    h = _md5_bucket(F.col("doc_id").cast("string"), 4294967296)
     u = (h + F.lit(0.5)) / F.lit(4294967296.0)
     g6 = F.round(-F.log(-F.log(u)), 6)
     bits = F.round(F.col("__ms") / 1e6, 6)
@@ -222,21 +219,21 @@ def dsir_scores(
         F.round(bits * F.lit(float(_LN2)), 6) + g6, 6
     )
     scored = per_doc.select(
-        id_col,
+        "doc_id",
         "n_grams",
         bits.alias("dsir_bits"),
         key.alias("gumbel_key"),
     )
     # global rank — fine at driver scale; at 100 TB `selected` is an
-    # orderBy(key desc).limit(n_select) (TakeOrderedAndProject) and
+    # orderBy(key desc).limit(_N_SELECT) (TakeOrderedAndProject) and
     # the rank column is dropped
-    w = Window.orderBy(F.col("gumbel_key").desc(), F.col(id_col))
+    w = Window.orderBy(F.col("gumbel_key").desc(), F.col("doc_id"))
     return scored.select(
-        id_col,
+        "doc_id",
         "n_grams",
         "dsir_bits",
         "gumbel_key",
         F.row_number().over(w).cast("long").alias("sel_rank"),
     ).withColumn(
-        "selected", (F.col("sel_rank") <= F.lit(n_select)).cast("long")
+        "selected", (F.col("sel_rank") <= F.lit(_N_SELECT)).cast("long")
     )

@@ -28,13 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def ngram_lm_scores(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-    k_smooth: float = 0.5,
-) -> DataFrame:
+def ngram_lm_scores(docs: DataFrame) -> DataFrame:
     """Score each document with a corpus-trained add-k bigram LM.
 
     p(w | prev) = (c(prev, w) + k) / (c(prev) + k * V); the first
@@ -48,14 +42,15 @@ def ngram_lm_scores(
       would come from approx_percentile instead of a global sort; the
       scoring itself stays one scan + broadcast joins at any scale.
     """
-    words = F.col(words_col)
+    k_smooth = 0.5
+    words = F.col("words")
     # zip each token with its predecessor BEFORE exploding, so the
     # generated rows carry (w, prev) only — carrying the whole array
     # through the explode for an element_at lookup amplifies the
     # exploded size by the mean doc length
     toks = (
         docs.select(
-            id_col,
+            "doc_id",
             words.alias("__wa"),
             F.concat(
                 F.array(F.lit(None).cast("string")),
@@ -63,12 +58,12 @@ def ngram_lm_scores(
             ).alias("__pa"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.size("__wa").alias("__n"),
             F.explode(F.arrays_zip("__wa", "__pa")).alias("__z"),
         )
         .select(
-            id_col,
+            "doc_id",
             "__n",
             F.col("__z.__wa").alias("__w"),
             F.col("__z.__pa").alias("__prev"),
@@ -113,7 +108,7 @@ def ngram_lm_scores(
     )
     # quantized interface: 6dp log2 -> exact integer micro-bits
     micro = F.round(F.round(F.log2(p), 6) * 1e6, 0).cast("long")
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.max("__n").cast("long").alias("n_tokens"),
         F.sum(micro).alias("__ms"),
     )
@@ -121,14 +116,14 @@ def ngram_lm_scores(
         -F.col("__ms") / 1e6 / F.col("n_tokens") + 1e-12, 6
     )
     out = per_doc.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         bits.alias("lm_bits"),
         F.round(F.pow(F.lit(2.0), bits), 6).alias("lm_ppl"),
     )
-    w = Window.orderBy("lm_bits", id_col)
+    w = Window.orderBy("lm_bits", "doc_id")
     return out.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "lm_bits",
         "lm_ppl",

@@ -90,7 +90,7 @@ def _micro_np(a):
     )
 
 
-def gram_partials(emb: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
+def gram_partials(emb: DataFrame) -> DataFrame:
     """Per-partition micro-unit partial sums of the weighted Gram
     matrix: long-form rows (i, j, s) with (i>=0, j>=0) = sum of
     micro(xw_i * xw_j), (i>=0, j=-1) = sum of micro(xw_i), and
@@ -133,7 +133,7 @@ def gram_partials(emb: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
         )
 
     return (
-        emb.select(F.col(vec_col))
+        emb.select(F.col("embedding"))
         .mapInArrow(part, out_schema)
         .groupBy("i", "j")
         .agg(F.sum("s").alias("s"))
@@ -161,13 +161,11 @@ def _power(M: list[list[float]]) -> tuple[list[float], float]:
     return v, lam
 
 
-def pca_fit(
-    emb: DataFrame, *, vec_col: str = "embedding"
-) -> tuple[list[float], list[float], float, float]:
+def pca_fit(emb: DataFrame) -> tuple[list[float], list[float], float, float]:
     """Distributed Gram accumulation + driver power iteration.
     Returns (w1, w2, ev1, ev2) — loadings on the 9dp grid,
     bit-identical to the oracle's CTE replay by construction."""
-    rows = gram_partials(emb, vec_col=vec_col).collect()
+    rows = gram_partials(emb).collect()
     S = [[0] * PCA_DIM for _ in range(PCA_DIM)]
     sm = [0] * PCA_DIM
     n = 0
@@ -195,9 +193,7 @@ def pca_fit(
     return w1, w2, ev1, ev2
 
 
-def pca_project(
-    emb: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def pca_project(emb: DataFrame) -> DataFrame:
     """Fit on the (ramp-weighted) corpus, then project every vector
     onto the top-2 components in one map-only scan (loadings ride the
     task closure; micro-unit sums keep scores order-free).  Output per
@@ -208,12 +204,12 @@ def pca_project(
     import numpy as np
     import pyarrow as pa
 
-    w1, w2, ev1, ev2 = pca_fit(emb, vec_col=vec_col)
+    w1, w2, ev1, ev2 = pca_fit(emb)
     top_dim = min(range(PCA_DIM), key=lambda d: (-abs(w1[d]), d))
     W = np.array(pca_weights())
     a1 = np.array(w1)
     a2 = np.array(w2)
-    out_schema = f"{id_col} long, p1m long, p2m long"
+    out_schema = "vec_id long, p1m long, p2m long"
 
     def proj(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -228,14 +224,14 @@ def pca_project(
             p2 = _micro_np(X * a2).sum(axis=1)
             yield pa.RecordBatch.from_arrays(
                 [ids.cast(pa.int64()), pa.array(p1), pa.array(p2)],
-                names=[id_col, "p1m", "p2m"],
+                names=["vec_id", "p1m", "p2m"],
             )
 
     return (
-        emb.select(F.col(id_col).cast("long"), F.col(vec_col))
+        emb.select(F.col("vec_id").cast("long"), F.col("embedding"))
         .mapInArrow(proj, out_schema)
         .select(
-            id_col,
+            "vec_id",
             F.round(F.col("p1m") / 1e9 + 1e-12, 6).alias("pc1"),
             F.round(F.col("p2m") / 1e9 + 1e-12, 6).alias("pc2"),
             F.lit(ev1).alias("ev1"),

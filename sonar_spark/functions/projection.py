@@ -52,8 +52,7 @@ def _micro9(col) -> F.Column:
     return F.round(F.round(col, 9) * 1e9, 0).cast("long")
 
 
-def jl_project(emb: DataFrame, *, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
+def jl_project(emb: DataFrame) -> DataFrame:
     """(id, j, p) projected coordinates, 6dp (micro-unit sums).
 
     r6: vectorized Arrow kernel (guide §4.2) replacing the
@@ -102,18 +101,15 @@ def jl_project(emb: DataFrame, *, id_col: str = "vec_id",
             p = spark_round(mus.ravel() / 1e9 + 1e-12, 6)
             yield pa.RecordBatch.from_arrays(
                 [pa.array(out_ids, pa.int64()), pa.array(out_j), pa.array(p)],
-                names=[id_col, "j", "p"],
+                names=["vec_id", "j", "p"],
             )
 
-    return emb.select(id_col, vec_col).mapInArrow(
-        gen, schema=f"{id_col} long, j int, p double"
+    return emb.select("vec_id", "embedding").mapInArrow(
+        gen, schema="vec_id long, j int, p double"
     )
 
 
-def jl_distance_report(
-    emb: DataFrame, *, id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def jl_distance_report(emb: DataFrame) -> DataFrame:
     """Distance-preservation report over the deterministic
     (even id, id+1) pair sample: squared distance before and after
     projection and their ratio (expectation 1 under JL; variance
@@ -121,12 +117,12 @@ def jl_distance_report(
     ratio — all 6dp."""
     # the projection table feeds both pair sides — persist it so the
     # posexplode+join+aggregate runs once (the dsir model precedent)
-    proj = jl_project(emb, id_col=id_col, vec_col=vec_col).persist()
+    proj = jl_project(emb).persist()
     a = emb.select(
-        F.col(id_col).alias("vec_id_a"), F.col(vec_col).alias("__va")
+        F.col("vec_id").alias("vec_id_a"), F.col("embedding").alias("__va")
     ).where(F.col("vec_id_a") % 2 == 0)
     b = emb.select(
-        F.col(id_col).alias("vec_id_b"), F.col(vec_col).alias("__vb")
+        F.col("vec_id").alias("vec_id_b"), F.col("embedding").alias("__vb")
     )
     pairs = a.join(
         b, F.col("vec_id_b") == F.col("vec_id_a") + 1
@@ -149,10 +145,10 @@ def jl_distance_report(
         F.round(d2o_micro / 1e9 + 1e-12, 6).alias("d2_orig"),
     )
     pa = proj.select(
-        F.col(id_col).alias("vec_id_a"), "j", F.col("p").alias("__pa")
+        F.col("vec_id").alias("vec_id_a"), "j", F.col("p").alias("__pa")
     )
     pb = proj.select(
-        F.col(id_col).alias("vec_id_b"), "j", F.col("p").alias("__pb")
+        F.col("vec_id").alias("vec_id_b"), "j", F.col("p").alias("__pb")
     )
     dproj = (
         orig.select("vec_id_a", "vec_id_b")
@@ -185,10 +181,7 @@ def jl_distance_report(
     )
 
 
-def int8_quantize_report(
-    emb: DataFrame, *, id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def int8_quantize_report(emb: DataFrame) -> DataFrame:
     """Per-vector int8 affine quantization report — the 8x storage
     compression embedding stores apply before ANN (the scalar cousin
     of the IVF-PQ codebooks): q_i = round((v_i - min) / scale) with
@@ -251,13 +244,13 @@ def int8_quantize_report(
                     pa.array(q.sum(axis=1).astype(np.int64)),
                     pa.array(rmse),
                 ],
-                names=[id_col, "vmin", "vmax", "code_sum", "rmse"],
+                names=["vec_id", "vmin", "vmax", "code_sum", "rmse"],
             )
 
-    return emb.select(id_col, vec_col).mapInArrow(
+    return emb.select("vec_id", "embedding").mapInArrow(
         gen,
         schema=(
-            f"{id_col} long, vmin double, vmax double, "
+            "vec_id long, vmin double, vmax double, "
             "code_sum long, rmse double"
         ),
     )

@@ -18,13 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def tfidf_topk(
-    docs: DataFrame,
-    *,
-    k: int = 5,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
+def tfidf_topk(docs: DataFrame, *, k: int = 5) -> DataFrame:
     """Top-k TF-IDF terms per document.
 
     idf6 = round(ln(N / df), 6) (quantized boundary); score =
@@ -33,8 +27,8 @@ def tfidf_topk(
     deterministic under ties.
     """
     tf = (
-        docs.select(id_col, F.explode(words_col).alias("term"))
-        .groupBy(id_col, "term")
+        docs.select("doc_id", F.explode("words").alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
     df_t = tf.groupBy("term").agg(
@@ -48,18 +42,18 @@ def tfidf_topk(
         tf.join(F.broadcast(df_t), "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "term",
             "tf",
             F.round(F.col("tf") * idf6, 6).alias("tfidf"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("term")
     )
     return (
         scored.select(
-            id_col,
+            "doc_id",
             "term",
             "tf",
             "tfidf",
@@ -73,11 +67,7 @@ def bm25_scores(
     docs: DataFrame,
     query_terms: list[str],
     *,
-    k1: float = 1.2,
-    b: float = 0.75,
     top_n: int = 20,
-    id_col: str = "doc_id",
-    words_col: str = "words",
 ) -> DataFrame:
     """BM25 ranked retrieval for a fixed term query.
 
@@ -88,16 +78,18 @@ def bm25_scores(
     avgdl/N are corpus scalars riding a broadcast; at 100 TB both
     come from the same stats pass that builds df.
     """
-    words = F.col(words_col)
-    base = docs.select(id_col, words.alias("__w"), F.size(words).alias("__dl"))
+    k1 = 1.2
+    b = 0.75
+    words = F.col("words")
+    base = docs.select("doc_id", words.alias("__w"), F.size(words).alias("__dl"))
     tf = (
-        base.select(id_col, "__dl", F.explode("__w").alias("term"))
+        base.select("doc_id", "__dl", F.explode("__w").alias("term"))
         .where(F.col("term").isin(query_terms))
-        .groupBy(id_col, "__dl", "term")
+        .groupBy("doc_id", "__dl", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
     df_t = (
-        base.select(id_col, F.array_distinct("__w").alias("__d"))
+        base.select("doc_id", F.array_distinct("__w").alias("__d"))
         .select(F.explode("__d").alias("term"))
         .where(F.col("term").isin(query_terms))
         .groupBy("term")
@@ -123,13 +115,13 @@ def bm25_scores(
     per_doc = (
         tf.join(F.broadcast(df_t), "term")
         .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(micro).alias("__ms"))
     )
-    w = Window.orderBy(F.col("__ms").desc(), F.col(id_col))
+    w = Window.orderBy(F.col("__ms").desc(), F.col("doc_id"))
     return (
         per_doc.select(
-            id_col,
+            "doc_id",
             (F.col("__ms") / 1e6).alias("bm25"),
             F.row_number().over(w).cast("long").alias("rank"),
         )

@@ -53,12 +53,7 @@ def md5_60(col: Column) -> Column:
 _md5_60 = md5_60
 
 
-def hll_distinct(
-    docs: DataFrame,
-    *,
-    group_col: str = "source",
-    words_col: str = "words",
-) -> DataFrame:
+def hll_distinct(docs: DataFrame) -> DataFrame:
     """Per-group HLL distinct-token estimate next to the exact count.
 
     h = md5_60(term); register j = h % m; w = h // m; rho = position
@@ -75,13 +70,13 @@ def hll_distinct(
     """
     m = HLL_M
     terms = docs.select(
-        group_col, F.explode(words_col).alias("t")
+        "source", F.explode("words").alias("t")
     ).distinct()
     h = _md5_60(F.col("t"))
     # pure INTEGER register math: j = low 8 bits, w = the rest
     # (h / m in doubles would lose bits past 2^53)
     base = terms.select(
-        group_col,
+        "source",
         h.bitwiseAND(F.lit(m - 1)).alias("__j"),
         F.shiftright(h, 8).alias("__w"),
     )
@@ -92,11 +87,11 @@ def hll_distinct(
     for p in range(RHO_CAP - 1):
         rho = rho.when(lowbit == (1 << p), F.lit(p + 1))
     rho = rho.otherwise(F.lit(RHO_CAP))
-    regs = base.select(group_col, "__j", rho.alias("__rho")).groupBy(
-        group_col, "__j"
+    regs = base.select("source", "__j", rho.alias("__rho")).groupBy(
+        "source", "__j"
     ).agg(F.max("__rho").alias("__mj"))
     # exact distincts ride the same distinct pass
-    exact = terms.groupBy(group_col).agg(
+    exact = terms.groupBy("source").agg(
         F.count("*").cast("long").alias("exact_distinct")
     )
     # 2^-M_j as exact literals (no pow): every value and every
@@ -105,7 +100,7 @@ def hll_distinct(
     for p in range(1, RHO_CAP):
         inv = inv.when(F.col("__mj") == p, F.lit(2.0 ** -p))
     inv = inv.otherwise(F.lit(1.0))
-    per = regs.groupBy(group_col).agg(
+    per = regs.groupBy("source").agg(
         F.sum(inv).alias("__s_used"),
         F.count("*").cast("long").alias("__used"),
     )
@@ -119,9 +114,9 @@ def hll_distinct(
         F.lit(float(m)) * F.log(F.lit(float(m)) / v),
     ).otherwise(e_raw)
     return (
-        per.join(exact, group_col)
+        per.join(exact, "source")
         .select(
-            group_col,
+            "source",
             "exact_distinct",
             F.round(est, 6).alias("hll_estimate"),
             F.round(
@@ -133,12 +128,7 @@ def hll_distinct(
     )
 
 
-def cms_heavy_hitters(
-    docs: DataFrame,
-    *,
-    words_col: str = "words",
-    top_n: int = 10,
-) -> DataFrame:
+def cms_heavy_hitters(docs: DataFrame, *, top_n: int = 10) -> DataFrame:
     """Count-Min heavy hitters: estimate term frequencies from a
     d x w bucket sketch and report the top-n exact terms with their
     CMS estimates.
@@ -153,7 +143,7 @@ def cms_heavy_hitters(
 
     Output: term, exact count, cms_estimate, over_frac (6dp), rank.
     """
-    toks = docs.select(F.explode(words_col).alias("t"))
+    toks = docs.select(F.explode("words").alias("t"))
     # ONE term-level count pass; the d salted md5 hashes are computed
     # on the vocab-bounded count table, not per token (a 4-way union
     # over the token stream re-derived the corpus scan + md5 4x)
@@ -221,23 +211,19 @@ BLOOM_K = 3  # hashes
 def bloom_decontaminate(
     train_shingles: DataFrame,
     eval_shingles: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    sh_col: str = "sh",
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
 ) -> DataFrame:
     """Bloom-filter membership screen for benchmark decontamination —
     the SCALE PATH for the exact-join decontaminate operator: the
-    eval side collapses to a <= m-row bit table that broadcasts
+    eval side collapses to a <= BLOOM_M-row bit table that broadcasts
     everywhere, so the corpus side never joins eval shingles at all.
     (Spark's own BloomFilter aggregate is value-opaque across
     engines; this one is md5-derived and fully replayable.)
 
-    Bit i of shingle s: md5_60(s || '#b<i>') % m.  A train shingle is
-    bloom-POSITIVE iff all k of its bits are set (count of matched
-    exploded bit rows == k — duplicate bits within one shingle's k
-    hashes match-or-miss together, so the plain count is exact).  The
+    Bit i of shingle s: md5_60(s || '#b<i>') % BLOOM_M.  A train
+    shingle is bloom-POSITIVE iff all BLOOM_K of its bits are set
+    (count of matched exploded bit rows == BLOOM_K — duplicate bits
+    within one shingle's BLOOM_K hashes match-or-miss together, so
+    the plain count is exact).  The
     exact join runs alongside to measure the false-positive rate —
     and to certify the zero-false-negative guarantee (n_maybe >=
     n_true per doc, by construction).
@@ -245,18 +231,18 @@ def bloom_decontaminate(
     Output per train doc: n_shingles, n_maybe, n_true, n_false_pos,
     contaminated_bloom, contaminated_exact, fp_frac (6dp).
     """
-    sh = F.col(sh_col)
+    sh = F.col("sh")
 
     def bit(i: int, col: Column) -> Column:
         return (
-            _md5_60(F.concat(col, F.lit(f"#b{i}"))) % m
+            _md5_60(F.concat(col, F.lit(f"#b{i}"))) % BLOOM_M
         )
 
     ev_d = eval_shingles.select(sh.alias("__es")).distinct()
     bits = (
         ev_d.select(
             F.explode(
-                F.array(*[bit(i, F.col("__es")) for i in range(k)])
+                F.array(*[bit(i, F.col("__es")) for i in range(BLOOM_K)])
             ).alias("__bit")
         )
         .distinct()
@@ -264,38 +250,38 @@ def bloom_decontaminate(
     # the distinct train-shingle table feeds FOUR consumers (bit
     # stream, exact join, and both sides of the per-shingle frame) —
     # persist it so the corpus explode+distinct runs once
-    tr = train_shingles.select(id_col, sh).distinct().persist()
+    tr = train_shingles.select("doc_id", sh).distinct().persist()
     lng = tr.select(
-        id_col,
+        "doc_id",
         sh,
         F.explode(
-            F.array(*[bit(i, sh) for i in range(k)])
+            F.array(*[bit(i, sh) for i in range(BLOOM_K)])
         ).alias("__bit"),
     )
     maybe = (
         lng.join(F.broadcast(bits), "__bit")
-        .groupBy(id_col, sh_col)
-        .agg((F.count("*") == k).cast("long").alias("__maybe"))
+        .groupBy("doc_id", "sh")
+        .agg((F.count("*") == BLOOM_K).cast("long").alias("__maybe"))
         .where(F.col("__maybe") == 1)
-        .select(id_col, sh_col, "__maybe")
+        .select("doc_id", "sh", "__maybe")
     )
     true_hit = (
         tr.join(
-            F.broadcast(ev_d.select(F.col("__es").alias(sh_col))),
-            sh_col,
+            F.broadcast(ev_d.select(F.col("__es").alias("sh"))),
+            "sh",
         )
-        .select(id_col, sh_col, F.lit(1).alias("__true"))
+        .select("doc_id", "sh", F.lit(1).alias("__true"))
     )
     per_sh = (
-        tr.join(maybe, [id_col, sh_col], "left")
-        .join(true_hit, [id_col, sh_col], "left")
+        tr.join(maybe, ["doc_id", "sh"], "left")
+        .join(true_hit, ["doc_id", "sh"], "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("__maybe", F.lit(0)).alias("__maybe"),
             F.coalesce("__true", F.lit(0)).alias("__true"),
         )
     )
-    return per_sh.groupBy(id_col).agg(
+    return per_sh.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_shingles"),
         F.sum("__maybe").cast("long").alias("n_maybe"),
         F.sum("__true").cast("long").alias("n_true"),
@@ -310,12 +296,7 @@ def bloom_decontaminate(
     )
 
 
-def hll_merge_check(
-    docs: DataFrame,
-    *,
-    group_col: str = "source",
-    words_col: str = "words",
-) -> DataFrame:
+def hll_merge_check(docs: DataFrame) -> DataFrame:
     """The HLL merge law as a checkable result: treat each group as a
     SHARD, publish its register table, max-merge the shards, and
     compare the merged estimate against the sketch computed directly
@@ -371,14 +352,14 @@ def hll_merge_check(
     # shard-distinct terms (a term may recur across shards — exactly
     # the situation merge must handle)
     shard_terms = docs.select(
-        group_col, F.explode(words_col).alias("t")
+        "source", F.explode("words").alias("t")
     ).distinct()
-    shard_regs = registers(shard_terms, [group_col])
+    shard_regs = registers(shard_terms, ["source"])
     merged_regs = shard_regs.groupBy("__j").agg(
         F.max("__mj").alias("__mj")
     )
     corpus_terms = docs.select(
-        F.explode(words_col).alias("t")
+        F.explode("words").alias("t")
     ).distinct()
     corpus_regs = registers(corpus_terms, [])
     est_merged = estimate(merged_regs).select(

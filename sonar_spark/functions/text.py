@@ -25,11 +25,12 @@ def token_lengths(text: Column) -> Column:
     return F.transform(tokenize_ws(text), F.length)
 
 
-def token_ids(text: Column, vocab: int = 50_257) -> Column:
-    """Deterministic int32 token ids via xxhash64(token) % vocab —
-    the token table adapter (input_hint shape) for real text."""
+def token_ids(text: Column) -> Column:
+    """Deterministic int32 token ids via xxhash64(token) % 50,257 (the
+    GPT-2 vocabulary size) — the token table adapter (input_hint
+    shape) for real text."""
     return F.transform(
-        tokenize_ws(text), lambda t: F.pmod(F.xxhash64(t), F.lit(vocab)).cast("int")
+        tokenize_ws(text), lambda t: F.pmod(F.xxhash64(t), F.lit(50_257)).cast("int")
     )
 
 
@@ -126,12 +127,12 @@ def doc_fingerprint(text: Column) -> Column:
     return F.xxhash64(F.lower(F.regexp_replace(text, r"\s+", " ")))
 
 
-def to_token_table(docs: DataFrame, vocab: int = 50_257) -> DataFrame:
+def to_token_table(docs: DataFrame) -> DataFrame:
     """documents(doc_id,text,source,...) -> input_hint token table
     (doc_id string, tokens array<int>, n_tok int, source string)."""
     return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        token_ids(F.col("text"), vocab).alias("tokens"),
+        token_ids(F.col("text")).alias("tokens"),
         n_tokens(F.col("text")).cast("int").alias("n_tok"),
         F.col("source"),
     )
@@ -161,14 +162,7 @@ def ngrams_ws(words: Column, k: int) -> Column:
     )
 
 
-def repetition_profile(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-    top_word_max: float = 0.2,
-    dup_3gram_max: float = 0.3,
-) -> DataFrame:
+def repetition_profile(docs: DataFrame) -> DataFrame:
     """Per-document repetition metrics — the Gopher-style repetition
     filters (Rae et al. 2021, "Scaling Language Models", table A1)
     a pretraining curation pipeline runs next to quality/lang-ID:
@@ -189,6 +183,8 @@ def repetition_profile(
     quantized 6dp boundaries go through kernels.spark_round (exact
     Catalyst HALF_UP semantics); bit-equality against the retained
     expression form is certified by tests/test_text_kernels.py."""
+    top_word_max = 0.2
+    dup_3gram_max = 0.3
     from collections.abc import Iterator
 
     import numpy as np
@@ -196,7 +192,7 @@ def repetition_profile(
 
     from ..kernels import spark_round
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import Counter
@@ -209,7 +205,7 @@ def repetition_profile(
             tops: list = []
             d3: list = []
             d5: list = []
-            for did, ws in zip(pdf[id_col], pdf[words_col]):
+            for did, ws in zip(pdf["doc_id"], pdf["words"]):
                 ws = list(ws)
                 n = len(ws)
                 if n == 0:
@@ -237,7 +233,7 @@ def repetition_profile(
             d5_a = spark_round(np.asarray(d5), 6)
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "n_tokens": ns_a,
                     "top_word_frac": twf,
                     "dup_3gram_frac": d3_a,
@@ -247,10 +243,10 @@ def repetition_profile(
                 }
             )
 
-    return docs.select(id_col, words_col).mapInPandas(
+    return docs.select("doc_id", "words").mapInPandas(
         gen,
         schema=(
-            f"{id_col} {id_type}, n_tokens long, top_word_frac double,"
+            f"doc_id {id_type}, n_tokens long, top_word_frac double,"
             " dup_3gram_frac double, dup_5gram_frac double,"
             " flagged boolean"
         ),

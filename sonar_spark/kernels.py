@@ -124,6 +124,9 @@ def flat_frame_starts(
     return starts_base + local_idx * hop, doc_nf
 
 
+_FRAME_CHUNK = 4096  # frames gathered per step of frame_features_flat
+
+
 def frame_features_flat(
     flat: np.ndarray,
     doc_lens: np.ndarray,
@@ -131,7 +134,6 @@ def frame_features_flat(
     hop: int,
     entropy_bins: int = 16,
     scratch: _Scratch | None = None,
-    chunk: int = 4096,
     keys: tuple[str, ...] | None = None,
     weights: np.ndarray | None = None,
 ) -> tuple[dict[str, np.ndarray], np.ndarray]:
@@ -185,8 +187,8 @@ def frame_features_flat(
                    for b in range(len(edges) - 1)]
         with np.errstate(divide="ignore"):
             logk = np.where(karr > 0, np.log10(np.where(karr > 0, karr, 1)), 0.0)
-    for a in range(0, nf, chunk):
-        b = min(a + chunk, nf)
+    for a in range(0, nf, _FRAME_CHUNK):
+        b = min(a + _FRAME_CHUNK, nf)
         # NOTE: plain fancy indexing; np.take(..., out=) on an
         # overlapping strided view falls off numpy's fast path.
         f = sw[starts[a:b]]
@@ -516,18 +518,15 @@ def dct_matrix(num_coeffs: int, num_filters: int) -> np.ndarray:
     return d
 
 
-def lifter_weights(num_coeffs: int, lifter_coeff: float = 22.0) -> np.ndarray:
+def lifter_weights(num_coeffs: int) -> np.ndarray:
     """Sinusoidal liftering weights, C0 unliftered (mfcc.go:230-245):
-    w_i = 1 + (L/2) sin(pi i / L) for i >= 1."""
-    w = 1.0 + (lifter_coeff / 2.0) * np.sin(
-        np.pi * np.arange(num_coeffs) / lifter_coeff
-    )
+    w_i = 1 + (L/2) sin(pi i / L) for i >= 1, L = 22."""
+    w = 1.0 + 11.0 * np.sin(np.pi * np.arange(num_coeffs) / 22.0)
     w[0] = 1.0
     return w
 
 
-def mfcc_matrices(num_bins: int = 16, num_filters: int = MFCC_FILTERS,
-                  num_coeffs: int = MFCC_COEFFS):
+def mfcc_matrices(num_bins: int = 16):
     """(filter_bank, dct, lifter) for the histogram-as-spectrum MFCC
     analog: the B-bin histogram plays the magnitude spectrum of an
     fftSize = 2(B-1) transform at analog sampleRate 2(B-1), so the
@@ -535,8 +534,8 @@ def mfcc_matrices(num_bins: int = 16, num_filters: int = MFCC_FILTERS,
     the NewMFCC defaults (mfcc.go:44-54) scaled to 16 bins
     (26 filters -> 8, 13 coeffs -> 6, lifter 22 kept)."""
     fft_size = 2 * (num_bins - 1)
-    fb = mel_filter_bank(num_filters, fft_size, fft_size, 0.0, num_bins - 1.0)
-    return fb, dct_matrix(num_coeffs, num_filters), lifter_weights(num_coeffs)
+    fb = mel_filter_bank(MFCC_FILTERS, fft_size, fft_size, 0.0, num_bins - 1.0)
+    return fb, dct_matrix(MFCC_COEFFS, MFCC_FILTERS), lifter_weights(MFCC_COEFFS)
 
 
 _MFCC_CACHE: dict[int, tuple] = {}
@@ -858,15 +857,15 @@ def xcorr_peak_metrics(lags: np.ndarray, corr: np.ndarray) -> dict[str, float]:
             "second_peak": second}
 
 
-def xcorr_confidence(m: dict[str, float], w=(0.55, 0.22, 0.12, 0.06)) -> float:
+def xcorr_confidence(m: dict[str, float]) -> float:
     """Weighted confidence (stats/alignment.go:183-243 weights
     0.55 peak + 0.22 sharpness + 0.12 sidelobe + 0.06 SNR), squashed
     to [0,1]."""
     conf = (
-        w[0] * min(m["peak"], 1.0)
-        + w[1] * min(m["sharpness"] * 10.0, 1.0)
-        + w[2] * min(m["sidelobe"] / 10.0, 1.0)
-        + w[3] * min(m["snr"] / 20.0, 1.0)
+        0.55 * min(m["peak"], 1.0)
+        + 0.22 * min(m["sharpness"] * 10.0, 1.0)
+        + 0.12 * min(m["sidelobe"] / 10.0, 1.0)
+        + 0.06 * min(m["snr"] / 20.0, 1.0)
     )
     return float(min(max(conf, 0.0), 1.0))
 
@@ -1009,24 +1008,19 @@ def cosine_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 # ------------------------------------------------- exact round emulation
 
-def spark_round(x: np.ndarray, dp: int) -> np.ndarray:
-    """Vectorized emulation of Spark's round(col, dp) on non-null
-    finite doubles: BigDecimal(Double.toString(x)).setScale(dp,
-    HALF_UP) — half-up on the SHORTEST decimal repr, away from zero
-    for negatives.  Fast path: sign * floor(|x|*10^dp + 0.5) / 10^dp
-    (one correctly-rounded IEEE divide reproduces the double Spark
-    returns); values whose scaled fractional part falls inside a
-    float-error guard band around .5 are recomputed exactly via
-    Decimal(repr(x)) (Python repr == Java Double.toString: both emit
-    the shortest round-trip decimal).  The kernelization protocol
-    (content_detect precedent) additionally verifies bit-equality
-    against the Catalyst expression on the real corpora before any
-    swap."""
+def _half_up_units(x: np.ndarray, dp: int) -> np.ndarray:
+    """The signed integer k (as float64) with k / 10^dp == Spark's
+    round(x, dp): half-up on the SHORTEST decimal repr of x, away from
+    zero for negatives (BigDecimal(Double.toString(x)).setScale(dp,
+    HALF_UP)).  Fast path: sign * floor(|x| * 10^dp + 0.5); values
+    whose scaled fractional part falls inside a float-error guard band
+    around .5 are recomputed exactly via Decimal(repr(x)) (Python repr
+    == Java Double.toString: both emit the shortest round-trip
+    decimal).  Exact for |k| < 2^53."""
     from decimal import ROUND_HALF_UP, Decimal
 
     x = np.asarray(x, dtype=np.float64)
-    scale = 10.0 ** dp
-    ax = np.abs(x) * scale
+    ax = np.abs(x) * 10.0 ** dp
     frac = ax - np.floor(ax)
     # |ax - dec(x)*10^dp| <= ~2 ulp(ax); the 1e-6 absolute floor
     # catches the small-|x| regime where repr-vs-product drift is
@@ -1034,19 +1028,27 @@ def spark_round(x: np.ndarray, dp: int) -> np.ndarray:
     tol = 1e-6 + ax * 4e-16
     slow = np.abs(frac - 0.5) <= tol
     k = np.floor(ax + 0.5)
-    out = np.where(x >= 0, k, -k) / scale
-    if slow.any():
-        q = Decimal(1).scaleb(-dp)
-        for i in np.nonzero(slow)[0]:
-            out[i] = float(
-                Decimal(repr(float(x[i]))).quantize(
-                    q, rounding=ROUND_HALF_UP
-                )
+    out = np.where(x >= 0, k, -k)
+    for i in np.nonzero(slow)[0]:
+        out[i] = float(
+            Decimal(repr(float(x[i]))).scaleb(dp).quantize(
+                Decimal(1), rounding=ROUND_HALF_UP
             )
+        )
+    return out
+
+
+def spark_round(x: np.ndarray, dp: int) -> np.ndarray:
+    """Vectorized emulation of Spark's round(col, dp) on non-null
+    finite doubles: _half_up_units(x, dp) / 10^dp — for |k| < 2^53 one
+    correctly-rounded IEEE divide of two exact operands is the double
+    Spark returns.  The kernelization protocol (content_detect
+    precedent) additionally verifies bit-equality against the Catalyst
+    expression on the real corpora before any swap."""
     # + 0.0 normalizes -0.0 -> +0.0: BigDecimal has no signed zero,
     # so Spark's round returns +0.0 for any tiny negative that rounds
     # to zero — and the driver's value hash is signbit-strict
-    return out + 0.0
+    return _half_up_units(x, dp) / 10.0 ** dp + 0.0
 
 
 def spark_round_micro(x: np.ndarray, dp: int) -> np.ndarray:
@@ -1056,21 +1058,4 @@ def spark_round_micro(x: np.ndarray, dp: int) -> np.ndarray:
     (beyond that the double product k*10^dp loses integer
     precision; the micro-unit contracts here cap |x| far below
     that)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    x = np.asarray(x, dtype=np.float64)
-    scale = 10.0 ** dp
-    ax = np.abs(x) * scale
-    frac = ax - np.floor(ax)
-    tol = 1e-6 + ax * 4e-16
-    slow = np.abs(frac - 0.5) <= tol
-    k = np.floor(ax + 0.5)
-    out = np.where(x >= 0, k, -k)
-    if slow.any():
-        for i in np.nonzero(slow)[0]:
-            out[i] = float(
-                Decimal(repr(float(x[i]))).scaleb(dp).quantize(
-                    Decimal(1), rounding=ROUND_HALF_UP
-                )
-            )
-    return out.astype(np.int64)
+    return _half_up_units(x, dp).astype(np.int64)

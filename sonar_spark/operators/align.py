@@ -44,19 +44,16 @@ _ALIGN_COLS = ["pair_id", "lag", "peak", "sharpness", "sidelobe", "snr",
 _HYBRID_CONF_THRESHOLD = 0.7
 
 
-def build_doc_series(
-    feats: DataFrame,
-    signal: str = "rms_energy",
-    key: str = "doc_id",
-    order: str = "frame_idx",
-) -> DataFrame:
-    """Per-doc ordered feature series: (key, series array<double>).
+def build_doc_series(feats: DataFrame, signal: str = "rms_energy") -> DataFrame:
+    """Per-doc ordered feature series: (doc_id, series array<double>).
     One shuffle (groupBy key); ordering via sort_array over
     (order, value) structs — deterministic under any partitioning."""
-    return feats.groupBy(key).agg(
+    return feats.groupBy("doc_id").agg(
         F.transform(
             F.sort_array(
-                F.collect_list(F.struct(F.col(order).alias("o"), F.col(signal).alias("v")))
+                F.collect_list(
+                    F.struct(F.col("frame_idx").alias("o"), F.col(signal).alias("v"))
+                )
             ),
             lambda s: s["v"],
         ).alias("series")
@@ -66,10 +63,6 @@ def build_doc_series(
 def align_pairs(
     pairs: DataFrame,
     cfg: AlignmentConfig = AlignmentConfig(),
-    *,
-    pair_id: str = "pair_id",
-    a: str = "series_a",
-    b: str = "series_b",
 ) -> DataFrame:
     """Align every (series_a, series_b) pair.
 
@@ -84,7 +77,7 @@ def align_pairs(
     def phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for pid, sa, sb in zip(pdf[pair_id], pdf[a], pdf[b]):
+            for pid, sa, sb in zip(pdf["pair_id"], pdf["series_a"], pdf["series_b"]):
                 sa = np.asarray(sa, dtype=np.float64)
                 sb = np.asarray(sb, dtype=np.float64)
                 lags, corr = kernels.xcorr_normalized(sa, sb, cfg.max_lag)
@@ -123,11 +116,7 @@ def align_pairs(
                 )
             yield pd.DataFrame(rows, columns=_ALIGN_COLS)
 
-    inp = pairs.select(
-        F.col(pair_id).alias("pair_id"),
-        F.col(a).alias("series_a"),
-        F.col(b).alias("series_b"),
-    )
+    inp = pairs.select("pair_id", "series_a", "series_b")
     p1 = inp.mapInPandas(phase1, schema=_ALIGN_SCHEMA)
     return _hybrid_phase2(inp, p1, phase2)
 
@@ -142,13 +131,7 @@ def _hybrid_phase2(inp, p1, phase2):
     return high.unionByName(p2)
 
 
-def align_pairs_dtw(
-    pairs: DataFrame,
-    *,
-    pair_id: str = "pair_id",
-    a: str = "series_a",
-    b: str = "series_b",
-) -> DataFrame:
+def align_pairs_dtw(pairs: DataFrame) -> DataFrame:
     """DTW-only alignment of every pair (the forced-method path the
     multi-feature extractor uses for chroma features,
     extractors/alignment.go:346-352 with method AlignmentDTW).
@@ -183,11 +166,7 @@ def align_pairs_dtw(
                          "quality", "dtw_dist"],
             )
 
-    inp = pairs.select(
-        F.col(pair_id).alias("pair_id"),
-        F.col(a).alias("series_a"),
-        F.col(b).alias("series_b"),
-    )
+    inp = pairs.select("pair_id", "series_a", "series_b")
     return inp.mapInPandas(
         run,
         schema="pair_id string, offset double, confidence double, "
@@ -201,23 +180,17 @@ def align_pairs_dtw(
 BEST_SELECT_WEIGHTS = {"corr_energy": 1.0, "dtw_chroma": 0.7}
 
 
-def select_best_alignment(
-    results: DataFrame,
-    weights: dict[str, float] | None = None,
-    *,
-    pair_id: str = "pair_id",
-) -> DataFrame:
+def select_best_alignment(results: DataFrame) -> DataFrame:
     """selectBestAlignment (extractors/alignment.go:412-445): score =
     weight(feature_type) * (0.4 confidence + 0.4 similarity +
     0.2 quality); keep the argmax row per pair. Pure expressions +
     one per-pair top-1 window."""
     from .topk import topk_per_group
 
-    w = weights or BEST_SELECT_WEIGHTS
     wcol = F.coalesce(
         *[
             F.when(F.col("feature_type") == k, F.lit(float(v)))
-            for k, v in w.items()
+            for k, v in BEST_SELECT_WEIGHTS.items()
         ],
         F.lit(0.5),  # default for unknown feature types (:433-435)
     )
@@ -229,7 +202,7 @@ def select_best_alignment(
     scored = results.withColumn("score", score)
     best = topk_per_group(
         scored,
-        pair_id,
+        "pair_id",
         [F.col("score").desc(), F.col("feature_type").asc()],
         1,
     )
@@ -239,11 +212,6 @@ def select_best_alignment(
 def multi_feature_align(
     pairs: DataFrame,
     cfg: AlignmentConfig = AlignmentConfig(),
-    *,
-    features: tuple[tuple[str, str], ...] = (
-        ("corr_energy", "energy"),
-        ("dtw_chroma", "chroma"),
-    ),
 ) -> DataFrame:
     """performMultiFeatureAlignment (extractors/alignment.go:300-356):
     align each pair on MULTIPLE feature series — cross-correlation for
@@ -254,7 +222,7 @@ def multi_feature_align(
     (e.g. energy_a, energy_b, chroma_a, chroma_b). Returns one row per
     pair: the winning alignment with its feature_type and score."""
     per_feature = []
-    for ftype, col in features:
+    for ftype, col in (("corr_energy", "energy"), ("dtw_chroma", "chroma")):
         sub = pairs.select(
             "pair_id",
             F.col(f"{col}_a").alias("series_a"),
@@ -284,23 +252,18 @@ def multi_feature_align(
 
 
 def consistency_trials(
-    pairs: DataFrame,
-    cfg: AlignmentConfig = AlignmentConfig(),
-    *,
-    n_trials: int = 3,
-    perturb: float = 0.01,
+    pairs: DataFrame, cfg: AlignmentConfig = AlignmentConfig()
 ) -> DataFrame:
     """Alignment consistency check (reference stats/alignment.go:
-    710-801): re-align each pair n_trials times with a deterministic
+    710-801): re-align each pair 3 times with a deterministic
     sin-based ~1% perturbation of series_b (:737-749), then aggregate
     offset statistics. Embarrassingly parallel: rows replicated with a
     trial_id column, one align_pairs pass, one groupBy.
 
     Output: pair_id, n_trials, offset_mean, offset_std, offset_range,
     consistency (1 - range/max_lag, clamped to [0,1])."""
-    t = pairs.withColumn(
-        "__trial", F.explode(F.sequence(F.lit(0), F.lit(n_trials - 1)))
-    )
+    perturb = 0.01
+    t = pairs.withColumn("__trial", F.explode(F.sequence(F.lit(0), F.lit(2))))
     perturbed = t.withColumn(
         "series_b",
         F.zip_with(

@@ -37,19 +37,17 @@ def _normalize_rows(m: np.ndarray) -> np.ndarray:
 def train_centroids(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_centroids: int = 16,
-    n_iter: int = 10,
-    sample: int = 10000,
     seed: int = 42,
 ) -> np.ndarray:
     """Spherical k-means on a deterministic sample (orderBy id, limit):
     returns (n_centroids, dim) float64 unit vectors. Lloyd iterations
     with empty-cluster re-seeding; deterministic for a fixed seed
     (clustering.go:117-120 seed-42 precedent)."""
-    t = emb.select(id_col, vec_col).orderBy(id_col).limit(sample).toArrow()
-    X = _normalize_rows(vectors_matrix(t.column(vec_col)))
+    n_iter = 10
+    sample = 10000
+    t = emb.select("vec_id", "embedding").orderBy("vec_id").limit(sample).toArrow()
+    X = _normalize_rows(vectors_matrix(t.column("embedding")))
     rng = np.random.default_rng(seed)
     k = min(n_centroids, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)]
@@ -67,13 +65,7 @@ def train_centroids(
     return C
 
 
-def ivf_assign(
-    emb: DataFrame,
-    centroids: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
     """Assign every vector to its nearest centroid (cosine):
     (id, centroid_id, embedding). Narrow mapInArrow pass against the
     broadcast centroid matrix."""
@@ -86,8 +78,8 @@ def ivf_assign(
 
         Cl = bc.value
         for batch in batches:
-            vec = batch.column(batch.schema.get_field_index(vec_col))
-            ids = batch.column(batch.schema.get_field_index(id_col))
+            vec = batch.column(batch.schema.get_field_index("embedding"))
+            ids = batch.column(batch.schema.get_field_index("vec_id"))
             if len(vec) == 0:
                 continue
             X = vectors_matrix(vec)
@@ -95,25 +87,21 @@ def ivf_assign(
             assign = (Xn @ Cl.T).argmax(axis=1).astype(np.int32)
             yield pa.RecordBatch.from_arrays(
                 [ids, pa.array(assign), vec],
-                names=[id_col, "centroid_id", vec_col],
+                names=["vec_id", "centroid_id", "embedding"],
             )
 
-    vec_type = dict(emb.dtypes)[vec_col]
-    id_type = dict(emb.dtypes)[id_col]
-    return emb.select(id_col, vec_col).mapInArrow(
-        gen, schema=f"{id_col} {id_type}, centroid_id int, {vec_col} {vec_type}"
+    vec_type = dict(emb.dtypes)["embedding"]
+    id_type = dict(emb.dtypes)["vec_id"]
+    return emb.select("vec_id", "embedding").mapInArrow(
+        gen, schema=f"vec_id {id_type}, centroid_id int, embedding {vec_type}"
     )
 
 
 def hyperplane_lsh_pairs(
     emb: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_bits: int = 256,
     band_bits: int = 16,
-    seed: int = 42,
-    max_bucket: int = 1000,
 ) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) LSH candidate pairs —
     the 100-TB path for embedding-cosine near-dup: sign bits against a
@@ -125,6 +113,8 @@ def hyperplane_lsh_pairs(
 
     Output: (doc_a, doc_b) distinct candidate pairs (verify with exact
     cosine downstream — candidates only)."""
+    seed = 42
+    max_bucket = 1000
     from pyspark.sql import Window
 
     n_bands = n_bits // band_bits
@@ -135,8 +125,8 @@ def hyperplane_lsh_pairs(
 
         planes = None
         for batch in batches:
-            vec = batch.column(batch.schema.get_field_index(vec_col))
-            ids = batch.column(batch.schema.get_field_index(id_col))
+            vec = batch.column(batch.schema.get_field_index("embedding"))
+            ids = batch.column(batch.schema.get_field_index("vec_id"))
             if len(vec) == 0:
                 continue
             X = vectors_matrix(vec)
@@ -158,25 +148,25 @@ def hyperplane_lsh_pairs(
                 pa.array(keys.ravel()),
             )
             yield pa.RecordBatch.from_arrays(
-                [ids, band_arr], names=[id_col, "bands"]
+                [ids, band_arr], names=["vec_id", "bands"]
             )
 
-    id_type = dict(emb.dtypes)[id_col]
-    sigs = emb.select(id_col, vec_col).mapInArrow(
-        gen, schema=f"{id_col} {id_type}, bands array<long>"
+    id_type = dict(emb.dtypes)["vec_id"]
+    sigs = emb.select("vec_id", "embedding").mapInArrow(
+        gen, schema=f"vec_id {id_type}, bands array<long>"
     )
     b = sigs.select(
-        id_col, F.posexplode("bands").alias("band_idx", "band_hash")
+        "vec_id", F.posexplode("bands").alias("band_idx", "band_hash")
     )
     counted = b.withColumn(
         "__n",
         F.count("*").over(Window.partitionBy("band_idx", "band_hash")),
     ).where(F.col("__n") <= max_bucket)
     left = counted.select(
-        "band_idx", "band_hash", F.col(id_col).alias("doc_a")
+        "band_idx", "band_hash", F.col("vec_id").alias("doc_a")
     )
     right = counted.select(
-        "band_idx", "band_hash", F.col(id_col).alias("doc_b")
+        "band_idx", "band_hash", F.col("vec_id").alias("doc_b")
     )
     return (
         left.join(right, ["band_idx", "band_hash"])
@@ -190,8 +180,6 @@ def ivf_probes(
     queries: DataFrame,
     centroids: np.ndarray,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_probe: int = 4,
 ) -> DataFrame:
     """Per-query probe list: top n_probe centroids by cosine against
@@ -208,8 +196,8 @@ def ivf_probes(
         Cl = bc.value
         npb = min(n_probe, len(Cl))
         for batch in batches:
-            vec = batch.column(batch.schema.get_field_index(vec_col))
-            ids = batch.column(batch.schema.get_field_index(id_col))
+            vec = batch.column(batch.schema.get_field_index("embedding"))
+            ids = batch.column(batch.schema.get_field_index("vec_id"))
             if len(vec) == 0:
                 continue
             X = vectors_matrix(vec)
@@ -227,8 +215,8 @@ def ivf_probes(
                 names=["query_id", "centroid_id"],
             )
 
-    id_type = dict(queries.dtypes)[id_col]
-    return queries.select(id_col, vec_col).mapInArrow(
+    id_type = dict(queries.dtypes)["vec_id"]
+    return queries.select("vec_id", "embedding").mapInArrow(
         probes, schema=f"query_id {id_type}, centroid_id int"
     )
 
@@ -238,8 +226,6 @@ def ivf_search(
     queries: DataFrame,
     centroids: np.ndarray,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 4,
 ) -> DataFrame:
@@ -248,18 +234,16 @@ def ivf_search(
     n_centroids this is exhaustive and must equal knn_bruteforce.
 
     Output: query_id, rank, neighbor_id, cosine_sim."""
-    probes = ivf_probes(
-        queries, centroids, id_col=id_col, vec_col=vec_col, n_probe=n_probe
-    )
+    probes = ivf_probes(queries, centroids, n_probe=n_probe)
     qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
     cand = (
         probes.join(
             index.select(
                 "centroid_id",
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("__cv"),
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("__cv"),
             ),
             "centroid_id",
         )
@@ -302,8 +286,6 @@ def allpairs_cosine(
     emb: DataFrame,
     emb_path: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     directed: bool = False,
 ) -> DataFrame:
@@ -330,7 +312,7 @@ def allpairs_cosine(
     def gen(batches):
         import pyarrow as pa
 
-        for lid, rid, s in _scored_blocks(batches, emb_path, id_col, vec_col):
+        for lid, rid, s in _scored_blocks(batches, emb_path, "vec_id", "embedding"):
             if directed:
                 mask = (lid[:, None] != rid[None, :]) & (s >= threshold)
             else:
@@ -353,7 +335,7 @@ def allpairs_cosine(
                     names=["id_a", "id_b", "s"],
                 )
 
-    return emb.select(id_col, vec_col).mapInArrow(
+    return emb.select("vec_id", "embedding").mapInArrow(
         gen, schema="id_a long, id_b long, s double"
     )
 
@@ -362,8 +344,6 @@ def hard_negatives_allpairs(
     emb: DataFrame,
     emb_path: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     pos_threshold: float = 0.4,
 ) -> DataFrame:
@@ -395,7 +375,7 @@ def hard_negatives_allpairs(
     def gen(batches):
         import pyarrow as pa
 
-        for lid, rid, s in _scored_blocks(batches, emb_path, id_col, vec_col):
+        for lid, rid, s in _scored_blocks(batches, emb_path, "vec_id", "embedding"):
             q_ids, ranks, n_ids, sims, n_excs = [], [], [], [], []
             for i in range(len(lid)):
                 row = s[i]
@@ -443,7 +423,7 @@ def hard_negatives_allpairs(
                 ],
             )
 
-    return emb.select(id_col, vec_col).mapInArrow(
+    return emb.select("vec_id", "embedding").mapInArrow(
         gen,
         schema=(
             "query_id long, rank int, neighbor_id long, "
@@ -454,16 +434,7 @@ def hard_negatives_allpairs(
 
 # ------------------------------------------------------------- IVF-PQ
 
-def pq_train(
-    *,
-    dim: int = 64,
-    n_cells: int = 8,
-    n_sub: int = 8,
-    n_codes: int = 64,
-    n_iter: int = 10,
-    seed: int = 7,
-    sample: int = 1024,
-) -> tuple[np.ndarray, np.ndarray]:
+def pq_train() -> tuple[np.ndarray, np.ndarray]:
     """Product-quantization codebooks: coarse centroids C
     (n_cells, dim) + per-subspace codebooks B (n_sub, n_codes,
     dim/n_sub), trained with plain Lloyd k-means on a SEEDED SYNTHETIC
@@ -477,6 +448,13 @@ def pq_train(
     codebooks must live in the data's geometry (training on raw
     N(0,1) vectors of norm ~8 put every reconstruction hopelessly
     far from the sphere: measured recall 0)."""
+    dim = 64
+    n_cells = 8
+    n_sub = 8
+    n_codes = 64
+    n_iter = 10
+    seed = 7
+    sample = 1024
     rng = np.random.default_rng(seed)
     X = rng.normal(0.0, 1.0, size=(sample, dim))
     X = X / np.linalg.norm(X, axis=1, keepdims=True)
@@ -521,14 +499,7 @@ def _r6pos(x: np.ndarray) -> np.ndarray:
     return np.floor(x * 1e6 + 0.5) / 1e6
 
 
-def pq_index(
-    emb: DataFrame,
-    C: np.ndarray,
-    B: np.ndarray,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_index(emb: DataFrame, C: np.ndarray, B: np.ndarray) -> DataFrame:
     """Encode every vector: coarse cell (argmin 6-dp-rounded squared
     distance, ties -> smaller cell) + per-subspace residual codes
     (same rule).  Output (id, cell, codes array<int>) — the 100 TB
@@ -569,12 +540,12 @@ def pq_index(
                         pa.array(offsets), pa.array(codes.ravel())
                     ),
                 ],
-                names=[id_col, "cell", "codes"],
+                names=["vec_id", "cell", "codes"],
             )
 
-    id_type = dict(emb.dtypes)[id_col]
-    return emb.select(id_col, vec_col).mapInArrow(
-        gen, schema=f"{id_col} {id_type}, cell int, codes array<int>"
+    id_type = dict(emb.dtypes)["vec_id"]
+    return emb.select("vec_id", "embedding").mapInArrow(
+        gen, schema=f"vec_id {id_type}, cell int, codes array<int>"
     )
 
 
@@ -584,8 +555,6 @@ def pq_search(
     C: np.ndarray,
     B: np.ndarray,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 2,
 ) -> DataFrame:
@@ -598,9 +567,9 @@ def pq_search(
     ranking (rank ties -> smaller neighbor id).  The exact vectors
     are never touched after indexing."""
     spark = index.sparkSession
-    qt = queries.select(id_col, vec_col).toArrow()  # bounded query set
-    Q = vectors_matrix(qt.column(vec_col))
-    qids = qt.column(id_col).to_numpy()
+    qt = queries.select("vec_id", "embedding").toArrow()  # bounded query set
+    Q = vectors_matrix(qt.column("embedding"))
+    qids = qt.column("vec_id").to_numpy()
     n_sub = B.shape[0]
     sub = C.shape[1] // n_sub
     # probe set per query (driver-side planning over tiny matrices)
@@ -638,7 +607,7 @@ def pq_search(
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf[id_col].to_numpy(),
+                    "neighbor_id": pdf["vec_id"].to_numpy(),
                     "adc_dist": _r6pos(dists),
                 }
             )

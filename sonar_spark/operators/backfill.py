@@ -38,7 +38,6 @@ def backfill_grid(
     entity_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    id_col: str = "event_id",
     step: int = 21600,
 ) -> DataFrame:
     """Regularize each entity's (ts, value) stream onto a step-second
@@ -55,7 +54,7 @@ def backfill_grid(
         F.col(entity_col).alias("entity"),
         F.unix_timestamp(ts_col).cast("long").alias("t"),
         F.col(value_col).cast("double").alias("v"),
-        F.col(id_col).cast("long").alias("eid"),
+        F.col("event_id").cast("long").alias("eid"),
     )
 
     # grid = step-aligned closure of the observed span (pure integer

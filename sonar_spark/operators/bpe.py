@@ -32,10 +32,10 @@ from pyspark.sql import functions as F
 END_OF_WORD = "</w>"
 
 
-def word_counts(docs: DataFrame, *, words_col: str = "words") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(word, freq) over the corpus — the only corpus-sized step."""
     return (
-        docs.select(F.explode(words_col).alias("word"))
+        docs.select(F.explode("words").alias("word"))
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("freq"))
     )
@@ -157,15 +157,12 @@ def segmented_words(docs: DataFrame, *, n_merges: int = 8) -> DataFrame:
     )
 
 
-def bpe_tokenize_stats(
-    docs: DataFrame, seg: DataFrame, *, id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
+def bpe_tokenize_stats(docs: DataFrame, seg: DataFrame) -> DataFrame:
     """Apply a trained segmentation to the corpus: per-doc BPE piece
     counts via one broadcast join on the word column."""
-    dw = docs.select(id_col, F.explode(words_col).alias("word"))
+    dw = docs.select("doc_id", F.explode("words").alias("word"))
     j = dw.join(F.broadcast(seg.select("word", "n_pieces")), "word")
-    return j.groupBy(id_col).agg(
+    return j.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.sum("n_pieces").cast("long").alias("n_pieces"),
         F.round(

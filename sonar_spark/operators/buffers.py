@@ -33,7 +33,6 @@ def delay_line(
     *,
     key: str = "doc_id",
     order: str = "pos",
-    out_col: str = "delayed",
 ) -> DataFrame:
     """Integer delay line (buffers.go:189-204 Process): out[i] =
     in[i - delay], 0.0 while the zero-initialized buffer covers the
@@ -43,7 +42,7 @@ def delay_line(
     if delay < 1:
         raise ValueError("delay_line requires delay >= 1 (see docstring)")
     w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn(out_col, F.lag(col, delay, 0.0).over(w))
+    return df.withColumn("delayed", F.lag(col, delay, 0.0).over(w))
 
 
 def delay_line_interpolated(
@@ -53,7 +52,6 @@ def delay_line_interpolated(
     *,
     key: str = "doc_id",
     order: str = "pos",
-    out_col: str = "delayed_interp",
 ) -> DataFrame:
     """Fractional delay line (buffers.go:206-230
     ProcessInterpolated): taps at floor(delay) and floor(delay)+1
@@ -66,7 +64,7 @@ def delay_line_interpolated(
     w = Window.partitionBy(key).orderBy(order)
     s1 = F.lag(col, int_d, 0.0).over(w)
     s2 = F.lag(col, int_d + 1, 0.0).over(w)
-    return df.withColumn(out_col, s1 + F.lit(frac) * (s2 - s1))
+    return df.withColumn("delayed_interp", s1 + F.lit(frac) * (s2 - s1))
 
 
 def overlap_add(
@@ -76,8 +74,6 @@ def overlap_add(
     frame_col: str = "frame_idx",
     window_col: str = "window",
     hop: int,
-    out_pos: str = "pos",
-    out_col: str = "value",
 ) -> DataFrame:
     """Overlap-add reconstruction (buffers.go:260-291 AddFrame loop)
     in closed form: explode every frame to (global position, value),
@@ -108,11 +104,11 @@ def overlap_add(
                 ),
                 F.lit(0.0),
                 lambda acc, s: acc + s["__v"],
-            ).alias(out_col)
+            ).alias("value")
         )
     )
     return (
         summed.join(nf, key)
         .where(F.col("__p") < F.col("__nf") * hop)
-        .select(key, F.col("__p").alias(out_pos), out_col)
+        .select(key, F.col("__p").alias("pos"), "value")
     )

@@ -48,13 +48,7 @@ TONNETZ_COORDS = [
 ]
 
 
-def tonnetz_centroids(
-    chroma: DataFrame,
-    group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-) -> DataFrame:
+def tonnetz_centroids(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     """Per-group Tonnetz centroid of the 12-class chroma vector
     (ComputeTonnetzCentroid, tonnetz.go:138-163): weighted mean of
     the fixed coordinates, (0, 0) when total weight <= 1e-10.
@@ -63,8 +57,8 @@ def tonnetz_centroids(
     coords = spark.createDataFrame(
         TONNETZ_COORDS, "pc int, x double, y double"
     )
-    j = chroma.join(F.broadcast(coords), F.col(class_col) == F.col("pc"))
-    w = F.col(value_col).cast("double")
+    j = chroma.join(F.broadcast(coords), F.col("pitch_class") == F.col("pc"))
+    w = F.col("hpcp").cast("double")
     ag = j.groupBy(*group_cols).agg(
         F.sum(F.col("x") * w).alias("__wx"),
         F.sum(F.col("y") * w).alias("__wy"),
@@ -83,14 +77,7 @@ def tonnetz_centroids(
     )
 
 
-def tonnetz_movement(
-    traj: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    x_col: str = "centroid_x",
-    y_col: str = "centroid_y",
-) -> DataFrame:
+def tonnetz_movement(traj: DataFrame) -> DataFrame:
     """Movement statistics over the per-key centroid trajectory
     (AnalyzeTonnetzMovement, tonnetz.go:190-237): total distance, max
     velocity, mean velocity, velocity variance (two-pass, as
@@ -100,23 +87,23 @@ def tonnetz_movement(
 
     Per-step distances are rounded to 6 dp before aggregation
     (quantized interface)."""
-    w = Window.partitionBy(key).orderBy(order)
+    w = Window.partitionBy("doc_id").orderBy("frame_idx")
     d = traj.select(
-        key,
-        order,
-        F.col(x_col).alias("__x"),
-        F.col(y_col).alias("__y"),
-        F.lag(x_col).over(w).alias("__px"),
-        F.lag(y_col).over(w).alias("__py"),
-        F.first(x_col).over(w).alias("__x0"),
-        F.first(y_col).over(w).alias("__y0"),
+        "doc_id",
+        "frame_idx",
+        F.col("centroid_x").alias("__x"),
+        F.col("centroid_y").alias("__y"),
+        F.lag("centroid_x").over(w).alias("__px"),
+        F.lag("centroid_y").over(w).alias("__py"),
+        F.first("centroid_x").over(w).alias("__x0"),
+        F.first("centroid_y").over(w).alias("__y0"),
         F.row_number().over(w).alias("__rn"),
-        F.count("*").over(Window.partitionBy(key)).alias("__nf"),
+        F.count("*").over(Window.partitionBy("doc_id")).alias("__nf"),
     )
     dx = F.col("__x") - F.col("__px")
     dy = F.col("__y") - F.col("__py")
     steps = d.where(F.col("__px").isNotNull()).select(
-        key,
+        "doc_id",
         "__rn",
         "__nf",
         F.round(F.sqrt(dx * dx + dy * dy), 6).alias("__v"),
@@ -133,9 +120,9 @@ def tonnetz_movement(
             ),
         ).alias("__disp"),
     )
-    mean_w = Window.partitionBy(key)
+    mean_w = Window.partitionBy("doc_id")
     s2 = steps.withColumn("__mean", F.avg("__v").over(mean_w))
-    ag = s2.groupBy(key).agg(
+    ag = s2.groupBy("doc_id").agg(
         F.sum("__v").alias("total_distance"),
         F.max("__v").alias("max_velocity"),
         F.max("__mean").alias("mean_velocity"),
@@ -146,7 +133,7 @@ def tonnetz_movement(
         F.max("__disp").alias("__disp"),
     )
     return ag.select(
-        key,
+        "doc_id",
         "total_distance",
         "max_velocity",
         "mean_velocity",
@@ -166,9 +153,7 @@ def chroma_shift_optimal(
     right: DataFrame,
     pair_on: list[str],
     *,
-    class_col: str = "pitch_class",
     value_col: str = "chroma",
-    size: int = 12,
 ) -> DataFrame:
     """Optimal circular shift of the left chroma against the right
     (ShiftOptimal, chroma_vector.go:189-205, cosine metric): for each
@@ -181,15 +166,16 @@ def chroma_shift_optimal(
     left/right: (pair key cols..., class, value) long tables with the
     pair key columns aligned.  Output: pair cols + best_shift +
     best_similarity."""
+    size = 12
     lk = [F.col(c).alias(f"__l_{c}") for c in pair_on]
     l = left.select(
         *lk,
-        F.col(class_col).alias("__lc"),
+        F.col("pitch_class").alias("__lc"),
         F.col(value_col).cast("double").alias("__lv"),
     ).withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(size - 1))))
     r = right.select(
         *pair_on,
-        F.col(class_col).alias("__rc"),
+        F.col("pitch_class").alias("__rc"),
         F.col(value_col).cast("double").alias("__rv"),
     )
     # shifted cv1[i] = cv1[(i + s) % size]: the left value at class
@@ -246,12 +232,7 @@ def chroma_cross_similarity(
     right: DataFrame,
     pair_on: list[str],
     *,
-    frame_col: str = "frame_idx",
-    class_col: str = "pitch_class",
     value_col: str = "chroma",
-    binary_threshold: float = 0.4,
-    oti_radius: int = 10,
-    size: int = 12,
 ) -> DataFrame:
     """Chroma sequence similarity, matrix-aggregate methods
     (chroma_similarity.go:110-197 direct, :162-194 binary, :361-396
@@ -271,17 +252,20 @@ def chroma_cross_similarity(
     Input chroma values should be pre-rounded (quantized interface).
     Output: pair cols + sim_direct, sim_binary, qmax, oti_shift,
     oti_similarity."""
+    binary_threshold = 0.4
+    oti_radius = 10
+    size = 12
     lk = [F.col(c).alias(f"__l_{c}") for c in pair_on]
     l = left.select(
         *lk,
-        F.col(frame_col).alias("__li"),
-        F.col(class_col).alias("__lc"),
+        F.col("frame_idx").alias("__li"),
+        F.col("pitch_class").alias("__lc"),
         F.col(value_col).cast("double").alias("__lv"),
     ).withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(size - 1))))
     r = right.select(
         *pair_on,
-        F.col(frame_col).alias("__rj"),
-        F.col(class_col).alias("__rc"),
+        F.col("frame_idx").alias("__rj"),
+        F.col("pitch_class").alias("__rc"),
         F.col(value_col).cast("double").alias("__rv"),
     )
     cond = (
@@ -464,8 +448,6 @@ def chroma_dp_similarity(
     pair_on: list[str],
     *,
     method: str = "dtw",
-    qseq_col: str = "qseq",
-    rseq_col: str = "rseq",
 ) -> DataFrame:
     """Smith-Waterman / DTW chroma sequence similarity
     (chroma_similarity.go:198-353) over per-pair chroma sequences.
@@ -490,7 +472,7 @@ def chroma_dp_similarity(
             if not len(pdf):
                 continue
             scores, plens, sims = [], [], []
-            for qs, rs in zip(pdf[qseq_col], pdf[rseq_col]):
+            for qs, rs in zip(pdf["qseq"], pdf["rseq"]):
                 qa = [np.asarray(v, dtype=np.float64) for v in qs]
                 ra = [np.asarray(v, dtype=np.float64) for v in rs]
                 s, p, sm = kern(qa, ra)
@@ -567,22 +549,15 @@ def chroma_cqt_kernel_rows():
     return rows
 
 
-def chroma_cqt(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-    hop: int = CQT_HOP,
-) -> DataFrame:
+def chroma_cqt(vals: DataFrame) -> DataFrame:
     """CQT chromagram (chroma_cqt.go:69-269) over a positional value
-    series: numFrames = max((n - hop) / hop, 1) frames at hop
+    series: numFrames = max((n - CQT_HOP) / CQT_HOP, 1) frames at CQT_HOP
     spacing (:168-172), per-frame CQT magnitudes via the literal
     kernel table (one broadcast join — the kernel is a plan-time
     constant, exactly the reference's precomputed kernel matrix),
     energy fold to 12 chroma classes, unit-sum normalization.
 
-    Output: key, frame_idx, pitch_class (0-11, zero-filled), chroma.
+    Output: doc_id, frame_idx, pitch_class (0-11, zero-filled), chroma.
     """
     spark = vals.sparkSession
     kern = spark.createDataFrame(
@@ -590,36 +565,36 @@ def chroma_cqt(
         "k int, cls int, n int, cw double, sw double",
     )
     d = vals.select(
-        key, F.col(pos).alias("__p"), F.col(val).cast("double").alias("__v")
+        "doc_id", F.col("pos").alias("__p"), F.col("v").cast("double").alias("__v")
     )
-    nfr = d.groupBy(key).agg(
+    nfr = d.groupBy("doc_id").agg(
         F.greatest(
-            ((F.count("*") - hop) / hop).cast("long"), F.lit(1)
+            ((F.count("*") - CQT_HOP) / CQT_HOP).cast("long"), F.lit(1)
         ).alias("__nf")
     )
     frames = nfr.withColumn(
         "frame_idx",
         F.explode(F.sequence(F.lit(0), (F.col("__nf") - 1).cast("int"))),
-    ).select(key, "frame_idx")
+    ).select("doc_id", "frame_idx")
     fk = frames.crossJoin(F.broadcast(kern))
-    jcond = F.col("__p") == F.col("frame_idx") * hop + F.col("n")
+    jcond = F.col("__p") == F.col("frame_idx") * CQT_HOP + F.col("n")
     dd = d.select(
-        F.col(key).alias("__k2"), "__p", "__v"
+        F.col("doc_id").alias("__k2"), "__p", "__v"
     )
     j = fk.join(
-        dd, (F.col("__k2") == F.col(key)) & jcond, "left"
+        dd, (F.col("__k2") == F.col("doc_id")) & jcond, "left"
     ).fillna({"__v": 0.0})
-    cq = j.groupBy(key, "frame_idx", "k", "cls").agg(
+    cq = j.groupBy("doc_id", "frame_idx", "k", "cls").agg(
         F.sum(F.col("__v") * F.col("cw")).alias("__re"),
         (-F.sum(F.col("__v") * F.col("sw"))).alias("__im"),
     )
     mag = F.sqrt(F.col("__re") * F.col("__re") + F.col("__im") * F.col("__im"))
     en = cq.select(
-        key, "frame_idx", "cls", (mag * mag).alias("__e")
-    ).groupBy(key, "frame_idx", "cls").agg(F.sum("__e").alias("__ce"))
-    tot = Window.partitionBy(key, "frame_idx")
+        "doc_id", "frame_idx", "cls", (mag * mag).alias("__e")
+    ).groupBy("doc_id", "frame_idx", "cls").agg(F.sum("__e").alias("__ce"))
+    tot = Window.partitionBy("doc_id", "frame_idx")
     norm = en.withColumn("__tot", F.sum("__ce").over(tot)).select(
-        key,
+        "doc_id",
         "frame_idx",
         F.col("cls").alias("pitch_class"),
         F.when(
@@ -629,8 +604,8 @@ def chroma_cqt(
     classes = frames.withColumn(
         "pitch_class", F.explode(F.sequence(F.lit(0), F.lit(11)))
     )
-    return classes.join(norm, [key, "frame_idx", "pitch_class"], "left").select(
-        key,
+    return classes.join(norm, ["doc_id", "frame_idx", "pitch_class"], "left").select(
+        "doc_id",
         "frame_idx",
         "pitch_class",
         F.coalesce("chroma", F.lit(0.0)).alias("chroma"),
@@ -653,24 +628,18 @@ def fifths_template() -> list[float]:
     return [_m.exp(-float(i) * 0.3) for i in range(12)]
 
 
-def pitch_class_profile(
-    chroma: DataFrame,
-    *,
-    key: str = "doc_id",
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-) -> DataFrame:
+def pitch_class_profile(chroma: DataFrame) -> DataFrame:
     """Per-key pitch-class profile (CreateProfile,
     pitch_class.go:39-70): chroma summed across frames, unit-sum
     normalized (>1e-10 guard), 6-dp rounded (quantized interface).
-    Output: key + p0..p11 wide columns."""
-    s = chroma.groupBy(key, class_col).agg(
-        F.sum(F.col(value_col).cast("double")).alias("__s")
+    Output: doc_id + p0..p11 wide columns."""
+    s = chroma.groupBy("doc_id", "pitch_class").agg(
+        F.sum(F.col("hpcp").cast("double")).alias("__s")
     )
-    tot = Window.partitionBy(key)
+    tot = Window.partitionBy("doc_id")
     p = s.withColumn("__tot", F.sum("__s").over(tot)).select(
-        key,
-        class_col,
+        "doc_id",
+        "pitch_class",
         F.round(
             F.when(
                 F.col("__tot") > 1e-10, F.col("__s") / F.col("__tot")
@@ -678,24 +647,20 @@ def pitch_class_profile(
             6,
         ).alias("__p"),
     )
-    return p.groupBy(key).pivot(class_col, list(range(12))).agg(
+    return p.groupBy("doc_id").pivot("pitch_class", list(range(12))).agg(
         F.first("__p")
     ).select(
-        key, *[F.coalesce(F.col(str(i)), F.lit(0.0)).alias(f"p{i}")
+        "doc_id", *[F.coalesce(F.col(str(i)), F.lit(0.0)).alias(f"p{i}")
                for i in range(12)]
     )
 
 
-def profile_pitch_classes(
-    prof: DataFrame,
-    *,
-    key: str = "doc_id",
-    threshold: float = 0.05,
-) -> DataFrame:
+def profile_pitch_classes(prof: DataFrame) -> DataFrame:
     """ExtractPitchClasses (pitch_class.go:73-103): classes with
     profile energy >= threshold, salience = energy / mean of the two
     circular neighbors (energy itself when the neighbor mean
     <= 1e-10), confidence = min(1, energy * salience)."""
+    threshold = 0.05
     rows = []
     for pc in range(12):
         e = F.col(f"p{pc}")
@@ -709,8 +674,8 @@ def profile_pitch_classes(
                 F.least(F.lit(1.0), e * sal).alias("confidence"),
             )
         )
-    ex = prof.select(key, F.explode(F.array(*rows)).alias("__r")).select(
-        key,
+    ex = prof.select("doc_id", F.explode(F.array(*rows)).alias("__r")).select(
+        "doc_id",
         F.col("__r.pitch_class").alias("pitch_class"),
         F.col("__r.energy").alias("energy"),
         F.col("__r.salience").alias("salience"),
@@ -719,11 +684,7 @@ def profile_pitch_classes(
     return ex.where(F.col("energy") >= threshold)
 
 
-def key_relationships(
-    prof: DataFrame,
-    *,
-    key: str = "doc_id",
-) -> DataFrame:
+def key_relationships(prof: DataFrame) -> DataFrame:
     """Profile-derived measures (pitch_class.go:39-70 derived stats +
     AnalyzeKeyRelationships :133-154): Shannon entropy, circular
     centroid/spread, uniformity, circle-of-fifths Pearson against
@@ -812,7 +773,7 @@ def key_relationships(
         return F.greatest(*terms, F.lit(0.0))
 
     return d.select(
-        key,
+        "doc_id",
         entropy.alias("entropy"),
         F.col("__c").alias("centroid"),
         spread.alias("spread"),
@@ -829,9 +790,7 @@ def chroma_vector_stats(
     chroma: DataFrame,
     group_cols: list[str],
     *,
-    class_col: str = "pitch_class",
     value_col: str = "hpcp",
-    size: int = 12,
 ) -> DataFrame:
     """Per-vector chroma statistics (ComputeStats,
     chroma_vector.go:96-143 + computeSparsity/-Uniformity :300-341 +
@@ -858,11 +817,12 @@ def chroma_vector_stats(
     The Go Welford mean is replaced by the classic two-pass
     (sub-rounding deviation, documented).  Output: group cols + the
     12 statistics."""
+    size = 12
     piv = chroma.groupBy(*group_cols).agg(
         *[
             F.max(
                 F.when(
-                    F.col(class_col) == i,
+                    F.col("pitch_class") == i,
                     F.col(value_col).cast("double"),
                 )
             ).alias(f"__c{i}")
@@ -951,31 +911,24 @@ def chroma_vector_stats(
     )
 
 
-def chroma_smooth(
-    chroma: DataFrame,
-    *,
-    key: str = "doc_id",
-    frame_col: str = "frame_idx",
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-    window_size: int = 3,
-) -> DataFrame:
+def chroma_smooth(chroma: DataFrame) -> DataFrame:
     """Temporal chroma smoothing (Smooth, chroma_vector.go:245-277):
     each frame's vector becomes the per-class average over the
     [i - w/2, i + w/2] frame window (integer w/2, bounds clamped to
     the sequence — expressed by the frame window's natural
     truncation at partition edges, with the divisor = the actual
     window count, exactly the reference's count normalization).
-    Output: key, frame_idx, pitch_class, chroma (smoothed)."""
+    Output: doc_id, frame_idx, pitch_class, chroma (smoothed)."""
+    window_size = 3
     half = window_size // 2
     w = (
-        Window.partitionBy(key, class_col)
-        .orderBy(frame_col)
+        Window.partitionBy("doc_id", "pitch_class")
+        .orderBy("frame_idx")
         .rowsBetween(-half, half)
     )
     return chroma.select(
-        key,
-        frame_col,
-        class_col,
-        F.avg(F.col(value_col).cast("double")).over(w).alias("chroma"),
+        "doc_id",
+        "frame_idx",
+        "pitch_class",
+        F.avg(F.col("hpcp").cast("double")).over(w).alias("chroma"),
     )

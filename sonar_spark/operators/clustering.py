@@ -60,14 +60,7 @@ def _euclid(a: Column, b: Column) -> Column:
     )
 
 
-def dbscan(
-    points: DataFrame,
-    *,
-    id_col: str = "id",
-    vec_col: str = "vec",
-    eps: float = 0.5,
-    min_pts: int = 5,
-) -> DataFrame:
+def dbscan(points: DataFrame, *, eps: float = 0.5, min_pts: int = 5) -> DataFrame:
     """DBSCAN (clustering.go:930-1046) as a relational plan:
     epsilon self-join -> core test (strict-neighbor count >= MinPoints)
     -> connected components over core-core edges -> border adoption
@@ -76,12 +69,12 @@ def dbscan(
     bucketed first (the embedding_neardup_lsh construction) and the
     rest of the plan is unchanged.
 
-    Output: (id_col, label int, is_core boolean) — label semantics
+    Output: (id, label int, is_core boolean) — label semantics
     identical to the Go scan-order ids (see module docstring)."""
     from .fingerprint import connected_components
 
     p = points.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
+        F.col("id").alias("__id"), F.col("vec").alias("__v")
     )
     a = p.select(F.col("__id").alias("__ia"), F.col("__v").alias("__va"))
     b = p.select(F.col("__id").alias("__ib"), F.col("__v").alias("__vb"))
@@ -155,7 +148,7 @@ def dbscan(
         p.select("__id")
         .join(labeled, "__id", "left")
         .select(
-            F.col("__id").alias(id_col),
+            F.col("__id").alias("id"),
             F.coalesce("label", F.lit(-1)).cast("int").alias("label"),
             F.coalesce("is_core", F.lit(False)).alias("is_core"),
         )
@@ -163,16 +156,7 @@ def dbscan(
     return out
 
 
-def cluster_eval(
-    points: DataFrame,
-    centers: DataFrame,
-    *,
-    id_col: str = "id",
-    vec_col: str = "vec",
-    label_col: str = "label",
-    center_label: str = "label",
-    center_vec: str = "center",
-) -> DataFrame:
+def cluster_eval(points: DataFrame, centers: DataFrame) -> DataFrame:
     """Cluster evaluation metrics (clustering.go):
 
     - silhouette (:480-561): per point a = mean distance to OTHER
@@ -201,13 +185,13 @@ def cluster_eval(
     which cannot ride the value hash, so this port scores those
     points 0.0 (the b-is-NULL branch below)."""
     p = points.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        F.col(label_col).alias("__l"),
+        F.col("id").alias("__id"),
+        F.col("vec").alias("__v"),
+        F.col("label").alias("__l"),
     ).persist()
     c = centers.select(
-        F.col(center_label).alias("__cl"),
-        F.col(center_vec).alias("__cv"),
+        F.col("label").alias("__cl"),
+        F.col("center").alias("__cv"),
     ).persist()
 
     # ---------------- silhouette over the pairwise distance table
@@ -516,13 +500,7 @@ def hierarchical_sequence(
     return labels, steps
 
 
-def gmm_sequence(
-    data: list,
-    k: int,
-    init_mean_idx: list,
-    max_iter: int = 4,
-    resp_decimals: int = 9,
-):
+def gmm_sequence(data: list, k: int, init_mean_idx: list, max_iter: int = 4):
     """Diagonal-covariance GMM via EM (clustering.go:1066-1199 +
     gaussianPDF :1202-1228): identity initial covariances, uniform
     mixing, explicit initial means (the Go's PRNG init is not part
@@ -535,6 +513,7 @@ def gmm_sequence(
     true at 0), so exactly ``max_iter`` EM iterations run.  Labels:
     argmax responsibility with strict >, slot 0 default.  Returns
     (labels, means, variances, mix, responsibilities)."""
+    resp_decimals = 9
     import math
 
     n, dim = len(data), len(data[0])
@@ -616,8 +595,6 @@ def _per_group_cluster(points, id_col, vec_col, out_extra, fn):
 def kmedoids_cluster(
     points: DataFrame,
     *,
-    id_col: str = "id",
-    vec_col: str = "vec",
     k: int = 3,
     max_iter: int = 100,
 ) -> DataFrame:
@@ -633,21 +610,19 @@ def kmedoids_cluster(
         )
         medset = set(med)
         return {
-            id_col: ids,
+            "id": ids,
             "label": labels,
             "is_medoid": [i in medset for i in range(len(ids))],
         }
 
     return _per_group_cluster(
-        points, id_col, vec_col, "label int, is_medoid boolean", fn
+        points, "id", "vec", "label int, is_medoid boolean", fn
     )
 
 
 def hierarchical_clusters(
     points: DataFrame,
     *,
-    id_col: str = "id",
-    vec_col: str = "vec",
     k: int = 3,
     linkage: str = "ward",
 ) -> DataFrame:
@@ -656,19 +631,12 @@ def hierarchical_clusters(
 
     def fn(ids, data):
         labels, _ = hierarchical_sequence(data, k, linkage)
-        return {id_col: ids, "label": labels}
+        return {"id": ids, "label": labels}
 
-    return _per_group_cluster(points, id_col, vec_col, "label int", fn)
+    return _per_group_cluster(points, "id", "vec", "label int", fn)
 
 
-def gmm_cluster(
-    points: DataFrame,
-    *,
-    id_col: str = "id",
-    vec_col: str = "vec",
-    k: int = 2,
-    max_iter: int = 4,
-) -> DataFrame:
+def gmm_cluster(points: DataFrame, *, k: int = 2, max_iter: int = 4) -> DataFrame:
     """Diagonal-covariance GMM over a bounded point set (see
     gmm_sequence; initial means = the k smallest ids' vectors).
     Output: id, label int, resp double (winning responsibility from
@@ -679,11 +647,11 @@ def gmm_cluster(
             data, k, list(range(k)), max_iter
         )
         return {
-            id_col: ids,
+            "id": ids,
             "label": labels,
             "resp": [resp[i][labels[i]] for i in range(len(ids))],
         }
 
     return _per_group_cluster(
-        points, id_col, vec_col, "label int, resp double", fn
+        points, "id", "vec", "label int, resp double", fn
     )

@@ -70,8 +70,6 @@ def compare_topk(
     cfg: ComparisonConfig = ComparisonConfig(),
     *,
     k: int | None = None,
-    content_filter: bool = True,
-    broadcast_catalog: bool = True,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """query/catalog: doc_stats output, optionally joined with a
@@ -117,17 +115,16 @@ def compare_topk(
     )
     q = query.select(*qcols)
     c = catalog.select(*ccols)
-    cond = F.col("query_id") != F.col("match_id")
-    if content_filter:
-        # early-exit analog: pushed into the join, never scored
-        cond = cond & (F.col("q_source") == F.col("c_source"))
+    # content filter, the early-exit analog: pushed into the join,
+    # never scored
+    cond = (F.col("query_id") != F.col("match_id")) & (
+        F.col("q_source") == F.col("c_source")
+    )
     if candidates is not None:
         pairs = candidates.select("query_id", "match_id")
         j = pairs.join(q, "query_id").join(c, "match_id").where(cond)
     else:
-        if broadcast_catalog:
-            c = F.broadcast(c)
-        j = q.join(c, cond)
+        j = q.join(F.broadcast(c), cond)
 
     groups = [
         ("energy", cosine_similarity(
@@ -213,7 +210,7 @@ def compare_topk(
             + F.when(sim > 0.8, F.lit(0.3))
             .when(sim > 0.6, F.lit(0.2))
             .otherwise(F.lit(0.0))
-            + F.lit(0.1 if content_filter else 0.0)
+            + F.lit(0.1)
             + F.lit(ng * 0.05)
             + availability * 0.1
             - noise * 0.1,

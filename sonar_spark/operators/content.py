@@ -52,20 +52,22 @@ def _asc_sum(a: np.ndarray) -> float:
     return float(np.cumsum(a)[-1])
 
 
-def _features_one(s: np.ndarray) -> tuple:
+def _centred_zcr(s: np.ndarray) -> tuple[int, np.ndarray, float]:
+    """(n, the mean-centred series, its zero-crossing rate by the Go
+    sign-boundary rule: a crossing is a step between >= 0 and < 0)."""
     n = len(s)
-    mean = _asc_sum(s) / n
-    c = s - mean
-
-    # zcr, Go sign-boundary rule
+    c = s - _asc_sum(s) / n
     if n > 1:
         prv, cur = c[:-1], c[1:]
         cross = int(
             (((prv >= 0) & (cur < 0)) | ((prv < 0) & (cur >= 0))).sum()
         )
-        zcr = cross / float(n - 1)
-    else:
-        zcr = 0.0
+        return n, c, cross / float(n - 1)
+    return n, c, 0.0
+
+
+def _features_one(s: np.ndarray) -> tuple:
+    n, c, zcr = _centred_zcr(s)
 
     # basic DFT over the first min(32, n) centered values, 6-dp bins
     ws = min(n, 32)
@@ -196,17 +198,7 @@ def _gate_one(s: np.ndarray) -> bool:
     the 32-token periodicity frame with lag band 2..12 (per-lag
     correlations and the frame energy 6-dp rounded before the ratio
     compare — the quantized cross-engine interface)."""
-    n = len(s)
-    mean = _asc_sum(s) / n
-    c = s - mean
-    if n > 1:
-        prv, cur = c[:-1], c[1:]
-        cross = int(
-            (((prv >= 0) & (cur < 0)) | ((prv < 0) & (cur >= 0))).sum()
-        )
-        zcr = cross / float(n - 1)
-    else:
-        zcr = 0.0
+    n, c, zcr = _centred_zcr(s)
     rms_full = float(np.sqrt(_asc_sum(c * c) / n))
     if not (n >= 8 and 0.3 <= zcr <= 0.7 and rms_full >= 0.001):
         return False

@@ -30,11 +30,11 @@ from pyspark.sql import functions as F
 BIN_RULES = ("fixed", "sturges", "scott", "fd", "sqrt", "doane")
 
 
-def _bins_for_rule(rule: str, fixed_bins: int) -> Column:
+def _bins_for_rule(rule: str) -> Column:
     n = F.col("n").cast("double")
     rng = F.col("hi") - F.col("lo")
     if rule == "fixed":
-        return F.lit(fixed_bins).cast("long")
+        return F.lit(16).cast("long")
     if rule == "sturges":
         return (F.floor(F.log2(n)) + 1).cast("long")
     if rule == "scott":
@@ -150,7 +150,6 @@ def entropy_variants(
     value: str,
     group: str,
     rules: tuple[str, ...] = BIN_RULES,
-    fixed_bins: int = 16,
 ) -> DataFrame:
     """(group, rule, num_bins, shannon, renyi2, tsallis2, hartley,
     min_entropy, norm_shannon) per group x bin rule."""
@@ -215,7 +214,7 @@ def entropy_variants(
                 *[
                     F.struct(
                         F.lit(rule).alias("rule"),
-                        _bins_for_rule(rule, fixed_bins).alias("num_bins"),
+                        _bins_for_rule(rule).alias("num_bins"),
                     )
                     for rule in rules
                 ]

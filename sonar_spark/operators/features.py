@@ -141,13 +141,7 @@ def frame_features_arrow(
     )
 
 
-def chroma_doc_stats(
-    hpcp: DataFrame,
-    *,
-    key: str = "doc_id",
-    pc_col: str = "pitch_class",
-    val_col: str = "hpcp",
-) -> DataFrame:
+def chroma_doc_stats(hpcp: DataFrame) -> DataFrame:
     """Per-doc mean chroma vector as 12 fingerprint columns
     chroma0..chroma11 — the music-extractor composite's chroma
     feature group (extractors/music.go:327-376 per-frame chroma ->
@@ -156,13 +150,13 @@ def chroma_doc_stats(
     :673-688).  Values are 6-dp rounded (quantized fingerprint
     interface).  One aggregation: mean per (doc, class) then a
     12-way max(when) fold — no pivot shuffle."""
-    m = hpcp.groupBy(key, pc_col).agg(
-        F.round(F.avg(val_col), 6).alias("__mv")
+    m = hpcp.groupBy("doc_id", "pitch_class").agg(
+        F.round(F.avg("hpcp"), 6).alias("__mv")
     )
-    return m.groupBy(key).agg(
+    return m.groupBy("doc_id").agg(
         *[
             F.max(
-                F.when(F.col(pc_col) == i, F.col("__mv"))
+                F.when(F.col("pitch_class") == i, F.col("__mv"))
             ).alias(f"chroma{i}")
             for i in range(12)
         ]

@@ -40,21 +40,14 @@ _SHINGLE_K = 4
 _MINHASH_SEED = 42
 
 
-def exact_dedup(
-    df: DataFrame,
-    fingerprint_col,
-    *,
-    keep_order: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
+def exact_dedup(df: DataFrame, fingerprint_col) -> DataFrame:
     """Exact deduplication by content fingerprint (hash-groupBy): keep
-    the first row per fingerprint by keep_order (deterministic), drop
+    the first row per fingerprint by doc_id (deterministic), drop
     the rest. One shuffle on the fingerprint.
 
     fingerprint_col: a Column expression (e.g.
     functions.text.doc_fingerprint(F.col('text')))."""
-    w = Window.partitionBy(fingerprint_col).orderBy(
-        *[F.col(c).asc() for c in keep_order]
-    )
+    w = Window.partitionBy(fingerprint_col).orderBy(F.col("doc_id").asc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
@@ -113,7 +106,6 @@ def minhash_fingerprints(
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     cfg: MinHashConfig = MinHashConfig(),
-    max_bucket: int = 1000,
     *,
     with_est: bool = True,
 ) -> DataFrame:
@@ -122,7 +114,7 @@ def lsh_candidate_pairs(
     Output: (doc_a, doc_b[, est_jaccard]) with doc_a < doc_b,
     distinct.  est_jaccard = fraction of agreeing minhash components
     (unbiased estimator of shingle-set Jaccard). One shuffle on the
-    band key; buckets larger than max_bucket are dropped (logged
+    band key; buckets larger than 1000 are dropped (logged
     upstream) — at web scale a bucket of identical band-hash >1000
     docs means an exact-dup cluster better handled by the exact-dedup
     pass.  with_est=False skips attaching the signature arrays to the
@@ -143,7 +135,7 @@ def lsh_candidate_pairs(
     # cap pathological buckets
     counted = b.withColumn(
         "__n", F.count("*").over(Window.partitionBy("band_idx", "band_hash"))
-    ).where(F.col("__n") <= max_bucket)
+    ).where(F.col("__n") <= 1000)
     left = counted.select(
         F.col("band_idx"),
         F.col("band_hash"),
@@ -238,25 +230,21 @@ def _drop_checkpoint(df: DataFrame) -> None:
 # rounds, with no crossover at 2^12 or 2^16 edges either; the Python
 # driver process of that measurement peaked at 406 MB RSS.
 _CEIL = 1 << 21
+# rounds connected_components runs before it gives up unconverged
+_MAX_ITER = 25
 
 
-def _check_converged(max_iter: int, changed: int) -> None:
+def _check_converged(changed: int) -> None:
     if changed:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds: "
+            f"connected_components did not converge in {_MAX_ITER} rounds: "
             f"the last round still changed {changed} labels"
         )
 
 
-def connected_components(
-    edges: DataFrame,
-    *,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over a near-dup pair graph — the dedup
-    GROUPING step the pair operators stop short of: every doc gets a
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components over a (doc_a, doc_b) near-dup pair graph
+    — the dedup GROUPING step the pair operators stop short of: every doc gets a
     component label (the minimum doc id reachable from it), so a
     curation pipeline can keep one canonical doc per duplicate
     cluster.
@@ -269,7 +257,7 @@ def connected_components(
     effective component diameter.  Near-dup LSH graphs are dense
     low-diameter clusters, so 2-3 rounds in practice; the loop stops
     at the first round that changes no label and raises RuntimeError
-    if max_iter rounds pass without one.
+    if _MAX_ITER rounds pass without one.
 
     Plan shape: the de-duplicated, symmetrized edge table is built
     from one pass over the input (both directions of an edge from
@@ -298,9 +286,7 @@ def connected_components(
     self-loops and edges with a null endpoint are dropped; node
     values keep their input type.  Output: (node, comp); singleton
     nodes appear with comp == node."""
-    if max_iter < 1:
-        raise ValueError("max_iter must be >= 1")
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("doc_a"), F.col("doc_b")
     sym = (
         edges.select(
             F.explode(
@@ -316,7 +302,7 @@ def connected_components(
     )
     head = sym.limit(_CEIL + 1).toArrow()
     if head.num_rows <= _CEIL:
-        return _driver_components(sym, head, max_iter)
+        return _driver_components(sym, head)
     # localCheckpoint also truncates lineage: the rounds below
     # reference it (and their own previous output) without the plan
     # deepening round over round, which would otherwise blow the
@@ -329,7 +315,7 @@ def connected_components(
         .withColumn("comp", F.col("node"))
     )
     prev = None
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         # (a) min over own label and neighbors' labels; the node's
         # own row carries its previous label for the convergence count
         nbr = sym.join(
@@ -373,11 +359,11 @@ def connected_components(
     _drop_checkpoint(sym)
     if changed:
         _drop_checkpoint(prev)
-    _check_converged(max_iter, changed)
+    _check_converged(changed)
     return labels.select("node", "comp")
 
 
-def _driver_components(sym: DataFrame, head, max_iter: int) -> DataFrame:
+def _driver_components(sym: DataFrame, head) -> DataFrame:
     """connected_components' driver path over the collected edge table
     ``head`` (pyarrow, columns a, b): code the nodes in ascending order
     — Arrow orders strings by their UTF-8 bytes, as Spark does, so the
@@ -393,9 +379,9 @@ def _driver_components(sym: DataFrame, head, max_iter: int) -> DataFrame:
         pc.index_in(head.column("a"), value_set=nodes).to_numpy(),
         pc.index_in(head.column("b"), value_set=nodes).to_numpy(),
         len(nodes),
-        max_iter,
+        _MAX_ITER,
     )
-    _check_converged(max_iter, changed)
+    _check_converged(changed)
     t = sym.schema["a"].dataType
     return arrow_frame(
         sym.sparkSession,
@@ -463,14 +449,7 @@ def near_dup_labels(
     )
 
 
-def winnow_fingerprints(
-    words_df: DataFrame,
-    *,
-    k: int = 4,
-    w: int = 4,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
+def winnow_fingerprints(words_df: DataFrame, *, k: int = 4, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting",
     SIGMOD 2003 — the MOSS scheme; the rolling-hash fingerprint
@@ -493,12 +472,12 @@ def winnow_fingerprints(
     text as one shingle; shingle counts shorter than w winnow as a
     single window (clamped frame).
 
-    Returns (id_col, fp long, pos long) — pos is the 1-based shingle
+    Returns (doc_id, fp long, pos long) — pos is the 1-based shingle
     index the fingerprint was selected at."""
-    words = F.col(words_col)
+    words = F.col("words")
     n_sh = F.greatest(F.size(words) - (k - 1), F.lit(1))
     shingled = words_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(1), n_sh),
@@ -507,27 +486,27 @@ def winnow_fingerprints(
         ).alias("__p0", "__sh"),
     )
     hashed = shingled.select(
-        id_col,
+        "doc_id",
         (F.col("__p0") + 1).alias("pos"),
         F.conv(F.substring(F.md5("__sh"), 1, 8), 16, 10)
         .cast("long")
         .alias("__h"),
     )
-    bypos = Window.partitionBy(id_col).orderBy("pos")
+    bypos = Window.partitionBy("doc_id").orderBy("pos")
     sel = hashed.select(
-        id_col,
+        "doc_id",
         "pos",
         F.min(F.struct(F.col("__h"), (-F.col("pos")).alias("__np")))
         .over(bypos.rowsBetween(0, w - 1))
         .alias("__s"),
-        F.count("*").over(Window.partitionBy(id_col)).alias("__ns"),
+        F.count("*").over(Window.partitionBy("doc_id")).alias("__ns"),
     )
     return (
         sel.where(
             F.col("pos") <= F.greatest(F.col("__ns") - (w - 1), F.lit(1))
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("__s.__h").alias("fp"),
             (-F.col("__s.__np")).cast("long").alias("pos"),
         )
@@ -538,7 +517,6 @@ def winnow_fingerprints(
 def fingerprint_matches(
     fps: DataFrame,
     *,
-    id_col: str = "doc_id",
     max_doc_freq: int = 8,
     min_shared: int = 3,
 ) -> DataFrame:
@@ -564,23 +542,23 @@ def fingerprint_matches(
     once per branch (at 100x this table is a landed store/Iceberg
     artifact, exactly like the dedup label table, and the persist
     becomes that materialization)."""
-    docfp = fps.select(id_col, "fp").distinct()
+    docfp = fps.select("doc_id", "fp").distinct()
     ann = (
         docfp.withColumn(
-            "__n_fp", F.count("*").over(Window.partitionBy(id_col))
+            "__n_fp", F.count("*").over(Window.partitionBy("doc_id"))
         )
         .withColumn(
             "__df", F.count("*").over(Window.partitionBy("fp"))
         )
         .where(F.col("__df") <= max_doc_freq)
-        .select(id_col, "fp", "__n_fp")
+        .select("doc_id", "fp", "__n_fp")
         .persist()
     )
     a = ann.select(
-        "fp", F.col(id_col).alias("doc_a"), F.col("__n_fp").alias("__na")
+        "fp", F.col("doc_id").alias("doc_a"), F.col("__n_fp").alias("__na")
     )
     b = ann.select(
-        "fp", F.col(id_col).alias("doc_b"), F.col("__n_fp").alias("__nb")
+        "fp", F.col("doc_id").alias("doc_b"), F.col("__n_fp").alias("__nb")
     )
     return (
         a.join(b, "fp")
@@ -603,14 +581,7 @@ def fingerprint_matches(
     )
 
 
-def _gram_hash_stream(
-    docs: DataFrame,
-    *,
-    k: int,
-    id_col: str,
-    words_col: str,
-    positions: bool,
-) -> DataFrame:
+def _gram_hash_stream(docs: DataFrame, *, k: int, positions: bool) -> DataFrame:
     """Arrow kernel emitting the token k-gram stream of every doc
     with >= k tokens as STABLE 64-bit hashes (blake2b-8 of the
     space-joined gram — process-independent, unlike Python's builtin
@@ -638,7 +609,7 @@ def _gram_hash_stream(
 
     import pandas as pd
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from collections import Counter
@@ -648,7 +619,7 @@ def _gram_hash_stream(
                 continue
             if positions:
                 ids, poss, hs = [], [], []
-                for did, ws in zip(pdf[id_col], pdf[words_col]):
+                for did, ws in zip(pdf["doc_id"], pdf["words"]):
                     n = len(ws)
                     if n < k:
                         continue
@@ -667,14 +638,14 @@ def _gram_hash_stream(
                         hs.append(h)
                 yield pd.DataFrame(
                     {
-                        id_col: ids,
+                        "doc_id": ids,
                         "pos": np.asarray(poss, dtype=np.int64),
                         "h": np.asarray(hs, dtype=np.int64),
                     }
                 )
             else:
                 ids, hs, cs = [], [], []
-                for did, ws in zip(pdf[id_col], pdf[words_col]):
+                for did, ws in zip(pdf["doc_id"], pdf["words"]):
                     n = len(ws)
                     if n < k:
                         continue
@@ -696,28 +667,21 @@ def _gram_hash_stream(
                         cs.append(c)
                 yield pd.DataFrame(
                     {
-                        id_col: ids,
+                        "doc_id": ids,
                         "h": np.asarray(hs, dtype=np.int64),
                         "c": np.asarray(cs, dtype=np.int64),
                     }
                 )
 
     schema = (
-        f"{id_col} {id_type}, pos long, h long"
+        f"doc_id {id_type}, pos long, h long"
         if positions
-        else f"{id_col} {id_type}, h long, c long"
+        else f"doc_id {id_type}, h long, c long"
     )
-    return docs.select(id_col, words_col).mapInPandas(gen, schema=schema)
+    return docs.select("doc_id", "words").mapInPandas(gen, schema=schema)
 
 
-def shingle_hash_table(
-    docs: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-    out_col: str = "sh",
-) -> DataFrame:
+def shingle_hash_table(docs: DataFrame) -> DataFrame:
     """(id, sh array<long>): each doc's DISTINCT word-k-gram shingles
     as stable blake2b-64 hashes — the r6 drop-in for the Catalyst
     string-shingle arrays at every exact-Jaccard VERIFICATION site
@@ -733,19 +697,20 @@ def shingle_hash_table(
     shingle, duplicates dropped.  NOT for consumers whose VALUES
     depend on the shingle bytes (the Bloom md5 bit table keeps
     strings)."""
+    k = 4
     from collections.abc import Iterator
     from hashlib import blake2b
 
     import pandas as pd
 
-    id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdfs:
             if not len(pdf):
                 continue
             ids, shs = [], []
-            for did, ws in zip(pdf[id_col], pdf[words_col]):
+            for did, ws in zip(pdf["doc_id"], pdf["words"]):
                 ws = list(ws)
                 m = max(len(ws) - (k - 1), 1)
                 seen = dict.fromkeys(
@@ -761,20 +726,14 @@ def shingle_hash_table(
                 )
                 ids.append(did)
                 shs.append(np.fromiter(seen, dtype=np.int64))
-            yield pd.DataFrame({id_col: ids, out_col: shs})
+            yield pd.DataFrame({"doc_id": ids, "sh": shs})
 
-    return docs.select(id_col, words_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, {out_col} array<long>"
+    return docs.select("doc_id", "words").mapInPandas(
+        gen, schema=f"doc_id {id_type}, sh array<long>"
     )
 
 
-def substring_spans(
-    docs: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
+def substring_spans(docs: DataFrame, *, k: int = 4) -> DataFrame:
     """Exact duplicated-substring detection — the span-level dedup
     from Lee et al. 2022 ("Deduplicating Training Data Makes Language
     Models Better"): a token k-gram occurring more than once
@@ -800,20 +759,20 @@ def substring_spans(
     the per-doc window.  Output-equality vs the retained string form
     is certified by tests/test_fingerprint_gram_kernels.py.
     """
-    words = F.col(words_col)
+    words = F.col("words")
     base = docs.select(
-        id_col, F.size(words).cast("long").alias("n_tokens")
+        "doc_id", F.size(words).cast("long").alias("n_tokens")
     )
     grams = _gram_hash_stream(
-        docs, k=k, id_col=id_col, words_col=words_col, positions=True
+        docs, k=k, positions=True
     )
     dup = grams.groupBy("h").agg(F.count("*").alias("__tot")).where(
         F.col("__tot") >= 2
     )
-    hits = grams.join(dup.select("h"), "h").select(id_col, "pos")
-    w_doc = Window.partitionBy(id_col).orderBy("pos")
+    hits = grams.join(dup.select("h"), "h").select("doc_id", "pos")
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
     flagged = hits.select(
-        id_col,
+        "doc_id",
         "pos",
         # a new token run starts iff this gram's coverage [pos, pos+k-1]
         # neither overlaps nor touches the previous one's: pos > prev + k
@@ -826,20 +785,20 @@ def substring_spans(
         .alias("__new"),
     )
     spans = flagged.select(
-        id_col,
+        "doc_id",
         "pos",
         F.sum("__new").over(w_doc).alias("__span"),
-    ).groupBy(id_col, "__span").agg(
+    ).groupBy("doc_id", "__span").agg(
         (F.max("pos") + (k - 1) - F.min("pos") + 1).cast("long").alias("__len")
     )
-    per_doc = spans.groupBy(id_col).agg(
+    per_doc = spans.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_dup_spans"),
         F.sum("__len").cast("long").alias("dup_tokens"),
         F.max("__len").cast("long").alias("longest_dup_span"),
     )
-    out = base.join(per_doc, id_col, "left")
+    out = base.join(per_doc, "doc_id", "left")
     return out.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         F.coalesce("n_dup_spans", F.lit(0)).cast("long").alias("n_dup_spans"),
         F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
@@ -852,13 +811,7 @@ def substring_spans(
     )
 
 
-def ngram_novelty(
-    docs: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
+def ngram_novelty(docs: DataFrame, *, k: int = 4) -> DataFrame:
     """Per-document n-gram novelty vs the corpus prefix — a
     contribution/curriculum score: a k-gram POSITION is novel iff no
     document with a smaller id contains that k-gram (ties: the
@@ -878,28 +831,28 @@ def ngram_novelty(
     score novelty 1.0 by convention.  Output-equality vs the
     retained string form: tests/test_fingerprint_gram_kernels.py.
     """
-    words = F.col(words_col)
+    words = F.col("words")
     base = docs.select(
-        id_col, F.size(words).cast("long").alias("n_tokens")
+        "doc_id", F.size(words).cast("long").alias("n_tokens")
     )
     gd = _gram_hash_stream(
-        docs, k=k, id_col=id_col, words_col=words_col, positions=False
+        docs, k=k, positions=False
     )
-    first = gd.groupBy("h").agg(F.min(id_col).alias("__first"))
+    first = gd.groupBy("h").agg(F.min("doc_id").alias("__first"))
     per_doc = (
         gd.join(first, "h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("c").cast("long").alias("n_grams"),
             F.sum(
-                F.when(F.col("__first") == F.col(id_col), F.col("c"))
+                F.when(F.col("__first") == F.col("doc_id"), F.col("c"))
                 .otherwise(F.lit(0))
             ).cast("long").alias("n_novel"),
         )
     )
-    out = base.join(per_doc, id_col, "left")
+    out = base.join(per_doc, "doc_id", "left")
     return out.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
         F.coalesce("n_novel", F.lit(0)).cast("long").alias("n_novel"),

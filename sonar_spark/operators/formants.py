@@ -62,30 +62,26 @@ def _confidence(freq, amp, bw):
     )
 
 
-def formants(
-    coeffs: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: int = 4,
-    nfft: int = 32,
-    sample_rate: float = 8000.0,
-    max_formants: int = 4,
-    min_freq: float = 50.0,
-    min_spacing: float = 200.0,
-) -> DataFrame:
+def formants(coeffs: DataFrame) -> DataFrame:
     """Per-key formants from LPC coefficients (columns a1..a{order}).
-    Output: key, formant_idx (1-based, frequency order after the
+    Output: doc_id, formant_idx (1-based, frequency order after the
     spacing chain), frequency, bandwidth, amplitude, confidence."""
+    order = 4
+    nfft = 32
+    sample_rate = 8000.0
+    max_formants = 4
+    min_freq = 50.0
+    min_spacing = 200.0
     freq_res = float(sample_rate) / float(nfft)
     max_freq = float(sample_rate) / 2.0
 
-    env = lpc_envelope(coeffs, key=key, nfft=nfft, order=order).select(
-        key, "k_idx", F.round("envelope", 6).alias("e6")
+    env = lpc_envelope(coeffs, nfft=nfft, order=order).select(
+        "doc_id", "k_idx", F.round("envelope", 6).alias("e6")
     )
-    w = Window.partitionBy(key).orderBy("k_idx")
-    wk = Window.partitionBy(key)
+    w = Window.partitionBy("doc_id").orderBy("k_idx")
+    wk = Window.partitionBy("doc_id")
     x = env.select(
-        key,
+        "doc_id",
         "k_idx",
         "e6",
         F.lag("e6").over(w).alias("__prv"),
@@ -103,7 +99,7 @@ def formants(
         & (freq >= min_freq)
         & (freq <= max_freq)
     ).select(
-        key,
+        "doc_id",
         F.col("k_idx").alias("__pk"),
         F.col("e6").alias("__amp"),
         (F.col("e6") / F.lit(2.0)).alias("__half"),
@@ -112,11 +108,11 @@ def formants(
     # Half-height bandwidth: nearest envelope bin at or below half
     # height on each side; stays at the peak bin when none exists.
     e2 = env.select(
-        F.col(key).alias("__k2"), F.col("k_idx").alias("__kb"),
+        F.col("doc_id").alias("__k2"), F.col("k_idx").alias("__kb"),
         F.col("e6").alias("__eb"),
     )
-    bwj = pk.join(e2, F.col("__k2") == F.col(key)).groupBy(
-        key, "__pk", "__amp", "__half"
+    bwj = pk.join(e2, F.col("__k2") == F.col("doc_id")).groupBy(
+        "doc_id", "__pk", "__amp", "__half"
     ).agg(
         F.max(
             F.when(
@@ -140,7 +136,7 @@ def formants(
     bw = F.least(F.greatest(bw_raw, F.lit(50.0)), F.lit(500.0))
     freq_p = F.col("__pk").cast("double") * F.lit(freq_res)
     cand = bwj.select(
-        key,
+        "doc_id",
         freq_p.alias("frequency"),
         bw.alias("bandwidth"),
         F.col("__amp").alias("amplitude"),
@@ -150,7 +146,7 @@ def formants(
     # Sort by frequency, truncate to maxFormants BEFORE the
     # confidence filter (format.go:185-192 then :301-329).
     rn = F.row_number().over(
-        Window.partitionBy(key).orderBy("frequency")
+        Window.partitionBy("doc_id").orderBy("frequency")
     )
     valid = (
         cand.withColumn("__rn", rn)
@@ -163,7 +159,7 @@ def formants(
     # candidate < minSpacing above the last kept REPLACES it iff its
     # confidence is higher.  <= maxFormants elements per key, so a
     # Catalyst aggregate() fold over the sorted struct array.
-    arr = valid.groupBy(key).agg(
+    arr = valid.groupBy("doc_id").agg(
         F.sort_array(
             F.collect_list(
                 F.struct("frequency", "bandwidth", "amplitude", "confidence")
@@ -186,8 +182,8 @@ def formants(
         )
         .otherwise(acc),
     )
-    return arr.select(key, F.posexplode(kept).alias("__i", "__f")).select(
-        key,
+    return arr.select("doc_id", F.posexplode(kept).alias("__i", "__f")).select(
+        "doc_id",
         (F.col("__i") + 1).alias("formant_idx"),
         F.col("__f.frequency").alias("frequency"),
         F.col("__f.bandwidth").alias("bandwidth"),
@@ -196,12 +192,7 @@ def formants(
     )
 
 
-def formant_summary(
-    coeffs: DataFrame,
-    fmts: DataFrame,
-    *,
-    key: str = "doc_id",
-) -> DataFrame:
+def formant_summary(coeffs: DataFrame, fmts: DataFrame) -> DataFrame:
     """Per-key num_formants, vocal-tract length, and analysis quality
     (format.go:359-425) from the LPC table (resid_e, stable) and the
     formants() output.  Keys with LPC but no formants get the
@@ -211,7 +202,7 @@ def formant_summary(
         * F.lit(_SPEED_OF_SOUND)
         / (4.0 * F.col("frequency"))
     )
-    per = fmts.groupBy(key).agg(
+    per = fmts.groupBy("doc_id").agg(
         F.count("*").alias("__nf"),
         F.avg("confidence").alias("__avg_conf"),
         F.sum(
@@ -233,8 +224,8 @@ def formant_summary(
             )
         ).alias("__vtl_n"),
     )
-    base = coeffs.select(key, "resid_e", "stable")
-    j = base.join(per, key, "left")
+    base = coeffs.select("doc_id", "resid_e", "stable")
+    j = base.join(per, "doc_id", "left")
     nf = F.coalesce(F.col("__nf"), F.lit(0))
     vtl = F.when(
         F.col("__vtl_n") > 0, F.col("__vtl_sum") / F.col("__vtl_n")
@@ -258,7 +249,7 @@ def formant_summary(
         / 4.0
     )
     return j.select(
-        key,
+        "doc_id",
         nf.cast("int").alias("num_formants"),
         vtl.alias("vtl"),
         quality.alias("quality"),

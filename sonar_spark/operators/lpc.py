@@ -74,30 +74,23 @@ def levinson_durbin_rows(R: np.ndarray, order: int):
     return k, a[:, 1:], E, stable
 
 
-def autocorr_lags(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-    order: int = 4,
-) -> DataFrame:
+def autocorr_lags(vals: DataFrame, *, order: int = 4) -> DataFrame:
     """Per-key raw autocorrelation sums r0..r{order} plus sample count
     __n, from one positional self-join with conditional aggregation."""
-    a = vals.select(key, F.col(pos).alias("__pa"), F.col(val).alias("__va"))
+    a = vals.select("doc_id", F.col("pos").alias("__pa"), F.col("v").alias("__va"))
     b = vals.select(
-        F.col(key).alias("__kb"),
-        F.col(pos).alias("__pb"),
-        F.col(val).alias("__vb"),
+        F.col("doc_id").alias("__kb"),
+        F.col("pos").alias("__pb"),
+        F.col("v").alias("__vb"),
     )
     j = a.join(
         b,
-        (F.col("__kb") == F.col(key))
+        (F.col("__kb") == F.col("doc_id"))
         & (F.col("__pb") >= F.col("__pa"))
         & (F.col("__pb") <= F.col("__pa") + order),
     )
     lagm = F.col("__pb") - F.col("__pa")
-    return j.groupBy(key).agg(
+    return j.groupBy("doc_id").agg(
         F.count(F.when(lagm == 0, 1)).alias("__n"),
         *[
             F.sum(
@@ -110,25 +103,18 @@ def autocorr_lags(
     )
 
 
-def lpc(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-    order: int = 4,
-) -> DataFrame:
+def lpc(vals: DataFrame, *, order: int = 4) -> DataFrame:
     """Order-p LPC per key: r0, k1..kp, a1..ap (final coefficients),
     gain = sqrt(E_p), resid_e = E_p, stable.  Keys with fewer than
     2*order samples (lpc.go:45-47) or zero energy (lpc.go:92-94) are
     excluded, as in the reference's error paths."""
-    rs = autocorr_lags(vals, key=key, pos=pos, val=val, order=order)
+    rs = autocorr_lags(vals, order=order)
     d = rs.where((F.col("__n") >= 2 * order) & (F.col("r0") > 0))
 
     lag_cols = [f"r{m}" for m in range(order + 1)]
-    inp = d.select(key, *lag_cols)
+    inp = d.select("doc_id", *lag_cols)
     out_fields = (
-        f"{key} long, r0 double, "
+        "doc_id long, r0 double, "
         + ", ".join(f"k{i} double" for i in range(1, order + 1))
         + ", "
         + ", ".join(f"a{i} double" for i in range(1, order + 1))
@@ -157,7 +143,7 @@ def lpc(
             cols.append(pa.array(stable))
             yield pa.RecordBatch.from_arrays(
                 cols,
-                names=[key, "r0"]
+                names=["doc_id", "r0"]
                 + [f"k{i}" for i in range(1, order + 1)]
                 + [f"a{i}" for i in range(1, order + 1)]
                 + ["gain", "resid_e", "stable"],
@@ -166,16 +152,10 @@ def lpc(
     return inp.mapInArrow(run, schema=out_fields)
 
 
-def lpc4(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-) -> DataFrame:
+def lpc4(vals: DataFrame) -> DataFrame:
     """Order-4 LPC (column subset kept for the established surface)."""
-    return lpc(vals, key=key, pos=pos, val=val, order=4).select(
-        key,
+    return lpc(vals, order=4).select(
+        "doc_id",
         "r0",
         "k1",
         "k2",
@@ -191,13 +171,7 @@ def lpc4(
     )
 
 
-def lpc_envelope(
-    coeffs: DataFrame,
-    *,
-    key: str = "doc_id",
-    nfft: int = 16,
-    order: int = 4,
-) -> DataFrame:
+def lpc_envelope(coeffs: DataFrame, *, nfft: int = 16, order: int = 4) -> DataFrame:
     """LPC spectral envelope |H(e^{j w})| = 1 / |A(e^{j w})| with
     A = 1 + sum_i a_i e^{-j i w} evaluated at the nfft/2+1 DFT
     frequencies (GetSpectralEnvelope, lpc.go:232-265 — the reference's
@@ -217,4 +191,4 @@ def lpc_envelope(
         im = im + F.col(f"a{i}") * F.sin(ang)
     mag = F.sqrt(re * re + im * im)
     env = F.when(mag > 0, 1.0 / mag).otherwise(F.lit(0.0))
-    return d.select(key, F.col("k_idx"), env.alias("envelope"))
+    return d.select("doc_id", F.col("k_idx"), env.alias("envelope"))

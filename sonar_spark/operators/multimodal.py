@@ -1,15 +1,13 @@
 """Multimodal columns: image/audio/video as opaque binary payloads
 with typed metadata, processed by Arrow-batched UDFs.
 
-The decode step itself needs codec libraries that are not in this
-environment — it is STUBBED two ways (explicitly marked):
-- decode="fake": deterministic byte-derived decode (payload bytes
-  interpreted as the raw sample/pixel stream) so the Spark-side
-  plumbing — schema, partitioning, UDF signature, Arrow batch shape,
-  downstream featurization — is real and testable end-to-end;
-- decode="real": raises NotImplementedError naming the library that
-  a production image (PIL / libsndfile / ffmpeg, the reference's
-  transcode/decoder.go:146-174 role) would provide.
+The decode step itself needs codec libraries (PIL / libsndfile /
+ffmpeg, the reference's transcode/decoder.go:146-174 role) that are
+not in this environment, so it is a STUB: a deterministic
+byte-derived decode (payload bytes interpreted as the raw
+sample/pixel stream), so the Spark-side plumbing — schema,
+partitioning, UDF signature, Arrow batch shape, downstream
+featurization — is real and testable end-to-end.
 
 Decoded audio streams are framed by the SAME frame/hop arithmetic as
 token sequences (kernels.n_frames) — one engine, two modalities.
@@ -25,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import kernels
-from ..config import FrameConfig
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, width int, height int, sample_rate int, "
@@ -76,23 +73,7 @@ def synth_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
     return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def _decode_bytes(payload: bytes, kind: str, decode: str) -> np.ndarray:
-    if decode == "real":
-        lib = "PIL/pillow" if kind == "image" else "libsndfile/ffmpeg"
-        raise NotImplementedError(
-            f"real {kind} decode requires {lib}, not present in this "
-            "environment; use decode='fake' for the deterministic stub"
-        )
-    # fake decode: payload bytes ARE the sample/pixel stream
-    return np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-
-
-def media_features(
-    media: DataFrame,
-    *,
-    decode: str = "fake",
-    frame_cfg: FrameConfig = FrameConfig(window=256, hop=64),
-) -> DataFrame:
+def media_features(media: DataFrame) -> DataFrame:
     """Decode + feature-extract every media row (Arrow-batched).
 
     - integrity: sha256(payload) must equal the metadata checksum
@@ -100,11 +81,11 @@ def media_features(
     - image: 16-bin intensity histogram + mean/std (resize stub:
       features over the raw pixel stream);
     - audio: global rms/mean/std over decoded samples PLUS n_frames
-      from the shared frame/hop kernel (frame-sample plumbing).
+      from the shared frame/hop kernel at W=256, H=64 (frame-sample
+      plumbing).
 
     Output: media_id, kind, ok, n_values, mean, std, rms, n_frames,
     hist array<double>(16)."""
-    W, H = frame_cfg.window, frame_cfg.hop
     out_schema = (
         "media_id string, kind string, ok boolean, n_values int, "
         "mean double, std double, rms double, n_frames long, "
@@ -122,12 +103,13 @@ def media_features(
                     rows.append((mid, kind, False, 0, None, None, None,
                                  None, None))
                     continue
-                x = _decode_bytes(raw, kind, decode)
+                # stub decode: payload bytes ARE the sample/pixel stream
+                x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
                 mean = float(x.mean())
                 std = float(x.std())
                 rms = float(np.sqrt((x.astype(np.float64) ** 2).mean()))
                 hist = np.bincount(x // 16, minlength=16)[:16] / len(x)
-                nf = kernels.n_frames(len(x), W, H) if kind == "audio" else 0
+                nf = kernels.n_frames(len(x), 256, 64) if kind == "audio" else 0
                 rows.append(
                     (mid, kind, True, int(len(x)), mean, std, rms, nf,
                      hist.tolist())

@@ -31,21 +31,14 @@ from ..functions.sketch import md5_60
 from .sharding import global_cumsum
 
 
-def global_dense_index(
-    df: DataFrame, *, col: str = "doc_id", buckets: int = 32
-) -> DataFrame:
+def global_dense_index(df: DataFrame, *, col: str = "doc_id") -> DataFrame:
     """Add gidx = 0-based dense rank of `col` over the whole table
     (== row_number() OVER (ORDER BY col) - 1), without a global
     single-partition sort: the rank is the exclusive prefix count,
     i.e. sharding.global_cumsum over a constant-1 column.  `col`
     values must be unique."""
     return (
-        global_cumsum(
-            df.withColumn("__one", F.lit(1)),
-            col=col,
-            val="__one",
-            buckets=buckets,
-        )
+        global_cumsum(df.withColumn("__one", F.lit(1)), col=col, val="__one")
         .withColumnRenamed("cum_before", "gidx")
         .drop("__one")
     )

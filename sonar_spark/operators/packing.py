@@ -28,19 +28,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pack_sequences(
-    docs: DataFrame,
-    *,
-    capacity: int = 256,
-    id_col: str = "doc_id",
-    len_col: str = "n_tok",
-    shard_col: str = "source",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, *, capacity: int = 256) -> DataFrame:
     """Pack (id, token-length) rows into fixed-size windows per shard.
 
     Output one row per document: its shard, assigned window id
     (0-based, per shard), offset inside the window, and the truncated
-    flag.  Deterministic: docs are folded in ascending `id_col` order
+    flag.  Deterministic: docs are folded in ascending `doc_id` order
     within each shard.
 
     r6: the per-shard fold runs in an applyInPandas kernel — the
@@ -56,17 +49,17 @@ def pack_sequences(
     import pandas as pd
 
     cap_i = int(capacity)
-    shard_type = docs.schema[shard_col].dataType.simpleString()
-    id_type = docs.schema[id_col].dataType.simpleString()
+    shard_type = docs.schema["source"].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def pack_one(pdf: pd.DataFrame) -> pd.DataFrame:
         # (id, n) sort matches sort_array's struct ordering in the
         # retained fold form (ids are unique in practice; the length
         # tie-break keeps the two forms identical if they ever are
         # not)
-        pdf = pdf.sort_values([id_col, len_col], kind="mergesort")
-        ids = pdf[id_col].to_numpy()
-        ns = pdf[len_col].to_numpy()
+        pdf = pdf.sort_values(["doc_id", "n_tok"], kind="mergesort")
+        ids = pdf["doc_id"].to_numpy()
+        ns = pdf["n_tok"].to_numpy()
         bins = np.empty(len(ids), dtype=np.int64)
         offs = np.empty(len(ids), dtype=np.int64)
         truncs = np.empty(len(ids), dtype=bool)
@@ -85,8 +78,8 @@ def pack_sequences(
             truncs[j] = trunc
         return pd.DataFrame(
             {
-                id_col: ids,
-                shard_col: pdf[shard_col].to_numpy(),
+                "doc_id": ids,
+                "source": pdf["source"].to_numpy(),
                 "window_id": bins,
                 "window_off": offs,
                 "truncated": truncs,
@@ -94,12 +87,12 @@ def pack_sequences(
         )
 
     return (
-        docs.select(shard_col, id_col, len_col)
-        .groupBy(shard_col)
+        docs.select("source", "doc_id", "n_tok")
+        .groupBy("source")
         .applyInPandas(
             pack_one,
             schema=(
-                f"{id_col} {id_type}, {shard_col} {shard_type}, "
+                f"doc_id {id_type}, source {shard_type}, "
                 "window_id long, window_off long, truncated boolean"
             ),
         )
@@ -111,8 +104,6 @@ def chunk_documents(
     *,
     window: int = 32,
     stride: int = 24,
-    id_col: str = "doc_id",
-    words_col: str = "words",
 ) -> DataFrame:
     """Overlapping token-window chunking — the other half of the
     context-window preprocessing step (pack short docs, CHUNK long
@@ -128,18 +119,18 @@ def chunk_documents(
     + slice — one scan, zero shuffles, no floats anywhere, so the
     result is trivially engine-exact.
     """
-    words = F.col(words_col)
+    words = F.col("words")
     starts = F.sequence(
         F.lit(0), F.size(words) - 1, F.lit(stride)
     )
     ch = docs.where(F.size(words) > 0).select(
-        id_col,
+        "doc_id",
         words.alias("__w"),
         F.posexplode(starts).alias("chunk_id", "start"),
     )
     piece = F.slice(F.col("__w"), F.col("start") + 1, window)
     return ch.select(
-        id_col,
+        "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.col("start").cast("long").alias("start"),
         F.size(piece).cast("long").alias("chunk_len"),
@@ -147,14 +138,7 @@ def chunk_documents(
     )
 
 
-def chunk_dedup(
-    docs: DataFrame,
-    *,
-    window: int = 16,
-    stride: int = 16,
-    id_col: str = "doc_id",
-    words_col: str = "words",
-) -> DataFrame:
+def chunk_dedup(docs: DataFrame, *, window: int = 16, stride: int = 16) -> DataFrame:
     """Sub-document (chunk-level) exact dedup — the paragraph-dedup
     pass web pipelines (RefinedWeb, CCNet) run AFTER document-level
     dedup: boilerplate repeats across documents that are not
@@ -176,8 +160,6 @@ def chunk_dedup(
         docs,
         window=window,
         stride=stride,
-        id_col=id_col,
-        words_col=words_col,
     )
     # "more than one doc OR more than once in one doc" == total
     # occurrence count > 1, so one windowed count suffices
@@ -185,10 +167,10 @@ def chunk_dedup(
 
     wf = Window.partitionBy("chunk_md5")
     marked = ch.select(
-        id_col,
+        "doc_id",
         (F.count("*").over(wf) > 1).cast("long").alias("__dup"),
     )
-    return marked.groupBy(id_col).agg(
+    return marked.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_chunks"),
         F.sum("__dup").cast("long").alias("n_dup_chunks"),
         F.round(F.sum("__dup") / F.count("*"), 6).alias(

@@ -29,18 +29,16 @@ def spectral_peaks(
     spec: DataFrame,
     group_cols: list[str],
     *,
-    bin_col: str = "bin",
-    mag_col: str = "m",
     min_height: float = 0.0,
     max_peaks: int = 3,
-    freq_resolution: float = 1.0,
 ) -> DataFrame:
     """Output: group cols + rank, bin, magnitude, refined_freq,
     refined_mag."""
-    w = Window.partitionBy(*group_cols).orderBy(bin_col)
-    m = F.col(mag_col)
-    d = spec.withColumn("__y1", F.lag(mag_col).over(w)).withColumn(
-        "__y3", F.lead(mag_col).over(w)
+    freq_resolution = 1.0
+    w = Window.partitionBy(*group_cols).orderBy("bin")
+    m = F.col("m")
+    d = spec.withColumn("__y1", F.lag("m").over(w)).withColumn(
+        "__y3", F.lead("m").over(w)
     )
     cand = d.where(
         (m > F.col("__y1")) & (m > F.col("__y3")) & (m >= min_height)
@@ -52,11 +50,11 @@ def spectral_peaks(
     )
     a = 0.5 * (F.col("__y1") - 2.0 * m + F.col("__y3"))
     b = 0.5 * (F.col("__y3") - F.col("__y1"))
-    refined_freq = (F.col(bin_col) + offset) * freq_resolution
+    refined_freq = (F.col("bin") + offset) * freq_resolution
     refined_mag = F.when(ok, m + a * offset * offset + b * offset).otherwise(m)
     scored = cand.select(
         *group_cols,
-        F.col(bin_col).alias("bin"),
+        "bin",
         m.alias("magnitude"),
         refined_freq.alias("refined_freq"),
         refined_mag.alias("refined_mag"),
@@ -69,25 +67,19 @@ def spectral_peaks(
     )
 
 
-def assign_harmonics(
-    peaks: DataFrame,
-    group_cols: list[str],
-    *,
-    freq_col: str = "refined_freq",
-    f0_col: str = "f0",
-    tolerance: float = 0.05,
-    max_harmonic: int = 20,
-) -> DataFrame:
+def assign_harmonics(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     """AssignHarmonics (spectral_peaks.go:153-181): for each peak,
     scan harmonics 1..20 of f0, keep candidates with relative error
     |f - h f0| / (h f0) < tolerance, pick the minimum ABSOLUTE error
     (ties -> smallest h, the reference's strict-< first-wins scan);
     harmonic = h - 1 (0-indexed) or -1 when none qualifies."""
+    tolerance = 0.05
+    max_harmonic = 20
     h = peaks.withColumn(
         "__h", F.explode(F.sequence(F.lit(1), F.lit(max_harmonic)))
     )
-    exp = F.col(f0_col) * F.col("__h")
-    err = F.abs(F.col(freq_col) - exp)
+    exp = F.col("f0") * F.col("__h")
+    err = F.abs(F.col("refined_freq") - exp)
     cand = h.withColumn("__err", err).where(err / exp < tolerance)
     best = topk_per_group(
         cand.select(*group_cols, "bin", "__h", "__err"),
@@ -100,17 +92,7 @@ def assign_harmonics(
     ).drop("__harm")
 
 
-def harmonic_product_f0(
-    spec: DataFrame,
-    group_cols: list[str],
-    *,
-    bin_col: str = "bin",
-    mag_col: str = "m",
-    num_bins: int = 16,
-    num_harmonics: int = 3,
-    min_bin: int = 1,
-    max_bin: int = 7,
-) -> DataFrame:
+def harmonic_product_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     """Harmonic product spectrum F0 (harmonic_product.go:32-160):
     hps[i] = prod_{h=1..H} power[i*h], where downsampleSpectrum
     (harmonic_product.go:94-124) zero-fills beyond len//h — integer
@@ -124,10 +106,14 @@ def harmonic_product_f0(
     Relational: H-1 self-joins on bin multiples + one per-group top-1.
     Output: group cols + f0_bin (int) + hps (the winning product,
     0.0 for the no-candidate rows)."""
+    num_bins = 16
+    num_harmonics = 3
+    min_bin = 1
+    max_bin = 7
     pw = spec.select(
         *group_cols,
-        F.col(bin_col).alias("__b"),
-        (F.col(mag_col) * F.col(mag_col)).alias("__p"),
+        F.col("bin").alias("__b"),
+        (F.col("m") * F.col("m")).alias("__p"),
     )
     cand = pw.where(
         (F.col("__b") >= min_bin)
@@ -168,13 +154,7 @@ def harmonic_product_f0(
     )
 
 
-def harmonic_series_analysis(
-    peaks: DataFrame,
-    group_cols: list[str],
-    *,
-    harmonic_col: str = "harmonic",
-    mag_col: str = "refined_mag",
-) -> DataFrame:
+def harmonic_series_analysis(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     """AnalyzeHarmonicSeries (spectral_peaks.go:200-268) over
     harmonic-assigned peaks (harmonic >= 0 only; groups with none are
     absent, matching the reference's empty map): harmonic count,
@@ -182,14 +162,14 @@ def harmonic_series_analysis(
     odd/even energy ratio (+inf when even energy is 0), and the
     harmonic decay slope (linear regression of ln(mag + 1e-10) vs
     1-indexed harmonic number; NULL below 2 peaks)."""
-    h = peaks.where(F.col(harmonic_col) >= 0)
-    m = F.col(mag_col).cast("double")
+    h = peaks.where(F.col("harmonic") >= 0)
+    m = F.col("refined_mag").cast("double")
     e = m * m
-    x = (F.col(harmonic_col) + 1).cast("double")
+    x = (F.col("harmonic") + 1).cast("double")
     y = F.log(m + 1e-10)
-    odd = F.sum(F.when(F.pmod(F.col(harmonic_col) + 1, F.lit(2)) == 1, e)
+    odd = F.sum(F.when(F.pmod(F.col("harmonic") + 1, F.lit(2)) == 1, e)
                 .otherwise(F.lit(0.0)))
-    even = F.sum(F.when(F.pmod(F.col(harmonic_col) + 1, F.lit(2)) == 0, e)
+    even = F.sum(F.when(F.pmod(F.col("harmonic") + 1, F.lit(2)) == 0, e)
                  .otherwise(F.lit(0.0)))
     n = F.count("*").cast("double")
     sx, sy = F.sum(x), F.sum(y)
@@ -201,7 +181,7 @@ def harmonic_series_analysis(
     return h.groupBy(*group_cols).agg(
         F.count("*").alias("num_harmonics"),
         F.coalesce(
-            F.max(F.when(F.col(harmonic_col) == 0, m)), F.lit(0.0)
+            F.max(F.when(F.col("harmonic") == 0, m)), F.lit(0.0)
         ).alias("fundamental_magnitude"),
         F.sum(e).alias("total_harmonic_energy"),
         F.when(even > 0, odd / even)
@@ -211,18 +191,7 @@ def harmonic_series_analysis(
     )
 
 
-def hpcp(
-    peaks: DataFrame,
-    group_cols: list[str],
-    *,
-    freq_col: str = "refined_freq",
-    mag_col: str = "refined_mag",
-    size: int = 12,
-    ref_freq: float = 1.0,
-    window_semitones: float = 1.0,
-    min_freq: float = 1.0,
-    max_freq: float = 15.0,
-) -> DataFrame:
+def hpcp(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     """Harmonic pitch-class profile from spectral peaks
     (chroma/hpcp.go:147-310): pitch class = mod(69 + 12 log2(f/ref),
     12) scaled to `size`; each peak scatters weight*cos(pi d / W) into
@@ -234,8 +203,13 @@ def hpcp(
 
     Output: group cols + pitch_class (0..size-1) + hpcp (normalized),
     all `size` classes per group (zero-filled)."""
+    size = 12
+    ref_freq = 1.0
+    window_semitones = 1.0
+    min_freq = 1.0
+    max_freq = 15.0
     wsize = window_semitones * size / 12.0
-    f = F.col(freq_col)
+    f = F.col("refined_freq")
     pc = F.pmod(
         F.lit(69.0) + 12.0 * F.log2(f / ref_freq), F.lit(12.0)
     ) * (size / 12.0)
@@ -263,7 +237,7 @@ def hpcp(
         .groupBy(*group_cols, F.pmod(F.col("__bin"), F.lit(size)).alias(
             "pitch_class"
         ))
-        .agg(F.sum(F.col(mag_col) * weight).alias("raw"))
+        .agg(F.sum(F.col("refined_mag") * weight).alias("raw"))
     )
     # zero-filled 12-class grid per group + unit-energy normalization
     grid = (
@@ -287,17 +261,7 @@ def hpcp(
     )
 
 
-def cepstrum_f0(
-    spec: DataFrame,
-    group_cols: list[str],
-    *,
-    bin_col: str = "bin",
-    mag_col: str = "m",
-    num_bins: int = 16,
-    min_q: int = 2,
-    max_q: int = 8,
-    sample_rate: float = 16.0,
-) -> DataFrame:
+def cepstrum_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     """Cepstral F0 estimation (fundamental_estimation.go:96-147) over
     the histogram-as-spectrum analog: log power spectrum with the
     1e-10 floor (:110-119), real inverse DFT to the quefrency domain
@@ -317,11 +281,15 @@ def cepstrum_f0(
     Relational: one grid x quefrency-range join, one groupBy sum per
     (group, q), one per-group top-1.  Output: group cols + quefrency
     (int, 0 when none) + f0 (double)."""
+    num_bins = 16
+    min_q = 2
+    max_q = 8
+    sample_rate = 16.0
     n = float(num_bins)
-    logp = F.log(F.greatest(F.col(mag_col) * F.col(mag_col), F.lit(1e-10)))
+    logp = F.log(F.greatest(F.col("m") * F.col("m"), F.lit(1e-10)))
     qs = spec.select(
         *group_cols,
-        F.col(bin_col).alias("__k"),
+        F.col("bin").alias("__k"),
         logp.alias("__lp"),
     ).withColumn(
         "__q", F.explode(F.sequence(F.lit(min_q), F.lit(max_q)))
@@ -364,16 +332,6 @@ def inharmonicity(
     spec: DataFrame,
     peaks: DataFrame,
     group_cols: list[str],
-    *,
-    bin_col: str = "bin",
-    mag_col: str = "m",
-    num_bins: int = 16,
-    max_harmonics: int = 20,
-    min_harmonics: int = 3,
-    tolerance: float = 0.05,
-    min_strength: float = 0.01,
-    min_f0: float = 1.0,
-    max_f0: float = 15.0,
 ) -> DataFrame:
     """Spectral-deviation inharmonicity (tonal/inharmonicity.go:
     218-467, the default method with the :150-163 parameters):
@@ -399,13 +357,20 @@ def inharmonicity(
     three times); the windowed argmax / local-max checks are array
     expressions, and only the per-harmonic explode + one aggregation
     remain."""
+    num_bins = 16
+    max_harmonics = 20
+    min_harmonics = 3
+    tolerance = 0.05
+    min_strength = 0.01
+    min_f0 = 1.0
+    max_f0 = 15.0
     garr_df = spec.groupBy(*group_cols).agg(
         F.transform(
             F.sort_array(
                 F.collect_list(
                     F.struct(
-                        F.col(bin_col).alias("b"),
-                        F.col(mag_col).cast("double").alias("m"),
+                        F.col("bin").alias("b"),
+                        F.col("m").cast("double").alias("m"),
                     )
                 )
             ),
@@ -414,7 +379,7 @@ def inharmonicity(
     )
     f0df = (
         peaks.groupBy(*group_cols)
-        .agg(F.round(F.min_by("refined_freq", bin_col), 6).alias("f0"))
+        .agg(F.round(F.min_by("refined_freq", "bin"), 6).alias("f0"))
         .where((F.col("f0") >= min_f0) & (F.col("f0") <= max_f0))
     )
     base = f0df.join(garr_df, group_cols)
@@ -503,18 +468,7 @@ def inharmonicity(
         conf.alias("confidence"),
     )
 
-def harmonic_ratio_spectral(
-    peaks: DataFrame,
-    group_cols: list[str],
-    *,
-    freq_col: str = "refined_freq",
-    mag_col: str = "refined_mag",
-    min_freq: float = 1.0,
-    max_freq: float = 15.0,
-    max_harmonics: int = 20,
-    tolerance: float = 0.1,
-    n_candidates: int = 5,
-) -> DataFrame:
+def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     """Spectral harmonic-ratio analysis
     (tonal/harmonic_ratio.go:464-513 with the :130-146 parameters):
 
@@ -535,10 +489,15 @@ def harmonic_ratio_spectral(
     Inputs pre-rounded to 6 dp (quantized interface).  Output: group
     cols + f0, harmonic_ratio, harmonic_energy, noise_energy,
     total_energy."""
+    min_freq = 1.0
+    max_freq = 15.0
+    max_harmonics = 20
+    tolerance = 0.1
+    n_candidates = 5
     vp = peaks.select(
         *group_cols,
-        F.round(F.col(freq_col), 6).alias("__f"),
-        F.round(F.col(mag_col), 6).alias("__m"),
+        F.round(F.col("refined_freq"), 6).alias("__f"),
+        F.round(F.col("refined_mag"), 6).alias("__m"),
     ).where((F.col("__f") >= min_freq) & (F.col("__f") <= max_freq))
     crank = F.row_number().over(
         Window.partitionBy(*group_cols).orderBy(
@@ -622,17 +581,6 @@ def harmonic_ratio_hnr(
     spec: DataFrame,
     peaks: DataFrame,
     group_cols: list[str],
-    *,
-    bin_col: str = "bin",
-    mag_col: str = "m",
-    freq_col: str = "refined_freq",
-    pmag_col: str = "refined_mag",
-    num_bins: int = 16,
-    min_freq: float = 1.0,
-    max_freq: float = 15.0,
-    max_harmonics: int = 20,
-    tolerance: float = 0.1,
-    width: int = 3,
 ) -> DataFrame:
     """Mask-based HNR analysis (tonal/harmonic_ratio.go:297-385 with
     the :130-146 parameters):
@@ -659,10 +607,16 @@ def harmonic_ratio_hnr(
     Output: group cols + f0, f0_confidence, harmonic_ratio,
     harmonic/noise/total energy, num_harmonics, periodicity,
     harmonicity, voicing, roughness."""
+    num_bins = 16
+    min_freq = 1.0
+    max_freq = 15.0
+    max_harmonics = 20
+    tolerance = 0.1
+    width = 3
     vp = peaks.select(
         *group_cols,
-        F.round(F.col(freq_col), 6).alias("__f"),
-        F.round(F.col(pmag_col), 6).alias("__m"),
+        F.round(F.col("refined_freq"), 6).alias("__f"),
+        F.round(F.col("refined_mag"), 6).alias("__m"),
     )
     rk = F.row_number().over(
         Window.partitionBy(*group_cols).orderBy(
@@ -697,8 +651,8 @@ def harmonic_ratio_hnr(
     ).withColumn("__tb", F.col("__exp").cast("int"))
     g = spec.select(
         *[F.col(c).alias(f"__g_{c}") for c in group_cols],
-        F.col(bin_col).alias("__b"),
-        F.col(mag_col).alias("__gm"),
+        F.col("bin").alias("__b"),
+        F.col("m").alias("__gm"),
     )
     on = (F.col("__b") >= F.greatest(F.col("__tb") - width, F.lit(0))) & (
         F.col("__b") <= F.least(F.col("__tb") + width, F.lit(num_bins - 1))
@@ -714,13 +668,13 @@ def harmonic_ratio_hnr(
     ).drop("rank")
     gl = spec.select(
         *[F.col(c).alias(f"__l_{c}") for c in group_cols],
-        F.col(bin_col).alias("__lb"),
-        F.col(mag_col).alias("__lm"),
+        F.col("bin").alias("__lb"),
+        F.col("m").alias("__lm"),
     )
     gr = spec.select(
         *[F.col(c).alias(f"__r_{c}") for c in group_cols],
-        F.col(bin_col).alias("__rb"),
-        F.col(mag_col).alias("__rm"),
+        F.col("bin").alias("__rb"),
+        F.col("m").alias("__rm"),
     )
     onl = F.col("__lb") == F.col("__b") - 1
     onr = F.col("__rb") == F.col("__b") + 1
@@ -809,7 +763,7 @@ def harmonic_ratio_hnr(
     # band energies: grid x f0 with the mask as an exists() over the
     # (possibly absent) harmonic array
     gm = spec.select(
-        *group_cols, F.col(bin_col).alias("__b"), F.col(mag_col).alias("__gm")
+        *group_cols, F.col("bin").alias("__b"), F.col("m").alias("__gm")
     ).join(f0df.select(*group_cols, "f0"), group_cols)
     ha = hstats.select(
         *[F.col(c).alias(f"__a_{c}") for c in group_cols], "__harr"

@@ -150,14 +150,13 @@ def _method_value(method: str, rn, v, n, q: float) -> Column:
     )
 
 
-def percentile_methods(
-    df: DataFrame,
-    value: str,
-    group: str,
-    qs: tuple[float, ...] = (0.5, 0.9),
-    methods: tuple[str, ...] = PERCENTILE_METHODS,
-) -> DataFrame:
-    """(group, method, q, value) for every method x quantile.
+# the quantiles percentile_methods reports
+_QS = (0.5, 0.9)
+
+
+def percentile_methods(df: DataFrame, value: str, group: str) -> DataFrame:
+    """(group, method, q, value) for every PERCENTILE_METHODS method x
+    _QS quantile.
 
     Physical plan (r6): value HISTOGRAM instead of a full sort — the
     former plan ranked every row with row_number() over the group
@@ -206,18 +205,18 @@ def percentile_methods(
 
     rn = _HistRank()
     aggs = []
-    for m in methods:
-        for q in qs:
+    for m in PERCENTILE_METHODS:
+        for q in _QS:
             aggs.append(
                 _method_value(m, rn, v, n, q).alias(f"__{m}__{q}")
             )
     wide = d.groupBy(group).agg(*aggs)
     stack_args = []
-    for m in methods:
-        for q in qs:
+    for m in PERCENTILE_METHODS:
+        for q in _QS:
             stack_args.append(f"'{m}', {q}D, `__{m}__{q}`")
     expr = (
-        f"stack({len(methods) * len(qs)}, "
+        f"stack({len(PERCENTILE_METHODS) * len(_QS)}, "
         + ", ".join(stack_args)
         + ") as (method, q, value)"
     )

@@ -62,13 +62,7 @@ def semdedup_centroids_sql_values() -> str:
     return ",\n             ".join(rows)
 
 
-def semdedup(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tau: float = 0.95,
-) -> DataFrame:
+def semdedup(corpus: DataFrame, *, tau: float = 0.95) -> DataFrame:
     """SemDeDup keep/drop over ``corpus`` (id, array<double> vector).
 
     Output per input row: cluster (0..K-1), centroid_sim (6dp),
@@ -126,7 +120,7 @@ def semdedup(
                 names=["__id", "__v", "cluster", "centroid_sim"],
             )
 
-    asg = corpus.select(id_col, vec_col).mapInArrow(
+    asg = corpus.select("vec_id", "embedding").mapInArrow(
         _assign_kernel,
         schema=(
             "__id long, __v array<double>, cluster long,"
@@ -178,7 +172,7 @@ def semdedup(
                     pa.array(near.sum(axis=1, dtype=np.int64)),
                     pa.array((near & beats).any(axis=1).astype(np.int64)),
                 ],
-                names=[id_col, "cluster", "centroid_sim", "n_near", "dropped"],
+                names=["vec_id", "cluster", "centroid_sim", "n_near", "dropped"],
             )
 
         for batch in batches:
@@ -203,7 +197,7 @@ def semdedup(
         .mapInArrow(
             _cluster_kernel,
             schema=(
-                f"{id_col} long, cluster long, centroid_sim double,"
+                "vec_id long, cluster long, centroid_sim double,"
                 " n_near long, dropped long"
             ),
         )

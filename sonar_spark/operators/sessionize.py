@@ -23,7 +23,6 @@ def sessionize_by_gap(
     key: str = "user_id",
     ts: str = "ts_sec",
     gap: int = 1800,
-    session_col: str = "session_id",
 ) -> DataFrame:
     """Assign 0-based per-key session ids: a new session starts when
     the gap to the previous event exceeds ``gap`` (strictly greater).
@@ -38,7 +37,7 @@ def sessionize_by_gap(
         (F.col(ts) - F.lag(ts).over(w)) > gap, F.lit(1)
     ).otherwise(F.lit(0))
     return df.withColumn(
-        session_col,
+        "session_id",
         F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)),
     )
 
@@ -119,10 +118,6 @@ def detect_silence(
 def detect_voice_activity(
     features: DataFrame,
     *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    energy: str = "rms_energy",
-    zcr: str = "zcr",
     energy_thr: Column | float = 0.0,
     zcr_low: float = 0.0,
     zcr_high: float = 1.0,
@@ -133,19 +128,17 @@ def detect_voice_activity(
     (DetectVoiceActivity, reference silence_detection.go:78-135 —
     compound predicate + the same run-length machinery as silence).
 
-    Output: key, seg_start, seg_end, run_len (active segments only)."""
+    Output: doc_id, seg_start, seg_end, run_len (active segments only)."""
     thr = energy_thr if isinstance(energy_thr, Column) else F.lit(float(energy_thr))
     flagged = features.withColumn(
         "is_active",
         (
-            (F.col(energy) >= thr)
-            & (F.col(zcr) >= zcr_low)
-            & (F.col(zcr) <= zcr_high)
+            (F.col("rms_energy") >= thr)
+            & (F.col("zcr") >= zcr_low)
+            & (F.col("zcr") <= zcr_high)
         ).cast("int"),
     )
-    segs = segment_runs(
-        flagged, key=key, order=order, flag="is_active", min_run=min_run
-    )
+    segs = segment_runs(flagged, flag="is_active", min_run=min_run)
     return segs.where(F.col("is_active") == 1).drop("is_active")
 
 
@@ -153,8 +146,6 @@ def combine_onsets(
     onsets_a: DataFrame,
     onsets_b: DataFrame,
     *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
     tolerance: int = 2,
 ) -> DataFrame:
     """DetectOnsetsComplex's union-of-methods combine + tolerance
@@ -169,12 +160,12 @@ def combine_onsets(
     because onset counts per doc are tiny (tens), unlike frame or
     token counts."""
     u = (
-        onsets_a.select(key, order)
-        .unionByName(onsets_b.select(key, order))
+        onsets_a.select("doc_id", "frame_idx")
+        .unionByName(onsets_b.select("doc_id", "frame_idx"))
         .distinct()
     )
-    arr = u.groupBy(key).agg(
-        F.sort_array(F.collect_list(F.col(order).cast("long"))).alias("__o")
+    arr = u.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list(F.col("frame_idx").cast("long"))).alias("__o")
     )
     kept = F.aggregate(
         F.slice(F.col("__o"), 2, F.greatest(F.size("__o") - 1, F.lit(0))),
@@ -184,7 +175,7 @@ def combine_onsets(
             F.concat(acc, F.array(x)),
         ).otherwise(acc),
     )
-    return arr.select(key, F.explode(kept).alias(order))
+    return arr.select("doc_id", F.explode(kept).alias("frame_idx"))
 
 
 def detect_onsets(

@@ -24,11 +24,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def range_buckets(
-    df: DataFrame, col: str, buckets: int = 32
-) -> DataFrame:
-    """Add __b = deterministic, order-respecting bucket id (monotone
-    in `col`) from one tiny min/max aggregate — the first pass of
+def range_buckets(df: DataFrame, col: str) -> DataFrame:
+    """Add __b = deterministic, order-respecting bucket id in [0, 32)
+    (monotone in `col`) from one tiny min/max aggregate — the first pass of
     global_cumsum.
 
     NUMERIC-ONLY CONTRACT (ADVICE r5): the bucket formula does
@@ -56,7 +54,7 @@ def range_buckets(
             F.col("__hi") > F.col("__lo"),
             F.floor(
                 (F.col(col) - F.col("__lo")).cast("double")
-                * buckets
+                * 32
                 / (F.col("__hi") - F.col("__lo") + 1)
             ).cast("int"),
         ).otherwise(F.lit(0)),
@@ -65,7 +63,7 @@ def range_buckets(
 
 def bucket_offsets(per_bucket: DataFrame, val: str) -> DataFrame:
     """(__b, __off = sum of `val` over all LOWER buckets) via a
-    triangle self-join over the <= `buckets`-row table (no
+    triangle self-join over the <= 32-row table (no
     WindowExec: a global-ordered window would plan single-partition,
     and Catalyst folds any constant partition key away) — quadratic
     only in the BUCKET count."""
@@ -90,13 +88,12 @@ def global_cumsum(
     *,
     col: str = "doc_id",
     val: str = "n_tok",
-    buckets: int = 32,
 ) -> DataFrame:
     """Add cum_before = exclusive prefix sum of `val` in `col` order
     (== sum(val) OVER (ORDER BY col ROWS BETWEEN UNBOUNDED PRECEDING
     AND 1 PRECEDING), 0 for the first row) without a global
     single-partition sort.  `col` values must be unique."""
-    b = range_buckets(df, col, buckets)
+    b = range_buckets(df, col)
     sums = b.groupBy("__b").agg(F.sum(val).cast("long").alias("__s"))
     offsets = bucket_offsets(sums, "__s")
     win = (
@@ -117,22 +114,16 @@ def global_cumsum(
     )
 
 
-def shard_balance(
-    docs: DataFrame,
-    *,
-    n_shards: int = 8,
-    id_col: str = "doc_id",
-    ntok_col: str = "n_tok",
-) -> DataFrame:
+def shard_balance(docs: DataFrame, *, n_shards: int = 8) -> DataFrame:
     """Assign each doc a shard in [0, n_shards) with ~equal token
     budgets.  Output per doc: id, n_tok, cum_before, shard, plus the
     shard's realized totals (shard_tokens, shard_docs) riding every
     row — the balance certificate."""
-    cs = global_cumsum(docs, col=id_col, val=ntok_col)
+    cs = global_cumsum(docs)
     # total from the INPUT, not the cumsum subtree — re-deriving cs
     # for a single scalar would double the two-pass (plan-audited)
     tot = docs.groupBy().agg(
-        F.sum(ntok_col).cast("long").alias("__tot")
+        F.sum("n_tok").cast("long").alias("__tot")
     )
     # greatest(...,1): an all-empty corpus (total 0) degenerates to
     # shard 0 instead of dividing by zero
@@ -140,8 +131,8 @@ def shard_balance(
         F.ceil(F.col("__tot") / n_shards).cast("long"), F.lit(1)
     )
     assigned = cs.crossJoin(F.broadcast(tot)).select(
-        id_col,
-        F.col(ntok_col).cast("long").alias(ntok_col),
+        "doc_id",
+        F.col("n_tok").cast("long").alias("n_tok"),
         "cum_before",
         F.least(
             F.floor(F.col("cum_before") / target).cast("int"),
@@ -150,10 +141,10 @@ def shard_balance(
     )
     ws = Window.partitionBy("shard")
     return assigned.select(
-        id_col,
-        ntok_col,
+        "doc_id",
+        "n_tok",
         "cum_before",
         "shard",
-        F.sum(ntok_col).over(ws).cast("long").alias("shard_tokens"),
+        F.sum("n_tok").over(ws).cast("long").alias("shard_tokens"),
         F.count("*").over(ws).cast("long").alias("shard_docs"),
     )

@@ -16,35 +16,30 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def tempo_estimate(
-    onsets: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    frames_per_unit: float = 1.0,
-) -> DataFrame:
+def tempo_estimate(onsets: DataFrame) -> DataFrame:
     """Dominant inter-onset interval per key (tempo_estimation.go:
     51-76 histogram method): IOI = diff of consecutive onset
     positions; dominant = most frequent IOI (ties -> smallest IOI).
 
-    Output: key, n_onsets, dominant_ioi, tempo (events per unit =
+    Output: doc_id, n_onsets, dominant_ioi, tempo (events per unit =
     frames_per_unit / dominant_ioi), onset_density."""
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
-    ioi = (F.col(order) - F.lag(order).over(w)).alias("ioi")
-    i = onsets.select(key, order).withColumn("ioi", ioi).where(
+    frames_per_unit = 1.0
+    w = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
+    ioi = (F.col("frame_idx") - F.lag("frame_idx").over(w)).alias("ioi")
+    i = onsets.select("doc_id", "frame_idx").withColumn("ioi", ioi).where(
         F.col("ioi").isNotNull()
     )
-    hist = i.groupBy(key, "ioi").agg(F.count("*").alias("c"))
-    dom = hist.groupBy(key).agg(
+    hist = i.groupBy("doc_id", "ioi").agg(F.count("*").alias("c"))
+    dom = hist.groupBy("doc_id").agg(
         F.max(F.struct(F.col("c"), (-F.col("ioi")).alias("nioi"))).alias("__s")
-    ).select(key, (-F.col("__s.nioi")).alias("dominant_ioi"))
-    span = onsets.groupBy(key).agg(
+    ).select("doc_id", (-F.col("__s.nioi")).alias("dominant_ioi"))
+    span = onsets.groupBy("doc_id").agg(
         F.count("*").alias("n_onsets"),
-        (F.max(order) - F.min(order)).alias("__span"),
+        (F.max("frame_idx") - F.min("frame_idx")).alias("__span"),
     )
-    out = span.join(dom, key, "left")
+    out = span.join(dom, "doc_id", "left")
     return out.select(
-        key,
+        "doc_id",
         "n_onsets",
         "dominant_ioi",
         F.when(
@@ -61,9 +56,6 @@ def attack_decay(
     features: DataFrame,
     peaks: DataFrame,
     *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    signal: str = "rms_energy",
     lookback: int = 10,
     level: float = 0.5,
 ) -> DataFrame:
@@ -76,51 +68,36 @@ def attack_decay(
 
     Implemented with collect_list over a bounded row window + array
     higher-order functions — one shuffle, no Python."""
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
-    ctx = features.select(key, order, signal).withColumn(
-        "__back",
-        F.collect_list(F.struct(F.col(order).alias("o"), F.col(signal).alias("v"))).over(
-            w.rowsBetween(-lookback, -1)
-        ),
-    ).withColumn(
-        "__fwd",
-        F.collect_list(F.struct(F.col(order).alias("o"), F.col(signal).alias("v"))).over(
-            w.rowsBetween(1, lookback)
-        ),
-    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
+    ov = F.struct(F.col("frame_idx").alias("o"), F.col("rms_energy").alias("v"))
+    ctx = features.select("doc_id", "frame_idx", "rms_energy").withColumn(
+        "__back", F.collect_list(ov).over(w.rowsBetween(-lookback, -1))
+    ).withColumn("__fwd", F.collect_list(ov).over(w.rowsBetween(1, lookback)))
     p = peaks.select(
-        F.col(key), F.col(order), F.col(signal).alias("__peak_v")
+        F.col("doc_id"), F.col("frame_idx"), F.col("rms_energy").alias("__peak_v")
     )
-    j = p.join(ctx, [key, order])
+    j = p.join(ctx, ["doc_id", "frame_idx"])
     thr = F.col("__peak_v") * level
     below_back = F.filter(F.col("__back"), lambda s: s["v"] <= thr)
     below_fwd = F.filter(F.col("__fwd"), lambda s: s["v"] <= thr)
     attack = F.when(
         F.size(below_back) > 0,
-        F.col(order) - F.element_at(below_back, -1)["o"],
+        F.col("frame_idx") - F.element_at(below_back, -1)["o"],
     )
     decay = F.when(
         F.size(below_fwd) > 0,
-        F.element_at(below_fwd, 1)["o"] - F.col(order),
+        F.element_at(below_fwd, 1)["o"] - F.col("frame_idx"),
     )
     return j.select(
-        key,
-        order,
+        "doc_id",
+        "frame_idx",
         F.col("__peak_v").alias("peak_value"),
         attack.alias("attack_frames"),
         decay.alias("decay_frames"),
     )
 
 
-def hnr(
-    vals: DataFrame,
-    expected: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-    lag_col: str = "L",
-) -> DataFrame:
+def hnr(vals: DataFrame, expected: DataFrame) -> DataFrame:
     """Harmonic-to-noise ratio (voice_quality.go:232-296):
     autocorrelation acf[lag] = mean(v[i] v[i+lag]) over the series,
     peak searched in lag within +-25% (integer L/4) of the expected
@@ -131,63 +108,54 @@ def hnr(
     Relational: one tiny per-doc lag table exploded from the expected
     lag, a positional self-join for the lagged products, two
     aggregations — no per-sample Python."""
-    base = vals.groupBy(key).agg(
+    base = vals.groupBy("doc_id").agg(
         F.count("*").alias("__n"),
-        (F.sum(F.col(val) * F.col(val)) / F.count("*")).alias("__acf0"),
+        (F.sum(F.col("v") * F.col("v")) / F.count("*")).alias("__acf0"),
     )
-    e = expected.join(base, key)
-    ok = e.where(F.col(lag_col) <= F.col("__n") - 1)
-    sr = F.floor(F.col(lag_col) / 4)
+    e = expected.join(base, "doc_id")
+    ok = e.where(F.col("L") <= F.col("__n") - 1)
+    sr = F.floor(F.col("L") / 4)
     lags = ok.select(
-        key,
+        "doc_id",
         "__acf0",
         F.explode(
             F.sequence(
-                F.greatest(F.lit(1).cast("long"), F.col(lag_col) - sr),
-                F.least(F.col("__n") - 1, F.col(lag_col) + sr),
+                F.greatest(F.lit(1).cast("long"), F.col("L") - sr),
+                F.least(F.col("__n") - 1, F.col("L") + sr),
             )
         ).alias("__lag"),
     )
-    a = vals.select(key, F.col(pos).alias("__pa"), F.col(val).alias("__va"))
-    b = vals.select(key, F.col(pos).alias("__pb"), F.col(val).alias("__vb"))
+    a = vals.select("doc_id", F.col("pos").alias("__pa"), F.col("v").alias("__va"))
+    b = vals.select("doc_id", F.col("pos").alias("__pb"), F.col("v").alias("__vb"))
     prod = (
-        lags.join(a, key)
+        lags.join(a, "doc_id")
         .join(
-            b.withColumnRenamed(key, "__kb"),
-            (F.col("__kb") == F.col(key))
+            b.withColumnRenamed("doc_id", "__kb"),
+            (F.col("__kb") == F.col("doc_id"))
             & (F.col("__pb") == F.col("__pa") + F.col("__lag")),
         )
         .drop("__kb")
     )
-    acf = prod.groupBy(key, "__acf0", "__lag").agg(
+    acf = prod.groupBy("doc_id", "__acf0", "__lag").agg(
         F.avg(F.col("__va") * F.col("__vb")).alias("__acf")
     )
-    agg = acf.groupBy(key, "__acf0").agg(
+    agg = acf.groupBy("doc_id", "__acf0").agg(
         F.greatest(F.max("__acf"), F.lit(0.0)).alias("__max")
     )
     h = F.when(
         (F.col("__max") > 0) & (F.col("__max") < F.col("__acf0")),
         10.0 * F.log10(F.col("__max") / (F.col("__acf0") - F.col("__max"))),
     ).otherwise(F.lit(0.0))
-    found = agg.select(key, h.alias("hnr_db"))
+    found = agg.select("doc_id", h.alias("hnr_db"))
     # docs filtered out (L > n-1, or no positive-range lags) -> 0.0
     return (
-        expected.select(key)
-        .join(found, key, "left")
-        .select(key, F.coalesce("hnr_db", F.lit(0.0)).alias("hnr_db"))
+        expected.select("doc_id")
+        .join(found, "doc_id", "left")
+        .select("doc_id", F.coalesce("hnr_db", F.lit(0.0)).alias("hnr_db"))
     )
 
 
-def estimate_fundamental(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-    sample_rate: float = 1.0,
-    min_f0: float = 1.0 / 32.0,
-    max_f0: float = 1.0 / 4.0,
-) -> DataFrame:
+def estimate_fundamental(vals: DataFrame) -> DataFrame:
     """F0 estimation by autocorrelation
     (fundamental_estimation.go:30-57 + :148-173 + :219-236): acf[lag]
     = mean lagged product for lag in [int(sr/maxF0),
@@ -198,35 +166,38 @@ def estimate_fundamental(
 
     Token analog: sample_rate = 1 tick/token, F0 range [1/32, 1/4]
     cycles/token -> lags 4..32."""
+    sample_rate = 1.0
+    min_f0 = 1.0 / 32.0
+    max_f0 = 1.0 / 4.0
     min_lag = max(int(sample_rate / max_f0), 1)
     max_lag_cfg = int(sample_rate / min_f0)
-    base = vals.groupBy(key).agg(F.count("*").alias("__n"))
+    base = vals.groupBy("doc_id").agg(F.count("*").alias("__n"))
     # acf computed for [min_lag - 1, min(max_lag, n-1)] so the
     # local-max check has both neighbors where the reference does
     lag_hi = F.least(F.lit(max_lag_cfg), F.col("__n") - 1)
     lags = base.where(lag_hi >= min_lag).select(
-        key,
+        "doc_id",
         F.explode(
             F.sequence(F.lit(max(min_lag - 1, 0)).cast("long"), lag_hi)
         ).alias("__lag"),
     )
-    a = vals.select(key, F.col(pos).alias("__pa"), F.col(val).alias("__va"))
+    a = vals.select("doc_id", F.col("pos").alias("__pa"), F.col("v").alias("__va"))
     b = vals.select(
-        F.col(key).alias("__kb"),
-        F.col(pos).alias("__pb"),
-        F.col(val).alias("__vb"),
+        F.col("doc_id").alias("__kb"),
+        F.col("pos").alias("__pb"),
+        F.col("v").alias("__vb"),
     )
     acf = (
-        lags.join(a, key)
+        lags.join(a, "doc_id")
         .join(
             b,
-            (F.col("__kb") == F.col(key))
+            (F.col("__kb") == F.col("doc_id"))
             & (F.col("__pb") == F.col("__pa") + F.col("__lag")),
         )
-        .groupBy(key, "__lag")
+        .groupBy("doc_id", "__lag")
         .agg(F.avg(F.col("__va") * F.col("__vb")).alias("__acf"))
     )
-    w = Window.partitionBy(key).orderBy("__lag")
+    w = Window.partitionBy("doc_id").orderBy("__lag")
     nb = acf.withColumn("__p", F.lag("__acf").over(w)).withColumn(
         "__x", F.lead("__acf").over(w)
     )
@@ -240,33 +211,23 @@ def estimate_fundamental(
     from .topk import topk_per_group
 
     best = topk_per_group(
-        peaks.select(key, "__lag", "__acf"),
-        key,
+        peaks.select("doc_id", "__lag", "__acf"),
+        "doc_id",
         [F.col("__acf").desc(), F.col("__lag").asc()],
         1,
     )
     f0 = best.select(
-        key, (F.lit(float(sample_rate)) / F.col("__lag")).alias("f0")
+        "doc_id", (F.lit(float(sample_rate)) / F.col("__lag")).alias("f0")
     )
     return (
-        vals.select(key)
+        vals.select("doc_id")
         .distinct()
-        .join(f0, key, "left")
-        .select(key, F.coalesce("f0", F.lit(0.0)).alias("f0"))
+        .join(f0, "doc_id", "left")
+        .select("doc_id", F.coalesce("f0", F.lit(0.0)).alias("f0"))
     )
 
 
-def estimate_yin(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-    sample_rate: float = 1.0,
-    min_f0: float = 1.0 / 32.0,
-    max_f0: float = 1.0 / 4.0,
-    threshold: float = 0.15,
-) -> DataFrame:
+def estimate_yin(vals: DataFrame) -> DataFrame:
     """Simplified YIN F0 (fundamental_estimation.go:60-96 + the
     difference function :176-196, CMNDF :198-217 and parabolic
     interpolation :238-258): diff[lag] = mean squared lagged
@@ -276,32 +237,36 @@ def estimate_yin(
     over cmndf (un-refined at the array edges or a ~0 denominator);
     candidates whose refined lag is <= 0 are skipped exactly like the
     reference's continue-scan; f0 = sr / refined lag, 0 when none."""
+    sample_rate = 1.0
+    min_f0 = 1.0 / 32.0
+    max_f0 = 1.0 / 4.0
+    threshold = 0.15
     min_lag = max(int(sample_rate / max_f0), 1)
     max_lag_cfg = int(sample_rate / min_f0)
-    base = vals.groupBy(key).agg(F.count("*").alias("__n"))
+    base = vals.groupBy("doc_id").agg(F.count("*").alias("__n"))
     lag_hi = F.least(
         F.lit(max_lag_cfg).cast("long"),
         F.floor(F.col("__n") / 2).cast("long") - 1,
     )
     lags = base.where(lag_hi >= 1).select(
-        key,
+        "doc_id",
         lag_hi.alias("__hi"),
         F.explode(F.sequence(F.lit(1).cast("long"), lag_hi)).alias("__lag"),
     )
-    a = vals.select(key, F.col(pos).alias("__pa"), F.col(val).alias("__va"))
+    a = vals.select("doc_id", F.col("pos").alias("__pa"), F.col("v").alias("__va"))
     b = vals.select(
-        F.col(key).alias("__kb"),
-        F.col(pos).alias("__pb"),
-        F.col(val).alias("__vb"),
+        F.col("doc_id").alias("__kb"),
+        F.col("pos").alias("__pb"),
+        F.col("v").alias("__vb"),
     )
     diff = (
-        lags.join(a, key)
+        lags.join(a, "doc_id")
         .join(
             b,
-            (F.col("__kb") == F.col(key))
+            (F.col("__kb") == F.col("doc_id"))
             & (F.col("__pb") == F.col("__pa") + F.col("__lag")),
         )
-        .groupBy(key, "__hi", "__lag")
+        .groupBy("doc_id", "__hi", "__lag")
         .agg(
             F.avg(
                 (F.col("__va") - F.col("__vb"))
@@ -309,7 +274,7 @@ def estimate_yin(
             ).alias("__d")
         )
     )
-    w = Window.partitionBy(key).orderBy("__lag")
+    w = Window.partitionBy("doc_id").orderBy("__lag")
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     c = diff.withColumn("__cum", F.sum("__d").over(wc)).withColumn(
         "__cmndf",
@@ -337,30 +302,44 @@ def estimate_yin(
     from .topk import topk_per_group
 
     best = topk_per_group(
-        cand.select(key, "__lag", "__interp"),
-        key,
+        cand.select("doc_id", "__lag", "__interp"),
+        "doc_id",
         [F.col("__lag").asc()],
         1,
     )
     f0 = best.select(
-        key, (F.lit(float(sample_rate)) / F.col("__interp")).alias("f0")
+        "doc_id", (F.lit(float(sample_rate)) / F.col("__interp")).alias("f0")
     )
     return (
-        vals.select(key)
+        vals.select("doc_id")
         .distinct()
-        .join(f0, key, "left")
-        .select(key, F.coalesce("f0", F.lit(0.0)).alias("f0"))
+        .join(f0, "doc_id", "left")
+        .select("doc_id", F.coalesce("f0", F.lit(0.0)).alias("f0"))
     )
 
 
-def voice_quality(
-    feats: DataFrame,
-    onsets: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    signal: str = "rms_energy",
-) -> DataFrame:
+def _onset_periods(feats: DataFrame, onsets: DataFrame) -> DataFrame:
+    """(doc_id, __period, plen, amp): each onset (doc_id, frame_idx)
+    starts a period (a running onset count over the frames, in frame
+    order); per period, its length in frames and its amplitude
+    sqrt(mean(rms_energy^2)).  Frames before the first onset belong
+    to no period."""
+    marks = onsets.select("doc_id", "frame_idx", F.lit(1).alias("__is_onset"))
+    w = Window.partitionBy("doc_id").orderBy("frame_idx")
+    f = feats.join(marks, ["doc_id", "frame_idx"], "left").withColumn(
+        "__period", F.sum(F.coalesce(F.col("__is_onset"), F.lit(0))).over(w)
+    )
+    return (
+        f.where(F.col("__period") >= 1)
+        .groupBy("doc_id", "__period")
+        .agg(
+            F.count("*").cast("double").alias("plen"),
+            F.sqrt(F.avg(F.col("rms_energy") * F.col("rms_energy"))).alias("amp"),
+        )
+    )
+
+
+def voice_quality(feats: DataFrame, onsets: DataFrame) -> DataFrame:
     """Jitter + shimmer (speech/voice_quality.go:160-231) over
     onset-delimited periods: each onset starts a period; period
     length = frame count, period amplitude = sqrt(mean(signal^2));
@@ -371,26 +350,11 @@ def voice_quality(
     periods, one aggregation per period, one per-doc aggregation —
     the '[window funcs after pitch UDF]' mapping SURVEY §2.13 calls
     for, with onsets standing in for pitch periods."""
-    marks = onsets.select(
-        key, F.col(order).alias(order), F.lit(1).alias("__is_onset")
-    )
-    w = Window.partitionBy(key).orderBy(order)
-    f = feats.join(marks, [key, order], "left").withColumn(
-        "__period", F.sum(F.coalesce(F.col("__is_onset"), F.lit(0))).over(w)
-    )
-    per_period = (
-        f.where(F.col("__period") >= 1)
-        .groupBy(key, "__period")
-        .agg(
-            F.count("*").cast("double").alias("plen"),
-            F.sqrt(F.avg(F.col(signal) * F.col(signal))).alias("amp"),
-        )
-    )
-    wp = Window.partitionBy(key).orderBy("__period")
-    d = per_period.withColumn(
+    wp = Window.partitionBy("doc_id").orderBy("__period")
+    d = _onset_periods(feats, onsets).withColumn(
         "dlen", F.abs(F.col("plen") - F.lag("plen").over(wp))
     ).withColumn("damp", F.abs(F.col("amp") - F.lag("amp").over(wp)))
-    agg = d.groupBy(key).agg(
+    agg = d.groupBy("doc_id").agg(
         F.count("*").alias("n_periods"),
         F.avg("plen").alias("mean_len"),
         F.avg("amp").alias("mean_amp"),
@@ -407,7 +371,7 @@ def voice_quality(
         (F.col("sum_damp") / (n - 1.0)) / F.col("mean_amp") * 100.0,
     ).otherwise(F.lit(0.0))
     return agg.select(
-        key,
+        "doc_id",
         "n_periods",
         jitter.alias("jitter_pct"),
         shimmer.alias("shimmer_pct"),
@@ -420,7 +384,6 @@ def envelope_hilbert(
     key: str = "doc_id",
     order: str = "frame_idx",
     signal: str = "rms_energy",
-    out_col: str = "envelope",
 ) -> DataFrame:
     """Hilbert-approximation envelope (envelope.go:76-103): imaginary
     part approximated by the central difference ((x[i+1]-x[i-1])/2,
@@ -437,7 +400,7 @@ def envelope_hilbert(
         .when(nxt.isNull(), v - prv)
         .otherwise((nxt - prv) / 2.0)
     )
-    return df.withColumn(out_col, F.sqrt(v * v + imag * imag))
+    return df.withColumn("envelope", F.sqrt(v * v + imag * imag))
 
 
 # NSDF pitch detection on the token-length series: the reference's
@@ -453,13 +416,7 @@ _BOOST_BAND = (0.8, 3.2)
 _KEEP_BAND = (0.4, 4.0)
 
 
-def pitch_nsdf(
-    vals: DataFrame,
-    *,
-    key: str = "doc_id",
-    pos: str = "pos",
-    val: str = "v",
-) -> DataFrame:
+def pitch_nsdf(vals: DataFrame) -> DataFrame:
     """NSDF (McLeod-style) pitch detection
     (tonal/pitch_detection.go:485-553 + postProcessResult :767-875):
 
@@ -480,30 +437,30 @@ def pitch_nsdf(
 
     All sums are exact integer arithmetic on the token-length
     series, so both engines agree on every comparison without
-    rounding.  Output: key, pitch, confidence, clarity, strength,
+    rounding.  Output: doc_id, pitch, confidence, clarity, strength,
     salience."""
     d = vals.select(
-        key, F.col(pos).alias("__p"), F.col(val).cast("double").alias("__v")
+        "doc_id", F.col("pos").alias("__p"), F.col("v").cast("double").alias("__v")
     )
-    half = d.groupBy(key).agg(
+    half = d.groupBy("doc_id").agg(
         F.floor(F.count("*") / 2).cast("int").alias("__hn")
     )
-    a = d.join(F.broadcast(half), key).where(F.col("__p") < F.col("__hn"))
+    a = d.join(F.broadcast(half), "doc_id").where(F.col("__p") < F.col("__hn"))
     taus = half.withColumn(
         "tau", F.explode(F.sequence(F.lit(0), F.col("__hn") - 1))
-    ).select(F.col(key).alias("__kt"), "tau")
-    at = a.join(taus, F.col("__kt") == F.col(key)).drop("__kt")
+    ).select(F.col("doc_id").alias("__kt"), "tau")
+    at = a.join(taus, F.col("__kt") == F.col("doc_id")).drop("__kt")
     b = d.select(
-        F.col(key).alias("__kb"),
+        F.col("doc_id").alias("__kb"),
         F.col("__p").alias("__pb"),
         F.col("__v").alias("__vb"),
     )
     j = at.join(
         b,
-        (F.col("__kb") == F.col(key))
+        (F.col("__kb") == F.col("doc_id"))
         & (F.col("__pb") == F.col("__p") + F.col("tau")),
     )
-    s = j.groupBy(key, "tau").agg(
+    s = j.groupBy("doc_id", "tau").agg(
         F.sum(F.col("__v") * F.col("__vb")).alias("__acf"),
         F.sum(F.col("__v") * F.col("__v")).alias("__m1"),
         F.sum(F.col("__vb") * F.col("__vb")).alias("__m2"),
@@ -512,9 +469,9 @@ def pitch_nsdf(
         F.col("__m1") + F.col("__m2") > 0,
         2.0 * F.col("__acf") / (F.col("__m1") + F.col("__m2")),
     ).otherwise(F.lit(0.0))
-    w = Window.partitionBy(key).orderBy("tau")
-    x = s.select(key, "tau", nsdf.alias("__nd")).select(
-        key,
+    w = Window.partitionBy("doc_id").orderBy("tau")
+    x = s.select("doc_id", "tau", nsdf.alias("__nd")).select(
+        "doc_id",
         "tau",
         "__nd",
         F.lag("__nd").over(w).alias("__pv"),
@@ -528,19 +485,19 @@ def pitch_nsdf(
         & (F.col("__nd") > _AUTOCORR_THRESHOLD)
         & (freq >= _MIN_FREQ)
         & (freq <= _MAX_FREQ)
-    ).select(key, "tau", F.col("__nd").alias("__conf"), freq.alias("__f"))
+    ).select("doc_id", "tau", F.col("__nd").alias("__conf"), freq.alias("__f"))
     rn = F.row_number().over(
-        Window.partitionBy(key).orderBy(
+        Window.partitionBy("doc_id").orderBy(
             F.col("__conf").desc(), F.col("tau").asc()
         )
     )
     top2 = cand.withColumn("__rn", rn).where(F.col("__rn") <= 2)
-    agg = top2.groupBy(key).agg(
+    agg = top2.groupBy("doc_id").agg(
         F.max(F.when(F.col("__rn") == 1, F.col("__f"))).alias("__pitch"),
         F.max(F.when(F.col("__rn") == 1, F.col("__conf"))).alias("__c1"),
         F.max(F.when(F.col("__rn") == 2, F.col("__conf"))).alias("__c2"),
     )
-    base = d.select(key).distinct().join(agg, key, "left")
+    base = d.select("doc_id").distinct().join(agg, "doc_id", "left")
     conf = F.coalesce(F.col("__c1"), F.lit(0.0))
     pitch = F.coalesce(F.col("__pitch"), F.lit(0.0))
     clarity = F.when(
@@ -561,7 +518,7 @@ def pitch_nsdf(
     salience = F.least(sal2, F.lit(1.0))
     gated = conf < _MIN_CONFIDENCE
     return base.select(
-        key,
+        "doc_id",
         F.when(gated, F.lit(0.0)).otherwise(pitch).alias("pitch"),
         F.when(gated, F.lit(0.0)).otherwise(conf).alias("confidence"),
         clarity.alias("clarity"),
@@ -574,11 +531,6 @@ def voice_quality_full(
     feats: DataFrame,
     onsets: DataFrame,
     hnr_df: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    signal: str = "rms_energy",
-    period_rate: float = 8.0,
 ) -> DataFrame:
     """The full AnalyzeVoiceQuality result surface
     (voice_quality.go:56-115 + helpers :428-527): jitter/shimmer over
@@ -594,27 +546,14 @@ def voice_quality_full(
     (:66-68, the reference errors).  Variances use the explicit
     E[x^2] - mean^2 form, clamped at 0, identically on both engines
     (the Go two-pass differs only below the 6-dp rounding)."""
-    marks = onsets.select(
-        key, F.col(order).alias(order), F.lit(1).alias("__is_onset")
-    )
-    w = Window.partitionBy(key).orderBy(order)
-    f = feats.join(marks, [key, order], "left").withColumn(
-        "__period", F.sum(F.coalesce(F.col("__is_onset"), F.lit(0))).over(w)
-    )
-    pp = (
-        f.where(F.col("__period") >= 1)
-        .groupBy(key, "__period")
-        .agg(
-            F.count("*").cast("double").alias("plen"),
-            F.sqrt(F.avg(F.col(signal) * F.col(signal))).alias("amp"),
-        )
-    )
+    period_rate = 8.0
+    pp = _onset_periods(feats, onsets)
     f0v = F.lit(period_rate) / F.col("plen")
-    wp = Window.partitionBy(key).orderBy("__period")
+    wp = Window.partitionBy("doc_id").orderBy("__period")
     d = pp.withColumn(
         "dlen", F.abs(F.col("plen") - F.lag("plen").over(wp))
     ).withColumn("damp", F.abs(F.col("amp") - F.lag("amp").over(wp)))
-    agg = d.groupBy(key).agg(
+    agg = d.groupBy("doc_id").agg(
         F.count("*").alias("n_periods"),
         F.avg("plen").alias("__mean_len"),
         F.avg("amp").alias("__mean_amp"),
@@ -646,9 +585,9 @@ def voice_quality_full(
     f0_stab = stab(F.col("mean_f0"), F.col("__f0_sq"))
     amp_stab = stab(F.col("__mean_amp"), F.col("__amp_sq"))
     h = hnr_df.select(
-        F.col(key).alias("__hk"), F.col("hnr_db").alias("__hnr")
+        F.col("doc_id").alias("__hk"), F.col("hnr_db").alias("__hnr")
     )
-    j = agg.join(h, F.col("__hk") == F.col(key), "left").withColumn(
+    j = agg.join(h, F.col("__hk") == F.col("doc_id"), "left").withColumn(
         "__hnr", F.coalesce("__hnr", F.lit(0.0))
     )
     jitter_score = F.greatest(F.lit(0.0), 1.0 - jitter / 5.0)
@@ -663,7 +602,7 @@ def voice_quality_full(
         + F.least(F.lit(1.0), F.greatest(F.lit(0.0), F.col("__hnr") / 15.0))
     ) / 3.0
     return j.select(
-        key,
+        "doc_id",
         "n_periods",
         jitter.alias("jitter_pct"),
         shimmer.alias("shimmer_pct"),
@@ -783,14 +722,7 @@ class PitchTracker:
         return (p, sm, f0m, sal, st)
 
 
-def pitch_track(
-    det: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    pitch_col: str = "pitch",
-    conf_col: str = "confidence",
-) -> DataFrame:
+def pitch_track(det: DataFrame) -> DataFrame:
     """Pitch temporal post-processing over per-frame raw detections
     (see :class:`PitchTracker`).
 
@@ -802,20 +734,20 @@ def pitch_track(
     The post-processor is strictly forward (each frame depends only
     on prior state), so a doc whose rows straddle an Arrow batch
     boundary carries its history across batches in the generator
-    closure.  Output: key, frame order col, pitch_corrected, pitch
+    closure.  Output: doc_id, frame_idx, pitch_corrected, pitch
     (smoothed), f0_multiple, salience, stability."""
     inp = (
         det.select(
-            F.col(key).alias("__k"),
-            F.col(order).cast("int").alias("__f"),
-            F.col(pitch_col).cast("double").alias("__pp"),
-            F.col(conf_col).cast("double").alias("__pc"),
+            F.col("doc_id").alias("__k"),
+            F.col("frame_idx").cast("int").alias("__f"),
+            F.col("pitch").cast("double").alias("__pp"),
+            F.col("confidence").cast("double").alias("__pc"),
         )
         .repartition("__k")
         .sortWithinPartitions("__k", "__f")
     )
     out_schema = (
-        f"{key} long, {order} int, pitch_corrected double,"
+        "doc_id long, frame_idx int, pitch_corrected double,"
         " pitch double, f0_multiple double, salience double,"
         " stability double"
     )
@@ -826,7 +758,7 @@ def pitch_track(
         cur = None  # current key
         tr = PitchTracker()
         cols = [
-            key, order, "pitch_corrected", "pitch",
+            "doc_id", "frame_idx", "pitch_corrected", "pitch",
             "f0_multiple", "salience", "stability",
         ]
         for pdf in batches:
@@ -853,12 +785,7 @@ _WINDOW, _HOP = 32, 4
 _CHUNK = 8192
 
 
-def pitch_nsdf_tokens(
-    toks: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-) -> DataFrame:
+def pitch_nsdf_tokens(toks: DataFrame) -> DataFrame:
     """Per-frame NSDF raw detection (pitch_detection.go:485-550)
     straight off the TOKEN table — the vectorized form of
     :func:`pitch_nsdf` for frame streams (the frame_features_flat
@@ -879,7 +806,7 @@ def pitch_nsdf_tokens(
     Best candidate per frame = strict interior local maximum above
     the threshold inside the frequency band, highest nsdf first and
     smallest lag on ties (argmax returns the first maximum).  Output:
-    id_col, frame_idx, pitch, confidence (ungated; the stream
+    doc_id, frame_idx, pitch, confidence (ungated; the stream
     post-processor applies the MinConfidence gate after octave
     correction)."""
     import numpy as np
@@ -893,7 +820,7 @@ def pitch_nsdf_tokens(
         if _MIN_FREQ <= _SAMPLE_RATE / i <= _MAX_FREQ
     ]
     out_schema = (
-        f"{id_col} long, frame_idx long, pitch double,"
+        "doc_id long, frame_idx long, pitch double,"
         " confidence double"
     )
 
@@ -903,9 +830,9 @@ def pitch_nsdf_tokens(
 
         idxW = np.arange(_WINDOW)
         for batch in batches:
-            ids = batch.column(batch.schema.get_field_index(id_col))
+            ids = batch.column(batch.schema.get_field_index("doc_id"))
             tok = batch.column(
-                batch.schema.get_field_index(tokens_col)
+                batch.schema.get_field_index("tokens")
             )
             lens = pc.list_value_length(tok).to_numpy().astype(
                 np.int64
@@ -968,9 +895,9 @@ def pitch_nsdf_tokens(
                     pa.array(pitch),
                     pa.array(conf),
                 ],
-                names=[id_col, "frame_idx", "pitch", "confidence"],
+                names=["doc_id", "frame_idx", "pitch", "confidence"],
             )
 
-    return toks.select(id_col, tokens_col).mapInArrow(
+    return toks.select("doc_id", "tokens").mapInArrow(
         gen, schema=out_schema
     )

@@ -72,13 +72,7 @@ def chord_template_rows() -> list[tuple[str, int, int, float, float]]:
     return rows
 
 
-def detect_chords(
-    chroma: DataFrame,
-    group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-) -> DataFrame:
+def detect_chords(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     """Chord detection by template matching
     (chord_detection.go:586-733): score(quality, root) = weight *
     dot(chroma, rotated binary pattern), best per group (ties ->
@@ -93,10 +87,10 @@ def detect_chords(
         chord_template_rows(),
         "quality string, root int, pc int, tv double, weight double",
     )
-    j = chroma.join(F.broadcast(tpl), F.col(class_col) == F.col("pc"))
+    j = chroma.join(F.broadcast(tpl), F.col("pitch_class") == F.col("pc"))
     s = j.groupBy(*group_cols, "quality", "root").agg(
         (
-            F.sum(F.col(value_col).cast("double") * F.col("tv"))
+            F.sum(F.col("hpcp").cast("double") * F.col("tv"))
             * F.max("weight")
         ).alias("score")
     )
@@ -114,22 +108,14 @@ def detect_chords(
     )
 
 
-def estimate_key(
-    chroma: DataFrame,
-    group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-) -> DataFrame:
+def estimate_key(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     """chroma: one row per (group..., pitch_class 0..11, value).
     Output: group cols + key (0..11), mode, confidence (the Pearson r
     of the winning template; 0 on zero-variance input, the
     PearsonCorrelationFunc convention). Ties break deterministically
     (confidence desc, mode asc, key asc) — the reference's unstable
     sort leaves ties unspecified."""
-    scored = key_scores(
-        chroma, group_cols, class_col=class_col, value_col=value_col
-    )
+    scored = key_scores(chroma, group_cols)
     best = topk_per_group(
         scored,
         group_cols,
@@ -140,13 +126,7 @@ def estimate_key(
     return best.drop("rank")
 
 
-def key_scores(
-    chroma: DataFrame,
-    group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-) -> DataFrame:
+def key_scores(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     """All 24 per-template Pearson correlations (the
     correlationScores table of estimateKeyProfile,
     key_estimation.go:300-371).  Output: group cols + key, mode,
@@ -156,9 +136,9 @@ def key_scores(
         key_template_rows(), "key int, mode string, pc int, tv double"
     )
     j = chroma.join(
-        F.broadcast(tpl), F.col(class_col) == F.col("pc")
+        F.broadcast(tpl), F.col("pitch_class") == F.col("pc")
     )
-    x = F.col(value_col).cast("double")
+    x = F.col("hpcp").cast("double")
     y = F.col("tv")
     s = j.groupBy(*group_cols, "key", "mode").agg(
         F.count("*").cast("double").alias("n"),
@@ -177,13 +157,7 @@ def key_scores(
     return s.select(*group_cols, "key", "mode", r.alias("confidence"))
 
 
-def key_estimation_full(
-    chroma: DataFrame,
-    group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-) -> DataFrame:
+def key_estimation_full(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     """Key estimation with the clarity/ambiguity quality metrics
     (key_estimation.go:300-371 + calculateClarity :517-533 +
     calculateAmbiguity :535-558): clarity = (best - second)/best over
@@ -192,9 +166,7 @@ def key_estimation_full(
     aggregation over the score table; ties as in estimate_key."""
     import math as _m
 
-    scored = key_scores(
-        chroma, group_cols, class_col=class_col, value_col=value_col
-    )
+    scored = key_scores(chroma, group_cols)
     rk = F.row_number().over(
         Window.partitionBy(*group_cols).orderBy(
             F.col("confidence").desc(), F.col("mode").asc(),
@@ -264,12 +236,7 @@ def chord_inversion_rows() -> list[tuple[str, int, int, int, float]]:
     return rows
 
 
-def bass_from_f0(
-    f0: DataFrame,
-    group_cols: list[str],
-    *,
-    f0_col: str = "f0_bin",
-) -> DataFrame:
+def bass_from_f0(f0: DataFrame, group_cols: list[str]) -> DataFrame:
     """Bass-note analog of detectBassNote (chord_detection.go:565-584):
     the reference low-pass pitch-detects and maps the pitch to a
     chroma class via frequencyToChroma (:928-943, MIDI truncation).
@@ -279,7 +246,7 @@ def bass_from_f0(
     1.0 whenever a fundamental exists (the HPS found a positive
     product) else 0.0 — mirroring the <0.3-confidence and
     out-of-range rejections that both return (0, 0.0)."""
-    f = F.col(f0_col).cast("double")
+    f = F.col("f0_bin").cast("double")
     return f0.select(
         *group_cols,
         F.when(
@@ -297,11 +264,6 @@ def detect_chords_full(
     chroma: DataFrame,
     bass: DataFrame,
     group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
-    min_strength: float = 0.2,
-    bass_weight: float = 0.3,
 ) -> DataFrame:
     """The reference's DEFAULT chord-detection path
     (chord_detection.go:586-642 templateMatching with
@@ -333,6 +295,8 @@ def detect_chords_full(
 
     Output: group cols + chord_root, chord_quality, inversion,
     bass_pc, confidence, strength."""
+    min_strength = 0.2
+    bass_weight = 0.3
     spark = chroma.sparkSession
     tpl = spark.createDataFrame(
         chord_template_rows(),
@@ -353,26 +317,26 @@ def detect_chords_full(
         e = F.col(f"__b_{c}") == F.col(c)
         bcond = e if bcond is None else (bcond & e)
     cb = chroma.join(b, bcond).drop(*[f"__b_{c}" for c in group_cols])
-    j = cb.join(F.broadcast(tpl), F.col(class_col) == F.col("pc"))
+    j = cb.join(F.broadcast(tpl), F.col("pitch_class") == F.col("pc"))
     # ONE aggregation: weighted dot, chroma value at the bass class,
     # and whether the bass class is a chord tone of (quality, root)
     s = j.groupBy(
         *group_cols, "quality", "root", "bass_pc", "bass_conf"
     ).agg(
         (
-            F.sum(F.col(value_col).cast("double") * F.col("tv"))
+            F.sum(F.col("hpcp").cast("double") * F.col("tv"))
             * F.max("weight")
         ).alias("score_raw"),
         F.max("weight").alias("weight"),
         F.max(
             F.when(
-                F.col(class_col) == F.col("bass_pc"),
-                F.col(value_col).cast("double"),
+                F.col("pitch_class") == F.col("bass_pc"),
+                F.col("hpcp").cast("double"),
             )
         ).alias("__c_bass"),
         F.max(
             F.when(
-                (F.col(class_col) == F.col("bass_pc"))
+                (F.col("pitch_class") == F.col("bass_pc"))
                 & (F.col("tv") == 1.0),
                 1,
             ).otherwise(0)
@@ -492,9 +456,6 @@ def chord_analysis(
     best: DataFrame,
     chroma: DataFrame,
     group_cols: list[str],
-    *,
-    class_col: str = "pitch_class",
-    value_col: str = "hpcp",
 ) -> DataFrame:
     """Chord quality metrics + extension analysis — the remaining
     default-path steps of DetectChord (chord_detection.go:808-896):
@@ -523,8 +484,8 @@ def chord_analysis(
         *[
             F.max(
                 F.when(
-                    F.col(class_col) == i,
-                    F.col(value_col).cast("double"),
+                    F.col("pitch_class") == i,
+                    F.col("hpcp").cast("double"),
                 )
             ).alias(f"__cv{i}")
             for i in range(12)

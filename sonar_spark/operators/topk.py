@@ -22,15 +22,14 @@ def topk_per_group(
     group: str | list[str],
     order: list[Column],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """row_number() <= k per group with a deterministic total order
     (caller must include a tie-break column in ``order``)."""
     groups = [group] if isinstance(group, str) else list(group)
     w = Window.partitionBy(*groups).orderBy(*order)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .where(F.col(rank_col) <= k)
+        df.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
     )
 
 
@@ -38,12 +37,7 @@ def knn_bruteforce(
     queries: DataFrame,
     catalog: DataFrame,
     *,
-    query_id: str = "vec_id",
-    catalog_id: str = "vec_id",
-    query_vec: str = "embedding",
-    catalog_vec: str = "embedding",
     k: int = 5,
-    broadcast_catalog: bool = True,
 ) -> DataFrame:
     """Brute-force cosine top-k: query x catalog, excluding self.
 
@@ -52,14 +46,12 @@ def knn_bruteforce(
     top-k window). This is the exact baseline the LSH path
     approximates (SURVEY §2.6 NearestNeighbors)."""
     q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
     c = catalog.select(
-        F.col(catalog_id).alias("neighbor_id"), F.col(catalog_vec).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv")
     )
-    if broadcast_catalog:
-        c = F.broadcast(c)
-    pairs = q.join(c, F.col("query_id") != F.col("neighbor_id"))
+    pairs = q.join(F.broadcast(c), F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.withColumn(
         "cosine_sim", cosine_similarity(F.col("__qv"), F.col("__cv"))
     ).drop("__qv", "__cv")

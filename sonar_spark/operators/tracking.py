@@ -96,26 +96,19 @@ def track_peaks_sequence(frames: list[tuple[int, list[tuple[float, float]]]]):
     ]
 
 
-def harmonic_tracks(
-    peaks: DataFrame,
-    *,
-    key: str = "doc_id",
-    frame_col: str = "frame_idx",
-    freq_col: str = "refined_freq",
-    mag_col: str = "refined_mag",
-) -> DataFrame:
+def harmonic_tracks(peaks: DataFrame) -> DataFrame:
     """Per-key harmonic tracks from a spectral-peak table.  Output:
-    key, track_id, frame_idx, freq, mag, point_idx."""
+    doc_id, track_id, frame_idx, freq, mag, point_idx."""
     from pyspark.sql import functions as F
 
     inp = peaks.select(
-        F.col(key).alias("__k"),
-        F.col(frame_col).alias("__f").cast("int"),
-        F.round(F.col(freq_col), 6).alias("__pf"),
-        F.round(F.col(mag_col), 6).alias("__pm"),
+        F.col("doc_id").alias("__k"),
+        F.col("frame_idx").alias("__f").cast("int"),
+        F.round(F.col("refined_freq"), 6).alias("__pf"),
+        F.round(F.col("refined_mag"), 6).alias("__pm"),
     )
     out_schema = (
-        f"{key} long, track_id int, frame_idx int, freq double,"
+        "doc_id long, track_id int, frame_idx int, freq double,"
         " mag double, point_idx int"
     )
 
@@ -136,7 +129,7 @@ def harmonic_tracks(
                 rows.append((k, tid, f, pf, pm, idx))
         return pd.DataFrame(
             rows,
-            columns=[key, "track_id", "frame_idx", "freq", "mag", "point_idx"],
+            columns=["doc_id", "track_id", "frame_idx", "freq", "mag", "point_idx"],
         )
 
     return inp.groupBy("__k").applyInPandas(run, schema=out_schema)

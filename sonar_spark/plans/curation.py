@@ -130,14 +130,11 @@ class CurationJob:
         out_dir: str,
         n_buckets: int = 16,
         policy: CurationPolicy = CurationPolicy(),
-        minhash_cfg: MinHashConfig = MinHashConfig(
-            num_hashes=64, bands=32
-        ),
     ):
         self.out_dir = out_dir
         self.n_buckets = n_buckets
         self.policy = policy
-        self.minhash_cfg = minhash_cfg
+        self.minhash_cfg = MinHashConfig(num_hashes=64, bands=32)
         self.labels_dir = os.path.join(out_dir, "labels")
         self.decisions_dir = os.path.join(out_dir, "decisions")
         self.chunks_dir = os.path.join(out_dir, "chunks")

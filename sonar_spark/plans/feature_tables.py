@@ -55,10 +55,9 @@ def frame_rms(
     spark: SparkSession,
     sf_dir: str,
     store: FeatureStore | None = None,
-    W: int = 16,
-    H: int = 4,
 ) -> DataFrame:
-    """Per-frame (rms_energy, flux) — 10 queries consume this."""
+    """Per-frame (rms_energy, flux) at W=16, H=4 — 10 queries consume
+    this."""
 
     def build() -> DataFrame:
         from ..config import FeatureConfig
@@ -67,7 +66,7 @@ def frame_rms(
         # them (the Enable* flags ARE column pruning for mapInArrow)
         feats = frame_features_arrow(
             to_token_length_table(_docs(spark, sf_dir)),
-            FrameConfig(window=W, hop=H),
+            FrameConfig(window=16, hop=4),
             FeatureConfig(
                 enable_moments=False, enable_percentiles=False,
                 enable_entropy=False, enable_zcr=False,
@@ -79,7 +78,7 @@ def frame_rms(
             "frame_idx", "rms_energy", "flux",
         )
 
-    return _get(store, f"frame_rms_w{W}h{H}", build)
+    return _get(store, "frame_rms_w16h4", build)
 
 
 def lpc_coeffs(

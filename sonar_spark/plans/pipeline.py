@@ -248,12 +248,10 @@ class FeaturizeJob:
         out_dir: str,
         n_buckets: int = 16,
         frame_cfg: FrameConfig = FrameConfig(),
-        feat_cfg: FeatureConfig = FeatureConfig(),
     ):
         self.out_dir = out_dir
         self.n_buckets = n_buckets
         self.frame_cfg = frame_cfg
-        self.feat_cfg = feat_cfg
         self.log = LineageLog(os.path.join(out_dir, "_lineage"))
 
     def completed_buckets(self) -> list[int]:
@@ -280,7 +278,7 @@ class FeaturizeJob:
                 ).where(in_take)
             )
             return frame_features_arrow(
-                sel.drop("__bucket"), self.frame_cfg, self.feat_cfg
+                sel.drop("__bucket"), self.frame_cfg
             ).withColumn(
                 # bucket is a pure function of doc_id: re-derive after
                 # featurize instead of threading it through the kernel

@@ -24,10 +24,9 @@ def windowed_stats_stream(
     value: str = "value",
     group: str = "event_type",
     window: str = "1 hour",
-    slide: str | None = None,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Tumbling/sliding event-time window stats (the per-window
+    """Tumbling event-time window stats (the per-window
     statistics bundle of SURVEY §2.5 in streaming form).
 
     Output: window_start, window_end, <group>, n_events, sum/avg/min/
@@ -36,11 +35,8 @@ def windowed_stats_stream(
     df = events.withColumn(ts, F.col(ts).cast("timestamp"))
     if df.isStreaming:
         df = df.withWatermark(ts, watermark)
-    win = (
-        F.window(F.col(ts), window, slide) if slide else F.window(F.col(ts), window)
-    )
     return (
-        df.groupBy(win.alias("w"), group)
+        df.groupBy(F.window(F.col(ts), window).alias("w"), group)
         .agg(
             F.count("*").alias("n_events"),
             F.sum(value).alias("sum_value"),
@@ -66,7 +62,6 @@ def dedup_stream(
     fingerprint_col,
     *,
     ts: str = "ts",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Streaming exact deduplication: keep the first arrival per
     content fingerprint (the exact-dedup operator of
@@ -82,7 +77,7 @@ def dedup_stream(
         ts, F.col(ts).cast("timestamp")
     )
     if df.isStreaming:
-        df = df.withWatermark(ts, watermark)
+        df = df.withWatermark(ts, "2 hours")
         return df.dropDuplicatesWithinWatermark(["__fp"]).drop("__fp")
     return df.dropDuplicates(["__fp"]).drop("__fp")
 

@@ -111,7 +111,7 @@ def test_consistency_trials(spark):
         [("p0", a.tolist(), b.tolist())],
         "pair_id string, series_a array<double>, series_b array<double>",
     )
-    out = consistency_trials(df, AlignmentConfig(max_lag=32), n_trials=3).collect()
+    out = consistency_trials(df, AlignmentConfig(max_lag=32)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_trials"] == 3

@@ -71,10 +71,10 @@ def test_delay_line_matches_go(spark):
         "doc_id long, pos long, v double",
     )
     got = {
-        r["pos"]: (r["delayed"], r["di"])
+        r["pos"]: (r["delayed"], r["delayed_interp"])
         for r in delay_line_interpolated(
             delay_line(df, "v", 3, key="doc_id", order="pos"),
-            "v", 2.5, key="doc_id", order="pos", out_col="di",
+            "v", 2.5, key="doc_id", order="pos",
         ).collect()
     }
     want_d = _go_delay_line(xs, 3)

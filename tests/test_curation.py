@@ -407,7 +407,7 @@ def test_ngram_novelty_matches_python_oracle(spark):
     assert got[0]["n_novel"] >= 1
 
 
-def test_dsir_select_matches_python_oracle(spark):
+def test_dsir_select_matches_python_oracle(spark, monkeypatch):
     import hashlib
 
     docs = _corpus(11, 50)
@@ -417,12 +417,11 @@ def test_dsir_select_matches_python_oracle(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, is_target boolean, words array<string>"
     )
+    from sonar_spark.functions import dsir
     from sonar_spark.functions.dsir import dsir_scores
 
-    got = {
-        r["doc_id"]: r
-        for r in dsir_scores(df, n_select=10).collect()
-    }
+    monkeypatch.setattr(dsir, "_N_SELECT", 10)
+    got = {r["doc_id"]: r for r in dsir_scores(df).collect()}
 
     def h32(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)

@@ -213,7 +213,8 @@ def test_connected_components_chain_and_stars(spark, monkeypatch):
     """Pointer-jumping min-label propagation, on both paths: a 12-node
     path graph (worst-case diameter), a star, a triangle, and
     singletons-by-absence all collapse to min-id components; with
-    max_iter=1 the path graph cannot converge and must raise."""
+    _MAX_ITER = 1 the path graph cannot converge and must raise."""
+    from sonar_spark.operators import fingerprint
     from sonar_spark.operators.fingerprint import connected_components
 
     path = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(11)]
@@ -240,8 +241,9 @@ def test_connected_components_chain_and_stars(spark, monkeypatch):
         for t in ("t0", "t1", "t2"):
             assert got[t] == "t0", p
         assert len(got) == 12 + 4 + 3, p
+        monkeypatch.setattr(fingerprint, "_MAX_ITER", 1)
         with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
-            connected_components(path_df, max_iter=1)
+            connected_components(path_df)
 
 
 def test_connected_components_random_graphs(spark, monkeypatch):

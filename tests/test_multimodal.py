@@ -1,9 +1,8 @@
 """Multimodal plumbing: schema/batch shape, checksum gate, stub decode
-determinism, real-decode NotImplementedError."""
+determinism."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sonar_spark.operators.multimodal import media_features, synth_media_table
@@ -34,12 +33,6 @@ def test_checksum_gate(spark):
     out = {r["media_id"]: r for r in media_features(media).collect()}
     assert out["m000001"]["ok"] is False and out["m000001"]["mean"] is None
     assert out["m000000"]["ok"] is True
-
-
-def test_real_decode_raises(spark):
-    media = synth_media_table(spark, 2)
-    with pytest.raises(Exception, match="NotImplementedError|real image decode"):
-        media_features(media, decode="real").collect()
 
 
 def test_determinism(spark):

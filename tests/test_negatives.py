@@ -92,14 +92,14 @@ def test_dense_index_equals_row_number(spark):
     ).repartition(5)
     got = {
         r["doc_id"]: r["gidx"]
-        for r in global_dense_index(df, buckets=4).collect()
+        for r in global_dense_index(df).collect()
     }
     want = {d: g for g, d in enumerate(sorted(ids))}
     assert got == want
     # partition invariance
     got2 = {
         r["doc_id"]: r["gidx"]
-        for r in global_dense_index(df.repartition(1), buckets=4).collect()
+        for r in global_dense_index(df.repartition(1)).collect()
     }
     assert got2 == want
 

@@ -138,12 +138,13 @@ def test_asof_bucketed_is_jvm_only(spark):
     assert "Python" not in plan and "MapInPandas" not in plan, plan
 
 
-def test_featurize_job_forwards_feature_config(spark, tmp_path):
-    """FeaturizeJob's FeatureConfig reaches the frame kernel: the
-    opt-in bark columns land in the written parquet, and pruned
-    groups are absent."""
+def test_featurize_job_writes_the_default_feature_columns(spark, tmp_path):
+    """FeaturizeJob writes the frame kernel's default feature set
+    (FeatureConfig()): every feature_cols column lands in the written
+    parquet, and the opt-in bark columns do not."""
     from sonar_spark import datagen
     from sonar_spark.config import FeatureConfig, FrameConfig
+    from sonar_spark.operators.features import feature_cols
     from sonar_spark.plans.pipeline import FeaturizeJob
 
     toks = datagen.token_table(spark, n_docs=40, partitions=2)
@@ -151,15 +152,12 @@ def test_featurize_job_forwards_feature_config(spark, tmp_path):
         str(tmp_path / "out"),
         n_buckets=2,
         frame_cfg=FrameConfig(window=64, hop=16),
-        feat_cfg=FeatureConfig(
-            enable_bark=True, enable_mfcc=False, enable_spectral=False
-        ),
     )
     job.run(toks)
     cols = set(spark.read.parquet(str(tmp_path / "out")).columns)
-    assert any(c.startswith("bark") for c in cols)
-    assert not any(c.startswith("mfcc") for c in cols)
-    assert "rms_energy" in cols
+    assert set(feature_cols(FeatureConfig())) <= cols
+    assert any(c.startswith("mfcc") for c in cols)
+    assert not any(c.startswith("bark") for c in cols)
 
 
 def test_feature_store_write_once_and_values(spark, tmp_path):
@@ -194,7 +192,7 @@ def test_feature_store_write_once_and_values(spark, tmp_path):
     assert k1 != store_key(str(tmp_path), "v2")
 
 
-def test_store_key_follows_the_source(tmp_path):
+def test_store_key_follows_the_source(tmp_path, monkeypatch):
     """The feature store's version is a digest of the engine source: the
     same for two copies of one tree, new after a one-byte change to
     plans/feature_tables.py."""
@@ -213,7 +211,17 @@ def test_store_key_follows_the_source(tmp_path):
         shutil.copy(os.path.join(repo, "__spark_entry__.py"), t)
     tables = trees[2] / "sonar_spark" / "plans" / "feature_tables.py"
     tables.write_bytes(tables.read_bytes() + b" ")
-    a, b, c = (E._source_digest(str(t)) for t in trees)
+
+    def digest(root):
+        monkeypatch.setattr(E, "_ROOT", str(root))
+        E._source_digest.cache_clear()
+        return E._source_digest()
+
+    try:
+        a, b, c = (digest(t) for t in trees)
+    finally:
+        monkeypatch.undo()
+        E._source_digest.cache_clear()
     assert a == b
     assert a != c
 

@@ -9,6 +9,7 @@ import math
 import numpy as np
 
 import golden
+from sonar_spark.operators import percentiles
 from sonar_spark.operators.entropy import BIN_RULES, entropy_variants
 from sonar_spark.operators.percentiles import (
     PERCENTILE_METHODS,
@@ -41,7 +42,7 @@ def test_percentile_kernel_reference_arithmetic():
     ] + (h - np.floor(h)) * (s[int(np.ceil(h)) - 1] - s[int(np.floor(h)) - 1])
 
 
-def test_percentile_methods_spark_matches_kernel(spark):
+def test_percentile_methods_spark_matches_kernel(spark, monkeypatch):
     """Catalyst order-statistic implementation == numpy sort golden
     for every method x q on random groups."""
     rng = np.random.default_rng(11)
@@ -57,7 +58,8 @@ def test_percentile_methods_spark_matches_kernel(spark):
     data["t"] = vals
     rows += [("t", float(v)) for v in vals]
     df = spark.createDataFrame(rows, "g string, v double")
-    out = percentile_methods(df, "v", "g", qs=(0.25, 0.5, 0.9))
+    monkeypatch.setattr(percentiles, "_QS", (0.25, 0.5, 0.9))
+    out = percentile_methods(df, "v", "g")
     for r in out.collect():
         want = golden.percentile_method(data[r["g"]], r["q"], r["method"])
         assert np.isclose(r["value"], want, rtol=1e-12), (

@@ -18,6 +18,14 @@
   or by position, somewhere outside tests/: a field that no caller
   sets has one value in use and belongs next to the code that reads
   it as a constant.
+- Every parameter with a default, in a function or method of
+  sonar_spark/ or a private top-level helper of __spark_entry__.py, is
+  passed by some call outside tests/ (by keyword, by position, or
+  through *args/**kwargs; calls matched by the callee's name, a
+  class's __init__ by the class name): a default no caller overrides
+  is a knob with one value in use, and belongs in the body as a
+  constant or a literal.  PARAM_SEAMS lists the few that stay
+  parameters because a test passes them to reach a path.
 
 Spark-free."""
 
@@ -38,10 +46,25 @@ CONFIG_FIELD_EXEMPT = {
     "a north-star capability; the bucketed strategy reads it",
 }
 
+# default parameters kept although only tests pass them: each is a seam
+# a test needs to reach a path, named with the tests that pass it
+PARAM_SEAMS = {
+    "CurationJob.run(fail_after)": "test_curation_job.py::"
+    "test_curation_job_kill_resume_identity injects a crash mid-run",
+    "CurationJob.run_chunks(fail_after)": "test_curation_job.py::"
+    "test_chunk_stage_kill_resume_identity injects a crash mid-run",
+    "FeaturizeJob.run(fail_after)": "test_resume.py::"
+    "test_resume_after_injected_failure injects a crash mid-run",
+    "xcorr_normalized(fft_threshold)": "test_align.py::"
+    "test_xcorr_fft_agrees_with_time_domain forces both xcorr branches",
+    "dtw_align(band)": "test_align.py::test_dtw_matches_naive and "
+    "test_dtw_identical_zero run the unbanded and banded recursions",
+}
 
-def _py_sources() -> dict[str, str]:
+
+def _py_sources(repo: str = REPO) -> dict[str, str]:
     out = {}
-    for root, dirs, files in os.walk(REPO):
+    for root, dirs, files in os.walk(repo):
         dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
         for f in files:
             if f.endswith(".py"):
@@ -51,8 +74,8 @@ def _py_sources() -> dict[str, str]:
     return out
 
 
-def _trees() -> dict[str, ast.Module]:
-    return {p: ast.parse(src) for p, src in _py_sources().items()}
+def _trees(repo: str = REPO) -> dict[str, ast.Module]:
+    return {p: ast.parse(src) for p, src in _py_sources(repo).items()}
 
 
 def _package_defs(trees: dict[str, ast.Module]):
@@ -198,3 +221,183 @@ def test_every_config_field_is_set_outside_tests():
         if (cls, f) not in set_ and (cls, f) not in CONFIG_FIELD_EXEMPT
     ]
     assert never == [], never
+
+
+def _checked_functions(trees: dict[str, ast.Module], pkg: str, entry: str):
+    """(path, qualified name, callee name, self offset, node) for every
+    function and method in ``pkg`` (nested ones included) and every
+    private top-level function of ``entry``."""
+    for path, tree in trees.items():
+        if path == entry:
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name.startswith(
+                    "_"
+                ) and not node.name.startswith("__"):
+                    yield path, node.name, node.name, 0, node
+        if not path.startswith(pkg):
+            continue
+        stack = [(tree, None)]
+        while stack:
+            parent, cls = stack.pop()
+            for node in ast.iter_child_nodes(parent):
+                if isinstance(node, ast.ClassDef):
+                    stack.append((node, node))
+                    continue
+                owner = cls if parent is cls else None
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    if owner is None:
+                        yield path, node.name, node.name, 0, node
+                    else:
+                        static = any(
+                            ast.unparse(d) == "staticmethod"
+                            for d in node.decorator_list
+                        )
+                        callee = (
+                            owner.name if node.name == "__init__" else node.name
+                        )
+                        yield (
+                            path, f"{owner.name}.{node.name}", callee,
+                            0 if static else 1, node,
+                        )
+                stack.append((node, owner))
+
+
+def _calls_by_callee(trees: dict[str, ast.Module], tests: str):
+    """callee name -> [(positional args, keywords)] of every call outside
+    ``tests``; ``partial(f, ...)`` counts as a call of ``f``, and a call
+    through ``from m import f as g`` as a call of ``f``."""
+    calls = collections.defaultdict(list)
+    for path, tree in trees.items():
+        if path.startswith(tests):
+            continue
+        alias = {
+            a.asname: a.name
+            for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names
+            if a.asname
+        }
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            func, args = n.func, n.args
+            if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
+                func, args = args[0], args[1:]
+            if isinstance(func, ast.Attribute):
+                name = func.attr
+            elif isinstance(func, ast.Name):
+                name = alias.get(func.id, func.id)
+            else:
+                continue
+            calls[name].append((args, n.keywords))
+    return calls
+
+
+def _passed(calls, name: str, index: int | None) -> bool:
+    """Does some call pass the parameter ``name`` at positional
+    ``index`` (None for keyword-only)?"""
+    for args, keywords in calls:
+        if any(k.arg is None or k.arg == name for k in keywords):
+            return True
+        if index is None:
+            continue
+        for i, a in enumerate(args):
+            if isinstance(a, ast.Starred) or i == index:
+                return True
+            if i > index:
+                break
+    return False
+
+
+def unpassed_default_parameters(repo: str = REPO) -> list[str]:
+    """``path:line:Qual(param)`` for every parameter with a default that
+    no call outside ``repo``/tests/ passes."""
+    trees = _trees(repo)
+    pkg = os.path.join(repo, "sonar_spark") + os.sep
+    calls = _calls_by_callee(trees, os.path.join(repo, "tests") + os.sep)
+    out = []
+    for path, qual, callee, offset, node in _checked_functions(
+        trees, pkg, os.path.join(repo, "__spark_entry__.py")
+    ):
+        a = node.args
+        pos = a.posonlyargs + a.args
+        first = len(pos) - len(a.defaults)
+        params = [(p.arg, i - offset) for i, p in enumerate(pos) if i >= first]
+        params += [
+            (p.arg, None)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        ]
+        out += [
+            f"{os.path.relpath(path, repo)}:{node.lineno}:{qual}({name})"
+            for name, index in params
+            if not _passed(calls[callee], name, index)
+        ]
+    return out
+
+
+def test_every_default_parameter_is_passed_outside_tests():
+    unpassed = [
+        p for p in unpassed_default_parameters()
+        if p.split(":")[-1] not in PARAM_SEAMS
+    ]
+    assert unpassed == [], f"{len(unpassed)}: {unpassed}"
+
+
+def test_param_seams_are_still_seams():
+    """Every PARAM_SEAMS entry still names a parameter no caller outside
+    tests/ passes (a seam a caller now passes leaves the list)."""
+    unpassed = {p.split(":")[-1] for p in unpassed_default_parameters()}
+    assert set(PARAM_SEAMS) <= unpassed, set(PARAM_SEAMS) - unpassed
+    assert len(PARAM_SEAMS) <= 8
+
+
+def test_unpassed_rule_on_synthetic_sources(tmp_path):
+    """The parameter rule itself, on a synthetic repo: only-tests
+    callers do not count; keyword, position, *args, **kwargs, an import
+    alias and functools.partial do; an __init__ is called by its class
+    name, a method by its attribute name; public helpers of
+    __spark_entry__.py are not checked."""
+    sources = {
+        "sonar_spark/mod.py": (
+            "def only_tests(df, k=1): pass\n"
+            "def by_keyword(df, k=1): pass\n"
+            "def by_position(df, k=1): pass\n"
+            "def by_star(df, k=1): pass\n"
+            "def by_kwargs(df, *, k=1): pass\n"
+            "def by_alias(df, k=1): pass\n"
+            "def by_partial(df, k=1): pass\n"
+            "class Job:\n"
+            "    def __init__(self, root, n=2): pass\n"
+            "    def run(self, df, fail_after=None): pass\n"
+            "    def other(self, df, m=3): pass\n"
+        ),
+        "__spark_entry__.py": (
+            "from functools import partial\n"
+            "from sonar_spark.mod import *\n"
+            "from sonar_spark.mod import by_alias as ba\n"
+            "def _helper(x, y=0): pass\n"
+            "def _called(x, y=0): pass\n"
+            "def public(x, y=0): pass\n"
+            "def q(args, kw):\n"
+            "    by_keyword(1, k=2)\n"
+            "    by_position(1, 2)\n"
+            "    by_star(*args)\n"
+            "    by_kwargs(1, **kw)\n"
+            "    ba(1, k=2)\n"
+            "    partial(by_partial, k=2)\n"
+            "    Job('r', 4).run(1, None)\n"
+            "    Job('r').other(1)\n"
+            "    _called(1, y=2)\n"
+        ),
+        "tests/test_mod.py": (
+            "only_tests(1, k=2)\nJob('r').other(1, m=4)\n_helper(1, 2)\n"
+        ),
+    }
+    for rel, src in sources.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    got = sorted(
+        p.split(":")[-1] for p in unpassed_default_parameters(str(tmp_path))
+    )
+    assert got == ["Job.other(m)", "_helper(y)", "only_tests(k)"], got
