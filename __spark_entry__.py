@@ -4127,51 +4127,38 @@ def q_bytes_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multimodal codec stub).  The DuckDB oracle reconstructs every
     payload's values from the formula and replays the ok/empty/
     corrupt branches."""
-    import hashlib as _hl
-
     from sonar_spark.functions.binary import fetch_payloads
+    from sonar_spark.session import map_rows
 
     base = "/tmp/sonar_media_files_v1"
     n_rows = 200
 
-    def gen_files(pdfs):
-        import os as _os
-
+    def gen_file(i):
         import numpy as np
-        import pandas as pd
 
-        _os.makedirs(base, exist_ok=True)
-        for pdf in pdfs:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                if i % 11 == 0:
-                    raw = b""
-                else:
-                    n = 64 + (i % 7) * 8
-                    j = np.arange(n, dtype=np.int64)
-                    v = ((7 * i + 3 * j) % 97).astype(np.float64) / 16.0
-                    junk = bytes(
-                        ((i + k) % 256 for k in range(i % 8))
-                    )
-                    raw = v.astype("<f8").tobytes() + junk
-                path = f"{base}/m{i:05d}.f64"
-                if not _os.path.exists(path):
-                    tmp = f"{path}.tmp-{_os.getpid()}"
-                    with open(tmp, "wb") as f:
-                        f.write(raw)
-                    _os.replace(tmp, path)
-                sha = _hl.sha256(raw).hexdigest()
-                if i % 13 == 5:
-                    # advertise a wrong checksum: integrity gate fires
-                    sha = _hl.sha256(raw + b"\x00").hexdigest()
-                rows.append((i, f"file://{path}", sha))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "uri", "sha256"]
-            )
+        os.makedirs(base, exist_ok=True)
+        if i % 11 == 0:
+            raw = b""
+        else:
+            n = 64 + (i % 7) * 8
+            j = np.arange(n, dtype=np.int64)
+            v = ((7 * i + 3 * j) % 97).astype(np.float64) / 16.0
+            junk = bytes(((i + k) % 256 for k in range(i % 8)))
+            raw = v.astype("<f8").tobytes() + junk
+        path = f"{base}/m{i:05d}.f64"
+        if not os.path.exists(path):
+            tmp = f"{path}.tmp-{os.getpid()}"
+            with open(tmp, "wb") as f:
+                f.write(raw)
+            os.replace(tmp, path)
+        sha = hashlib.sha256(raw).hexdigest()
+        if i % 13 == 5:
+            # advertise a wrong checksum: integrity gate fires
+            sha = hashlib.sha256(raw + b"\x00").hexdigest()
+        return [(i, f"file://{path}", sha)]
 
-    uris = spark.range(n_rows).mapInPandas(
-        gen_files, schema="media_id long, uri string, sha256 string"
+    uris = map_rows(
+        spark.range(n_rows), gen_file, "media_id long, uri string, sha256 string"
     )
     out = fetch_payloads(uris)
     return out.select(

@@ -7,18 +7,17 @@ Determinism is per-row (RNG seeded by doc index), so the generated
 table is identical under any partitioning / parallelism — required for
 the N-vs-4N scaling benchmark to run on byte-identical input.
 
-Generation is distributed: spark.range(n) -> mapInPandas, so the same
+Generation is distributed: spark.range(n) -> map_rows, so the same
 code generates 100 docs for unit tests or millions for bench without a
 driver-side bottleneck.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import map_rows
 
 VOCAB = 50_257
 SOURCES = ("web", "books", "code", "news")
@@ -50,16 +49,10 @@ def token_table(
     partitions: int | None = None,
 ) -> DataFrame:
     """Distributed deterministic token table of input_hint shape."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_doc_row(int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["doc_id", "tokens", "n_tok", "source"])
-
     base = spark.range(n_docs)
     if partitions:
         base = base.repartition(partitions)
-    return base.mapInPandas(gen, schema=TOKENS_SCHEMA)
+    return map_rows(base, lambda i: [_doc_row(i)], TOKENS_SCHEMA)
 
 
 def catalog_table(
@@ -71,29 +64,15 @@ def catalog_table(
     including duplicate ts per entity (tie-break test) and a leading gap
     (no-match -> null test). ref_ts is in token-offset ticks."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for e in pdf["id"]:
-                e = int(e)
-                rng = np.random.default_rng(1042 + e)
-                ts = np.sort(rng.integers(64, 8192, size=rows_per_entity))
-                if rows_per_entity >= 2:
-                    ts[1] = ts[0]  # deliberate duplicate timestamp
-                for v, t in enumerate(ts):
-                    out.append(
-                        (
-                            f"ent{e:04d}",
-                            int(t),
-                            v,
-                            rng.standard_normal(13).round(6).tolist(),
-                        )
-                    )
-            yield pd.DataFrame(
-                out, columns=["entity", "ref_ts", "ref_version", "ref_features"]
-            )
+    def rows(e):
+        rng = np.random.default_rng(1042 + e)
+        ts = np.sort(rng.integers(64, 8192, size=rows_per_entity))
+        if rows_per_entity >= 2:
+            ts[1] = ts[0]  # deliberate duplicate timestamp
+        for v, t in enumerate(ts):
+            yield f"ent{e:04d}", int(t), v, rng.standard_normal(13).round(6)
 
-    return spark.range(n_entities).mapInPandas(gen, schema=CATALOG_SCHEMA)
+    return map_rows(spark.range(n_entities), rows, CATALOG_SCHEMA)
 
 
 def entity_of(doc_id_col, n_entities: int = 16):

@@ -18,11 +18,11 @@ sandbox-faithful analogs:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..session import map_rows
 
 
 def bytes_to_float64(payload: bytes | None) -> np.ndarray:
@@ -51,43 +51,21 @@ def fetch_payloads(uris: DataFrame) -> DataFrame:
     Arrow-batched; the fetch + decode runs on executors, not the
     driver."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, uri, sha in zip(
-                pdf["media_id"], pdf["uri"], pdf["sha256"]
-            ):
-                path = uri[7:] if uri.startswith("file://") else uri
-                try:
-                    with open(path, "rb") as f:
-                        raw = f.read()
-                except OSError:
-                    rows.append((int(mid), False, 0, None, None, None, None))
-                    continue
-                if hashlib.sha256(raw).hexdigest() != sha:
-                    rows.append((int(mid), False, 0, None, None, None, None))
-                    continue
-                v = bytes_to_float64(raw)
-                if len(v) == 0:
-                    rows.append((int(mid), True, 0, None, None, None, None))
-                else:
-                    rows.append(
-                        (
-                            int(mid),
-                            True,
-                            int(len(v)),
-                            float(v.mean()),
-                            float(np.sqrt((v * v).mean())),
-                            float(v[0]),
-                            float(v[-1]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "ok", "n_samples", "mean", "rms",
-                    "first", "last",
-                ],
-            )
+    def row(mid, uri, sha):
+        path = uri[7:] if uri.startswith("file://") else uri
+        try:
+            with open(path, "rb") as f:
+                raw = f.read()
+        except OSError:
+            return [(mid, False, 0, None, None, None, None)]
+        if hashlib.sha256(raw).hexdigest() != sha:
+            return [(mid, False, 0, None, None, None, None)]
+        v = bytes_to_float64(raw)
+        if len(v) == 0:
+            return [(mid, True, 0, None, None, None, None)]
+        return [
+            (mid, True, len(v), float(v.mean()),
+             float(np.sqrt((v * v).mean())), float(v[0]), float(v[-1]))
+        ]
 
-    return uris.mapInPandas(gen, schema=FETCH_SCHEMA)
+    return map_rows(uris.select("media_id", "uri", "sha256"), row, FETCH_SCHEMA)

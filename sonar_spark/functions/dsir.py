@@ -39,12 +39,20 @@ TakeOrderedAndProject — at scale).  No UDFs, no per-row Python.
 
 from __future__ import annotations
 
+from collections import Counter
+from hashlib import md5 as _md5
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import map_rows
 
 # written as the repr float so the Spark lit() and the DuckDB VALUES
 # side inject the bit-identical constant (mfcc kernel precedent)
 _LN2 = "0.6931471805599453"
+
+# hashed n-gram buckets of both bag-of-words models
+_N_BUCKETS = 1024
 
 
 def _md5_bucket(col: Column, mod: int) -> Column:
@@ -57,76 +65,31 @@ def _md5_bucket(col: Column, mod: int) -> Column:
     )
 
 
-def _gram_bucket_counts(
-    docs: DataFrame,
-    *,
-    id_col: str,
-    target_col: str,
-    words_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    """(id, target, __b, __c): per-doc hashed-gram bucket counts from
-    ONE Arrow kernel pass — hashlib.md5 is bit-identical to F.md5, so
-    int(hexdigest[:8], 16) % n_buckets reproduces _md5_bucket exactly
-    (certified by tests/test_dsir_kernel.py against the expression
-    stream)."""
-    from collections.abc import Iterator
-    from hashlib import md5 as _md5
+def _gram_bucket_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, is_target, __b, __c): per-doc hashed-gram bucket
+    counts of ``words`` from ONE Arrow kernel pass — hashlib.md5 is
+    bit-identical to F.md5, so int(hexdigest[:8], 16) % _N_BUCKETS
+    reproduces _md5_bucket exactly (certified by
+    tests/test_dsir_kernel.py against the expression stream)."""
+    id_type = docs.schema["doc_id"].dataType.simpleString()
 
-    import numpy as np
-    import pandas as pd
+    def fn(did, tgt, ws):
+        cnt: Counter = Counter()
+        prev = None
+        for w in ws:
+            cnt[int(_md5(w.encode()).hexdigest()[:8], 16) % _N_BUCKETS] += 1
+            if prev is not None:
+                cnt[
+                    int(_md5((prev + " " + w).encode()).hexdigest()[:8], 16)
+                    % _N_BUCKETS
+                ] += 1
+            prev = w
+        return [(did, bool(tgt), b, c) for b, c in cnt.items()]
 
-    id_type = docs.schema[id_col].dataType.simpleString()
-
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids, tgts, bs, cs = [], [], [], []
-            for did, tgt, ws in zip(
-                pdf[id_col], pdf[target_col], pdf[words_col]
-            ):
-                ws = list(ws)
-                cnt: Counter = Counter()
-                prev = None
-                for w in ws:
-                    cnt[
-                        int(_md5(w.encode()).hexdigest()[:8], 16)
-                        % n_buckets
-                    ] += 1
-                    if prev is not None:
-                        cnt[
-                            int(
-                                _md5(
-                                    (prev + " " + w).encode()
-                                ).hexdigest()[:8],
-                                16,
-                            )
-                            % n_buckets
-                        ] += 1
-                    prev = w
-                for b, c in cnt.items():
-                    ids.append(did)
-                    tgts.append(bool(tgt))
-                    bs.append(b)
-                    cs.append(c)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    target_col: tgts,
-                    "__b": np.asarray(bs, dtype=np.int64),
-                    "__c": np.asarray(cs, dtype=np.int64),
-                }
-            )
-
-    return docs.select(id_col, target_col, words_col).mapInPandas(
-        gen,
-        schema=(
-            f"{id_col} {id_type}, {target_col} boolean, "
-            "__b long, __c long"
-        ),
+    return map_rows(
+        docs.select("doc_id", "is_target", "words"),
+        fn,
+        f"doc_id {id_type}, is_target boolean, __b long, __c long",
     )
 
 
@@ -148,7 +111,6 @@ def dsir_scores(docs: DataFrame) -> DataFrame:
     sort key), sel_rank (1 = first selected), selected
     (rank <= _N_SELECT).
     """
-    n_buckets = 1024
     k_smooth = 0.5
     # r6: the gram stream is pre-reduced to per-doc BUCKET COUNTS by
     # one Arrow kernel pass (_gram_bucket_counts) — the expression
@@ -160,10 +122,7 @@ def dsir_scores(docs: DataFrame) -> DataFrame:
     # aggregate below consume the same persisted ~doc x distinct-
     # bucket table.  Certified equal to the expression stream by
     # tests/test_dsir_kernel.py.
-    gd = _gram_bucket_counts(
-        docs, id_col="doc_id", target_col="is_target",
-        words_col="words", n_buckets=n_buckets,
-    ).persist()
+    gd = _gram_bucket_counts(docs).persist()
 
     # hashed bag-of-words models: ONE bucket-bounded count table
     # (<= n_buckets rows after the map-side-combined groupBy).
@@ -181,7 +140,7 @@ def dsir_scores(docs: DataFrame) -> DataFrame:
         F.sum("__cr").cast("long").alias("__nr"),
     )
     k = F.lit(float(k_smooth))
-    bmod = F.lit(float(k_smooth) * n_buckets)
+    bmod = F.lit(float(k_smooth) * _N_BUCKETS)
     lam_bits = F.round(
         F.log2(
             ((F.col("__ct") + k) / (F.col("__nt") + bmod))

@@ -48,6 +48,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..kernels import vectors_matrix
+
 PCA_DIM = 64
 PCA_ITERS = 32
 PCA_RAMP_EXP = 0.25  # weight_d = 2 ** ((d - 63) * PCA_RAMP_EXP)
@@ -109,7 +111,7 @@ def gram_partials(emb: DataFrame) -> DataFrame:
             col = batch.column(0)
             if len(col) == 0:
                 continue
-            X = np.asarray(col.to_pylist(), dtype="float64") * W
+            X = vectors_matrix(col) * W
             n += X.shape[0]
             sm += _micro_np(X).sum(axis=0)
             for i in range(PCA_DIM):
@@ -216,10 +218,7 @@ def pca_project(emb: DataFrame) -> DataFrame:
             if batch.num_rows == 0:
                 continue
             ids = batch.column(0)
-            X = (
-                np.asarray(batch.column(1).to_pylist(), dtype="float64")
-                * W
-            )
+            X = vectors_matrix(batch.column(1)) * W
             p1 = _micro_np(X * a1).sum(axis=1)
             p2 = _micro_np(X * a2).sum(axis=1)
             yield pa.RecordBatch.from_arrays(

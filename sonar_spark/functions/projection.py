@@ -187,7 +187,7 @@ def int8_quantize_report(emb: DataFrame) -> DataFrame:
     of the IVF-PQ codebooks): q_i = round((v_i - min) / scale) with
     scale = (max - min) / 255, reconstruction v' = min + q * scale.
 
-    r6: executed as a vectorized Arrow kernel (mapInPandas + numpy,
+    r6: executed as a vectorized Arrow kernel (mapInArrow + numpy,
     guide §4.2) instead of the interpreted Catalyst array-lambda
     fold — the fold evaluated ~6 interpreted expressions per element
     per row (14.1 s at sf1.0); the kernel does the same arithmetic

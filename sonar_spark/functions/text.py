@@ -185,29 +185,34 @@ def repetition_profile(docs: DataFrame) -> DataFrame:
     expression form is certified by tests/test_text_kernels.py."""
     top_word_max = 0.2
     dup_3gram_max = 0.3
-    from collections.abc import Iterator
+    from collections import Counter
 
     import numpy as np
-    import pandas as pd
 
-    from ..kernels import spark_round
+    from ..kernels import list_flat, spark_round
+    from ..session import arrow_batch, arrow_schema
 
     id_type = docs.schema["doc_id"].dataType.simpleString()
+    schema = (
+        f"doc_id {id_type}, n_tokens long, top_word_frac double,"
+        " dup_3gram_frac double, dup_5gram_frac double,"
+        " flagged boolean"
+    )
+    out = arrow_schema(schema)
 
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
-
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
+    def gen(batches):
+        for batch in batches:
+            flat, lens = list_flat(batch.column(1))
+            ends = np.cumsum(lens).tolist()
             ids: list = []
             ns: list = []
             tops: list = []
             d3: list = []
             d5: list = []
-            for did, ws in zip(pdf["doc_id"], pdf["words"]):
-                ws = list(ws)
-                n = len(ws)
+            for did, n, e in zip(
+                batch.column(0).to_pylist(), lens.tolist(), ends
+            ):
+                ws = flat[e - n : e].tolist()
                 if n == 0:
                     # the expression form's inner join with the
                     # exploded top-word table drops zero-token docs;
@@ -225,32 +230,21 @@ def repetition_profile(docs: DataFrame) -> DataFrame:
                     # int/int -> double division, then 1.0 - x: the
                     # exact Catalyst op order
                     acc.append(1.0 - len(set(grams)) / m)
+            if not ids:
+                continue
             ns_a = np.asarray(ns, dtype=np.int64)
             twf = spark_round(
                 np.asarray(tops, dtype=np.float64) / ns_a, 6
             )
             d3_a = spark_round(np.asarray(d3), 6)
             d5_a = spark_round(np.asarray(d5), 6)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_tokens": ns_a,
-                    "top_word_frac": twf,
-                    "dup_3gram_frac": d3_a,
-                    "dup_5gram_frac": d5_a,
-                    "flagged": (twf > top_word_max)
-                    | (d3_a > dup_3gram_max),
-                }
+            yield arrow_batch(
+                out,
+                [ids, ns_a, twf, d3_a, d5_a,
+                 (twf > top_word_max) | (d3_a > dup_3gram_max)],
             )
 
-    return docs.select("doc_id", "words").mapInPandas(
-        gen,
-        schema=(
-            f"doc_id {id_type}, n_tokens long, top_word_frac double,"
-            " dup_3gram_frac double, dup_5gram_frac double,"
-            " flagged boolean"
-        ),
-    )
+    return docs.select("doc_id", "words").mapInArrow(gen, schema)
 
 
 # --- PII detection / redaction -------------------------------------

@@ -1,4 +1,4 @@
-"""Vectorized numpy kernels shared by the pandas/Arrow UDF operators.
+"""Vectorized numpy kernels shared by the Arrow UDF operators.
 
 These are the hot-path implementations (stride-tricks, batched FFT).
 The independent, obviously-correct loop implementations the tests
@@ -970,6 +970,21 @@ def vectors_matrix(vec) -> np.ndarray:
         raise ValueError("ragged vector column")
     flat = pc.list_flatten(vec).to_numpy(zero_copy_only=False)
     return flat.astype(np.float64, copy=False).reshape(n, dim)
+
+
+def list_flat(col) -> tuple[np.ndarray, np.ndarray]:
+    """Arrow list column (an Array) -> (its values flattened into one
+    numpy array, int64 per-row lengths) — the decode of every Arrow
+    list kernel, never to_pylist().  A null row has length 0."""
+    import pyarrow.compute as pc
+
+    lens = pc.list_value_length(col)
+    if lens.null_count:
+        lens = lens.fill_null(0)
+    return (
+        col.flatten().to_numpy(zero_copy_only=False),
+        lens.to_numpy().astype(np.int64),
+    )
 
 
 def cosine_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:

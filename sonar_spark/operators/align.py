@@ -8,7 +8,8 @@ Plan shape (the reference's hybrid heuristic as orchestration,
 alignment.go:308-337): phase 1 runs cheap cross-correlation on every
 pair; phase 2 re-runs only low-confidence pairs (conf <= threshold)
 through band-constrained DTW and blends. Selective recompute = a
-filter + second mapInPandas + union — no custom Catalyst rule.
+filter + second per-row Arrow kernel + union — no custom Catalyst
+rule.
 
 Input representation: one row per pair with both series materialized
 as array<double> (built by build_doc_series + a join). Per-pair
@@ -18,15 +19,13 @@ an Arrow batch (no per-element Python).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import kernels
 from ..config import AlignmentConfig
+from ..session import map_rows
 
 _ALIGN_SCHEMA = (
     "pair_id string, lag double, peak double, sharpness double, "
@@ -34,10 +33,6 @@ _ALIGN_SCHEMA = (
     "method string, dtw_dist double, dtw_offset double, offset double, "
     "time_stretch double"
 )
-
-_ALIGN_COLS = ["pair_id", "lag", "peak", "sharpness", "sidelobe", "snr",
-               "second_peak", "confidence", "method", "dtw_dist",
-               "dtw_offset", "offset", "time_stretch"]
 
 # phase-1 confidence at or below which a pair is re-scored with DTW
 # (the hybrid fallback trigger, alignment.go:316)
@@ -74,61 +69,47 @@ def align_pairs(
     from the DTW path mean displacement (alignment.go:308-337,
     530-541). Output one row per pair."""
 
-    def phase1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pid, sa, sb in zip(pdf["pair_id"], pdf["series_a"], pdf["series_b"]):
-                sa = np.asarray(sa, dtype=np.float64)
-                sb = np.asarray(sb, dtype=np.float64)
-                lags, corr = kernels.xcorr_normalized(sa, sb, cfg.max_lag)
-                m = kernels.xcorr_peak_metrics(lags, corr)
-                conf = kernels.xcorr_confidence(m)
-                # time-stretch estimate: length ratio only in the
-                # xcorr phase (extractors/alignment.go:448-476)
-                ratio = len(sb) / len(sa) if len(sa) else 1.0
-                rows.append(
-                    (pid, m["lag"], m["peak"], m["sharpness"], m["sidelobe"],
-                     m["snr"], m["second_peak"], conf, "xcorr", None, None,
-                     m["lag"], ratio)
-                )
-            yield pd.DataFrame(rows, columns=_ALIGN_COLS)
+    def phase1(pid, sa, sb):
+        sa = np.asarray(sa, dtype=np.float64)
+        sb = np.asarray(sb, dtype=np.float64)
+        lags, corr = kernels.xcorr_normalized(sa, sb, cfg.max_lag)
+        m = kernels.xcorr_peak_metrics(lags, corr)
+        conf = kernels.xcorr_confidence(m)
+        # time-stretch estimate: length ratio only in the
+        # xcorr phase (extractors/alignment.go:448-476)
+        ratio = len(sb) / len(sa) if len(sa) else 1.0
+        return [
+            (pid, m["lag"], m["peak"], m["sharpness"], m["sidelobe"],
+             m["snr"], m["second_peak"], conf, "xcorr", None, None,
+             m["lag"], ratio)
+        ]
 
-    def phase2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pid, lag, peak, sharp, side, snr, second, p1conf, sa, sb in zip(
-                pdf["pair_id"], pdf["lag"], pdf["peak"], pdf["sharpness"],
-                pdf["sidelobe"], pdf["snr"], pdf["second_peak"],
-                pdf["confidence"], pdf["series_a"], pdf["series_b"],
-            ):
-                sa = np.asarray(sa, dtype=np.float64)
-                sb = np.asarray(sb, dtype=np.float64)
-                d = kernels.dtw_align(sa, sb)
-                conf = 0.6 * p1conf + 0.4 * d["confidence"]
-                off = 0.6 * lag + 0.4 * d["offset"]
-                ratio = len(sb) / len(sa) if len(sa) else 1.0
-                # 0.7 length-ratio + 0.3 DTW path slope blend
-                # (extractors/alignment.go:448-476)
-                stretch = 0.7 * ratio + 0.3 * d["slope"]
-                rows.append(
-                    (pid, lag, peak, sharp, side, snr, second, conf,
-                     "hybrid", d["dist"], d["offset"], off, stretch)
-                )
-            yield pd.DataFrame(rows, columns=_ALIGN_COLS)
+    def phase2(pid, lag, peak, sharp, side, snr, second, p1conf, sa, sb):
+        sa = np.asarray(sa, dtype=np.float64)
+        sb = np.asarray(sb, dtype=np.float64)
+        d = kernels.dtw_align(sa, sb)
+        conf = 0.6 * p1conf + 0.4 * d["confidence"]
+        off = 0.6 * lag + 0.4 * d["offset"]
+        ratio = len(sb) / len(sa) if len(sa) else 1.0
+        # 0.7 length-ratio + 0.3 DTW path slope blend
+        # (extractors/alignment.go:448-476)
+        stretch = 0.7 * ratio + 0.3 * d["slope"]
+        return [
+            (pid, lag, peak, sharp, side, snr, second, conf,
+             "hybrid", d["dist"], d["offset"], off, stretch)
+        ]
 
     inp = pairs.select("pair_id", "series_a", "series_b")
-    p1 = inp.mapInPandas(phase1, schema=_ALIGN_SCHEMA)
-    return _hybrid_phase2(inp, p1, phase2)
-
-
-def _hybrid_phase2(inp, p1, phase2):
+    p1 = map_rows(inp, phase1, _ALIGN_SCHEMA)
     # selective recompute: join the low-confidence subset back to its
     # input series, run DTW, union with the confident subset
     low = p1.where(F.col("confidence") <= _HYBRID_CONF_THRESHOLD)
     high = p1.where(F.col("confidence") > _HYBRID_CONF_THRESHOLD)
-    low_inp = low.join(inp, "pair_id")
-    p2 = low_inp.mapInPandas(phase2, schema=_ALIGN_SCHEMA)
-    return high.unionByName(p2)
+    low_inp = low.join(inp, "pair_id").select(
+        "pair_id", "lag", "peak", "sharpness", "sidelobe", "snr",
+        "second_peak", "confidence", "series_a", "series_b",
+    )
+    return high.unionByName(map_rows(low_inp, phase2, _ALIGN_SCHEMA))
 
 
 def align_pairs_dtw(pairs: DataFrame) -> DataFrame:
@@ -142,34 +123,24 @@ def align_pairs_dtw(pairs: DataFrame) -> DataFrame:
     simplified), quality (path efficiency max(len)/path_len clamped,
     alignment.go:436-440), dtw_dist."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for pid, sa, sb in zip(
-                pdf["pair_id"], pdf["series_a"], pdf["series_b"]
-            ):
-                sa = np.asarray(sa, dtype=np.float64)
-                sb = np.asarray(sb, dtype=np.float64)
-                d = kernels.dtw_align(sa, sb)
-                eff = (
-                    min(max(len(sa), len(sb)) / d["path_len"], 1.0)
-                    if d["path_len"]
-                    else 0.0
-                )
-                rows.append(
-                    (pid, d["offset"], d["confidence"], d["confidence"],
-                     eff, d["dist"])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["pair_id", "offset", "confidence", "similarity",
-                         "quality", "dtw_dist"],
-            )
+    def run(pid, sa, sb):
+        sa = np.asarray(sa, dtype=np.float64)
+        sb = np.asarray(sb, dtype=np.float64)
+        d = kernels.dtw_align(sa, sb)
+        eff = (
+            min(max(len(sa), len(sb)) / d["path_len"], 1.0)
+            if d["path_len"]
+            else 0.0
+        )
+        return [
+            (pid, d["offset"], d["confidence"], d["confidence"], eff,
+             d["dist"])
+        ]
 
-    inp = pairs.select("pair_id", "series_a", "series_b")
-    return inp.mapInPandas(
+    return map_rows(
+        pairs.select("pair_id", "series_a", "series_b"),
         run,
-        schema="pair_id string, offset double, confidence double, "
+        "pair_id string, offset double, confidence double, "
         "similarity double, quality double, dtw_dist double",
     )
 

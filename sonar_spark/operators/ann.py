@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import cosine_similarity
-from ..kernels import cosine_block, spark_round, vectors_matrix
+from ..kernels import cosine_block, list_flat, spark_round, vectors_matrix
+from ..session import arrow_batch, arrow_schema
 from .topk import topk_per_group
 
 
@@ -262,17 +263,17 @@ def ivf_search(
     )
 
 
-def _scored_blocks(batches, emb_path: str, id_col: str, vec_col: str):
+def _scored_blocks(batches, emb_path: str):
     """The block nested-loop scorer shared by allpairs_cosine and
-    hard_negatives_allpairs: reads the FULL right side executor-side
-    from the parquet file, then yields (left ids, right ids,
-    kernels.cosine_block(left, right)) per non-empty Arrow batch of
-    (id, vector) rows."""
+    hard_negatives_allpairs: reads the FULL right side (vec_id,
+    embedding) executor-side from the parquet file, then yields (left
+    ids, right ids, kernels.cosine_block(left, right)) per non-empty
+    Arrow batch of (id, vector) rows."""
     import pyarrow.parquet as pq
 
-    right = pq.read_table(emb_path, columns=[id_col, vec_col])
-    rid = right.column(id_col).to_numpy()
-    rb = vectors_matrix(right.column(vec_col))
+    right = pq.read_table(emb_path, columns=["vec_id", "embedding"])
+    rid = right.column("vec_id").to_numpy()
+    rb = vectors_matrix(right.column("embedding"))
     for batch in batches:
         if batch.num_rows:
             yield (
@@ -312,7 +313,7 @@ def allpairs_cosine(
     def gen(batches):
         import pyarrow as pa
 
-        for lid, rid, s in _scored_blocks(batches, emb_path, "vec_id", "embedding"):
+        for lid, rid, s in _scored_blocks(batches, emb_path):
             if directed:
                 mask = (lid[:, None] != rid[None, :]) & (s >= threshold)
             else:
@@ -375,7 +376,7 @@ def hard_negatives_allpairs(
     def gen(batches):
         import pyarrow as pa
 
-        for lid, rid, s in _scored_blocks(batches, emb_path, "vec_id", "embedding"):
+        for lid, rid, s in _scored_blocks(batches, emb_path):
             q_ids, ranks, n_ids, sims, n_excs = [], [], [], [], []
             for i in range(len(lid)):
                 row = s[i]
@@ -585,38 +586,36 @@ def pq_search(
     cand = index.join(F.broadcast(pr), "cell")
     bc = spark.sparkContext.broadcast((C, B, {int(i): q for i, q in zip(qids, Q)}))
 
-    def gen(pdfs):
-        import pandas as pd
+    schema = "query_id long, neighbor_id long, adc_dist double"
+    out = arrow_schema(schema)
 
+    def gen(batches):
         Cl, Bl, qmap = bc.value
-        for pdf in pdfs:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            dists = np.zeros(len(pdf))
-            cells = pdf["cell"].to_numpy()
-            codes = np.stack([np.asarray(c) for c in pdf["codes"]])
-            qs = np.stack([qmap[int(q)] for q in pdf["query_id"]])
+            qid = batch.column("query_id")
+            dists = np.zeros(batch.num_rows)
+            cells = batch.column("cell").to_numpy()
+            codes = list_flat(batch.column("codes"))[0].reshape(-1, n_sub)
+            qs = np.stack([qmap[q] for q in qid.to_pylist()])
             for s in range(n_sub):
                 qsv = qs[:, s * sub : (s + 1) * sub]
                 recon = Cl[cells][:, s * sub : (s + 1) * sub] + Bl[s][codes[:, s]]
-                diffsq = np.zeros(len(pdf))
+                diffsq = np.zeros(batch.num_rows)
                 for d in range(sub):  # ascending dims inside subspace
                     dd = qsv[:, d] - recon[:, d]
                     diffsq += dd * dd
                 dists += diffsq  # ascending subspaces
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["vec_id"].to_numpy(),
-                    "adc_dist": _r6pos(dists),
-                }
+            yield arrow_batch(
+                out, [qid, batch.column("vec_id"), _r6pos(dists)]
             )
 
     from pyspark.sql import Window
 
-    scored = cand.mapInPandas(
-        gen, schema="query_id long, neighbor_id long, adc_dist double"
-    ).where(F.col("query_id") != F.col("neighbor_id"))
+    scored = cand.mapInArrow(gen, schema).where(
+        F.col("query_id") != F.col("neighbor_id")
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("neighbor_id").asc()
     )

@@ -26,8 +26,11 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import map_rows
 
 _SQRT3 = math.sqrt(3.0)
 
@@ -454,10 +457,11 @@ def chroma_dp_similarity(
     pairs: (pair cols..., qseq array<array<double>>, rseq ...) with
     frames in order and values pre-rounded (quantized interface).
 
-    mapInPandas over pair rows — pairs are the parallel unit; each
-    DP matrix is frames^2 (tiny).  Output: pair cols + score (SW max
-    score / DTW corner cost), path_len, similarity (SW
-    length-normalized max / DTW exp(-distance/path))."""
+    One kernel call per pair row (map_rows) — pairs are the parallel
+    unit; each DP matrix is frames^2 (tiny).  Output: pair cols +
+    score (SW max score / DTW corner cost), path_len, similarity (SW
+    length-normalized max / DTW exp(-distance/path); the NaN of a
+    zero-length path reaches Spark as NULL)."""
     kern = _dp_kernel(method)
     key_fields = pairs.select(*pair_on).schema.fields
     out_schema = (
@@ -465,27 +469,13 @@ def chroma_dp_similarity(
         + ", score double, path_len int, similarity double"
     )
 
-    def run(batches):
-        import numpy as np
+    def run(*row):
+        *keys, qs, rs = row
+        qa = [np.asarray(v, dtype=np.float64) for v in qs]
+        ra = [np.asarray(v, dtype=np.float64) for v in rs]
+        return [(*keys, *kern(qa, ra))]
 
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            scores, plens, sims = [], [], []
-            for qs, rs in zip(pdf["qseq"], pdf["rseq"]):
-                qa = [np.asarray(v, dtype=np.float64) for v in qs]
-                ra = [np.asarray(v, dtype=np.float64) for v in rs]
-                s, p, sm = kern(qa, ra)
-                scores.append(s)
-                plens.append(p)
-                sims.append(sm)
-            out = pdf[[*pair_on]].copy()
-            out["score"] = scores
-            out["path_len"] = np.asarray(plens, dtype=np.int32)
-            out["similarity"] = sims
-            yield out
-
-    return pairs.mapInPandas(run, schema=out_schema)
+    return map_rows(pairs.select(*pair_on, "qseq", "rseq"), run, out_schema)
 
 
 # ---------------------------------------------------------- ChromaCQT

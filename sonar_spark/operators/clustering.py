@@ -13,7 +13,7 @@ Reference shape: every algorithm runs over ONE in-memory [][]float64
   joins + aggregations;
 - k-medoids / hierarchical / GMM are inherently sequential
   state-machine iterations over a bounded point set: implemented as
-  faithful scalar kernels applied per GROUP (applyInPandas), so
+  faithful scalar kernels applied per GROUP (applyInArrow), so
   datasets are the parallel unit — the same shape as the chroma DP
   and harmonic-tracking kernels.
 
@@ -570,26 +570,35 @@ def gmm_sequence(data: list, k: int, init_mean_idx: list, max_iter: int = 4):
     return labels, means, var, mix, resp
 
 
-def _per_group_cluster(points, id_col, vec_col, out_extra, fn):
-    """Shared applyInPandas shape: one bounded point set per group
-    (datasets are the parallel unit), rows sorted by id inside the
-    kernel, deterministic output."""
-    import pandas as pd
+def _per_group_cluster(points, out_extra, fn):
+    """Shared applyInArrow shape over (id, vec) points: one bounded
+    point set per group (datasets are the parallel unit), rows sorted
+    by id inside the kernel, deterministic output; fn(ids, vectors)
+    returns the output columns by name."""
+    import pyarrow as pa
+
+    from ..kernels import vectors_matrix
+    from ..session import arrow_batch, arrow_schema
 
     inp = points.select(
         F.lit(0).alias("__g"),
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
+        F.col("id").alias("__id"),
+        F.col("vec").alias("__v"),
     )
-    out_schema = f"{id_col} long, " + out_extra
+    out_schema = "id long, " + out_extra
+    out = arrow_schema(out_schema)
 
-    def run(pdf):
-        pdf = pdf.sort_values("__id")
-        ids = [int(x) for x in pdf["__id"]]
-        data = [[float(v) for v in row] for row in pdf["__v"]]
-        return pd.DataFrame(fn(ids, data))
+    def run(t):
+        t = t.sort_by("__id")
+        cols = fn(
+            t.column("__id").to_pylist(),
+            vectors_matrix(t.column("__v")).tolist(),
+        )
+        return pa.Table.from_batches(
+            [arrow_batch(out, [cols[f.name] for f in out])]
+        )
 
-    return inp.groupBy("__g").applyInPandas(run, schema=out_schema)
+    return inp.groupBy("__g").applyInArrow(run, out_schema)
 
 
 def kmedoids_cluster(
@@ -615,9 +624,7 @@ def kmedoids_cluster(
             "is_medoid": [i in medset for i in range(len(ids))],
         }
 
-    return _per_group_cluster(
-        points, "id", "vec", "label int, is_medoid boolean", fn
-    )
+    return _per_group_cluster(points, "label int, is_medoid boolean", fn)
 
 
 def hierarchical_clusters(
@@ -633,7 +640,7 @@ def hierarchical_clusters(
         labels, _ = hierarchical_sequence(data, k, linkage)
         return {"id": ids, "label": labels}
 
-    return _per_group_cluster(points, "id", "vec", "label int", fn)
+    return _per_group_cluster(points, "label int", fn)
 
 
 def gmm_cluster(points: DataFrame, *, k: int = 2, max_iter: int = 4) -> DataFrame:
@@ -652,6 +659,4 @@ def gmm_cluster(points: DataFrame, *, k: int = 2, max_iter: int = 4) -> DataFram
             "resp": [resp[i][labels[i]] for i in range(len(ids))],
         }
 
-    return _per_group_cluster(
-        points, "id", "vec", "label int, resp double", fn
-    )
+    return _per_group_cluster(points, "label int, resp double", fn)

@@ -25,11 +25,10 @@ Token analog scalings are documented on the driver query
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..session import map_rows
 
 FEATURES_SCHEMA = (
     "doc_id long, zcr double, cen double, ev double, sil double, "
@@ -170,22 +169,13 @@ def _features_one(s: np.ndarray) -> tuple:
 def content_features(tokens: DataFrame) -> DataFrame:
     """tokens(doc_id long, tokens array<int|long>) -> the nine
     acoustic detector features per doc (Arrow-batched)."""
-
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            rows = []
-            for did, tok in zip(pdf["doc_id"], pdf["tokens"]):
-                s = np.asarray(tok, dtype=np.float64)
-                rows.append((int(did), *_features_one(s)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "zcr", "cen", "ev", "sil", "dr",
-                    "lowr", "highr", "hr", "ts",
-                ],
-            )
-
-    return tokens.mapInPandas(gen, schema=FEATURES_SCHEMA)
+    return map_rows(
+        tokens,
+        lambda did, tok: [
+            (did, *_features_one(np.asarray(tok, dtype=np.float64)))
+        ],
+        FEATURES_SCHEMA,
+    )
 
 
 GATE_SCHEMA = "doc_id long, is_speech boolean"
@@ -228,13 +218,8 @@ def _r6s(x: float) -> float:
 def speech_gate(tokens: DataFrame) -> DataFrame:
     """tokens(doc_id long, tokens array<int|long>) -> is_speech per
     doc (Arrow-batched detectSpeech gate)."""
-
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            rows = []
-            for did, tok in zip(pdf["doc_id"], pdf["tokens"]):
-                s = np.asarray(tok, dtype=np.float64)
-                rows.append((int(did), _gate_one(s)))
-            yield pd.DataFrame(rows, columns=["doc_id", "is_speech"])
-
-    return tokens.mapInPandas(gen, schema=GATE_SCHEMA)
+    return map_rows(
+        tokens,
+        lambda did, tok: [(did, _gate_one(np.asarray(tok, dtype=np.float64)))],
+        GATE_SCHEMA,
+    )

@@ -98,9 +98,9 @@ def frame_features_arrow(
 
         scratch = kernels._scratch
         for batch in batches:
-            tok = batch.column(batch.schema.get_field_index("tokens"))
-            lens = pc.list_value_length(tok).to_numpy().astype(np.int64)
-            vals = tok.flatten().to_numpy(zero_copy_only=False)
+            vals, lens = kernels.list_flat(
+                batch.column(batch.schema.get_field_index("tokens"))
+            )
             flat = scratch.get("flat_tok", (len(vals),))
             np.copyto(flat, vals)
             feats, doc_nf = kernels.frame_features_flat(

@@ -22,14 +22,12 @@ _OUT_SCHEMA = "doc_id string, filtered array<double>"
 def _apply_per_doc(df: DataFrame, fn) -> DataFrame:
     def gen(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
-            tok = batch.column(batch.schema.get_field_index("tokens"))
-            lens = pc.list_value_length(tok).to_numpy().astype(np.int64)
-            vals = tok.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64
+            vals, lens = kernels.list_flat(
+                batch.column(batch.schema.get_field_index("tokens"))
             )
+            vals = vals.astype(np.float64)
             max_len = int(lens.max()) if len(lens) else 0
             ctx = fn(max_len)  # per-batch precompute (impulse response)
             outs = []

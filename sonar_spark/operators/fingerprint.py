@@ -22,13 +22,16 @@ Physical design for 10^12 docs:
 
 from __future__ import annotations
 
+from collections import Counter
+from hashlib import blake2b
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import kernels
 from ..config import MinHashConfig
-from ..session import arrow_frame
+from ..session import arrow_frame, map_rows
 
 _SIG_SCHEMA = (
     "doc_id string, source string, n_tok int, minhash array<long>, "
@@ -66,12 +69,12 @@ def minhash_fingerprints(
 
     def gen(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for batch in batches:
-            tok = batch.column(batch.schema.get_field_index("tokens"))
-            lens = pc.list_value_length(tok).to_numpy().astype(np.int64)
-            vals = tok.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+            vals, lens = kernels.list_flat(
+                batch.column(batch.schema.get_field_index("tokens"))
+            )
+            vals = vals.astype(np.int64)
             sig = kernels.minhash_batch(
                 vals, lens, _SHINGLE_K, nh, _MINHASH_SEED
             )
@@ -581,6 +584,23 @@ def fingerprint_matches(
     )
 
 
+def _gram_hashes(ws, k: int, m: int) -> list[int]:
+    """Stable signed blake2b-64 hashes of the space-joined word k-grams
+    of ``ws`` starting at positions 0..m-1."""
+    ws = list(ws)
+    return [
+        int.from_bytes(
+            blake2b(
+                " ".join(ws[i:i + k]).encode(),
+                digest_size=8,
+            ).digest(),
+            "big",
+            signed=True,
+        )
+        for i in range(m)
+    ]
+
+
 def _gram_hash_stream(docs: DataFrame, *, k: int, positions: bool) -> DataFrame:
     """Arrow kernel emitting the token k-gram stream of every doc
     with >= k tokens as STABLE 64-bit hashes (blake2b-8 of the
@@ -604,81 +624,22 @@ def _gram_hash_stream(docs: DataFrame, *, k: int, positions: bool) -> DataFrame:
     value oracles replay the string form end-to-end); the birthday
     bound at the ~1e6-distinct-gram scale of these corpora is ~1e-7.
     """
-    from collections.abc import Iterator
-    from hashlib import blake2b
-
-    import pandas as pd
-
     id_type = docs.schema["doc_id"].dataType.simpleString()
 
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from collections import Counter
+    def hashes(ws):
+        return _gram_hashes(ws, k, len(ws) - k + 1)
 
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            if positions:
-                ids, poss, hs = [], [], []
-                for did, ws in zip(pdf["doc_id"], pdf["words"]):
-                    n = len(ws)
-                    if n < k:
-                        continue
-                    ws = list(ws)
-                    for i in range(n - k + 1):
-                        h = int.from_bytes(
-                            blake2b(
-                                " ".join(ws[i:i + k]).encode(),
-                                digest_size=8,
-                            ).digest(),
-                            "big",
-                            signed=True,
-                        )
-                        ids.append(did)
-                        poss.append(i + 1)
-                        hs.append(h)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "pos": np.asarray(poss, dtype=np.int64),
-                        "h": np.asarray(hs, dtype=np.int64),
-                    }
-                )
-            else:
-                ids, hs, cs = [], [], []
-                for did, ws in zip(pdf["doc_id"], pdf["words"]):
-                    n = len(ws)
-                    if n < k:
-                        continue
-                    ws = list(ws)
-                    cnt = Counter(
-                        int.from_bytes(
-                            blake2b(
-                                " ".join(ws[i:i + k]).encode(),
-                                digest_size=8,
-                            ).digest(),
-                            "big",
-                            signed=True,
-                        )
-                        for i in range(n - k + 1)
-                    )
-                    for h, c in cnt.items():
-                        ids.append(did)
-                        hs.append(h)
-                        cs.append(c)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": ids,
-                        "h": np.asarray(hs, dtype=np.int64),
-                        "c": np.asarray(cs, dtype=np.int64),
-                    }
-                )
+    if positions:
+        def fn(did, ws):
+            return [(did, i + 1, h) for i, h in enumerate(hashes(ws))]
 
-    schema = (
-        f"doc_id {id_type}, pos long, h long"
-        if positions
-        else f"doc_id {id_type}, h long, c long"
-    )
-    return docs.select("doc_id", "words").mapInPandas(gen, schema=schema)
+        schema = f"doc_id {id_type}, pos long, h long"
+    else:
+        def fn(did, ws):
+            return [(did, h, c) for h, c in Counter(hashes(ws)).items()]
+
+        schema = f"doc_id {id_type}, h long, c long"
+    return map_rows(docs.select("doc_id", "words"), fn, schema)
 
 
 def shingle_hash_table(docs: DataFrame) -> DataFrame:
@@ -698,38 +659,14 @@ def shingle_hash_table(docs: DataFrame) -> DataFrame:
     depend on the shingle bytes (the Bloom md5 bit table keeps
     strings)."""
     k = 4
-    from collections.abc import Iterator
-    from hashlib import blake2b
-
-    import pandas as pd
-
     id_type = docs.schema["doc_id"].dataType.simpleString()
 
-    def gen(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            ids, shs = [], []
-            for did, ws in zip(pdf["doc_id"], pdf["words"]):
-                ws = list(ws)
-                m = max(len(ws) - (k - 1), 1)
-                seen = dict.fromkeys(
-                    int.from_bytes(
-                        blake2b(
-                            " ".join(ws[i:i + k]).encode(),
-                            digest_size=8,
-                        ).digest(),
-                        "big",
-                        signed=True,
-                    )
-                    for i in range(m)
-                )
-                ids.append(did)
-                shs.append(np.fromiter(seen, dtype=np.int64))
-            yield pd.DataFrame({"doc_id": ids, "sh": shs})
+    def fn(did, ws):
+        m = max(len(ws) - (k - 1), 1)
+        return [(did, list(dict.fromkeys(_gram_hashes(ws, k, m))))]
 
-    return docs.select("doc_id", "words").mapInPandas(
-        gen, schema=f"doc_id {id_type}, sh array<long>"
+    return map_rows(
+        docs.select("doc_id", "words"), fn, f"doc_id {id_type}, sh array<long>"
     )
 
 

@@ -16,13 +16,12 @@ token sequences (kernels.n_frames) — one engine, two modalities.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import kernels
+from ..session import map_rows
 
 MEDIA_SCHEMA = (
     "media_id string, kind string, width int, height int, sample_rate int, "
@@ -47,30 +46,20 @@ def synth_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
     rows with formula-derived binary payloads + integrity checksum
     (see media_payload — SQL-reconstructible by design)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                payload = media_payload(i)
-                if i % 2 == 0:
-                    w, h, sr = 32, 24, 0
-                    kind = "image"
-                else:
-                    w, h, sr = 0, 0, 8000
-                    kind = "audio"
-                raw = payload.tobytes()
-                rows.append(
-                    (f"m{i:06d}", kind, w, h, sr, len(raw),
-                     hashlib.sha256(raw).hexdigest(), raw)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "width", "height", "sample_rate",
-                         "n_bytes", "sha256", "payload"],
-            )
+    def row(i):
+        if i % 2 == 0:
+            w, h, sr = 32, 24, 0
+            kind = "image"
+        else:
+            w, h, sr = 0, 0, 8000
+            kind = "audio"
+        raw = media_payload(i).tobytes()
+        return [
+            (f"m{i:06d}", kind, w, h, sr, len(raw),
+             hashlib.sha256(raw).hexdigest(), raw)
+        ]
 
-    return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return map_rows(spark.range(n), row, MEDIA_SCHEMA)
 
 
 def media_features(media: DataFrame) -> DataFrame:
@@ -92,34 +81,19 @@ def media_features(media: DataFrame) -> DataFrame:
         "hist array<double>"
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, sha, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["sha256"], pdf["payload"]
-            ):
-                raw = bytes(payload)
-                if hashlib.sha256(raw).hexdigest() != sha:
-                    rows.append((mid, kind, False, 0, None, None, None,
-                                 None, None))
-                    continue
-                # stub decode: payload bytes ARE the sample/pixel stream
-                x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-                mean = float(x.mean())
-                std = float(x.std())
-                rms = float(np.sqrt((x.astype(np.float64) ** 2).mean()))
-                hist = np.bincount(x // 16, minlength=16)[:16] / len(x)
-                nf = kernels.n_frames(len(x), 256, 64) if kind == "audio" else 0
-                rows.append(
-                    (mid, kind, True, int(len(x)), mean, std, rms, nf,
-                     hist.tolist())
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "kind", "ok", "n_values", "mean", "std",
-                         "rms", "n_frames", "hist"],
-            )
+    def row(mid, kind, sha, payload):
+        raw = bytes(payload)
+        if hashlib.sha256(raw).hexdigest() != sha:
+            return [(mid, kind, False, 0, None, None, None, None, None)]
+        # stub decode: payload bytes ARE the sample/pixel stream
+        x = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        mean = float(x.mean())
+        std = float(x.std())
+        rms = float(np.sqrt((x.astype(np.float64) ** 2).mean()))
+        hist = np.bincount(x // 16, minlength=16)[:16] / len(x)
+        nf = kernels.n_frames(len(x), 256, 64) if kind == "audio" else 0
+        return [(mid, kind, True, len(x), mean, std, rms, nf, hist)]
 
-    return media.select(
-        "media_id", "kind", "sha256", "payload"
-    ).mapInPandas(gen, schema=out_schema)
+    return map_rows(
+        media.select("media_id", "kind", "sha256", "payload"), row, out_schema
+    )

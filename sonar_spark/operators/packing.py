@@ -36,7 +36,7 @@ def pack_sequences(docs: DataFrame, *, capacity: int = 256) -> DataFrame:
     flag.  Deterministic: docs are folded in ascending `doc_id` order
     within each shard.
 
-    r6: the per-shard fold runs in an applyInPandas kernel — the
+    r6: the per-shard fold runs in an applyInArrow kernel — the
     Catalyst aggregate() built the output array with a concat per
     element, i.e. O(shard^2) struct copies per shard (a genuine
     scale-killer: quadratic in shard size, measured ~3 s at sf1.0's
@@ -46,20 +46,27 @@ def pack_sequences(docs: DataFrame, *, capacity: int = 256) -> DataFrame:
     test_pack_sequences_kernel_equals_fold.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from ..session import arrow_batch, arrow_schema
 
     cap_i = int(capacity)
     shard_type = docs.schema["source"].dataType.simpleString()
     id_type = docs.schema["doc_id"].dataType.simpleString()
+    schema = (
+        f"doc_id {id_type}, source {shard_type}, "
+        "window_id long, window_off long, truncated boolean"
+    )
+    out = arrow_schema(schema)
 
-    def pack_one(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack_one(t: pa.Table) -> pa.Table:
         # (id, n) sort matches sort_array's struct ordering in the
         # retained fold form (ids are unique in practice; the length
         # tie-break keeps the two forms identical if they ever are
-        # not)
-        pdf = pdf.sort_values(["doc_id", "n_tok"], kind="mergesort")
-        ids = pdf["doc_id"].to_numpy()
-        ns = pdf["n_tok"].to_numpy()
+        # not); Arrow's sort is stable
+        t = t.sort_by([("doc_id", "ascending"), ("n_tok", "ascending")])
+        ids = t.column("doc_id").to_numpy()
+        ns = t.column("n_tok").to_numpy()
         bins = np.empty(len(ids), dtype=np.int64)
         offs = np.empty(len(ids), dtype=np.int64)
         truncs = np.empty(len(ids), dtype=bool)
@@ -76,26 +83,17 @@ def pack_sequences(docs: DataFrame, *, capacity: int = 256) -> DataFrame:
             bins[j] = b
             offs[j] = off
             truncs[j] = trunc
-        return pd.DataFrame(
-            {
-                "doc_id": ids,
-                "source": pdf["source"].to_numpy(),
-                "window_id": bins,
-                "window_off": offs,
-                "truncated": truncs,
-            }
-        )
+        return pa.Table.from_batches([
+            arrow_batch(
+                out,
+                [ids, t.column("source").to_numpy(), bins, offs, truncs],
+            )
+        ])
 
     return (
         docs.select("source", "doc_id", "n_tok")
         .groupBy("source")
-        .applyInPandas(
-            pack_one,
-            schema=(
-                f"doc_id {id_type}, source {shard_type}, "
-                "window_id long, window_off long, truncated boolean"
-            ),
-        )
+        .applyInArrow(pack_one, schema)
     )
 
 

@@ -139,7 +139,7 @@ def semdedup(corpus: DataFrame, *, tau: float = 0.95) -> DataFrame:
     # the assigned table has this one consumer (nothing to persist).
     # ONE exchange on the cluster key; per-cluster state (Arrow
     # slices) carries across Arrow batches (clusters can exceed a
-    # 10k-row batch — the as-of mapInPandas lesson).
+    # 10k-row batch — the as-of per-batch kernel lesson).
     tau_f = float(tau)
 
     def _cluster_kernel(batches):

@@ -6,14 +6,15 @@ Hilbert-approximation envelope (temporal/envelope.go:76-103), and
 fundamental-frequency / pitch detection and tracking.
 
 Window functions + groupBy, except the per-frame pitch detector and
-tracker, which run numpy / a per-stream state machine in
-mapInArrow / mapInPandas.
+tracker, which run numpy / a per-stream state machine in mapInArrow.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import arrow_batch, arrow_schema
 
 
 def tempo_estimate(onsets: DataFrame) -> DataFrame:
@@ -727,10 +728,10 @@ def pitch_track(det: DataFrame) -> DataFrame:
     (see :class:`PitchTracker`).
 
     Shape: ONE shuffle (repartition on the key) + sortWithinPartitions
-    + mapInPandas streaming a per-key state machine over the sorted
-    rows.  groupBy.applyInPandas would pay the ~4-8 ms fixed
-    per-GROUP Arrow cost (the as-of/r1 finding) — at 5k one-doc
-    groups that is 20-40 s of pure overhead, 10x the actual work.
+    + mapInArrow streaming a per-key state machine over the sorted
+    rows.  A grouped map would pay the ~4-8 ms fixed per-GROUP Arrow
+    cost (the as-of/r1 finding) — at 5k one-doc groups that is
+    20-40 s of pure overhead, 10x the actual work.
     The post-processor is strictly forward (each frame depends only
     on prior state), so a doc whose rows straddle an Arrow batch
     boundary carries its history across batches in the generator
@@ -752,30 +753,24 @@ def pitch_track(det: DataFrame) -> DataFrame:
         " stability double"
     )
 
-    def gen(batches):
-        import pandas as pd
+    out = arrow_schema(out_schema)
 
+    def gen(batches):
         cur = None  # current key
         tr = PitchTracker()
-        cols = [
-            "doc_id", "frame_idx", "pitch_corrected", "pitch",
-            "f0_multiple", "salience", "stability",
-        ]
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        for batch in batches:
             rows = []
             for k, f, p, c in zip(
-                pdf["__k"], pdf["__f"], pdf["__pp"], pdf["__pc"]
+                *(col.to_numpy(zero_copy_only=False).tolist()
+                  for col in batch.columns)
             ):
                 if k != cur:
                     cur = k
                     tr.reset()
-                pc, sm, f0m, sal, st = tr.step(float(p), float(c))
-                rows.append((k, int(f), pc, sm, f0m, sal, st))
-            yield pd.DataFrame(rows, columns=cols)
+                rows.append((k, f, *tr.step(p, c)))
+            yield arrow_batch(out, zip(*rows))
 
-    return inp.mapInPandas(gen, schema=out_schema)
+    return inp.mapInArrow(gen, out_schema)
 
 
 # frame shape of the per-frame detector (W=32 hop=4 over the token
@@ -831,17 +826,10 @@ def pitch_nsdf_tokens(toks: DataFrame) -> DataFrame:
         idxW = np.arange(_WINDOW)
         for batch in batches:
             ids = batch.column(batch.schema.get_field_index("doc_id"))
-            tok = batch.column(
-                batch.schema.get_field_index("tokens")
+            flat, lens = kernels.list_flat(
+                batch.column(batch.schema.get_field_index("tokens"))
             )
-            lens = pc.list_value_length(tok).to_numpy().astype(
-                np.int64
-            )
-            flat = (
-                tok.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
+            flat = flat.astype(np.float64)
             starts, doc_nf = kernels.flat_frame_starts(
                 lens, _WINDOW, _HOP
             )

@@ -14,7 +14,7 @@ while EndFrame == frame-1, so the MaxGapLength revival logic is
 unreachable (reproduced by omission); tracks shorter than
 MinTrackLength = 3 points are dropped at finalize (:547-557).
 
-Spark shape: applyInPandas per signal — each signal's track state is
+Spark shape: applyInArrow per signal — each signal's track state is
 independent, so signals are the parallel unit (the same shape as the
 alignment kernels, SURVEY §4.3 [UDF]); peak counts per frame are
 bounded, so the per-group loop is O(frames x tracks x peaks) with
@@ -99,7 +99,10 @@ def track_peaks_sequence(frames: list[tuple[int, list[tuple[float, float]]]]):
 def harmonic_tracks(peaks: DataFrame) -> DataFrame:
     """Per-key harmonic tracks from a spectral-peak table.  Output:
     doc_id, track_id, frame_idx, freq, mag, point_idx."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
+
+    from ..session import arrow_batch, arrow_schema
 
     inp = peaks.select(
         F.col("doc_id").alias("__k"),
@@ -111,25 +114,22 @@ def harmonic_tracks(peaks: DataFrame) -> DataFrame:
         "doc_id long, track_id int, frame_idx int, freq double,"
         " mag double, point_idx int"
     )
+    out = arrow_schema(out_schema)
 
-    def run(pdf):
-        import pandas as pd
-
-        k = pdf["__k"].iloc[0]
+    def run(t):
+        ks, fs, pfs, pms = (c.to_numpy().tolist() for c in t.columns)
         by_frame: dict[int, list[tuple[float, float]]] = {}
-        for f, pf, pm in zip(pdf["__f"], pdf["__pf"], pdf["__pm"]):
-            by_frame.setdefault(int(f), []).append((float(pf), float(pm)))
+        for f, pf, pm in zip(fs, pfs, pms):
+            by_frame.setdefault(f, []).append((pf, pm))
         frames = []
         for f in range(max(by_frame) + 1):
             ps = sorted(by_frame.get(f, []), key=lambda p: (-p[1], p[0]))
             frames.append((f, ps))
-        rows = []
-        for tid, pts in track_peaks_sequence(frames):
-            for idx, (f, pf, pm) in enumerate(pts):
-                rows.append((k, tid, f, pf, pm, idx))
-        return pd.DataFrame(
-            rows,
-            columns=["doc_id", "track_id", "frame_idx", "freq", "mag", "point_idx"],
-        )
+        rows = [
+            (ks[0], tid, f, pf, pm, idx)
+            for tid, pts in track_peaks_sequence(frames)
+            for idx, (f, pf, pm) in enumerate(pts)
+        ]
+        return pa.Table.from_batches([arrow_batch(out, zip(*rows))])
 
-    return inp.groupBy("__k").applyInPandas(run, schema=out_schema)
+    return inp.groupBy("__k").applyInArrow(run, out_schema)

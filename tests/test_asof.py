@@ -9,9 +9,6 @@ that they return the same rows."""
 
 from __future__ import annotations
 
-import os
-
-import duckdb
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -23,7 +20,7 @@ import golden
 from sonar_spark import datagen
 from sonar_spark.config import AsofConfig
 from sonar_spark.operators.asof import asof_join
-from tools.check_oracle import TABLES, normalize, strict_equal
+from tools.check_oracle import assert_matches_oracle
 
 ASOF_QUERIES = [
     k for k in E.queries() if k.startswith("asof_") or k == "backfill_grid"
@@ -438,13 +435,5 @@ def test_asof_bucketed_adaptive_sizing_is_one_job(spark):
 def test_asof_query_matches_oracle(spark, sf_dir, name):
     """Every as-of query of queries() (and backfill_grid, which shares the
     union window) equals its DuckDB oracle at the test scale."""
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    a = normalize(E.queries()[name](spark, sf_dir).toPandas())
-    b = normalize(con.execute(E.oracle_sql()[name]).df())
-    assert list(a.columns) == list(b.columns)
-    assert len(a) == len(b)
-    assert strict_equal(a, b)[0], name
+    got = E.queries()[name](spark, sf_dir).toPandas()
+    assert_matches_oracle(got, sf_dir, name)

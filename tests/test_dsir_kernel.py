@@ -9,7 +9,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sonar_spark.functions.dsir import _gram_bucket_counts, _md5_bucket
+from sonar_spark.functions.dsir import (
+    _N_BUCKETS,
+    _gram_bucket_counts,
+    _md5_bucket,
+)
 
 
 def _docs(spark, sf_dir):
@@ -78,17 +82,14 @@ def _gram_stream_expr(
 
 def test_gram_bucket_counts_equal_expression_stream(spark, sf_dir):
     docs = _docs(spark, sf_dir)
-    kw = dict(
-        id_col="doc_id", target_col="is_target", words_col="words",
-        n_buckets=1024,
-    )
-    a = sorted(
-        map(tuple, _gram_bucket_counts(docs, **kw).collect())
-    )
+    a = sorted(map(tuple, _gram_bucket_counts(docs).collect()))
     b = sorted(
         map(
             tuple,
-            _gram_stream_expr(docs, **kw)
+            _gram_stream_expr(
+                docs, id_col="doc_id", target_col="is_target",
+                words_col="words", n_buckets=_N_BUCKETS,
+            )
             .groupBy("doc_id", "is_target", "__b")
             .agg(F.count("*").cast("long").alias("__c"))
             .collect(),

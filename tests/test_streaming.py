@@ -9,14 +9,13 @@ from __future__ import annotations
 import os
 import tempfile
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
 from sonar_spark.streaming import replay as R
 from sonar_spark.streaming.replay import replay
 from sonar_spark.streaming.windows import sessionize_stream, windowed_stats_stream
-from tools.check_oracle import TABLES, normalize, strict_equal
+from tools.check_oracle import assert_matches_oracle
 
 STREAM_QUERIES = [k for k in E.queries() if k.startswith("stream_")]
 
@@ -126,13 +125,4 @@ def test_stream_query_releases_sink(stream_runs, name):
 
 @pytest.mark.parametrize("name", STREAM_QUERIES)
 def test_stream_query_matches_oracle(stream_runs, sf_dir, name):
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    a = normalize(stream_runs(name)[0])
-    b = normalize(con.execute(E.oracle_sql()[name]).df())
-    assert list(a.columns) == list(b.columns)
-    assert len(a) == len(b)
-    assert strict_equal(a, b)[0], name
+    assert_matches_oracle(stream_runs(name)[0], sf_dir, name)

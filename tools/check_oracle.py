@@ -61,6 +61,28 @@ def strict_equal(a: pd.DataFrame, b: pd.DataFrame) -> tuple[bool, bool]:
     return exact, close
 
 
+def duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per test-data table at sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def assert_matches_oracle(got: pd.DataFrame, sf_dir: str, name: str) -> None:
+    """got (query ``name``'s Spark output) has the columns, row count and
+    exact values of its DuckDB oracle at sf_dir."""
+    import __spark_entry__ as E
+
+    a = normalize(got)
+    b = normalize(duck(sf_dir).execute(E.oracle_sql()[name]).df())
+    assert list(a.columns) == list(b.columns), name
+    assert len(a) == len(b), name
+    assert strict_equal(a, b)[0], name
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -81,12 +103,7 @@ def main() -> int:
           f"{time.time()-t0:.1f}s", flush=True)
     assert n >= 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
+    con = duck(sf_dir)
     qs, oracles = E.queries(), E.oracle_sql()
     failed = []
     for name, fn in qs.items():
