@@ -130,7 +130,7 @@ def entry(spark: SparkSession) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = to_token_table(docs)
     feats = frame_features_arrow(toks, FrameConfig(window=32, hop=8))
-    left = feats.withColumn("entity", entity_of(F.col("doc_id"), 16)).withColumn(
+    left = feats.withColumn("entity", entity_of(F.col("doc_id"))).withColumn(
         "ts", F.col("frame_ts")
     )
     ev = _t(spark, sf_dir, "events")
@@ -145,12 +145,6 @@ def entry(spark: SparkSession) -> DataFrame:
     joined = asof_join(
         left,
         catalog,
-        key="entity",
-        left_ts="ts",
-        right_ts="ref_ts",
-        version="ref_version",
-        payload=("ref_features",),
-        strategy="union",
     )
     return joined.groupBy("doc_id", "source").agg(
         F.count("*").alias("n_frames"),
@@ -187,7 +181,7 @@ def q_sessionize_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumn(
         "ts_sec", F.unix_timestamp(F.col("ts"))
     )
-    s = sessionize_by_gap(ev, key="user_id", ts="ts_sec", gap=1800)
+    s = sessionize_by_gap(ev)
     return s.groupBy("user_id", "session_id").agg(
         F.min("ts_sec").alias("session_start"),
         F.count("*").alias("n_events"),
@@ -229,10 +223,7 @@ def q_asof_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         right,
         key="user_id",
         left_ts="ts_sec",
-        right_ts="ref_ts",
-        version="ref_version",
         payload=("ref_value",),
-        strategy="union",
     ).select(
         "event_id", "user_id", "ts_sec", "matched_ref_ts", "ref_version", "ref_value"
     )
@@ -248,8 +239,6 @@ def q_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         right,
         key="user_id",
         left_ts="ts_sec",
-        right_ts="ref_ts",
-        version="ref_version",
         payload=("ref_value",),
         cfg=AsofConfig(bucket_width=None),
         strategy="bucketed",
@@ -316,10 +305,6 @@ def q_percentiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = h.persist()
     q = quantile_histogram(
         h,
-        value="__v",
-        group="l_returnflag",
-        qs={"q1": 0.25, "q3": 0.75, "q95": 0.95},
-        counts="__c",
     ).drop("__n")
     iqr = F.col("q3") - F.col("q1")
     j = h.join(F.broadcast(q), "l_returnflag")
@@ -463,9 +448,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    out = allpairs_cosine(
-        emb, f"{sf_dir}/embeddings.parquet", threshold=0.4
-    )
+    out = allpairs_cosine(emb, f"{sf_dir}/embeddings.parquet")
     return out.select(
         "id_a", "id_b", F.round("s", 6).alias("cosine_sim")
     )
@@ -686,7 +669,7 @@ def q_curation_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         job = CurationJob(base, n_buckets=8)
         job.run(docs)
-        job.run_chunks(docs, window=32, stride=24)
+        job.run_chunks(docs)
         res = job.chunks(spark).select(
             "doc_id", "chunk_id", "start", "chunk_len", "chunk_md5"
         )
@@ -723,7 +706,7 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavior is property-tested in pytest against brute-force pairs."""
     corpus = _dup_corpus(spark, sf_dir)
     sigs = minhash_fingerprints(corpus, MinHashConfig())
-    cand = simhash_near_duplicates(sigs, max_hamming=3).select("doc_a", "doc_b")
+    cand = simhash_near_duplicates(sigs).select("doc_a", "doc_b")
     words = _dup_corpus_words(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
     j = (
         cand.join(
@@ -787,7 +770,7 @@ def q_align_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             enable_spectral=False, enable_mfcc=False,
         ),
     )
-    pairs = _chirp_pairs(build_doc_series(feats, "rms_energy"))
+    pairs = _chirp_pairs(build_doc_series(feats))
     out = align_pairs(pairs, AlignmentConfig(max_lag=8))
     return out.select("pair_id", "lag")
 
@@ -812,7 +795,7 @@ def q_align_best_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             enable_mfcc=False,
         ),
     )
-    rms = build_doc_series(feats, "rms_energy").withColumnRenamed(
+    rms = build_doc_series(feats).withColumnRenamed(
         "series", "energy"
     )
     cen = build_doc_series(feats, "centroid").withColumnRenamed(
@@ -853,7 +836,7 @@ def q_dc_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly on a decimal rounding boundary (R=0.995 with integer
     # inputs yields EXACT decimals like 4.980075 that round-half
     # differently per engine)
-    out = dc_removal(toks, pole=dc_pole(64, 0.5))
+    out = dc_removal(toks, pole=dc_pole())
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode("filtered").alias("pos", "y"),
@@ -881,7 +864,7 @@ def q_bandpass(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = to_token_length_table(_t(spark, sf_dir, "documents")).where(
         F.col("doc_id").cast("long") < 50
     )
-    out = bandpass(toks, sample_rate=64, center_freq=8.0, q=1.0)
+    out = bandpass(toks)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode("filtered").alias("pos", "y"),
@@ -926,8 +909,7 @@ def q_distance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings").where(F.col("vec_id") < 12)
     out = distance_matrix(
-        emb, "vec_id", "embedding",
-        {"euclidean": euclidean, "pearson_dist": pearson_distance},
+        emb, {"euclidean": euclidean, "pearson_dist": pearson_distance},
     )
     return out.select(
         "id_a",
@@ -977,7 +959,7 @@ def q_compare_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fps = stats.join(sigs, "doc_id").join(mc, "doc_id")
-    out = compare_topk(fps, fps, k=3)
+    out = compare_topk(fps, fps)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),
@@ -1079,7 +1061,7 @@ def q_compare_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     fps = _explicit_doc_stats(feats)
-    out = compare_topk(fps, fps, k=3, candidates=sym)
+    out = compare_topk(fps, fps, candidates=sym)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),
@@ -1130,7 +1112,7 @@ def q_featurize_music(spark: SparkSession, sf_dir: str) -> DataFrame:
         for src in ("web", "books", "code", "news")
     }
     ccfg = ComparisonConfig(weights=music_w)
-    out = compare_topk(fps, fps, ccfg, k=3)
+    out = compare_topk(fps, fps, ccfg)
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("rank").cast("int").alias("rank"),
@@ -1151,7 +1133,7 @@ def q_normalize_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.normalize import normalize
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    z = normalize(ev, "value", "zscore", group="user_id", out_col="z")
+    z = normalize(ev, "value", group="user_id", out_col="z")
     r = normalize(z, "value", "robust", group="user_id", out_col="rb")
     return r.select(
         "event_id",
@@ -1171,10 +1153,8 @@ def q_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts_sec", F.unix_timestamp("ts"))
         .select("event_id", "user_id", "ts_sec", "value")
     )
-    ma = moving_average(ev, "value", k=2, group="user_id",
-                        order=["ts_sec", "event_id"], out_col="ma")
-    md = median_filter(ma, "value", k=2, group="user_id",
-                       order=["ts_sec", "event_id"], out_col="med")
+    ma = moving_average(ev)
+    md = median_filter(ma)
     return md.select(
         "event_id",
         F.round("ma", 6).alias("moving_avg"),
@@ -1201,11 +1181,7 @@ def q_silence_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = rms.join(F.broadcast(stats), "doc_id")
     segs = detect_silence(
         flagged,
-        key="doc_id",
-        order="frame_idx",
-        energy="rms_energy",
         threshold=F.col("__mu"),
-        min_run=2,
     )
     return segs.select("doc_id", "seg_start", "seg_end", "run_len")
 
@@ -1243,9 +1219,6 @@ def q_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segs = detect_voice_activity(
         flagged,
         energy_thr=F.col("__mu"),
-        zcr_low=0.0,
-        zcr_high=0.9,
-        min_run=3,
     )
     return segs.select(
         "doc_id",
@@ -1281,7 +1254,7 @@ def q_attack_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "frame_idx", "rms_energy")
     )
-    out = attack_decay(fr, peaks, lookback=10, level=0.5)
+    out = attack_decay(fr, peaks)
     return out.select(
         "doc_id",
         F.col("frame_idx").cast("long").alias("frame_idx"),
@@ -1304,7 +1277,7 @@ def q_consistency_trials(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats = frame_features_arrow(
         to_token_length_table(docs), FrameConfig(window=8, hop=2)
     )
-    pairs = _chirp_pairs(build_doc_series(feats, "rms_energy"))
+    pairs = _chirp_pairs(build_doc_series(feats))
     out = consistency_trials(pairs, AlignmentConfig(max_lag=8))
     return out.select(
         "pair_id",
@@ -1342,8 +1315,7 @@ def q_pause_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
         "in_pause", (F.col("rms_energy") <= F.col("__thr")).cast("int")
     )
     segs = segment_runs(
-        flagged, key="doc_id", order="frame_idx", flag="in_pause",
-        min_run=1,
+        flagged, flag="in_pause",
     )
     frame_time = 0.05
     out = segs.where(F.col("in_pause") == 1).withColumn(
@@ -1366,11 +1338,8 @@ def q_onsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rms = _doc_frame_rms(spark, sf_dir)
     on = detect_onsets(
         rms,
-        key="doc_id",
-        order="frame_idx",
         signal="rms_energy",
         threshold_scale=1.05,
-        min_interval=1,
     )
     return on.select(
         "doc_id", "frame_idx", F.round("rms_energy", 6).alias("rms_energy")
@@ -1494,10 +1463,10 @@ def q_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (no _par: A/B-measured no sf1.0 win — the search is probe- and
     # join-bound, not assign-bound — and a sf0.1 cost)
     emb = _t(spark, sf_dir, "embeddings")
-    cents = train_centroids(emb, n_centroids=8, seed=42)
+    cents = train_centroids(emb)
     index = ivf_assign(emb, cents)
     qs = emb.where(F.col("vec_id") < 8)
-    out = ivf_search(index, qs, cents, k=5, n_probe=8)
+    out = ivf_search(index, qs, cents)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),
@@ -1527,7 +1496,7 @@ def q_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _par(spark, _t(spark, sf_dir, "embeddings"))
     index = pq_index(emb, C, B)
     qs = emb.where(F.col("vec_id") < 8)
-    out = pq_search(index, qs, C, B, k=5, n_probe=2)
+    out = pq_search(index, qs, C, B)
     return out.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),
@@ -1731,7 +1700,7 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.select(
         "doc_id",
         F.col("pos").cast("long").alias("pos"),
-        F.round(interpolate_at(F.col("s"), idx, "linear"), 6).alias(
+        F.round(interpolate_at(F.col("s"), idx), 6).alias(
             "lin"
         ),
         F.round(interpolate_at(F.col("s"), idx, "cubic"), 6).alias(
@@ -1770,17 +1739,17 @@ def q_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(
                 F.struct(
                     F.lit("resample43").alias("kind"),
-                    resample_signal(F.col("s"), 4, 3, "linear").alias(
+                    resample_signal(F.col("s")).alias(
                         "vals"
                     ),
                 ),
                 F.struct(
                     F.lit("up2").alias("kind"),
-                    upsample_signal(F.col("s"), 2).alias("vals"),
+                    upsample_signal(F.col("s")).alias("vals"),
                 ),
                 F.struct(
                     F.lit("down2").alias("kind"),
-                    downsample_signal(F.col("s"), 2).alias("vals"),
+                    downsample_signal(F.col("s")).alias("vals"),
                 ),
             )
         ).alias("t"),
@@ -1824,7 +1793,7 @@ def q_dbscan_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.clustering import dbscan
 
     pts = _emb_points(spark, sf_dir, 64, 4)
-    out = dbscan(pts, eps=0.15, min_pts=3)
+    out = dbscan(pts)
     return out.select(
         F.col("id").alias("vec_id"),
         F.col("label").cast("long").alias("label"),
@@ -1844,7 +1813,7 @@ def q_dbscan_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.clustering import cluster_eval, dbscan
 
     pts = _emb_points(spark, sf_dir, 64, 4)
-    lab = dbscan(pts, eps=0.15, min_pts=3)
+    lab = dbscan(pts)
     labeled = pts.join(lab, "id")
     mem = labeled.where(F.col("label") >= 0)
     centers = mem.groupBy("label").agg(
@@ -1874,7 +1843,7 @@ def q_kmedoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.clustering import kmedoids_cluster
 
     pts = _emb_points(spark, sf_dir, 24, 4)
-    out = kmedoids_cluster(pts, k=3, max_iter=20)
+    out = kmedoids_cluster(pts)
     return out.select(
         F.col("id").alias("vec_id"),
         F.col("label").cast("long").alias("label"),
@@ -1891,7 +1860,7 @@ def q_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.clustering import hierarchical_clusters
 
     pts = _emb_points(spark, sf_dir, 16, 4)
-    out = hierarchical_clusters(pts, k=4, linkage="ward")
+    out = hierarchical_clusters(pts)
     return out.select(
         F.col("id").alias("vec_id"),
         F.col("label").cast("long").alias("label"),
@@ -1909,7 +1878,7 @@ def q_gmm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.clustering import gmm_cluster
 
     pts = _emb_points(spark, sf_dir, 24, 2)
-    out = gmm_cluster(pts, k=2, max_iter=4)
+    out = gmm_cluster(pts)
     return out.select(
         F.col("id").alias("vec_id"),
         F.col("label").cast("long").alias("label"),
@@ -1929,7 +1898,7 @@ def q_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum path is pytest-covered (tests/test_multimodal.py)."""
     from sonar_spark.operators.multimodal import media_features, synth_media_table
 
-    media = synth_media_table(spark, 64)
+    media = synth_media_table(spark)
     out = media_features(media)
     return out.select(
         "media_id",
@@ -2102,11 +2071,8 @@ def q_tempo(spark: SparkSession, sf_dir: str) -> DataFrame:
     rms = _doc_frame_rms(spark, sf_dir)
     on = detect_onsets(
         rms,
-        key="doc_id",
-        order="frame_idx",
         signal="rms_energy",
         threshold_scale=1.05,
-        min_interval=1,
     )
     t = tempo_estimate(on)
     return t.where(F.col("n_onsets") >= 2).select(
@@ -2213,8 +2179,8 @@ def q_similarity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 32)
-    knn = knn_bruteforce(qs, emb, k=10)
-    out = similarity_statistics(knn, sim="cosine_sim")
+    knn = knn_bruteforce(qs, emb)
+    out = similarity_statistics(knn)
     return out.select(
         "query_id",
         "n",
@@ -2264,7 +2230,7 @@ def q_divergences(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(A.emd_1d(p, q), 6).alias("emd"),
         F.round(A.canberra(F.col("va"), F.col("vb")), 6).alias("canberra"),
         F.round(A.bray_curtis(F.col("va"), F.col("vb")), 6).alias("bray_curtis"),
-        F.round(A.minkowski(F.col("va"), F.col("vb"), 3.0), 6).alias(
+        F.round(A.minkowski(F.col("va"), F.col("vb")), 6).alias(
             "minkowski3"
         ),
     )
@@ -2333,7 +2299,7 @@ def _mfcc_oracle_sql() -> str:
     reprs round-trip float64 exactly)."""
     from sonar_spark import kernels
 
-    FB, DCT, LIFT = kernels.mfcc_matrices(16)
+    FB, DCT, LIFT = kernels.mfcc_matrices()
     fb_rows = ", ".join(
         f"({f}, {k}, {float(FB[f, k])!r})"
         for f in range(FB.shape[0])
@@ -2434,7 +2400,7 @@ def q_window_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.append(
             spark.range(1).select(
                 F.lit(t).alias("window_type"),
-                window_coefficients_expr(t, 32).alias("c"),
+                window_coefficients_expr(t).alias("c"),
             )
         )
     df = parts[0]
@@ -2493,7 +2459,7 @@ def q_percentile_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.percentiles import percentile_methods
 
     li = _t(spark, sf_dir, "lineitem")
-    out = percentile_methods(li, "l_quantity", "l_returnflag")
+    out = percentile_methods(li)
     return out.select(
         "l_returnflag",
         "method",
@@ -2510,7 +2476,7 @@ def q_entropy_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.entropy import entropy_variants
 
     ev = _t(spark, sf_dir, "events")
-    out = entropy_variants(ev, "value", "event_type")
+    out = entropy_variants(ev, "value")
     return out.select(
         "event_type",
         "rule",
@@ -2533,7 +2499,7 @@ def q_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _t(spark, sf_dir, "events")
     out = entropy_rate_conditional(
-        ev, "value", "event_type", [F.col("ts"), F.col("event_id")]
+        ev, [F.col("ts"), F.col("event_id")]
     )
     return out.select(
         "event_type",
@@ -2555,7 +2521,7 @@ def q_envelope_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode("tokens").alias("pos", "v"),
     )
-    out = envelope_hilbert(vals, key="doc_id", order="pos", signal="v")
+    out = envelope_hilbert(vals)
     return out.select(
         "doc_id", "pos", F.round("envelope", 6).alias("envelope")
     )
@@ -2588,7 +2554,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("embedding"),
     )
     corpus = base.unionByName(pert)
-    cand = hyperplane_lsh_pairs(corpus, n_bits=256, band_bits=16)
+    cand = hyperplane_lsh_pairs(corpus)
     va = corpus.select(
         F.col("vec_id").alias("doc_a"), F.col("embedding").alias("va")
     )
@@ -2622,8 +2588,8 @@ def q_voice_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rms = _doc_frame_rms(spark, sf_dir)
     on = detect_onsets(
-        rms, key="doc_id", order="frame_idx", signal="rms_energy",
-        threshold_scale=1.05, min_interval=1,
+        rms, signal="rms_energy",
+        threshold_scale=1.05,
     )
     out = voice_quality(rms, on)
     return out.select(
@@ -2650,9 +2616,9 @@ def q_hpcp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    out = hpcp(peaks, ["doc_id", "frame_idx"])
+    out = hpcp(peaks)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -2672,7 +2638,7 @@ def q_spectral_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     out = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=3, min_height=1.0
+        grid, min_height=1.0
     )
     return out.select(
         "doc_id",
@@ -2694,13 +2660,13 @@ def q_harmonic_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
     f0 = peaks.groupBy("doc_id", "frame_idx").agg(
         F.min_by("refined_freq", "bin").alias("f0")
     )
     p = peaks.join(f0, ["doc_id", "frame_idx"])
-    out = assign_harmonics(p, ["doc_id", "frame_idx"])
+    out = assign_harmonics(p)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -2720,8 +2686,8 @@ def q_hnr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rms = _doc_frame_rms(spark, sf_dir)
     on = detect_onsets(
-        rms, key="doc_id", order="frame_idx", signal="rms_energy",
-        threshold_scale=1.05, min_interval=1,
+        rms, signal="rms_energy",
+        threshold_scale=1.05,
     )
     t = tempo_estimate(on).where(
         (F.col("n_onsets") >= 2) & F.col("dominant_ioi").isNotNull()
@@ -3051,7 +3017,7 @@ def q_hps_f0(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.peaks import harmonic_product_f0
 
     grid = _hist_grid(spark, sf_dir)
-    out = harmonic_product_f0(grid, ["doc_id", "frame_idx"])
+    out = harmonic_product_f0(grid)
     return out.select(
         "doc_id", "frame_idx", "f0_bin", F.round("hps", 6).alias("hps")
     )
@@ -3066,10 +3032,10 @@ def q_key_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    pcp = hpcp(peaks, ["doc_id", "frame_idx"])
-    out = estimate_key(pcp, ["doc_id", "frame_idx"])
+    pcp = hpcp(peaks)
+    out = estimate_key(pcp)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -3409,9 +3375,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks = [ev.where(F.pmod(F.col("event_id"), F.lit(3)) == ci) for ci in range(3)]
     return replay(
         chunks,
-        lambda s: sessionize_stream(
-            s, ts="ts", key="user_id", gap="30 minutes", watermark="3650 days"
-        ),
+        lambda s: sessionize_stream(s),
         "complete",
     ).select(
         "user_id",
@@ -3439,8 +3403,7 @@ def q_stream_windowed_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return replay(
         chunks,
         lambda s: windowed_stats_stream(
-            s, ts="ts", value="value", group="event_type",
-            window="1 hour", watermark="3650 days",
+            s,
         ),
         "complete",
     ).select(
@@ -3472,7 +3435,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.array_distinct(
-                ngrams_ws(F.split(F.trim(F.col("text")), r"\s+"), 4)
+                ngrams_ws(F.split(F.trim(F.col("text")), r"\s+"))
             )
         ).alias("sh"),
     )
@@ -3562,8 +3525,8 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     words = _dup_corpus_words(spark, sf_dir)
-    fps = winnow_fingerprints(words, k=4, w=4)
-    return fingerprint_matches(fps, max_doc_freq=8, min_shared=3)
+    fps = winnow_fingerprints(words)
+    return fingerprint_matches(fps)
 
 
 def q_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3617,7 +3580,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _par(spark, _t(spark, sf_dir, "documents")).select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return substring_spans(docs, k=4)
+    return substring_spans(docs)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3636,7 +3599,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tok"),
     )
-    return pack_sequences(docs, capacity=96)
+    return pack_sequences(docs)
 
 
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3674,9 +3637,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit(" call 555-"), s(1000 + (i % 9000))),
         ).otherwise(F.lit("")),
     )
-    return pii_scrub(
-        docs.select("doc_id", payload.alias("payload")), text_col="payload"
-    )
+    return pii_scrub(docs.select("doc_id", payload.alias("payload")))
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3698,7 +3659,7 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return segmented_words(docs, n_merges=8)
+    return segmented_words(docs)
 
 
 def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3711,7 +3672,7 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _par(spark, _t(spark, sf_dir, "documents")).select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    seg = segmented_words(docs, n_merges=8)
+    seg = segmented_words(docs)
     return bpe_tokenize_stats(docs, seg)
 
 
@@ -3727,7 +3688,7 @@ def q_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _par(spark, _t(spark, sf_dir, "documents")).select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return tfidf_topk(docs, k=5)
+    return tfidf_topk(docs)
 
 
 def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3742,7 +3703,7 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return bm25_scores(docs, ["query", "stream", "dup"], top_n=20)
+    return bm25_scores(docs)
 
 
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3757,7 +3718,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _par(spark, _t(spark, sf_dir, "documents")).select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return ngram_novelty(docs, k=4)
+    return ngram_novelty(docs)
 
 
 def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3809,7 +3770,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (1.0 + 0.01 * F.sin((i + 1).cast("double"))),
         ).alias("embedding"),
     )
-    return semdedup(base.unionByName(pert), tau=0.95)
+    return semdedup(base.unionByName(pert))
 
 
 def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3824,7 +3785,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return pmi_collocations(docs, min_count=5, top_n=50)
+    return pmi_collocations(docs)
 
 
 def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3869,7 +3830,7 @@ def q_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "source", F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return temperature_mix(docs, temperature=0.3, budget=1_000_000)
+    return temperature_mix(docs)
 
 
 def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3881,7 +3842,7 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.packing import chunk_dedup
 
     words = _dup_corpus_words(spark, sf_dir)
-    return chunk_dedup(words, window=8, stride=8)
+    return chunk_dedup(words)
 
 
 def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4005,7 +3966,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.explode(
             F.array_distinct(
-                ngrams_ws(F.split(F.trim(F.col("text")), r"\s+"), 4)
+                ngrams_ws(F.split(F.trim(F.col("text")), r"\s+"))
             )
         ).alias("sh"),
     )
@@ -4055,7 +4016,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         F.split(F.trim(F.col("text")), r"\s+").alias("words")
     )
-    return cms_heavy_hitters(docs, top_n=10)
+    return cms_heavy_hitters(docs)
 
 
 def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4104,7 +4065,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for ci in range(3)
     ]
     return replay(
-        chunks, lambda s: dedup_stream(s, F.md5("text"), ts="ts"), "append"
+        chunks, lambda s: dedup_stream(s, F.md5("text")), "append"
     ).select(
         F.md5("text").alias("fp"),
         "n_tokens",
@@ -4188,8 +4149,8 @@ def q_delay_line(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode("tokens").alias("pos", "v"),
     ).withColumn("v", F.col("v").cast("double"))
-    d = delay_line(vals, "v", 3, key="doc_id", order="pos")
-    d = delay_line_interpolated(d, "v", 2.5, key="doc_id", order="pos")
+    d = delay_line(vals)
+    d = delay_line_interpolated(d)
     return d.select(
         "doc_id",
         F.col("pos").cast("long").alias("pos"),
@@ -4222,8 +4183,7 @@ def q_overlap_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("window"),
     )
     out = overlap_add(
-        wf, key="doc_id", frame_col="frame_idx", window_col="window",
-        hop=4,
+        wf,
     )
     return out.select(
         "doc_id",
@@ -4338,7 +4298,7 @@ def q_cepstrum_f0(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.peaks import cepstrum_f0
 
     grid = _hist_grid(spark, sf_dir)
-    out = cepstrum_f0(grid, ["doc_id", "frame_idx"])
+    out = cepstrum_f0(grid)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -4380,10 +4340,10 @@ def q_chord_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    pcp = hpcp(peaks, ["doc_id", "frame_idx"])
-    out = detect_chords(pcp, ["doc_id", "frame_idx"])
+    pcp = hpcp(peaks)
+    out = detect_chords(pcp)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -4408,12 +4368,12 @@ def q_chord_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    pcp = hpcp(peaks, ["doc_id", "frame_idx"])
-    f0 = harmonic_product_f0(grid, ["doc_id", "frame_idx"])
-    bass = bass_from_f0(f0, ["doc_id", "frame_idx"])
-    out = detect_chords_full(pcp, bass, ["doc_id", "frame_idx"])
+    pcp = hpcp(peaks)
+    f0 = harmonic_product_f0(grid)
+    bass = bass_from_f0(f0)
+    out = detect_chords_full(pcp, bass)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -4535,9 +4495,9 @@ def q_harmonic_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    out = harmonic_ratio_spectral(peaks, ["doc_id", "frame_idx"])
+    out = harmonic_ratio_spectral(peaks)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -4795,7 +4755,7 @@ def q_key_estimation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.tonal import key_estimation_full
 
     pcp = _doc_hpcp(spark, sf_dir)
-    out = key_estimation_full(pcp, ["doc_id", "frame_idx"])
+    out = key_estimation_full(pcp)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -4818,9 +4778,7 @@ def q_chroma_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "frame_idx", "pitch_class",
         F.round("hpcp", 6).alias("cv"),
     )
-    out = chroma_vector_stats(
-        pcp, ["doc_id", "frame_idx"], value_col="cv"
-    )
+    out = chroma_vector_stats(pcp)
     # mean = (sum of 6-dp decimals) / 12 lands EXACTLY on a x.xxxxxx5
     # rounding tie whenever the micro-unit sum is 6 mod 12 — Spark's
     # BigDecimal HALF_UP and DuckDB's double-based round disagree on
@@ -4856,9 +4814,9 @@ def q_harmonic_ratio_hnr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    out = harmonic_ratio_hnr(grid, peaks, ["doc_id", "frame_idx"])
+    out = harmonic_ratio_hnr(grid, peaks)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -5093,9 +5051,9 @@ def q_inharmonicity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    out = inharmonicity(grid, peaks, ["doc_id", "frame_idx"])
+    out = inharmonicity(grid, peaks)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -5127,13 +5085,13 @@ def q_chord_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
-    pcp = hpcp(peaks, ["doc_id", "frame_idx"])
-    f0 = harmonic_product_f0(grid, ["doc_id", "frame_idx"])
-    bass = bass_from_f0(f0, ["doc_id", "frame_idx"])
-    best = detect_chords_full(pcp, bass, ["doc_id", "frame_idx"])
-    out = chord_analysis(best, pcp, ["doc_id", "frame_idx"])
+    pcp = hpcp(peaks)
+    f0 = harmonic_product_f0(grid)
+    bass = bass_from_f0(f0)
+    best = detect_chords_full(pcp, bass)
+    out = chord_analysis(best, pcp)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -5165,9 +5123,7 @@ def q_tonnetz(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinates, (0,0) below the 1e-10 weight floor."""
     from sonar_spark.operators.chroma import tonnetz_centroids
 
-    out = tonnetz_centroids(
-        _doc_hpcp(spark, sf_dir), ["doc_id", "frame_idx"]
-    )
+    out = tonnetz_centroids(_doc_hpcp(spark, sf_dir))
     return out.select("doc_id", "frame_idx", "centroid_x", "centroid_y")
 
 
@@ -5180,9 +5136,7 @@ def q_tonnetz_movement(spark: SparkSession, sf_dir: str) -> DataFrame:
         tonnetz_movement,
     )
 
-    traj = tonnetz_centroids(
-        _doc_hpcp(spark, sf_dir), ["doc_id", "frame_idx"]
-    )
+    traj = tonnetz_centroids(_doc_hpcp(spark, sf_dir))
     out = tonnetz_movement(traj)
     return out.select(
         "doc_id",
@@ -5216,9 +5170,7 @@ def q_chroma_shift_optimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = pr.join(m, F.col("doc_id") == F.col("mid")).select(
         "qid", "mid", "pitch_class", "mv"
     )
-    out = chroma_shift_optimal(
-        left, right, ["qid", "mid"], value_col="mv"
-    )
+    out = chroma_shift_optimal(left, right)
     return out.select(
         "qid",
         "mid",
@@ -5265,9 +5217,7 @@ def q_chroma_seq_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = pr.join(pcp, F.col("doc_id") == F.col("mid")).select(
         "qid", "mid", "frame_idx", "pitch_class", "cv"
     )
-    out = chroma_cross_similarity(
-        left, right, ["qid", "mid"], value_col="cv"
-    )
+    out = chroma_cross_similarity(left, right)
     return out.select(
         "qid",
         "mid",
@@ -5319,9 +5269,7 @@ def q_chroma_seq_dtw(spark: SparkSession, sf_dir: str) -> DataFrame:
     path length, similarity = exp(-corner/path)."""
     from sonar_spark.operators.chroma import chroma_dp_similarity
 
-    out = chroma_dp_similarity(
-        _chroma_seq_pairs(spark, sf_dir), ["qid", "mid"], method="dtw"
-    )
+    out = chroma_dp_similarity(_chroma_seq_pairs(spark, sf_dir))
     return out.select(
         "qid",
         "mid",
@@ -5339,7 +5287,7 @@ def q_chroma_seq_sw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.chroma import chroma_dp_similarity
 
     out = chroma_dp_similarity(
-        _chroma_seq_pairs(spark, sf_dir), ["qid", "mid"], method="sw"
+        _chroma_seq_pairs(spark, sf_dir), method="sw"
     )
     return out.select(
         "qid",
@@ -5355,7 +5303,7 @@ def _peaks_for_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     return spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
 
 
@@ -6356,15 +6304,13 @@ def q_harmonic_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     grid = _hist_grid(spark, sf_dir)
     peaks = spectral_peaks(
-        grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+        grid, max_peaks=16, min_height=1e-05
     )
     f0 = peaks.groupBy("doc_id", "frame_idx").agg(
         F.min_by("refined_freq", "bin").alias("f0")
     )
-    p = assign_harmonics(
-        peaks.join(f0, ["doc_id", "frame_idx"]), ["doc_id", "frame_idx"]
-    )
-    out = harmonic_series_analysis(p, ["doc_id", "frame_idx"])
+    p = assign_harmonics(peaks.join(f0, ["doc_id", "frame_idx"]))
+    out = harmonic_series_analysis(p)
     return out.select(
         "doc_id",
         "frame_idx",
@@ -6385,14 +6331,13 @@ def q_onsets_complex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     feats = _doc_frame_rms(spark, sf_dir)
     flux_on = detect_onsets(
-        feats, key="doc_id", order="frame_idx", signal="flux",
-        threshold_scale=1.5, min_interval=1,
+        feats,
     )
     energy_on = detect_onsets(
-        feats, key="doc_id", order="frame_idx", signal="rms_energy",
-        threshold_scale=1.05, min_interval=1,
+        feats, signal="rms_energy",
+        threshold_scale=1.05,
     )
-    out = combine_onsets(flux_on, energy_on, tolerance=2)
+    out = combine_onsets(flux_on, energy_on)
     return out.select("doc_id", F.col("frame_idx").alias("onset_frame"))
 
 
@@ -6502,9 +6447,7 @@ def q_backfill_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.backfill import backfill_grid
 
     ev = _t(spark, sf_dir, "events")
-    return backfill_grid(
-        ev, entity_col="user_id", ts_col="ts", value_col="value", step=21600
-    )
+    return backfill_grid(ev)
 
 
 def q_asof_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6526,11 +6469,6 @@ def q_asof_directions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return asof_join_nearest(
         left,
         right,
-        key="user_id",
-        left_ts="ts_sec",
-        right_ts="ref_ts",
-        version="ref_version",
-        payload=("ref_value",),
     )
 
 
@@ -6546,7 +6484,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.functions.sampling import weighted_sample
 
     docs = _par(spark, _t(spark, sf_dir, "documents"))
-    return weighted_sample(docs, k=5, strata_col="source", salt="es1")
+    return weighted_sample(docs)
 
 
 def q_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6569,9 +6507,7 @@ def q_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
     )
-    out = ddsketch_quantiles(
-        ev, group_col="event_type", value_col="cents"
-    )
+    out = ddsketch_quantiles(ev)
     return out.withColumn("merge_ok", F.col("merge_ok").cast("int"))
 
 
@@ -6637,10 +6573,8 @@ def q_grid_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.backfill import backfill_grid, grid_features
 
     ev = _t(spark, sf_dir, "events")
-    bf = backfill_grid(
-        ev, entity_col="user_id", ts_col="ts", value_col="value", step=21600
-    )
-    return grid_features(bf, entity_col="user_id", window=8)
+    bf = backfill_grid(ev)
+    return grid_features(bf)
 
 
 def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6754,7 +6688,7 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_tok"),
     )
-    return shard_balance(docs, n_shards=8)
+    return shard_balance(docs)
 
 
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6782,9 +6716,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").repartition(
         spark.sparkContext.defaultParallelism
     )
-    return hard_negatives_allpairs(
-        emb, f"{sf_dir}/embeddings.parquet", k=3, pos_threshold=0.4
-    )
+    return hard_negatives_allpairs(emb, f"{sf_dir}/embeddings.parquet")
 
 
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6836,7 +6768,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_dedup(
         words.where(is_batch),
         words.where(~is_batch),
-        threshold=0.8,
         candidate_pairs=cand,
     )
 
@@ -6889,12 +6820,6 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof_join_tolerance(
         left,
         right,
-        key="user_id",
-        left_ts="ts_sec",
-        right_ts="ref_ts",
-        version="ref_version",
-        payload=("ref_value",),
-        tolerance=3600,
     )
     # int-cast the nullable boolean (None vs NaN normalizes
     # differently in the compare — the merge_ok precedent)
@@ -6927,7 +6852,7 @@ def q_epoch_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.trim(F.col("text")), r"\s+").alias("words"),
     )
     mix = temperature_mix(
-        words.select("source", "words"), temperature=0.3, budget=1_000_000
+        words.select("source", "words"),
     ).select("source", "tokens", "alloc_tokens")
     d = words.select(
         "doc_id", "source", F.size("words").cast("long").alias("n_tok")
@@ -6990,7 +6915,7 @@ def q_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sonar_spark.operators.negatives import negative_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return negative_pairs(docs, k=4, id_col="doc_id", salt="neg1")
+    return negative_pairs(docs)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -7536,7 +7461,10 @@ def _speech_oracle_sql() -> str:
         """
 
 
-def _bpe_oracle_stages(n_merges: int = 8) -> str:
+_N_MERGES = 8
+
+
+def _bpe_oracle_stages() -> str:
     """Unrolled-SQL replay of relational BPE training (operators/
     bpe.py): per round — lockstep-unnest pair counts, struct-min
     winner (max count, lexicographic tie), and the greedy merge via
@@ -7559,7 +7487,7 @@ def _bpe_oracle_stages(n_merges: int = 8) -> str:
           FROM wc
         )"""
     ]
-    for k in range(n_merges):
+    for k in range(_N_MERGES):
         parts.append(
             f"""
         , p{k} AS (
@@ -8032,12 +7960,12 @@ def oracle_sql() -> dict[str, str]:
     """
     # bpe_train / bpe_apply: full unrolled replay of the 8 relational
     # merge rounds (generated stages — see _bpe_oracle_stages)
-    d["bpe_train"] = _bpe_oracle_stages(8) + r"""
+    d["bpe_train"] = _bpe_oracle_stages() + r"""
         SELECT word, freq, array_to_string(syms, ' ') AS pieces,
                len(syms)::BIGINT AS n_pieces
         FROM ws8
     """
-    d["bpe_apply"] = _bpe_oracle_stages(8) + r"""
+    d["bpe_apply"] = _bpe_oracle_stages() + r"""
         , docw AS (
           SELECT doc_id,
                  unnest(string_split_regex(trim(text), '\s+')) AS word

@@ -3,10 +3,12 @@
 Defaults follow the reference where a token-domain analog exists:
 window 2048 / hop 512 (reference fingerprint/fingerprint.go:72-73) is
 scaled to W=64 / H=16 for token sequences (same 4:1 overlap ratio).
-Only settings some caller outside tests/ varies are fields here; a
-setting with one value in use is a constant (or a literal) next to the
+A setting is a field here, or a function parameter anywhere in the
+package, only when two callers outside tests/ give it different values;
+a setting with one value in use is a constant (or a literal) next to the
 code that reads it.  tests/test_unreferenced.py enforces this for the
-fields here and for every defaulted function parameter.
+fields here and for every function parameter, and fails on a call that
+passes a parameter's default explicitly.
 """
 
 from __future__ import annotations

@@ -75,11 +75,14 @@ def catalog_table(
     return map_rows(spark.range(n_entities), rows, CATALOG_SCHEMA)
 
 
-def entity_of(doc_id_col, n_entities: int = 16):
+_N_ENTITIES = 16
+
+
+def entity_of(doc_id_col):
     """Map doc_id -> entity (many-to-one), deterministic; usable from
     Spark SQL via expressions."""
     from pyspark.sql import functions as F
 
     return F.format_string(
-        "ent%04d", F.pmod(F.xxhash64(doc_id_col), F.lit(n_entities))
+        "ent%04d", F.pmod(F.xxhash64(doc_id_col), F.lit(_N_ENTITIES))
     )

@@ -64,15 +64,18 @@ def chebyshev(a: Column, b: Column) -> Column:
     )
 
 
-def minkowski(a: Column, b: Column, p: float) -> Column:
+_P = 3.0
+
+
+def minkowski(a: Column, b: Column) -> Column:
     """Lp norm distance (distance.go:39-45)."""
     return F.pow(
         asum(
             F.zip_with(
-                a, b, lambda x, y: F.pow(F.abs(x.cast("double") - y.cast("double")), p)
+                a, b, lambda x, y: F.pow(F.abs(x.cast("double") - y.cast("double")), _P)
             )
         ),
-        1.0 / p,
+        1.0 / _P,
     )
 
 

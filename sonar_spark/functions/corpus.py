@@ -30,12 +30,11 @@ from pyspark.sql import functions as F
 _LN2 = "0.6931471805599453"
 
 
-def pmi_collocations(
-    docs: DataFrame,
-    *,
-    min_count: int = 5,
-    top_n: int = 50,
-) -> DataFrame:
+_MIN_COUNT = 5
+_TOP_N = 50
+
+
+def pmi_collocations(docs: DataFrame) -> DataFrame:
     """Top-n adjacent-bigram collocations by pointwise mutual
     information.
 
@@ -88,7 +87,7 @@ def pmi_collocations(
         6,
     )
     scored = (
-        big.where(F.col("cxy") >= min_count)
+        big.where(F.col("cxy") >= _MIN_COUNT)
         .join(F.broadcast(cx), "w1")
         .join(F.broadcast(cy), "w2")
         .crossJoin(F.broadcast(tot))
@@ -107,7 +106,7 @@ def pmi_collocations(
         "cxy",
         "pmi",
         F.row_number().over(w).cast("long").alias("rank"),
-    ).where(F.col("rank") <= top_n)
+    ).where(F.col("rank") <= _TOP_N)
 
 
 def vocab_stats(docs: DataFrame) -> DataFrame:
@@ -180,12 +179,11 @@ def vocab_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def temperature_mix(
-    docs: DataFrame,
-    *,
-    temperature: float = 0.3,
-    budget: int = 1_000_000,
-) -> DataFrame:
+_TEMPERATURE = 0.3
+_BUDGET = 1_000_000
+
+
+def temperature_mix(docs: DataFrame) -> DataFrame:
     """Temperature-scaled mixture weights over corpus groups — the
     data-mixing allocation step (Llama / PaLM style): a group with
     token share p gets sampling weight proportional to p^T, T < 1
@@ -218,7 +216,7 @@ def temperature_mix(
         F.round(
             F.round(
                 F.exp(
-                    F.lit(temperature) * F.round(F.log(share), 6)
+                    F.lit(_TEMPERATURE) * F.round(F.log(share), 6)
                 ),
                 6,
             )
@@ -235,8 +233,8 @@ def temperature_mix(
         micro,
     )
     sm = weighted.agg(F.sum("__m").cast("long").alias("__sm"))
-    alloc = (F.lit(int(budget)) * F.col("__m")) - (
-        (F.lit(int(budget)) * F.col("__m")) % F.col("__sm")
+    alloc = (F.lit(_BUDGET) * F.col("__m")) - (
+        (F.lit(_BUDGET) * F.col("__m")) % F.col("__sm")
     )
     return weighted.crossJoin(F.broadcast(sm)).select(
         "source",

@@ -88,23 +88,16 @@ def bucket_lo(idx: Column) -> Column:
     return F.when(idx < 0, F.lit(0.0)).otherwise(_dyadic(s + 8, o - 3))
 
 
-def ddsketch_table(
-    df: DataFrame, group_cols: list[str], value_col: str
-) -> DataFrame:
+def ddsketch_table(df: DataFrame, group_cols: list[str]) -> DataFrame:
     """Build the sketch: one count row per (group, bucket idx)."""
     return (
-        df.select(*group_cols, bucket_idx(F.col(value_col)).alias("idx"))
+        df.select(*group_cols, bucket_idx(F.col("v")).alias("idx"))
         .groupBy(*group_cols, "idx")
         .agg(F.count("*").cast("long").alias("cnt"))
     )
 
 
-def ddsketch_quantiles(
-    events: DataFrame,
-    *,
-    group_col: str = "event_type",
-    value_col: str = "v",
-) -> DataFrame:
+def ddsketch_quantiles(events: DataFrame) -> DataFrame:
     """Per-group DDSketch quantile report, certified against the
     exact order statistic and the shard-merge law in one result.
 
@@ -117,14 +110,14 @@ def ddsketch_quantiles(
     counts SUM, grid alignment is free).
     """
     base = events.select(
-        F.col(group_col).alias("grp"),
-        F.col(value_col).alias("v"),
+        F.col("event_type").alias("grp"),
+        F.col("cents").alias("v"),
         (F.col("event_id") % 8).alias("shard"),
     )
 
     # direct sketch + shard-merged sketch; the comparison is the law
-    direct = ddsketch_table(base, ["grp"], "v")
-    shards = ddsketch_table(base, ["grp", "shard"], "v")
+    direct = ddsketch_table(base, ["grp"])
+    shards = ddsketch_table(base, ["grp", "shard"])
     merged = shards.groupBy("grp", "idx").agg(
         F.sum("cnt").cast("long").alias("cnt")
     )
@@ -169,8 +162,8 @@ def ddsketch_quantiles(
     # exact order statistic at the same rank, for the certificate
     wv = Window.partitionBy("grp").orderBy("v", "event_id")
     ranked = events.select(
-        F.col(group_col).alias("grp"),
-        F.col(value_col).alias("v"),
+        F.col("event_type").alias("grp"),
+        F.col("cents").alias("v"),
         "event_id",
     ).select("grp", "v", F.row_number().over(wv).cast("long").alias("rn"))
     exact = (
@@ -184,7 +177,7 @@ def ddsketch_quantiles(
         hit.join(exact, ["grp", "q"])
         .join(merge_ok, "grp")
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("event_type"),
             F.round("q", 2).alias("q"),
             "n",
             "r",

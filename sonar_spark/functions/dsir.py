@@ -55,21 +55,18 @@ _LN2 = "0.6931471805599453"
 _N_BUCKETS = 1024
 
 
-def _md5_bucket(col: Column, mod: int) -> Column:
-    """First 8 md5 hex chars as an integer, mod ``mod`` — the
+def _md5_u32(col: Column) -> Column:
+    """First 8 md5 hex chars as an integer in [0, 2^32) — the
     engine-portable hash (DuckDB: ('0x' || substring(md5(x),1,8))
-    ::BIGINT % mod)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
-        % F.lit(mod)
-    )
+    ::BIGINT)."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
 def _gram_bucket_counts(docs: DataFrame) -> DataFrame:
     """(doc_id, is_target, __b, __c): per-doc hashed-gram bucket
     counts of ``words`` from ONE Arrow kernel pass — hashlib.md5 is
     bit-identical to F.md5, so int(hexdigest[:8], 16) % _N_BUCKETS
-    reproduces _md5_bucket exactly (certified by
+    reproduces _md5_u32(w) % _N_BUCKETS exactly (certified by
     tests/test_dsir_kernel.py against the expression stream)."""
     id_type = docs.schema["doc_id"].dataType.simpleString()
 
@@ -170,7 +167,7 @@ def dsir_scores(docs: DataFrame) -> DataFrame:
     # Gumbel-top-k resampling with content-keyed noise (sample_mix
     # determinism convention): u in (0,1) from the md5 integer of
     # the doc id, g = -ln(-ln(u)), key = ln-importance + g
-    h = _md5_bucket(F.col("doc_id").cast("string"), 4294967296)
+    h = _md5_u32(F.col("doc_id").cast("string"))
     u = (h + F.lit(0.5)) / F.lit(4294967296.0)
     g6 = F.round(-F.log(-F.log(u)), 6)
     bits = F.round(F.col("__ms") / 1e6, 6)

@@ -136,30 +136,30 @@ def interpolate_at(
     return _METHODS[method](data, index.cast("double"), F.size(data))
 
 
-def resample_signal(
-    data: Column,
-    original_rate: int,
-    target_rate: int,
-    method: str = "linear",
-) -> Column:
+_ORIGINAL_RATE = 4
+_TARGET_RATE = 3
+
+
+def resample_signal(data: Column) -> Column:
     """ResampleSignal (:195-215): new length = int(len/ratio), output
     i interpolated at source index i*ratio.  Returns an array
     column."""
-    ratio = float(original_rate) / float(target_rate)
+    ratio = _ORIGINAL_RATE / _TARGET_RATE
     d = F.transform(data, lambda x: x.cast("double"))
     n = F.size(d)
     nl = F.floor(n.cast("double") / ratio).cast("int")
     return F.when(nl <= 0, F.array().cast("array<double>")).otherwise(
         F.transform(
             F.sequence(F.lit(0), nl - 1),
-            lambda i: _METHODS[method](
-                d, i.cast("double") * ratio, n
-            ),
+            lambda i: _linear(d, i.cast("double") * ratio, n),
         )
     )
 
 
-def upsample_signal(data: Column, factor: int) -> Column:
+_FACTOR = 2
+
+
+def upsample_signal(data: Column) -> Column:
     """UpsampleSignal (:218-245) as written: zero-stuff then linear
     fill between anchors; positions whose NEXT anchor falls outside
     the buffer stay zero (the trailing block), and a genuine 0.0
@@ -167,17 +167,17 @@ def upsample_signal(data: Column, factor: int) -> Column:
     frac 0."""
     d = F.transform(data, lambda x: x.cast("double"))
     n = F.size(d)
-    total = n * factor
+    total = n * _FACTOR
 
     def val(i):
-        anchor = _at(d, F.floor(i / factor))
-        prev = F.floor(i / factor) * factor
-        nxt = prev + factor
-        frac = (i - prev).cast("double") / float(factor)
-        nxt_anchor = _at(d, F.floor(nxt / factor))
+        anchor = _at(d, F.floor(i / _FACTOR))
+        prev = F.floor(i / _FACTOR) * _FACTOR
+        nxt = prev + _FACTOR
+        frac = (i - prev).cast("double") / float(_FACTOR)
+        nxt_anchor = _at(d, F.floor(nxt / _FACTOR))
         fill = anchor + frac * (nxt_anchor - anchor)
         return (
-            F.when(i % factor == 0, anchor)
+            F.when(i % _FACTOR == 0, anchor)
             .when(nxt < total, fill)
             .otherwise(F.lit(0.0))
         )
@@ -185,14 +185,14 @@ def upsample_signal(data: Column, factor: int) -> Column:
     return F.transform(F.sequence(F.lit(0), total - 1), val)
 
 
-def downsample_signal(data: Column, factor: int) -> Column:
-    """DownsampleSignal (:248-265): plain stride-`factor` decimation
+def downsample_signal(data: Column) -> Column:
+    """DownsampleSignal (:248-265): plain stride-_FACTOR decimation
     (the Go notes the missing anti-alias filter itself)."""
     d = F.transform(data, lambda x: x.cast("double"))
     n = F.size(d)
-    nl = F.floor(n / factor).cast("int")
+    nl = F.floor(n / _FACTOR).cast("int")
     return F.when(nl <= 0, F.array().cast("array<double>")).otherwise(
         F.transform(
-            F.sequence(F.lit(0), nl - 1), lambda i: _at(d, i * factor)
+            F.sequence(F.lit(0), nl - 1), lambda i: _at(d, i * _FACTOR)
         )
     )

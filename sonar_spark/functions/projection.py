@@ -94,7 +94,7 @@ def jl_project(emb: DataFrame) -> DataFrame:
             for lo in range(0, n, step):
                 hi = min(lo + step, n)
                 prod = V[lo:hi, :, None] * R[None, :, :]
-                micro = spark_round_micro(prod.ravel(), 9).reshape(
+                micro = spark_round_micro(prod.ravel()).reshape(
                     hi - lo, d, JL_OUT
                 )
                 mus[lo:hi] = micro.sum(axis=1)
@@ -233,7 +233,7 @@ def int8_quantize_report(emb: DataFrame) -> DataFrame:
             q = np.where(sc[:, None] > 0, q, 0.0)
             recon = mn[:, None] + q * sc[:, None]
             diff = V - recon
-            t = spark_round_micro((diff * diff).ravel(), 9).reshape(n, d)
+            t = spark_round_micro((diff * diff).ravel()).reshape(n, d)
             err = t.sum(axis=1)
             rmse = spark_round(np.sqrt(err / 1e9 / d) + 1e-12, 6)
             yield pa.RecordBatch.from_arrays(

@@ -18,7 +18,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def tfidf_topk(docs: DataFrame, *, k: int = 5) -> DataFrame:
+_K = 5
+
+
+def tfidf_topk(docs: DataFrame) -> DataFrame:
     """Top-k TF-IDF terms per document.
 
     idf6 = round(ln(N / df), 6) (quantized boundary); score =
@@ -59,16 +62,15 @@ def tfidf_topk(docs: DataFrame, *, k: int = 5) -> DataFrame:
             "tfidf",
             F.row_number().over(w).cast("long").alias("rank"),
         )
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _K)
     )
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    *,
-    top_n: int = 20,
-) -> DataFrame:
+_QUERY_TERMS = ["query", "stream", "dup"]
+_TOP_N = 20
+
+
+def bm25_scores(docs: DataFrame) -> DataFrame:
     """BM25 ranked retrieval for a fixed term query.
 
     idf6 = round(ln((N - df + 0.5) / (df + 0.5) + 1), 6); each
@@ -84,14 +86,14 @@ def bm25_scores(
     base = docs.select("doc_id", words.alias("__w"), F.size(words).alias("__dl"))
     tf = (
         base.select("doc_id", "__dl", F.explode("__w").alias("term"))
-        .where(F.col("term").isin(query_terms))
+        .where(F.col("term").isin(_QUERY_TERMS))
         .groupBy("doc_id", "__dl", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
     df_t = (
         base.select("doc_id", F.array_distinct("__w").alias("__d"))
         .select(F.explode("__d").alias("term"))
-        .where(F.col("term").isin(query_terms))
+        .where(F.col("term").isin(_QUERY_TERMS))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("df"))
     )
@@ -125,5 +127,5 @@ def bm25_scores(
             (F.col("__ms") / 1e6).alias("bm25"),
             F.row_number().over(w).cast("long").alias("rank"),
         )
-        .where(F.col("rank") <= top_n)
+        .where(F.col("rank") <= _TOP_N)
     )

@@ -35,23 +35,20 @@ from pyspark.sql import functions as F
 from .sketch import md5_60
 
 
-def weighted_sample(
-    docs: DataFrame,
-    *,
-    k: int = 5,
-    strata_col: str = "source",
-    salt: str = "es1",
-) -> DataFrame:
+_K = 5
+
+
+def weighted_sample(docs: DataFrame) -> DataFrame:
     """Top-k-per-stratum E-S weighted sample of documents, weight =
     whitespace token count.
 
     Input: documents(doc_id, text, source).  Output per kept doc:
-    source, rank (1..k by key desc), doc_id, weight, and the exact
-    integer key — deterministic across runs, engines, partitionings
-    (`salt` varies the draw).
+    strata (the source), rank (1.._K by key desc), doc_id, weight,
+    and the exact integer key — deterministic across runs, engines,
+    partitionings.
     """
     toks = docs.select(
-        F.col(strata_col).alias("strata"),
+        F.col("source").alias("strata"),
         "doc_id",
         F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "__w"),
     ).where(F.length("__w") > 0)
@@ -61,7 +58,7 @@ def weighted_sample(
             md5_60(
                 F.concat_ws(
                     ":",
-                    F.lit(salt),
+                    F.lit("es1"),
                     F.col("doc_id").cast("string"),
                     F.col("pos").cast("string"),
                 )
@@ -73,11 +70,11 @@ def weighted_sample(
     )
     return (
         keyed.select(
-            F.col("strata").alias(strata_col),
+            F.col("strata").alias("source"),
             F.row_number().over(w).cast("long").alias("rank"),
             "doc_id",
             "weight",
             "es_key",
         )
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _K)
     )

@@ -128,7 +128,10 @@ def hll_distinct(docs: DataFrame) -> DataFrame:
     )
 
 
-def cms_heavy_hitters(docs: DataFrame, *, top_n: int = 10) -> DataFrame:
+_TOP_N = 10
+
+
+def cms_heavy_hitters(docs: DataFrame) -> DataFrame:
     """Count-Min heavy hitters: estimate term frequencies from a
     d x w bucket sketch and report the top-n exact terms with their
     CMS estimates.
@@ -200,7 +203,7 @@ def cms_heavy_hitters(docs: DataFrame, *, top_n: int = 10) -> DataFrame:
             "*",
             F.row_number().over(wnd).cast("long").alias("rank"),
         )
-        .where(F.col("rank") <= top_n)
+        .where(F.col("rank") <= _TOP_N)
     )
 
 

@@ -149,16 +149,19 @@ def to_token_length_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def ngrams_ws(words: Column, k: int) -> Column:
-    """All k-token shingle strings of a word array, in order,
-    duplicates kept (positions 1..max(n-k+1, 1); shorter docs yield
+_K = 4
+
+
+def ngrams_ws(words: Column) -> Column:
+    """All _K-token shingle strings of a word array, in order,
+    duplicates kept (positions 1..max(n-_K+1, 1); shorter docs yield
     one clamped shingle) — the one string-shingle rule: CurationJob's
     verify sets and the decontaminate shingles (with array_distinct)
     use it, the DuckDB oracles replay it, and
     fingerprint.shingle_hash_table hashes the same shingles."""
     return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+        F.sequence(F.lit(1), F.greatest(F.size(words) - (_K - 1), F.lit(1))),
+        lambda i: F.concat_ws(" ", F.slice(words, i, _K)),
     )
 
 
@@ -254,7 +257,7 @@ PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE = r"\b555-\d{4}\b"
 
 
-def pii_scrub(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII detection + redaction — the compliance pass every
     training-data pipeline runs before tokenization (C4 and
     RedPajama both regex-scrub; see also the BigCode PII pipeline):
@@ -271,7 +274,7 @@ def pii_scrub(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     column pushes straight to the sink.  Counts come from the
     PRE-redaction text.
     """
-    t = F.col(text_col)
+    t = F.col("payload")
     red = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, PII_EMAIL, "<EMAIL>"), PII_IPV4, "<IP>"
@@ -281,13 +284,13 @@ def pii_scrub(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     )
     return docs.select(
         "doc_id",
-        F.size(F.regexp_extract_all(text_col, F.lit(PII_EMAIL), F.lit(0)))
+        F.size(F.regexp_extract_all("payload", F.lit(PII_EMAIL), F.lit(0)))
         .cast("long")
         .alias("n_emails"),
-        F.size(F.regexp_extract_all(text_col, F.lit(PII_IPV4), F.lit(0)))
+        F.size(F.regexp_extract_all("payload", F.lit(PII_IPV4), F.lit(0)))
         .cast("long")
         .alias("n_ips"),
-        F.size(F.regexp_extract_all(text_col, F.lit(PII_PHONE), F.lit(0)))
+        F.size(F.regexp_extract_all("payload", F.lit(PII_PHONE), F.lit(0)))
         .cast("long")
         .alias("n_phones"),
         (F.length(t) - F.length(red)).cast("long").alias("chars_delta"),

@@ -118,12 +118,15 @@ def bessel_i0_expr(x: Column) -> Column:
     return acc["s"]
 
 
-def window_coefficients_expr(wtype: str, size: int) -> Column:
+_SIZE = 32
+
+
+def window_coefficients_expr(wtype: str) -> Column:
     """array<double> of window coefficients as JVM expressions over
     F.sequence(0, size-1) — same formulas as window_coefficients."""
-    N = float(size)
-    den = F.lit(float(size - 1))
-    idx = F.sequence(F.lit(0), F.lit(size - 1))
+    N = float(_SIZE)
+    den = F.lit(float(_SIZE - 1))
+    idx = F.sequence(F.lit(0), F.lit(_SIZE - 1))
     pi = float(np.pi)
 
     def tf(fn):
@@ -175,7 +178,7 @@ def window_coefficients_expr(wtype: str, size: int) -> Column:
     if wtype == "rectangular":
         return tf(lambda i: F.lit(1.0) + 0.0 * i)
     if wtype == "bartlett":
-        half = float(size // 2)
+        half = float(_SIZE // 2)
         return tf(
             lambda i: F.when(i <= half, 2.0 * i / (N - 1.0)).otherwise(
                 2.0 - 2.0 * i / (N - 1.0)

@@ -468,13 +468,18 @@ def _triangular_bank(hz_pts, fft_size: int, sample_rate: int) -> np.ndarray:
     return fb
 
 
+_LOW_FREQ = 0.0
+
+
 def mel_filter_bank(
-    num_filters: int, fft_size: int, sample_rate: int,
-    low_freq: float, high_freq: float,
+    num_filters: int,
+    fft_size: int,
+    sample_rate: int,
+    high_freq: float,
 ) -> np.ndarray:
     """Triangular mel filter bank (mel_scale.go:28-87): equally-spaced
     mel points warped back to Hz."""
-    lo, hi = hz_to_mel(low_freq), hz_to_mel(high_freq)
+    lo, hi = hz_to_mel(_LOW_FREQ), hz_to_mel(high_freq)
     pts = lo + np.arange(num_filters + 2) * (hi - lo) / (num_filters + 1)
     return _triangular_bank(mel_to_hz(pts), fft_size, sample_rate)
 
@@ -484,13 +489,15 @@ _BARK_KEYS = [f"bark{i}" for i in range(BARK_FILTERS)]
 
 
 def bark_filter_bank(
-    num_filters: int, fft_size: int, sample_rate: int,
-    low_freq: float, high_freq: float,
+    num_filters: int,
+    fft_size: int,
+    sample_rate: int,
+    high_freq: float,
 ) -> np.ndarray:
     """Triangular bark filter bank (bark_scale.go:36-93): equally-
     spaced bark (Traunmueller) points warped back to Hz, same
     triangular construction as the mel bank."""
-    lo, hi = hz_to_bark(low_freq), hz_to_bark(high_freq)
+    lo, hi = hz_to_bark(_LOW_FREQ), hz_to_bark(high_freq)
     pts = lo + np.arange(num_filters + 2) * (hi - lo) / (num_filters + 1)
     return _triangular_bank(bark_to_hz(pts), fft_size, sample_rate)
 
@@ -502,7 +509,7 @@ def _bark_mat(num_bins: int) -> np.ndarray:
     if num_bins not in _BARK_CACHE:
         fft_size = 2 * (num_bins - 1)
         _BARK_CACHE[num_bins] = bark_filter_bank(
-            BARK_FILTERS, fft_size, fft_size, 0.0, num_bins - 1.0
+            BARK_FILTERS, fft_size, fft_size, num_bins - 1.0
         )
     return _BARK_CACHE[num_bins]
 
@@ -534,7 +541,7 @@ def mfcc_matrices(num_bins: int = 16):
     the NewMFCC defaults (mfcc.go:44-54) scaled to 16 bins
     (26 filters -> 8, 13 coeffs -> 6, lifter 22 kept)."""
     fft_size = 2 * (num_bins - 1)
-    fb = mel_filter_bank(MFCC_FILTERS, fft_size, fft_size, 0.0, num_bins - 1.0)
+    fb = mel_filter_bank(MFCC_FILTERS, fft_size, fft_size, num_bins - 1.0)
     return fb, dct_matrix(MFCC_COEFFS, MFCC_FILTERS), lifter_weights(MFCC_COEFFS)
 
 
@@ -570,10 +577,14 @@ def bandpass_coefficients(
     )
 
 
-def dc_pole(sample_rate: int, cutoff_freq: float) -> float:
+_DC_SAMPLE_RATE = 64
+_DC_CUTOFF_FREQ = 0.5
+
+
+def dc_pole() -> float:
     """Pole location from cutoff: R = 1 - 2 pi fc/fs, clamped to
     (0.001, 0.999) (dc_removal.go:83-99 computePoleLocation)."""
-    r = 1.0 - (2.0 * np.pi * cutoff_freq / sample_rate)
+    r = 1.0 - (2.0 * np.pi * _DC_CUTOFF_FREQ / _DC_SAMPLE_RATE)
     if r >= 1.0:
         return 0.999
     if r <= 0.0:
@@ -1066,11 +1077,14 @@ def spark_round(x: np.ndarray, dp: int) -> np.ndarray:
     return _half_up_units(x, dp) / 10.0 ** dp + 0.0
 
 
-def spark_round_micro(x: np.ndarray, dp: int) -> np.ndarray:
-    """int64 micro-units: the exact integer k with k/10^dp ==
+_MICRO_DP = 9
+
+
+def spark_round_micro(x: np.ndarray) -> np.ndarray:
+    """int64 micro-units: the exact integer k with k/10^_MICRO_DP ==
     spark_round(x, dp) — emulates the Catalyst idiom
     round(round(x, dp) * 10^dp, 0).cast('long') for |k| < ~4e15
     (beyond that the double product k*10^dp loses integer
     precision; the micro-unit contracts here cap |x| far below
     that)."""
-    return _half_up_units(x, dp).astype(np.int64)
+    return _half_up_units(x, _MICRO_DP).astype(np.int64)

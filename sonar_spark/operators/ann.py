@@ -35,12 +35,11 @@ def _normalize_rows(m: np.ndarray) -> np.ndarray:
     return m / np.where(n > 0, n, 1.0)
 
 
-def train_centroids(
-    emb: DataFrame,
-    *,
-    n_centroids: int = 16,
-    seed: int = 42,
-) -> np.ndarray:
+_N_CENTROIDS = 8
+_SEED = 42
+
+
+def train_centroids(emb: DataFrame) -> np.ndarray:
     """Spherical k-means on a deterministic sample (orderBy id, limit):
     returns (n_centroids, dim) float64 unit vectors. Lloyd iterations
     with empty-cluster re-seeding; deterministic for a fixed seed
@@ -49,8 +48,8 @@ def train_centroids(
     sample = 10000
     t = emb.select("vec_id", "embedding").orderBy("vec_id").limit(sample).toArrow()
     X = _normalize_rows(vectors_matrix(t.column("embedding")))
-    rng = np.random.default_rng(seed)
-    k = min(n_centroids, len(X))
+    rng = np.random.default_rng(_SEED)
+    k = min(_N_CENTROIDS, len(X))
     C = X[rng.choice(len(X), size=k, replace=False)]
     for _ in range(n_iter):
         sims = X @ C.T
@@ -98,12 +97,11 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray) -> DataFrame:
     )
 
 
-def hyperplane_lsh_pairs(
-    emb: DataFrame,
-    *,
-    n_bits: int = 256,
-    band_bits: int = 16,
-) -> DataFrame:
+_N_BITS = 256
+_BAND_BITS = 16
+
+
+def hyperplane_lsh_pairs(emb: DataFrame) -> DataFrame:
     """Random-hyperplane (SimHash-for-vectors) LSH candidate pairs —
     the 100-TB path for embedding-cosine near-dup: sign bits against a
     broadcast seeded Gaussian plane matrix, packed into
@@ -118,7 +116,7 @@ def hyperplane_lsh_pairs(
     max_bucket = 1000
     from pyspark.sql import Window
 
-    n_bands = n_bits // band_bits
+    n_bands = _N_BITS // _BAND_BITS
 
     def gen(batches):
         import pyarrow as pa
@@ -133,14 +131,14 @@ def hyperplane_lsh_pairs(
             X = vectors_matrix(vec)
             if planes is None:
                 local_rng = np.random.default_rng(seed)
-                planes = local_rng.standard_normal((X.shape[1], n_bits))
+                planes = local_rng.standard_normal((X.shape[1], _N_BITS))
             bits = (X @ planes) > 0  # (n, n_bits) sign pattern
             # pack each band's bits into an int64 key (fixed order)
             keys = np.zeros((len(X), n_bands), dtype=np.int64)
             for b in range(n_bands):
-                for j in range(band_bits):
+                for j in range(_BAND_BITS):
                     keys[:, b] = (keys[:, b] << 1) | bits[
-                        :, b * band_bits + j
+                        :, b * _BAND_BITS + j
                     ].astype(np.int64)
             band_arr = pa.ListArray.from_arrays(
                 pa.array(
@@ -222,20 +220,21 @@ def ivf_probes(
     )
 
 
+_K = 5
+_N_PROBE = 8
+
+
 def ivf_search(
     index: DataFrame,
     queries: DataFrame,
     centroids: np.ndarray,
-    *,
-    k: int = 5,
-    n_probe: int = 4,
 ) -> DataFrame:
     """Probe the n_probe nearest centroids per query, brute-force
-    within probed buckets, top-k by cosine. With n_probe ==
+    within probed buckets, top-_K by cosine. With _N_PROBE ==
     n_centroids this is exhaustive and must equal knn_bruteforce.
 
     Output: query_id, rank, neighbor_id, cosine_sim."""
-    probes = ivf_probes(queries, centroids, n_probe=n_probe)
+    probes = ivf_probes(queries, centroids, n_probe=_N_PROBE)
     qv = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv")
     )
@@ -259,7 +258,7 @@ def ivf_search(
         scored,
         "query_id",
         [F.col("cosine_sim").desc(), F.col("neighbor_id").asc()],
-        k,
+        _K,
     )
 
 
@@ -341,13 +340,11 @@ def allpairs_cosine(
     )
 
 
-def hard_negatives_allpairs(
-    emb: DataFrame,
-    emb_path: str,
-    *,
-    k: int = 3,
-    pos_threshold: float = 0.4,
-) -> DataFrame:
+_N_NEGATIVES = 3
+_POS_THRESHOLD = 0.4
+
+
+def hard_negatives_allpairs(emb: DataFrame, emb_path: str) -> DataFrame:
     """Hard-negative mining fused INTO the block nested-loop cosine
     kernel (r6, guide §1.2 'fix the distributed algorithm first'):
     each task scores its left block against the full executor-side
@@ -381,10 +378,10 @@ def hard_negatives_allpairs(
             for i in range(len(lid)):
                 row = s[i]
                 other = rid != lid[i]
-                n_exc = int(((row >= pos_threshold) & other).sum())
+                n_exc = int(((row >= _POS_THRESHOLD) & other).sum())
                 if n_exc == 0:
                     continue
-                below = other & (row < pos_threshold)
+                below = other & (row < _POS_THRESHOLD)
                 cand_s = row[below]
                 cand_id = rid[below]
                 # top-k with exact (s desc, id asc) raw-double
@@ -392,16 +389,16 @@ def hard_negatives_allpairs(
                 # k-th largest s with argpartition (O(n)), THEN
                 # lexsort only the survivors — a full 20k-row
                 # lexsort per anchor dominated the task profile
-                if len(cand_s) > k:
-                    kth = np.partition(cand_s, len(cand_s) - k)[
-                        len(cand_s) - k
+                if len(cand_s) > _N_NEGATIVES:
+                    kth = np.partition(cand_s, len(cand_s) - _N_NEGATIVES)[
+                        len(cand_s) - _N_NEGATIVES
                     ]
                     keep = cand_s >= kth
                     cand_s = cand_s[keep]
                     cand_id = cand_id[keep]
                 # -s is an exact sign flip; lexsort's last key is
                 # primary
-                order = np.lexsort((cand_id, -cand_s))[:k]
+                order = np.lexsort((cand_id, -cand_s))[:_N_NEGATIVES]
                 m = len(order)
                 q_ids.extend([lid[i]] * m)
                 ranks.extend(range(1, m + 1))
@@ -550,14 +547,14 @@ def pq_index(emb: DataFrame, C: np.ndarray, B: np.ndarray) -> DataFrame:
     )
 
 
+_PQ_N_PROBE = 2
+
+
 def pq_search(
     index: DataFrame,
     queries: DataFrame,
     C: np.ndarray,
     B: np.ndarray,
-    *,
-    k: int = 5,
-    n_probe: int = 2,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) IVF-PQ search: each query probes its
     n_probe nearest coarse cells (6-dp-rounded distance, ties ->
@@ -580,7 +577,7 @@ def pq_search(
             float(_d2_asc(q[None, :], C[j])[0]) for j in range(len(C))
         ]))
         order = np.lexsort((np.arange(len(C)), cd))
-        for cell in order[:n_probe]:
+        for cell in order[:_PQ_N_PROBE]:
             probes.append((int(qi), int(cell)))
     pr = spark.createDataFrame(probes, f"query_id long, cell int")
     cand = index.join(F.broadcast(pr), "cell")
@@ -621,6 +618,6 @@ def pq_search(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= _K)
         .select("query_id", "rank", "neighbor_id", "adc_dist")
     )

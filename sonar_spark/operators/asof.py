@@ -60,30 +60,28 @@ def asof_join(
     *,
     key: str = "entity",
     left_ts: str = "ts",
-    right_ts: str = "ref_ts",
-    version: str | None = "ref_version",
     payload: tuple[str, ...] = ("ref_features",),
     cfg: AsofConfig = AsofConfig(),
     strategy: str = "union",
 ) -> DataFrame:
     """As-of (backward, inclusive) join of left onto right per key.
 
-    Output: all left columns + matched_ref_ts (long, null if no right
-    row precedes) + payload columns from the matched right row.
+    right carries the reference timestamp ref_ts and the version
+    ref_version (the higher wins at equal ref_ts).  Output: all left
+    columns + matched_ref_ts (long, null if no right row precedes) +
+    payload columns and ref_version from the matched right row.
     strategy="union" is one broadcast hash join when right is small
     (see _asof_broadcast), else one shuffle; "bucketed" splits hot
     keys' timelines by time range.
     """
     if strategy == "union":
-        return _asof_union(left, right, key, left_ts, right_ts, version, payload)
+        return _asof_union(left, right, key, left_ts, payload)
     if strategy == "bucketed":
-        return _asof_bucketed(
-            left, right, key, left_ts, right_ts, version, payload, cfg
-        )
+        return _asof_bucketed(left, right, key, left_ts, payload, cfg)
     raise ValueError(f"unknown asof strategy {strategy!r}")
 
 
-def _tagged_union(left, right, key, left_ts, right_ts, carry):
+def _tagged_union(left, right, key, left_ts, carry):
     """left and right as one frame for the union windows: every left
     column, __ts (the row's timestamp as long), __is_left (1 on left
     rows, 0 on right rows), __rts (the right timestamp, null on left
@@ -94,9 +92,9 @@ def _tagged_union(left, right, key, left_ts, right_ts, carry):
     rtypes = dict(right.select(*carry).dtypes)
     r = right.select(
         F.col(key),
-        F.col(right_ts).cast("long").alias("__ts"),
+        F.col("ref_ts").cast("long").alias("__ts"),
         F.lit(0).alias("__is_left"),
-        F.col(right_ts).cast("long").alias("__rts"),
+        F.col("ref_ts").cast("long").alias("__rts"),
         *[F.col(c) for c in carry],
         *[F.lit(None).cast(ltypes[c]).alias(c) for c in lcols if c != key],
     )
@@ -110,22 +108,23 @@ def _tagged_union(left, right, key, left_ts, right_ts, carry):
     return ldf.unionByName(r.select(*ldf.columns))
 
 
-def _asof_union(left, right, key, left_ts, right_ts, version, payload):
-    out = _asof_broadcast(left, right, key, left_ts, right_ts, version, payload)
+def _asof_union(left, right, key, left_ts, payload):
+    out = _asof_broadcast(left, right, key, left_ts, payload)
     if out is not None:
         return out
     lcols = left.columns
-    carry = list(payload) + ([version] if version else [])
-    u = _tagged_union(left, right, key, left_ts, right_ts, carry)
+    carry = [*payload, "ref_version"]
+    u = _tagged_union(left, right, key, left_ts, carry)
     # order: ts asc; at equal ts right (0) before left (1) => inclusive
     # backward match; among right rows at equal ts, higher version last
     # => running last() keeps it.
-    order = [F.col("__ts").asc(), F.col("__is_left").asc()]
-    if version:
-        order.append(F.col(version).asc_nulls_first())
     w = (
         Window.partitionBy(key)
-        .orderBy(*order)
+        .orderBy(
+            F.col("__ts").asc(),
+            F.col("__is_left").asc(),
+            F.col("ref_version").asc_nulls_first(),
+        )
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = u.select(
@@ -152,7 +151,7 @@ def _asof_union(left, right, key, left_ts, right_ts, version, payload):
 _CEIL = 1 << 15
 
 
-def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
+def _asof_broadcast(left, right, key, left_ts, payload):
     """_asof_union's plan for a small reference side, or None when the
     union plan must run.
 
@@ -195,10 +194,10 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
         or left.schema[key].dataType != kt
     ):
         return None
-    carry = list(payload) + ([version] if version else [])
+    carry = [*payload, "ref_version"]
     ref = right.select(
         F.col(key).alias("__asof_k"),
-        F.col(right_ts).cast("long").alias("__asof_ts"),
+        F.col("ref_ts").cast("long").alias("__asof_ts"),
         *carry,
     )
     est = ref._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -229,8 +228,9 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
     def div(a, b):
         return F.call_function("div", a, F.lit(b))
 
-    order = [ts.asc()] + ([F.col(version).asc_nulls_first()] if version else [])
-    wk = Window.partitionBy(k).orderBy(*order)
+    wk = Window.partitionBy(k).orderBy(
+        ts.asc(), F.col("ref_version").asc_nulls_first()
+    )
     run = wk.rowsBetween(Window.unboundedPreceding, 0)
     nxt = F.col("__asof_next")
     intervals = (
@@ -278,7 +278,7 @@ def _asof_broadcast(left, right, key, left_ts, right_ts, version, payload):
 _TARGET_ROWS_PER_BUCKET = 65536
 
 
-def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
+def _asof_bucketed(left, right, key, left_ts, payload, cfg):
     if cfg.bucket_width is None:
         # adaptive: widest buckets that keep the BIGGEST single-entity
         # timeline under ~target rows per shard; buckets exist to split
@@ -300,7 +300,7 @@ def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
         bucket_w = max(1, span // n_buckets + 1)
     else:
         bucket_w = int(cfg.bucket_width)
-    carry = list(payload) + ([version] if version else [])
+    carry = [*payload, "ref_version"]
     lcols = left.columns
     ltypes = dict(left.dtypes)
     rtypes = dict(right.select(*carry).dtypes)
@@ -308,23 +308,18 @@ def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
         "__b", F.floor(F.col("__ts") / bucket_w)
     )
     rb = right.select(
-        key, F.col(right_ts).cast("long").alias("__ts"), *carry
+        key, F.col("ref_ts").cast("long").alias("__ts"), *carry
     ).withColumn("__b", F.floor(F.col("__ts") / bucket_w))
 
     # Latest right row per (entity, bucket) via max(struct(ts, version, ...)).
-    ver_cols = [F.col(version)] if version else []
     last_per_bucket = (
         rb.groupBy(key, "__b")
-        .agg(
-            F.max(
-                F.struct(F.col("__ts"), *ver_cols, *[F.col(c) for c in payload])
-            ).alias("__s")
-        )
+        .agg(F.max(F.struct("__ts", "ref_version", *payload)).alias("__s"))
         .select(
             key,
             "__b",
             F.col("__s.__ts").alias("__ts"),
-            *([F.col(f"__s.{version}").alias(version)] if version else []),
+            F.col("__s.ref_version").alias("ref_version"),
             *[F.col(f"__s.{c}").alias(c) for c in payload],
         )
     )
@@ -409,12 +404,13 @@ def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
     # order within a shard: ts asc; at equal ts right (0) before left
     # (1) => inclusive backward match; among right rows at equal ts the
     # higher version sorts last and wins the running last().
-    order = [F.col("__ts").asc(), F.col("__is_left").asc()]
-    if version:
-        order.append(F.col(version).asc_nulls_first())
     w = (
         Window.partitionBy(key, "__b", "__salt")
-        .orderBy(*order)
+        .orderBy(
+            F.col("__ts").asc(),
+            F.col("__is_left").asc(),
+            F.col("ref_version").asc_nulls_first(),
+        )
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     matched_src = F.when(F.col("__is_left") == 0, F.col("__ts"))
@@ -442,16 +438,7 @@ def _asof_bucketed(left, right, key, left_ts, right_ts, version, payload, cfg):
     )
 
 
-def asof_join_nearest_fused(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str = "entity",
-    left_ts: str = "ts",
-    right_ts: str = "ref_ts",
-    version: str | None = "ref_version",
-    payload: tuple[str, ...] = ("ref_features",),
-) -> DataFrame:
+def asof_join_nearest_fused(left: DataFrame, right: DataFrame) -> DataFrame:
     """Nearest-as-of in ONE union pass: each left row gets both its
     backward match (latest right at or before) and its forward match
     (earliest right at or after), then the nearer of the two by
@@ -466,45 +453,36 @@ def asof_join_nearest_fused(
     to a composed reference (two directional union joins re-joined
     on the left id).
 
-    Output: all left columns, matched_ref_ts + payload (backward),
-    matched_fwd_ts + <payload>_fwd (forward), matched_near_ts,
-    near_src ('b'/'f', null when neither side matches), near_gap_s
-    and <payload>_near.
+    Joins right (user_id, ref_ts, ref_version, ref_value) onto left
+    (user_id, ts_sec).  Output: all left columns, matched_ref_ts +
+    ref_value (backward), matched_fwd_ts + ref_value_fwd (forward),
+    matched_near_ts, near_src ('b'/'f', null when neither side
+    matches), near_gap_s and ref_value_near.
     """
     lcols = left.columns
-    carry = list(payload) + ([version] if version else [])
-    u = _tagged_union(left, right, key, left_ts, right_ts, carry)
+    u = _tagged_union(left, right, "user_id", "ts_sec", ["ref_value", "ref_version"])
 
-    ob = [F.col("__ts").asc(), F.col("__is_left").asc()]
-    of = [F.col("__ts").desc(), F.col("__is_left").asc()]
-    if version:
-        ob.append(F.col(version).asc_nulls_first())
-        of.append(F.col(version).asc_nulls_first())
+    version = F.col("ref_version").asc_nulls_first()
+    ob = [F.col("__ts").asc(), F.col("__is_left").asc(), version]
+    of = [F.col("__ts").desc(), F.col("__is_left").asc(), version]
     wb = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy(*ob)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wf = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy(*of)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    fwd_ren = {c: f"{c}_fwd" for c in payload}
     filled = u.select(
         *lcols,
         "__is_left",
         "__ts",
         F.last("__rts", ignorenulls=True).over(wb).alias("matched_ref_ts"),
-        *[
-            F.last(c, ignorenulls=True).over(wb).alias(c)
-            for c in payload
-        ],
+        F.last("ref_value", ignorenulls=True).over(wb).alias("ref_value"),
         F.last("__rts", ignorenulls=True).over(wf).alias("matched_fwd_ts"),
-        *[
-            F.last(c, ignorenulls=True).over(wf).alias(fwd_ren[c])
-            for c in payload
-        ],
+        F.last("ref_value", ignorenulls=True).over(wf).alias("ref_value_fwd"),
     )
     j = filled.where(F.col("__is_left") == 1)
     bgap = F.col("__ts") - F.col("matched_ref_ts")
@@ -516,53 +494,44 @@ def asof_join_nearest_fused(
     return j.select(
         *lcols,
         "matched_ref_ts",
-        *payload,
+        "ref_value",
         "matched_fwd_ts",
-        *[fwd_ren[c] for c in payload],
+        "ref_value_fwd",
         F.when(take_b, F.col("matched_ref_ts"))
         .when(take_f, F.col("matched_fwd_ts"))
         .cast("long")
         .alias("matched_near_ts"),
         F.when(take_b, F.lit("b")).when(take_f, F.lit("f")).alias("near_src"),
         F.when(take_b, bgap).when(take_f, fgap).cast("long").alias("near_gap_s"),
-        *[
-            F.when(take_b, F.col(c)).when(take_f, F.col(fwd_ren[c])).alias(
-                f"{c}_near"
-            )
-            for c in payload
-        ],
+        F.when(take_b, F.col("ref_value"))
+        .when(take_f, F.col("ref_value_fwd"))
+        .alias("ref_value_near"),
     )
 
 
-def asof_join_tolerance(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str = "entity",
-    left_ts: str = "ts",
-    right_ts: str = "ref_ts",
-    version: str | None = "ref_version",
-    payload: tuple[str, ...] = ("ref_features",),
-    tolerance: int = 3600,
-) -> DataFrame:
+_TOLERANCE = 3600
+
+
+def asof_join_tolerance(left: DataFrame, right: DataFrame) -> DataFrame:
     """Backward as-of with a max-staleness tolerance (pandas
-    merge_asof's `tolerance`; the feature-TTL rule: a reference
-    older than `tolerance` seconds must NOT be used).  Exactly the
+    merge_asof's tolerance; the feature-TTL rule: a reference
+    older than _TOLERANCE seconds must NOT be used), joining the same
+    columns as asof_join_nearest_fused.  Exactly the
     union strategy's plan — the tolerance is a post-match column
     rewrite (match columns nulled beyond the window), so the physical
     plan is unchanged and the leakage guarantee is inherited.  Output
     adds within_tol (false when a match existed but was too stale;
     null when no match at all).
     """
-    j = _asof_union(left, right, key, left_ts, right_ts, version, payload)
-    gap = F.col(left_ts).cast("long") - F.col("matched_ref_ts")
-    ok = gap <= tolerance
-    carry = list(payload) + ([version] if version else [])
+    j = _asof_union(
+        left, right, "user_id", "ts_sec", ("ref_value",)
+    )
+    ok = F.col("ts_sec").cast("long") - F.col("matched_ref_ts") <= _TOLERANCE
     return j.select(
         *[c for c in left.columns],
         F.when(ok, F.col("matched_ref_ts"))
         .cast("long")
         .alias("matched_ref_ts"),
-        *[F.when(ok, F.col(c)).alias(c) for c in carry],
+        *[F.when(ok, F.col(c)).alias(c) for c in ("ref_value", "ref_version")],
         F.when(F.col("matched_ref_ts").isNotNull(), ok).alias("within_tol"),
     )

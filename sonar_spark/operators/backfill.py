@@ -32,14 +32,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def backfill_grid(
-    events: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    step: int = 21600,
-) -> DataFrame:
+_STEP = 21600
+
+
+def backfill_grid(events: DataFrame) -> DataFrame:
     """Regularize each entity's (ts, value) stream onto a step-second
     grid (grid instants are global multiples of step covering the
     entity's observed span).
@@ -51,9 +47,9 @@ def backfill_grid(
     the (grid_ts - step, grid_ts] cell.
     """
     obs = events.select(
-        F.col(entity_col).alias("entity"),
-        F.unix_timestamp(ts_col).cast("long").alias("t"),
-        F.col(value_col).cast("double").alias("v"),
+        F.col("user_id").alias("entity"),
+        F.unix_timestamp("ts").cast("long").alias("t"),
+        F.col("value").cast("double").alias("v"),
         F.col("event_id").cast("long").alias("eid"),
     )
 
@@ -62,14 +58,14 @@ def backfill_grid(
     # lands in exactly one (g-step, g] cell)
     t0 = F.col("t0")
     t1 = F.col("t1")
-    g_up = F.when(t1 % step == 0, t1).otherwise(t1 - t1 % step + step)
+    g_up = F.when(t1 % _STEP == 0, t1).otherwise(t1 - t1 % _STEP + _STEP)
     grid = (
         obs.groupBy("entity")
         .agg(F.min("t").alias("t0"), F.max("t").alias("t1"))
         .select(
             "entity",
             F.explode(
-                F.sequence(t0 - t0 % step, g_up, F.lit(step))
+                F.sequence(t0 - t0 % _STEP, g_up, F.lit(_STEP))
             ).alias("t"),
         )
         .select(
@@ -113,7 +109,7 @@ def backfill_grid(
     g = filled.where(F.col("side") == 1)
     wlag = Window.partitionBy("entity").orderBy("t")
     return g.select(
-        F.col("entity").alias(entity_col),
+        F.col("entity").alias("user_id"),
         F.col("t").alias("grid_ts"),
         F.round(F.col("fv"), 6).alias("ffill_value"),
         (F.col("t") - F.col("ft")).cast("long").alias("ffill_age_s"),
@@ -128,15 +124,13 @@ def backfill_grid(
     )
 
 
-def grid_features(
-    bf: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    window: int = 8,
-) -> DataFrame:
+_WINDOW = 8
+
+
+def grid_features(bf: DataFrame) -> DataFrame:
     """Backfilled per-window statistics over the regular grid (the
     north-rule composite): per (entity, grid_ts), an exponential
-    moving average and rolling mean/std over the last `window` grid
+    moving average and rolling mean/std over the last _WINDOW grid
     instants of the forward-filled value.
 
     Exactness across engines without micro-unit machinery:
@@ -146,7 +140,7 @@ def grid_features(
     - EWMA weights are the dyadic rationals 2^-k (alpha = 1/2), so
       every weighted partial sum is exactly representable — the one
       float division happens once per row on identical doubles;
-    - the window is realized as `window` lag() columns over the SAME
+    - the window is realized as _WINDOW lag() columns over the SAME
       (entity ORDER BY grid_ts) sort the backfill pass already
       shuffled for — whole-stage codegen, no second exchange, no
       interpreted array fold.
@@ -156,10 +150,10 @@ def grid_features(
     the EWMA renormalizes over the non-null slots, and rows with an
     empty window emit nulls.
     """
-    w = Window.partitionBy(entity_col).orderBy("grid_ts")
+    w = Window.partitionBy("user_id").orderBy("grid_ts")
     cents = F.floor(F.col("ffill_value") * 100 + 0.5).cast("long")
     d = bf.withColumn("__c", cents)
-    lags = [F.lag("__c", k).over(w) for k in range(window)]
+    lags = [F.lag("__c", k).over(w) for k in range(_WINDOW)]
     n_win = sum(
         F.when(lg.isNotNull(), 1).otherwise(0) for lg in lags
     ).cast("long")
@@ -182,7 +176,7 @@ def grid_features(
         (ssum.cast("double") - mean_c * mean_c * n_win) / (n_win - 1),
     ).otherwise(F.lit(0.0))
     return d.select(
-        entity_col,
+        "user_id",
         "grid_ts",
         F.round("ffill_value", 6).alias("ffill_value"),
         n_win.alias("n_win"),

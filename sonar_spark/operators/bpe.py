@@ -145,10 +145,13 @@ def bpe_train(
     return ws, merges
 
 
-def segmented_words(docs: DataFrame, *, n_merges: int = 8) -> DataFrame:
+_N_MERGES = 8
+
+
+def segmented_words(docs: DataFrame) -> DataFrame:
     """Train and return the per-word segmentation table:
     (word, freq, pieces, n_pieces) — the tokenizer artifact."""
-    ws, _ = bpe_train(word_counts(docs), n_merges=n_merges)
+    ws, _ = bpe_train(word_counts(docs), n_merges=_N_MERGES)
     return ws.select(
         "word",
         "freq",

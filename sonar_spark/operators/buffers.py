@@ -26,55 +26,39 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def delay_line(
-    df: DataFrame,
-    col: str,
-    delay: int,
-    *,
-    key: str = "doc_id",
-    order: str = "pos",
-) -> DataFrame:
+_DELAY = 3
+
+
+def delay_line(df: DataFrame) -> DataFrame:
     """Integer delay line (buffers.go:189-204 Process): out[i] =
     in[i - delay], 0.0 while the zero-initialized buffer covers the
     tap.  Requires delay >= 1: the Go's delay-0 call reads the slot
     about to be overwritten (i.e. in[i - size], the ring's oldest
     sample) — a documented quirk this relational form excludes."""
-    if delay < 1:
-        raise ValueError("delay_line requires delay >= 1 (see docstring)")
-    w = Window.partitionBy(key).orderBy(order)
-    return df.withColumn("delayed", F.lag(col, delay, 0.0).over(w))
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return df.withColumn("delayed", F.lag("v", _DELAY, 0.0).over(w))
 
 
-def delay_line_interpolated(
-    df: DataFrame,
-    col: str,
-    delay: float,
-    *,
-    key: str = "doc_id",
-    order: str = "pos",
-) -> DataFrame:
+_FRACTIONAL_DELAY = 2.5
+
+
+def delay_line_interpolated(df: DataFrame) -> DataFrame:
     """Fractional delay line (buffers.go:206-230
     ProcessInterpolated): taps at floor(delay) and floor(delay)+1
     samples ago, output = s1 + frac * (s2 - s1), zero-filled initial
     buffer (lag default 0.0)."""
-    int_d = int(delay)
-    frac = delay - int_d
-    if int_d < 1:
-        raise ValueError("requires delay >= 1 (see delay_line)")
-    w = Window.partitionBy(key).orderBy(order)
-    s1 = F.lag(col, int_d, 0.0).over(w)
-    s2 = F.lag(col, int_d + 1, 0.0).over(w)
+    int_d = int(_FRACTIONAL_DELAY)
+    frac = _FRACTIONAL_DELAY - int_d
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    s1 = F.lag("v", int_d, 0.0).over(w)
+    s2 = F.lag("v", int_d + 1, 0.0).over(w)
     return df.withColumn("delayed_interp", s1 + F.lit(frac) * (s2 - s1))
 
 
-def overlap_add(
-    frames: DataFrame,
-    *,
-    key: str = "doc_id",
-    frame_col: str = "frame_idx",
-    window_col: str = "window",
-    hop: int,
-) -> DataFrame:
+_HOP = 4
+
+
+def overlap_add(frames: DataFrame) -> DataFrame:
     """Overlap-add reconstruction (buffers.go:260-291 AddFrame loop)
     in closed form: explode every frame to (global position, value),
     keep positions below n_frames*hop (samples still inside the ring
@@ -85,22 +69,22 @@ def overlap_add(
 
     frames: one row per (key, frame_idx) with the WINDOWED frame as
     an array column.  Output: (key, pos, value)."""
-    nf = frames.groupBy(key).agg(
+    nf = frames.groupBy("doc_id").agg(
         F.count("*").alias("__nf")
     )
     ex = frames.select(
-        key,
-        frame_col,
-        F.posexplode(window_col).alias("__j", "__v"),
+        "doc_id",
+        "frame_idx",
+        F.posexplode("window").alias("__j", "__v"),
     ).withColumn(
-        "__p", F.col(frame_col) * hop + F.col("__j")
+        "__p", F.col("frame_idx") * _HOP + F.col("__j")
     )
     summed = (
-        ex.groupBy(key, "__p")
+        ex.groupBy("doc_id", "__p")
         .agg(
             F.aggregate(
                 F.array_sort(
-                    F.collect_list(F.struct(frame_col, F.col("__v")))
+                    F.collect_list(F.struct("frame_idx", F.col("__v")))
                 ),
                 F.lit(0.0),
                 lambda acc, s: acc + s["__v"],
@@ -108,7 +92,7 @@ def overlap_add(
         )
     )
     return (
-        summed.join(nf, key)
-        .where(F.col("__p") < F.col("__nf") * hop)
-        .select(key, F.col("__p").alias("pos"), "value")
+        summed.join(nf, "doc_id")
+        .where(F.col("__p") < F.col("__nf") * _HOP)
+        .select("doc_id", F.col("__p").alias("pos"), "value")
     )

@@ -51,7 +51,10 @@ TONNETZ_COORDS = [
 ]
 
 
-def tonnetz_centroids(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
+_GROUP_COLS = ["doc_id", "frame_idx"]
+
+
+def tonnetz_centroids(chroma: DataFrame) -> DataFrame:
     """Per-group Tonnetz centroid of the 12-class chroma vector
     (ComputeTonnetzCentroid, tonnetz.go:138-163): weighted mean of
     the fixed coordinates, (0, 0) when total weight <= 1e-10.
@@ -62,7 +65,7 @@ def tonnetz_centroids(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     )
     j = chroma.join(F.broadcast(coords), F.col("pitch_class") == F.col("pc"))
     w = F.col("hpcp").cast("double")
-    ag = j.groupBy(*group_cols).agg(
+    ag = j.groupBy(*_GROUP_COLS).agg(
         F.sum(F.col("x") * w).alias("__wx"),
         F.sum(F.col("y") * w).alias("__wy"),
         F.sum(w).alias("__tw"),
@@ -74,7 +77,7 @@ def tonnetz_centroids(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
         F.lit(0.0)
     )
     return ag.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.round(cx, 6).alias("centroid_x"),
         F.round(cy, 6).alias("centroid_y"),
     )
@@ -151,13 +154,10 @@ def tonnetz_movement(traj: DataFrame) -> DataFrame:
     )
 
 
-def chroma_shift_optimal(
-    left: DataFrame,
-    right: DataFrame,
-    pair_on: list[str],
-    *,
-    value_col: str = "chroma",
-) -> DataFrame:
+_PAIR_ON = ["qid", "mid"]
+
+
+def chroma_shift_optimal(left: DataFrame, right: DataFrame) -> DataFrame:
     """Optimal circular shift of the left chroma against the right
     (ShiftOptimal, chroma_vector.go:189-205, cosine metric): for each
     shift s, similarity = 1 - CosineDistance(shift(cv1, s), cv2) / 2
@@ -170,16 +170,16 @@ def chroma_shift_optimal(
     pair key columns aligned.  Output: pair cols + best_shift +
     best_similarity."""
     size = 12
-    lk = [F.col(c).alias(f"__l_{c}") for c in pair_on]
+    lk = [F.col(c).alias(f"__l_{c}") for c in _PAIR_ON]
     l = left.select(
         *lk,
         F.col("pitch_class").alias("__lc"),
-        F.col(value_col).cast("double").alias("__lv"),
+        F.col("mv").cast("double").alias("__lv"),
     ).withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(size - 1))))
     r = right.select(
-        *pair_on,
+        *_PAIR_ON,
         F.col("pitch_class").alias("__rc"),
-        F.col(value_col).cast("double").alias("__rv"),
+        F.col("mv").cast("double").alias("__rv"),
     )
     # shifted cv1[i] = cv1[(i + s) % size]: the left value at class
     # (i + s) % size lands at position i, which must match cv2[i].
@@ -187,10 +187,10 @@ def chroma_shift_optimal(
         F.col("__rc")
         == F.pmod(F.col("__lc") - F.col("__s") + size, F.lit(size))
     )
-    for c in pair_on:
+    for c in _PAIR_ON:
         cond = cond & (F.col(f"__l_{c}") == F.col(c))
     j = l.join(r, cond)
-    ag = j.groupBy(*pair_on, "__s").agg(
+    ag = j.groupBy(*_PAIR_ON, "__s").agg(
         F.sum(F.col("__lv") * F.col("__rv")).alias("__dot"),
         F.sum(F.col("__lv") * F.col("__lv")).alias("__na"),
         F.sum(F.col("__rv") * F.col("__rv")).alias("__nb"),
@@ -201,14 +201,14 @@ def chroma_shift_optimal(
         1.0 - F.col("__dot") / (F.sqrt("__na") * F.sqrt("__nb"))
     )
     sims = ag.select(
-        *pair_on,
+        *_PAIR_ON,
         F.col("__s"),
         (1.0 - dist / 2.0).alias("__sim"),
     )
     # strict-max with ascending-shift ties as ONE aggregation
     # (max on (sim, -s)); a topk window + join-back re-evaluated the
     # whole shift-join subtree twice
-    fold = sims.groupBy(*pair_on).agg(
+    fold = sims.groupBy(*_PAIR_ON).agg(
         F.max(
             F.when(
                 F.col("__sim") > 0,
@@ -220,7 +220,7 @@ def chroma_shift_optimal(
         ).alias("__b")
     )
     return fold.select(
-        *pair_on,
+        *_PAIR_ON,
         F.coalesce((-F.col("__b.negs")).cast("int"), F.lit(0)).alias(
             "best_shift"
         ),
@@ -230,13 +230,7 @@ def chroma_shift_optimal(
     )
 
 
-def chroma_cross_similarity(
-    left: DataFrame,
-    right: DataFrame,
-    pair_on: list[str],
-    *,
-    value_col: str = "chroma",
-) -> DataFrame:
+def chroma_cross_similarity(left: DataFrame, right: DataFrame) -> DataFrame:
     """Chroma sequence similarity, matrix-aggregate methods
     (chroma_similarity.go:110-197 direct, :162-194 binary, :361-396
     QMax, :399-445 OTI) between two chroma SEQUENCES per pair:
@@ -258,27 +252,27 @@ def chroma_cross_similarity(
     binary_threshold = 0.4
     oti_radius = 10
     size = 12
-    lk = [F.col(c).alias(f"__l_{c}") for c in pair_on]
+    lk = [F.col(c).alias(f"__l_{c}") for c in _PAIR_ON]
     l = left.select(
         *lk,
         F.col("frame_idx").alias("__li"),
         F.col("pitch_class").alias("__lc"),
-        F.col(value_col).cast("double").alias("__lv"),
+        F.col("cv").cast("double").alias("__lv"),
     ).withColumn("__s", F.explode(F.sequence(F.lit(0), F.lit(size - 1))))
     r = right.select(
-        *pair_on,
+        *_PAIR_ON,
         F.col("frame_idx").alias("__rj"),
         F.col("pitch_class").alias("__rc"),
-        F.col(value_col).cast("double").alias("__rv"),
+        F.col("cv").cast("double").alias("__rv"),
     )
     cond = (
         F.col("__rc")
         == F.pmod(F.col("__lc") - F.col("__s") + size, F.lit(size))
     )
-    for c in pair_on:
+    for c in _PAIR_ON:
         cond = cond & (F.col(f"__l_{c}") == F.col(c))
     j = l.join(r, cond)
-    cell = j.groupBy(*pair_on, "__s", "__li", "__rj").agg(
+    cell = j.groupBy(*_PAIR_ON, "__s", "__li", "__rj").agg(
         F.sum(F.col("__lv") * F.col("__rv")).alias("__dot"),
         F.sum(F.col("__lv") * F.col("__lv")).alias("__na"),
         F.sum(F.col("__rv") * F.col("__rv")).alias("__nb"),
@@ -289,7 +283,7 @@ def chroma_cross_similarity(
         1.0 - F.col("__dot") / (F.sqrt("__na") * F.sqrt("__nb"))
     )
     sims = cell.select(
-        *pair_on, "__s", "__li", "__rj", (1.0 - dist / 2.0).alias("__sim")
+        *_PAIR_ON, "__s", "__li", "__rj", (1.0 - dist / 2.0).alias("__sim")
     )
     # ONE per-(pair, shift) aggregation, then ONE per-pair fold: the
     # direct/binary/qmax metrics ride the s = 0 row and the OTI best
@@ -303,7 +297,7 @@ def chroma_cross_similarity(
                 "double"
             ),
         )
-        .groupBy(*pair_on, "__s")
+        .groupBy(*_PAIR_ON, "__s")
         .agg(
             F.avg("__sim").alias("__d"),
             F.avg(
@@ -314,7 +308,7 @@ def chroma_cross_similarity(
             .alias("__avg"),
         )
     )
-    fold = per_shift.groupBy(*pair_on).agg(
+    fold = per_shift.groupBy(*_PAIR_ON).agg(
         F.max(F.when(F.col("__s") == 0, F.col("__d"))).alias(
             "sim_direct"
         ),
@@ -333,7 +327,7 @@ def chroma_cross_similarity(
         ).alias("__ob"),
     )
     return fold.select(
-        *pair_on,
+        *_PAIR_ON,
         "sim_direct",
         "sim_binary",
         "qmax",
@@ -446,12 +440,7 @@ def _dp_kernel(method: str):
     return sw if method == "sw" else dtw
 
 
-def chroma_dp_similarity(
-    pairs: DataFrame,
-    pair_on: list[str],
-    *,
-    method: str = "dtw",
-) -> DataFrame:
+def chroma_dp_similarity(pairs: DataFrame, *, method: str = "dtw") -> DataFrame:
     """Smith-Waterman / DTW chroma sequence similarity
     (chroma_similarity.go:198-353) over per-pair chroma sequences.
     pairs: (pair cols..., qseq array<array<double>>, rseq ...) with
@@ -463,7 +452,7 @@ def chroma_dp_similarity(
     length-normalized max / DTW exp(-distance/path); the NaN of a
     zero-length path reaches Spark as NULL)."""
     kern = _dp_kernel(method)
-    key_fields = pairs.select(*pair_on).schema.fields
+    key_fields = pairs.select(*_PAIR_ON).schema.fields
     out_schema = (
         ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in key_fields)
         + ", score double, path_len int, similarity double"
@@ -475,7 +464,7 @@ def chroma_dp_similarity(
         ra = [np.asarray(v, dtype=np.float64) for v in rs]
         return [(*keys, *kern(qa, ra))]
 
-    return map_rows(pairs.select(*pair_on, "qseq", "rseq"), run, out_schema)
+    return map_rows(pairs.select(*_PAIR_ON, "qseq", "rseq"), run, out_schema)
 
 
 # ---------------------------------------------------------- ChromaCQT
@@ -776,12 +765,7 @@ def key_relationships(prof: DataFrame) -> DataFrame:
     )
 
 
-def chroma_vector_stats(
-    chroma: DataFrame,
-    group_cols: list[str],
-    *,
-    value_col: str = "hpcp",
-) -> DataFrame:
+def chroma_vector_stats(chroma: DataFrame) -> DataFrame:
     """Per-vector chroma statistics (ComputeStats,
     chroma_vector.go:96-143 + computeSparsity/-Uniformity :300-341 +
     common.FindPeaks math.go:265-301):
@@ -808,12 +792,12 @@ def chroma_vector_stats(
     (sub-rounding deviation, documented).  Output: group cols + the
     12 statistics."""
     size = 12
-    piv = chroma.groupBy(*group_cols).agg(
+    piv = chroma.groupBy(*_GROUP_COLS).agg(
         *[
             F.max(
                 F.when(
                     F.col("pitch_class") == i,
-                    F.col(value_col).cast("double"),
+                    F.col("cv").cast("double"),
                 )
             ).alias(f"__c{i}")
             for i in range(size)
@@ -885,7 +869,7 @@ def chroma_vector_stats(
     )
     unif = F.when(sm == 0, F.lit(1.0)).otherwise(1.0 / (1.0 + uvar))
     return piv.select(
-        *group_cols,
+        *_GROUP_COLS,
         mu.alias("mean"),
         F.col("__var").alias("variance"),
         sd.alias("std_dev"),

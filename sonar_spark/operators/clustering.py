@@ -60,7 +60,11 @@ def _euclid(a: Column, b: Column) -> Column:
     )
 
 
-def dbscan(points: DataFrame, *, eps: float = 0.5, min_pts: int = 5) -> DataFrame:
+_EPS = 0.15
+_MIN_PTS = 3
+
+
+def dbscan(points: DataFrame) -> DataFrame:
     """DBSCAN (clustering.go:930-1046) as a relational plan:
     epsilon self-join -> core test (strict-neighbor count >= MinPoints)
     -> connected components over core-core edges -> border adoption
@@ -80,12 +84,12 @@ def dbscan(points: DataFrame, *, eps: float = 0.5, min_pts: int = 5) -> DataFram
     b = p.select(F.col("__id").alias("__ib"), F.col("__v").alias("__vb"))
     pairs = (
         a.join(b, F.col("__ia") != F.col("__ib"))
-        .where(_euclid(F.col("__va"), F.col("__vb")) <= eps)
+        .where(_euclid(F.col("__va"), F.col("__vb")) <= _EPS)
         .select("__ia", "__ib")
         .persist()
     )
     deg = pairs.groupBy("__ia").agg(F.count("*").alias("__deg"))
-    cores = deg.where(F.col("__deg") >= min_pts).select(
+    cores = deg.where(F.col("__deg") >= _MIN_PTS).select(
         F.col("__ia").alias("__core")
     ).persist()
     core_edges = (
@@ -432,18 +436,15 @@ def kmedoids_sequence(
     return labels, med, it, converged
 
 
-def hierarchical_sequence(
-    data: list, k: int, linkage: str = "ward"
-):
+def hierarchical_sequence(data: list, k: int):
     """Agglomerative clustering (clustering.go:779-871 + linkage
     :872-927): every point starts as its own cluster (slice order =
     point order); each step merges the pair with the smallest
     linkage distance, scanning i < j over the CURRENT slice with
     strict < (first pair wins ties -> lexicographic (dist, i, j)
     min); cluster j's members append to i and j is removed.
-    Linkage: single=min, complete=max, average=mean, ward =
-    sqrt(mean of squared pairwise distances) (the Go's documented
-    simplified Ward).  Returns (labels, n_steps) with labels =
+    Linkage: the Go's documented simplified Ward, sqrt(mean of
+    squared pairwise distances).  Returns (labels, n_steps) with labels =
     final-slice cluster positions."""
     import math
 
@@ -453,28 +454,7 @@ def hierarchical_sequence(
     clusters = [[i] for i in range(n)]
 
     def cdist(c1, c2):
-        if linkage == "single":
-            m = math.inf
-            for i in c1:
-                for j in c2:
-                    if dm[i][j] < m:
-                        m = dm[i][j]
-            return m
-        if linkage == "complete":
-            m = 0.0
-            for i in c1:
-                for j in c2:
-                    if dm[i][j] > m:
-                        m = dm[i][j]
-            return m
-        if linkage == "average":
-            s, cnt = 0.0, 0
-            for i in c1:
-                for j in c2:
-                    s += dm[i][j]
-                    cnt += 1
-            return s / cnt
-        # ward (simplified, :913-923)
+        # simplified Ward (:913-923)
         s, cnt = 0.0, 0
         for i in c1:
             for j in c2:
@@ -601,12 +581,11 @@ def _per_group_cluster(points, out_extra, fn):
     return inp.groupBy("__g").applyInArrow(run, out_schema)
 
 
-def kmedoids_cluster(
-    points: DataFrame,
-    *,
-    k: int = 3,
-    max_iter: int = 100,
-) -> DataFrame:
+_K = 3
+_MAX_ITER = 20
+
+
+def kmedoids_cluster(points: DataFrame) -> DataFrame:
     """k-medoids over a bounded point set (see kmedoids_sequence).
     Initial medoids = the k smallest ids (deterministic stand-in for
     the Go's seeded PRNG draw — initialization is a parameter of the
@@ -615,7 +594,7 @@ def kmedoids_cluster(
 
     def fn(ids, data):
         labels, med, _, _ = kmedoids_sequence(
-            data, k, list(range(k)), max_iter
+            data, _K, list(range(_K)), _MAX_ITER
         )
         medset = set(med)
         return {
@@ -627,23 +606,25 @@ def kmedoids_cluster(
     return _per_group_cluster(points, "label int, is_medoid boolean", fn)
 
 
-def hierarchical_clusters(
-    points: DataFrame,
-    *,
-    k: int = 3,
-    linkage: str = "ward",
-) -> DataFrame:
+_N_CLUSTERS = 4
+
+
+def hierarchical_clusters(points: DataFrame) -> DataFrame:
     """Agglomerative clustering over a bounded point set (see
     hierarchical_sequence).  Output: id, label int."""
 
     def fn(ids, data):
-        labels, _ = hierarchical_sequence(data, k, linkage)
+        labels, _ = hierarchical_sequence(data, _N_CLUSTERS)
         return {"id": ids, "label": labels}
 
     return _per_group_cluster(points, "label int", fn)
 
 
-def gmm_cluster(points: DataFrame, *, k: int = 2, max_iter: int = 4) -> DataFrame:
+_GMM_K = 2
+_GMM_MAX_ITER = 4
+
+
+def gmm_cluster(points: DataFrame) -> DataFrame:
     """Diagonal-covariance GMM over a bounded point set (see
     gmm_sequence; initial means = the k smallest ids' vectors).
     Output: id, label int, resp double (winning responsibility from
@@ -651,7 +632,7 @@ def gmm_cluster(points: DataFrame, *, k: int = 2, max_iter: int = 4) -> DataFram
 
     def fn(ids, data):
         labels, means, var, mix, resp = gmm_sequence(
-            data, k, list(range(k)), max_iter
+            data, _GMM_K, list(range(_GMM_K)), _GMM_MAX_ITER
         )
         return {
             "id": ids,

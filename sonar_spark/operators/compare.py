@@ -44,7 +44,7 @@ CHROMA_STATS = [f"chroma{i}" for i in range(12)]
 # FindBestMatches defaults (comparison.go:197-263) and the match-class
 # thresholds (comparison.go:1040-1052)
 _SIMILARITY_THRESHOLD = 0.6
-_MAX_CANDIDATES = 50
+_K = 3  # matches kept per query
 _MATCH_THRESHOLDS = (0.95, 0.85, 0.75, 0.6)
 
 
@@ -69,7 +69,6 @@ def compare_topk(
     catalog: DataFrame,
     cfg: ComparisonConfig = ComparisonConfig(),
     *,
-    k: int | None = None,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
     """query/catalog: doc_stats output, optionally joined with a
@@ -87,7 +86,6 @@ def compare_topk(
 
     Output: query_id, match_id, rank, similarity, match_class,
     sim_energy, sim_moments[, sim_minhash][, sim_mfcc]."""
-    k = k or _MAX_CANDIDATES
     # MFCC / minhash groups participate when the fingerprints carry
     # them (availability semantics of comparison.go:168-196: only
     # present feature groups are scored)
@@ -231,22 +229,22 @@ def compare_topk(
         scored,
         "query_id",
         [F.col("similarity").desc(), F.col("match_id").asc()],
-        k,
+        _K,
     )
     return ranked.withColumn(
         "match_class", match_class(F.col("similarity"))
     )
 
 
-def similarity_statistics(results: DataFrame, sim: str = "similarity") -> DataFrame:
+def similarity_statistics(results: DataFrame) -> DataFrame:
     """Summary statistics over comparison results per query
     (GetSimilarityStatistics, comparison.go:1154-1205): mean, min,
     max, median, std."""
     return results.groupBy("query_id").agg(
         F.count("*").alias("n"),
-        F.avg(sim).alias("mean_sim"),
-        F.min(sim).alias("min_sim"),
-        F.max(sim).alias("max_sim"),
-        F.percentile(sim, 0.5).alias("median_sim"),
-        F.coalesce(F.stddev_pop(sim), F.lit(0.0)).alias("std_sim"),
+        F.avg("cosine_sim").alias("mean_sim"),
+        F.min("cosine_sim").alias("min_sim"),
+        F.max("cosine_sim").alias("max_sim"),
+        F.percentile("cosine_sim", 0.5).alias("median_sim"),
+        F.coalesce(F.stddev_pop("cosine_sim"), F.lit(0.0)).alias("std_sim"),
     )

@@ -10,20 +10,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def distance_matrix(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    metrics: dict[str, callable],
-) -> DataFrame:
+def distance_matrix(df: DataFrame, metrics: dict[str, callable]) -> DataFrame:
     """metrics: name -> fn(col_a, col_b) -> Column (e.g.
     functions.arrays.euclidean / pearson_distance). Output one row per
     ordered (id_a, id_b) pair including the zero diagonal."""
     a = df.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va")
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va")
     )
     b = df.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb")
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb")
     )
     upper = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b")).select(
         "id_a",
@@ -39,8 +34,8 @@ def distance_matrix(
         *[F.col(name) for name in metrics],
     )
     diag = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(id_col).alias("id_b"),
+        F.col("vec_id").alias("id_a"),
+        F.col("vec_id").alias("id_b"),
         *[F.lit(0.0).alias(name) for name in metrics],
     )
     return upper.unionByName(mirror).unionByName(diag)

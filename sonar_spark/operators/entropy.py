@@ -57,12 +57,7 @@ def _bins_for_rule(rule: str) -> Column:
     raise ValueError(rule)
 
 
-def entropy_rate_conditional(
-    df: DataFrame,
-    value: str,
-    group: str,
-    order,
-) -> DataFrame:
+def entropy_rate_conditional(df: DataFrame, order) -> DataFrame:
     """Entropy rate + lag-1 conditional entropy per group
     (entropy.go:609-707):
 
@@ -76,19 +71,19 @@ def entropy_rate_conditional(
     order: column(s) defining the sequence order within a group (must
     be a total order for determinism)."""
     cols = order if isinstance(order, (list, tuple)) else [order]
-    w = Window.partitionBy(group).orderBy(*cols)
-    d = df.select(group, *cols, F.col(value).cast("double").alias("v"))
+    w = Window.partitionBy("event_type").orderBy(*cols)
+    d = df.select("event_type", *cols, F.col("value").cast("double").alias("v"))
     d = d.withColumn("prev", F.lag("v").over(w))
     pairs = d.where(F.col("prev").isNotNull())
 
     # entropy rate: reuse the full analyzer on the diffs, Scott rule
-    diffs = pairs.select(group, (F.col("v") - F.col("prev")).alias("dv"))
-    rate = entropy_variants(diffs, "dv", group, rules=("scott",)).select(
-        group, F.col("shannon").alias("entropy_rate")
+    diffs = pairs.select("event_type", (F.col("v") - F.col("prev")).alias("dv"))
+    rate = entropy_variants(diffs, "dv", rules=("scott",)).select(
+        "event_type", F.col("shannon").alias("entropy_rate")
     )
 
     # conditional entropy: joint lag-1 histogram over the RAW range
-    st = d.groupBy(group).agg(
+    st = d.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.min("v").alias("lo"),
         F.max("v").alias("hi"),
@@ -98,7 +93,7 @@ def entropy_rate_conditional(
             F.floor(F.sqrt(F.col("n").cast("double"))), F.lit(2)
         ).cast("long"),
     )
-    j = pairs.join(F.broadcast(st), group)
+    j = pairs.join(F.broadcast(st), "event_type")
     bw = (F.col("hi") - F.col("lo")) / F.col("nb")
 
     def _bin(col):
@@ -107,36 +102,36 @@ def entropy_rate_conditional(
         )
 
     joint = j.where(F.col("hi") > F.col("lo")).select(
-        group,
+        "event_type",
         F.col("n"),
         _bin(F.col("v")).alias("xbin"),
         _bin(F.col("prev")).alias("ybin"),
     )
-    cnt = joint.groupBy(group, "n", "ybin", "xbin").agg(
+    cnt = joint.groupBy("event_type", "n", "ybin", "xbin").agg(
         F.count("*").cast("double").alias("c")
     )
-    wy = Window.partitionBy(group, "ybin")
+    wy = Window.partitionBy("event_type", "ybin")
     marg = cnt.withColumn("m", F.sum("c").over(wy))
     # H(X|Y) = sum_y P(y) * H(X|Y=y); total = n - 1 pairs
-    per_y = marg.groupBy(group, "n", "ybin").agg(
+    per_y = marg.groupBy("event_type", "n", "ybin").agg(
         F.max("m").alias("m"),
         (-F.sum(
             (F.col("c") / F.col("m")) * F.log2(F.col("c") / F.col("m"))
         ) + F.lit(0.0)).alias("h_given_y"),
     )
-    cond = per_y.groupBy(group).agg(
+    cond = per_y.groupBy("event_type").agg(
         F.sum(
             (F.col("m") / (F.col("n").cast("double") - 1.0))
             * F.col("h_given_y")
         ).alias("conditional_entropy")
     )
     # groups with min == max get conditional entropy 0 (:652-654)
-    base = df.select(group).distinct()
+    base = df.select("event_type").distinct()
     return (
-        base.join(rate, group, "left")
-        .join(cond, group, "left")
+        base.join(rate, "event_type", "left")
+        .join(cond, "event_type", "left")
         .select(
-            group,
+            "event_type",
             F.coalesce("entropy_rate", F.lit(0.0)).alias("entropy_rate"),
             F.coalesce("conditional_entropy", F.lit(0.0)).alias(
                 "conditional_entropy"
@@ -148,12 +143,11 @@ def entropy_rate_conditional(
 def entropy_variants(
     df: DataFrame,
     value: str,
-    group: str,
     rules: tuple[str, ...] = BIN_RULES,
 ) -> DataFrame:
     """(group, rule, num_bins, shannon, renyi2, tsallis2, hartley,
     min_entropy, norm_shannon) per group x bin rule."""
-    d = df.select(group, F.col(value).cast("double").alias("v"))
+    d = df.select("event_type", F.col(value).cast("double").alias("v"))
     # ONE sorted pass computes everything the bin rules need: the
     # base moments arrive as full-partition window aggregates over
     # the same exchange that sorts for row_number, so the old
@@ -163,10 +157,10 @@ def entropy_variants(
     # sorted[int(.25n)] / sorted[int(.75n)] picks
     # (entropy.go:341-349 — NOT interpolated); variance is the n-1
     # form of calculateMoments (:236-275).
-    wo = Window.partitionBy(group).orderBy("v")
-    wg = Window.partitionBy(group)
+    wo = Window.partitionBy("event_type").orderBy("v")
+    wg = Window.partitionBy("event_type")
     r = d.select(
-        group,
+        "event_type",
         "v",
         F.row_number().over(wo).alias("rn"),
         F.count("*").over(wg).alias("n"),
@@ -176,7 +170,7 @@ def entropy_variants(
         F.max("v").over(wg).alias("hi"),
     )
     nn = F.col("n").cast("double")
-    stats = r.groupBy(group).agg(
+    stats = r.groupBy("event_type").agg(
         F.max("n").alias("n"),
         F.max("mu").alias("mu"),
         F.max("var").alias("var"),
@@ -203,7 +197,7 @@ def entropy_variants(
     )
 
     per_rule = stats.select(
-        group,
+        "event_type",
         "n",
         "lo",
         F.when(F.col("hi") > F.col("lo"), F.col("hi"))
@@ -221,13 +215,13 @@ def entropy_variants(
             )
         ).alias("rb"),
     ).select(
-        group, "n", "lo", "hi", F.col("rb.rule").alias("rule"),
+        "event_type", "n", "lo", "hi", F.col("rb.rule").alias("rule"),
         F.col("rb.num_bins").alias("num_bins"),
     )
 
     # bin assignment per value x rule (buildHistogram :404-424)
-    binned = d.join(F.broadcast(per_rule), group).select(
-        group,
+    binned = d.join(F.broadcast(per_rule), "event_type").select(
+        "event_type",
         "rule",
         "num_bins",
         "n",
@@ -242,18 +236,18 @@ def entropy_variants(
             F.col("num_bins") - 1,
         ).alias("bin"),
     )
-    counts = binned.groupBy(group, "rule", "num_bins", "n", "bin").agg(
+    counts = binned.groupBy("event_type", "rule", "num_bins", "n", "bin").agg(
         F.count("*").alias("c")
     )
     p = F.col("c").cast("double") / F.col("n")
-    ent = counts.groupBy(group, "rule", "num_bins").agg(
+    ent = counts.groupBy("event_type", "rule", "num_bins").agg(
         (-F.sum(p * F.log2(p)) + F.lit(0.0)).alias("shannon"),
         F.sum(p * p).alias("sum_p2"),
         F.count("*").alias("support"),
         F.max(p).alias("max_p"),
     )
     return ent.select(
-        group,
+        "event_type",
         "rule",
         "num_bins",
         "shannon",

@@ -65,15 +65,15 @@ def dc_removal(df: DataFrame, pole: float = 0.995) -> DataFrame:
     return _apply_per_doc(df, make)
 
 
-def bandpass(
-    df: DataFrame,
-    sample_rate: int = 64,
-    center_freq: float = 8.0,
-    q: float = 1.0,
-) -> DataFrame:
+_SAMPLE_RATE = 64
+_CENTER_FREQ = 8.0
+_Q = 1.0
+
+
+def bandpass(df: DataFrame) -> DataFrame:
     """(doc_id, filtered): bandpass-biquad-filtered token values.
     Defaults pick a mid-band center on the token-tick clock analog."""
-    coeffs = kernels.bandpass_coefficients(sample_rate, center_freq, q)
+    coeffs = kernels.bandpass_coefficients(_SAMPLE_RATE, _CENTER_FREQ, _Q)
 
     def make(max_len: int):
         g = kernels.iir2_impulse(coeffs[3], coeffs[4], max(max_len, 2))

@@ -180,9 +180,10 @@ def lsh_candidate_pairs(
     )
 
 
-def simhash_near_duplicates(
-    sig_df: DataFrame, max_hamming: int = 3
-) -> DataFrame:
+_MAX_HAMMING = 3
+
+
+def simhash_near_duplicates(sig_df: DataFrame) -> DataFrame:
     """SimHash near-dups: pairs whose 64-bit signatures differ in at
     most max_hamming bits. Candidate generation by exact match on
     4 rotated 16-bit blocks (any pair within hamming 3 of 64 bits
@@ -213,7 +214,7 @@ def simhash_near_duplicates(
     return (
         out.dropDuplicates(["doc_a", "doc_b"])
         .withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= _MAX_HAMMING)
         .drop("__sa", "__sb")
     )
 
@@ -452,7 +453,11 @@ def near_dup_labels(
     )
 
 
-def winnow_fingerprints(words_df: DataFrame, *, k: int = 4, w: int = 4) -> DataFrame:
+_NGRAM_K = 4
+_WINNOW_W = 4
+
+
+def winnow_fingerprints(words_df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting",
     SIGMOD 2003 — the MOSS scheme; the rolling-hash fingerprint
@@ -461,7 +466,7 @@ def winnow_fingerprints(words_df: DataFrame, *, k: int = 4, w: int = 4) -> DataF
 
     Per doc: hash every k-token shingle (md5-prefix — identical in
     Spark and DuckDB, the cross-engine convention), then slide a
-    window of ``w`` consecutive hashes and select each window's
+    window of _WINNOW_W consecutive hashes and select each window's
     minimum, ties to the RIGHTMOST occurrence (the paper's rule);
     the distinct selected (hash, position) pairs are the doc's
     fingerprints.  Guarantee: any shared token run of length
@@ -478,13 +483,13 @@ def winnow_fingerprints(words_df: DataFrame, *, k: int = 4, w: int = 4) -> DataF
     Returns (doc_id, fp long, pos long) — pos is the 1-based shingle
     index the fingerprint was selected at."""
     words = F.col("words")
-    n_sh = F.greatest(F.size(words) - (k - 1), F.lit(1))
+    n_sh = F.greatest(F.size(words) - (_NGRAM_K - 1), F.lit(1))
     shingled = words_df.select(
         F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(1), n_sh),
-                lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+                lambda i: F.concat_ws(" ", F.slice(words, i, _NGRAM_K)),
             )
         ).alias("__p0", "__sh"),
     )
@@ -500,13 +505,13 @@ def winnow_fingerprints(words_df: DataFrame, *, k: int = 4, w: int = 4) -> DataF
         "doc_id",
         "pos",
         F.min(F.struct(F.col("__h"), (-F.col("pos")).alias("__np")))
-        .over(bypos.rowsBetween(0, w - 1))
+        .over(bypos.rowsBetween(0, _WINNOW_W - 1))
         .alias("__s"),
         F.count("*").over(Window.partitionBy("doc_id")).alias("__ns"),
     )
     return (
         sel.where(
-            F.col("pos") <= F.greatest(F.col("__ns") - (w - 1), F.lit(1))
+            F.col("pos") <= F.greatest(F.col("__ns") - (_WINNOW_W - 1), F.lit(1))
         )
         .select(
             "doc_id",
@@ -517,17 +522,16 @@ def winnow_fingerprints(words_df: DataFrame, *, k: int = 4, w: int = 4) -> DataF
     )
 
 
-def fingerprint_matches(
-    fps: DataFrame,
-    *,
-    max_doc_freq: int = 8,
-    min_shared: int = 3,
-) -> DataFrame:
+_MAX_DOC_FREQ = 8
+_MIN_SHARED = 3
+
+
+def fingerprint_matches(fps: DataFrame) -> DataFrame:
     """Cross-doc matches over a winnowing fingerprint table: pairs of
     docs sharing >= min_shared fingerprints, with the shared count
     and the containment-style overlap n_shared / min(|fp_a|, |fp_b|).
 
-    Scale path: fingerprints occurring in more than ``max_doc_freq``
+    Scale path: fingerprints occurring in more than _MAX_DOC_FREQ
     docs are dropped before pairing (the standard stop-fingerprint
     cap — boilerplate shingles match everything and carry no
     signal), which bounds every join bucket at max_doc_freq rows, so
@@ -553,7 +557,7 @@ def fingerprint_matches(
         .withColumn(
             "__df", F.count("*").over(Window.partitionBy("fp"))
         )
-        .where(F.col("__df") <= max_doc_freq)
+        .where(F.col("__df") <= _MAX_DOC_FREQ)
         .select("doc_id", "fp", "__n_fp")
         .persist()
     )
@@ -572,7 +576,7 @@ def fingerprint_matches(
             F.max("__na").alias("__na"),
             F.max("__nb").alias("__nb"),
         )
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= _MIN_SHARED)
         .select(
             "doc_a",
             "doc_b",
@@ -670,7 +674,7 @@ def shingle_hash_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def substring_spans(docs: DataFrame, *, k: int = 4) -> DataFrame:
+def substring_spans(docs: DataFrame) -> DataFrame:
     """Exact duplicated-substring detection — the span-level dedup
     from Lee et al. 2022 ("Deduplicating Training Data Makes Language
     Models Better"): a token k-gram occurring more than once
@@ -701,7 +705,7 @@ def substring_spans(docs: DataFrame, *, k: int = 4) -> DataFrame:
         "doc_id", F.size(words).cast("long").alias("n_tokens")
     )
     grams = _gram_hash_stream(
-        docs, k=k, positions=True
+        docs, k=_NGRAM_K, positions=True
     )
     dup = grams.groupBy("h").agg(F.count("*").alias("__tot")).where(
         F.col("__tot") >= 2
@@ -715,7 +719,7 @@ def substring_spans(docs: DataFrame, *, k: int = 4) -> DataFrame:
         # neither overlaps nor touches the previous one's: pos > prev + k
         F.when(
             F.lag("pos").over(w_doc).isNull()
-            | (F.col("pos") > F.lag("pos").over(w_doc) + k),
+            | (F.col("pos") > F.lag("pos").over(w_doc) + _NGRAM_K),
             F.lit(1),
         )
         .otherwise(F.lit(0))
@@ -726,7 +730,7 @@ def substring_spans(docs: DataFrame, *, k: int = 4) -> DataFrame:
         "pos",
         F.sum("__new").over(w_doc).alias("__span"),
     ).groupBy("doc_id", "__span").agg(
-        (F.max("pos") + (k - 1) - F.min("pos") + 1).cast("long").alias("__len")
+        (F.max("pos") + (_NGRAM_K - 1) - F.min("pos") + 1).cast("long").alias("__len")
     )
     per_doc = spans.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_dup_spans"),
@@ -748,7 +752,7 @@ def substring_spans(docs: DataFrame, *, k: int = 4) -> DataFrame:
     )
 
 
-def ngram_novelty(docs: DataFrame, *, k: int = 4) -> DataFrame:
+def ngram_novelty(docs: DataFrame) -> DataFrame:
     """Per-document n-gram novelty vs the corpus prefix — a
     contribution/curriculum score: a k-gram POSITION is novel iff no
     document with a smaller id contains that k-gram (ties: the
@@ -773,7 +777,7 @@ def ngram_novelty(docs: DataFrame, *, k: int = 4) -> DataFrame:
         "doc_id", F.size(words).cast("long").alias("n_tokens")
     )
     gd = _gram_hash_stream(
-        docs, k=k, positions=False
+        docs, k=_NGRAM_K, positions=False
     )
     first = gd.groupBy("h").agg(F.min("doc_id").alias("__first"))
     per_doc = (
@@ -799,11 +803,13 @@ def ngram_novelty(docs: DataFrame, *, k: int = 4) -> DataFrame:
     )
 
 
+_THRESHOLD = 0.8
+
+
 def incremental_dedup(
     batch: DataFrame,
     corpus: DataFrame,
     *,
-    threshold: float = 0.8,
     candidate_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental ingest dedup — the operational pattern at corpus
@@ -873,7 +879,7 @@ def incremental_dedup(
         cand.select(F.col("b_id").alias("doc_a"), F.col("c_id").alias("doc_b")),
         bs,
         cs,
-        threshold,
+        _THRESHOLD,
     ).select(
         F.col("doc_a").alias("b_id"),
         F.col("doc_b").alias("c_id"),

@@ -103,21 +103,24 @@ def autocorr_lags(vals: DataFrame, *, order: int = 4) -> DataFrame:
     )
 
 
-def lpc(vals: DataFrame, *, order: int = 4) -> DataFrame:
+_ORDER = 4
+
+
+def lpc(vals: DataFrame) -> DataFrame:
     """Order-p LPC per key: r0, k1..kp, a1..ap (final coefficients),
     gain = sqrt(E_p), resid_e = E_p, stable.  Keys with fewer than
     2*order samples (lpc.go:45-47) or zero energy (lpc.go:92-94) are
     excluded, as in the reference's error paths."""
-    rs = autocorr_lags(vals, order=order)
-    d = rs.where((F.col("__n") >= 2 * order) & (F.col("r0") > 0))
+    rs = autocorr_lags(vals, order=_ORDER)
+    d = rs.where((F.col("__n") >= 2 * _ORDER) & (F.col("r0") > 0))
 
-    lag_cols = [f"r{m}" for m in range(order + 1)]
+    lag_cols = [f"r{m}" for m in range(_ORDER + 1)]
     inp = d.select("doc_id", *lag_cols)
     out_fields = (
         "doc_id long, r0 double, "
-        + ", ".join(f"k{i} double" for i in range(1, order + 1))
+        + ", ".join(f"k{i} double" for i in range(1, _ORDER + 1))
         + ", "
-        + ", ".join(f"a{i} double" for i in range(1, order + 1))
+        + ", ".join(f"a{i} double" for i in range(1, _ORDER + 1))
         + ", gain double, resid_e double, stable boolean"
     )
 
@@ -129,14 +132,14 @@ def lpc(vals: DataFrame, *, order: int = 4) -> DataFrame:
             R = np.column_stack(
                 [
                     np.asarray(batch.column(m + 1), dtype=np.float64)
-                    for m in range(order + 1)
+                    for m in range(_ORDER + 1)
                 ]
             )
-            k, acoef, E, stable = levinson_durbin_rows(R, order)
+            k, acoef, E, stable = levinson_durbin_rows(R, _ORDER)
             cols = [keys, pa.array(R[:, 0])]
-            for i in range(order):
+            for i in range(_ORDER):
                 cols.append(pa.array(k[:, i]))
-            for i in range(order):
+            for i in range(_ORDER):
                 cols.append(pa.array(acoef[:, i]))
             cols.append(pa.array(np.sqrt(np.maximum(E, 0.0))))
             cols.append(pa.array(E))
@@ -144,8 +147,8 @@ def lpc(vals: DataFrame, *, order: int = 4) -> DataFrame:
             yield pa.RecordBatch.from_arrays(
                 cols,
                 names=["doc_id", "r0"]
-                + [f"k{i}" for i in range(1, order + 1)]
-                + [f"a{i}" for i in range(1, order + 1)]
+                + [f"k{i}" for i in range(1, _ORDER + 1)]
+                + [f"a{i}" for i in range(1, _ORDER + 1)]
                 + ["gain", "resid_e", "stable"],
             )
 
@@ -154,7 +157,7 @@ def lpc(vals: DataFrame, *, order: int = 4) -> DataFrame:
 
 def lpc4(vals: DataFrame) -> DataFrame:
     """Order-4 LPC (column subset kept for the established surface)."""
-    return lpc(vals, order=4).select(
+    return lpc(vals).select(
         "doc_id",
         "r0",
         "k1",

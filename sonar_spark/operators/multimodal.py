@@ -41,7 +41,10 @@ def media_payload(i: int) -> np.ndarray:
     return ((197 * i + 17 * j + (j * j) % 251) % 256).astype(np.uint8)
 
 
-def synth_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
+_N_MEDIA = 64
+
+
+def synth_media_table(spark: SparkSession) -> DataFrame:
     """Deterministic synthetic media table: alternating image/audio
     rows with formula-derived binary payloads + integrity checksum
     (see media_payload — SQL-reconstructible by design)."""
@@ -59,7 +62,7 @@ def synth_media_table(spark: SparkSession, n: int = 64) -> DataFrame:
              hashlib.sha256(raw).hexdigest(), raw)
         ]
 
-    return map_rows(spark.range(n), row, MEDIA_SCHEMA)
+    return map_rows(spark.range(_N_MEDIA), row, MEDIA_SCHEMA)
 
 
 def media_features(media: DataFrame) -> DataFrame:

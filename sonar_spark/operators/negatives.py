@@ -31,26 +31,23 @@ from ..functions.sketch import md5_60
 from .sharding import global_cumsum
 
 
-def global_dense_index(df: DataFrame, *, col: str = "doc_id") -> DataFrame:
-    """Add gidx = 0-based dense rank of `col` over the whole table
-    (== row_number() OVER (ORDER BY col) - 1), without a global
+def global_dense_index(df: DataFrame) -> DataFrame:
+    """Add gidx = 0-based dense rank of doc_id over the whole table
+    (== row_number() OVER (ORDER BY doc_id) - 1), without a global
     single-partition sort: the rank is the exclusive prefix count,
-    i.e. sharding.global_cumsum over a constant-1 column.  `col`
+    i.e. sharding.global_cumsum over a constant-1 column.  doc_id
     values must be unique."""
     return (
-        global_cumsum(df.withColumn("__one", F.lit(1)), col=col, val="__one")
+        global_cumsum(df.withColumn("__one", F.lit(1)), val="__one")
         .withColumnRenamed("cum_before", "gidx")
         .drop("__one")
     )
 
 
-def negative_pairs(
-    docs: DataFrame,
-    *,
-    k: int = 4,
-    id_col: str = "doc_id",
-    salt: str = "neg1",
-) -> DataFrame:
+_K = 4
+
+
+def negative_pairs(docs: DataFrame) -> DataFrame:
     """k exact-uniform, self-free, deterministic negatives per doc.
 
     Output: doc_id, j (0..k-1), neg_gidx, neg_doc_id.  One tiny
@@ -63,28 +60,28 @@ def negative_pairs(
     # lookup side — persist it so the two-pass (and the corpus scan
     # under it) runs once, not per consumer (the multi-consumer
     # corpus-subtree rule; plan-audited: 32 -> ~6 exchanges)
-    idx = global_dense_index(docs.select(id_col), col=id_col).persist()
+    idx = global_dense_index(docs.select("doc_id")).persist()
     n = idx.groupBy().agg(F.count("*").cast("long").alias("__n"))
     probes = (
         idx.crossJoin(F.broadcast(n))
         .where(F.col("__n") >= 2)
         .select(
-            id_col,
+            "doc_id",
             "gidx",
             "__n",
             F.explode(
-                F.array(*[F.lit(j) for j in range(k)])
+                F.array(*[F.lit(j) for j in range(_K)])
             ).alias("j"),
         )
         .select(
-            id_col,
+            "doc_id",
             "j",
             (
                 md5_60(
                     F.concat_ws(
                         ":",
-                        F.lit(salt),
-                        F.col(id_col).cast("string"),
+                        F.lit("neg1"),
+                        F.col("doc_id").cast("string"),
                         F.col("j").cast("string"),
                     )
                 )
@@ -93,7 +90,7 @@ def negative_pairs(
             "gidx",
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("j").cast("long").alias("j"),
             F.when(F.col("__r") >= F.col("gidx"), F.col("__r") + 1)
             .otherwise(F.col("__r"))
@@ -103,8 +100,8 @@ def negative_pairs(
     )
     neg = idx.select(
         F.col("gidx").alias("neg_gidx"),
-        F.col(id_col).alias("neg_doc_id"),
+        F.col("doc_id").alias("neg_doc_id"),
     )
     return probes.join(neg, "neg_gidx").select(
-        id_col, "j", "neg_gidx", "neg_doc_id"
+        "doc_id", "j", "neg_gidx", "neg_doc_id"
     )

@@ -101,38 +101,20 @@ def normalize(
     return j.withColumn(out_col, expr).drop(*drop)
 
 
-def _order_cols(order):
-    cols = [order] if isinstance(order, str) else list(order)
-    return [F.col(c).asc() for c in cols]
+# +-_K rows per user_id, ordered by ts_sec with event_id breaking ties
+_K = 2
+_ORDER = ["ts_sec", "event_id"]
 
 
-def moving_average(
-    df: DataFrame,
-    value: str,
-    k: int = 2,
-    *,
-    group: str = "doc_id",
-    order: str | list[str] = "frame_idx",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Centered moving average over a +-k row window (math.go:140-168;
-    shrinks at the edges like the reference). Pass a multi-column
-    order to break timestamp ties deterministically."""
-    w = Window.partitionBy(group).orderBy(*_order_cols(order)).rowsBetween(-k, k)
-    return df.withColumn(out_col or f"{value}_ma", F.avg(value).over(w))
+def moving_average(df: DataFrame) -> DataFrame:
+    """Centered moving average ``ma`` of ``value`` over a +-_K row
+    window (math.go:140-168; shrinks at the edges like the reference)."""
+    w = Window.partitionBy("user_id").orderBy(*_ORDER).rowsBetween(-_K, _K)
+    return df.withColumn("ma", F.avg("value").over(w))
 
 
-def median_filter(
-    df: DataFrame,
-    value: str,
-    k: int = 2,
-    *,
-    group: str = "doc_id",
-    order: str | list[str] = "frame_idx",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Centered moving median over +-k rows (math.go:171-209)."""
-    w = Window.partitionBy(group).orderBy(*_order_cols(order)).rowsBetween(-k, k)
-    return df.withColumn(
-        out_col or f"{value}_med", F.percentile(F.col(value), 0.5).over(w)
-    )
+def median_filter(df: DataFrame) -> DataFrame:
+    """Centered moving median ``med`` of ``value`` over +-_K rows
+    (math.go:171-209)."""
+    w = Window.partitionBy("user_id").orderBy(*_ORDER).rowsBetween(-_K, _K)
+    return df.withColumn("med", F.percentile(F.col("value"), 0.5).over(w))

@@ -28,7 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pack_sequences(docs: DataFrame, *, capacity: int = 256) -> DataFrame:
+_CAPACITY = 96
+
+
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Pack (id, token-length) rows into fixed-size windows per shard.
 
     Output one row per document: its shard, assigned window id
@@ -50,7 +53,7 @@ def pack_sequences(docs: DataFrame, *, capacity: int = 256) -> DataFrame:
 
     from ..session import arrow_batch, arrow_schema
 
-    cap_i = int(capacity)
+    cap_i = int(_CAPACITY)
     shard_type = docs.schema["source"].dataType.simpleString()
     id_type = docs.schema["doc_id"].dataType.simpleString()
     schema = (
@@ -136,12 +139,16 @@ def chunk_documents(
     )
 
 
-def chunk_dedup(docs: DataFrame, *, window: int = 16, stride: int = 16) -> DataFrame:
+_WINDOW = 8
+_STRIDE = 8
+
+
+def chunk_dedup(docs: DataFrame) -> DataFrame:
     """Sub-document (chunk-level) exact dedup — the paragraph-dedup
     pass web pipelines (RefinedWeb, CCNet) run AFTER document-level
     dedup: boilerplate repeats across documents that are not
-    themselves duplicates.  Non-overlapping chunks (stride = window
-    by default) are fingerprinted with chunk_documents' md5, a chunk
+    themselves duplicates.  Non-overlapping chunks (_STRIDE = _WINDOW)
+    are fingerprinted with chunk_documents' md5, a chunk
     is DUPLICATED if its fingerprint appears in more than one
     document (or more than once in the same document), and each doc
     reports its duplicated-chunk fraction — the drop/trim signal.
@@ -156,8 +163,8 @@ def chunk_dedup(docs: DataFrame, *, window: int = 16, stride: int = 16) -> DataF
     """
     ch = chunk_documents(
         docs,
-        window=window,
-        stride=stride,
+        window=_WINDOW,
+        stride=_STRIDE,
     )
     # "more than one doc OR more than once in one doc" == total
     # occurrence count > 1, so one windowed count suffices

@@ -25,9 +25,11 @@ from pyspark.sql import functions as F
 from .topk import topk_per_group
 
 
+_GROUP_COLS = ["doc_id", "frame_idx"]
+
+
 def spectral_peaks(
     spec: DataFrame,
-    group_cols: list[str],
     *,
     min_height: float = 0.0,
     max_peaks: int = 3,
@@ -35,7 +37,7 @@ def spectral_peaks(
     """Output: group cols + rank, bin, magnitude, refined_freq,
     refined_mag."""
     freq_resolution = 1.0
-    w = Window.partitionBy(*group_cols).orderBy("bin")
+    w = Window.partitionBy(*_GROUP_COLS).orderBy("bin")
     m = F.col("m")
     d = spec.withColumn("__y1", F.lag("m").over(w)).withColumn(
         "__y3", F.lead("m").over(w)
@@ -53,7 +55,7 @@ def spectral_peaks(
     refined_freq = (F.col("bin") + offset) * freq_resolution
     refined_mag = F.when(ok, m + a * offset * offset + b * offset).otherwise(m)
     scored = cand.select(
-        *group_cols,
+        *_GROUP_COLS,
         "bin",
         m.alias("magnitude"),
         refined_freq.alias("refined_freq"),
@@ -61,13 +63,13 @@ def spectral_peaks(
     )
     return topk_per_group(
         scored,
-        group_cols,
+        _GROUP_COLS,
         [F.col("magnitude").desc(), F.col("bin").asc()],
         max_peaks,
     )
 
 
-def assign_harmonics(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
+def assign_harmonics(peaks: DataFrame) -> DataFrame:
     """AssignHarmonics (spectral_peaks.go:153-181): for each peak,
     scan harmonics 1..20 of f0, keep candidates with relative error
     |f - h f0| / (h f0) < tolerance, pick the minimum ABSOLUTE error
@@ -82,17 +84,17 @@ def assign_harmonics(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     err = F.abs(F.col("refined_freq") - exp)
     cand = h.withColumn("__err", err).where(err / exp < tolerance)
     best = topk_per_group(
-        cand.select(*group_cols, "bin", "__h", "__err"),
-        [*group_cols, "bin"],
+        cand.select(*_GROUP_COLS, "bin", "__h", "__err"),
+        [*_GROUP_COLS, "bin"],
         [F.col("__err").asc(), F.col("__h").asc()],
         1,
-    ).select(*group_cols, "bin", (F.col("__h") - 1).alias("__harm"))
-    return peaks.join(best, [*group_cols, "bin"], "left").withColumn(
+    ).select(*_GROUP_COLS, "bin", (F.col("__h") - 1).alias("__harm"))
+    return peaks.join(best, [*_GROUP_COLS, "bin"], "left").withColumn(
         "harmonic", F.coalesce(F.col("__harm"), F.lit(-1)).cast("int")
     ).drop("__harm")
 
 
-def harmonic_product_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
+def harmonic_product_f0(spec: DataFrame) -> DataFrame:
     """Harmonic product spectrum F0 (harmonic_product.go:32-160):
     hps[i] = prod_{h=1..H} power[i*h], where downsampleSpectrum
     (harmonic_product.go:94-124) zero-fills beyond len//h — integer
@@ -111,7 +113,7 @@ def harmonic_product_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     min_bin = 1
     max_bin = 7
     pw = spec.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.col("bin").alias("__b"),
         (F.col("m") * F.col("m")).alias("__p"),
     )
@@ -123,29 +125,29 @@ def harmonic_product_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     prod = F.col("__p1")
     for h in range(2, num_harmonics + 1):
         ph = pw.select(
-            *[F.col(c).alias(f"__g{h}_{c}") for c in group_cols],
+            *[F.col(c).alias(f"__g{h}_{c}") for c in _GROUP_COLS],
             F.col("__b").alias(f"__b{h}"),
             F.col("__p").alias(f"__p{h}"),
         )
         on = F.col(f"__b{h}") == F.col("__b") * h
-        for c in group_cols:
+        for c in _GROUP_COLS:
             on = on & (F.col(f"__g{h}_{c}") == F.col(c))
         cand = cand.join(ph, on).drop(
-            f"__b{h}", *[f"__g{h}_{c}" for c in group_cols]
+            f"__b{h}", *[f"__g{h}_{c}" for c in _GROUP_COLS]
         )
         prod = prod * F.col(f"__p{h}")
     scored = cand.select(
-        *group_cols, F.col("__b").alias("f0_bin"), prod.alias("hps")
+        *_GROUP_COLS, F.col("__b").alias("f0_bin"), prod.alias("hps")
     ).where(F.col("hps") > 0)
     best = topk_per_group(
-        scored, group_cols, [F.col("hps").desc(), F.col("f0_bin").asc()], 1
+        scored, _GROUP_COLS, [F.col("hps").desc(), F.col("f0_bin").asc()], 1
     ).drop("rank")
     return (
-        spec.select(*group_cols)
+        spec.select(*_GROUP_COLS)
         .distinct()
-        .join(best, group_cols, "left")
+        .join(best, _GROUP_COLS, "left")
         .select(
-            *group_cols,
+            *_GROUP_COLS,
             F.coalesce(F.col("f0_bin"), F.lit(0)).cast("int").alias(
                 "f0_bin"
             ),
@@ -154,7 +156,7 @@ def harmonic_product_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def harmonic_series_analysis(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
+def harmonic_series_analysis(peaks: DataFrame) -> DataFrame:
     """AnalyzeHarmonicSeries (spectral_peaks.go:200-268) over
     harmonic-assigned peaks (harmonic >= 0 only; groups with none are
     absent, matching the reference's empty map): harmonic count,
@@ -178,7 +180,7 @@ def harmonic_series_analysis(peaks: DataFrame, group_cols: list[str]) -> DataFra
         F.count("*") >= 2,
         (n * sxy - sx * sy) / (n * sxx - sx * sx),
     )
-    return h.groupBy(*group_cols).agg(
+    return h.groupBy(*_GROUP_COLS).agg(
         F.count("*").alias("num_harmonics"),
         F.coalesce(
             F.max(F.when(F.col("harmonic") == 0, m)), F.lit(0.0)
@@ -191,7 +193,7 @@ def harmonic_series_analysis(peaks: DataFrame, group_cols: list[str]) -> DataFra
     )
 
 
-def hpcp(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
+def hpcp(peaks: DataFrame) -> DataFrame:
     """Harmonic pitch-class profile from spectral peaks
     (chroma/hpcp.go:147-310): pitch class = mod(69 + 12 log2(f/ref),
     12) scaled to `size`; each peak scatters weight*cos(pi d / W) into
@@ -234,26 +236,26 @@ def hpcp(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     )
     contrib = (
         cand.where(dist <= wsize / 2)
-        .groupBy(*group_cols, F.pmod(F.col("__bin"), F.lit(size)).alias(
+        .groupBy(*_GROUP_COLS, F.pmod(F.col("__bin"), F.lit(size)).alias(
             "pitch_class"
         ))
         .agg(F.sum(F.col("refined_mag") * weight).alias("raw"))
     )
     # zero-filled 12-class grid per group + unit-energy normalization
     grid = (
-        peaks.select(*group_cols)
+        peaks.select(*_GROUP_COLS)
         .distinct()
         .withColumn(
             "pitch_class", F.explode(F.sequence(F.lit(0), F.lit(size - 1)))
         )
         .withColumn("pitch_class", F.col("pitch_class").cast("long"))
-        .join(contrib, [*group_cols, "pitch_class"], "left")
+        .join(contrib, [*_GROUP_COLS, "pitch_class"], "left")
         .withColumn("raw", F.coalesce("raw", F.lit(0.0)))
     )
-    w = Window.partitionBy(*group_cols)
+    w = Window.partitionBy(*_GROUP_COLS)
     energy = F.sqrt(F.sum(F.col("raw") * F.col("raw")).over(w))
     return grid.select(
-        *group_cols,
+        *_GROUP_COLS,
         "pitch_class",
         F.when(energy > 0, F.col("raw") / energy)
         .otherwise(F.lit(0.0))
@@ -261,7 +263,7 @@ def hpcp(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def cepstrum_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
+def cepstrum_f0(spec: DataFrame) -> DataFrame:
     """Cepstral F0 estimation (fundamental_estimation.go:96-147) over
     the histogram-as-spectrum analog: log power spectrum with the
     1e-10 floor (:110-119), real inverse DFT to the quefrency domain
@@ -288,7 +290,7 @@ def cepstrum_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     n = float(num_bins)
     logp = F.log(F.greatest(F.col("m") * F.col("m"), F.lit(1e-10)))
     qs = spec.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.col("bin").alias("__k"),
         logp.alias("__lp"),
     ).withColumn(
@@ -300,21 +302,21 @@ def cepstrum_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
         * F.col("__q").cast("double")
         / F.lit(n)
     )
-    cep = qs.groupBy(*group_cols, "__q").agg(
+    cep = qs.groupBy(*_GROUP_COLS, "__q").agg(
         F.round(F.sum(F.col("__lp") * F.cos(ang)) / n, 6).alias("__cep")
     )
     best = topk_per_group(
         cep.where(F.col("__cep") > -1.0),
-        group_cols,
+        _GROUP_COLS,
         [F.col("__cep").desc(), F.col("__q").asc()],
         1,
     )
     return (
-        spec.select(*group_cols)
+        spec.select(*_GROUP_COLS)
         .distinct()
-        .join(best, group_cols, "left")
+        .join(best, _GROUP_COLS, "left")
         .select(
-            *group_cols,
+            *_GROUP_COLS,
             F.coalesce(F.col("__q"), F.lit(0)).cast("int").alias(
                 "quefrency"
             ),
@@ -328,11 +330,7 @@ def cepstrum_f0(spec: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def inharmonicity(
-    spec: DataFrame,
-    peaks: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
+def inharmonicity(spec: DataFrame, peaks: DataFrame) -> DataFrame:
     """Spectral-deviation inharmonicity (tonal/inharmonicity.go:
     218-467, the default method with the :150-163 parameters):
 
@@ -364,7 +362,7 @@ def inharmonicity(
     min_strength = 0.01
     min_f0 = 1.0
     max_f0 = 15.0
-    garr_df = spec.groupBy(*group_cols).agg(
+    garr_df = spec.groupBy(*_GROUP_COLS).agg(
         F.transform(
             F.sort_array(
                 F.collect_list(
@@ -378,11 +376,11 @@ def inharmonicity(
         ).alias("__g")
     )
     f0df = (
-        peaks.groupBy(*group_cols)
+        peaks.groupBy(*_GROUP_COLS)
         .agg(F.round(F.min_by("refined_freq", "bin"), 6).alias("f0"))
         .where((F.col("f0") >= min_f0) & (F.col("f0") <= max_f0))
     )
-    base = f0df.join(garr_df, group_cols)
+    base = f0df.join(garr_df, _GROUP_COLS)
     h = base.withColumn(
         "h", F.explode(F.sequence(F.lit(1), F.lit(max_harmonics)))
     ).withColumn(
@@ -415,13 +413,13 @@ def inharmonicity(
         & (F.col("__bm") > min_strength)
         & (F.abs(dev) < tolerance)
     ).select(
-        *group_cols,
+        *_GROUP_COLS,
         "f0",
         F.col("h").cast("double").alias("hn"),
         F.col("__bm").alias("amp"),
         dev.alias("dev"),
     )
-    ag = acc.groupBy(*group_cols, "f0").agg(
+    ag = acc.groupBy(*_GROUP_COLS, "f0").agg(
         F.count("*").alias("n_harmonics"),
         F.sum(
             F.col("amp") * F.col("dev") * F.col("hn") * F.col("hn")
@@ -437,16 +435,16 @@ def inharmonicity(
         F.avg("amp").alias("__amean"),
     ).where(F.col("n_harmonics") >= min_harmonics)
     ss = acc.join(
-        ag.select(*group_cols, F.col("__dmean").alias("__dm2")),
-        group_cols,
-    ).groupBy(*group_cols).agg(
+        ag.select(*_GROUP_COLS, F.col("__dmean").alias("__dm2")),
+        _GROUP_COLS,
+    ).groupBy(*_GROUP_COLS).agg(
         F.sum(
             (F.col("dev") - F.col("__dm2"))
             * (F.col("dev") - F.col("__dm2"))
         ).alias("__ssd"),
         F.count("*").alias("__n2"),
     )
-    r = ag.join(ss, group_cols)
+    r = ag.join(ss, _GROUP_COLS)
     b_coef = F.when(
         F.col("__den") > 0, F.col("__num") / F.col("__den")
     ).otherwise(F.lit(0.0))
@@ -460,7 +458,7 @@ def inharmonicity(
         * F.col("__amean"),
     )
     return r.select(
-        *group_cols,
+        *_GROUP_COLS,
         "f0",
         F.col("n_harmonics").cast("int").alias("n_harmonics"),
         b_coef.alias("inharmonicity"),
@@ -468,7 +466,7 @@ def inharmonicity(
         conf.alias("confidence"),
     )
 
-def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFrame:
+def harmonic_ratio_spectral(peaks: DataFrame) -> DataFrame:
     """Spectral harmonic-ratio analysis
     (tonal/harmonic_ratio.go:464-513 with the :130-146 parameters):
 
@@ -495,19 +493,19 @@ def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFram
     tolerance = 0.1
     n_candidates = 5
     vp = peaks.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.round(F.col("refined_freq"), 6).alias("__f"),
         F.round(F.col("refined_mag"), 6).alias("__m"),
     ).where((F.col("__f") >= min_freq) & (F.col("__f") <= max_freq))
     crank = F.row_number().over(
-        Window.partitionBy(*group_cols).orderBy(
+        Window.partitionBy(*_GROUP_COLS).orderBy(
             F.col("__m").desc(), F.col("__f").asc()
         )
     )
     cands = vp.withColumn("__cr", crank).where(
         F.col("__cr") <= n_candidates
     ).select(
-        *[F.col(c).alias(f"__c_{c}") for c in group_cols],
+        *[F.col(c).alias(f"__c_{c}") for c in _GROUP_COLS],
         F.col("__f").alias("__cf"),
         F.col("__cr"),
     )
@@ -518,14 +516,14 @@ def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFram
         <= F.floor(F.lit(max_freq) / F.col("__cf")).cast("int")
     ).withColumn("__exp", F.col("__cf") * F.col("__h").cast("double"))
     on = None
-    for c in group_cols:
+    for c in _GROUP_COLS:
         e = F.col(f"__c_{c}") == F.col(c)
         on = e if on is None else (on & e)
     hp = h.join(vp, on)
     dist = F.abs(F.col("__f") - F.col("__exp"))
     closest = topk_per_group(
         hp.withColumn("__d", dist),
-        [*[f"__c_{c}" for c in group_cols], "__cf", "__cr", "__h"],
+        [*[f"__c_{c}" for c in _GROUP_COLS], "__cf", "__cr", "__h"],
         [F.col("__d").asc(), F.col("__f").asc()],
         1,
     ).drop("rank")
@@ -535,26 +533,26 @@ def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFram
         (1.0 - F.col("__d") / tol) * F.col("__m"),
     ).otherwise(F.lit(0.0))
     scored = closest.groupBy(
-        *[f"__c_{c}" for c in group_cols], "__cf", "__cr"
+        *[f"__c_{c}" for c in _GROUP_COLS], "__cf", "__cr"
     ).agg(F.sum(term).alias("__score"))
     best = topk_per_group(
         scored,
-        [f"__c_{c}" for c in group_cols],
+        [f"__c_{c}" for c in _GROUP_COLS],
         [F.col("__score").desc(), F.col("__cr").asc()],
         1,
     ).select(
         *[
-            F.col(f"__c_{c}").alias(c) for c in group_cols
+            F.col(f"__c_{c}").alias(c) for c in _GROUP_COLS
         ],
         F.col("__cf").alias("f0"),
     )
-    j = vp.join(best, group_cols)
+    j = vp.join(best, _GROUP_COLS)
     hn = F.round(F.col("__f") / F.col("f0"), 0)
     expected = F.col("f0") * hn
     is_h = (hn > 0) & (
         F.abs(F.col("__f") - expected) < F.lit(tolerance) * expected
     )
-    en = j.groupBy(*group_cols, "f0").agg(
+    en = j.groupBy(*_GROUP_COLS, "f0").agg(
         F.sum(F.col("__m") * F.col("__m")).alias("total_energy"),
         F.sum(
             F.when(is_h, F.col("__m") * F.col("__m")).otherwise(
@@ -568,7 +566,7 @@ def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFram
         10.0 * F.log10(F.col("harmonic_energy") / noise),
     ).otherwise(F.lit(60.0))
     return en.select(
-        *group_cols,
+        *_GROUP_COLS,
         "f0",
         ratio.alias("harmonic_ratio"),
         "harmonic_energy",
@@ -577,11 +575,7 @@ def harmonic_ratio_spectral(peaks: DataFrame, group_cols: list[str]) -> DataFram
     )
 
 
-def harmonic_ratio_hnr(
-    spec: DataFrame,
-    peaks: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
+def harmonic_ratio_hnr(spec: DataFrame, peaks: DataFrame) -> DataFrame:
     """Mask-based HNR analysis (tonal/harmonic_ratio.go:297-385 with
     the :130-146 parameters):
 
@@ -614,25 +608,25 @@ def harmonic_ratio_hnr(
     tolerance = 0.1
     width = 3
     vp = peaks.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.round(F.col("refined_freq"), 6).alias("__f"),
         F.round(F.col("refined_mag"), 6).alias("__m"),
     )
     rk = F.row_number().over(
-        Window.partitionBy(*group_cols).orderBy(
+        Window.partitionBy(*_GROUP_COLS).orderBy(
             F.col("__m").desc(), F.col("__f").asc()
         )
     )
     ranked = vp.withColumn("__rk", rk)
     above = ranked.where(F.col("__f") >= min_freq)
     first_above = topk_per_group(
-        above, group_cols, [F.col("__rk").asc()], 1
-    ).select(*group_cols, F.col("__f").alias("__fa"), F.col("__m").alias("__ma"))
+        above, _GROUP_COLS, [F.col("__rk").asc()], 1
+    ).select(*_GROUP_COLS, F.col("__f").alias("__fa"), F.col("__m").alias("__ma"))
     first_any = ranked.where(F.col("__rk") == 1).select(
-        *group_cols, F.col("__f").alias("__f1"), F.col("__m").alias("__m1")
+        *_GROUP_COLS, F.col("__f").alias("__f1"), F.col("__m").alias("__m1")
     )
-    f0df = first_any.join(first_above, group_cols, "left").select(
-        *group_cols,
+    f0df = first_any.join(first_above, _GROUP_COLS, "left").select(
+        *_GROUP_COLS,
         F.coalesce("__fa", "__f1").alias("f0"),
         F.coalesce("__ma", "__m1").alias("f0_confidence"),
     ).where(F.col("f0") > 0)
@@ -650,35 +644,35 @@ def harmonic_ratio_hnr(
     ).withColumn("__exp", F.col("f0") * F.col("__h").cast("double")
     ).withColumn("__tb", F.col("__exp").cast("int"))
     g = spec.select(
-        *[F.col(c).alias(f"__g_{c}") for c in group_cols],
+        *[F.col(c).alias(f"__g_{c}") for c in _GROUP_COLS],
         F.col("bin").alias("__b"),
         F.col("m").alias("__gm"),
     )
     on = (F.col("__b") >= F.greatest(F.col("__tb") - width, F.lit(0))) & (
         F.col("__b") <= F.least(F.col("__tb") + width, F.lit(num_bins - 1))
     )
-    for c in group_cols:
+    for c in _GROUP_COLS:
         on = on & (F.col(f"__g_{c}") == F.col(c))
     win = h.join(g, on)
     nb = topk_per_group(
         win,
-        [*group_cols, "__h"],
+        [*_GROUP_COLS, "__h"],
         [F.col("__gm").desc(), F.col("__b").asc()],
         1,
     ).drop("rank")
     gl = spec.select(
-        *[F.col(c).alias(f"__l_{c}") for c in group_cols],
+        *[F.col(c).alias(f"__l_{c}") for c in _GROUP_COLS],
         F.col("bin").alias("__lb"),
         F.col("m").alias("__lm"),
     )
     gr = spec.select(
-        *[F.col(c).alias(f"__r_{c}") for c in group_cols],
+        *[F.col(c).alias(f"__r_{c}") for c in _GROUP_COLS],
         F.col("bin").alias("__rb"),
         F.col("m").alias("__rm"),
     )
     onl = F.col("__lb") == F.col("__b") - 1
     onr = F.col("__rb") == F.col("__b") + 1
-    for c in group_cols:
+    for c in _GROUP_COLS:
         onl = onl & (F.col(f"__l_{c}") == F.col(c))
         onr = onr & (F.col(f"__r_{c}") == F.col(c))
     hp = (
@@ -695,7 +689,7 @@ def harmonic_ratio_hnr(
             )
         )
         .select(
-            *group_cols, "f0", "f0_confidence", "__h",
+            *_GROUP_COLS, "f0", "f0_confidence", "__h",
             F.col("__b").alias("__hb"),
             F.col("__gm").alias("__hm"),
             F.col("__exp"),
@@ -706,7 +700,7 @@ def harmonic_ratio_hnr(
     # expressions and the +-width mask becomes an exists() predicate,
     # so the refined-peak chain is not re-evaluated per consumer (the
     # join-per-metric draft produced an 84-exchange plan)
-    hparr = hp.groupBy(*group_cols, "f0", "f0_confidence").agg(
+    hparr = hp.groupBy(*_GROUP_COLS, "f0", "f0_confidence").agg(
         F.sort_array(
             F.collect_list(F.struct("__h", "__hb", "__hm"))
         ).alias("__harr")
@@ -752,7 +746,7 @@ def harmonic_ratio_hnr(
         ),
     )
     hstats = hparr.select(
-        *group_cols,
+        *_GROUP_COLS,
         "f0",
         "f0_confidence",
         nh.alias("num_harmonics"),
@@ -763,13 +757,13 @@ def harmonic_ratio_hnr(
     # band energies: grid x f0 with the mask as an exists() over the
     # (possibly absent) harmonic array
     gm = spec.select(
-        *group_cols, F.col("bin").alias("__b"), F.col("m").alias("__gm")
-    ).join(f0df.select(*group_cols, "f0"), group_cols)
+        *_GROUP_COLS, F.col("bin").alias("__b"), F.col("m").alias("__gm")
+    ).join(f0df.select(*_GROUP_COLS, "f0"), _GROUP_COLS)
     ha = hstats.select(
-        *[F.col(c).alias(f"__a_{c}") for c in group_cols], "__harr"
+        *[F.col(c).alias(f"__a_{c}") for c in _GROUP_COLS], "__harr"
     )
     ona = None
-    for c in group_cols:
+    for c in _GROUP_COLS:
         e = F.col(f"__a_{c}") == F.col(c)
         ona = e if ona is None else (ona & e)
     band = gm.where(
@@ -785,7 +779,7 @@ def harmonic_ratio_hnr(
         F.abs(F.col("__b").cast("double") - F.col("f0") * hn)
         < F.lit(tolerance) * (F.col("f0") * hn)
     )
-    en = band.groupBy(*group_cols).agg(
+    en = band.groupBy(*_GROUP_COLS).agg(
         F.sum(F.col("__gm") * F.col("__gm")).alias("total_energy"),
         F.sum(
             F.when(masked, F.col("__gm") * F.col("__gm")).otherwise(
@@ -798,10 +792,10 @@ def harmonic_ratio_hnr(
         ),
     )
     r = (
-        f0df.join(en, group_cols, "left")
+        f0df.join(en, _GROUP_COLS, "left")
         .join(
             hstats.drop("f0", "f0_confidence", "__harr"),
-            group_cols,
+            _GROUP_COLS,
             "left",
         )
     )
@@ -826,7 +820,7 @@ def harmonic_ratio_hnr(
     ).otherwise(F.lit(0.0))
     voicing = 1.0 / (1.0 + F.exp(-0.1 * (ratio - 10.0)))
     return r.select(
-        *group_cols,
+        *_GROUP_COLS,
         "f0",
         "f0_confidence",
         ratio.alias("harmonic_ratio"),

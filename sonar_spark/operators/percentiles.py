@@ -28,13 +28,10 @@ __all__ = [
 ]
 
 
-def quantile_histogram(
-    df: DataFrame,
-    value: str,
-    group: str,
-    qs: dict[str, float],
-    counts: str | None = None,
-) -> DataFrame:
+_HIST_QS = {"q1": 0.25, "q3": 0.75, "q95": 0.95}
+
+
+def quantile_histogram(df: DataFrame) -> DataFrame:
     """Exact interpolated quantiles via a value histogram — the
     100-TB-scale replacement for ``F.percentile`` on low-cardinality
     groups (SURVEY §2.5 percentiles/quartiles/IQR).
@@ -42,41 +39,32 @@ def quantile_histogram(
     ``F.percentile`` buffers every (value, count) pair of a group in
     one aggregation buffer on one reducer; with a handful of giant
     groups that is a single-executor memory wall.  Here the heavy
-    reduction is ``groupBy(group, value).count()`` — fully parallel
-    with map-side combine — and only the distinct-value histogram
-    (bounded by value cardinality, not row count) flows into the
-    per-group cumulative-rank window.
+    reduction is the caller's ``groupBy(l_returnflag, __v).count()``
+    — fully parallel with map-side combine — and only the
+    distinct-value histogram (bounded by value cardinality, not row
+    count) flows into the per-group cumulative-rank window: ``df`` is
+    one row per (l_returnflag, __v) with its count ``__c``.
 
-    Returns one row per group: ``group, __n`` (total row count) and
-    one column per key of ``qs``, plus the histogram columns are
-    dropped.  Interpolation reproduces Spark's ``Percentile``
-    arithmetic exactly ((hi-pos)*lo + (pos-lo)*hi at 0-based
-    pos=(n-1)q, lower value when pos is integral) so results are
-    bit-identical to the ``F.percentile`` aggregate it replaces.
-
-    Pass ``counts`` to reuse a pre-aggregated histogram: ``df`` is
-    then taken as one row per (group, value) with that count column,
-    skipping the internal groupBy.
-
+    Returns one row per group: ``l_returnflag, __n`` (total row count)
+    and one column per key of ``_HIST_QS``.  Interpolation reproduces
+    Spark's ``Percentile`` arithmetic exactly ((hi-pos)*lo +
+    (pos-lo)*hi at 0-based pos=(n-1)q, lower value when pos is
+    integral) so results are bit-identical to the ``F.percentile``
+    aggregate it replaces.
     """
-    if counts is None:
-        h = df.groupBy(
-            group, F.col(value).cast("double").alias("__v")
-        ).agg(F.count("*").alias("__c"))
-    else:
-        h = df.select(
-            group,
-            F.col(value).cast("double").alias("__v"),
-            F.col(counts).cast("long").alias("__c"),
-        )
+    h = df.select(
+        "l_returnflag",
+        F.col("__v").cast("double").alias("__v"),
+        F.col("__c").cast("long").alias("__c"),
+    )
     # NOTE (r6): a bucketed two-pass cumsum (the relational
     # zipWithIndex machinery, per group) was prototyped here to
     # parallelize the per-group window beyond |groups| partitions; it
     # measured FLAT at sf1.0 (~5.5 s either way — the window sort is
     # not this query's bottleneck) and ~3x WORSE at sf0.1 (five extra
     # tiny stages dominate), so the single window stands.
-    wo = Window.partitionBy(group).orderBy("__v")
-    wp = Window.partitionBy(group)
+    wo = Window.partitionBy("l_returnflag").orderBy("__v")
+    wp = Window.partitionBy("l_returnflag")
     cum = h.withColumn("__cum", F.sum("__c").over(wo)).withColumn(
         "__n", F.sum("__c").over(wp)
     )
@@ -97,9 +85,9 @@ def quantile_histogram(
         return F.when(F.max(lo) == F.max(hi), lo_v).otherwise(interp)
 
     aggs = [F.max("__n").alias("__n")]
-    for name, q in qs.items():
+    for name, q in _HIST_QS.items():
         aggs.append(_stat(q).alias(name))
-    return cum.groupBy(group).agg(*aggs)
+    return cum.groupBy("l_returnflag").agg(*aggs)
 
 
 def _h_expr(method: str, n: Column, q: float) -> Column:
@@ -154,7 +142,7 @@ def _method_value(method: str, rn, v, n, q: float) -> Column:
 _QS = (0.5, 0.9)
 
 
-def percentile_methods(df: DataFrame, value: str, group: str) -> DataFrame:
+def percentile_methods(df: DataFrame) -> DataFrame:
     """(group, method, q, value) for every PERCENTILE_METHODS method x
     _QS quantile.
 
@@ -173,10 +161,10 @@ def percentile_methods(df: DataFrame, value: str, group: str) -> DataFrame:
     (tests/test_stats_ops.py::test_percentile_methods_spark_matches_
     kernel) including the heavy-ties case where the range lookup
     differs structurally from rn ==."""
-    wo = Window.partitionBy(group).orderBy("__v")
-    wp = Window.partitionBy(group)
+    wo = Window.partitionBy("l_returnflag").orderBy("__v")
+    wp = Window.partitionBy("l_returnflag")
     h = df.groupBy(
-        group, F.col(value).cast("double").alias("__v")
+        "l_returnflag", F.col("l_quantity").cast("double").alias("__v")
     ).agg(F.count("*").cast("long").alias("__c"))
     d = h.withColumn("__cum", F.sum("__c").over(wo)).withColumn(
         "__n", F.sum("__c").over(wp).cast("double")
@@ -210,7 +198,7 @@ def percentile_methods(df: DataFrame, value: str, group: str) -> DataFrame:
             aggs.append(
                 _method_value(m, rn, v, n, q).alias(f"__{m}__{q}")
             )
-    wide = d.groupBy(group).agg(*aggs)
+    wide = d.groupBy("l_returnflag").agg(*aggs)
     stack_args = []
     for m in PERCENTILE_METHODS:
         for q in _QS:
@@ -220,4 +208,4 @@ def percentile_methods(df: DataFrame, value: str, group: str) -> DataFrame:
         + ", ".join(stack_args)
         + ") as (method, q, value)"
     )
-    return wide.select(group, F.expr(expr))
+    return wide.select("l_returnflag", F.expr(expr))

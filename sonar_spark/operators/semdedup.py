@@ -62,7 +62,10 @@ def semdedup_centroids_sql_values() -> str:
     return ",\n             ".join(rows)
 
 
-def semdedup(corpus: DataFrame, *, tau: float = 0.95) -> DataFrame:
+_TAU = 0.95
+
+
+def semdedup(corpus: DataFrame) -> DataFrame:
     """SemDeDup keep/drop over ``corpus`` (id, array<double> vector).
 
     Output per input row: cluster (0..K-1), centroid_sim (6dp),
@@ -140,7 +143,7 @@ def semdedup(corpus: DataFrame, *, tau: float = 0.95) -> DataFrame:
     # ONE exchange on the cluster key; per-cluster state (Arrow
     # slices) carries across Arrow batches (clusters can exceed a
     # 10k-row batch — the as-of per-batch kernel lesson).
-    tau_f = float(tau)
+    tau_f = float(_TAU)
 
     def _cluster_kernel(batches):
         import pyarrow as pa

@@ -18,23 +18,21 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize_by_gap(
-    df: DataFrame,
-    key: str = "user_id",
-    ts: str = "ts_sec",
-    gap: int = 1800,
-) -> DataFrame:
+_GAP = 1800
+
+
+def sessionize_by_gap(df: DataFrame) -> DataFrame:
     """Assign 0-based per-key session ids: a new session starts when
-    the gap to the previous event exceeds ``gap`` (strictly greater).
+    the gap to the previous event exceeds _GAP seconds (strictly greater).
 
     session_id = cumulative sum of new-session flags over
     (partition by key order by ts) — the run-length-encoding pattern
     of silence_detection.go:44-75 applied to event time.
     Ordering tie-break: rows with equal ts never open a new session.
     """
-    w = Window.partitionBy(key).orderBy(F.col(ts).asc())
+    w = Window.partitionBy("user_id").orderBy(F.col("ts_sec").asc())
     new_sess = F.when(
-        (F.col(ts) - F.lag(ts).over(w)) > gap, F.lit(1)
+        (F.col("ts_sec") - F.lag("ts_sec").over(w)) > _GAP, F.lit(1)
     ).otherwise(F.lit(0))
     return df.withColumn(
         "session_id",
@@ -42,13 +40,7 @@ def sessionize_by_gap(
     )
 
 
-def segment_runs(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    flag: str = "is_silent",
-    min_run: int = 1,
-) -> DataFrame:
+def segment_runs(df: DataFrame, flag: str = "is_silent", min_run: int = 1) -> DataFrame:
     """Group consecutive equal-flag rows into segments and return one
     row per segment with run length >= min_run (DetectSilence run
     grouping, silence_detection.go:44-75).
@@ -56,7 +48,7 @@ def segment_runs(
     Output: key, flag, seg_id, seg_start, seg_end (inclusive order
     values), run_len.
     """
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
     changed = F.when(
         F.lag(flag).over(w).isNull() | (F.col(flag) != F.lag(flag).over(w)),
         F.lit(1),
@@ -65,10 +57,10 @@ def segment_runs(
         "seg_id", F.sum(changed).over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
     out = (
-        seg.groupBy(key, "seg_id", flag)
+        seg.groupBy("doc_id", "seg_id", flag)
         .agg(
-            F.min(order).alias("seg_start"),
-            F.max(order).alias("seg_end"),
+            F.min("frame_idx").alias("seg_start"),
+            F.max("frame_idx").alias("seg_end"),
             F.count("*").alias("run_len"),
         )
         .where(F.col("run_len") >= min_run)
@@ -76,14 +68,13 @@ def segment_runs(
     return out
 
 
+_MIN_RUN = 2
+
+
 def detect_silence(
     features: DataFrame,
     *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    energy: str = "rms_energy",
     threshold: Column | float | None = None,
-    min_run: int = 2,
 ) -> DataFrame:
     """Silence segments: frames with energy below threshold grouped
     into runs >= min_run (DetectSilence, silence_detection.go:20-75).
@@ -93,35 +84,37 @@ def detect_silence(
     computed with one extra aggregate + broadcast-joined back.
     """
     if threshold is None:
-        stats = features.groupBy(key).agg(
-            F.avg(energy).alias("__mu"), F.stddev_pop(energy).alias("__sd")
+        stats = features.groupBy("doc_id").agg(
+            F.avg("rms_energy").alias("__mu"),
+            F.stddev_pop("rms_energy").alias("__sd"),
         )
         thr = F.when(
             (F.col("__mu") - 2 * F.col("__sd")) > 0,
             F.col("__mu") - 2 * F.col("__sd"),
         ).otherwise(0.1 * F.col("__mu"))
         flagged = (
-            features.join(F.broadcast(stats), key)
-            .withColumn("is_silent", (F.col(energy) < thr).cast("int"))
+            features.join(F.broadcast(stats), "doc_id")
+            .withColumn("is_silent", (F.col("rms_energy") < thr).cast("int"))
             .drop("__mu", "__sd")
         )
     else:
         thr = threshold if isinstance(threshold, Column) else F.lit(float(threshold))
         flagged = features.withColumn(
-            "is_silent", (F.col(energy) < thr).cast("int")
+            "is_silent", (F.col("rms_energy") < thr).cast("int")
         )
-    segs = segment_runs(flagged, key=key, order=order, flag="is_silent",
-                        min_run=min_run)
+    segs = segment_runs(flagged, min_run=_MIN_RUN)
     return segs.where(F.col("is_silent") == 1).drop("is_silent")
+
+
+_ZCR_LOW = 0.0
+_ZCR_HIGH = 0.9
+_VAD_MIN_RUN = 3
 
 
 def detect_voice_activity(
     features: DataFrame,
     *,
     energy_thr: Column | float = 0.0,
-    zcr_low: float = 0.0,
-    zcr_high: float = 1.0,
-    min_run: int = 3,
 ) -> DataFrame:
     """Voice-activity segments: energy >= threshold AND
     zcr_low <= zcr <= zcr_high, grouped into runs >= min_run
@@ -134,24 +127,22 @@ def detect_voice_activity(
         "is_active",
         (
             (F.col("rms_energy") >= thr)
-            & (F.col("zcr") >= zcr_low)
-            & (F.col("zcr") <= zcr_high)
+            & (F.col("zcr") >= _ZCR_LOW)
+            & (F.col("zcr") <= _ZCR_HIGH)
         ).cast("int"),
     )
-    segs = segment_runs(flagged, flag="is_active", min_run=min_run)
+    segs = segment_runs(flagged, flag="is_active", min_run=_VAD_MIN_RUN)
     return segs.where(F.col("is_active") == 1).drop("is_active")
 
 
-def combine_onsets(
-    onsets_a: DataFrame,
-    onsets_b: DataFrame,
-    *,
-    tolerance: int = 2,
-) -> DataFrame:
+_TOLERANCE = 2
+
+
+def combine_onsets(onsets_a: DataFrame, onsets_b: DataFrame) -> DataFrame:
     """DetectOnsetsComplex's union-of-methods combine + tolerance
     dedupe (onset_detection.go:122-183): sorted union of both onset
     sets, then the greedy chain — keep an onset iff its distance to
-    the LAST KEPT onset exceeds `tolerance` (equivalent to the
+    the LAST KEPT onset exceeds _TOLERANCE (equivalent to the
     reference's any-kept check on a sorted list, since the last kept
     is always the nearest).
 
@@ -171,21 +162,21 @@ def combine_onsets(
         F.slice(F.col("__o"), 2, F.greatest(F.size("__o") - 1, F.lit(0))),
         F.array(F.element_at(F.col("__o"), 1)),
         lambda acc, x: F.when(
-            x - F.element_at(acc, -1) > tolerance,
+            x - F.element_at(acc, -1) > _TOLERANCE,
             F.concat(acc, F.array(x)),
         ).otherwise(acc),
     )
     return arr.select("doc_id", F.explode(kept).alias("frame_idx"))
 
 
+_MIN_INTERVAL = 1
+
+
 def detect_onsets(
     features: DataFrame,
     *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
     signal: str = "flux",
     threshold_scale: float = 1.5,
-    min_interval: int = 2,
 ) -> DataFrame:
     """Onset detection via local-maxima peak picking on a per-frame
     signal (flux), with min-interval debounce (DetectOnsets,
@@ -193,11 +184,11 @@ def detect_onsets(
 
     A frame is an onset candidate if signal > lag AND signal >= lead
     AND signal > threshold_scale * per-doc mean. Candidates closer
-    than min_interval frames to the previous kept onset are debounced
+    than _MIN_INTERVAL frames to the previous kept onset are debounced
     via sessionize-by-gap (keep the first of each run).
     """
-    w = Window.partitionBy(key).orderBy(F.col(order).asc())
-    mu = Window.partitionBy(key)
+    w = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
+    mu = Window.partitionBy("doc_id")
     cand = (
         features.withColumn("__prev", F.lag(signal).over(w))
         .withColumn("__next", F.lead(signal).over(w))
@@ -211,23 +202,22 @@ def detect_onsets(
     # debounce: candidates within min_interval of the previous candidate
     # are grouped; keep the strongest per group (combineOnsets tolerance
     # dedupe, onset_detection.go:149-183)
-    wc = Window.partitionBy(key).orderBy(F.col(order).asc())
-    grp = F.sum(
-        F.when(
-            (F.col(order) - F.lag(order).over(wc)) < min_interval, F.lit(0)
-        ).otherwise(F.lit(1))
-    ).over(wc.rowsBetween(Window.unboundedPreceding, 0))
+    wc = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
+    gap = F.col("frame_idx") - F.lag("frame_idx").over(wc)
+    grp = F.sum(F.when(gap < _MIN_INTERVAL, F.lit(0)).otherwise(F.lit(1))).over(
+        wc.rowsBetween(Window.unboundedPreceding, 0)
+    )
     onsets = (
         cand.withColumn("__grp", grp)
-        .groupBy(key, "__grp")
+        .groupBy("doc_id", "__grp")
         .agg(
-            F.max(F.struct(F.col(signal).alias("v"), F.col(order).alias("o"))).alias(
-                "__s"
-            )
+            F.max(
+                F.struct(F.col(signal).alias("v"), F.col("frame_idx").alias("o"))
+            ).alias("__s")
         )
         .select(
-            key,
-            F.col("__s.o").alias(order),
+            "doc_id",
+            F.col("__s.o").alias("frame_idx"),
             F.col("__s.v").alias(signal),
         )
     )

@@ -24,36 +24,35 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def range_buckets(df: DataFrame, col: str) -> DataFrame:
+def range_buckets(df: DataFrame) -> DataFrame:
     """Add __b = deterministic, order-respecting bucket id in [0, 32)
-    (monotone in `col`) from one tiny min/max aggregate — the first pass of
+    (monotone in doc_id) from one tiny min/max aggregate — the first pass of
     global_cumsum.
 
     NUMERIC-ONLY CONTRACT (ADVICE r5): the bucket formula does
-    arithmetic on `col`, so `col` must be a numeric (or date/
+    arithmetic on doc_id, so it must be a numeric (or date/
     timestamp-as-number) column; a string column would yield null
     buckets (rows silently dropped by the downstream inner join) or
     a numeric-bucket/lexicographic-window hybrid order.  Asserted
     here rather than documented-only."""
     import pyspark.sql.types as T
 
-    dt = df.schema[col].dataType
+    dt = df.schema["doc_id"].dataType
     if not isinstance(
         dt, (T.NumericType, T.DateType, T.TimestampType)
     ):
         raise TypeError(
-            f"range_buckets requires a numeric column; {col} is "
-            f"{dt.simpleString()}"
+            f"range_buckets requires a numeric doc_id; it is {dt.simpleString()}"
         )
     mm = df.groupBy().agg(
-        F.min(col).alias("__lo"), F.max(col).alias("__hi")
+        F.min("doc_id").alias("__lo"), F.max("doc_id").alias("__hi")
     )
     return df.crossJoin(F.broadcast(mm)).withColumn(
         "__b",
         F.when(
             F.col("__hi") > F.col("__lo"),
             F.floor(
-                (F.col(col) - F.col("__lo")).cast("double")
+                (F.col("doc_id") - F.col("__lo")).cast("double")
                 * 32
                 / (F.col("__hi") - F.col("__lo") + 1)
             ).cast("int"),
@@ -61,8 +60,8 @@ def range_buckets(df: DataFrame, col: str) -> DataFrame:
     ).drop("__lo", "__hi")
 
 
-def bucket_offsets(per_bucket: DataFrame, val: str) -> DataFrame:
-    """(__b, __off = sum of `val` over all LOWER buckets) via a
+def bucket_offsets(per_bucket: DataFrame) -> DataFrame:
+    """(__b, __off = sum of __s over all LOWER buckets) via a
     triangle self-join over the <= 32-row table (no
     WindowExec: a global-ordered window would plan single-partition,
     and Catalyst folds any constant partition key away) — quadratic
@@ -71,7 +70,7 @@ def bucket_offsets(per_bucket: DataFrame, val: str) -> DataFrame:
         per_bucket.alias("a")
         .join(
             per_bucket.select(
-                F.col("__b").alias("__b2"), F.col(val).alias("__v2")
+                F.col("__b").alias("__b2"), F.col("__s").alias("__v2")
             ),
             F.col("__b2") < F.col("__b"),
             "left",
@@ -83,22 +82,17 @@ def bucket_offsets(per_bucket: DataFrame, val: str) -> DataFrame:
     )
 
 
-def global_cumsum(
-    df: DataFrame,
-    *,
-    col: str = "doc_id",
-    val: str = "n_tok",
-) -> DataFrame:
-    """Add cum_before = exclusive prefix sum of `val` in `col` order
-    (== sum(val) OVER (ORDER BY col ROWS BETWEEN UNBOUNDED PRECEDING
+def global_cumsum(df: DataFrame, *, val: str = "n_tok") -> DataFrame:
+    """Add cum_before = exclusive prefix sum of `val` in doc_id order
+    (== sum(val) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
     AND 1 PRECEDING), 0 for the first row) without a global
-    single-partition sort.  `col` values must be unique."""
-    b = range_buckets(df, col)
+    single-partition sort.  doc_id values must be unique."""
+    b = range_buckets(df)
     sums = b.groupBy("__b").agg(F.sum(val).cast("long").alias("__s"))
-    offsets = bucket_offsets(sums, "__s")
+    offsets = bucket_offsets(sums)
     win = (
         Window.partitionBy("__b")
-        .orderBy(col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
@@ -114,7 +108,10 @@ def global_cumsum(
     )
 
 
-def shard_balance(docs: DataFrame, *, n_shards: int = 8) -> DataFrame:
+_N_SHARDS = 8
+
+
+def shard_balance(docs: DataFrame) -> DataFrame:
     """Assign each doc a shard in [0, n_shards) with ~equal token
     budgets.  Output per doc: id, n_tok, cum_before, shard, plus the
     shard's realized totals (shard_tokens, shard_docs) riding every
@@ -128,7 +125,7 @@ def shard_balance(docs: DataFrame, *, n_shards: int = 8) -> DataFrame:
     # greatest(...,1): an all-empty corpus (total 0) degenerates to
     # shard 0 instead of dividing by zero
     target = F.greatest(
-        F.ceil(F.col("__tot") / n_shards).cast("long"), F.lit(1)
+        F.ceil(F.col("__tot") / _N_SHARDS).cast("long"), F.lit(1)
     )
     assigned = cs.crossJoin(F.broadcast(tot)).select(
         "doc_id",
@@ -136,7 +133,7 @@ def shard_balance(docs: DataFrame, *, n_shards: int = 8) -> DataFrame:
         "cum_before",
         F.least(
             F.floor(F.col("cum_before") / target).cast("int"),
-            F.lit(n_shards - 1),
+            F.lit(_N_SHARDS - 1),
         ).alias("shard"),
     )
     ws = Window.partitionBy("shard")

@@ -53,13 +53,11 @@ def tempo_estimate(onsets: DataFrame) -> DataFrame:
     )
 
 
-def attack_decay(
-    features: DataFrame,
-    peaks: DataFrame,
-    *,
-    lookback: int = 10,
-    level: float = 0.5,
-) -> DataFrame:
+_LOOKBACK = 10
+_LEVEL = 0.5
+
+
+def attack_decay(features: DataFrame, peaks: DataFrame) -> DataFrame:
     """Attack/decay times around detected peaks (attack_decay.go:
     21-189; the 10-frame lookback cap mirrors extractors/speech.go:
     734-739): attack = frames from the last sub-level frame before the
@@ -72,13 +70,13 @@ def attack_decay(
     w = Window.partitionBy("doc_id").orderBy(F.col("frame_idx").asc())
     ov = F.struct(F.col("frame_idx").alias("o"), F.col("rms_energy").alias("v"))
     ctx = features.select("doc_id", "frame_idx", "rms_energy").withColumn(
-        "__back", F.collect_list(ov).over(w.rowsBetween(-lookback, -1))
-    ).withColumn("__fwd", F.collect_list(ov).over(w.rowsBetween(1, lookback)))
+        "__back", F.collect_list(ov).over(w.rowsBetween(-_LOOKBACK, -1))
+    ).withColumn("__fwd", F.collect_list(ov).over(w.rowsBetween(1, _LOOKBACK)))
     p = peaks.select(
         F.col("doc_id"), F.col("frame_idx"), F.col("rms_energy").alias("__peak_v")
     )
     j = p.join(ctx, ["doc_id", "frame_idx"])
-    thr = F.col("__peak_v") * level
+    thr = F.col("__peak_v") * _LEVEL
     below_back = F.filter(F.col("__back"), lambda s: s["v"] <= thr)
     below_fwd = F.filter(F.col("__fwd"), lambda s: s["v"] <= thr)
     attack = F.when(
@@ -379,23 +377,17 @@ def voice_quality(feats: DataFrame, onsets: DataFrame) -> DataFrame:
     )
 
 
-def envelope_hilbert(
-    df: DataFrame,
-    *,
-    key: str = "doc_id",
-    order: str = "frame_idx",
-    signal: str = "rms_energy",
-) -> DataFrame:
+def envelope_hilbert(df: DataFrame) -> DataFrame:
     """Hilbert-approximation envelope (envelope.go:76-103): imaginary
     part approximated by the central difference ((x[i+1]-x[i-1])/2,
     forward/backward at the edges), envelope = sqrt(x^2 + imag^2).
     Pure lag/lead window expressions — one shuffle on the key.
     Single-row groups get imag = 0 (the reference indexes signal[1]
     unconditionally at i=0 and would panic there)."""
-    w = Window.partitionBy(key).orderBy(order)
-    v = F.col(signal).cast("double")
-    prv = F.lag(signal).over(w).cast("double")
-    nxt = F.lead(signal).over(w).cast("double")
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    v = F.col("v").cast("double")
+    prv = F.lag("v").over(w).cast("double")
+    nxt = F.lead("v").over(w).cast("double")
     imag = (
         F.when(prv.isNull(), F.coalesce(nxt - v, F.lit(0.0)))
         .when(nxt.isNull(), v - prv)

@@ -72,7 +72,10 @@ def chord_template_rows() -> list[tuple[str, int, int, float, float]]:
     return rows
 
 
-def detect_chords(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
+_GROUP_COLS = ["doc_id", "frame_idx"]
+
+
+def detect_chords(chroma: DataFrame) -> DataFrame:
     """Chord detection by template matching
     (chord_detection.go:586-733): score(quality, root) = weight *
     dot(chroma, rotated binary pattern), best per group (ties ->
@@ -88,7 +91,7 @@ def detect_chords(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
         "quality string, root int, pc int, tv double, weight double",
     )
     j = chroma.join(F.broadcast(tpl), F.col("pitch_class") == F.col("pc"))
-    s = j.groupBy(*group_cols, "quality", "root").agg(
+    s = j.groupBy(*_GROUP_COLS, "quality", "root").agg(
         (
             F.sum(F.col("hpcp").cast("double") * F.col("tv"))
             * F.max("weight")
@@ -96,29 +99,29 @@ def detect_chords(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     )
     best = topk_per_group(
         s,
-        group_cols,
+        _GROUP_COLS,
         [F.col("score").desc(), F.col("quality").asc(), F.col("root").asc()],
         1,
     )
     return best.drop("rank").select(
-        *group_cols,
+        *_GROUP_COLS,
         F.col("root").alias("chord_root"),
         F.col("quality").alias("chord_quality"),
         "score",
     )
 
 
-def estimate_key(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
+def estimate_key(chroma: DataFrame) -> DataFrame:
     """chroma: one row per (group..., pitch_class 0..11, value).
     Output: group cols + key (0..11), mode, confidence (the Pearson r
     of the winning template; 0 on zero-variance input, the
     PearsonCorrelationFunc convention). Ties break deterministically
     (confidence desc, mode asc, key asc) — the reference's unstable
     sort leaves ties unspecified."""
-    scored = key_scores(chroma, group_cols)
+    scored = key_scores(chroma, _GROUP_COLS)
     best = topk_per_group(
         scored,
-        group_cols,
+        _GROUP_COLS,
         [F.col("confidence").desc(), F.col("mode").asc(),
          F.col("key").asc()],
         1,
@@ -157,7 +160,7 @@ def key_scores(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     return s.select(*group_cols, "key", "mode", r.alias("confidence"))
 
 
-def key_estimation_full(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
+def key_estimation_full(chroma: DataFrame) -> DataFrame:
     """Key estimation with the clarity/ambiguity quality metrics
     (key_estimation.go:300-371 + calculateClarity :517-533 +
     calculateAmbiguity :535-558): clarity = (best - second)/best over
@@ -166,16 +169,16 @@ def key_estimation_full(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
     aggregation over the score table; ties as in estimate_key."""
     import math as _m
 
-    scored = key_scores(chroma, group_cols)
+    scored = key_scores(chroma, _GROUP_COLS)
     rk = F.row_number().over(
-        Window.partitionBy(*group_cols).orderBy(
+        Window.partitionBy(*_GROUP_COLS).orderBy(
             F.col("confidence").desc(), F.col("mode").asc(),
             F.col("key").asc(),
         )
     )
     t = scored.withColumn("__rk", rk)
     pos = F.when(F.col("confidence") > 0, F.col("confidence"))
-    ag = t.groupBy(*group_cols).agg(
+    ag = t.groupBy(*_GROUP_COLS).agg(
         F.max(
             F.when(
                 F.col("__rk") == 1,
@@ -208,7 +211,7 @@ def key_estimation_full(chroma: DataFrame, group_cols: list[str]) -> DataFrame:
         / F.lit(_m.log2(24.0)),
     ).otherwise(F.lit(0.0))
     return ag.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.col("__b.key").alias("key"),
         F.col("__b.mode").alias("mode"),
         c1.alias("confidence"),
@@ -236,7 +239,7 @@ def chord_inversion_rows() -> list[tuple[str, int, int, int, float]]:
     return rows
 
 
-def bass_from_f0(f0: DataFrame, group_cols: list[str]) -> DataFrame:
+def bass_from_f0(f0: DataFrame) -> DataFrame:
     """Bass-note analog of detectBassNote (chord_detection.go:565-584):
     the reference low-pass pitch-detects and maps the pitch to a
     chroma class via frequencyToChroma (:928-943, MIDI truncation).
@@ -248,7 +251,7 @@ def bass_from_f0(f0: DataFrame, group_cols: list[str]) -> DataFrame:
     out-of-range rejections that both return (0, 0.0)."""
     f = F.col("f0_bin").cast("double")
     return f0.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.when(
             f > 0,
             F.pmod(F.floor(F.lit(69.0) + 12.0 * F.log2(f)), F.lit(12)),
@@ -260,11 +263,7 @@ def bass_from_f0(f0: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def detect_chords_full(
-    chroma: DataFrame,
-    bass: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
+def detect_chords_full(chroma: DataFrame, bass: DataFrame) -> DataFrame:
     """The reference's DEFAULT chord-detection path
     (chord_detection.go:586-642 templateMatching with
     UseBassDetection + UseInversions on, defaults :223-237):
@@ -308,20 +307,20 @@ def detect_chords_full(
         " weight double",
     )
     b = bass.select(
-        *[F.col(c).alias(f"__b_{c}") for c in group_cols],
+        *[F.col(c).alias(f"__b_{c}") for c in _GROUP_COLS],
         "bass_pc",
         F.coalesce("bass_conf", F.lit(0.0)).alias("bass_conf"),
     )
     bcond = None
-    for c in group_cols:
+    for c in _GROUP_COLS:
         e = F.col(f"__b_{c}") == F.col(c)
         bcond = e if bcond is None else (bcond & e)
-    cb = chroma.join(b, bcond).drop(*[f"__b_{c}" for c in group_cols])
+    cb = chroma.join(b, bcond).drop(*[f"__b_{c}" for c in _GROUP_COLS])
     j = cb.join(F.broadcast(tpl), F.col("pitch_class") == F.col("pc"))
     # ONE aggregation: weighted dot, chroma value at the bass class,
     # and whether the bass class is a chord tone of (quality, root)
     s = j.groupBy(
-        *group_cols, "quality", "root", "bass_pc", "bass_conf"
+        *_GROUP_COLS, "quality", "root", "bass_pc", "bass_conf"
     ).agg(
         (
             F.sum(F.col("hpcp").cast("double") * F.col("tv"))
@@ -370,7 +369,7 @@ def detect_chords_full(
     fin = (
         cand.join(F.broadcast(inv.drop("weight")), ["quality", "root"])
         .groupBy(
-            *group_cols, "quality", "root", "bass_pc", "score2"
+            *_GROUP_COLS, "quality", "root", "bass_pc", "score2"
         )
         .agg(
             F.max(
@@ -394,7 +393,7 @@ def detect_chords_full(
         F.col("score2")
     )
     fin = fin.select(
-        *group_cols,
+        *_GROUP_COLS,
         "quality",
         "root",
         "bass_pc",
@@ -406,7 +405,7 @@ def detect_chords_full(
     )
     top2 = topk_per_group(
         fin,
-        group_cols,
+        _GROUP_COLS,
         [
             F.col("confidence").desc(),
             F.col("quality").asc(),
@@ -417,7 +416,7 @@ def detect_chords_full(
     # best candidate + the runner-up's capped confidence (clarity
     # input, calculateQualityMetrics chord_detection.go:813-818) in
     # one aggregation — no second candidate-subtree evaluation
-    best = top2.groupBy(*group_cols).agg(
+    best = top2.groupBy(*_GROUP_COLS).agg(
         F.max(
             F.when(
                 F.col("rank") == 1,
@@ -432,7 +431,7 @@ def detect_chords_full(
         ).alias("confidence2"),
     )
     return best.select(
-        *group_cols,
+        *_GROUP_COLS,
         F.col("__b.root").alias("chord_root"),
         F.col("__b.quality").alias("chord_quality"),
         F.col("__b.inversion").cast("int").alias("inversion"),
@@ -452,11 +451,7 @@ DISSONANT_PAIRS = [
 ]
 
 
-def chord_analysis(
-    best: DataFrame,
-    chroma: DataFrame,
-    group_cols: list[str],
-) -> DataFrame:
+def chord_analysis(best: DataFrame, chroma: DataFrame) -> DataFrame:
     """Chord quality metrics + extension analysis — the remaining
     default-path steps of DetectChord (chord_detection.go:808-896):
 
@@ -480,7 +475,7 @@ def chord_analysis(
     aggregation pivots the 12 classes wide; everything else is
     column expressions."""
     spark = best.sparkSession
-    piv = chroma.groupBy(*group_cols).agg(
+    piv = chroma.groupBy(*_GROUP_COLS).agg(
         *[
             F.max(
                 F.when(
@@ -491,7 +486,7 @@ def chord_analysis(
             for i in range(12)
         ]
     )
-    j = best.join(piv, group_cols)
+    j = best.join(piv, _GROUP_COLS)
     conf = F.col("confidence")
     clarity = F.when(
         F.col("confidence2").isNotNull(), conf - F.col("confidence2")
@@ -529,7 +524,7 @@ def chord_analysis(
         )
     extensions = F.concat_ws(",", *ext_parts)
     return j.select(
-        *group_cols,
+        *_GROUP_COLS,
         "chord_root",
         "chord_quality",
         conf.alias("confidence"),

@@ -33,12 +33,10 @@ def topk_per_group(
     )
 
 
-def knn_bruteforce(
-    queries: DataFrame,
-    catalog: DataFrame,
-    *,
-    k: int = 5,
-) -> DataFrame:
+_K = 10
+
+
+def knn_bruteforce(queries: DataFrame, catalog: DataFrame) -> DataFrame:
     """Brute-force cosine top-k: query x catalog, excluding self.
 
     Output: query_id, rank, neighbor_id, cosine_sim. Catalog is
@@ -59,5 +57,5 @@ def knn_bruteforce(
         scored,
         "query_id",
         [F.col("cosine_sim").desc(), F.col("neighbor_id").asc()],
-        k,
+        _K,
     )

@@ -163,7 +163,7 @@ class CurationJob:
             tokenize_ws(F.col("text")).alias("words"),
         )
         sh = words.select(
-            "doc_id", ngrams_ws(F.col("words"), 4).alias("sh")
+            "doc_id", ngrams_ws(F.col("words")).alias("sh")
         ).repartition(max(8, spark.sparkContext.defaultParallelism))
         labels = near_dup_labels(
             to_token_table(docs), sh, self.minhash_cfg, self.policy.jaccard

@@ -115,9 +115,8 @@ def onsets_rms(
 
     def build() -> DataFrame:
         return detect_onsets(
-            frame_rms(spark, sf_dir, store), key="doc_id",
-            order="frame_idx", signal="rms_energy",
-            threshold_scale=1.05, min_interval=1,
+            frame_rms(spark, sf_dir, store), signal="rms_energy",
+            threshold_scale=1.05,
         )
 
     return _get(store, "onsets_rms", build)
@@ -238,9 +237,9 @@ def doc_hpcp(
     def build(d: DataFrame | None) -> DataFrame:
         grid = hist_grid(spark, sf_dir, store, d)
         peaks = spectral_peaks(
-            grid, ["doc_id", "frame_idx"], max_peaks=16, min_height=1e-05
+            grid, max_peaks=16, min_height=1e-05
         )
-        return hpcp(peaks, ["doc_id", "frame_idx"])
+        return hpcp(peaks)
 
     if docs is None:
         return _get(store, "hpcp", lambda: build(None))

@@ -17,37 +17,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_stats_stream(
-    events: DataFrame,
-    *,
-    ts: str = "ts",
-    value: str = "value",
-    group: str = "event_type",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def windowed_stats_stream(events: DataFrame) -> DataFrame:
     """Tumbling event-time window stats (the per-window
     statistics bundle of SURVEY §2.5 in streaming form).
 
-    Output: window_start, window_end, <group>, n_events, sum/avg/min/
+    Output: window_start, window_end, event_type, n_events, sum/avg/min/
     max of value."""
     # watermarks require TIMESTAMP (tz-aware); parquet often carries NTZ
-    df = events.withColumn(ts, F.col(ts).cast("timestamp"))
+    df = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
-        df = df.withWatermark(ts, watermark)
+        df = df.withWatermark("ts", "3650 days")
     return (
-        df.groupBy(F.window(F.col(ts), window).alias("w"), group)
+        df.groupBy(F.window(F.col("ts"), "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(value).alias("sum_value"),
-            F.avg(value).alias("avg_value"),
-            F.min(value).alias("min_value"),
-            F.max(value).alias("max_value"),
+            F.sum("value").alias("sum_value"),
+            F.avg("value").alias("avg_value"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
-            group,
+            "event_type",
             "n_events",
             "sum_value",
             "avg_value",
@@ -57,12 +49,7 @@ def windowed_stats_stream(
     )
 
 
-def dedup_stream(
-    docs: DataFrame,
-    fingerprint_col,
-    *,
-    ts: str = "ts",
-) -> DataFrame:
+def dedup_stream(docs: DataFrame, fingerprint_col) -> DataFrame:
     """Streaming exact deduplication: keep the first arrival per
     content fingerprint (the exact-dedup operator of
     operators/fingerprint.exact_dedup in streaming form).
@@ -74,34 +61,27 @@ def dedup_stream(
     evicted beyond it. Works identically on batch input (plain
     dropDuplicates there, where state is unbounded anyway)."""
     df = docs.withColumn("__fp", fingerprint_col).withColumn(
-        ts, F.col(ts).cast("timestamp")
+        "ts", F.col("ts").cast("timestamp")
     )
     if df.isStreaming:
-        df = df.withWatermark(ts, "2 hours")
+        df = df.withWatermark("ts", "2 hours")
         return df.dropDuplicatesWithinWatermark(["__fp"]).drop("__fp")
     return df.dropDuplicates(["__fp"]).drop("__fp")
 
 
-def sessionize_stream(
-    events: DataFrame,
-    *,
-    ts: str = "ts",
-    key: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Session windows by inactivity gap — the sessionize-by-gap
     operator in streaming form (session_window state merging).
 
-    Output: <key>, session_start, session_end, n_events."""
-    df = events.withColumn(ts, F.col(ts).cast("timestamp"))
+    Output: user_id, session_start, session_end, n_events."""
+    df = events.withColumn("ts", F.col("ts").cast("timestamp"))
     if df.isStreaming:
-        df = df.withWatermark(ts, watermark)
+        df = df.withWatermark("ts", "3650 days")
     return (
-        df.groupBy(F.session_window(F.col(ts), gap).alias("s"), key)
+        df.groupBy(F.session_window(F.col("ts"), "30 minutes").alias("s"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
-            key,
+            "user_id",
             F.col("s.start").alias("session_start"),
             F.col("s.end").alias("session_end"),
             "n_events",

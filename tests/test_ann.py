@@ -7,10 +7,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from sonar_spark.operators import ann
 from sonar_spark.operators.ann import ivf_assign, ivf_search, train_centroids
 from sonar_spark.operators.topk import knn_bruteforce
 
-N, DIM, K = 300, 16, 5
+N, DIM = 300, 16
+K = ann._K  # ivf_search's top-k
 
 
 @pytest.fixture(scope="module")
@@ -26,22 +28,24 @@ def emb(spark):
 
 
 def test_exhaustive_probe_equals_bruteforce(spark, emb):
-    cents = train_centroids(emb, n_centroids=8, seed=42)
+    cents = train_centroids(emb)
+    assert len(cents) == ann._N_PROBE  # every centroid is probed
     index = ivf_assign(emb, cents)
     queries = emb.where(F.col("vec_id") < 20)
-    got = ivf_search(index, queries, cents, k=K, n_probe=len(cents)).collect()
-    want = knn_bruteforce(queries, emb, k=K).collect()
+    got = ivf_search(index, queries, cents).collect()
+    want = [r for r in knn_bruteforce(queries, emb).collect() if r["rank"] <= K]
     gm = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in got}
     wm = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in want}
     assert gm == wm
 
 
-def test_pruned_probe_recall(spark, emb):
-    cents = train_centroids(emb, n_centroids=8, seed=42)
+def test_pruned_probe_recall(spark, emb, monkeypatch):
+    monkeypatch.setattr(ann, "_N_PROBE", 2)  # 2 of the 8 cells
+    cents = train_centroids(emb)
     index = ivf_assign(emb, cents)
     queries = emb.where(F.col("vec_id") < 30)
-    got = ivf_search(index, queries, cents, k=K, n_probe=2).collect()
-    want = knn_bruteforce(queries, emb, k=K).collect()
+    got = ivf_search(index, queries, cents).collect()
+    want = [r for r in knn_bruteforce(queries, emb).collect() if r["rank"] <= K]
     gset = {(r["query_id"], r["neighbor_id"]) for r in got}
     wset = {(r["query_id"], r["neighbor_id"]) for r in want}
     recall = len(gset & wset) / len(wset)
@@ -49,13 +53,13 @@ def test_pruned_probe_recall(spark, emb):
 
 
 def test_centroids_deterministic(spark, emb):
-    a = train_centroids(emb, n_centroids=8, seed=42)
-    b = train_centroids(emb, n_centroids=8, seed=42)
+    a = train_centroids(emb)
+    b = train_centroids(emb)
     np.testing.assert_array_equal(a, b)
 
 
 def test_assignment_covers_all(spark, emb):
-    cents = train_centroids(emb, n_centroids=8, seed=42)
+    cents = train_centroids(emb)
     index = ivf_assign(emb, cents)
     assert index.count() == N
     cids = [r["centroid_id"] for r in index.select("centroid_id").distinct().collect()]
@@ -81,7 +85,7 @@ def test_hyperplane_lsh_recall(spark):
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     cand = {
         (r["doc_a"], r["doc_b"])
-        for r in hyperplane_lsh_pairs(df, n_bits=256, band_bits=16).collect()
+        for r in hyperplane_lsh_pairs(df).collect()
     }
     want = {(i, 1000 + i) for i in range(10)}
     assert want <= cand, want - cand
@@ -89,7 +93,7 @@ def test_hyperplane_lsh_recall(spark):
     assert len(cand) < 500, len(cand)
 
 
-def test_ivfpq_index_and_recall(spark, sf_dir):
+def test_ivfpq_index_and_recall(spark, sf_dir, monkeypatch):
     """IVF-PQ: codes are partitioning-invariant (content-keyed
     quantization), the index compresses 64 doubles to 1+8 small
     codes, quantization preserves locality (reconstruction error well
@@ -136,7 +140,8 @@ def test_ivfpq_index_and_recall(spark, sf_dir):
 
     # search quality: ADC top-5 in the near tail of true distances
     qs = emb.where(F.col("vec_id") < 8)
-    got = pq_search(idx, qs, C, B, k=5, n_probe=8).collect()
+    monkeypatch.setattr(ann, "_PQ_N_PROBE", 8)  # the queries probe 2
+    got = pq_search(idx, qs, C, B).collect()
     top = {}
     for r in got:
         top.setdefault(r["query_id"], []).append(r["neighbor_id"])

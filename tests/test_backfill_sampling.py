@@ -18,6 +18,7 @@ from sonar_spark.functions.ddsketch import (
 )
 from sonar_spark.functions.sampling import weighted_sample
 from sonar_spark.operators.asof import _asof_union
+from sonar_spark.operators import backfill
 from sonar_spark.operators.backfill import backfill_grid
 
 
@@ -27,8 +28,6 @@ def asof_join_directional(
     *,
     key: str = "entity",
     left_ts: str = "ts",
-    right_ts: str = "ref_ts",
-    version: str | None = "ref_version",
     payload: tuple[str, ...] = ("ref_features",),
     direction: str = "backward",
 ) -> DataFrame:
@@ -42,21 +41,17 @@ def asof_join_directional(
     the forward output column is matched_fwd_ts.
     """
     if direction == "backward":
-        return _asof_union(left, right, key, left_ts, right_ts, version, payload)
+        return _asof_union(left, right, key, left_ts, payload)
     if direction != "forward":
         raise ValueError(f"unknown direction {direction!r}")
     nl = left.withColumn("__nts", -F.col(left_ts).cast("long"))
-    nr = right.withColumn("__nts_r", -F.col(right_ts).cast("long")).drop(
-        right_ts
-    )
-    res = _asof_union(
-        nl, nr, key, "__nts", "__nts_r", version, payload
-    )
+    nr = right.withColumn("ref_ts", -F.col("ref_ts").cast("long"))
+    res = _asof_union(nl, nr, key, "__nts", payload)
     return res.select(
         *[c for c in left.columns],
         (-F.col("matched_ref_ts")).cast("long").alias("matched_fwd_ts"),
         *payload,
-        *([version] if version else []),
+        "ref_version",
     )
 
 
@@ -66,9 +61,7 @@ def asof_join_nearest(
     *,
     key: str = "entity",
     left_ts: str = "ts",
-    right_ts: str = "ref_ts",
     left_id: str = "event_id",
-    version: str | None = "ref_version",
     payload: tuple[str, ...] = ("ref_features",),
 ) -> DataFrame:
     """Nearest-as-of: both directional passes joined back on the
@@ -82,13 +75,13 @@ def asof_join_nearest(
     (<payload>_near).
     """
     b = asof_join_directional(
-        left, right, key=key, left_ts=left_ts, right_ts=right_ts,
-        version=version, payload=payload, direction="backward",
+        left, right, key=key, left_ts=left_ts, payload=payload,
+        direction="backward",
     )
     fwd_ren = {c: f"{c}_fwd" for c in payload}
     f = asof_join_directional(
-        left, right, key=key, left_ts=left_ts, right_ts=right_ts,
-        version=version, payload=payload, direction="forward",
+        left, right, key=key, left_ts=left_ts, payload=payload,
+        direction="forward",
     ).select(
         left_id,
         "matched_fwd_ts",
@@ -144,12 +137,15 @@ def _events_df(spark, n_entities=5, n=120, span=40000, seed=11):
     )
 
 
-def test_backfill_grid_vs_bruteforce(spark):
+def test_backfill_grid_vs_bruteforce(spark, monkeypatch):
+    # a step the generated timelines span many times (the queries use
+    # 21600 s)
     step = 4096
+    monkeypatch.setattr(backfill, "_STEP", step)
     ev = _events_df(spark)
     got = {
         (r["user_id"], r["grid_ts"]): r
-        for r in backfill_grid(ev, step=step).collect()
+        for r in backfill_grid(ev).collect()
     }
     obs = [
         (r["user_id"], r["tsec"], r["value"], r["event_id"])
@@ -263,7 +259,7 @@ def test_weighted_sample_python_replay(spark):
         [(i, " ".join(["tok"] * (2**i)), "s") for i in range(4)],
         "doc_id long, text string, source string",
     )
-    rows = weighted_sample(docs, k=4, salt="lawtest").collect()
+    rows = weighted_sample(docs).collect()
 
     def key(doc_id, w, salt):
         return max(
@@ -276,7 +272,7 @@ def test_weighted_sample_python_replay(spark):
             for pos in range(w)
         )
 
-    ks = {i: key(i, 2**i, "lawtest") for i in range(4)}
+    ks = {i: key(i, 2**i, "es1") for i in range(4)}
     want = sorted(range(4), key=lambda i: (-ks[i], i))
     assert [r["doc_id"] for r in sorted(rows, key=lambda r: r["rank"])] == want
     for r in rows:
@@ -309,7 +305,7 @@ def test_weighted_sample_distribution_and_edges(spark):
         [(1, "", "s"), (2, "   ", "s"), (3, "a b", "s")],
         "doc_id long, text string, source string",
     )
-    rows = weighted_sample(docs, k=5).collect()
+    rows = weighted_sample(docs).collect()
     assert [r["doc_id"] for r in rows] == [3]
     assert rows[0]["weight"] == 2
 
@@ -320,12 +316,10 @@ def test_weighted_sample_partition_invariance(spark):
          for i in range(60)],
         "doc_id long, text string, source string",
     )
-    a = sorted(map(tuple, weighted_sample(docs, k=4).collect()))
-    b = sorted(
-        map(tuple, weighted_sample(docs.repartition(13), k=4).collect())
-    )
+    a = sorted(map(tuple, weighted_sample(docs).collect()))
+    b = sorted(map(tuple, weighted_sample(docs.repartition(13)).collect()))
     assert a == b
-    assert all(len([r for r in a if r[0] == s]) == 4 for s in
+    assert all(len([r for r in a if r[0] == s]) == 5 for s in
                {"src0", "src1", "src2"})
 
 
@@ -376,13 +370,15 @@ def test_ddsketch_quantile_guarantee_and_merge(spark):
     rows = [
         (int(i), "g" + str(int(i % 2)), int(v)) for i, v in enumerate(vals)
     ]
-    ev = spark.createDataFrame(rows, "event_id long, g string, v long")
-    out = ddsketch_quantiles(ev, group_col="g", value_col="v").collect()
+    ev = spark.createDataFrame(
+        rows, "event_id long, event_type string, cents long"
+    )
+    out = ddsketch_quantiles(ev).collect()
     assert len(out) == 6
     for r in out:
         assert r["merge_ok"] is True
         # exact order statistic vs python
-        grp = sorted(v for i, g, v in rows if g == r["g"])
+        grp = sorted(v for i, g, v in rows if g == r["event_type"])
         rank = max(1, int(np.ceil(r["q"] * len(grp))))
         assert r["n"] == len(grp)
         assert r["exact_v"] == grp[rank - 1]
@@ -394,15 +390,15 @@ def test_ddsketch_quantile_guarantee_and_merge(spark):
             assert r["est"] == 0.0 and r["rel_err"] == 0.0
 
 
-def test_grid_features_vs_bruteforce(spark):
+def test_grid_features_vs_bruteforce(spark, monkeypatch):
     from sonar_spark.operators.backfill import grid_features
 
-    step = 4096
+    monkeypatch.setattr(backfill, "_STEP", 4096)
     ev = _events_df(spark, seed=23)
-    bf = backfill_grid(ev, step=step)
+    bf = backfill_grid(ev)
     got = {
         (r["user_id"], r["grid_ts"]): r
-        for r in grid_features(bf, window=8).collect()
+        for r in grid_features(bf).collect()
     }
     base = {
         (r["user_id"], r["grid_ts"]): r["ffill_value"]
@@ -450,6 +446,19 @@ def test_grid_features_vs_bruteforce(spark):
                 assert r["roll_std"] == 0.0
 
 
+def _query_columns(left, right):
+    """The _ts_tables sides under the column names the nearest and
+    tolerance as-of joins read (user_id, ts_sec, ref_value)."""
+    return (
+        left.withColumnRenamed("entity", "user_id").withColumnRenamed(
+            "ts", "ts_sec"
+        ),
+        right.withColumnRenamed("entity", "user_id").withColumnRenamed(
+            "ref_features", "ref_value"
+        ),
+    )
+
+
 def test_asof_nearest_fused_equals_composed(spark):
     from sonar_spark.operators.asof import asof_join_nearest_fused
 
@@ -471,12 +480,12 @@ def test_asof_nearest_fused_equals_composed(spark):
         b = sorted(
             map(
                 tuple,
-                asof_join_nearest_fused(left, right)
+                asof_join_nearest_fused(*_query_columns(left, right))
                 .select(
-                    "event_id", "matched_ref_ts", "ref_features",
-                    "matched_fwd_ts", "ref_features_fwd",
+                    "event_id", "matched_ref_ts", "ref_value",
+                    "matched_fwd_ts", "ref_value_fwd",
                     "matched_near_ts", "near_src", "near_gap_s",
-                    "ref_features_near",
+                    "ref_value_near",
                 )
                 .collect(),
             )
@@ -484,27 +493,31 @@ def test_asof_nearest_fused_equals_composed(spark):
         assert a == b, seed
 
 
-def test_asof_tolerance_rule(spark):
+def test_asof_tolerance_rule(spark, monkeypatch):
+    from sonar_spark.operators import asof
     from sonar_spark.operators.asof import (
         asof_join,
         asof_join_tolerance,
     )
 
     left, right = _ts_tables(spark, seed=19)
+    # a window the seed-19 timelines straddle (the queries use 3600 s)
     tol = 150
+    monkeypatch.setattr(asof, "_TOLERANCE", tol)
     base = {
         r["event_id"]: r
         for r in asof_join(
             left, right, key="entity", left_ts="ts",
-            right_ts="ref_ts", version="ref_version",
             payload=("ref_features",), strategy="union",
         ).collect()
     }
-    got = asof_join_tolerance(
-        left, right, key="entity", left_ts="ts", right_ts="ref_ts",
-        version="ref_version", payload=("ref_features",),
-        tolerance=tol,
-    ).collect()
+    got = [
+        g.asDict()
+        for g in asof_join_tolerance(*_query_columns(left, right))
+        .withColumnRenamed("ts_sec", "ts")
+        .withColumnRenamed("ref_value", "ref_features")
+        .collect()
+    ]
     assert len(got) == len(base)
     for g in got:
         b = base[g["event_id"]]
@@ -551,7 +564,6 @@ def test_epoch_expand_budget_law(spark, sf_dir):
         r["source"]: (r["tokens"], r["alloc_tokens"])
         for r in temperature_mix(
             words.select("source", "words"),
-            temperature=0.3, budget=1_000_000,
         ).collect()
     }
     copy_tok = {}

@@ -73,8 +73,7 @@ def test_delay_line_matches_go(spark):
     got = {
         r["pos"]: (r["delayed"], r["delayed_interp"])
         for r in delay_line_interpolated(
-            delay_line(df, "v", 3, key="doc_id", order="pos"),
-            "v", 2.5, key="doc_id", order="pos",
+            delay_line(df),
         ).collect()
     }
     want_d = _go_delay_line(xs, 3)
@@ -98,10 +97,7 @@ def test_overlap_add_matches_go(spark):
     )
     got = {
         r["pos"]: r["value"]
-        for r in overlap_add(
-            df, key="doc_id", frame_col="frame_idx",
-            window_col="window", hop=H,
-        ).collect()
+        for r in overlap_add(df).collect()
     }
     want = _go_overlap_add(frames, W, H)
     assert len(got) == len(want) == nf * H

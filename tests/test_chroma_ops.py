@@ -31,7 +31,7 @@ def test_tonnetz_pure_pitch_class_centroid(spark):
     )
     out = {
         r["doc_id"]: (r["centroid_x"], r["centroid_y"])
-        for r in tonnetz_centroids(df, ["doc_id", "frame_idx"]).collect()
+        for r in tonnetz_centroids(df).collect()
     }
     for pc, x, y in TONNETZ_COORDS:
         assert out[pc][0] == pytest.approx(x, abs=1e-6)
@@ -49,12 +49,12 @@ def test_shift_optimal_recovers_transposition(spark):
     rows_l = [(0, 0, c, float(base[c])) for c in range(12)]
     rows_r = [(0, 0, c, float(cv2[c])) for c in range(12)]
     l = spark.createDataFrame(
-        rows_l, "qid long, mid long, pitch_class int, chroma double"
+        rows_l, "qid long, mid long, pitch_class int, mv double"
     )
     r = spark.createDataFrame(
-        rows_r, "qid long, mid long, pitch_class int, chroma double"
+        rows_r, "qid long, mid long, pitch_class int, mv double"
     )
-    out = chroma_shift_optimal(l, r, ["qid", "mid"]).collect()[0]
+    out = chroma_shift_optimal(l, r).collect()[0]
     assert out["best_shift"] == shift
     assert out["best_similarity"] == pytest.approx(1.0, abs=1e-9)
 
@@ -165,7 +165,7 @@ def test_compare_topk_chroma_group_and_quality(spark):
             r[f"chroma{i}"] = v
         rows.append(r)
     df = spark.createDataFrame(rows)
-    out = compare_topk(df, df, k=3).collect()
+    out = compare_topk(df, df).collect()
     got = {(r["query_id"], r["match_id"]): r for r in out}
     # identical vectors: chroma cosine 1
     assert got[("a", "b")]["sim_chroma"] == pytest.approx(1.0)
@@ -210,7 +210,7 @@ def test_key_estimation_full_metrics(spark):
     df = spark.createDataFrame(
         rows, "doc_id long, frame_idx int, pitch_class int, hpcp double"
     )
-    out = key_estimation_full(df, ["doc_id", "frame_idx"]).collect()[0]
+    out = key_estimation_full(df).collect()[0]
     # the C-major template correlates perfectly with itself
     assert out["key"] == 0 and out["mode"] == "major"
     assert out["confidence"] == pytest.approx(1.0)
@@ -237,7 +237,7 @@ def test_chord_analysis_extensions_detect_b7(spark):
         )
     best = spark.createDataFrame(best_rows)
     ch = spark.createDataFrame(chroma_rows)
-    out = chord_analysis(best, ch, ["doc_id", "frame_idx"]).collect()[0]
+    out = chord_analysis(best, ch).collect()[0]
     assert out["extensions"] == "10"
     assert out["clarity"] == pytest.approx(0.4)
     assert out["consonance"] == pytest.approx(0.9)

@@ -11,6 +11,7 @@ import math
 import numpy as np
 import pytest
 
+from sonar_spark.operators import clustering
 from sonar_spark.operators.clustering import (
     cluster_eval,
     dbscan,
@@ -63,7 +64,7 @@ def go_dbscan(data, eps, min_pts):
     return labels
 
 
-def test_dbscan_matches_go_scan_order(spark):
+def test_dbscan_matches_go_scan_order(spark, monkeypatch):
     """Random geometry at several (eps, min_pts): the relational
     plan's labels equal the Go's sequential labels for every point —
     including cluster-id numbering and ambiguous-border adoption."""
@@ -79,12 +80,12 @@ def test_dbscan_matches_go_scan_order(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(data)], "id long, vec array<double>"
     )
+    # the queries run eps 0.15, min_pts 3 on other geometry
     for eps, mp in ((0.4, 3), (0.3, 4), (0.6, 2)):
+        monkeypatch.setattr(clustering, "_EPS", eps)
+        monkeypatch.setattr(clustering, "_MIN_PTS", mp)
         want = go_dbscan(data, eps, mp)
-        got = {
-            r["id"]: r["label"]
-            for r in dbscan(df, eps=eps, min_pts=mp).collect()
-        }
+        got = {r["id"]: r["label"] for r in dbscan(df).collect()}
         assert [got[i] for i in range(len(data))] == want, (eps, mp)
 
 
@@ -192,16 +193,15 @@ def test_kmedoids_sequence_reference_semantics():
 
 def test_hierarchical_sequence_linkages():
     data = [[0.0], [0.4], [5.0], [5.3], [10.0]]
-    for linkage in ("single", "complete", "average", "ward"):
-        labels, steps = hierarchical_sequence(data, 3, linkage)
-        assert steps == 2
-        assert labels[0] == labels[1]
-        assert labels[2] == labels[3]
-        assert len(set(labels)) == 3
+    labels, steps = hierarchical_sequence(data, 3)
+    assert steps == 2
+    assert labels[0] == labels[1]
+    assert labels[2] == labels[3]
+    assert len(set(labels)) == 3
     # slice-order tie-break: both pairs at distance 1 -> first pair
     # (positions 0,1) merges first
     data = [[0.0], [1.0], [5.0], [6.0]]
-    labels, _ = hierarchical_sequence(data, 3, "single")
+    labels, _ = hierarchical_sequence(data, 3)
     assert labels[0] == labels[1] and labels[2] != labels[3]
 
 

@@ -156,7 +156,7 @@ def test_substring_spans_matches_python_oracle(spark):
     df = spark.createDataFrame(
         [(i, w) for i, w in docs], "doc_id long, words array<string>"
     )
-    got = {r["doc_id"]: r for r in substring_spans(df, k=k).collect()}
+    got = {r["doc_id"]: r for r in substring_spans(df).collect()}
 
     counts: Counter = Counter()
     for _, w in docs:
@@ -185,8 +185,12 @@ def test_substring_spans_matches_python_oracle(spark):
     assert all(got[i]["n_dup_spans"] >= 1 for i in range(0, 30, 3))
 
 
-def test_pack_sequences_matches_python_next_fit(spark):
+def test_pack_sequences_matches_python_next_fit(spark, monkeypatch):
+    from sonar_spark.operators import packing
+
+    # a capacity the 1-70 token docs overflow often (the queries use 96)
     cap = 50
+    monkeypatch.setattr(packing, "_CAPACITY", cap)
     rng = random.Random(3)
     rows = [
         (i, f"s{rng.randint(0, 3)}", rng.randint(1, 70)) for i in range(200)
@@ -194,7 +198,7 @@ def test_pack_sequences_matches_python_next_fit(spark):
     df = spark.createDataFrame(rows, "doc_id long, source string, n_tok int")
     got = {
         r["doc_id"]: r
-        for r in pack_sequences(df, capacity=cap).collect()
+        for r in pack_sequences(df).collect()
     }
     assert len(got) == len(rows)
 
@@ -228,7 +232,7 @@ def test_pii_scrub_counts_and_idempotence(spark):
         (5, "dot.name@host.org trailing"),
         (6, "not-a-phone 5555-1234 and 1234.5678 half"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    df = spark.createDataFrame(rows, "doc_id long, payload string")
     got = {r["doc_id"]: r for r in pii_scrub(df).collect()}
     want = {}
     for i, t in rows:
@@ -245,13 +249,13 @@ def test_pii_scrub_counts_and_idempotence(spark):
         "doc_id",
         F.regexp_replace(
             F.regexp_replace(
-                F.regexp_replace("text", PII_EMAIL, "<EMAIL>"),
+                F.regexp_replace("payload", PII_EMAIL, "<EMAIL>"),
                 PII_IPV4,
                 "<IP>",
             ),
             PII_PHONE,
             "<PHONE>",
-        ).alias("text"),
+        ).alias("payload"),
     )
     again = {r["doc_id"]: r for r in pii_scrub(red).collect()}
     for i in want:
@@ -316,7 +320,8 @@ def test_bpe_train_matches_python_reference(spark):
     assert got == want_segs
 
 
-def test_tfidf_and_bm25_match_python_oracle(spark):
+def test_tfidf_and_bm25_match_python_oracle(spark, monkeypatch):
+    from sonar_spark.functions import rank
     from sonar_spark.functions.rank import bm25_scores, tfidf_topk
 
     docs = _corpus(13, 30)
@@ -329,7 +334,7 @@ def test_tfidf_and_bm25_match_python_oracle(spark):
     N = len(docs)
 
     # tfidf: verify every returned row and the per-doc rank order
-    got = [r.asDict() for r in tfidf_topk(df, k=5).collect()]
+    got = [r.asDict() for r in tfidf_topk(df).collect()]
     for r in got:
         tf = tfs[r["doc_id"]][r["term"]]
         assert r["tf"] == tf
@@ -352,6 +357,7 @@ def test_tfidf_and_bm25_match_python_oracle(spark):
 
     # bm25 for a query with a rare planted term
     q = ["omega", "theta", "eps"]
+    monkeypatch.setattr(rank, "_QUERY_TERMS", q)
     k1, b = 1.2, 0.75
     avgdl = sum(len(w) for _, w in docs) / N
     scores = {}
@@ -373,7 +379,7 @@ def test_tfidf_and_bm25_match_python_oracle(spark):
             scores[i] = micro
     order = sorted(scores, key=lambda i: (-scores[i], i))[:20]
     got_bm = {
-        r["rank"]: r for r in bm25_scores(df, q, top_n=20).collect()
+        r["rank"]: r for r in bm25_scores(df).collect()
     }
     for rk, i in enumerate(order, start=1):
         assert got_bm[rk]["doc_id"] == i
@@ -386,7 +392,7 @@ def test_ngram_novelty_matches_python_oracle(spark):
     k = 4
     docs = _corpus(17, 30)
     df = spark.createDataFrame(docs, "doc_id long, words array<string>")
-    got = {r["doc_id"]: r for r in ngram_novelty(df, k=k).collect()}
+    got = {r["doc_id"]: r for r in ngram_novelty(df).collect()}
 
     first: dict[tuple, int] = {}
     for i, w in docs:  # ascending doc_id
@@ -492,7 +498,7 @@ def test_semdedup_matches_python_oracle(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     )
-    got = {r["vec_id"]: r for r in semdedup(df, tau=0.95).collect()}
+    got = {r["vec_id"]: r for r in semdedup(df).collect()}
     assert len(got) == len(rows)
 
     cents = np.array(semdedup_centroids())
@@ -537,8 +543,13 @@ def test_semdedup_matches_python_oracle(spark):
     assert n_dropped >= 1
 
 
-def test_pmi_collocations_matches_python_oracle(spark):
+def test_pmi_collocations_matches_python_oracle(spark, monkeypatch):
+    from sonar_spark.functions import corpus
     from sonar_spark.functions.corpus import pmi_collocations
+
+    # thresholds sized to the 60-doc corpus (the queries use 5 and 50)
+    monkeypatch.setattr(corpus, "_MIN_COUNT", 3)
+    monkeypatch.setattr(corpus, "_TOP_N", 25)
 
     docs = _corpus(99, 60)
     df = spark.createDataFrame(
@@ -546,9 +557,7 @@ def test_pmi_collocations_matches_python_oracle(spark):
     )
     got = {
         (r["w1"], r["w2"]): r
-        for r in pmi_collocations(
-            df.select("words"), min_count=3, top_n=25
-        ).collect()
+        for r in pmi_collocations(df.select("words")).collect()
     }
     uni = Counter(w for _, ws in docs for w in ws)
     big = Counter(
@@ -656,8 +665,13 @@ def test_chunk_documents_matches_python_oracle(spark):
         )
 
 
-def test_temperature_mix_matches_python_oracle(spark):
+def test_temperature_mix_matches_python_oracle(spark, monkeypatch):
+    from sonar_spark.functions import corpus
     from sonar_spark.functions.corpus import temperature_mix
+
+    # the queries run T 0.3 and a 10^6 budget
+    monkeypatch.setattr(corpus, "_TEMPERATURE", 0.5)
+    monkeypatch.setattr(corpus, "_BUDGET", 10000)
 
     rng = random.Random(5)
     rows = []
@@ -670,7 +684,7 @@ def test_temperature_mix_matches_python_oracle(spark):
     df = spark.createDataFrame(rows, "source string, words array<string>")
     got = {
         r["source"]: r
-        for r in temperature_mix(df, temperature=0.5, budget=10000).collect()
+        for r in temperature_mix(df).collect()
     }
     toks = Counter()
     for g, ws in rows:
@@ -715,7 +729,7 @@ def test_semdedup_pairs_survive_arrow_batch_splits(spark):
     )
     persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     want = sorted(
-        tuple(r) for r in semdedup(df, tau=0.95).collect()
+        tuple(r) for r in semdedup(df).collect()
     )
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
@@ -723,7 +737,7 @@ def test_semdedup_pairs_survive_arrow_batch_splits(spark):
     try:
         spark.conf.set(key, "7")
         got = sorted(
-            tuple(r) for r in semdedup(df, tau=0.95).collect()
+            tuple(r) for r in semdedup(df).collect()
         )
     finally:
         spark.conf.set(key, old)
@@ -789,10 +803,16 @@ def test_source_divergence_matches_python_oracle(spark):
     assert got[("g0", "g1")]["js"] > 0.01  # skew shift registers
 
 
-def test_chunk_dedup_matches_python_oracle(spark):
+def test_chunk_dedup_matches_python_oracle(spark, monkeypatch):
     import hashlib
 
+    from sonar_spark.operators import packing
     from sonar_spark.operators.packing import chunk_dedup
+
+    # 4-token chunks, so the planted 8-token prefix spans two (the
+    # queries use 8 and 8)
+    monkeypatch.setattr(packing, "_WINDOW", 4)
+    monkeypatch.setattr(packing, "_STRIDE", 4)
 
     docs = _corpus(77, 30, max_len=30)
     # plant cross-doc boilerplate: docs 100/101/102 share a prefix
@@ -802,7 +822,7 @@ def test_chunk_dedup_matches_python_oracle(spark):
         rows.append((100 + k, boiler + [VOCAB[k]] * 3))
     df = spark.createDataFrame(rows, "doc_id long, words array<string>")
     got = {
-        r["doc_id"]: r for r in chunk_dedup(df, window=4, stride=4).collect()
+        r["doc_id"]: r for r in chunk_dedup(df).collect()
     }
     freq: dict = {}
     chunks: dict = {}
@@ -847,10 +867,14 @@ def test_chunk_documents_covers_every_token(spark):
         assert covered == set(range(n))
 
 
-def test_temperature_mix_budget_conservation(spark):
+def test_temperature_mix_budget_conservation(spark, monkeypatch):
     """The integer allocation never exceeds the budget and the
     shortfall is bounded by the group count (floor division)."""
+    from sonar_spark.functions import corpus
     from sonar_spark.functions.corpus import temperature_mix
+
+    monkeypatch.setattr(corpus, "_TEMPERATURE", 0.7)
+    monkeypatch.setattr(corpus, "_BUDGET", 55555)
 
     rng = random.Random(2)
     rows = []
@@ -860,7 +884,7 @@ def test_temperature_mix_budget_conservation(spark):
                 (f"g{g}", [rng.choice(VOCAB) for _ in range(rng.randint(1, 9))])
             )
     df = spark.createDataFrame(rows, "source string, words array<string>")
-    out = temperature_mix(df, temperature=0.7, budget=55555).collect()
+    out = temperature_mix(df).collect()
     total = sum(r["alloc_tokens"] for r in out)
     assert total <= 55555
     assert 55555 - total < len(out)  # floor-division shortfall bound
@@ -877,7 +901,7 @@ def test_pack_sequences_kernel_equals_fold(spark, sf_dir):
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tok"),
     )
     cols = ["doc_id", "source", "window_id", "window_off", "truncated"]
-    a = sorted(map(tuple, pack_sequences(docs, capacity=96)
+    a = sorted(map(tuple, pack_sequences(docs)
                    .select(cols).collect()))
     b = sorted(map(tuple, pack_sequences_expr(docs, capacity=96)
                    .select(cols).collect()))

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from sonar_spark.functions.dsir import (
     _N_BUCKETS,
     _gram_bucket_counts,
-    _md5_bucket,
+    _md5_u32,
 )
 
 
@@ -75,7 +75,7 @@ def _gram_stream_expr(
         .select(
             id_col,
             target_col,
-            _md5_bucket(F.col("__g"), n_buckets).alias("__b"),
+            (_md5_u32(F.col("__g")) % n_buckets).alias("__b"),
         )
     )
 

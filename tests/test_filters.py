@@ -77,7 +77,7 @@ def test_filters_spark_operator(spark):
     dc = {r["doc_id"]: r["filtered"] for r in dc_removal(df).collect()}
     coeffs = kernels.bandpass_coefficients(64, 8.0, 1.0)
     bp = {r["doc_id"]: r["filtered"]
-          for r in bandpass(df, 64, 8.0, 1.0).collect()}
+          for r in bandpass(df).collect()}
     assert set(dc) == set(src) == set(bp)
     for did, x in src.items():
         np.testing.assert_allclose(dc[did], _dc_loop(x), rtol=1e-9,

@@ -101,7 +101,7 @@ def test_lsh_recovers_planted_neardups(spark):
     pair and nothing else."""
     df = _planted_docs(spark)
     words = F.transform("tokens", lambda t: t.cast("string"))
-    sh = df.select("doc_id", ngrams_ws(words, 4).alias("sh"))
+    sh = df.select("doc_id", ngrams_ws(words).alias("sh"))
     pairs = near_dup_pairs(df, sh, CFG, threshold=0.5).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in pairs}
     want = {(f"d{i:04d}", f"d{1000+i:04d}") for i in range(5)}
@@ -121,7 +121,7 @@ def test_simhash_near_duplicates_spark(spark):
         a, b = f"d{i:04d}", f"d{1000+i:04d}"
         if bin(sims[a] ^ sims[b]).count("1") <= 3:
             want.add((a, b))
-    pairs = simhash_near_duplicates(sigs, max_hamming=3).collect()
+    pairs = simhash_near_duplicates(sigs).collect()
     got = {(r["doc_a"], r["doc_b"]) for r in pairs}
     assert want <= got
     for r in pairs:  # precision of the hamming column itself
@@ -163,7 +163,7 @@ def test_simhash_pigeonhole_completeness(spark):
     df = spark.createDataFrame(sigs, "doc_id string, simhash long")
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in simhash_near_duplicates(df, max_hamming=3).collect()
+        for r in simhash_near_duplicates(df).collect()
     }
     want = set()
     for (ida, sa), (idb, sb) in itertools.combinations(sigs, 2):
@@ -423,7 +423,7 @@ def test_winnow_matches_scalar_reference(spark):
 
     df = spark.createDataFrame(rows, "doc_id string, words array<string>")
     got = {}
-    for r in winnow_fingerprints(df, k=4, w=4).collect():
+    for r in winnow_fingerprints(df).collect():
         got.setdefault(r["doc_id"], set()).add((r["fp"], r["pos"]))
     assert got == want
 
@@ -450,7 +450,7 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
 
     df = spark.createDataFrame(rows, "doc_id string, words array<string>")
     fps = {}
-    for r in winnow_fingerprints(df, k=4, w=4).collect():
+    for r in winnow_fingerprints(df).collect():
         fps.setdefault(r["doc_id"], set()).add(r["fp"])
     for d in range(20):
         assert fps[f"a{d}"] & fps[f"b{d}"], d
@@ -470,8 +470,8 @@ def test_fingerprint_matches_caps_and_scores(spark):
     uniq = [f"u{i}" for i in range(20)]
     rows += [("p1", uniq), ("p2", list(uniq))]
     df = spark.createDataFrame(rows, "doc_id string, words array<string>")
-    fps = winnow_fingerprints(df, k=4, w=4)
-    out = fingerprint_matches(fps, max_doc_freq=8, min_shared=3).collect()
+    fps = winnow_fingerprints(df)
+    out = fingerprint_matches(fps).collect()
     # the boilerplate fp appears in 12 docs > 8 -> capped; only the
     # planted identical pair survives
     assert {(r["doc_a"], r["doc_b"]) for r in out} == {("p1", "p2")}
@@ -535,7 +535,7 @@ def test_incremental_dedup_verdicts(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in incremental_dedup(batch, corpus, threshold=0.8).collect()
+        for r in incremental_dedup(batch, corpus).collect()
     }
     assert set(got) == {"b1", "b2", "b3"}
     assert got["b1"]["exact_of"] == "c1" and got["b1"]["n_exact"] == 2

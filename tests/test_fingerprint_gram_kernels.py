@@ -135,11 +135,13 @@ def ngram_novelty_expr(
 
 
 @pytest.mark.parametrize("k", [4, 3])
-def test_substring_spans_hash_equals_string(spark, sf_dir, k):
+def test_substring_spans_hash_equals_string(spark, sf_dir, k, monkeypatch):
+    from sonar_spark.operators import fingerprint
     from sonar_spark.operators.fingerprint import substring_spans
 
+    monkeypatch.setattr(fingerprint, "_NGRAM_K", k)  # the queries use 4
     docs = _words(spark, sf_dir)
-    a = _sorted(substring_spans(docs, k=k))
+    a = _sorted(substring_spans(docs))
     b = _sorted(substring_spans_expr(docs, k=k))
     assert len(a) == len(b) > 0
     assert a == b
@@ -149,7 +151,7 @@ def test_ngram_novelty_hash_equals_string(spark, sf_dir):
     from sonar_spark.operators.fingerprint import ngram_novelty
 
     docs = _words(spark, sf_dir)
-    a = _sorted(ngram_novelty(docs, k=4))
+    a = _sorted(ngram_novelty(docs))
     b = _sorted(ngram_novelty_expr(docs, k=4))
     assert len(a) == len(b) > 0
     assert a == b

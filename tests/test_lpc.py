@@ -112,9 +112,10 @@ def test_zero_energy_break_freezes_coeffs():
     assert list(a[0]) == [1.0, 0.0, 0.0, 0.0]
 
 
-def test_lpc_dataframe_roundtrip(spark):
+def test_lpc_dataframe_roundtrip(spark, monkeypatch):
     """End-to-end: the DataFrame operator reproduces the scalar port
     on a small synthetic token table, order 6."""
+    from sonar_spark.operators import lpc as lpc_mod
     from sonar_spark.operators.lpc import lpc
 
     rng = np.random.default_rng(7)
@@ -126,7 +127,9 @@ def test_lpc_dataframe_roundtrip(spark):
         series[d] = xs
         rows += [(d, i, float(v)) for i, v in enumerate(xs)]
     df = spark.createDataFrame(rows, "doc_id long, pos long, v double")
-    out = {r["doc_id"]: r for r in lpc(df, order=6).collect()}
+    # an order above the queries' 4, so the recursion runs six steps
+    monkeypatch.setattr(lpc_mod, "_ORDER", 6)
+    out = {r["doc_id"]: r for r in lpc(df).collect()}
     assert set(out) == set(series)
     for d, xs in series.items():
         ref = levinson_durbin_go(list(_lags(xs, 6)), 6)

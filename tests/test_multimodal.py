@@ -9,9 +9,9 @@ from sonar_spark.operators.multimodal import media_features, synth_media_table
 
 
 def test_media_features_end_to_end(spark):
-    media = synth_media_table(spark, 16)
+    media = synth_media_table(spark)
     out = media_features(media).collect()
-    assert len(out) == 16
+    assert len(out) == 64
     for r in out:
         assert r["ok"] is True
         assert r["n_values"] > 0
@@ -24,7 +24,7 @@ def test_media_features_end_to_end(spark):
 
 
 def test_checksum_gate(spark):
-    media = synth_media_table(spark, 4).withColumn(
+    media = synth_media_table(spark).withColumn(
         "sha256",
         F.when(F.col("media_id") == "m000001", F.lit("deadbeef")).otherwise(
             F.col("sha256")
@@ -36,7 +36,7 @@ def test_checksum_gate(spark):
 
 
 def test_determinism(spark):
-    a = {r["media_id"]: r["sha256"] for r in synth_media_table(spark, 8).collect()}
+    a = {r["media_id"]: r["sha256"] for r in synth_media_table(spark).collect()}
     b = {r["media_id"]: r["sha256"] for r in
-         synth_media_table(spark, 8).repartition(3).collect()}
+         synth_media_table(spark).repartition(3).collect()}
     assert a == b

@@ -109,7 +109,7 @@ def test_negative_pairs_properties(spark):
     docs = spark.createDataFrame(
         [(i * 3,) for i in range(n)], "doc_id long"
     )
-    rows = negative_pairs(docs, k=k, salt="t").collect()
+    rows = negative_pairs(docs).collect()
     assert len(rows) == n * k
     by_anchor: dict = {}
     for r in rows:
@@ -121,7 +121,7 @@ def test_negative_pairs_properties(spark):
     gidx = {d: g for g, d in enumerate(order)}
     for r in rows:
         h = int(
-            hashlib.md5(f"t:{r['doc_id']}:{r['j']}".encode()).hexdigest()[
+            hashlib.md5(f"neg1:{r['doc_id']}:{r['j']}".encode()).hexdigest()[
                 :15
             ],
             16,
@@ -169,8 +169,7 @@ def test_global_cumsum_and_shard_balance(spark):
 
     n_shards = 8
     out = shard_balance(
-        spark.createDataFrame(rows, "doc_id long, n_tok long"),
-        n_shards=n_shards,
+        spark.createDataFrame(rows, "doc_id long, n_tok long")
     ).collect()
     total = sum(n for _, n in rows)
     target = -(-total // n_shards)
@@ -292,8 +291,7 @@ def test_hard_negatives_kernel_equals_windowed(spark, sf_dir):
         map(
             tuple,
             hard_negatives_allpairs(
-                emb, path, k=3, pos_threshold=0.4
-            ).collect(),
+                emb, path).collect(),
         )
     )
     assert a == b and len(a) > 0

@@ -69,7 +69,7 @@ def test_knn_broadcasts_catalog(spark):
             "embedding"
         ),
     )
-    plan = _plan(knn_bruteforce(emb.limit(5), emb, k=3))
+    plan = _plan(knn_bruteforce(emb.limit(5), emb))
     assert "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan, plan
 
 
@@ -298,7 +298,7 @@ def test_backfill_and_grid_features_share_one_entity_exchange(spark):
         "value",
         "user_id",
     )
-    bf = backfill_grid(ev, step=128)
+    bf = backfill_grid(ev)
     n_bf = _plan(bf).count("Exchange")
     n_gf = _plan(grid_features(bf)).count("Exchange")
     assert n_bf == 2, n_bf
@@ -311,7 +311,7 @@ def test_weighted_sample_two_exchanges_one_scan(spark, sf_dir):
     from sonar_spark.functions.sampling import weighted_sample
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    plan = _plan(weighted_sample(docs, k=3))
+    plan = _plan(weighted_sample(docs))
     assert plan.count("Exchange") == 2, plan
     assert plan.count("Scan parquet") == 1, plan
 
@@ -337,10 +337,14 @@ def test_asof_nearest_fused_single_data_exchange(spark):
     from sonar_spark.operators.asof import asof_join_nearest_fused
 
     left = datagen.token_table(spark, n_docs=20).select(
-        F.col("doc_id").alias("entity"),
-        F.col("n_tok").cast("long").alias("ts"),
+        F.col("doc_id").alias("user_id"),
+        F.col("n_tok").cast("long").alias("ts_sec"),
     )
-    right = datagen.catalog_table(spark, n_entities=4)
+    right = (
+        datagen.catalog_table(spark, n_entities=4)
+        .withColumnRenamed("entity", "user_id")
+        .withColumnRenamed("ref_features", "ref_value")
+    )
     plan = _plan(asof_join_nearest_fused(left, right))
     shuffles = [
         line for line in plan.splitlines()

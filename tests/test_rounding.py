@@ -45,20 +45,22 @@ def test_spark_round_matches_decimal_golden():
         assert not np.signbit(got[got == 0]).any(), dp
 
 
-def test_spark_round_micro_matches_decimal_golden():
+def test_spark_round_micro_matches_decimal_golden(monkeypatch):
     rng = np.random.default_rng(6)
-    for dp in range(9):
+    for dp in range(10):  # the engine rounds to _MICRO_DP = 9
+        monkeypatch.setattr(kernels, "_MICRO_DP", dp)
         x = _cases(dp, rng)
-        got = kernels.spark_round_micro(x, dp)
+        got = kernels.spark_round_micro(x)
         want = np.array([_golden_units(float(v), dp) for v in x])
         assert got.dtype == np.int64
         assert np.array_equal(got, want), dp
 
 
-def test_spark_round_known_values():
+def test_spark_round_known_values(monkeypatch):
     # 2.675 is stored below the tie, but its repr is "2.675": Spark
     # rounds the repr, so half-up gives 2.68 (plain float math: 2.67)
     assert kernels.spark_round(np.array([2.675, -2.675, 0.125]), 2).tolist() == [
         2.68, -2.68, 0.13,
     ]
-    assert kernels.spark_round_micro(np.array([2.675, -0.0]), 2).tolist() == [268, 0]
+    monkeypatch.setattr(kernels, "_MICRO_DP", 2)
+    assert kernels.spark_round_micro(np.array([2.675, -0.0])).tolist() == [268, 0]

@@ -80,7 +80,7 @@ def test_cms_overestimates_and_replays(spark):
     for _ in range(400):
         rows.append(([rng.choice(vocab) for _ in range(rng.randint(1, 15))],))
     df = spark.createDataFrame(rows, "words array<string>")
-    got = cms_heavy_hitters(df, top_n=10).collect()
+    got = cms_heavy_hitters(df).collect()
     assert len(got) == 10
     # exact counts + python sketch replay
     from collections import Counter

@@ -121,14 +121,16 @@ def test_stream_pitch_track_equals_batch(spark):
         assert got[k] == want[k], k  # bit-identical, same kernel
 
 
-def test_stream_backfill_equals_batch(spark):
+def test_stream_backfill_equals_batch(spark, monkeypatch):
     """Streaming causal backfill == the ffill columns of the batch
     operator, under two DIFFERENT time chunkings (2 and 4 ranges),
     including duplicate-second ties and multi-cell gaps."""
+    from sonar_spark.operators import backfill
     from sonar_spark.operators.backfill import backfill_grid
     from sonar_spark.streaming.stateful import stream_backfill
 
     step = 256
+    monkeypatch.setattr(backfill, "_STEP", step)
     rng = np.random.default_rng(31)
     rows = []
     eid = 0
@@ -150,9 +152,7 @@ def test_stream_backfill_equals_batch(spark):
         (r["user_id"], r["grid_ts"]): (
             r["ffill_value"], r["ffill_age_s"], r["n_obs"]
         )
-        for r in backfill_grid(
-            ev_batch, step=step
-        ).select(
+        for r in backfill_grid(ev_batch).select(
             "user_id", "grid_ts", "ffill_value", "ffill_age_s", "n_obs"
         ).collect()
     }
@@ -228,7 +228,6 @@ def test_stream_asof_equals_batch(spark):
         )
         for r in asof_join(
             left, right, key="entity", left_ts="ts",
-            right_ts="ref_ts", version="ref_version",
             payload=("ref_features",), strategy="union",
         ).collect()
     }

@@ -57,13 +57,14 @@ def test_percentile_methods_spark_matches_kernel(spark, monkeypatch):
     vals = np.asarray([1.0] * 40 + [2.0] * 15 + [3.0] * 45)
     data["t"] = vals
     rows += [("t", float(v)) for v in vals]
-    df = spark.createDataFrame(rows, "g string, v double")
+    df = spark.createDataFrame(rows, "l_returnflag string, l_quantity double")
     monkeypatch.setattr(percentiles, "_QS", (0.25, 0.5, 0.9))
-    out = percentile_methods(df, "v", "g")
+    out = percentile_methods(df)
     for r in out.collect():
-        want = golden.percentile_method(data[r["g"]], r["q"], r["method"])
+        g = r["l_returnflag"]
+        want = golden.percentile_method(data[g], r["q"], r["method"])
         assert np.isclose(r["value"], want, rtol=1e-12), (
-            r["g"], r["method"], r["q"], r["value"], want,
+            g, r["method"], r["q"], r["value"], want,
         )
 
 
@@ -123,17 +124,18 @@ def test_entropy_variants_matches_loop(spark):
         vals = [float(v) for v in np.round(rng.gamma(2.0, 3.0, n), 4)]
         data[g] = vals
         rows += [(g, v) for v in vals]
-    df = spark.createDataFrame(rows, "g string, value double")
-    out = entropy_variants(df, "value", "g")
+    df = spark.createDataFrame(rows, "event_type string, value double")
+    out = entropy_variants(df, "value")
     seen = set()
     for r in out.collect():
-        want = _entropy_loop(data[r["g"]], r["rule"])
-        seen.add((r["g"], r["rule"]))
-        assert r["num_bins"] == want["num_bins"], (r["g"], r["rule"])
+        g = r["event_type"]
+        want = _entropy_loop(data[g], r["rule"])
+        seen.add((g, r["rule"]))
+        assert r["num_bins"] == want["num_bins"], (g, r["rule"])
         for k in ("shannon", "renyi2", "tsallis2", "hartley",
                   "min_entropy", "norm_shannon"):
             assert np.isclose(r[k], want[k], rtol=1e-9, atol=1e-12), (
-                r["g"], r["rule"], k,
+                g, r["rule"], k,
             )
     assert seen == {(g, rule) for g in data for rule in BIN_RULES}
 
@@ -148,12 +150,9 @@ def test_pearson_distance_and_matrix(spark):
     vecs[6] = [-3.0 * v for v in vecs[1]]      # r = -1 -> dist 0 (|r|)
     vecs[7] = [4.0] * 16                       # zero variance -> dist 1
     df = spark.createDataFrame(
-        [(k, v) for k, v in vecs.items()], "vec_id int, emb array<double>"
+        [(k, v) for k, v in vecs.items()], "vec_id int, embedding array<double>"
     )
-    m = distance_matrix(
-        df, "vec_id", "emb",
-        {"euc": euclidean, "pd": pearson_distance},
-    )
+    m = distance_matrix(df, {"euc": euclidean, "pd": pearson_distance})
     got = {(r["id_a"], r["id_b"]): r for r in m.collect()}
     assert len(got) == 64  # full 8x8 incl. diagonal
     for i in range(8):
@@ -175,13 +174,16 @@ def test_spectral_peaks_operator(spark):
     from sonar_spark.operators.peaks import spectral_peaks
 
     spec = [
-        # group g1: peak at bin 2 (1,5,2), plateau at 5-6 (4,4), edge
+        # one frame: peak at bin 2 (1,5,2), plateau at 5-6 (4,4), edge
         # high at bin 0 must be excluded
-        ("g1", 0, 9.0), ("g1", 1, 1.0), ("g1", 2, 5.0), ("g1", 3, 2.0),
-        ("g1", 4, 3.0), ("g1", 5, 4.0), ("g1", 6, 4.0), ("g1", 7, 0.0),
+        (0, 9.0), (1, 1.0), (2, 5.0), (3, 2.0),
+        (4, 3.0), (5, 4.0), (6, 4.0), (7, 0.0),
     ]
-    df = spark.createDataFrame(spec, "g string, bin long, m double")
-    out = spectral_peaks(df, ["g"], max_peaks=5, min_height=0.0)
+    df = spark.createDataFrame(
+        [(1, 0, b, m) for b, m in spec],
+        "doc_id long, frame_idx long, bin long, m double",
+    )
+    out = spectral_peaks(df, max_peaks=5, min_height=0.0)
     rows = {r["bin"]: r for r in out.collect()}
     assert set(rows) == {2}  # plateau + edges excluded
     y1, y2, y3 = 1.0, 5.0, 2.0
@@ -191,7 +193,7 @@ def test_spectral_peaks_operator(spark):
     assert abs(rows[2]["refined_mag"] - (y2 + a * off * off + b * off)) < 1e-12
 
 
-def test_quantile_histogram_bit_identical_to_percentile(spark):
+def test_quantile_histogram_bit_identical_to_percentile(spark, monkeypatch):
     """quantile_histogram == F.percentile bit-for-bit: same order
     statistics, same (hi-pos)*lo + (pos-lo)*hi interpolation — on
     groups with heavy duplicates, unique values, and n=1."""
@@ -208,10 +210,11 @@ def test_quantile_histogram_bit_identical_to_percentile(spark):
         rows += [(g, float(v)) for v in vals]
     df = spark.createDataFrame(rows, "g string, v double")
     qs = {"p10": 0.1, "p25": 0.25, "p50": 0.5, "p75": 0.75, "p99": 0.99}
-    got = {
-        r["g"]: r
-        for r in quantile_histogram(df, "v", "g", qs).collect()
-    }
+    monkeypatch.setattr(percentiles, "_HIST_QS", qs)
+    hist = df.groupBy(
+        F.col("g").alias("l_returnflag"), F.col("v").alias("__v")
+    ).agg(F.count("*").alias("__c"))
+    got = {r["l_returnflag"]: r for r in quantile_histogram(hist).collect()}
     want = {
         r["g"]: r
         for r in df.groupBy("g")
@@ -350,9 +353,9 @@ def test_interpolation_family_matches_go(spark):
     # signal-level ops vs go loops
     d = series[0]
     out = df.where(F.col("sid") == 0).select(
-        resample_signal(F.col("s"), 4, 3, "linear").alias("rs"),
-        upsample_signal(F.col("s"), 2).alias("up"),
-        downsample_signal(F.col("s"), 2).alias("dn"),
+        resample_signal(F.col("s")).alias("rs"),
+        upsample_signal(F.col("s")).alias("up"),
+        downsample_signal(F.col("s")).alias("dn"),
     ).collect()[0]
     ratio = 4.0 / 3.0
     want_rs = [lin(d, i * ratio) for i in range(int(len(d) / ratio))]

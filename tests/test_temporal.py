@@ -53,7 +53,7 @@ def test_attack_decay(spark):
     peaks = spark.createDataFrame(
         [("d", 5, 1.0)], "doc_id string, frame_idx long, rms_energy double"
     )
-    r = attack_decay(feats, peaks, level=0.5).collect()[0]
+    r = attack_decay(feats, peaks).collect()[0]
     # last frame <= 0.5 before peak: frame 3 (0.5) -> attack 2
     assert r["attack_frames"] == 2
     # first frame <= 0.5 after peak: frame 7 (0.4) -> decay 2
@@ -68,7 +68,7 @@ def test_attack_decay_no_crossing_is_null(spark):
     peaks = spark.createDataFrame(
         [("d", 3, 1.0)], "doc_id string, frame_idx long, rms_energy double"
     )
-    r = attack_decay(feats, peaks, level=0.5).collect()[0]
+    r = attack_decay(feats, peaks).collect()[0]
     assert r["attack_frames"] is None and r["decay_frames"] is None
 
 
@@ -80,9 +80,7 @@ def test_vad_and_silence_ratio(spark):
         [("d", i, v, 0.5) for i, v in enumerate(vals)],
         "doc_id string, frame_idx long, rms_energy double, zcr double",
     )
-    segs = detect_voice_activity(
-        feats, energy_thr=0.5, zcr_low=0.0, zcr_high=1.0, min_run=3
-    ).collect()
+    segs = detect_voice_activity(feats, energy_thr=0.5).collect()
     got = {(r["seg_start"], r["seg_end"], r["run_len"]) for r in segs}
     assert got == {(2, 4, 3), (6, 9, 4)}
 
@@ -116,9 +114,9 @@ def test_envelope_hilbert(spark):
     x = rng.standard_normal(40)
     rows = [("d1", i, float(v)) for i, v in enumerate(x)]
     rows.append(("single", 0, 5.0))
-    df = spark.createDataFrame(rows, "doc_id string, frame_idx int, rms_energy double")
+    df = spark.createDataFrame(rows, "doc_id string, pos int, v double")
     got = {
-        (r["doc_id"], r["frame_idx"]): r["envelope"]
+        (r["doc_id"], r["pos"]): r["envelope"]
         for r in envelope_hilbert(df).collect()
     }
     for i in range(40):

@@ -8,7 +8,13 @@ import pytest
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sonar_spark.functions.text import ngrams_ws
+
+def _ngrams(words: Column, k: int) -> Column:
+    """functions.text.ngrams_ws's shingle rule at any k."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(words) - (k - 1), F.lit(1))),
+        lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+    )
 
 
 def _sorted(df):
@@ -29,7 +35,7 @@ def repetition_profile_expr(
     words = F.col(words_col)
 
     def dup_frac(k: int) -> Column:
-        g = ngrams_ws(words, k)
+        g = _ngrams(words, k)
         return F.round(
             1.0 - F.size(F.array_distinct(g)) / F.size(g), 6
         )

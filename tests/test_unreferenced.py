@@ -18,14 +18,21 @@
   or by position, somewhere outside tests/: a field that no caller
   sets has one value in use and belongs next to the code that reads
   it as a constant.
-- Every parameter with a default, in a function or method of
-  sonar_spark/ or a private top-level helper of __spark_entry__.py, is
-  passed by some call outside tests/ (by keyword, by position, or
-  through *args/**kwargs; calls matched by the callee's name, a
-  class's __init__ by the class name): a default no caller overrides
-  is a knob with one value in use, and belongs in the body as a
-  constant or a literal.  PARAM_SEAMS lists the few that stay
-  parameters because a test passes them to reach a path.
+- Every parameter, with or without a default, of a function or method
+  of sonar_spark/ or a private top-level helper of __spark_entry__.py
+  gets two different values from the calls outside tests/ (calls
+  matched by the callee's name, a class's __init__ by the class name,
+  import aliases resolved).  A call gives the literal it passes (by
+  keyword or position), or the default when it passes nothing; a
+  variable, *args or **kwargs varies.  A parameter with one value in
+  use is a knob nobody turns, and belongs in the body as a constant or
+  a literal.  PARAM_SEAMS lists the few that stay parameters because a
+  test passes them to reach a path; a parameter the frozen bench.py or
+  perfbench/ pass stays too (today catalog_table(n_entities,
+  rows_per_entity) and lsh_candidate_pairs(with_est)).
+- No call in sonar_spark/ or __spark_entry__.py passes a literal equal
+  to the callee's default: such an argument says nothing, and it hid
+  one-value parameters from the rule above.
 
 Spark-free."""
 
@@ -39,6 +46,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(REPO, "sonar_spark") + os.sep
 TESTS = os.path.join(REPO, "tests") + os.sep
 ENTRY = os.path.join(REPO, "__spark_entry__.py")
+# callers whose calls cannot change: a parameter they pass stays
+FROZEN = ("bench.py", "perfbench" + os.sep)
 
 # config fields kept settable although no caller outside tests/ sets them
 CONFIG_FIELD_EXEMPT = {
@@ -263,9 +272,10 @@ def _checked_functions(trees: dict[str, ast.Module], pkg: str, entry: str):
 
 
 def _calls_by_callee(trees: dict[str, ast.Module], tests: str):
-    """callee name -> [(positional args, keywords)] of every call outside
-    ``tests``; ``partial(f, ...)`` counts as a call of ``f``, and a call
-    through ``from m import f as g`` as a call of ``f``."""
+    """callee name -> [(path, line, positional args, keywords, partial)] of
+    every call outside ``tests``; ``partial(f, ...)`` counts as a call
+    of ``f`` whose unbound parameters vary, and a call through
+    ``from m import f as g`` as a call of ``f``."""
     calls = collections.defaultdict(list)
     for path, tree in trees.items():
         if path.startswith(tests):
@@ -281,7 +291,11 @@ def _calls_by_callee(trees: dict[str, ast.Module], tests: str):
             if not isinstance(n, ast.Call):
                 continue
             func, args = n.func, n.args
-            if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
+            partial = (
+                getattr(func, "id", getattr(func, "attr", None)) == "partial"
+                and bool(args)
+            )
+            if partial:
                 func, args = args[0], args[1:]
             if isinstance(func, ast.Attribute):
                 name = func.attr
@@ -289,29 +303,74 @@ def _calls_by_callee(trees: dict[str, ast.Module], tests: str):
                 name = alias.get(func.id, func.id)
             else:
                 continue
-            calls[name].append((args, n.keywords))
+            calls[name].append((path, n.lineno, args, n.keywords, partial))
     return calls
 
 
-def _passed(calls, name: str, index: int | None) -> bool:
-    """Does some call pass the parameter ``name`` at positional
-    ``index`` (None for keyword-only)?"""
-    for args, keywords in calls:
-        if any(k.arg is None or k.arg == name for k in keywords):
-            return True
-        if index is None:
-            continue
+_VARIES = "<varies>"
+
+
+def _literal(node: ast.expr | None):
+    """A token for the value of a literal expression, else None."""
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, RecursionError):
+        return None
+    return f"{type(v).__name__}:{v!r}"
+
+
+def _params(node, offset: int):
+    """(name, positional index or None, default token or None) of every
+    parameter of a function node but the ``self`` its calls omit; a
+    default that is not a literal is its source text."""
+    a = node.args
+    pos = (a.posonlyargs + a.args)[offset:]
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    out = [
+        (p.arg, i, d and (_literal(d) or ast.unparse(d)))
+        for i, (p, d) in enumerate(zip(pos, defaults))
+    ]
+    out += [
+        (p.arg, None, d and (_literal(d) or ast.unparse(d)))
+        for p, d in zip(a.kwonlyargs, a.kw_defaults)
+    ]
+    return out
+
+
+def _argument(call, name: str, index: int | None):
+    """The node a call passes for a parameter (an ``ast.Starred`` or a
+    ``**`` keyword when one may carry it), None when it passes none."""
+    _, _, args, keywords, _ = call
+    for k in keywords:
+        if k.arg == name:
+            return k.value
+    if index is not None:
         for i, a in enumerate(args):
             if isinstance(a, ast.Starred) or i == index:
-                return True
-            if i > index:
-                break
-    return False
+                return a
+    return next((k for k in keywords if k.arg is None), None)
 
 
-def unpassed_default_parameters(repo: str = REPO) -> list[str]:
-    """``path:line:Qual(param)`` for every parameter with a default that
-    no call outside ``repo``/tests/ passes."""
+def _value(call, name: str, index: int | None, default):
+    """The value one call gives a parameter: the literal it passes, the
+    default when it passes nothing, ``_VARIES`` for anything else."""
+    arg = _argument(call, name, index)
+    if arg is None:
+        return _VARIES if call[4] or default is None else default
+    return _literal(arg) or _VARIES
+
+
+def _is_frozen(repo: str, path: str) -> bool:
+    return os.path.relpath(path, repo).startswith(FROZEN)
+
+
+def one_value_parameters(repo: str = REPO) -> list[str]:
+    """``path:line:Qual(param)`` for every parameter of a function or
+    method of sonar_spark/, or of a private top-level helper of
+    __spark_entry__.py, that the calls outside tests/ give only one
+    value: each passes the same literal, or passes nothing and gets the
+    default (a parameter no call reaches has its default, if any, as
+    its one value).  A parameter a frozen caller passes is exempt."""
     trees = _trees(repo)
     pkg = os.path.join(repo, "sonar_spark") + os.sep
     calls = _calls_by_callee(trees, os.path.join(repo, "tests") + os.sep)
@@ -319,45 +378,89 @@ def unpassed_default_parameters(repo: str = REPO) -> list[str]:
     for path, qual, callee, offset, node in _checked_functions(
         trees, pkg, os.path.join(repo, "__spark_entry__.py")
     ):
-        a = node.args
-        pos = a.posonlyargs + a.args
-        first = len(pos) - len(a.defaults)
-        params = [(p.arg, i - offset) for i, p in enumerate(pos) if i >= first]
-        params += [
-            (p.arg, None)
-            for p, d in zip(a.kwonlyargs, a.kw_defaults)
-            if d is not None
-        ]
-        out += [
-            f"{os.path.relpath(path, repo)}:{node.lineno}:{qual}({name})"
-            for name, index in params
-            if not _passed(calls[callee], name, index)
-        ]
+        for name, index, default in _params(node, offset):
+            site = calls[callee]
+            if any(
+                _is_frozen(repo, c[0]) and _argument(c, name, index) is not None
+                for c in site
+            ):
+                continue
+            values = {_value(c, name, index, default) for c in site}
+            if not site:
+                values = {default} - {None}
+            if len(values) == 1 and _VARIES not in values:
+                out.append(
+                    f"{os.path.relpath(path, repo)}:{node.lineno}:{qual}({name})"
+                )
     return out
 
 
-def test_every_default_parameter_is_passed_outside_tests():
-    unpassed = [
-        p for p in unpassed_default_parameters()
+def redundant_default_arguments(repo: str = REPO) -> list[str]:
+    """``path:line:callee(param)`` for every argument a call in
+    sonar_spark/ or __spark_entry__.py passes as a literal equal to the
+    callee's default (a callee name several checked functions share
+    counts only where all of them have that default)."""
+    trees = _trees(repo)
+    pkg = os.path.join(repo, "sonar_spark") + os.sep
+    entry = os.path.join(repo, "__spark_entry__.py")
+    sigs = collections.defaultdict(list)
+    for _, _, callee, offset, node in _checked_functions(trees, pkg, entry):
+        sigs[callee].append(_params(node, offset))
+    calls = _calls_by_callee(trees, os.path.join(repo, "tests") + os.sep)
+    out = []
+    for callee, site in calls.items():
+        if callee not in sigs:
+            continue
+        for call in site:
+            if not (call[0].startswith(pkg) or call[0] == entry):
+                continue
+            for name in sorted({p[0] for p in sigs[callee][0]}):
+                if all(
+                    any(
+                        p == name
+                        and d is not None
+                        and _literal(_argument(call, p, i)) == d
+                        for p, i, d in params
+                    )
+                    for params in sigs[callee]
+                ):
+                    out.append(
+                        f"{os.path.relpath(call[0], repo)}:{call[1]}:"
+                        f"{callee}({name})"
+                    )
+    return out
+
+
+def test_every_parameter_gets_two_values_outside_tests():
+    one = [
+        p for p in one_value_parameters()
         if p.split(":")[-1] not in PARAM_SEAMS
     ]
-    assert unpassed == [], f"{len(unpassed)}: {unpassed}"
+    assert one == [], f"{len(one)}: {one}"
+
+
+def test_no_call_passes_a_default():
+    redundant = redundant_default_arguments()
+    assert redundant == [], f"{len(redundant)}: {redundant}"
 
 
 def test_param_seams_are_still_seams():
-    """Every PARAM_SEAMS entry still names a parameter no caller outside
-    tests/ passes (a seam a caller now passes leaves the list)."""
-    unpassed = {p.split(":")[-1] for p in unpassed_default_parameters()}
-    assert set(PARAM_SEAMS) <= unpassed, set(PARAM_SEAMS) - unpassed
+    """Every PARAM_SEAMS entry still names a parameter that gets one
+    value outside tests/ (a seam a caller now varies leaves the list)."""
+    one = {p.split(":")[-1] for p in one_value_parameters()}
+    assert set(PARAM_SEAMS) <= one, set(PARAM_SEAMS) - one
     assert len(PARAM_SEAMS) <= 8
 
 
 def test_unpassed_rule_on_synthetic_sources(tmp_path):
-    """The parameter rule itself, on a synthetic repo: only-tests
-    callers do not count; keyword, position, *args, **kwargs, an import
-    alias and functools.partial do; an __init__ is called by its class
-    name, a method by its attribute name; public helpers of
-    __spark_entry__.py are not checked."""
+    """The one-value rule itself, on a synthetic repo: only-tests
+    callers do not count; a literal passed by keyword, by position, an
+    import alias or functools.partial counts as its value, a call that
+    passes nothing as the default; a variable, *args or **kwargs
+    varies; an __init__ is called by its class name, a method by its
+    attribute name; a parameter bench.py or perfbench/ passes is
+    exempt; public helpers of __spark_entry__.py are not checked.  The
+    redundant-argument rule flags a literal equal to the default."""
     sources = {
         "sonar_spark/mod.py": (
             "def only_tests(df, k=1): pass\n"
@@ -367,6 +470,11 @@ def test_unpassed_rule_on_synthetic_sources(tmp_path):
             "def by_kwargs(df, *, k=1): pass\n"
             "def by_alias(df, k=1): pass\n"
             "def by_partial(df, k=1): pass\n"
+            "def default_passed(df, k=1): pass\n"
+            "def same_literal(df, k): pass\n"
+            "def two_values(df, k=1): pass\n"
+            "def by_variable(df, k): pass\n"
+            "def frozen(df, n=8): pass\n"
             "class Job:\n"
             "    def __init__(self, root, n=2): pass\n"
             "    def run(self, df, fail_after=None): pass\n"
@@ -379,17 +487,33 @@ def test_unpassed_rule_on_synthetic_sources(tmp_path):
             "def _helper(x, y=0): pass\n"
             "def _called(x, y=0): pass\n"
             "def public(x, y=0): pass\n"
-            "def q(args, kw):\n"
-            "    by_keyword(1, k=2)\n"
-            "    by_position(1, 2)\n"
+            "def q(d, args, kw, v):\n"
+            "    by_keyword(d, k=2)\n"
+            "    by_keyword(d)\n"
+            "    by_position(d, 2)\n"
+            "    by_position(d)\n"
             "    by_star(*args)\n"
-            "    by_kwargs(1, **kw)\n"
-            "    ba(1, k=2)\n"
+            "    by_kwargs(d, **kw)\n"
+            "    ba(d, k=2)\n"
+            "    ba(d, k=3)\n"
             "    partial(by_partial, k=2)\n"
-            "    Job('r', 4).run(1, None)\n"
-            "    Job('r').other(1)\n"
-            "    _called(1, y=2)\n"
+            "    default_passed(d, k=1)\n"
+            "    default_passed(d, 1)\n"
+            "    same_literal(d, 4)\n"
+            "    same_literal(d, k=4)\n"
+            "    two_values(d, k=2)\n"
+            "    two_values(d)\n"
+            "    by_variable(d, v)\n"
+            "    by_variable(d, 4)\n"
+            "    frozen(d)\n"
+            "    Job(d, 4).run(d)\n"
+            "    Job(d).other(d)\n"
+            "    Job(d).run(d, 3)\n"
+            "    _called(d, y=2)\n"
+            "    _called(d)\n"
+            "    by_partial(d)\n"
         ),
+        "perfbench/layers.py": "frozen(1, n=8)\n",
         "tests/test_mod.py": (
             "only_tests(1, k=2)\nJob('r').other(1, m=4)\n_helper(1, 2)\n"
         ),
@@ -398,6 +522,16 @@ def test_unpassed_rule_on_synthetic_sources(tmp_path):
         (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
         (tmp_path / rel).write_text(src)
     got = sorted(
-        p.split(":")[-1] for p in unpassed_default_parameters(str(tmp_path))
+        p.split(":")[-1] for p in one_value_parameters(str(tmp_path))
     )
-    assert got == ["Job.other(m)", "_helper(y)", "only_tests(k)"], got
+    assert got == [
+        "Job.other(m)",
+        "_helper(y)",
+        "default_passed(k)",
+        "only_tests(k)",
+        "same_literal(k)",
+    ], got
+    redundant = sorted(
+        p.split(":", 1)[1] for p in redundant_default_arguments(str(tmp_path))
+    )
+    assert redundant == ["17:default_passed(k)", "18:default_passed(k)"], redundant

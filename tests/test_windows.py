@@ -87,7 +87,7 @@ def test_expr_matches_numpy(spark):
     df = spark.range(1)
     for t in WINDOW_TYPES:
         got = df.select(
-            window_coefficients_expr(t, 32).alias("c")
+            window_coefficients_expr(t).alias("c")
         ).collect()[0]["c"]
         want = window_coefficients(t, 32)
         np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12,

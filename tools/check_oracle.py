@@ -1,6 +1,9 @@
 """Driver-mimic: run __spark_entry__.entry() smoke + every queries()
 entry vs its oracle_sql() through DuckDB at the given sf dir, compare
-row count, schema width and order-insensitive values.
+row count, schema width and order-insensitive values.  Each result
+line ends with the JVM's peak resident set so far (VmHWM, MB; a query
+that raises it shows a jump) and the number of RDDs Spark holds
+persisted after the query (a leaked persist keeps it growing).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 
@@ -83,6 +86,22 @@ def assert_matches_oracle(got: pd.DataFrame, sf_dir: str, name: str) -> None:
     assert strict_equal(a, b)[0], name
 
 
+def jvm_memory(spark) -> str:
+    """``rss_peak=<MB> persisted=<n>`` for the driver JVM: VmHWM from
+    /proc/<pid>/status of the gateway process (? where /proc has no
+    entry for it) and the size of getPersistentRDDs()."""
+    peak = "?"
+    try:
+        with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/status") as fh:
+            for line in fh:
+                if line.startswith("VmHWM:"):
+                    peak = f"{int(line.split()[1]) // 1024}MB"
+    except (AttributeError, OSError):
+        pass
+    n = spark.sparkContext._jsc.getPersistentRDDs().size()
+    return f"rss_peak={peak} persisted={n}"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -100,7 +119,7 @@ def main() -> int:
     res = E.entry(spark)
     n = res.count()
     print(f"entry(): {n} rows, schema={[f.name for f in res.schema]}, "
-          f"{time.time()-t0:.1f}s", flush=True)
+          f"{time.time()-t0:.1f}s  {jvm_memory(spark)}", flush=True)
     assert n >= 0
 
     con = duck(sf_dir)
@@ -113,8 +132,8 @@ def main() -> int:
         sdf = fn(spark, sf_dir).toPandas()
         t_spark = time.time() - t0
         if name not in oracles:
-            print(f"{name:24s} rows-only: {len(sdf)} rows  ({t_spark:.1f}s)",
-                  flush=True)
+            print(f"{name:24s} rows-only: {len(sdf)} rows  ({t_spark:.1f}s)  "
+                  f"{jvm_memory(spark)}", flush=True)
             continue
         odf = con.execute(oracles[name]).df()
         a, b = normalize(sdf), normalize(odf)
@@ -127,7 +146,8 @@ def main() -> int:
         note = " [close-but-not-exact: rounding-boundary flake]" if (
             not ok_vals and close and ok_rows and ok_cols) else ""
         print(f"{name:24s} {status} rows={len(a)}/{len(b)} cols_match={ok_cols} "
-              f"vals={ok_vals}  ({t_spark:.1f}s){note}", flush=True)
+              f"vals={ok_vals}  ({t_spark:.1f}s)  {jvm_memory(spark)}{note}",
+              flush=True)
         if status == "FAIL":
             failed.append(name)
             if not ok_cols:
